@@ -15,6 +15,8 @@ re-expresses that capability Spark-first:
 - ``plans``      : the query library (Tier A/B/C/D keys from SURVEY.md section 2).
 - ``streaming``  : the structured-streaming ingest pipeline (60 s trigger,
                    multi-sink foreachBatch: stage parquet + raw tees + alerts).
+- ``storage``    : the storage policy for reused frames (``stored`` and
+                   ``release_scope``; README "Storage policy").
 
 Everything here is built on public PySpark 4.x APIs only.
 """

@@ -16,8 +16,8 @@ again.  Each merge round is one map-side-combinable pair-count shuffle
 over the vocab plus a 1-row control-plane collect (the winning pair — the
 sanctioned scalar-collect pattern, like star-CC's convergence signature);
 the rewrite is a pure codegen fold against that pair, no Python, no
-corpus-proportional broadcast.  Lineage is truncated per round with a lazy
-localCheckpoint, so R rounds cost R short shuffles, not 2^R plan blowup.
+corpus-proportional broadcast.  Lineage is truncated per round by a
+stored frame, so R rounds cost R short shuffles, not 2^R plan blowup.
 
 Greedy application semantics: one left-to-right pass; a symbol produced by
 a merge is NOT re-merged with its right neighbor in the same pass (on a
@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..storage import stored
 
 
 def chars_of(word: Column) -> Column:
@@ -117,10 +119,10 @@ def bpe_learn(spark: SparkSession, words: DataFrame, rounds: int = 6,
             )
         b = top[0]
         merges.append((r, b["lhs"], b["rhs"], b["lhs"] + b["rhs"], b["pair_n"]))
-        rep = rep.select(
+        rep = stored(rep.select(
             "word", "wn",
             apply_merge(F.col("syms"), b["lhs"], b["rhs"]).alias("syms"),
-        ).localCheckpoint(eager=False)
+        ))
     mdf = spark.createDataFrame(
         merges, "round int, lhs string, rhs string, merged string, pair_n bigint"
     )

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double
+from ..storage import stored
 from .similarity import assign_to_centroids, label_centroids
 
 
@@ -59,9 +60,9 @@ def kmeans(vectors: DataFrame, k: int = 8, max_iters: int = 10,
     Convergence probe: the rounded centroid snapshot (k × dim values) is
     collected and compared across rounds — k × dim is KBs at any corpus
     size, so the probe is control-plane, not a data-plane join.
-    ``localCheckpoint`` truncates lineage each round (same pattern and
-    rationale as connected_components; pass vectors through
-    ``df.checkpoint`` yourself for cluster-durable runs).
+    Each round's centroids are ``stored()`` to cut lineage (same pattern
+    as connected_components: the snapshot collect is the action that
+    stores them).
     """
     cents = vectors.sparkSession.createDataFrame(
         seed_centroids(vectors, k, id_col, vec_col).collect(),
@@ -69,9 +70,7 @@ def kmeans(vectors: DataFrame, k: int = 8, max_iters: int = 10,
     )
     prev_snapshot = None
     for _ in range(max_iters):
-        new_cents = kmeans_update(vectors, cents, id_col, vec_col).localCheckpoint(
-            eager=True
-        )
+        new_cents = stored(kmeans_update(vectors, cents, id_col, vec_col))
         snapshot = sorted(
             (r["centroid_id"], tuple(r["centroid"])) for r in new_cents.collect()
         )

@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 
 from ..functions.hashing import MERSENNE_P, md5_i64, md5_u32, minhash_permuted
 from ..functions.text import shingles_from_tokens, tokens
+from ..storage import stored
 
 SIMHASH_BITS = 60  # md5_i64 yields 60-bit non-negative hashes
 
@@ -248,7 +249,7 @@ def ngram_pairs_with_sizes(sh: DataFrame, id_col: str = "doc_id",
         # without the cut each consumer re-runs the distinct's final
         # aggregation above the one reused exchange; same 1-eval rule as
         # the scale mode's tagged frame, measured −0.2-0.5 s at sf0.1)
-        sh = sh.localCheckpoint(eager=False)
+        sh = stored(sh)
         pairs = ngram_intersection_pairs(sh, id_col, max_df)
         sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
     else:
@@ -291,7 +292,7 @@ def ngram_intersection_pairs(sh: DataFrame, id_col: str = "doc_id",
 def _df_tagged_shingles(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, shingle, __df) with the shingle's document frequency tagged on
     every row — the shared frame under the guarded candidate core, stored
-    ONCE (lazy localCheckpoint).
+    ONCE.
 
     df is tagged with a WINDOW over the shingle shuffle, not a separate
     groupBy+join (measured 25% faster than the groupBy+rejoin formulation
@@ -304,9 +305,8 @@ def _df_tagged_shingles(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
     of the candidate core's wall time.  Stored blocks are read by all
     four consumers instead; this is the operator family's single
     corpus-scale stored frame (same single-copy rule as the pagerank
-    weighted edge list — production swaps in persist(DISK_ONLY) when
-    executor loss must replay lineage)."""
-    return _df_tag(sh).localCheckpoint(eager=False)
+    weighted edge list)."""
+    return stored(_df_tag(sh))
 
 
 def _df_tag(sh: DataFrame) -> DataFrame:
@@ -540,13 +540,8 @@ def simhash_pairs_collapsed(sigs: DataFrame, id_col: str = "doc_id",
     # sigs (tokenize + two 60-bit aggregations — the expensive subtree)
     # feeds groups, the two member expansions, and the within self-join;
     # without reuse Spark replans it per reference (measured: 16 scans of
-    # the documents source in one plan, +1.6 s at sf0.1).  Same lazy
-    # localCheckpoint pattern + fault-tolerance trade as
-    # tiere.triangle_top50: lineage truncates to executor-local blocks,
-    # so an executor loss mid-job fails the query instead of recomputing
-    # — production at 100 TB swaps in .persist(DISK_ONLY) for the same
-    # plan shape with lineage replay.
-    sigs = sigs.localCheckpoint(eager=False)
+    # the documents source in one plan, +1.6 s at sf0.1).
+    sigs = stored(sigs)
     groups = sigs.groupBy("simhash").agg(
         F.min(id_col).alias("__rep"), F.count("*").alias("__k")
     )
@@ -599,8 +594,6 @@ def simhash_pairs_collapsed(sigs: DataFrame, id_col: str = "doc_id",
 def connected_components(edges: DataFrame, nodes: DataFrame,
                          id_col: str = "doc_id",
                          max_iters: int = 25,
-                         reliable: bool = False,
-                         checkpoint_dir: str | None = None,
                          stats: dict | None = None) -> DataFrame:
     """Connected components over a near-dup candidate graph → cluster ids
     (the step that turns pairwise near-dup hits into dedup groups: keep the
@@ -624,36 +617,14 @@ def connected_components(edges: DataFrame, nodes: DataFrame,
     Exact for ANY orderable id type — numeric, string, binary — with no
     labels⋈labels comparison join and no overflow-prone numeric sum.
 
-    ``reliable=True`` uses cluster-durable ``df.checkpoint()`` (survives
-    executor loss — at 100 TB a lost node must not abort a 20-round job)
-    against ``checkpoint_dir`` (or a previously configured
-    ``spark.sparkContext.setCheckpointDir``).  The default
-    ``localCheckpoint`` is faster (executor-local blocks, no DFS write)
-    and fine for local mode / restartable jobs.
+    Each round's labels are ``stored()``, so a session with a checkpoint
+    directory runs every round durably (storage.py — at 100 TB a lost
+    node must not abort a 20-round job).
 
     ``edges``: (id_a, id_b) undirected candidate pairs.
     ``nodes``: one row per ``id_col`` (must cover isolated nodes).
     Returns (id_col, cluster_id) where cluster_id = min id in component.
     """
-    if reliable:
-        sc = edges.sparkSession.sparkContext
-        if checkpoint_dir is not None:
-            sc.setCheckpointDir(checkpoint_dir)
-        elif sc.getCheckpointDir() is None:
-            raise ValueError(
-                "reliable=True needs a checkpoint dir: pass checkpoint_dir= "
-                "or call spark.sparkContext.setCheckpointDir() first"
-            )
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        # LAZY on purpose (r14, guide §1.2 — fewer passes): the
-        # convergence count below is collected immediately after, and a
-        # lazy checkpoint materializes its blocks as a side effect of
-        # that first action — one job per round instead of the old
-        # eager-checkpoint-job + count-job pair (measured ~35% off the
-        # whole loop at sf0.1 across the CC-consuming keys).
-        return df.checkpoint(eager=False) if reliable else df.localCheckpoint(eager=False)
-
     # materialize the candidate graph ONCE (lazily — round 1 computes it,
     # later rounds read the stored blocks): each round is its own job, so
     # without this the upstream edge derivation — for dedup graphs an
@@ -666,8 +637,8 @@ def connected_components(edges: DataFrame, nodes: DataFrame,
     # list; pairs-only blocks are also half the stored bytes — the same
     # single-copy rule as the pagerank weighted-edge remedy).  The
     # per-round swap union over stored blocks is two narrow projections,
-    # no shuffle.  Durable variant under reliable.
-    edges = edges.checkpoint(eager=False) if reliable else edges.localCheckpoint(eager=False)
+    # no shuffle.
+    edges = stored(edges)
     sym = edges.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionByName(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
@@ -679,7 +650,10 @@ def connected_components(edges: DataFrame, nodes: DataFrame,
         from_nbrs = sym.join(labels, sym["src"] == labels["node"]).select(
             F.col("dst").alias("node"), F.col("lbl"), F.lit(0).alias("is_self")
         )
-        new_labels = _ckpt(
+        # the convergence count right below is the action that stores
+        # the round's labels — one job per round (r14, measured ~35% off
+        # the whole loop at sf0.1 against an eager store + count pair)
+        new_labels = stored(
             labels.select("node", "lbl", F.lit(1).alias("is_self"))
             .unionByName(from_nbrs)
             .groupBy("node")
@@ -717,8 +691,6 @@ def connected_components(edges: DataFrame, nodes: DataFrame,
 def connected_components_star(edges: DataFrame, nodes: DataFrame,
                               id_col: str = "doc_id",
                               max_iters: int = 30,
-                              reliable: bool = False,
-                              checkpoint_dir: str | None = None,
                               stats: dict | None = None) -> DataFrame:
     """Alternating large-star / small-star connected components (Kiveris
     et al., "Connected Components in MapReduce and Beyond", SoCC'14) —
@@ -752,24 +724,9 @@ def connected_components_star(edges: DataFrame, nodes: DataFrame,
     default for dedup graphs — near-clique duplicate groups have tiny
     diameters, where 2 shuffles/round beats this scheme's 4):
     ``edges`` (id_a, id_b) undirected, ``nodes`` covering isolated ids;
-    returns (id_col, cluster_id = component min).  ``reliable=True`` →
-    durable ``df.checkpoint`` for cluster runs.
+    returns (id_col, cluster_id = component min).  The ``_sig`` collect
+    right after each ``stored()`` round is the action that stores it.
     """
-    if reliable:
-        sc = edges.sparkSession.sparkContext
-        if checkpoint_dir is not None:
-            sc.setCheckpointDir(checkpoint_dir)
-        elif sc.getCheckpointDir() is None:
-            raise ValueError(
-                "reliable=True needs a checkpoint dir: pass checkpoint_dir= "
-                "or call spark.sparkContext.setCheckpointDir() first"
-            )
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        # lazy for the same one-job-per-round reason as
-        # connected_components' _ckpt: the _sig collect right after each
-        # checkpoint materializes the blocks in the same job.
-        return df.checkpoint(eager=False) if reliable else df.localCheckpoint(eager=False)
 
     def _sym(e: DataFrame) -> DataFrame:
         return e.unionByName(
@@ -806,7 +763,7 @@ def connected_components_star(edges: DataFrame, nodes: DataFrame,
         ).collect()[0]
         return (row["n"], row["h"])
 
-    cur = _ckpt(
+    cur = stored(
         edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -816,7 +773,7 @@ def connected_components_star(edges: DataFrame, nodes: DataFrame,
     converged = False
     for _ in range(max_iters):
         rounds += 1
-        nxt = _ckpt(_small(_large(cur)))
+        nxt = stored(_small(_large(cur)))
         nxt_sig = _sig(nxt)
         converged = nxt_sig == cur_sig and (
             # exact confirmation — reached ~once, at the fixpoint

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import doc_fingerprint
+from ..storage import release_scope, stored
 from .dedup import SIMHASH_BITS, simhash_pairs, simhash_signatures
 
 LEDGER_SCHEMA = "fp string, doc_id bigint, batch_id bigint"
@@ -139,19 +140,13 @@ def admit_near_new_documents(
     text_col: str = "text",
     n_bands: int = 4,
     max_hamming: int = 8,
-    _pinned: list | None = None,
 ) -> DataFrame:
     """Cross-batch NEAR-dup admission: the SimHash-band complement of
     :func:`admit_new_documents` (which only catches byte-identical text).
 
-    ``_pinned`` (ADVICE r14, streaming callers): when given, the two
-    intermediate cuts use ``persist(DISK_ONLY)`` instead of
-    ``localCheckpoint`` and the pinned frames are appended to the list so
-    the caller can ``unpersist()`` them after consuming the admitted
-    batch — localCheckpoint blocks are only freed by driver-side GC, so a
-    long stream of micro-batches accumulates executor storage.  Batch
-    callers keep the default (localCheckpoint truncates lineage AND dies
-    with the session).
+    The returned frame reads two ``stored()`` intermediates; a long-lived
+    caller consumes it inside ``storage.release_scope()`` so each batch's
+    blocks are freed (as :func:`start_near_dedup_stream` does).
 
     A batch document is admitted iff
     1. no in-batch document with a SMALLER id is a near-dup of it
@@ -170,26 +165,15 @@ def admit_near_new_documents(
     if SIMHASH_BITS % n_bands != 0:
         raise ValueError(f"n_bands={n_bands} must divide SIMHASH_BITS={SIMHASH_BITS}")
 
-    def _cut(df: DataFrame) -> DataFrame:
-        if _pinned is None:
-            return df.localCheckpoint(eager=False)
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.DISK_ONLY)
-        _pinned.append(df)
-        return df
-
     sigs = simhash_signatures(batch, id_col=id_col, text_col=text_col)
     if id_col != "doc_id":
         sigs = sigs.withColumnRenamed(id_col, "doc_id")
     # signature computation (tokenize + distinct + 20 packed bit-sums) is
     # the expensive stage and feeds THREE consumers below (the in-batch
     # pair join's two sides via simhash_pairs, and the survivors
-    # anti-join) — materialize it once, lazily (r14, guide §5 caching:
-    # reused AND expensive to recompute; same localCheckpoint economics
-    # and executor-loss caveat as connected_components' default mode —
-    # production at 100 TB uses persist(DISK_ONLY) for replayable loss).
-    sigs = _cut(sigs)
+    # anti-join) — store it once (r14, guide §5 caching: reused AND
+    # expensive to recompute).
+    sigs = stored(sigs)
     # rule 1 — drop any doc with a smaller in-batch near-dup partner
     pairs = simhash_pairs(sigs, n_bands=n_bands, max_hamming=max_hamming)
     survivors = sigs.join(
@@ -214,8 +198,11 @@ def admit_near_new_documents(
     # this cut the RETURNED semi-join replans the whole pipeline (band
     # join + ledger anti-join included) a second time when the caller
     # materializes the admitted batch (r14 — measured as the dominant
-    # cost of x_dedup_ledger_near's second batch).
-    admitted = _cut(survivors.join(hits, "doc_id", "left_anti"))
+    # cost of x_dedup_ledger_near's second batch).  Recomputing instead
+    # would still be correct, but only because the ledger read above
+    # excludes ``batch_id == current``: the append below adds this
+    # batch's own rows, which would otherwise reject every doc on replan.
+    admitted = stored(survivors.join(hits, "doc_id", "left_anti"))
     entries = admitted.select(
         "doc_id", "simhash", F.lit(batch_id).cast("long").alias("batch_id")
     )
@@ -248,19 +235,14 @@ def start_near_dedup_stream(
     ``out_path``."""
 
     def _admit(batch: DataFrame, batch_id: int) -> None:
-        # per-batch persist + explicit unpersist (ADVICE r14): a long
-        # stream must not accumulate storage blocks across micro-batches
-        pinned: list[DataFrame] = []
-        admitted = admit_near_new_documents(
-            batch.sparkSession, batch, ledger_path, batch_id,
-            id_col=id_col, text_col=text_col,
-            n_bands=n_bands, max_hamming=max_hamming, _pinned=pinned,
-        )
-        try:
-            admitted.write.mode("append").parquet(out_path)
-        finally:
-            for df in pinned:
-                df.unpersist()
+        # a long stream must not accumulate stored blocks across
+        # micro-batches: the scope frees this batch's on exit
+        with release_scope():
+            admit_near_new_documents(
+                batch.sparkSession, batch, ledger_path, batch_id,
+                id_col=id_col, text_col=text_col,
+                n_bands=n_bands, max_hamming=max_hamming,
+            ).write.mode("append").parquet(out_path)
 
     writer = stream.writeStream.foreachBatch(_admit).option(
         "checkpointLocation", checkpoint

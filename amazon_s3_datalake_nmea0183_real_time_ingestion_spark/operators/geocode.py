@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import GEO_COLUMNS
-
 GRID_CELLS = 180 * 360  # 64,800
 
 
@@ -75,10 +73,6 @@ def enrich_geocode(
     them visible (SURVEY.md §7.5)."""
     keyed = df.withColumn("geo_cell", grid_cell(F.col(lon_col), F.col(lat_col)))
     return keyed.join(F.broadcast(geo_dim), "geo_cell", "left").drop("geo_cell")
-
-
-def geo_columns() -> list[str]:
-    return list(GEO_COLUMNS)
 
 
 # ---------------------------------------------------------------------------

@@ -9,18 +9,20 @@ Scale: each iteration is one shuffle — the contribution sum keyed on the
 destination node; the edge list joins the current ranks on the source key
 and the degree table rides the same src partitioning.  The iteration count
 is FIXED and unrolled into the plan (no driver loop, no collect); for
-web-scale graphs with many rounds you would localCheckpoint ranks every
-few iterations to cut lineage, exactly like connected_components'
-``reliable=True`` mode (dedup.py) — same control-plane pattern, documented
-rather than duplicated here.  Dangling-mass redistribution is deliberately
-omitted (isolated nodes keep the teleport term only) so the recurrence is
-a pure linear map both engines replay identically.
+web-scale graphs with many rounds you would ``stored()`` the ranks every
+few iterations to cut lineage, like connected_components' per-round cut
+(storage.py; README "Storage policy").  Dangling-mass redistribution is
+deliberately omitted (isolated nodes keep the teleport term only) so the
+recurrence is a pure linear map both engines replay identically.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..storage import stored
 
 
 def copurchase_pairs(li: DataFrame, key_col: str = "l_orderkey",
@@ -60,8 +62,12 @@ def copurchase_pairs(li: DataFrame, key_col: str = "l_orderkey",
     same aggregation.  Directed mode derives both orientations by a
     map-side swap union AFTER the half-sized (u < v) distinct, so the
     doubled edge list never crosses an exchange.
+
+    A NULL basket key is not a basket: those rows are dropped before
+    grouping, as the old self-join (NULL never equals NULL) never paired
+    them.
     """
-    baskets = li.groupBy(key_col).agg(
+    baskets = li.filter(F.col(key_col).isNotNull()).groupBy(key_col).agg(
         F.sort_array(F.collect_set(item_col)).alias("__items")
     )
     if max_basket is not None:
@@ -88,11 +94,9 @@ def copurchase_pairs(li: DataFrame, key_col: str = "l_orderkey",
     )
 
 
-def weighted_edges(edges: DataFrame, materialize: bool = True) -> DataFrame:
+def weighted_edges(edges: DataFrame) -> DataFrame:
     """Degree fold: (src, dst) -> (src, dst, __w = 1/out-deg), the SINGLE
-    corpus-scale frame pagerank stores (lazy localCheckpoint;
-    ``.persist(StorageLevel.DISK_ONLY)`` is the cluster variant when
-    executor memory is the binding constraint).
+    corpus-scale frame pagerank stores.
 
     Shape (r15 — guide §2.5 skew): degree is a ``groupBy(src).count()``
     (MAP-SIDE partial aggregation — each task emits one partial count per
@@ -110,14 +114,10 @@ def weighted_edges(edges: DataFrame, materialize: bool = True) -> DataFrame:
     (not the raw pairs) remains the r14 memory-cliff remedy — callers
     that need the degree recover it FROM this frame (count rows per
     src — w = 1/deg makes it exact), never from a second stored copy."""
-    from pyspark import StorageLevel
-
     deg = edges.groupBy("src").agg(F.count("*").alias("__deg"))
     out = edges.join(deg.hint("shuffle_hash"), "src").select(
         "src", "dst", (F.lit(1.0) / F.col("__deg")).alias("__w")
     )
-    if not materialize:
-        return out
     # SERIALIZED blocks (MEMORY_AND_DISK; _DESER is the checkpoint
     # default): a corpus-scale edge list stored deserialized is two JVM
     # objects per row — at 10⁸ rows that object census alone is what GC
@@ -126,9 +126,7 @@ def weighted_edges(edges: DataFrame, materialize: bool = True) -> DataFrame:
     # hundred large buffers (UnsafeRow bytes, no per-row headers),
     # trading a cheap per-iteration deserialize for an object count that
     # no longer grows with the corpus.
-    return out.localCheckpoint(
-        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    return stored(out, StorageLevel.MEMORY_AND_DISK)
 
 
 def pagerank(
@@ -144,14 +142,13 @@ def pagerank(
     ``n_iter`` rounds of  r(v) = (1-d)/N + d * sum_{u->v} r(u)/deg(u),
     with r0 = 1/N.
 
-    ``materialize`` localCheckpoints the derived weighted edge list and
-    the node frame (lazily — first use runs the producing plan once,
-    later iterations read the stored blocks).  Without it, an expensive
-    edge derivation (a pair-generating self-join, say) is REPLANNED
-    inside every unrolled iteration — measured 45 Exchange nodes vs 14
-    on the co-purchase graph.  Same lineage-cut rationale as
-    connected_components' per-round checkpoint (dedup.py); pass False
-    when the caller already materialized the inputs.
+    The derived weighted edge list is always stored (first use runs the
+    producing plan once, later iterations read the stored blocks);
+    without it, an expensive edge derivation (a pair-generating
+    self-join, say) is REPLANNED inside every unrolled iteration —
+    measured 45 Exchange nodes vs 14 on the co-purchase graph.
+    ``materialize`` also stores the node frame; pass False when the
+    caller already stored it.
 
     The degree is folded into a per-edge WEIGHT (w = 1/deg) in one pass
     (``weighted_edges``), and that list — the ONLY corpus-scale frame
@@ -165,9 +162,9 @@ def pagerank(
     already built the weighted list pass it via ``weighted`` (then
     ``edges`` may be None)."""
     if weighted is None:
-        weighted = weighted_edges(edges, materialize=materialize)
+        weighted = weighted_edges(edges)
     if materialize:
-        nodes = nodes.localCheckpoint(eager=False)
+        nodes = stored(nodes)
     nn = nodes.agg(F.count("*").cast("double").alias("__n"))
     base = nodes.crossJoin(F.broadcast(nn))
     ranks = base.select("node", (F.lit(1.0) / F.col("__n")).alias("r"))
@@ -190,8 +187,7 @@ def pagerank(
     return ranks
 
 
-def kcore(edges: DataFrame, k: int, rounds: int,
-          materialize: bool = True, shrink_edges: bool = False) -> DataFrame:
+def kcore(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     """k-core decomposition by iterative peeling (Seidman '83; the
     Batagelj–Zaveršnik degree-peel expressed as a fixed-round dataflow):
     repeatedly drop every node whose degree within the SURVIVING subgraph
@@ -212,10 +208,15 @@ def kcore(edges: DataFrame, k: int, rounds: int,
     peel cascade on the co-purchase graph converges in ≤ 6 rounds at both
     tested SFs (tests pin fixpoint-at-rounds on the registered corpus).
 
+    Eager by construction: BUILDING the returned frame already runs up to
+    ``rounds`` Spark jobs — one ``losers.count()`` per round, which both
+    decides early exit and materializes that round's stored state.  Only
+    the final filter is left to the caller's action.
+
     Scale (r15 — incremental degree-delta peeling, guide §1.2 "the
     algorithm"): the peel recurrence only ever SUBTRACTS — a node's
     in-subgraph degree changes exactly by the number of neighbors
-    removed that round — so the default path maintains one node-sized
+    removed that round — so the peel maintains one node-sized
     (node, deg) state and, per round, re-counts ONLY against the
     just-removed nodes:
 
@@ -228,64 +229,37 @@ def kcore(edges: DataFrame, k: int, rounds: int,
     SortMergeJoin and shuffled+sorted the whole edge list twice per
     round (measured: ~90 % of x_kcore's wall time was these per-round
     cascades; the peel itself removes ~6 % of nodes ONCE).  Now the edge
-    list is never shuffled after its one checkpoint: each round is one
-    broadcast semi-probe of the stationary edges against the (tiny)
-    loser set plus a node-sized merge.  ``losers`` is explicitly
-    broadcast because this default path is documented for the LIGHT-PEEL
-    regime (losers per round ≪ nodes); a heavy-peel graph — where one
-    round removes a broadcast-hostile fraction of nodes — is exactly
-    when you switch to ``shrink_edges=True``, which rewrites the edge
-    list instead.  Per-round state is lazily localCheckpointed so
-    lineage stays linear in rounds; the final (node, core_deg) answer IS
-    the maintained state (no closing recount join).  Bit-identical to
+    list is never shuffled after it is stored: each round is one
+    broadcast semi-probe of the stationary edges against the loser set
+    plus a node-sized merge.  The broadcast is forced only while the
+    round's loser count (the count the loop takes anyway) times the
+    row width fits under ``spark.sql.autoBroadcastJoinThreshold``; a
+    heavy-peel round above it (or a threshold of -1) takes a plain join
+    and leaves the strategy to the planner.  Per-round state is stored
+    so lineage stays linear in rounds; the final (node, core_deg) answer
+    IS the maintained state (no closing recount join).  Bit-identical to
     the two-semi-join form (pytest-pinned, oracle-adjudicated): both
     compute |N(u) ∩ A_t| exactly, and the final filter deg >= 1 matches
     the old recount's inner joins, which emitted no row for a survivor
     whose every neighbor was removed in the last round.
-    ``shrink_edges=True`` instead REWRITES the edge list to the
-    surviving subgraph each round (bit-identical output, pytest-pinned):
-    later rounds then join shrinking operands, the winning shape when
-    the periphery dwarfs the core.
     """
-    if materialize:
-        # checkpoint BELOW the symmetrization (r14): the union's branches
-        # each embed the full pair-derivation subtree, so storing the
-        # unioned frame executed that subtree's non-shared tail twice on
-        # first use and stored 2× the bytes — same single-copy rule as
-        # connected_components / the pagerank weighted-edge remedy; the
-        # swap union over stored blocks is two shuffle-free projections.
-        edges = edges.localCheckpoint(eager=False)
+    # stored BELOW the symmetrization (r14): the union's branches each
+    # embed the full pair-derivation subtree, so storing the unioned
+    # frame executed that subtree's non-shared tail twice on first use
+    # and stored 2× the bytes; the swap union over stored blocks is two
+    # shuffle-free projections.
+    edges = stored(edges)
     sym = edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
         edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
     )
-    if shrink_edges:
-        # rewrite the edge list to the surviving subgraph each round:
-        # degree comes straight off the (already-restricted) list, and
-        # every later round joins a SMALLER operand.  Pays one edge-list
-        # materialization per round — measured bit-identical but ~20%
-        # slower on the registered corpus, whose k=80 peel removes only
-        # ~6% of nodes; it wins when peeling is heavy (a 100 TB graph
-        # whose periphery dwarfs its core), which is when you want it.
-        for _ in range(rounds):
-            act = (
-                sym.groupBy("node")
-                .agg(F.count("*").alias("__d"))
-                .filter(F.col("__d") >= k)
-                .select("node")
-            )
-            sym = (
-                sym.join(act, "node")
-                .join(act.select(F.col("node").alias("nbr")), "nbr")
-                .localCheckpoint(eager=False)
-            )
-        return sym.groupBy("node").agg(
-            F.count("*").cast("bigint").alias("core_deg")
-        )
     # state: (node, __deg) over the current active set; round 0's degree
     # is the plain full-graph count (map-side combinable, one shuffle)
-    state = sym.groupBy("node").agg(F.count("*").alias("__deg")).localCheckpoint(
-        eager=False
-    )
+    state = stored(sym.groupBy("node").agg(F.count("*").alias("__deg")))
+    sql_conf = edges.sparkSession._jsparkSession.sessionState().conf()
+    bcast_limit = sql_conf.autoBroadcastJoinThreshold()
+    # Spark's own no-statistics row estimate: 8 bytes of row overhead
+    # plus the column type's default size
+    loser_row_bytes = 8 + state.select("node")._jdf.schema().defaultSize()
     for _ in range(rounds):
         losers = state.filter(F.col("__deg") < k).select(
             F.col("node").alias("nbr")
@@ -293,17 +267,20 @@ def kcore(edges: DataFrame, k: int, rounds: int,
         # empty loser set ⟹ delta empty ⟹ state unchanged ⟹ every
         # remaining round is a no-op — stop peeling (the fixed-round
         # output is bit-identical; this count is also the action that
-        # materializes the round's lazy checkpoint)
-        if losers.count() == 0:
+        # materializes the round's stored state)
+        n_losers = losers.count()
+        if n_losers == 0:
             break
+        if n_losers * loser_row_bytes <= bcast_limit:
+            losers = F.broadcast(losers)
         # |N(u) ∩ losers|: probe the stationary edge list against the
-        # broadcast loser set — no edge-list shuffle, tiny agg exchange
+        # loser set — no edge-list shuffle when broadcast, tiny agg exchange
         delta = (
-            sym.join(F.broadcast(losers), "nbr")
+            sym.join(losers, "nbr")
             .groupBy("node")
             .agg(F.count("*").alias("__delta"))
         )
-        state = (
+        state = stored(
             state.filter(F.col("__deg") >= k)
             .join(delta, "node", "left")
             .select(
@@ -312,7 +289,6 @@ def kcore(edges: DataFrame, k: int, rounds: int,
                     F.col("__deg") - F.coalesce(F.col("__delta"), F.lit(0))
                 ).alias("__deg"),
             )
-            .localCheckpoint(eager=False)
         )
     return state.filter(F.col("__deg") >= 1).select(
         "node", F.col("__deg").cast("bigint").alias("core_deg")
@@ -397,10 +373,9 @@ def adamic_adar(edges: DataFrame) -> DataFrame:
         .agg(F.count("*").alias("__deg"))
         .filter(F.col("__deg") >= 2)
     )
-    wsym = (
+    wsym = stored(
         sym.join(deg, "node")
         .select("node", "nbr", (F.lit(1.0) / F.log(F.col("__deg"))).alias("__w"))
-        .localCheckpoint(eager=False)
     )
     a, b = wsym.alias("a"), wsym.alias("b")
     scored = (

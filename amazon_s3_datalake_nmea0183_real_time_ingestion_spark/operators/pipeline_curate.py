@@ -34,7 +34,7 @@ Stage order matters and is deliberate:
 Scale: every stage is an operator this package already ships with its
 own 100 TB notes — the composition adds NO new shuffle beyond the
 stages' own (quality gate and split are map-side; the near-dup label
-table is localCheckpoint'd because BOTH the collapse join and the split
+table is stored because BOTH the collapse join and the split
 consume it).
 """
 
@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import doc_fingerprint, quality_logit, tokens
+from ..storage import stored
 from .curation import hash_split
 from .dedup import (
     connected_components,
@@ -94,20 +95,19 @@ def curate_corpus(
 
     # exact: keep the lowest id per normalized-text fingerprint
     # (exact_dedup's window, inlined so the PRE-filter tagged frame is
-    # the one stored).  localCheckpoint (lazy) on the TAGGED frame, not
-    # the post-filter survivors (r15, guide §1.2): the frame feeds the
-    # LSH pair join, the collapse join, AND two funnel counts — and the
-    # funnel's quality_gate count needs the pre-dedup row set, which a
-    # survivors-only checkpoint forced back through a second full
+    # the one stored).  Store the TAGGED frame, not the post-filter
+    # survivors (r15, guide §1.2): the frame feeds the LSH pair join, the
+    # collapse join, AND two funnel counts — and the funnel's
+    # quality_gate count needs the pre-dedup row set, which a
+    # survivors-only store forced back through a second full
     # tokenize + quality_logit corpus pass.  Storing the tagged frame
     # (gated-sized: survivors + the duplicate rows the filter drops)
     # serves both counts from the same blocks; the dedup filter is a
     # narrow projection over them.
     w_fp = Window.partitionBy("__fp").orderBy(F.col(id_col).asc())
-    tagged = (
+    tagged = stored(
         gated.withColumn("__fp", doc_fingerprint(text_col))
         .withColumn("__rn", F.row_number().over(w_fp))
-        .localCheckpoint(eager=False)
     )
     exact = tagged.filter(F.col("__rn") == 1).drop("__fp", "__rn")
 
@@ -121,9 +121,10 @@ def curate_corpus(
     # the caller switching use_star_cc=True as the non-convergence
     # recourse (code-review r7 finding)
     cc_kwargs = {} if cc_max_iters is None else {"max_iters": cc_max_iters}
-    labels = label_components(
+    # consumed by the collapse AND the split
+    labels = stored(label_components(
         pairs, exact.select(id_col), id_col=id_col, **cc_kwargs
-    ).localCheckpoint(eager=False)  # consumed by the collapse AND the split
+    ))
     collapsed = exact.join(labels, id_col).filter(
         F.col(id_col) == F.col("cluster_id")
     )

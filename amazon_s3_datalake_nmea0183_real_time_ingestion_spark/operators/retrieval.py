@@ -1,99 +1,10 @@
-"""Corpus-statistics retrieval operators for LLM data pipelines: inverted
-index construction and count-based n-gram language-model scoring.
-
-Both are wordcount-shaped (explode → aggregate) so they inherit Spark's
-map-side partial aggregation; determinism is integer-count arithmetic only
-(no log/exp — libm results differ across engines in the last ulp), so every
-output has an exact ANSI-SQL oracle.
+"""Retrieval-side re-ranking for LLM data pipelines: greedy Maximal
+Marginal Relevance selection over a pre-scored candidate pool.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-from ..functions.text import shingles_from_tokens, tokens
-
-
-def inverted_index(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text", top_n: int = 3) -> DataFrame:
-    """Build an inverted index: one row per term with its document
-    frequency and the top-``top_n`` postings (``doc:tf``, ordered tf desc
-    then doc asc) — the retrieval structure behind BM25/keyword search
-    and fast contamination lookups.
-
-    Returns (``term``, ``df``, ``postings``) where ``postings`` is a
-    comma-joined string so the row is flat and oracle-hashable.
-
-    Scale: explode → (term, doc) count is a wordcount with map-side
-    combine; the posting-list cut is a rank window partitioned by term —
-    WindowGroupLimit keeps only ``top_n`` rows per term per shuffle
-    partition, so giant-df stopword terms never materialize their full
-    posting lists.  One key shuffle end to end; no driver state.
-    """
-    toks = docs.select(F.col(id_col).alias("__doc"), tokens(text_col).alias("__t"))
-    tf = (
-        toks.select("__doc", F.explode("__t").alias("term"))
-        .groupBy("term", "__doc")
-        .agg(F.count("*").alias("tf"))
-    )
-    w = Window.partitionBy("term")
-    rn = F.row_number().over(w.orderBy(F.col("tf").desc(), F.col("__doc").asc()))
-    ranked = tf.withColumn("df", F.count("*").over(w)).withColumn("rn", rn)
-    return (
-        ranked.filter(F.col("rn") <= top_n)
-        .groupBy("term")
-        .agg(
-            F.max("df").cast("int").alias("df"),  # constant per term
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("rn", "__doc", "tf"))),
-                    lambda s: F.concat_ws(":", s["__doc"], s["tf"]),
-                ),
-                ",",
-            ).alias("postings"),
-        )
-    )
-
-
-def bigram_lm_score(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """Count-based bigram language-model scoring (the perplexity-filter
-    proxy used to rank documents by fluency against the corpus itself):
-    score each document by the mean corpus frequency of its word bigrams.
-    High score = made of common constructions; near-1 = mostly bigrams
-    seen nowhere else (gibberish / OCR noise candidates for removal).
-
-    Deliberately libm-free: the classic formulation averages log
-    probabilities, but ``log`` differs across engines in the last ulp, so
-    the score is the plain mean count — ``sum(corpus_count(bigram)) /
-    n_bigrams`` — whose integer sums are exact in float64 and rank
-    documents identically to mean probability.  Returns (``id_col``,
-    ``n_bigrams``, ``mean_bigram_freq``).
-
-    Scale: two wordcount aggregates plus one equi-join of the per-doc
-    bigram stream against the corpus count table.  Exact mode (here)
-    shuffles on the bigram key; at 100 TB cap the model to the top-K
-    bigrams (K ~ 10M rows ≈ a few hundred MB) and BROADCAST it, scoring
-    out-of-vocabulary bigrams as 0 via the same ``coalesce`` — the corpus
-    side then never shuffles.  Documents shorter than 2 tokens score on
-    their single sub-k shingle (shingles_from_tokens floor), so no row
-    silently disappears.
-    """
-    toks = docs.select(F.col(id_col).alias("__doc"), tokens(text_col).alias("__t"))
-    bg = toks.select(
-        "__doc", F.explode(shingles_from_tokens(F.col("__t"), 2)).alias("bigram")
-    )
-    counts = bg.groupBy("bigram").agg(F.count("*").alias("cnt"))
-    return (
-        bg.join(counts, "bigram")
-        .groupBy(F.col("__doc").alias(id_col))
-        .agg(
-            F.count("*").cast("int").alias("n_bigrams"),
-            (F.sum("cnt").cast("double") / F.count("*")).alias("mean_bigram_freq"),
-        )
-    )
 
 
 def mmr_rerank(cand: DataFrame, sim_cc: DataFrame, k: int,

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import as_double, dot_double
+from ..storage import stored
 
 
 def prep_vectors(df: DataFrame, id_col: str, vec_col: str, out_id: str,
@@ -715,9 +716,7 @@ def semantic_dedup_pairs(corpus: DataFrame, centroids: DataFrame,
         # (the cell-size window and both pair-join sides), and unlike the
         # declarative path's shared exchange, three copies of the
         # cogrouped-applyInPandas stage do not collapse via ReuseExchange
-        # — measured 2.4× end-to-end at sf1 (SCALE.md §7g).  Same
-        # executor-loss trade-off as q_triangle_count's edge list (see
-        # that docstring); production uses persist(DISK_ONLY).
+        # — measured 2.4× end-to-end at sf1 (SCALE.md §7g).
         asg = assign_to_centroids_2level_blas(corpus, centroids, id_col, vec_col)
     else:
         asg = assign_to_centroids(corpus, centroids, id_col, vec_col)
@@ -732,7 +731,7 @@ def semantic_dedup_pairs(corpus: DataFrame, centroids: DataFrame,
     # rows out of the max_cell cell-size counts below.
     asg = asg.filter(F.col("vn") > 0)
     if use_blas:
-        asg = asg.localCheckpoint(eager=False)
+        asg = stored(asg)
     if max_cell is not None:
         w = Window.partitionBy("cluster")
         asg = (

@@ -18,47 +18,38 @@ from . import tierl  # noqa: F401,E402
 from . import tierm  # noqa: F401,E402
 
 # The driver adjudicates queries() in dict-insertion order and caps at 50
-# keys per round.  Round 15 (optimization round 2; VERDICT.md r14 "Next
-# round" #2) front-loads, in this order:
-#   1. slots 1-22 = EVERY key whose plan or operator code changed in r14
-#      or r15 (the zero-changes-outside-window rule): the 14 r14-changed
-#      keys the r14 window missed (VERDICT r14 correctness-gate list),
-#      plus the r15-changed keys — the copurchase-derivation consumers
-#      (q_triangle_count/x_pagerank/x_lpa families re-enter even though
-#      r14 gave them fresh rows, because r15 changed them again), the
-#      guarded pair-core consumers (x_split_leakage,
-#      x_dedup_containment_guarded), and the exact-mode pair-core
-#      consumers (x_dedup_ngram, x_dedup_containment);
-#   2. slots 23-42 = the r10-era queue carried from the r14 cut line,
-#      CORRECTNESS_r10 insertion order, minus keys already in slots 1-22;
-#   3. slots 43-50 = the start of the r11 block (CORRECTNESS_r11
-#      insertion order, skipping keys already above).  The remaining
-#      r11-era names queue past the cut for any future round.
+# keys per round.  This window front-loads, in this order:
+#   1. slots 1-31 = EVERY key whose code path reaches a storage site moved
+#      onto storage.stored() or the changed operators/graph.py (traced by
+#      patching localCheckpoint and copurchase_pairs over a full oracle
+#      run): the CC/dedup family, kcore, the pagerank family, the
+#      triangle family and the near-dup ledger first, then the remaining
+#      stored-frame consumers;
+#   2. slots 32-46 = the rotation carried from the r11 cut line;
+#   3. slots 47-50 = the start of the r12 block (CORRECTNESS_r12
+#      insertion order, skipping keys already above).
 _NEEDS_VERDICT = [
-    # r14/r15-changed keys (slots 1-22)
-    "x_text_repetition", "x_dedup_ledger_near", "x_kcore",
-    "x_dedup_best", "x_dedup_best_guarded", "x_dedup_cluster",
-    "x_dedup_cluster_guarded", "x_dedup_cluster_star", "x_dedup_simhash",
-    "x_dedup_census", "x_split_cluster_safe", "x_curate_corpus",
-    "q_triangle_count_guarded", "x_lpa_guarded", "q_triangle_count",
-    "x_pagerank", "x_pagerank_guarded", "x_lpa", "x_split_leakage",
-    "x_dedup_containment_guarded", "x_dedup_ngram", "x_dedup_containment",
-    # r10-era queue (slots 23-42), CORRECTNESS_r10 order preserved
-    "x_embed_quantize", "x_lm_bigram", "x_minhash_calibration",
-    "x_pmi_collocations", "x_sim_ivf2", "x_sim_quantized",
-    "x_token_entropy", "cat_register", "x_sprt", "x_mmr_diversify",
-    "x_gains_lift", "x_mann_whitney", "x_cramers_v",
-    "x_rank_fusion", "x_percentile_norm", "x_keywords_tfidf",
-    "x_lang_mismatch", "x_embed_norms", "x_dataset_diff", "x_source_kl",
-    # r11-block start (slots 43-50), CORRECTNESS_r11 order
-    "x_sim_ivf_2level", "x_sim_ivf_2level_exact", "x_curriculum_shards",
-    "x_dataset_card", "x_decontaminate_near", "x_chunk_documents",
-    "x_multimodal_decode", "q_funnel",
-    # --- r15 cut line (50) --- future rounds continue with the rest of
-    # the r11 block: q_retention, q_gapfill, x_scd2, x_bm25, x_surprisal,
-    # x_zorder, q_merge, q_pattern_match, q_agg_approx_quantile,
-    # x_ann_recall, q_fn_variant, x_data_checks, x_dedup_url,
-    # q_histogram, q_join_asof_near, then the r12 block.
+    # storage-policy / graph.py changed keys (slots 1-31)
+    "x_dedup_cluster", "x_dedup_cluster_guarded", "x_dedup_cluster_star",
+    "x_dedup_census", "x_split_cluster_safe", "x_split_leakage",
+    "x_curate_corpus", "x_dedup_best", "x_dedup_best_guarded",
+    "x_dedup_ngram", "x_dedup_containment", "x_dedup_containment_guarded",
+    "x_dedup_simhash", "x_kcore", "x_pagerank", "x_pagerank_guarded",
+    "q_triangle_count", "q_triangle_count_guarded", "x_dedup_ledger_near",
+    "x_lpa", "x_lpa_guarded", "x_link_adamic", "x_dedup_semantic_guarded",
+    "x_sim_ivf_2level", "x_sim_ivf_2level_exact", "x_bpe_tokenize",
+    "x_vocab_bpe", "x_hll_intersect", "x_theta_intersect",
+    "x_active_users_hll", "x_mmr_diversify",
+    # rotation from the r11 cut line (slots 32-46)
+    "q_retention", "q_gapfill", "x_scd2", "x_bm25", "x_surprisal",
+    "x_zorder", "q_merge", "q_pattern_match", "q_agg_approx_quantile",
+    "x_ann_recall", "q_fn_variant", "x_data_checks", "x_dedup_url",
+    "q_histogram", "q_join_asof_near",
+    # r12-block start (slots 47-50), CORRECTNESS_r12 order
+    "q_fn_haversine", "q_fn_array", "q_fn_json", "q_subquery",
+    # --- cut line (50) --- future rounds continue with the rest of the
+    # r12 block, then the r10/r11 names this window displaced
+    # (x_text_repetition, x_embed_quantize, x_lm_bigram, ...).
 ]
 
 

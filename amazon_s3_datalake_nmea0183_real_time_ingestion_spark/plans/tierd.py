@@ -28,6 +28,7 @@ from ..operators.dedup import (
     minhash_near_dup,
     ngram_jaccard_pairs,
 )
+from ..storage import stored
 from .registry import register, table
 from .tierc import _CORPUS3_SQL, _SHINGLES_SQL, _TOKS_SQL, _doc_corpus3
 
@@ -681,10 +682,10 @@ def pagerank_report(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
     single-corpus-scale-scan plan shape."""
     from ..operators.graph import pagerank, weighted_edges
 
-    # the ONE corpus-scale checkpoint: pair self-join + degree fold run
+    # the ONE corpus-scale stored frame: pair self-join + degree fold run
     # once, iterations and the degree branch below read the stored blocks
     weighted = weighted_edges(pairs)
-    nodes = nodes.localCheckpoint(eager=False)
+    nodes = stored(nodes)
     ranks = pagerank(None, nodes, n_iter=3, damping=0.85,
                      materialize=False, weighted=weighted)
     nn = nodes.agg(F.count("*").cast("double").alias("__n"))

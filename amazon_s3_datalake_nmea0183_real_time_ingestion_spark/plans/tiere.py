@@ -28,6 +28,7 @@ from ..operators.dedup import (
     minhash_signatures,
     shingle_set,
 )
+from ..storage import stored
 from .registry import register, table
 from .tierc import _CORPUS_SQL, _doc_corpus, _emb_corpus
 from .tierd import _basket_screen_sql
@@ -98,15 +99,10 @@ def triangle_top50(und: DataFrame) -> DataFrame:
     edge list (algorithm notes on q_triangle_count) — shared by the
     exhaustive key and the max_basket-guarded production twin (tierh)."""
     # reuse the undirected edge list across degree/orientation/wedge/probe
-    # branches instead of replanning the order self-join four times.
-    # Fault-tolerance trade-off: localCheckpoint TRUNCATES lineage to
-    # blocks on the executors that computed them, so losing an executor
-    # mid-job fails the query instead of recomputing the lost partitions.
-    # Acceptable for an interactive analytics query (rerun is cheap, the
-    # 4× replan saving is every run); a 1000-executor production job over
-    # 100 TB should use .persist(DISK_ONLY) (replays lineage on loss) or
-    # reliable checkpoint(dir) instead — same plan shape, same reuse.
-    und = und.localCheckpoint(eager=False)
+    # branches instead of replanning the order self-join four times
+    # (fault-tolerance trade and the durable mode: storage.py, README
+    # "Storage policy").
+    und = stored(und)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
@@ -117,11 +113,11 @@ def triangle_top50(und: DataFrame) -> DataFrame:
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
     j = und.join(du, "u").join(dv, "v")
     u_first = F.struct(F.col("du"), F.col("u")) < F.struct(F.col("dv"), F.col("v"))
-    ori = j.select(
+    ori = stored(j.select(
         F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("dd"),
-    ).localCheckpoint(eager=False)
+    ))
     # r14 (guide §3.1 — pick the join strategy deliberately): both the
     # wedge self-join and the closing probe stream a wedge-sized side
     # (O(m^1.5) rows) against an edge-sized side (O(m) rows).  Sort-merge

@@ -28,6 +28,7 @@ from ..functions.hashing import md5_u32
 from ..functions.text import tokens
 from ..operators.dedup import shingle_set
 from ..operators.similarity import _ranked_topk, pair_cosine, prep_vectors
+from ..storage import stored
 from .registry import register, table
 from .tierc import _CORPUS_SQL, _SHINGLES_SQL, _TOKS_SQL, _doc_corpus
 from .tierd import _basket_screen_sql
@@ -202,9 +203,8 @@ def x_lpa(spark: SparkSession, sf: str) -> DataFrame:
     label frame (both keyed by node — the label side is node-sized, far
     smaller than edges) and one (node, label)-keyed count with a
     WindowGroupLimit-style rank-1 pick riding the same shuffle; the edge
-    list is materialized once and reused across both iterations and the
-    node-derivation (same localCheckpoint economics and executor-loss
-    caveat as q_triangle_count — production uses persist(DISK_ONLY)).
+    list is stored once and reused across both iterations and the
+    node-derivation.
     Iterations are a fixed unroll (2), not driver-side convergence
     polling; the final community census is one keyed count + global
     top-50 via TakeOrderedAndProject.
@@ -219,11 +219,11 @@ def lpa_top50(und: DataFrame) -> DataFrame:
     """2-iteration synchronous LPA community census body over an
     undirected (u, v) edge list (algorithm notes on x_lpa) — shared by
     the exhaustive key and the max_basket-guarded twin (tierh)."""
-    # checkpoint BELOW the symmetrization (r14): storing the union would
+    # store BELOW the symmetrization (r14): storing the union would
     # execute the pair-derivation subtree in both branches on first use
     # and store 2× the bytes (see connected_components); the swap union
     # over stored pair blocks is two shuffle-free projections per use.
-    und = und.localCheckpoint(eager=False)
+    und = stored(und)
     edges = und.unionAll(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
     # init: every node is its own community
     labels = (

@@ -22,6 +22,7 @@ from ..operators.dedup import connected_components_star, ngram_jaccard_pairs
 from ..operators.graph import copurchase_pairs
 from ..operators.pipeline_curate import curate_corpus
 from ..operators.similarity import _ranked_topk, pair_cosine
+from ..storage import stored
 from .registry import register, table
 from .tierc import _CORPUS3_SQL, _SHINGLES_SQL, _TOKS_SQL, _doc_corpus3
 from .tierd import _pagerank_oracle, pagerank_report
@@ -173,7 +174,7 @@ def x_curate_corpus(spark: SparkSession, sf: str) -> DataFrame:
     with its own 100 TB notes (x_quality_model map-side gate,
     x_dedup_exact window, x_dedup_near guarded LSH with max_bucket=100,
     x_decontaminate broadcast screen, x_split_cluster_safe hash split);
-    the composition's only additions are two lazy localCheckpoints
+    the composition's only additions are two stored frames
     (exact survivors, cluster labels) because each feeds 2-3 consumers,
     and the funnel's per-stage counts, which are one aggregate each over
     frames the pipeline already computes.
@@ -354,7 +355,7 @@ def _ivf_probe1_report(asg: DataFrame, k: int = 3) -> DataFrame:
     (vec_id, vd, vn, cluster) — shared by the two-level keys so the
     query filter / self-pair exclusion / rank cast live once.
 
-    The assignment is materialized once (lazy localCheckpoint): it feeds
+    The assignment is stored once: it feeds
     BOTH join sides, and the query side is a filter of the corpus-wide
     frame — without the cut, each consumer re-runs the whole two-level
     chain (for the BLAS variant, Pandas stages never collapse via
@@ -365,7 +366,7 @@ def _ivf_probe1_report(asg: DataFrame, k: int = 3) -> DataFrame:
     list_cosine_similarity would emit NaN and rank it first.  The
     driver's embeddings contain no zero vectors, so the divergence is
     documented, not defended."""
-    asg = asg.localCheckpoint(eager=False)
+    asg = stored(asg)
     assigned = asg.select(
         F.col("vec_id").alias("neighbor_id"), F.col("vd").alias("cd"),
         F.col("vn").alias("cn"), "cluster",
@@ -436,7 +437,7 @@ def x_sim_ivf_2level_exact(spark: SparkSession, sf: str) -> DataFrame:
 
     e = table(spark, sf, "embeddings")
     cents = strided_centroids(e, stride=25)
-    # probe-all = exact; _ivf_probe1_report localCheckpoints the
+    # probe-all = exact; _ivf_probe1_report stores the
     # assignment so the per-cell dgemm runs once, not per join side
     return _ivf_probe1_report(assign_to_centroids_2level_blas(e, cents))
 

@@ -360,7 +360,7 @@ def x_vocab_bpe(spark: SparkSession, sf: str) -> DataFrame:
     (vocabulary-sized, Heaps' law), the corpus is scanned once for the
     wordcount; each round is one map-side-combinable pair-count shuffle
     + a 1-row control-plane collect broadcast into a codegen rewrite
-    fold; lazy localCheckpoint per round keeps lineage linear in rounds.
+    fold; a stored frame per round keeps lineage linear in rounds.
     """
     from ..operators.bpe import bpe_learn
 

@@ -79,13 +79,9 @@ def x_kcore(spark: SparkSession, sf: str) -> DataFrame:
     8-round budget returns the true k-core with two idempotent rounds of
     margin — a pytest pins fixpoint-at-8-rounds on the registered corpus.
 
-    Scale (operators/graph.py::kcore): the symmetrized edge list is
-    lazily localCheckpointed once (stationary dataset); each round is two
-    keyed semi-joins against the shrinking node-sized active set plus one
-    map-side-combinable degree count, with per-round lazy checkpoints
-    keeping lineage linear — the same per-round economics as
-    connected_components, and the active set broadcasts via AQE once it
-    shrinks.  Pair derivation is the shared hub-guardable
+    Scale: see operators/graph.py::kcore (incremental degree-delta
+    peeling over a stored, stationary edge list).  Pair derivation is
+    the shared hub-guardable
     copurchase_pairs (exhaustive here — TPC-H baskets are bounded at 7;
     the guarded twins establish the max_basket pattern).
     """

@@ -44,6 +44,7 @@ from pyspark.sql.window import Window
 from ..operators.dedup import shingle_set
 from ..operators.graph import adamic_adar, copurchase_affinity
 from ..operators.skew import salted_exact_distinct_count
+from ..storage import stored
 from .registry import register, table
 
 # ---------------------------------------------------------------------------
@@ -279,12 +280,11 @@ def x_hll_intersect(spark: SparkSession, sf: str) -> DataFrame:
     alone.
     """
     d = table(spark, sf, "documents").filter(F.col("source").isin(*_HLL_SOURCES))
-    sh = (
+    sh = stored(
         shingle_set(d, "doc_id", "text", 3)
         .join(d.select("doc_id", "source"), "doc_id")
         .select("source", "shingle")
         .distinct()
-        .localCheckpoint(eager=False)
     )
     per = sh.groupBy("source").agg(
         F.hll_sketch_agg("shingle", F.lit(12)).alias("sk"),
@@ -456,12 +456,11 @@ def x_theta_intersect(spark: SparkSession, sf: str) -> DataFrame:
     without rescanning the corpus.
     """
     d = table(spark, sf, "documents").filter(F.col("source").isin(*_HLL_SOURCES))
-    sh = (
+    sh = stored(
         shingle_set(d, "doc_id", "text", 3)
         .join(d.select("doc_id", "source"), "doc_id")
         .select("source", "shingle")
         .distinct()
-        .localCheckpoint(eager=False)
     )
     h = sh.withColumn(
         "u",
@@ -485,10 +484,9 @@ def x_theta_intersect(spark: SparkSession, sf: str) -> DataFrame:
     # surviving rows iff |set| >= k (then theta = the k-th smallest u =
     # max(u) of the sample), else all |set| < k rows survive (theta = 1.0).
     wr = Window.partitionBy("source").orderBy("u", "shingle")
-    kept = (
-        h.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= _THETA_K)
-        .localCheckpoint(eager=False)  # <= |sources|·k rows; feeds th AND samp
+    # <= |sources|·k rows; feeds th AND samp
+    kept = stored(
+        h.withColumn("rn", F.row_number().over(wr)).filter(F.col("rn") <= _THETA_K)
     )
     th = kept.groupBy("source").agg(
         F.when(F.count("*") >= _THETA_K, F.max("u"))
@@ -613,9 +611,7 @@ def x_link_adamic(spark: SparkSession, sf: str) -> DataFrame:
     ln/sum order cannot flip the cut (registry.py float rules).
     """
     li = table(spark, sf, "lineitem")
-    edges = copurchase_affinity(li, min_support=_AA_MIN_SUPPORT).localCheckpoint(
-        eager=False
-    )
+    edges = stored(copurchase_affinity(li, min_support=_AA_MIN_SUPPORT))
     scored = adamic_adar(edges.select("u", "v"))
     return (
         scored.select(
@@ -1195,7 +1191,7 @@ def x_mmr_diversify(spark: SparkSession, sf: str) -> DataFrame:
         emb.filter(F.col("vec_id") != 0), "vec_id", "embedding", "neighbor_id",
         "cd", "cn",
     )
-    cand = (
+    cand = stored(
         c.crossJoin(F.broadcast(q))
         .select(
             F.col("neighbor_id").alias("vec_id"),
@@ -1205,7 +1201,6 @@ def x_mmr_diversify(spark: SparkSession, sf: str) -> DataFrame:
         )
         .orderBy(F.col("simq").desc(), F.col("vec_id").asc())
         .limit(_MMR_POOL)
-        .localCheckpoint(eager=False)
     )
     from ..functions.vectors import dot_double
 

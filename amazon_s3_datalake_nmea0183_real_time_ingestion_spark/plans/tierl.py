@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..storage import stored
 from .registry import register, table
 
 # ---------------------------------------------------------------------------
@@ -1019,21 +1020,19 @@ def x_active_users_hll(spark: SparkSession, sf: str) -> DataFrame:
     tol = 0.05
     e = table(spark, sf, "events")
     # the (user, day) collapse feeds the sketch build AND both exact
-    # horizons — checkpoint it so the corpus distinct runs ONCE
-    ud = (
-        e.select("user_id", F.col("ts").cast("date").alias("day"))
-        .distinct()
-        .localCheckpoint(eager=False)
+    # horizons — store it so the corpus distinct runs ONCE
+    ud = stored(
+        e.select("user_id", F.col("ts").cast("date").alias("day")).distinct()
     )
     days = ud.select("day").distinct()
     # the persisted-store analog: one 4 KB sketch per day, built in one
-    # pass and MATERIALIZED (lazy checkpoint = the in-session stand-in
-    # for the parquet sketch store) — the three sketch readouts below
-    # read this calendar-sized state, never the corpus
-    daily = ud.groupBy("day").agg(
+    # pass and STORED (the in-session stand-in for the parquet sketch
+    # store) — the three sketch readouts below read this calendar-sized
+    # state, never the corpus
+    daily = stored(ud.groupBy("day").agg(
         F.hll_sketch_agg("user_id", F.lit(12)).alias("sk"),
         F.countDistinct("user_id").alias("dau_exact"),
-    ).localCheckpoint(eager=False)
+    ))
 
     def _union_horizon(n_days: int, est_name: str) -> DataFrame:
         d = days.select(F.col("day").alias("d"))

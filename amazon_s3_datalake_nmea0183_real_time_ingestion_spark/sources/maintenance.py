@@ -15,6 +15,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..storage import stored
+
 
 def schema_drift_report(spark: SparkSession, path: str,
                         declared: StructType, fmt: str = "parquet") -> DataFrame:
@@ -1403,16 +1405,9 @@ def heavy_hitters_monitor_report(
         F.col("win") == 1
     )
     # the fleet-sized count table feeds THREE consumers (sketch build,
-    # top-k, totals) across two actions — one lazy localCheckpoint so
-    # the corpus scan+count runs once (the repo's shared-subtree
-    # convention; fault-tolerance trade documented at the x_dedup_best
-    # precedent: on a cluster, persist(DISK_ONLY) is the re-runnable
-    # variant)
-    cnt = (
-        recent.groupBy("k")
-        .agg(F.count("*").alias("exact_n"))
-        .localCheckpoint(eager=False)
-    )
+    # top-k, totals) across two actions — stored so the corpus
+    # scan+count runs once
+    cnt = stored(recent.groupBy("k").agg(F.count("*").alias("exact_n")))
     sketch = cms_from_counts(cnt, "k", "exact_n", depth=depth, width=width)
     topk = (
         cnt.orderBy(F.col("exact_n").desc(), F.col("k").asc()).limit(k)
@@ -1495,9 +1490,7 @@ def dedup_census_monitor_report(
     — the census on top is two keyed counts over the label table, and
     the collects are control-plane-sized: the size histogram
     (≤ distinct-sizes rows) and the 1-row top cluster.  The
-    cluster-size table feeds both, so it is lazily localCheckpointed
-    once (the shared-subtree convention; persist(DISK_ONLY) is the
-    cluster variant).
+    cluster-size table feeds both, so it is stored once.
     """
     from ..operators.dedup import connected_components, ngram_jaccard_pairs
 
@@ -1509,11 +1502,7 @@ def dedup_census_monitor_report(
         corpus, threshold=threshold, max_df=max_df
     ).select("id_a", "id_b")
     labels = connected_components(edges, corpus.select("doc_id"))
-    cs = (
-        labels.groupBy("cluster_id")
-        .agg(F.count("*").alias("sz"))
-        .localCheckpoint(eager=False)
-    )
+    cs = stored(labels.groupBy("cluster_id").agg(F.count("*").alias("sz")))
     census_rows = (
         cs.groupBy("sz")
         .agg(F.count("*").alias("n_clusters"))
@@ -1623,16 +1612,14 @@ def sketch_store_monitor_report(
             F.col("win") == 1
         )
     # the calendar-sized daily sketch table feeds two actions (per-day
-    # readout, union readout) — one lazy localCheckpoint so the
-    # corpus-sized sketch build runs once (same convention and
-    # fault-tolerance trade as heavy_hitters_monitor_report's count
-    # table; the union-exact and age-bounds aggregates below are
+    # readout, union readout) — stored so the corpus-sized sketch build
+    # runs once (the union-exact and age-bounds aggregates below are
     # separate column-pruned scans by necessity — neither is derivable
     # from the per-day table)
-    daily = recent.groupBy("day").agg(
+    daily = stored(recent.groupBy("day").agg(
         F.hll_sketch_agg("k", F.lit(lg_k)).alias("sk"),
         F.countDistinct("k").alias("exact"),
-    ).localCheckpoint(eager=False)
+    ))
     per_day = daily.select(
         "day", "exact", F.hll_sketch_estimate("sk").alias("est")
     ).orderBy("day").collect()  # control-plane: <= recent_days rows

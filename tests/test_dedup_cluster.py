@@ -46,30 +46,6 @@ def test_string_ids_multi_hop(spark):
     got = {r["doc_id"]: r["cluster_id"] for r in connected_components(e, n).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "z": "z"}
 
-def test_reliable_checkpoint_equals_local(spark, tmp_path):
-    # reliable=True (cluster-durable df.checkpoint) must produce identical
-    # clusters to the default localCheckpoint path.
-    e = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "id_a bigint, id_b bigint")
-    n = spark.createDataFrame([(x,) for x in (1, 2, 3, 4, 5, 6)], "doc_id bigint")
-    local = {r["doc_id"]: r["cluster_id"] for r in connected_components(e, n).collect()}
-    durable = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(
-            e, n, reliable=True, checkpoint_dir=str(tmp_path / "ckpt")
-        ).collect()
-    }
-    assert durable == local == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5}
-
-def test_reliable_without_dir_raises(spark):
-    import pytest
-
-    e = spark.createDataFrame([(1, 2)], "id_a bigint, id_b bigint")
-    n = spark.createDataFrame([(1,), (2,)], "doc_id bigint")
-    if spark.sparkContext.getCheckpointDir() is None:
-        with pytest.raises(ValueError, match="checkpoint dir"):
-            connected_components(e, n, reliable=True)
-
-
 def test_ngram_max_df_prefilter_exact_scores(spark):
     """The max_df candidate prefilter bounds join fanout but keeps scores
     exact: surviving pairs carry identical jaccard to the exact mode, and

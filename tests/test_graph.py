@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.graph import (
+    copurchase_pairs,
     pagerank,
 )
 
@@ -49,3 +50,15 @@ def test_pagerank_isolated_node_keeps_teleport_only(spark):
     got = _ranks(spark, edges, [0, 1, 2], n_iter=2)
     assert got[2] == pytest.approx(0.15 / 3, rel=1e-12)
     assert got[0] == got[1] > got[2]
+
+
+def test_copurchase_pairs_null_basket_key_yields_no_pairs(spark):
+    # NULL-key rows are not one shared basket: only basket 1 pairs
+    li = spark.createDataFrame(
+        [(None, 1), (None, 2), (None, 3), (1, 4), (1, 5)],
+        "l_orderkey long, l_partkey long",
+    )
+    und = {(r.u, r.v) for r in copurchase_pairs(li).collect()}
+    assert und == {(4, 5)}
+    directed = {(r.src, r.dst) for r in copurchase_pairs(li, directed=True).collect()}
+    assert directed == {(4, 5), (5, 4)}

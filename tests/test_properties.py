@@ -305,6 +305,34 @@ def test_kcore_matches_python_peel_on_random_graphs(spark, raw_edges, k):
     assert got == expect
 
 
+@settings(max_examples=4, deadline=None)
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 14), st.integers(0, 14)),
+        min_size=1,
+        max_size=60,
+    ),
+    st.integers(2, 4),
+)
+def test_kcore_without_broadcast_matches_python_peel(spark, raw_edges, k):
+    """With broadcasts disabled (threshold -1) kcore probes the loser
+    set through a plain join and still equals the pure-Python peel."""
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.graph import kcore
+
+    edges = sorted({(min(u, v), max(u, v)) for u, v in raw_edges if u != v})
+    if not edges:
+        return
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = spark.createDataFrame(edges, ["u", "v"])
+        got = {r.node: r.core_deg for r in kcore(df, k=k, rounds=16).collect()}
+    finally:
+        spark.conf.set(key, prev)
+    assert got == _py_kcore(edges, k)
+
+
 @settings(max_examples=5, deadline=None)
 @given(
     st.lists(

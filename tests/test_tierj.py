@@ -319,16 +319,6 @@ def test_join_card_within_cms_epsilon_bound(spark):
     assert out["returned_join_partkey"].overcount <= eps * n_all * n_ret
 
 
-def test_kcore_shrink_edges_variant_is_equivalent(spark):
-    """The edge-shrinking peel (for heavy-peel graphs) returns the
-    identical core and degrees as the stationary-edge-list peel."""
-    li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet")
-    edges = copurchase_pairs(li).localCheckpoint()
-    a = _rows(kcore(edges, k=60, rounds=4), "node", "core_deg")
-    b = _rows(kcore(edges, k=60, rounds=4, shrink_edges=True), "node", "core_deg")
-    assert a == b and len(a) > 0
-
-
 def test_f2_countsketch_tight_on_flat_distribution(spark):
     """The Count-Sketch F2 estimator's reason to exist: single-digit-
     percent relative error on the SAME flat distribution where the CMS
