@@ -57,21 +57,30 @@ def copurchase_pairs(li: DataFrame, key_col: str = "l_orderkey",
     that expands each basket's C(w, 2) ordered pairs in the projection,
     then the one pair-keyed ``distinct``.  This replaces the previous
     4-exchange derivation (distinct → keyed self-join with its two sort
-    exchanges → distinct) with 2 exchanges and no sort-merge sort; the
-    width guard becomes a ``size(items) <= max_basket`` filter riding the
-    same aggregation.  Directed mode derives both orientations by a
-    map-side swap union AFTER the half-sized (u < v) distinct, so the
-    doubled edge list never crosses an exchange.
+    exchanges → distinct) with 2 exchanges and no sort-merge sort.  The
+    width guard screens BEFORE that aggregation: a per-basket
+    ``count_distinct`` (partial-aggregated map-side) finds the baskets
+    wider than ``max_basket`` and an anti-join drops their rows, so a
+    hub's item array is never built.  Directed mode derives both
+    orientations by a map-side swap union AFTER the half-sized (u < v)
+    distinct, so the doubled edge list never crosses an exchange.
 
     A NULL basket key is not a basket: those rows are dropped before
     grouping, as the old self-join (NULL never equals NULL) never paired
     them.
     """
-    baskets = li.filter(F.col(key_col).isNotNull()).groupBy(key_col).agg(
+    li = li.filter(F.col(key_col).isNotNull())
+    if max_basket is not None:
+        wide = (
+            li.groupBy(key_col)
+            .agg(F.count_distinct(item_col).alias("__w"))
+            .filter(F.col("__w") > max_basket)
+            .select(key_col)
+        )
+        li = li.join(wide, key_col, "left_anti")
+    baskets = li.groupBy(key_col).agg(
         F.sort_array(F.collect_set(item_col)).alias("__items")
     )
-    if max_basket is not None:
-        baskets = baskets.filter(F.size("__items") <= max_basket)
     items = F.col("__items")
     pair_structs = F.flatten(
         F.transform(

@@ -19,7 +19,10 @@ from . import tierm  # noqa: F401,E402
 
 # The driver adjudicates queries() in dict-insertion order and caps at 50
 # keys per round.  This window front-loads, in this order:
-#   1. slots 1-31 = EVERY key whose code path reaches a storage site moved
+#   0. slots 1-3 = the guarded co-purchase keys, whose copurchase_pairs
+#      hub screen now runs before the collect_set (distinct count plus
+#      anti-join);
+#   1. slots 4-31 = EVERY key whose code path reaches a storage site moved
 #      onto storage.stored() or the changed operators/graph.py (traced by
 #      patching localCheckpoint and copurchase_pairs over a full oracle
 #      run): the CC/dedup family, kcore, the pagerank family, the
@@ -29,14 +32,16 @@ from . import tierm  # noqa: F401,E402
 #   3. slots 47-50 = the start of the r12 block (CORRECTNESS_r12
 #      insertion order, skipping keys already above).
 _NEEDS_VERDICT = [
-    # storage-policy / graph.py changed keys (slots 1-31)
+    # guarded co-purchase hub screen (slots 1-3)
+    "q_triangle_count_guarded", "x_pagerank_guarded", "x_lpa_guarded",
+    # storage-policy / graph.py changed keys (slots 4-31)
     "x_dedup_cluster", "x_dedup_cluster_guarded", "x_dedup_cluster_star",
     "x_dedup_census", "x_split_cluster_safe", "x_split_leakage",
     "x_curate_corpus", "x_dedup_best", "x_dedup_best_guarded",
     "x_dedup_ngram", "x_dedup_containment", "x_dedup_containment_guarded",
-    "x_dedup_simhash", "x_kcore", "x_pagerank", "x_pagerank_guarded",
-    "q_triangle_count", "q_triangle_count_guarded", "x_dedup_ledger_near",
-    "x_lpa", "x_lpa_guarded", "x_link_adamic", "x_dedup_semantic_guarded",
+    "x_dedup_simhash", "x_kcore", "x_pagerank",
+    "q_triangle_count", "x_dedup_ledger_near",
+    "x_lpa", "x_link_adamic", "x_dedup_semantic_guarded",
     "x_sim_ivf_2level", "x_sim_ivf_2level_exact", "x_bpe_tokenize",
     "x_vocab_bpe", "x_hll_intersect", "x_theta_intersect",
     "x_active_users_hll", "x_mmr_diversify",

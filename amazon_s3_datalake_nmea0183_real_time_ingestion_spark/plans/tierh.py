@@ -224,8 +224,9 @@ def q_triangle_count_guarded(spark: SparkSession, sf: str) -> DataFrame:
     """q_triangle_count's production twin: identical degree-ordered
     enumeration (tiere.triangle_top50) over the max_basket-guarded edge
     derivation.  Scale: worst-case pair output per basket drops from w²
-    (unbounded hub) to MAX_BASKET²; the width screen is a window riding
-    the l_orderkey exchange the self-join already pays."""
+    (unbounded hub) to MAX_BASKET²; the width screen (a per-basket
+    distinct count plus an anti-join) runs before any basket array is
+    built."""
     li = table(spark, sf, "lineitem")
     return triangle_top50(copurchase_pairs(li, max_basket=MAX_BASKET))
 

@@ -19,7 +19,8 @@ One ``StreamingQuery`` reproduces API Gateway → Firehose → Lambda → S3:
        cdk_datalake_mvp_stack.py:213),
     4. threshold alerts → ``alerts/`` (hello.py:112-116,181-192; SNS in
        the reference is commented out),
-    5. per-class counters logged (hello.py:56-58 flags).
+    5. per-class counters (hello.py:56-58 flags), observed on the stored
+       classified frame while the error write builds it.
 
 Sensor/unknown rows are durable in raw zones but NEVER reach stage —
 the reference appends only SOH records to the Firehose return
@@ -47,7 +48,7 @@ import os
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -57,6 +58,8 @@ from ..operators.classify import classify_records
 from ..operators.flatten import flatten_soh, parse_soh_payload
 from ..operators.geocode import build_geo_dim, enrich_geocode
 from ..schemas import CLASS_SENSOR, CLASS_SOH, CLASS_UNKNOWN, ENVELOPE_SCHEMA
+
+MSG_CLASSES = (CLASS_SOH, CLASS_SENSOR, CLASS_UNKNOWN)
 
 
 @dataclass
@@ -157,24 +160,22 @@ def process_batch(
     file count stays bounded (N per day per batch, not files × tasks).
     The salt keys the repartition only; the directory layout (partitionBy
     year/month/day) is unchanged."""
-    classified = classify_records(batch)
+    # Per-class counters are an Observation on the stored frame, filled
+    # by the first write.  That is the error write: its plan has no
+    # exchange, so it builds the store inside its own job and AQE (which
+    # drops stages it finds empty, and the metrics with them) never
+    # plans it.  The raw tees need the counts (an empty class writes no
+    # files), so they come last.
+    observed = Observation()
+    classified = classify_records(batch).observe(
+        observed,
+        *[F.count_if(F.col("msg_class") == cls).alias(cls) for cls in MSG_CLASSES],
+    )
     classified.persist()
     try:
-        counts = {
-            r["msg_class"]: r["cnt"]
-            for r in classified.groupBy("msg_class").agg(F.count("*").alias("cnt")).collect()
-        }
-
-        if reference_compat_raw_tee:
-            for cls in (CLASS_SOH, CLASS_SENSOR, CLASS_UNKNOWN):
-                cls_df = classified.filter(F.col("msg_class") == cls)
-                if counts.get(cls, 0):
-                    _write_raw_tee(cls_df.drop("msg_class", "payload_text"),
-                                   os.path.join(lake_dir, "raw", cls),
-                                   single_file=tee_single_file)
-
         soh = classified.filter(F.col("msg_class") == CLASS_SOH)
         stage, errors = build_stage_rows(soh, geo_dim)
+        errors.write.mode("append").json(os.path.join(lake_dir, "error"))
         stage.persist()
         try:
             # one shuffle on the event-date keys (+ a bounded salt when
@@ -222,8 +223,16 @@ def process_batch(
         finally:
             stage.unpersist()
 
-        if counts.get(CLASS_SOH, 0):
-            errors.write.mode("append").json(os.path.join(lake_dir, "error"))
+        counts = {cls: n for cls, n in observed.get.items() if n}
+        if reference_compat_raw_tee:
+            for cls in MSG_CLASSES:
+                if counts.get(cls, 0):
+                    _write_raw_tee(
+                        classified.filter(F.col("msg_class") == cls)
+                        .drop("msg_class", "payload_text"),
+                        os.path.join(lake_dir, "raw", cls),
+                        single_file=tee_single_file,
+                    )
         return PipelineBatchResult(batch_id=batch_id, counts=counts)
     finally:
         classified.unpersist()

@@ -318,6 +318,13 @@ def _dispatch_probe(spark) -> float:
     return round((time.perf_counter() - t0) / 30 * 1000, 1)
 
 
+def _codegen_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far (Spark's
+    CodegenMetrics); a cache hit compiles nothing."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def _sf_from_dir(sf_dir: str) -> float:
     base = os.path.basename(sf_dir.rstrip("/"))
     try:
@@ -368,14 +375,23 @@ def main() -> int:
     # one-off plan compilation + file-index warmup; the reference pipeline's
     # per-record Lambda has no such cold cost to compare against) and ~20%
     # run-to-run machine noise is damped.
+    # Codegen compilations are counted around each key's LAST run: a warm
+    # run that still compiles means the codegen cache evicted the key's
+    # classes (it is sized to the working set in session.get_spark).
     timings: dict[str, float] = {}
+    warm_compiles: dict[str, int] = {}
+    loop_compiles = _codegen_compiles(spark)
     for key in keys:
         best = float("inf")
         for _ in range(3 if key in EXTRA_RUN_KEYS else 2):
+            before = _codegen_compiles(spark)
             t0 = time.perf_counter()
             qs[key](spark, SF_DIR).write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
         timings[key] = round(best, 3)
+        if n := _codegen_compiles(spark) - before:
+            warm_compiles[key] = n
+    loop_compiles = _codegen_compiles(spark) - loop_compiles
 
     total = round(sum(timings.values()), 3)
     sf = _sf_from_dir(SF_DIR)
@@ -402,11 +418,13 @@ def main() -> int:
             nh_timings[key] = round(time.perf_counter() - t0, 3)
         record["non_headline"] = nh_timings
         record["non_headline_total"] = round(sum(nh_timings.values()), 3)
+    record["codegen_warm_compiles"] = warm_compiles
     # provenance LAST so its dispatch-latency probe postdates every
     # timing loop above, including the opt-in non-headline pass; together
     # with the pre-loop probe the record brackets its own run.
     record["provenance"] = _provenance(SF_DIR, spark)
     record["provenance"]["job_dispatch_ms_pre"] = dispatch_pre_ms
+    record["provenance"]["codegen"] = {"compiles": loop_compiles}
     full_line = json.dumps(record)
     print(full_line)
     # Also persist the full record beside the repo: the driver's BENCH

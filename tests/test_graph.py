@@ -62,3 +62,33 @@ def test_copurchase_pairs_null_basket_key_yields_no_pairs(spark):
     assert und == {(4, 5)}
     directed = {(r.src, r.dst) for r in copurchase_pairs(li, directed=True).collect()}
     assert directed == {(4, 5), (5, 4)}
+
+
+def test_copurchase_hub_screened_before_collect_set(spark):
+    """A planted 2000-wide hub basket yields no pairs under ``max_basket``,
+    and the width screen (distinct count + anti-join) sits below the
+    ``collect_set`` aggregation, so the hub's item array is never built."""
+    from conftest import plan_of
+
+    organic = spark.createDataFrame(
+        [(b, b * 10 + j) for b in range(5) for j in range(3)],
+        "l_orderkey long, l_partkey long",
+    )
+    hub = spark.range(2_000).select(
+        F.lit(999_999).cast("long").alias("l_orderkey"),
+        (F.col("id") + 1_000_000).alias("l_partkey"),
+    )
+    guarded = copurchase_pairs(organic.unionByName(hub), max_basket=10)
+    # read before the action: an executed AQE plan prints two trees
+    lines = plan_of(guarded, "simple").splitlines()
+    pairs = {(r.u, r.v) for r in guarded.collect()}
+    assert pairs == {
+        (b * 10 + i, b * 10 + j) for b in range(5) for i in range(3) for j in range(i + 1, 3)
+    }
+
+    collect_set = max(i for i, ln in enumerate(lines) if "collect_set" in ln)
+    screen = [i for i, ln in enumerate(lines) if "LeftAnti" in ln]
+    count_distinct = [i for i, ln in enumerate(lines) if "count(distinct" in ln]
+    assert screen and count_distinct
+    # the tree prints parents first: every collect_set line above the screen
+    assert collect_set < min(screen) < min(count_distinct)

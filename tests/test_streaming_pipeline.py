@@ -121,6 +121,45 @@ def test_incremental_second_trigger(spark, tmp_path):
     assert len(results) == 2 and results[1].counts == {"soh": 3}
 
 
+def test_absent_class_writes_no_raw_files(spark, tmp_path):
+    """The per-class counts come from an Observation on the classified
+    frame, not from a job of their own; a class with no rows still gets
+    no raw-zone directory.  A batch without SOH rows (whose stage write
+    AQE would reduce to an empty relation, dropping the observed scan)
+    and an empty batch still report their counts."""
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.geocode import (
+        build_geo_dim,
+    )
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.fixtures import (
+        envelope_df,
+    )
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.streaming.pipeline import (
+        process_batch,
+    )
+
+    geo = build_geo_dim(spark)
+    lake = tmp_path / "lake"
+    res = process_batch(envelope_df(spark, n_soh=3, n_sensor=0, n_unknown=0),
+                        0, str(lake), geo)
+    assert res.counts == {"soh": 3}
+    assert (lake / "raw" / "soh").is_dir()
+    assert not (lake / "raw" / "sensor").exists()
+    assert not (lake / "raw" / "unknown").exists()
+
+    no_soh = tmp_path / "no_soh"
+    res = process_batch(envelope_df(spark, n_soh=0, n_sensor=2, n_unknown=1),
+                        1, str(no_soh), geo)
+    assert res.counts == {"sensor": 2, "unknown": 1}
+    assert not (no_soh / "raw" / "soh").exists()
+    assert (no_soh / "raw" / "sensor").is_dir()
+
+    empty = tmp_path / "empty"
+    res = process_batch(envelope_df(spark, n_soh=0, n_sensor=0, n_unknown=0),
+                        2, str(empty), geo)
+    assert res.counts == {}
+    assert not (empty / "raw").exists()
+
+
 def test_corrupt_envelope_line_routes_to_error(spark, tmp_path):
     """A landing line that isn't valid JSON at all (envelope-level
     corruption, not just a bad inner payload) must not kill the batch:
