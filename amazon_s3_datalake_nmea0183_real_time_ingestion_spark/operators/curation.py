@@ -99,6 +99,8 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame,
     bench_sh = _doc_shingles(benchmark, with_id=False).distinct()
     corpus_sh = _doc_shingles(corpus, with_id=True)
     return (
+        # the benchmark's shingles: eval-set sized, independent of the
+        # corpus, but estimated from its source
         corpus_sh.join(F.broadcast(bench_sh), "shingle")
         .groupBy(id_col)
         .agg(F.count("*").alias("n_overlap"))
@@ -368,7 +370,7 @@ def skyline_2d(
         )
         w_tie_loc = Window.partitionBy(d1)
         df = (
-            df.crossJoin(F.broadcast(rng))
+            df.crossJoin(rng)
             .withColumn(
                 "__bucket",
                 F.when(F.col("__hi") <= F.col("__lo"), F.lit(1)).otherwise(

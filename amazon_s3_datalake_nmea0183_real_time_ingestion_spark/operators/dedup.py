@@ -836,12 +836,11 @@ def decontaminate_near(corpus: DataFrame, benchmark: DataFrame,
                         id_col, n_perm, n_bands)
     bands_b = lsh_bands(minhash_signatures(sh_b, id_col, n_perm),
                         id_col, n_perm, n_bands)
-    # benchmark-derived sides are eval-set sized (MBs) — broadcast them
-    # explicitly so the corpus side never shuffles for these joins even
-    # before AQE sees runtime sizes
     cands = (
         bands_c.select(F.col(id_col).alias("corpus_id"), "band_id", "band_sig")
         .join(
+            # benchmark-derived sides are eval-set sized (MBs), independent
+            # of the corpus, but estimated from their source
             F.broadcast(
                 bands_b.select(F.col(id_col).alias("bench_id"), "band_id", "band_sig")
             ),
@@ -860,6 +859,7 @@ def decontaminate_near(corpus: DataFrame, benchmark: DataFrame,
     sb = sh_b.select(F.col(id_col).alias("bench_id"), "shingle")
     inter = (
         cands.join(sa, "corpus_id")
+        # eval-set sized benchmark shingles
         .join(F.broadcast(sb), ["bench_id", "shingle"])
         .groupBy("corpus_id", "bench_id")
         .agg(F.count("*").alias("n_inter"))
@@ -867,6 +867,7 @@ def decontaminate_near(corpus: DataFrame, benchmark: DataFrame,
     jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
     return (
         inter.join(sz_c, "corpus_id")
+        # one row per benchmark document
         .join(F.broadcast(sz_b), "bench_id")
         .withColumn("jaccard", F.round(jac, 4))
         .filter(jac >= threshold)

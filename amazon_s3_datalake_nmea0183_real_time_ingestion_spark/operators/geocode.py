@@ -72,7 +72,7 @@ def enrich_geocode(
     the reference would instead fail the record; our error routing keeps
     them visible (SURVEY.md §7.5)."""
     keyed = df.withColumn("geo_cell", grid_cell(F.col(lon_col), F.col(lat_col)))
-    return keyed.join(F.broadcast(geo_dim), "geo_cell", "left").drop("geo_cell")
+    return keyed.join(geo_dim, "geo_cell", "left").drop("geo_cell")
 
 
 # ---------------------------------------------------------------------------
@@ -143,4 +143,6 @@ def enrich_geocode_bucketed(
     dim = spark.table(table_name)
     keyed = df.withColumn("geo_cell", grid_cell(F.col(lon_col), F.col(lat_col)))
     keyed = keyed.repartition(n_buckets, "geo_cell")
+    # layout pin, not a size call: keep the bucketed sort-merge path even
+    # for a dim small enough to broadcast
     return keyed.join(dim.hint("merge"), "geo_cell", "left").drop("geo_cell")

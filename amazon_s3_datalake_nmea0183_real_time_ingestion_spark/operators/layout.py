@@ -67,7 +67,7 @@ def zorder_write(
         *[F.min(c).alias(f"__lo_{c}") for c in cols],
         *[F.max(c).alias(f"__hi_{c}") for c in cols],
     )
-    keyed = df.crossJoin(F.broadcast(bounds))
+    keyed = df.crossJoin(bounds)
     norm_names = []
     for i, c in enumerate(cols):
         # Normalize in DOUBLE: for IntegerType dimensions the native-type

@@ -33,6 +33,7 @@ def mad_stats(df: DataFrame, group_col: str = "event_type",
     """Per-group (median, MAD): the robust location/scale fit step."""
     med = df.groupBy(group_col).agg(F.median(value_col).alias("med"))
     return (
+        # one row per group (a low-cardinality key); estimated from df
         df.join(F.broadcast(med), group_col)
         .withColumn("__adev", F.abs(F.col(value_col) - F.col("med")))
         .groupBy(group_col)
@@ -51,6 +52,7 @@ def flag_outliers(df: DataFrame, stats: DataFrame,
     dev = F.col(value_col) - F.col("med")
     scale = F.lit(MAD_CONSISTENCY) * F.col("mad")
     out = (
+        # one row per group (a low-cardinality key); estimated from df
         df.join(F.broadcast(stats), group_col)
         .withColumn("robust_z", F.try_divide(dev, scale))
         .withColumn("is_outlier", F.abs(dev) > F.lit(k) * scale)

@@ -46,11 +46,7 @@ from pyspark.sql import functions as F
 from ..functions.text import doc_fingerprint, quality_logit, tokens
 from ..storage import stored
 from .curation import hash_split
-from .dedup import (
-    connected_components,
-    connected_components_star,
-    minhash_near_dup,
-)
+from .dedup import connected_components, minhash_near_dup
 
 
 def curate_corpus(
@@ -63,8 +59,6 @@ def curate_corpus(
     id_col: str = "doc_id",
     text_col: str = "text",
     source_col: str = "source",
-    cc_max_iters: int | None = None,
-    use_star_cc: bool = False,
 ) -> dict[str, DataFrame]:
     """Run the full curation chain; returns lazy DataFrames:
 
@@ -80,11 +74,7 @@ def curate_corpus(
     n-gram screen (decontaminate); pass None to skip.
 
     Component labeling fails LOUD on non-convergence (RuntimeError at
-    the round budget).  ``cc_max_iters`` overrides the budget for a corpus
-    with one long near-dup chain; ``use_star_cc=True`` switches to the
-    O(log n)-round large/small-star scheme, whose round count is
-    insensitive to chain diameter — the recourse when raising the
-    budget just buys more diameter-bound rounds.
+    the round budget).
     """
     toked = docs.withColumn("__t", tokens(text_col))
     gated = (
@@ -115,16 +105,8 @@ def curate_corpus(
     pairs = minhash_near_dup(
         exact, id_col, text_col, threshold=near_threshold, max_bucket=max_bucket
     ).select("id_a", "id_b")
-    label_components = connected_components_star if use_star_cc else connected_components
-    # None -> each operator's OWN default budget (plain 25, star 30): a
-    # single hard-coded default here silently TIGHTENED star's budget for
-    # the caller switching use_star_cc=True as the non-convergence
-    # recourse (code-review r7 finding)
-    cc_kwargs = {} if cc_max_iters is None else {"max_iters": cc_max_iters}
     # consumed by the collapse AND the split
-    labels = stored(label_components(
-        pairs, exact.select(id_col), id_col=id_col, **cc_kwargs
-    ))
+    labels = stored(connected_components(pairs, exact.select(id_col), id_col=id_col))
     collapsed = exact.join(labels, id_col).filter(
         F.col(id_col) == F.col("cluster_id")
     )
@@ -165,7 +147,7 @@ def curate_corpus(
     ncnt = curated.groupBy(source_col).agg(F.count("*").alias("n_docs"))
     z = ncnt.agg(F.sum(F.pow(F.col("n_docs"), F.lit(temperature))).alias("z"))
     w = F.pow(F.col("n_docs"), F.lit(temperature)) / F.col("z")
-    mixture = ncnt.crossJoin(F.broadcast(z)).select(
+    mixture = ncnt.crossJoin(z).select(
         source_col, "n_docs", F.round(w, 6).alias("weight")
     )
 

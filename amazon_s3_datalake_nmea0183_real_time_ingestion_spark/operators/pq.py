@@ -261,7 +261,7 @@ def pq_train(df: DataFrame, dim: int, m: int = 8, ksub: int = 16,
             )
         else:
             nest = _nest_codebooks(cb)
-            coded = base.crossJoin(F.broadcast(nest)).select(
+            coded = base.crossJoin(nest).select(
                 F.col(id_col),
                 _encode_col(F.col("__dv"), F.col("cbs"), m, dsub).alias("__codes"),
                 F.col("__dv"),
@@ -316,7 +316,7 @@ def pq_encode(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8,
     nest = _nest_codebooks(codebooks)
     prep = df.select(
         *df.columns, as_double(F.col(vec_col)).alias("__pqdv")
-    ).crossJoin(F.broadcast(nest))
+    ).crossJoin(nest)
     coded = prep.select(
         *df.columns,
         "cbs",

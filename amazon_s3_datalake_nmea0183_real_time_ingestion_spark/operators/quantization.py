@@ -99,7 +99,7 @@ def quantize(df: DataFrame, codebook: DataFrame, vec_col: str = "embedding",
     cb = codebook.select(
         F.col("lo").alias("__cb_lo"), F.col("hi").alias("__cb_hi")
     )
-    out = df.crossJoin(F.broadcast(cb))
+    out = df.crossJoin(cb)
     code = lambda x, lo, hi: _code(x, lo, hi, levels)  # noqa: E731
     deq = lambda x, lo, hi: F.when(hi == lo, lo).otherwise(  # noqa: E731
         lo + _code(x, lo, hi, levels) * (hi - lo) / float(levels)

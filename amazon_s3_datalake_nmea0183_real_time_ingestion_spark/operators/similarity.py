@@ -86,6 +86,8 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     q = prep_vectors(queries, id_col, vec_col, "query_id", "qd", "qn")
     c = prep_vectors(corpus, id_col, vec_col, "neighbor_id", "cd", "cn")
     scored = (
+        # the caller's query batch: independent of the corpus size, but
+        # estimated from its source (unknown for an RDD-backed frame)
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", pair_cosine().alias("sim"))
@@ -170,6 +172,8 @@ def assign_to_centroids(corpus: DataFrame, centroids: DataFrame,
         F.try_divide(dot_double(F.col("vd"), F.col("ctd")),
                      F.col("vn") * F.col("ctn")), 6
     )
+    # k centroids, the flat path's codebook (k ∝ n takes the 2-level
+    # path); estimated from its source (unknown for an RDD-backed frame)
     scored = c.crossJoin(F.broadcast(cents)).select(
         id_col, "vd", "vn", "centroid_id", csim.alias("csim")
     )
@@ -316,7 +320,7 @@ def _two_level_probe(corpus: DataFrame, centroids: DataFrame,
         F.concat(F.lit("seed:"), F.col("centroid_id").cast("string"))
     ) % step == 0
     first = centroids.join(
-        F.broadcast(centroids.agg(F.min("centroid_id").alias("centroid_id"))),
+        centroids.agg(F.min("centroid_id").alias("centroid_id")),
         "centroid_id",
     )
     seeds = (
@@ -335,6 +339,7 @@ def _two_level_probe(corpus: DataFrame, centroids: DataFrame,
             F.try_divide(dot_double(F.col(vcol), F.col("sd")),
                          F.col(ncol) * F.col("sn")), 6
         )
+        # ~n_super seeds (at most k); estimated from the centroid table
         scored = df.crossJoin(F.broadcast(sp)).select(
             df["*"], F.col("super_id"), ssim.alias("__ssim")
         )
@@ -361,6 +366,7 @@ def _two_level_probe(corpus: DataFrame, centroids: DataFrame,
         F.col("super_id").alias("centroid_id"), F.lit(True).alias("__is_seed")
     )
     tagged = (
+        # ~n_super seeds (at most k); estimated from the centroid table
         tagged.join(F.broadcast(seed_ids), "centroid_id", "left")
         .withColumn(
             "super_id",
@@ -376,6 +382,7 @@ def _two_level_probe(corpus: DataFrame, centroids: DataFrame,
         # probe-ALL: every vector visits every cell by definition — skip
         # the seed scoring AND the per-vector row_number window (which
         # would shuffle+sort corpus × seeds rows only to keep them all)
+        # ~n_super seeds (at most k); estimated from the centroid table
         probed = c.crossJoin(F.broadcast(seeds.select("super_id")))
     else:
         probed = _nearest_super(c, id_col, "vd", "vn", n_probe_super)
@@ -405,8 +412,8 @@ def assign_to_centroids_2level(corpus: DataFrame, centroids: DataFrame,
     3. each corpus vector probes its ``n_probe_super`` nearest super-cells
        (map-side, same broadcast seeds);
     4. vectors join their probed cells' centroids ON super_id — a keyed
-       SHUFFLE join (hinted, so the optimizer can't re-broadcast the
-       centroid side on small inputs) — and the exact round-6 cosine
+       join (the session threshold decides broadcast vs shuffle; at
+       k ∝ n the centroid side outgrows it) — and the exact round-6 cosine
        argmax picks the cluster with the flat tie-break (sim DESC,
        centroid_id ASC, NULLs last).
 
@@ -437,15 +444,12 @@ def assign_to_centroids_2level(corpus: DataFrame, centroids: DataFrame,
     probed, tagged = _two_level_probe(
         corpus, centroids, id_col, vec_col, n_super, n_probe_super
     )
-    # 4. keyed shuffle join on super_id + exact argmax; the hint pins the
-    # scale-path plan (without it the optimizer happily broadcasts a
-    # "small" centroid frame on test data — the exact shape this
-    # function exists to avoid at k ∝ n)
+    # 4. keyed join on super_id + exact argmax
     csim = F.round(
         F.try_divide(dot_double(F.col("vd"), F.col("ctd")),
                      F.col("vn") * F.col("ctn")), 6
     )
-    scored = probed.join(tagged.hint("shuffle_hash"), "super_id").select(
+    scored = probed.join(tagged, "super_id").select(
         id_col, "vd", "vn", "centroid_id", csim.alias("csim")
     )
     w = Window.partitionBy(id_col).orderBy(
@@ -663,6 +667,7 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame,
     bands = hyperplane_bands(corpus, planes, id_col, vec_col, bits_per_band)
     qids = queries.select(F.col(id_col).alias("query_id"))
     qb = bands.select(F.col(id_col).alias("query_id"), "band_pos", "band_val").join(
+        # the caller's query batch, estimated from its source
         F.broadcast(qids), "query_id"
     )
     cb = bands.select(F.col(id_col).alias("neighbor_id"), "band_pos", "band_val")
@@ -676,6 +681,7 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame,
     c = prep_vectors(corpus, id_col, vec_col, "neighbor_id", "cd", "cn")
     scored = (
         cand.join(c, "neighbor_id")
+        # the caller's query batch, estimated from its source
         .join(F.broadcast(q), "query_id")
         .select("query_id", "neighbor_id", pair_cosine().alias("sim"))
     )

@@ -100,6 +100,7 @@ def cms_estimate(keys: DataFrame, sketch: DataFrame, key_col: str,
         *cols, F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("j")
     ).withColumn("bucket", _bucket(F.col(key_col), F.col("j"), width))
     return (
+        # <= depth * width cells; the estimate grows with the counted stream
         probes.join(F.broadcast(sketch), ["j", "bucket"], "left")
         .groupBy(*cols)
         .agg(F.min(F.coalesce(F.col("cell"), F.lit(0))).alias("est"))

@@ -315,7 +315,7 @@ def op_geocode_join(spark: SparkSession, sf: str) -> DataFrame:
     )
     keyed = pts.withColumn("geo_cell", grid_cell(F.col("lon"), F.col("lat")))
     dim = build_geo_dim(spark)
-    return keyed.join(F.broadcast(dim), "geo_cell", "left").select(
+    return keyed.join(dim, "geo_cell", "left").select(
         "event_id", "municipality", "postalcode", "country", "timezone_offset"
     )
 

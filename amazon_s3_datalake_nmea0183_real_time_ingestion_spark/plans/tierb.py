@@ -88,8 +88,8 @@ def q_join_inner(spark: SparkSession, sf: str) -> DataFrame:
     # for the final aggregation only.
     o, c, n = (table(spark, sf, t) for t in ("orders", "customer", "nation"))
     return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        o.join(c, o.o_custkey == c.c_custkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
             F.count("*").alias("n_orders"),
@@ -180,7 +180,7 @@ def q_join_range(spark: SparkSession, sf: str) -> DataFrame:
     )
     return (
         p.join(
-            F.broadcast(bands),
+            bands,
             (p.p_retailprice >= bands.lo) & (p.p_retailprice < bands.hi),
         )
         .groupBy("band_id")
@@ -359,8 +359,8 @@ def q_agg_approx(spark: SparkSession, sf: str) -> DataFrame:
 def q_agg_rollup(spark: SparkSession, sf: str) -> DataFrame:
     c, n, r = (table(spark, sf, t) for t in ("customer", "nation", "region"))
     return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        c.join(n, c.c_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .select(F.col("r_name").alias("region_name"), F.col("n_name").alias("nation_name"), "c_acctbal")
         .rollup("region_name", "nation_name")
         .agg(F.count("*").alias("n_cust"), F.round(F.sum("c_acctbal"), 2).alias("total_bal"))

@@ -888,7 +888,7 @@ def x_text_tfidf(spark: SparkSession, sf: str) -> DataFrame:
     scored = (
         tf.filter(F.col("doc_id") < 100)
         .join(dfreq, "term")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "doc_id",
             "term",

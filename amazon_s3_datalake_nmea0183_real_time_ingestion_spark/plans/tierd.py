@@ -211,10 +211,10 @@ def q_gapfill(spark: SparkSession, sf: str) -> DataFrame:
     )
     bounds = ev.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
     types = ev.select("event_type").distinct()
-    spine = types.crossJoin(F.broadcast(bounds)).select(
+    spine = types.crossJoin(bounds).select(
         "event_type", F.explode(F.sequence("d0", "d1")).alias("day")
     )
-    filled = spine.join(F.broadcast(daily), ["event_type", "day"], "left")
+    filled = spine.join(daily, ["event_type", "day"], "left")
     w = (
         Window.partitionBy("event_type")
         .orderBy("day")
@@ -362,9 +362,9 @@ def x_bm25(spark: SparkSession, sf: str) -> DataFrame:
         + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
     )
     scored = (
-        tf.join(F.broadcast(dfreq), "term")
+        tf.join(dfreq, "term")
         .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .groupBy("doc_id")
         .agg(F.sum(comp).alias("raw"))
         .select("doc_id", F.round("raw", 6).alias("score"))
@@ -415,7 +415,7 @@ def x_surprisal(spark: SparkSession, sf: str) -> DataFrame:
     p = (F.col("c") + 1) / (F.col("tt") + F.col("vv"))
     return (
         ex.join(cnt, "term")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_tok"),
@@ -692,7 +692,7 @@ def pagerank_report(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
     deg = weighted.groupBy("src").agg(F.count("*").alias("deg"))
     return (
         ranks.join(deg, ranks["node"] == deg["src"], "left")
-        .crossJoin(F.broadcast(nn))
+        .crossJoin(nn)
         .select(
             F.col("node").alias("part_id"),
             F.coalesce(F.col("deg"), F.lit(0)).cast("long").alias("degree"),

@@ -118,18 +118,12 @@ def triangle_top50(und: DataFrame) -> DataFrame:
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("dd"),
     ))
-    # r14 (guide §3.1 — pick the join strategy deliberately): both the
-    # wedge self-join and the closing probe stream a wedge-sized side
-    # (O(m^1.5) rows) against an edge-sized side (O(m) rows).  Sort-merge
-    # pays an O(m^1.5 log ·) sort of the wedge stream; a shuffled-hash
-    # join builds the per-partition hash table on the EDGE side and
-    # streams the wedges unsorted — measured 6.2 s → 2.8 s solo at sf0.1
-    # (SortMergeJoin ×2 → ShuffledHashJoin ×2 in the plan).  Per-
-    # partition build memory is the edge list / shuffle-partition count;
-    # at 100 TB that is exactly the knob partition sizing already
-    # controls (guide §2.2), and AQE skew-split still applies to the
-    # streamed side.  The hint sits on the build side only — Spark keeps
-    # the wedge stream side un-built.
+    # both the wedge self-join and the closing probe stream a wedge-sized
+    # side (O(m^1.5) rows) against an edge-sized side (O(m) rows), which
+    # grows with the graph.  The shuffled-hash hints on the edge side stay
+    # on a measurement: without them the planner broadcasts the edges and
+    # q_triangle_count took 19.93 s vs 13.91 s (medians of 2 alternating
+    # pairs, sf0.1, 4 cores; r14: 6.2 s with sort-merge, 2.8 s with them)
     e1, e2 = ori.alias("e1"), ori.alias("e2").hint("shuffle_hash")
     wedges = e1.join(
         e2,
@@ -141,6 +135,7 @@ def triangle_top50(und: DataFrame) -> DataFrame:
     ).select(
         F.col("e1.src").alias("x"), F.col("e1.dst").alias("y"), F.col("e2.dst").alias("z")
     )
+    # edge-sized, shuffled-hash on the triangle A/B above
     e3 = ori.select(F.col("src").alias("y"), F.col("dst").alias("z")).hint(
         "shuffle_hash"
     )
@@ -414,6 +409,7 @@ def x_decontaminate_bloom(spark: SparkSession, sf: str) -> DataFrame:
     csh = shingle_set(corpus, "doc_id", "text", k=3)
     probe = positions(csh, keep_id=True)
     hits = (
+        # <= m_slots distinct positions; estimated from the benchmark shingles
         probe.join(F.broadcast(bloom), "pos")
         .groupBy("doc_id", "shingle")
         .agg(F.count("*").alias("k_hits"))
@@ -745,6 +741,7 @@ def x_winsorize(spark: SparkSession, sf: str) -> DataFrame:
     clipped = (F.col("value") < F.col("lo")) | (F.col("value") > F.col("hi"))
     wins = F.least(F.greatest(F.col("value"), F.col("lo")), F.col("hi"))
     return (
+        # one row per event type; estimated from the events scan
         ev.join(F.broadcast(cuts), "event_type")
         .groupBy("event_type")
         .agg(
@@ -929,7 +926,7 @@ def x_drift_psi(spark: SparkSession, sf: str) -> DataFrame:
     span = ev.agg(
         ((F.min("ts_us") + F.max("ts_us")) / F.lit(2.0)).alias("mid_us")
     )
-    tagged = ev.crossJoin(F.broadcast(span)).select(
+    tagged = ev.crossJoin(span).select(
         "event_type",
         "value",
         F.when(F.col("ts_us") < F.col("mid_us"), F.lit("ref"))
@@ -964,6 +961,7 @@ def x_drift_psi(spark: SparkSession, sf: str) -> DataFrame:
         .cast("int")
     )
     cnt = (
+        # bounds and tot: one row per event type, estimated from events
         tagged.join(F.broadcast(bounds), "event_type")
         .select("event_type", "period", bucket.alias("bucket"))
         .groupBy("event_type", "bucket")
@@ -978,6 +976,7 @@ def x_drift_psi(spark: SparkSession, sf: str) -> DataFrame:
     p = (F.col("n_ref") + 0.5) / (F.col("t_ref") + 5.0)
     q = (F.col("n_cur") + 0.5) / (F.col("t_cur") + 5.0)
     psi = (
+        # one row per event type; estimated from events
         cnt.join(F.broadcast(tot), "event_type")
         .groupBy("event_type")
         .agg(
@@ -997,6 +996,7 @@ def x_drift_psi(spark: SparkSession, sf: str) -> DataFrame:
     # no distribution to compare against — the strongest drift signal of
     # all; flag them explicitly instead of inner-joining them away
     newtypes = (
+        # one row per event type; estimated from events
         tagged.join(F.broadcast(bounds), "event_type", "left_anti")
         .groupBy("event_type")
         .agg(

@@ -146,6 +146,7 @@ def x_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
         extra=[F.col("label").alias("nlab")],
     )
     scored = (
+        # the query set: a fixed id range, estimated from the embeddings scan
         c.crossJoin(F.broadcast(q))
         .filter(F.col("nlab") != F.col("qlab"))
         .select("query_id", "neighbor_id", pair_cosine().alias("sim"))
@@ -232,12 +233,10 @@ def lpa_top50(und: DataFrame) -> DataFrame:
         .select("node", F.col("node").alias("lbl"))
     )
     for _ in range(2):
-        # r14 (guide §3.1): build the per-partition hash on the NODE-SIZED
-        # label side and stream the edge list unsorted — sort-merge was
-        # sorting the edge list (≫ labels) every iteration.  Measured
-        # 6.8 s → 2.3 s solo at sf0.1 (SortMergeJoin → ShuffledHashJoin
-        # per iteration); build memory is |labels|/n_partitions, the
-        # partition-sizing knob at 100 TB, and labels shrink per round.
+        # node-sized labels, grown with the graph; the shuffled-hash hint
+        # stays on a measurement: without it the planner broadcasts the
+        # labels and x_lpa took 7.67 s vs 5.40 s (medians of 2 alternating
+        # pairs, sf0.1, 4 cores; r14: 6.8 s with sort-merge, 2.3 s with it)
         nbr = edges.join(
             labels.withColumnRenamed("node", "v").hint("shuffle_hash"), "v"
         ).select(F.col("u").alias("node"), "lbl")
@@ -451,8 +450,9 @@ def x_dsir(spark: SparkSession, sf: str) -> DataFrame:
         ((F.col("n_t") + 0.5) / (F.col("t_t") + 128.0))
         / ((F.col("n_r") + 0.5) / (F.col("t_r") + 128.0))
     )
-    lr = bs.crossJoin(F.broadcast(tot)).select("bucket", logratio.alias("logratio"))
+    lr = bs.crossJoin(tot).select("bucket", logratio.alias("logratio"))
     return (
+        # 256 buckets; estimated from the exploded token stream
         tb.join(F.broadcast(lr), "bucket")
         .groupBy("doc_id")
         .agg(
@@ -540,6 +540,7 @@ def x_label_noise(spark: SparkSession, sf: str) -> DataFrame:
         extra=[F.col("label").alias("nlab")],
     )
     scored = (
+        # the query set: a fixed id range, estimated from the embeddings scan
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", "nlab", pair_cosine().alias("sim"))
@@ -612,7 +613,7 @@ def x_data_temperature(spark: SparkSession, sf: str) -> DataFrame:
     cnt = d.groupBy("source").agg(F.count("*").alias("n_docs"))
     z = cnt.agg(F.sum(F.pow(F.col("n_docs"), F.lit(0.7))).alias("z"))
     w = F.pow(F.col("n_docs"), F.lit(0.7)) / F.col("z")
-    return cnt.crossJoin(F.broadcast(z)).select(
+    return cnt.crossJoin(z).select(
         "source",
         "n_docs",
         F.round(w, 6).alias("weight"),

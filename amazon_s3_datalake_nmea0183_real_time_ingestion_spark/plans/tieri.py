@@ -179,6 +179,7 @@ def x_sim_pq(spark: SparkSession, sf: str) -> DataFrame:
         "vec_id", "pq_recon", "neighbor_id", "cd", "cn",
     )
     scored = (
+        # the query set: a fixed id range, estimated from the embeddings scan
         cs.crossJoin(F.broadcast(qs))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", pair_cosine().alias("sim"))

@@ -498,16 +498,14 @@ def x_theta_intersect(spark: SparkSession, sf: str) -> DataFrame:
         F.col("source").alias("src_a"), "shingle", F.col("u").alias("ua")
     )
     sb = samp.select(F.col("source").alias("src_b"), F.col("shingle").alias("shb"))
-    ta = F.broadcast(
-        th.select(F.col("source").alias("src_a"), F.col("theta").alias("tha"))
-    )
-    tb = F.broadcast(
-        th.select(F.col("source").alias("src_b"), F.col("theta").alias("thb"))
-    )
+    # one theta row per source; the estimate grows with the corpus
+    ta = F.broadcast(th.select(F.col("source").alias("src_a"), F.col("theta").alias("tha")))
+    # one theta row per source; the estimate grows with the corpus
+    tb = F.broadcast(th.select(F.col("source").alias("src_b"), F.col("theta").alias("thb")))
     pairs = (
-        # both sample sides are <= |sources| * k rows by construction —
-        # broadcast one so the sample intersection never shuffles
         sa.join(
+            # the KMV sample: <= |sources| * k rows, but estimated from the
+            # corpus (583 MB at sf0.01, above the broadcast threshold)
             F.broadcast(sb),
             (F.col("shingle") == F.col("shb")) & (F.col("src_a") < F.col("src_b")),
         )
@@ -1074,7 +1072,7 @@ def x_cuped(spark: SparkSession, sf: str) -> DataFrame:
         (F.covar_samp("pre", "post") / F.var_samp("pre")).alias("theta"),
         F.avg("pre").alias("mpre"),
     )
-    adj = u.crossJoin(F.broadcast(st)).select(
+    adj = u.crossJoin(st).select(
         F.when(
             F.pmod(md5_u32(F.concat(F.lit("arm:"), F.col("user_id").cast("string"))), F.lit(2)) == 0,
             F.lit("A"),
@@ -1192,6 +1190,7 @@ def x_mmr_diversify(spark: SparkSession, sf: str) -> DataFrame:
         "cd", "cn",
     )
     cand = stored(
+        # one query vector, estimated from the embeddings scan
         c.crossJoin(F.broadcast(q))
         .select(
             F.col("neighbor_id").alias("vec_id"),
@@ -1386,7 +1385,7 @@ def x_geo_nearest(spark: SparkSession, sf: str) -> DataFrame:
     # little and risks pole-adjacent subtleties.)
     scored = (
         pts.join(
-            F.broadcast(st),
+            st,
             F.abs(F.col("slat") - F.col("lat")) <= F.lit(_GEO_R_KM / 111.0),
         )
         .withColumn("dist_r", F.expr(f"round({_HAV_KM}, 3)"))
@@ -1727,7 +1726,7 @@ def x_calibration(spark: SparkSession, sf: str) -> DataFrame:
             "ece"
         )
     )
-    return g.crossJoin(F.broadcast(e)).select(
+    return g.crossJoin(e).select(
         "bin",
         F.col("n").cast("bigint").alias("n"),
         F.round("conf", 4).alias("conf_r"),

@@ -451,7 +451,7 @@ def x_basket_rules(spark: SparkSession, sf: str) -> DataFrame:
         )
         .filter(F.col("pair_n") >= _BASKET_MINPAIR)
     )
-    return pairs.crossJoin(F.broadcast(n_orders)).select(
+    return pairs.crossJoin(n_orders).select(
         F.col("part_a").cast("bigint").alias("part_a"),
         F.col("part_b").cast("bigint").alias("part_b"),
         F.col("pair_n").cast("bigint").alias("pair_n"),
@@ -657,7 +657,7 @@ def x_rfm(spark: SparkSession, sf: str) -> DataFrame:
             F.count("*").alias("frequency"),
             F.round(F.sum("o_totalprice"), 4).alias("monetary_r"),
         )
-        .crossJoin(F.broadcast(ref))
+        .crossJoin(ref)
         .select(
             "custkey",
             F.datediff(F.col("ref_day"), F.col("last_day"))
@@ -788,7 +788,7 @@ def x_cohort_ltv(spark: SparkSession, sf: str) -> DataFrame:
     cum = cell.withColumn(
         "cum_cents", F.sum("rev_cents").over(w).cast("bigint")
     )
-    return cum.join(F.broadcast(sizes), "cohort_ym").select(
+    return cum.join(sizes, "cohort_ym").select(
         "cohort_ym",
         F.col("age_months").cast("int").alias("age_months"),
         F.round(F.col("rev_cents").cast("double") / 100.0, 2).alias("rev_r"),
@@ -862,8 +862,9 @@ def x_target_encoding(spark: SparkSession, sf: str) -> DataFrame:
         (F.sum("sum_y").cast("double") / F.sum("n")).alias("prior")
     )
     return (
+        # one row per source; estimated from the documents scan
         d.join(F.broadcast(g), "source")
-        .crossJoin(F.broadcast(p))
+        .crossJoin(p)
         .select(
             "doc_id",
             "source",
@@ -941,7 +942,7 @@ def x_active_users(spark: SparkSession, sf: str) -> DataFrame:
     def _trailing(n_days: int, name: str) -> DataFrame:
         d = days.select(F.col("day").alias("d"))
         return (
-            F.broadcast(d)
+            d
             .join(
                 ud,
                 (F.col("day") <= F.col("d"))
@@ -1037,7 +1038,7 @@ def x_active_users_hll(spark: SparkSession, sf: str) -> DataFrame:
     def _union_horizon(n_days: int, est_name: str) -> DataFrame:
         d = days.select(F.col("day").alias("d"))
         return (
-            F.broadcast(d)
+            d
             .join(
                 daily,
                 (F.col("day") <= F.col("d"))
@@ -1054,7 +1055,7 @@ def x_active_users_hll(spark: SparkSession, sf: str) -> DataFrame:
     def _exact_horizon(n_days: int, name: str) -> DataFrame:
         d = days.select(F.col("day").alias("d"))
         return (
-            F.broadcast(d)
+            d
             .join(
                 ud,
                 (F.col("day") <= F.col("d"))
@@ -1654,6 +1655,7 @@ def x_conformal(spark: SparkSession, sf: str) -> DataFrame:
         )
         .select("n_cal", "qhat")
     )
+    # one row (the calibration quantile), estimated from the corpus
     ev = s.filter(~F.col("is_cal")).crossJoin(F.broadcast(qhat))
     return ev.groupBy("source", "qhat", "n_cal").agg(
         F.count("*").cast("bigint").alias("n_eval"),

@@ -163,6 +163,8 @@ def x_mann_whitney(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     tagged = ev.join(
+        # |types|^2 / 2 rows, estimated from the events scan (6 GB at
+        # sf0.01): without the broadcast this is a CartesianProduct
         F.broadcast(pairs),
         (F.col("event_type") == F.col("type_a"))
         | (F.col("event_type") == F.col("type_b")),
@@ -329,7 +331,7 @@ def x_diff_in_diff(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("split_d")
     )
     cell = (
-        e.crossJoin(F.broadcast(sp))
+        e.crossJoin(sp)
         .groupBy(
             (F.col("user_id") % 2 == 1).cast("int").alias("treat"),
             (F.col("d") >= F.col("split_d")).cast("int").alias("post"),
@@ -477,7 +479,7 @@ def x_survival(spark: SparkSession, sf: str) -> DataFrame:
         F.min("dd").alias("first_d"), F.max("dd").alias("last_d")
     )
     end = o.agg(F.max("dd").alias("end_d"))
-    life = cust.crossJoin(F.broadcast(end)).select(
+    life = cust.crossJoin(end).select(
         F.floor(
             F.datediff("last_d", "first_d") / F.lit(float(_SURV_BUCKET_DAYS))
         )
@@ -630,11 +632,11 @@ def x_cramers_v(spark: SparkSession, sf: str) -> DataFrame:
     )
     j = o.join(c, "ck").select("pri", "seg")
     counts = j.groupBy("pri", "seg").agg(F.count("*").alias("cnt"))
-    # both sides are |domain|-sized (5 rows); the broadcast keeps the
-    # spine a BroadcastNestedLoopJoin, never a CartesianProduct node
     spine = (
         j.select("pri")
         .distinct()
+        # 5 segments, but estimated from orders ⋈ customer (641 MB at
+        # sf0.01): the broadcast keeps the spine off a CartesianProduct
         .crossJoin(F.broadcast(j.select("seg").distinct()))
     )
     g = spine.join(counts, ["pri", "seg"], "left").select(

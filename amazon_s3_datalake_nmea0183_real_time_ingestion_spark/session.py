@@ -4,6 +4,9 @@ Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads), but
 every conf below is chosen for the 1000-executor / 100 TB design point:
 
 - AQE on (runtime coalesce, skew-join splitting, dynamic broadcast demotion).
+- a 64 MB broadcast threshold: with AQE, the one place join strategies are
+  chosen (README "Join strategy policy"; library code hints only sides
+  whose size estimate cannot see their bound).
 - shuffle partitions sized for the local box; on a real cluster AQE coalesces
   from a high initial number, so the static value matters little.
 - Arrow enabled for the (rare) pandas-UDF paths.

@@ -233,6 +233,7 @@ def drift_psi_report(
     p = (F.col("n_ref") + 0.5) / (F.col("t_ref") + 0.5 * F.col("k"))
     q = (F.col("n_cur") + 0.5) / (F.col("t_cur") + 0.5 * F.col("k"))
     scored = (
+        # one row per monitored column; estimated from the stage scan
         joined.join(F.broadcast(tot), "column")
         .groupBy("column")
         .agg(
@@ -489,7 +490,7 @@ def _recent_window_flag(v: DataFrame, flag: str, recent_days: int) -> DataFrame:
     place to land."""
     mx = v.agg(F.max("day").alias("max_day"))
     return (
-        v.crossJoin(F.broadcast(mx))
+        v.crossJoin(mx)
         .withColumn(
             flag,
             (F.col("day") > F.col("max_day") - F.lit(recent_days)).cast("int"),
@@ -764,7 +765,7 @@ def did_monitor_report(
                 )
             ).alias("split_d")
         )
-        e = e.crossJoin(F.broadcast(sp))
+        e = e.crossJoin(sp)
     else:
         e = e.withColumn("split_d", F.lit(int(split_day)).cast("bigint"))
     cell = e.groupBy(
@@ -1307,14 +1308,12 @@ def source_kl_monitor_report(
             ((F.col("t") - F.col("a")).cast("double") + 0.5).alias("cs_b"),
         )
     )
-    tot = F.broadcast(
-        g.agg(
-            F.sum("cs_r").alias("ts_r"),
-            F.sum("cs_b").alias("ts_b"),
-            F.sum("a").alias("n_r"),
-            F.sum(F.col("t") - F.col("a")).alias("n_b"),
-            F.count("*").alias("k"),
-        )
+    tot = g.agg(
+        F.sum("cs_r").alias("ts_r"),
+        F.sum("cs_b").alias("ts_b"),
+        F.sum("a").alias("n_r"),
+        F.sum(F.col("t") - F.col("a")).alias("n_b"),
+        F.count("*").alias("k"),
     )
     term = (F.col("cs_r") / F.col("ts_r")) * F.log(
         (F.col("cs_r") / F.col("ts_r")) / (F.col("cs_b") / F.col("ts_b"))

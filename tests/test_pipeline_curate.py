@@ -112,21 +112,3 @@ def test_curate_corpus_drops_cluster_of_contaminated_variant(spark):
     ids = {r["doc_id"] for r in out["curated"].select("doc_id").collect()}
     assert canon not in ids
 
-
-def test_curate_corpus_star_cc_and_budget_knobs(spark):
-    """ADVICE r6: curate_corpus must expose caller-level recourse for CC
-    non-convergence — use_star_cc switches the labeling scheme (same
-    curated set), and cc_max_iters threads through to the round budget
-    (an exhausted budget raises instead of silently mislabeling)."""
-    import pytest
-
-    corpus = _corpus(spark)
-    plain = curate_corpus(corpus, quality_threshold=-1e9)
-    star = curate_corpus(corpus, quality_threshold=-1e9, use_star_cc=True)
-    assert {r["doc_id"] for r in star["curated"].select("doc_id").collect()} == {
-        r["doc_id"] for r in plain["curated"].select("doc_id").collect()
-    }
-    # planted dup pairs need 2 propagation rounds (1 change + 1 confirm);
-    # a 1-round budget must fail loud at call time, not return bad labels
-    with pytest.raises(RuntimeError, match="did not converge"):
-        curate_corpus(corpus, quality_threshold=-1e9, cc_max_iters=1)

@@ -1676,3 +1676,124 @@ def test_pagerank_report_stores_single_corpus_scale_frame(spark, queries):
     counts = sorted(rdd.count() for rdd in new)
     assert counts[0] == n_nodes, counts  # the node frame
     assert counts[1] > n_nodes, counts  # the single edge-scale frame
+
+
+def test_broadcast_threshold_is_honoured(spark, queries):
+    """Join strategy is the session's call: with
+    ``spark.sql.autoBroadcastJoinThreshold=-1`` the perfbench join keys
+    plan and execute with no BroadcastExchange (a forced ``F.broadcast``
+    would ignore the threshold) and still match their DuckDB oracle."""
+    import os
+    import sys
+
+    import duckdb
+
+    sys.path.insert(0, os.path.join(os.path.dirname(entrymod.__file__), "tools"))
+    from verify_local import _hash_rows
+
+    con = duckdb.connect()
+    for t in ("region", "nation", "customer", "orders", "events"):
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    oracles = entrymod.oracle_sql()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        for name in ("q_join_inner", "q_agg_rollup", "op_geocode_join"):
+            df = queries[name](spark, SF)
+            assert "BroadcastExchange" not in plan_of(df), name
+            rows = [tuple(r) for r in df.collect()]
+            assert "BroadcastExchange" not in plan_of(df), f"{name} final plan"
+            rel = con.sql(oracles[name])
+            expect = rel.fetchall()
+            assert len(rows) == len(expect) > 0, name
+            assert _hash_rows(df.columns, rows) == _hash_rows(rel.columns, expect), name
+    finally:
+        spark.conf.set(key, prev)
+
+
+# The only join hints the package may force, as (module, function).  Each
+# is a side whose size the planner's estimate cannot bound, a hint kept on
+# a measured A/B, or a layout pin; the comment at each site names the
+# bound or the measurement.
+_HINT_ALLOWLIST = {
+    ("operators/geocode.py", "enrich_geocode_bucketed"),  # bucketed-layout merge pin
+    ("operators/curation.py", "decontaminate"),  # eval-set shingles
+    ("operators/dedup.py", "decontaminate_near"),  # eval-set bands and shingles
+    ("operators/graph.py", "weighted_edges"),  # shuffle_hash, measured
+    ("operators/graph.py", "pagerank"),  # shuffle_hash, measured
+    ("operators/graph.py", "kcore"),  # size-gated loser broadcast, measured
+    ("operators/outliers.py", "mad_stats"),  # per group
+    ("operators/outliers.py", "flag_outliers"),  # per group
+    ("operators/sketches.py", "cms_estimate"),  # depth x width cells
+    ("operators/similarity.py", "cosine_topk"),  # the query batch
+    ("operators/similarity.py", "assign_to_centroids"),  # k centroids (flat path)
+    ("operators/similarity.py", "lsh_topk"),  # the query batch
+    ("operators/similarity.py", "_nearest_super"),  # ~n_super seeds
+    ("operators/similarity.py", "_two_level_probe"),  # ~n_super seeds
+    ("plans/tiere.py", "triangle_top50"),  # shuffle_hash, measured
+    ("plans/tiere.py", "x_decontaminate_bloom"),  # <= 65536 bit positions
+    ("plans/tiere.py", "x_winsorize"),  # per event type
+    ("plans/tiere.py", "x_drift_psi"),  # per event type
+    ("plans/tierf.py", "lpa_top50"),  # shuffle_hash, measured
+    ("plans/tierf.py", "x_hard_negatives"),  # 10 query vectors
+    ("plans/tierf.py", "x_dsir"),  # 256 buckets
+    ("plans/tierf.py", "x_label_noise"),  # 100 query vectors
+    ("plans/tierg.py", "x_sim_quantized"),  # 10 query vectors
+    ("plans/tierg.py", "x_source_kl"),  # per source, 256 buckets
+    ("plans/tieri.py", "x_sim_pq"),  # 10 query vectors
+    ("plans/tierk.py", "x_theta_intersect"),  # per source, <= sources x k sample
+    ("plans/tierk.py", "x_mmr_diversify"),  # one query vector
+    ("plans/tierl.py", "x_target_encoding"),  # per source
+    ("plans/tierl.py", "x_conformal"),  # one row
+    ("plans/tierm.py", "x_mann_whitney"),  # event-type pairs
+    ("plans/tierm.py", "x_cramers_v"),  # 5 segments
+    ("sources/maintenance.py", "drift_psi_report"),  # per monitored column
+}
+
+
+def _hint_sites() -> list[tuple[str, str, int, list[str]]]:
+    """(module, enclosing function, line, module source lines) of every
+    ``F.broadcast(...)`` / ``.hint(...)`` call in the package."""
+    import ast
+    from pathlib import Path
+
+    import amazon_s3_datalake_nmea0183_real_time_ingestion_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    sites = []
+    for path in sorted(root.rglob("*.py")):
+        rel = str(path.relative_to(root))
+        text = path.read_text()
+
+        def visit(node, fn):
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    visit(child, child.name)
+                    continue
+                if isinstance(child, ast.Call) and isinstance(child.func, ast.Attribute):
+                    f = child.func
+                    if f.attr == "hint" or (
+                        f.attr == "broadcast"
+                        and isinstance(f.value, ast.Name)
+                        and f.value.id == "F"
+                    ):
+                        sites.append((rel, fn, child.lineno, text.splitlines()))
+                visit(child, fn)
+
+        visit(ast.parse(text), "<module>")
+    return sites
+
+
+def test_join_hints_only_at_allowlisted_sites():
+    """The session threshold plus AQE choose join strategies; a forced
+    ``F.broadcast`` / ``.hint`` outside the allowlist fails here, and
+    every allowlisted site carries a comment within three lines above."""
+    sites = _hint_sites()
+    stray = [f"{rel}:{line} ({fn})" for rel, fn, line, _ in sites
+             if (rel, fn) not in _HINT_ALLOWLIST]
+    assert not stray, f"join hints outside the allowlist: {stray}"
+    assert {(rel, fn) for rel, fn, _, _ in sites} == _HINT_ALLOWLIST
+    for rel, fn, line, lines in sites:
+        above = lines[max(0, line - 4):line]
+        assert any("#" in ln for ln in above), f"{rel}:{line} ({fn}) has no bound comment"

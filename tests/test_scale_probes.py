@@ -12,6 +12,8 @@ so the default suite still runs them.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -369,9 +371,9 @@ def test_2level_assignment_matches_flat_argmax(spark):
     shuffle-join path — nothing corpus-proportional broadcast) must agree
     with the flat broadcast argmax on every row, including round-6 ties
     (→ lowest centroid_id) and zero-norm vectors (all-NULL sims → lowest
-    centroid_id globally).  The centroid join must be a keyed shuffle
-    join in the plan — the whole point is that the k ∝ n centroid table
-    never rides a broadcast."""
+    centroid_id globally).  The centroid join must be keyed on super_id
+    in the plan, never a cross product; whether it broadcasts is the
+    session threshold's call."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.similarity import (
         assign_to_centroids,
         assign_to_centroids_2level,
@@ -416,9 +418,14 @@ def test_2level_assignment_matches_flat_argmax(spark):
     assert got == flat
     assert got[9_000_001] == 2
     assert 9_000_002 not in got  # zero-norm: screened (x_sim_zero_norm contract)
-    # scale shape: the centroid-side join is keyed, never broadcast
+    # scale shape: the centroid-side join is keyed on super_id, never a
+    # cross product
     plan = plan_of(two)
-    assert "ShuffledHashJoin" in plan
+    centroid_join = re.findall(
+        r"^\(\d+\) (\w+)\s*\nLeft keys \[1\]: \[super_id", plan, re.M
+    )
+    assert centroid_join and "CartesianProduct" not in plan, plan
+    assert set(centroid_join) <= {"BroadcastHashJoin", "ShuffledHashJoin", "SortMergeJoin"}
     # small probe: a unit-basis fixture is perfectly separable, so even
     # probe-1 through spread seeds keeps most assignments — the recall
     # knob degrades gracefully, it doesn't collapse
