@@ -1066,8 +1066,8 @@ def benford_monitor_report(
 ) -> dict:
     """Benford first-significant-digit forensic gate at the maintenance
     cadence — the streaming-maintenance twin of the batch ``x_benford``
-    key (plans/tierl.py), the "Benford gate in pipeline_maintenance"
-    of VERDICT r10 #4: the digit-1–9 distribution of ``value_col``
+    key (plans/tierl.py), the maintenance "Benford gate" of
+    VERDICT r10 #4: the digit-1–9 distribution of ``value_col``
     (a naturally multiplicative counter — the default is the messages-
     since-power-cycle counter) against N·log10(1+1/d).  A firmware bug
     that clamps, fabricates, or truncates the counter drifts from the
@@ -1686,90 +1686,21 @@ def pipeline_maintenance(
     stage_path: str,
     declared: StructType,
     catalog_tables: list[str] | None = None,
-    quality: bool = False,
-    drift_profile_path: str | None = None,
-    monitor_timeseries: bool = False,
-    monitor_sprt: bool = False,
-    monitor_mann_whitney: bool = False,
-    monitor_ks: bool = False,
-    monitor_did_treat_expr: str | None = None,
-    monitor_survival: bool = False,
-    monitor_auc: bool = False,
-    monitor_benford: bool = False,
-    monitor_gini: bool = False,
-    monitor_source_kl: bool = False,
-    monitor_heavy_hitters: bool = False,
-    monitor_sketch_store: bool = False,
-    monitor_dedup_census_path: str | None = None,
 ) -> dict:
-    """One scheduled-maintenance pass — the in-engine analog of the
-    reference's nightly crawler run (``cron(0 4 * * ? *)``,
-    cdk_datalake_mvp_stack.py:325): discover new partitions for registered
-    tables and LOG (never apply) schema drift on the stage zone.
+    """One crawler pass — the in-engine analog of the reference's nightly
+    Glue crawler (``cron(0 4 * * ? *)``, cdk_datalake_mvp_stack.py:320-335):
+    LOG (never apply) schema drift on the stage zone and discover new
+    partitions for the registered ``catalog_tables``.
+
+    Like the crawler, it runs beside the stream on its own schedule, never
+    inside a micro-batch.  The data monitors (``stage_quality_report``,
+    ``drift_psi_report``, ``timeseries_monitor_report`` and the other
+    ``*_monitor_report`` functions) are separate calls on the same
+    schedule.
 
     Returns ``{"drift": [(column, declared, observed, status), ...],
     "drift_status_counts": {...}, "recovered_tables": [...]}`` — a plain
-    dict so foreachBatch callers can append it to a report list without
-    touching Spark objects after the batch.  ``drift_profile_path`` adds
-    a ``drift_psi`` DISTRIBUTION drift block (see
-    :func:`drift_psi_report`) next to the schema drift LOG — schema says
-    the shape changed, PSI says the DATA changed under the same shape.
-    ``monitor_timeseries=True`` adds a ``timeseries`` block (see
-    :func:`timeseries_monitor_report`): per-device CUSUM changepoint +
-    MASE forecastability over the stage zone's daily series — schema
-    flags shape, PSI flags distribution, CUSUM/MASE flag the TREND.
-    ``monitor_sprt=True`` adds a ``sprt`` block (see
-    :func:`sprt_monitor_report`): the sequential rate test with its
-    sticky stop-at-first-crossing decision — the peeking-safe verdict
-    layer on top of the trend monitors.
-    ``monitor_mann_whitney=True`` adds a ``mann_whitney`` block (see
-    :func:`mann_whitney_monitor_report`): the distribution-free
-    recent-vs-history shift test — CUSUM watches the mean, THIS
-    watches stochastic dominance, robust to the heavy tails that fool
-    mean-based trend monitors.
-    ``monitor_ks=True`` adds a ``ks`` block (see
-    :func:`ks_monitor_report`): the exact two-sample KS recent-vs-
-    history gate — the BINLESS shape test next to PSI's profile bins
-    and Mann–Whitney's directional rank test; it fires on a variance
-    blow-up or new mode that moves neither the median nor any bin
-    mass.  ``monitor_did_treat_expr`` (a SQL
-    boolean over stage columns, e.g. a firmware-cohort predicate) adds
-    a ``did`` block (see :func:`did_monitor_report`): the
-    difference-in-differences rollout readout for fleet changes that
-    were not randomized.  ``monitor_survival=True`` adds a ``survival``
-    block (see :func:`survival_monitor_report`): the Kaplan–Meier
-    time-to-first-low-battery curve with right censoring — how long
-    devices LIVE, which no rate or trend monitor answers unbiasedly.
-    ``monitor_auc=True`` adds an ``auc`` block (see
-    :func:`auc_monitor_report`): recent-vs-baseline scorer
-    DISCRIMINATION via the exact rank-identity AUC — the scorer-eval
-    cadence next to the distribution (MW) and trend (CUSUM) monitors.
-    ``monitor_benford=True`` adds a ``benford`` block (see
-    :func:`benford_monitor_report`): the first-digit forensic gate —
-    the reference-free data-fabrication screen next to PSI's
-    two-sample comparison.
-    ``monitor_gini=True`` adds a ``gini`` block (see
-    :func:`gini_monitor_report`): recent-vs-baseline ingest
-    CONCENTRATION — is volume piling onto few devices — next to the
-    per-device trend monitors that need history to alarm.
-    ``monitor_source_kl=True`` adds a ``source_kl`` block (see
-    :func:`source_kl_monitor_report`): the categorical-mix twin of
-    PSI's numeric two-sample gate — KL divergence of the recent
-    category mix against history.
-    ``monitor_heavy_hitters=True`` adds a ``heavy_hitters`` block (see
-    :func:`heavy_hitters_monitor_report`): the CMS token-flood gate —
-    Gini says concentration rose, this names the flooding keys and
-    adjudicates the sketch.
-    ``monitor_sketch_store=True`` adds a ``sketch_store`` block (see
-    :func:`sketch_store_monitor_report`): per-day HLL sketch health —
-    daily and unioned estimates adjudicated against exact distincts,
-    plus ingestion-gap days.
-    ``monitor_dedup_census_path`` (a document-batch parquet path, the
-    way ``drift_profile_path`` carries its own input) adds a
-    ``dedup_census`` block (see :func:`dedup_census_monitor_report`):
-    the guarded near-dup cluster-size census with a template-flood
-    verdict — Gini/heavy-hitters say concentration rose, this names
-    the template family doing it in document space.
+    dict, no Spark objects.
     """
     import os as _os
 
@@ -1785,46 +1716,6 @@ def pipeline_maintenance(
         for _, _, _, status in rows:
             counts[status] = counts.get(status, 0) + 1
         report["drift_status_counts"] = counts
-    if quality and _os.path.isdir(stage_path):
-        report["quality_violations"] = stage_quality_report(spark, stage_path)
-    if drift_profile_path and _os.path.isdir(stage_path):
-        report["drift_psi"] = drift_psi_report(
-            spark, stage_path, drift_profile_path
-        )
-    if monitor_timeseries and _os.path.isdir(stage_path):
-        report["timeseries"] = timeseries_monitor_report(spark, stage_path)
-    if monitor_sprt and _os.path.isdir(stage_path):
-        report["sprt"] = sprt_monitor_report(spark, stage_path)
-    if monitor_mann_whitney and _os.path.isdir(stage_path):
-        report["mann_whitney"] = mann_whitney_monitor_report(spark, stage_path)
-    if monitor_ks and _os.path.isdir(stage_path):
-        report["ks"] = ks_monitor_report(spark, stage_path)
-    if monitor_did_treat_expr and _os.path.isdir(stage_path):
-        report["did"] = did_monitor_report(
-            spark, stage_path, treat_expr=monitor_did_treat_expr
-        )
-    if monitor_survival and _os.path.isdir(stage_path):
-        report["survival"] = survival_monitor_report(spark, stage_path)
-    if monitor_auc and _os.path.isdir(stage_path):
-        report["auc"] = auc_monitor_report(spark, stage_path)
-    if monitor_benford and _os.path.isdir(stage_path):
-        report["benford"] = benford_monitor_report(spark, stage_path)
-    if monitor_gini and _os.path.isdir(stage_path):
-        report["gini"] = gini_monitor_report(spark, stage_path)
-    if monitor_source_kl and _os.path.isdir(stage_path):
-        report["source_kl"] = source_kl_monitor_report(spark, stage_path)
-    if monitor_heavy_hitters and _os.path.isdir(stage_path):
-        report["heavy_hitters"] = heavy_hitters_monitor_report(
-            spark, stage_path
-        )
-    if monitor_sketch_store and _os.path.isdir(stage_path):
-        report["sketch_store"] = sketch_store_monitor_report(
-            spark, stage_path
-        )
-    if monitor_dedup_census_path and _os.path.isdir(monitor_dedup_census_path):
-        report["dedup_census"] = dedup_census_monitor_report(
-            spark, monitor_dedup_census_path
-        )
     for t in catalog_tables or []:
         if spark.catalog.tableExists(t):
             spark.catalog.recoverPartitions(t)
@@ -1866,8 +1757,8 @@ def stage_quality_report(spark: SparkSession, stage_path: str) -> dict[str, int]
     map-side-combined aggregate job, so the gate costs a single scan no
     matter how many constraints ride it.
 
-    Returns ``{check_name: violation_count}`` (plain dict, foreachBatch-
-    safe like pipeline_maintenance's report).
+    Returns ``{check_name: violation_count}`` (plain dict, like
+    pipeline_maintenance's report).
     """
     df = spark.read.parquet(stage_path)
     row = df.agg(

@@ -6,7 +6,6 @@ from .pipeline import (  # noqa: F401
     build_stage_rows,
     process_batch,
     read_landing_stream,
-    run_batch,
     start_pipeline,
     start_streams,
     stream_route,

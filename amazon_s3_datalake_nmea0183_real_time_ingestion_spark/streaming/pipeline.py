@@ -31,7 +31,13 @@ column expressions inside whole-stage codegen; the only join is a
 broadcast hash join against the ~65k-row geo dimension (no shuffle); the
 stage sink shuffles once on the partition keys (repartition before write
 so each micro-batch emits one file per event-day instead of
-files × tasks).
+files × tasks), rolling a day over to a new file only when that day's
+rows would overflow one ~64 MB file (``STAGE_ROWS_PER_FILE``).
+
+Catalog maintenance (the reference's nightly Glue crawler,
+cdk_datalake_mvp_stack.py:320-335) is NOT part of the batch: callers run
+``sources.maintenance.pipeline_maintenance`` and the ``*_monitor_report``
+functions on their own schedule, next to the running stream.
 
 Delivery semantics: the checkpoint guarantees each batch is processed
 once under normal operation (no reprocessing across restarts, see
@@ -60,6 +66,11 @@ from ..operators.geocode import build_geo_dim, enrich_geocode
 from ..schemas import CLASS_SENSOR, CLASS_SOH, CLASS_UNKNOWN, ENVELOPE_SCHEMA
 
 MSG_CLASSES = (CLASS_SOH, CLASS_SENSOR, CLASS_UNKNOWN)
+
+# Stage rows per parquet file: about 64 MB (the Firehose size buffer,
+# cdk_datalake_mvp_stack.py:167).  A one-day batch of 1.34M mixed-fleet
+# SOH rows (perfbench's generator) wrote one 62.5 MB file, 49 bytes/row.
+STAGE_ROWS_PER_FILE = 1_300_000
 
 
 @dataclass
@@ -113,26 +124,20 @@ def build_stage_rows(
     return stage, errors
 
 
-def _write_raw_tee(cls_df: DataFrame, path: str, single_file: bool = False) -> None:
+def _write_raw_tee(cls_df: DataFrame, path: str) -> None:
     """Raw-zone JSON tee partitioned by processing-time y/m/d
     (hello.py:52-62,201-234 — wall-clock ``now.strftime`` partitions).
 
-    The default (``single_file=False``) keeps natural task parallelism —
-    the scale-safe plan has no ``coalesce(1)``.  ``single_file=True`` is
-    the reference-compat OPT-IN that mirrors the Lambda's
-    one-upload-per-batch (hello.py:201-234); only sensible at
-    Lambda-scale batch volumes (deliberate deviation, SURVEY.md §7.5
-    style)."""
+    Writes with natural task parallelism: the plan has no ``coalesce(1)``,
+    so the tee does not funnel a large batch through one task the way the
+    Lambda's one-upload-per-batch does (deliberate deviation, SURVEY.md
+    §7.5 style)."""
     parts = processing_partition_cols()
-    out = (
+    (
         cls_df.withColumn("year", parts["year"])
         .withColumn("month", parts["month"])
         .withColumn("day", parts["day"])
-    )
-    if single_file:
-        out = out.coalesce(1)
-    (
-        out.write.mode("append")
+        .write.mode("append")
         .partitionBy("year", "month", "day")
         .json(path)
     )
@@ -143,23 +148,21 @@ def process_batch(
     batch_id: int,
     lake_dir: str,
     geo_dim: DataFrame,
-    reference_compat_raw_tee: bool = True,
-    tee_single_file: bool = False,
     maintain_rollup: bool = False,
-    stage_files_per_day: int = 1,
 ) -> PipelineBatchResult:
     """The foreachBatch body — the Lambda's records-in/records-out contract
-    re-expressed as declarative multi-sink writes.
+    re-expressed as declarative multi-sink writes: error, stage, alerts,
+    then the three raw tees.
 
-    ``stage_files_per_day`` fans the stage write out to N writer tasks
-    (and so ≤ N files) per event-day partition per micro-batch.  The
-    default 1 mirrors Firehose's one-object-per-buffer-flush at
-    Lambda-scale volumes; at 100 TB/day a micro-batch concentrating on
-    one or two event days would funnel the whole batch through one task
-    per day — raise N so the day's volume spreads over N writers while
-    file count stays bounded (N per day per batch, not files × tasks).
-    The salt keys the repartition only; the directory layout (partitionBy
-    year/month/day) is unchanged."""
+    The stage write puts one file per event-day partition per batch (the
+    Firehose one-object-per-flush shape).  A day with more than
+    ``STAGE_ROWS_PER_FILE`` rows rolls over to further files of that size
+    (``maxRecordsPerFile``), so the cap is per day: a many-day backfill
+    still writes one file for each day below it.
+
+    ``maintain_rollup=True`` refreshes the daily device rollup for the
+    event-day partitions this batch touched (the one hook that needs the
+    batch's own partitions)."""
     # Per-class counters are an Observation on the stored frame, filled
     # by the first write.  That is the error write: its plan has no
     # exchange, so it builds the store inside its own job and AQE (which
@@ -178,27 +181,13 @@ def process_batch(
         errors.write.mode("append").json(os.path.join(lake_dir, "error"))
         stage.persist()
         try:
-            # one shuffle on the event-date keys (+ a bounded salt when
-            # stage_files_per_day > 1) so each partition dir gets at most
-            # stage_files_per_day files per micro-batch — avoids both the
-            # files×tasks small-file explosion AND the one-task-per-day
-            # writer bottleneck at scale
-            if stage_files_per_day > 1:
-                # per-ROW salt (packetid+hiverxtime+deviceid), not per-device:
-                # a deviceid-keyed salt bounds fan-out by distinct devices per
-                # day, so one hot device still funnels its whole day through a
-                # single writer — the exact bottleneck this knob exists to fix
-                to_write = stage.repartition(
-                    "year", "month", "day",
-                    F.pmod(
-                        F.xxhash64("packetid", "hiverxtime", "deviceid"),
-                        F.lit(stage_files_per_day),
-                    ),
-                )
-            else:
-                to_write = stage.repartition("year", "month", "day")
+            # one shuffle on the event-date keys so each partition dir gets
+            # one file per micro-batch (not files × tasks); a day over the
+            # per-file cap rolls over inside its writer task
             (
-                to_write.write.mode("append")
+                stage.repartition("year", "month", "day")
+                .write.mode("append")
+                .option("maxRecordsPerFile", STAGE_ROWS_PER_FILE)
                 .partitionBy("year", "month", "day")
                 .parquet(os.path.join(lake_dir, "stage"))
             )
@@ -224,15 +213,13 @@ def process_batch(
             stage.unpersist()
 
         counts = {cls: n for cls, n in observed.get.items() if n}
-        if reference_compat_raw_tee:
-            for cls in MSG_CLASSES:
-                if counts.get(cls, 0):
-                    _write_raw_tee(
-                        classified.filter(F.col("msg_class") == cls)
-                        .drop("msg_class", "payload_text"),
-                        os.path.join(lake_dir, "raw", cls),
-                        single_file=tee_single_file,
-                    )
+        for cls in MSG_CLASSES:
+            if counts.get(cls, 0):
+                _write_raw_tee(
+                    classified.filter(F.col("msg_class") == cls)
+                    .drop("msg_class", "payload_text"),
+                    os.path.join(lake_dir, "raw", cls),
+                )
         return PipelineBatchResult(batch_id=batch_id, counts=counts)
     finally:
         classified.unpersist()
@@ -248,41 +235,22 @@ def start_pipeline(
     max_files_per_trigger: int | None = None,
     max_bytes_per_trigger: int | None = None,
     results: list[PipelineBatchResult] | None = None,
-    tee_single_file: bool = False,
     maintain_rollup: bool = False,
-    stage_files_per_day: int = 1,
-    maintain_every_n_batches: int | None = None,
-    maintenance_catalog_tables: list[str] | None = None,
-    maintenance_reports: list[dict] | None = None,
-    maintain_quality: bool = False,
-    maintain_drift: bool = False,
-    maintain_monitors: bool = False,
     geo_dim: DataFrame | None = None,
 ) -> StreamingQuery:
     """Wire source → foreachBatch → trigger → checkpoint and start.
 
     ``available_now=True`` drains the current landing-dir contents then
     stops (test/backfill mode); otherwise a 60 s processing-time trigger
-    mirrors the Firehose buffer interval.
+    mirrors the Firehose buffer interval.  ``results`` collects each
+    batch's :class:`PipelineBatchResult` once all of its sinks are
+    written.
 
-    ``maintain_every_n_batches=N`` runs ``pipeline_maintenance`` (schema
-    drift LOG report on stage + partition recovery for
-    ``maintenance_catalog_tables``) after every Nth batch — the in-stream
-    analog of the reference's nightly crawler cron
-    (cdk_datalake_mvp_stack.py:325); reports append to
-    ``maintenance_reports``.  ``maintain_quality=True`` adds the
-    one-scan stage data-quality gate (stage_quality_report) to each
-    maintenance pass.  ``maintain_drift=True`` adds the PSI
-    distribution-drift monitor (drift_psi_report): the FIRST maintenance
-    pass persists the reference-period bucket profile under
-    ``<lake>/maintenance/drift_profile``; every later pass scores the
-    stage distribution against it and flags columns with PSI > 0.2.
-    ``maintain_monitors=True`` adds the per-device CUSUM + MASE
-    time-series monitors (timeseries_monitor_report — the maintenance
-    twins of the batch x_cusum_changepoint / x_forecast_mase keys) to
-    each pass: PSI says the DISTRIBUTION moved, CUSUM says the daily
-    LEVEL sustained a shift, MASE says the volume stopped being
-    forecastable.
+    Each batch runs :func:`process_batch` and nothing else.  The
+    reference's nightly crawler (cdk_datalake_mvp_stack.py:320-335) is a
+    separate job here too: call ``pipeline_maintenance`` (schema-drift LOG
+    report + partition recovery) and any ``*_monitor_report`` from
+    ``sources.maintenance`` on the caller's own schedule.
 
     ``geo_dim`` lets callers running SEVERAL pipeline instances (see
     ``start_streams``) share one geocode dimension instead of rebuilding
@@ -295,37 +263,9 @@ def start_pipeline(
 
     def _on_batch(batch: DataFrame, batch_id: int) -> None:
         res = process_batch(batch, batch_id, lake_dir, geo_dim,
-                            tee_single_file=tee_single_file,
-                            maintain_rollup=maintain_rollup,
-                            stage_files_per_day=stage_files_per_day)
+                            maintain_rollup=maintain_rollup)
         if results is not None:
             results.append(res)
-        if maintain_every_n_batches and (batch_id + 1) % maintain_every_n_batches == 0:
-            from pyspark.sql.types import IntegerType, StructField, StructType
-
-            from ..schemas import STAGE_SCHEMA
-            from ..sources.maintenance import pipeline_maintenance
-
-            declared = StructType(
-                STAGE_SCHEMA.fields
-                + [StructField(c, IntegerType()) for c in ("year", "month", "day")]
-            )
-            rep = pipeline_maintenance(
-                batch.sparkSession,
-                os.path.join(lake_dir, "stage"),
-                declared,
-                maintenance_catalog_tables,
-                quality=maintain_quality,
-                drift_profile_path=(
-                    os.path.join(lake_dir, "maintenance", "drift_profile")
-                    if maintain_drift
-                    else None
-                ),
-                monitor_timeseries=maintain_monitors,
-            )
-            rep["batch_id"] = batch_id
-            if maintenance_reports is not None:
-                maintenance_reports.append(rep)
 
     writer = stream.writeStream.foreachBatch(_on_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -335,14 +275,6 @@ def start_pipeline(
     else:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     return writer.start()
-
-
-def run_batch(
-    spark: SparkSession, envelopes: DataFrame, lake_dir: str
-) -> PipelineBatchResult:
-    """Batch-mode equivalent of one micro-batch (backfill entry point)."""
-    return process_batch(envelopes, batch_id=0, lake_dir=lake_dir,
-                         geo_dim=build_geo_dim(spark))
 
 
 # ---------------------------------------------------------------------------

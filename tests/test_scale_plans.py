@@ -507,10 +507,8 @@ def test_stage_quality_report_single_scan(spark, tmp_path):
     """The maintenance quality gate: all constraint counters in ONE
     aggregate job, violation counts exact."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
-        pipeline_maintenance,
         stage_quality_report,
     )
-    from pyspark.sql.types import StructType, StructField, IntegerType, DoubleType
 
     path = str(tmp_path / "stage")
     rows = [
@@ -531,15 +529,6 @@ def test_stage_quality_report_single_scan(spark, tmp_path):
         "battery_out_of_range": 1,
         "duplicate_deliveries": 1,
     }
-    # wired into the scheduled-maintenance pass
-    declared = StructType([
-        StructField("deviceid", IntegerType()),
-        StructField("packetid", IntegerType()),
-        StructField("date_time", IntegerType()),
-        StructField("battery_voltage", DoubleType()),
-    ])
-    report = pipeline_maintenance(spark, path, declared, quality=True)
-    assert report["quality_violations"] == got
 
 
 def test_timeseries_monitor_cusum_and_mase(spark, tmp_path):
@@ -607,11 +596,7 @@ def test_sprt_monitor_sticky_across_batches(spark, tmp_path):
     r8 batch-key semantics, replayed per maintenance pass over the
     append-only stage zone."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
-        pipeline_maintenance,
         sprt_monitor_report,
-    )
-    from pyspark.sql.types import (
-        DoubleType, IntegerType, StructField, StructType,
     )
 
     day0 = 1_700_000_000 - (1_700_000_000 % 86400)  # midnight-aligned
@@ -649,15 +634,6 @@ def test_sprt_monitor_sticky_across_batches(spark, tmp_path):
     assert r3["decision"] == "reject_h0"  # … and the decision is sticky
     assert r3["decided_day"] == first_crossing
 
-    # and through the maintenance entry point, next to the other monitors
-    declared = StructType([
-        StructField("deviceid", IntegerType()),
-        StructField("date_time", IntegerType()),
-        StructField("battery_voltage", DoubleType()),
-    ])
-    report = pipeline_maintenance(spark, path, declared, monitor_sprt=True)
-    assert report["sprt"] == r3
-
 
 def test_mann_whitney_monitor_detects_recent_shift(spark, tmp_path):
     """The maintenance-cadence Mann–Whitney monitor (streaming twin of
@@ -668,10 +644,6 @@ def test_mann_whitney_monitor_detects_recent_shift(spark, tmp_path):
     report is session-timezone-invariant (epoch-day bucketing)."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
         mann_whitney_monitor_report,
-        pipeline_maintenance,
-    )
-    from pyspark.sql.types import (
-        DoubleType, IntegerType, StructField, StructType,
     )
 
     day0 = 1_700_000_000 - (1_700_000_000 % 86400) + 79_980  # 22:13 UTC
@@ -706,17 +678,6 @@ def test_mann_whitney_monitor_detects_recent_shift(spark, tmp_path):
     fz = mann_whitney_monitor_report(spark, flat)
     assert fz["z"] is None and not fz["shifted"] and fz["direction"] is None
 
-    # and through the maintenance entry point
-    declared = StructType([
-        StructField("deviceid", IntegerType()),
-        StructField("date_time", IntegerType()),
-        StructField("battery_voltage", DoubleType()),
-    ])
-    report = pipeline_maintenance(
-        spark, path, declared, monitor_mann_whitney=True
-    )
-    assert report["mann_whitney"] == got
-
 
 def test_ks_monitor_detects_shape_drift(spark, tmp_path):
     """The maintenance-cadence exact two-sample KS monitor (streaming
@@ -729,10 +690,6 @@ def test_ks_monitor_detects_shape_drift(spark, tmp_path):
     than the window (no baseline) and an empty stage stay silent."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
         ks_monitor_report,
-        pipeline_maintenance,
-    )
-    from pyspark.sql.types import (
-        DoubleType, IntegerType, StructField, StructType,
     )
 
     day0 = 1_700_000_000 - (1_700_000_000 % 86400) + 79_980  # 22:13 UTC
@@ -816,15 +773,6 @@ def test_ks_monitor_detects_shape_drift(spark, tmp_path):
     assert ez == {"n_recent": 0, "n_baseline": 0, "ks_d": None,
                   "crit": None, "reject": False, "at_value": None}
 
-    # and through the maintenance entry point
-    declared = StructType([
-        StructField("deviceid", IntegerType()),
-        StructField("date_time", IntegerType()),
-        StructField("battery_voltage", DoubleType()),
-    ])
-    report = pipeline_maintenance(spark, path, declared, monitor_ks=True)
-    assert report["ks"] == got
-
 
 def test_did_monitor_isolates_rollout_effect(spark, tmp_path):
     """The maintenance-cadence DiD monitor (streaming twin of
@@ -883,11 +831,7 @@ def test_survival_monitor_censors_correctly(spark, tmp_path):
     .5, .25; median at bucket 2 → 14 days.  A naive churn rate would
     call the two censored devices dead — KM must not."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
-        pipeline_maintenance,
         survival_monitor_report,
-    )
-    from pyspark.sql.types import (
-        DoubleType, IntegerType, StructField, StructType,
     )
 
     day0 = 1_700_000_000 - (1_700_000_000 % 86400)
@@ -928,17 +872,6 @@ def test_survival_monitor_censors_correctly(spark, tmp_path):
     h = survival_monitor_report(spark, healthy)
     assert h["n_events"] == 0 and h["median_survival_days"] is None
     assert all(p["km"] == 1.0 for p in h["km_curve"])
-
-    # and through the maintenance entry point
-    declared = StructType([
-        StructField("deviceid", IntegerType()),
-        StructField("date_time", IntegerType()),
-        StructField("battery_voltage", DoubleType()),
-    ])
-    report = pipeline_maintenance(
-        spark, path, declared, monitor_survival=True
-    )
-    assert report["survival"] == got
 
 
 def test_monitors_screen_null_timestamps_and_null_treat(spark, tmp_path):
@@ -1001,10 +934,6 @@ def test_auc_monitor_detects_discrimination_loss(spark, tmp_path):
     auc = None through the nullif guard and never fires."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
         auc_monitor_report,
-        pipeline_maintenance,
-    )
-    from pyspark.sql.types import (
-        DoubleType, IntegerType, StructField, StructType,
     )
 
     day0 = 1_700_000_000 - (1_700_000_000 % 86400) + 79_980  # 22:13 UTC
@@ -1049,16 +978,6 @@ def test_auc_monitor_detects_discrimination_loss(spark, tmp_path):
     assert fz["auc_recent"] is None and fz["auc_baseline"] is None
     assert fz["delta_discrimination"] is None and not fz["degraded"]
 
-    # and through the maintenance entry point
-    declared = StructType([
-        StructField("deviceid", IntegerType()),
-        StructField("date_time", IntegerType()),
-        StructField("solar_panel_voltage", DoubleType()),
-        StructField("battery_voltage", DoubleType()),
-    ])
-    report = pipeline_maintenance(spark, path, declared, monitor_auc=True)
-    assert report["auc"] == got
-
 
 def test_benford_monitor_flags_fabricated_counter(spark, tmp_path):
     """The maintenance-cadence Benford gate (streaming twin of
@@ -1071,9 +990,7 @@ def test_benford_monitor_flags_fabricated_counter(spark, tmp_path):
     below min_n the verdict abstains (None, not a noise verdict)."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
         benford_monitor_report,
-        pipeline_maintenance,
     )
-    from pyspark.sql.types import IntegerType, StructField, StructType
 
     import math
 
@@ -1122,17 +1039,6 @@ def test_benford_monitor_flags_fabricated_counter(spark, tmp_path):
     dz = benford_monitor_report(spark, dp2)
     assert dz["n_total"] == 9 * 112 and dz["mad_verdict"] == "nonconforming"
 
-    # and through the maintenance entry point
-    declared = StructType([
-        StructField("deviceid", IntegerType()),
-        StructField("no_messages_sent_since_last_power_cycle",
-                    IntegerType()),
-    ])
-    report = pipeline_maintenance(
-        spark, path, declared, monitor_benford=True
-    )
-    assert report["benford"] == got
-
 
 def test_gini_monitor_detects_ingest_concentration(spark, tmp_path):
     """The maintenance-cadence Gini gate (streaming twin of
@@ -1147,9 +1053,7 @@ def test_gini_monitor_detects_ingest_concentration(spark, tmp_path):
     fires."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
         gini_monitor_report,
-        pipeline_maintenance,
     )
-    from pyspark.sql.types import IntegerType, StructField, StructType
 
     day0 = 1_700_000_000 - (1_700_000_000 % 86400) + 79_980  # 22:13 UTC
     rows = []
@@ -1197,14 +1101,6 @@ def test_gini_monitor_detects_ingest_concentration(spark, tmp_path):
     assert rz["n_baseline"] == 0 and rz["gini_baseline"] is None
     assert rz["delta"] is None and not rz["concentrating"]
 
-    # and through the maintenance entry point
-    declared = StructType([
-        StructField("deviceid", IntegerType()),
-        StructField("date_time", IntegerType()),
-    ])
-    report = pipeline_maintenance(spark, path, declared, monitor_gini=True)
-    assert report["gini"] == got
-
 
 def test_source_kl_monitor_flags_category_mix_shift(spark, tmp_path):
     """The maintenance-cadence categorical-mix gate (streaming twin of
@@ -1217,10 +1113,8 @@ def test_source_kl_monitor_flags_category_mix_shift(spark, tmp_path):
     Session-timezone invariant; NULL screens; an empty window reads
     None, never a smoothed-uniform fabrication."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
-        pipeline_maintenance,
         source_kl_monitor_report,
     )
-    from pyspark.sql.types import IntegerType, StructField, StructType
 
     day0 = 1_700_000_000 - (1_700_000_000 % 86400) + 79_980  # 22:13 UTC
     rows = []
@@ -1279,16 +1173,6 @@ def test_source_kl_monitor_flags_category_mix_shift(spark, tmp_path):
     assert rz["n_baseline"] == 0 and rz["kl_nats"] is None
     assert not rz["shifted"]
 
-    # and through the maintenance entry point
-    declared = StructType([
-        StructField("deviceid", IntegerType()),
-        StructField("date_time", IntegerType()),
-    ])
-    report = pipeline_maintenance(
-        spark, path, declared, monitor_source_kl=True
-    )
-    assert report["source_kl"] == got
-
 
 def test_heavy_hitters_monitor_names_flooding_key(spark, tmp_path):
     """The maintenance-cadence CMS token-flood gate (streaming twin of
@@ -1303,9 +1187,7 @@ def test_heavy_hitters_monitor_names_flooding_key(spark, tmp_path):
     an empty stage reads empty/None and never fires."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
         heavy_hitters_monitor_report,
-        pipeline_maintenance,
     )
-    from pyspark.sql.types import IntegerType, StructField, StructType
 
     day0 = 1_700_000_000 - (1_700_000_000 % 86400) + 79_980  # 22:13 UTC
     rows = []
@@ -1367,16 +1249,6 @@ def test_heavy_hitters_monitor_names_flooding_key(spark, tmp_path):
                   "top_share": None, "flooding": False, "cms_sound": None,
                   "max_overcount": None}
 
-    # and through the maintenance entry point
-    declared = StructType([
-        StructField("deviceid", IntegerType()),
-        StructField("date_time", IntegerType()),
-    ])
-    report = pipeline_maintenance(
-        spark, path, declared, monitor_heavy_hitters=True
-    )
-    assert report["heavy_hitters"] == got
-
 
 def test_dedup_census_monitor_localizes_template_flood(spark, tmp_path):
     """The maintenance-cadence near-dup census monitor (streaming twin
@@ -1389,9 +1261,7 @@ def test_dedup_census_monitor_localizes_template_flood(spark, tmp_path):
     partitioning-invariant; an empty batch reads empty/None."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
         dedup_census_monitor_report,
-        pipeline_maintenance,
     )
-    from pyspark.sql.types import IntegerType, StructField, StructType
 
     template = "free prize click here now winner claim today"
     rows = [(100 + i, template) for i in range(6)]
@@ -1445,15 +1315,6 @@ def test_dedup_census_monitor_localizes_template_flood(spark, tmp_path):
         "max_cluster": None, "top_template": None, "flooding": False,
     }
 
-    # and through the maintenance entry point (own-path pattern, like
-    # drift_profile_path — the stage zone carries no document text)
-    declared = StructType([StructField("deviceid", IntegerType())])
-    report = pipeline_maintenance(
-        spark, str(tmp_path / "nostage"), declared,
-        monitor_dedup_census_path=path,
-    )
-    assert report["dedup_census"] == got
-
 
 def test_sketch_store_monitor_adjudicates_daily_and_union_hll(spark, tmp_path):
     """The maintenance-cadence HLL sketch-store health gate (streaming
@@ -1472,10 +1333,8 @@ def test_sketch_store_monitor_adjudicates_daily_and_union_hll(spark, tmp_path):
     non-empty store) — while an as_of at the last observed day
     reproduces the default exactly and an empty store stays silent."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
-        pipeline_maintenance,
         sketch_store_monitor_report,
     )
-    from pyspark.sql.types import IntegerType, StructField, StructType
 
     day0 = 1_700_000_000 - (1_700_000_000 % 86400) + 79_980  # 22:13 UTC
     rows = []
@@ -1562,16 +1421,6 @@ def test_sketch_store_monitor_adjudicates_daily_and_union_hll(spark, tmp_path):
     assert sketch_store_monitor_report(
         spark, ep, as_of_day=last_day
     ) == ez
-
-    # and through the maintenance entry point
-    declared = StructType([
-        StructField("deviceid", IntegerType()),
-        StructField("date_time", IntegerType()),
-    ])
-    report = pipeline_maintenance(
-        spark, path, declared, monitor_sketch_store=True
-    )
-    assert report["sketch_store"] == got
 
 
 def test_tiere_plans_have_no_cartesian_or_nested_loop(spark, queries):

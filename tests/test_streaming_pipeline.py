@@ -348,34 +348,31 @@ def test_late_event_lands_in_old_event_date_partition(spark, tmp_path):
     landing.mkdir()
     lake = tmp_path / "lake"
     trigger = 5
+    # a batch's result is appended only after ALL its sinks (stage AND the
+    # raw tees) are written, so waiting on results never stops the query
+    # between the stage write and the tee
+    results = []
     q = start_pipeline(
         spark, str(landing), str(lake), str(tmp_path / "ckpt"),
-        trigger_seconds=trigger,
+        trigger_seconds=trigger, results=results,
     )
-
-    def stage_count() -> int:
-        try:
-            return spark.read.parquet(str(lake / "stage")).count()
-        except Exception:
-            return 0
-
     try:
         # trigger 1: an on-time record (event epoch 1700000000 → 2023-11-14)
         with open(landing / "ontime.json", "w") as f:
             f.write(json.dumps(envelope("rec-ontime", soh_data(0))) + "\n")
         deadline = time.monotonic() + 120
-        while stage_count() < 1 and time.monotonic() < deadline:
+        while len(results) < 1 and time.monotonic() < deadline:
             time.sleep(0.5)
-        assert stage_count() >= 1, "on-time record never reached stage"
+        assert len(results) >= 1, "on-time record's batch never finished"
 
         # trigger 2+: a LATE record — event epoch 30 days older
         late_epoch = 1_700_000_000 - 30 * 86_400  # 2023-10-15 UTC
         with open(landing / "late.json", "w") as f:
             f.write(json.dumps(envelope("rec-late", soh_data(0, d=late_epoch))) + "\n")
         t0 = time.monotonic()
-        while stage_count() < 2 and time.monotonic() - t0 < 2 * trigger + 30:
+        while len(results) < 2 and time.monotonic() - t0 < 2 * trigger + 30:
             time.sleep(0.25)
-        assert stage_count() >= 2, "late record never reached stage"
+        assert len(results) >= 2, "late record's batch never finished"
     finally:
         q.stop()
 
@@ -406,15 +403,59 @@ def test_late_event_lands_in_old_event_date_partition(spark, tmp_path):
     )
 
 
-def test_stage_files_per_day_fans_out_bounded(spark, tmp_path):
-    """stage_files_per_day=N spreads one event-day's stage write over up
-    to N writer tasks (and so ≤ N files) instead of funneling the whole
-    day through one task — the 100 TB writer-bottleneck knob.  Directory
-    layout and rows are unchanged; file count per day partition is
-    bounded by N and > 1 (the fan-out actually happened)."""
+def _stage_files_by_day(lake) -> dict[tuple[int, int, int], int]:
     import glob
     import os
 
+    out = {}
+    for d in glob.glob(str(lake / "stage" / "year=*" / "month=*" / "day=*")):
+        parts = dict(p.split("=") for p in d.split("/")[-3:])
+        key = (int(parts["year"]), int(parts["month"]), int(parts["day"]))
+        out[key] = len(glob.glob(os.path.join(d, "*.parquet")))
+    return out
+
+
+def test_stage_files_per_day_fans_out_bounded(spark, tmp_path, monkeypatch):
+    """A day with more rows than ``STAGE_ROWS_PER_FILE`` rolls over to
+    ceil(rows / STAGE_ROWS_PER_FILE) stage files instead of growing one
+    file without bound.  Directory layout and rows are unchanged; the
+    file count per day partition follows that day's own rows and is > 1
+    somewhere (the rollover actually happened)."""
+    import math
+
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.geocode import (
+        build_geo_dim,
+    )
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.fixtures import (
+        envelope_df,
+    )
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.streaming import (
+        pipeline,
+    )
+
+    lake = tmp_path / "lake"
+    env = envelope_df(spark, n_soh=24, n_sensor=0, n_unknown=0)
+    monkeypatch.setattr(pipeline, "STAGE_ROWS_PER_FILE", 6)
+    res = pipeline.process_batch(env, 0, str(lake), build_geo_dim(spark))
+    assert res.counts == {"soh": 24}
+    stage = spark.read.parquet(str(lake / "stage"))
+    assert stage.count() == 24
+    # the repartition puts each day in one writer task, so the rollover
+    # count is exact: one file per started block of 6 of that day's rows
+    expected = {
+        (r["year"], r["month"], r["day"]): math.ceil(r["count"] / 6)
+        for r in stage.groupBy("year", "month", "day").count().collect()
+    }
+    files = _stage_files_by_day(lake)
+    assert files == expected
+    assert max(files.values()) <= 4
+    assert max(files.values()) >= 2  # the rollover actually happened somewhere
+
+
+def test_stage_writes_one_file_per_event_day_by_default(spark, tmp_path):
+    """Under the default ``STAGE_ROWS_PER_FILE`` a batch of ordinary size
+    writes exactly one stage file per event-day partition (the Firehose
+    one-object-per-flush shape)."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.geocode import (
         build_geo_dim,
     )
@@ -427,40 +468,72 @@ def test_stage_files_per_day_fans_out_bounded(spark, tmp_path):
 
     lake = tmp_path / "lake"
     env = envelope_df(spark, n_soh=24, n_sensor=0, n_unknown=0)
-    # at test scale AQE would coalesce the tiny salted shuffle partitions
-    # back together (at production volumes they're large and stay split) —
-    # pin it off so file count == salt-group count deterministically
+    process_batch(env, 0, str(lake), build_geo_dim(spark))
+    files = _stage_files_by_day(lake)
+    assert files and set(files.values()) == {1}
+    assert spark.read.parquet(str(lake / "stage")).count() == 24
+
+
+def test_stage_file_cap_is_per_day(spark, tmp_path, monkeypatch):
+    """The per-file cap applies to each event day, not to the batch: a
+    batch above the cap whose days each hold fewer rows than the cap
+    (a many-day backfill) still writes one stage file per day."""
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.geocode import (
+        build_geo_dim,
+    )
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.fixtures import (
+        envelope_df,
+    )
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.streaming import (
+        pipeline,
+    )
+
+    lake = tmp_path / "lake"
+    # hourly events: 96 rows over 5 days, at most 24 rows in any day
+    env = envelope_df(spark, n_soh=96, n_sensor=0, n_unknown=0)
+    monkeypatch.setattr(pipeline, "STAGE_ROWS_PER_FILE", 30)
+    # at test scale AQE merges tiny shuffle partitions, which would hide a
+    # write that splits days across tasks (production-size partitions
+    # stay split) — pin it off so each task's output is visible
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try:
-        res = process_batch(env, 0, str(lake), build_geo_dim(spark),
-                            reference_compat_raw_tee=False,
-                            stage_files_per_day=4)
+        pipeline.process_batch(env, 0, str(lake), build_geo_dim(spark))
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    assert res.counts == {"soh": 24}
-    stage = spark.read.parquet(str(lake / "stage"))
-    assert stage.count() == 24
-    # per day dir: exactly one file per (salt-group present that day),
-    # bounded by stage_files_per_day (fixture has 3 distinct devices)
-    expected = {
-        (r["year"], r["month"], r["day"]): r["n"]
-        for r in stage.groupBy("year", "month", "day")
-        .agg(F.count_distinct(F.pmod(F.xxhash64("deviceid"), F.lit(4))).alias("n"))
-        .collect()
-    }
-    day_dirs = glob.glob(str(lake / "stage" / "year=*" / "month=*" / "day=*"))
-    assert day_dirs
-    fanned = 0
-    for d in day_dirs:
-        parts = dict(p.split("=") for p in d.split("/")[-3:])
-        key = (int(parts["year"]), int(parts["month"]), int(parts["day"]))
-        files = glob.glob(os.path.join(d, "*.parquet"))
-        # ≤ (not ==): two same-day salt groups can hash into ONE of the 4
-        # test shuffle partitions and share a file — the bound is the
-        # contract, exact equality would depend on murmur3 collisions
-        assert len(files) <= expected[key] <= 4, (d, len(files), expected[key])
-        fanned = max(fanned, len(files))
-    assert fanned >= 2  # the fan-out actually happened somewhere
+    per_day = spark.read.parquet(str(lake / "stage")).groupBy(
+        "year", "month", "day").count().collect()
+    assert sum(r["count"] for r in per_day) == 96 > 30
+    assert max(r["count"] for r in per_day) < 30
+    files = _stage_files_by_day(lake)
+    assert len(files) == len(per_day) >= 3
+    assert set(files.values()) == {1}
+
+
+def test_process_batch_job_budget(spark, tmp_path):
+    """One static 3-class batch costs at most 9 Spark jobs: the per-class
+    counters and the capped stage write must not add one."""
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.geocode import (
+        build_geo_dim,
+    )
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.fixtures import (
+        envelope_df,
+    )
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.streaming.pipeline import (
+        process_batch,
+    )
+
+    geo = build_geo_dim(spark)
+    env = envelope_df(spark, n_soh=6, n_sensor=5, n_unknown=2)
+    sc = spark.sparkContext
+    group = f"process-batch-budget-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        res = process_batch(env, 0, str(tmp_path / "lake"), geo)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res.counts == {"soh": 6, "sensor": 5, "unknown": 2}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 9
 
 
 def test_max_bytes_per_trigger_splits_batches(spark, tmp_path):
@@ -484,52 +557,76 @@ def test_max_bytes_per_trigger_splits_batches(spark, tmp_path):
     assert all(r.counts == {"soh": 2, "sensor": 1} for r in results)
 
 
-def test_maintenance_cadence_emits_drift_report(spark, tmp_path):
-    """maintain_every_n_batches runs the crawler-cron analog from
-    foreachBatch: with N=2 over four single-file batches, exactly two
-    maintenance reports appear (after batches 1 and 3), each a LOG-only
-    schema drift report over stage with every column status ok."""
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    for b in range(4):
-        with open(landing / f"batch-{b:04d}.json", "w") as f:
-            for row in envelope_rows(n_soh=2, n_sensor=0, n_unknown=0):
-                f.write(json.dumps(row) + "\n")
-    reports = []
+def _drain(spark, tmp_path) -> None:
+    """Drain the landing dir into the lake (one available-now run over the
+    test's checkpoint)."""
     q = start_pipeline(
-        spark, str(landing), str(tmp_path / "lake"), str(tmp_path / "ckpt"),
-        available_now=True, max_files_per_trigger=1,
-        maintain_every_n_batches=2, maintenance_reports=reports,
-        maintain_quality=True,
+        spark, str(tmp_path / "landing"), str(tmp_path / "lake"),
+        str(tmp_path / "ckpt"), available_now=True,
     )
     q.awaitTermination(180)
-    assert [r["batch_id"] for r in reports] == [1, 3]
-    for rep in reports:
+
+
+def _land(tmp_path, name: str, rows: list[dict]) -> None:
+    with open(tmp_path / "landing" / name, "w") as f:
+        for row in rows:
+            f.write(json.dumps(row) + "\n")
+
+
+def test_maintenance_cadence_emits_drift_report(spark, tmp_path):
+    """The crawler-cron analog runs beside the stream: after each drain of
+    two landed files, ``pipeline_maintenance`` reports LOG-only schema
+    drift over stage with every column status ok, and the one-scan
+    quality gate counts the duplicate deliveries so far."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.schemas import (
+        STAGE_SCHEMA,
+    )
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
+        pipeline_maintenance,
+        stage_quality_report,
+    )
+
+    declared = StructType(
+        STAGE_SCHEMA.fields
+        + [StructField(c, IntegerType()) for c in ("year", "month", "day")]
+    )
+    stage = str(tmp_path / "lake" / "stage")
+    (tmp_path / "landing").mkdir()
+    for n_files in (2, 4):
+        for b in range(n_files - 2, n_files):
+            _land(tmp_path, f"batch-{b:04d}.json",
+                  envelope_rows(n_soh=2, n_sensor=0, n_unknown=0))
+        _drain(spark, tmp_path)
+        rep = pipeline_maintenance(spark, stage, declared)
         assert rep["recovered_tables"] == []
         # declared stage schema + y/m/d partition ints — no drift
         assert set(rep["drift_status_counts"]) == {"ok"}
         assert rep["drift_status_counts"]["ok"] == len(rep["drift"])
-    # one-scan quality gate rode the same pass — and catches the
-    # synthetic batches REPLAYING identical envelopes: k batches of the
-    # same 2 rows leave 2*(k-1) duplicate deliveries in stage
-    for rep, n_batches in zip(reports, (2, 4)):
-        assert rep["quality_violations"] == {
+        # the quality gate catches the synthetic files REPLAYING
+        # identical envelopes: k files of the same 2 rows leave
+        # 2*(k-1) duplicate deliveries in stage
+        assert stage_quality_report(spark, stage) == {
             "null_deviceid": 0,
             "null_date_time": 0,
             "battery_out_of_range": 0,
-            "duplicate_deliveries": 2 * (n_batches - 1),
+            "duplicate_deliveries": 2 * (n_files - 1),
         }
 
 
 def test_maintenance_drift_monitor_flags_planted_voltage_shift(spark, tmp_path):
-    """maintain_drift=True: the first maintenance pass persists the
-    reference-period PSI profile; a later pass scores the stage
+    """The PSI drift monitor on the maintenance schedule: the first pass
+    persists the reference-period profile; a later pass scores the stage
     distribution against it.  Batches 0-1 carry a healthy 4.2 V fleet
     (bootstrap period); batches 2-3 carry a planted 12.4 V shift — the
-    second maintenance pass must flag battery_voltage as drifted while
-    the unchanged device mix stays quiet."""
+    second pass must flag battery_voltage as drifted while the unchanged
+    device mix stays quiet."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.fixtures import (
         soh_data,
+    )
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
+        drift_psi_report,
     )
 
     def envs(batch: int, bv: float) -> list[dict]:
@@ -552,36 +649,19 @@ def test_maintenance_drift_monitor_flags_planted_voltage_shift(spark, tmp_path):
             )
         return rows
 
-    import os as _os
+    stage = str(tmp_path / "lake" / "stage")
+    profile = str(tmp_path / "lake" / "maintenance" / "drift_profile")
+    (tmp_path / "landing").mkdir()
 
-    landing = tmp_path / "landing"
-    landing.mkdir()
+    def land_and_report(batches: range, bv: float) -> dict:
+        for b in batches:
+            _land(tmp_path, f"batch-{b:04d}.json", envs(b, bv=bv))
+        _drain(spark, tmp_path)
+        return drift_psi_report(spark, stage, profile)
 
-    def write_batch(b: int, bv: float) -> None:
-        p = landing / f"batch-{b:04d}.json"
-        with open(p, "w") as f:
-            for row in envs(b, bv=bv):
-                f.write(json.dumps(row) + "\n")
-        # the file source orders batches by modification time; same-ms
-        # writes would make the healthy/shifted split nondeterministic
-        _os.utime(p, (1_700_000_000 + b, 1_700_000_000 + b))
-
-    for b in range(2):
-        write_batch(b, bv=4.2)
-    for b in range(2, 4):
-        write_batch(b, bv=12.4)
-    reports = []
-    q = start_pipeline(
-        spark, str(landing), str(tmp_path / "lake"), str(tmp_path / "ckpt"),
-        available_now=True, max_files_per_trigger=1,
-        maintain_every_n_batches=2, maintenance_reports=reports,
-        maintain_drift=True,
-    )
-    q.awaitTermination(180)
-    assert [r["batch_id"] for r in reports] == [1, 3]
     # pass 1 froze the healthy-period profile
-    assert reports[0]["drift_psi"] == {"bootstrapped": True, "columns": {}}
-    cols = reports[1]["drift_psi"]["columns"]
+    assert land_and_report(range(0, 2), 4.2) == {"bootstrapped": True, "columns": {}}
+    cols = land_and_report(range(2, 4), 12.4)["columns"]
     # half the stage mass moved from the 4 V bin to the 12 V bin
     assert cols["battery_voltage"]["drifted"]
     assert cols["battery_voltage"]["psi"] > 0.2
@@ -593,33 +673,25 @@ def test_maintenance_drift_monitor_flags_planted_voltage_shift(spark, tmp_path):
     # the profile is PERSISTED: a restarted stream (same lake + checkpoint)
     # keeps comparing against the original healthy-period reference, not
     # re-bootstrapping from the now-polluted stage
-    for b in range(4, 6):
-        write_batch(b, bv=12.4)
-    reports2 = []
-    q2 = start_pipeline(
-        spark, str(landing), str(tmp_path / "lake"), str(tmp_path / "ckpt"),
-        available_now=True, max_files_per_trigger=1,
-        maintain_every_n_batches=2, maintenance_reports=reports2,
-        maintain_drift=True,
-    )
-    q2.awaitTermination(180)
-    assert len(reports2) == 1
-    cols2 = reports2[0]["drift_psi"]["columns"]
-    assert reports2[0]["drift_psi"]["bootstrapped"] is False
+    rep2 = land_and_report(range(4, 6), 12.4)
+    cols2 = rep2["columns"]
+    assert rep2["bootstrapped"] is False
     assert cols2["battery_voltage"]["n_ref"] == 8      # original reference
     assert cols2["battery_voltage"]["n_cur"] == 24     # 16 + 2 new batches
     assert cols2["battery_voltage"]["drifted"]
 
 
 def test_maintenance_timeseries_monitor_flags_sustained_shift(spark, tmp_path):
-    """maintain_monitors=True wires the CUSUM/MASE time-series monitors
-    (streaming twins of x_cusum_changepoint / x_forecast_mase) into the
-    foreachBatch maintenance cadence: a healthy 20-day voltage level
-    followed by a sustained 12.4 V shift must trip the per-device CUSUM
-    alarm in the post-shift maintenance pass, while the healthy-period
-    pass stays quiet."""
+    """The CUSUM/MASE time-series monitors (streaming twins of
+    x_cusum_changepoint / x_forecast_mase) on the maintenance schedule: a
+    healthy 20-day voltage level followed by a sustained 12.4 V shift
+    must trip the per-device CUSUM alarm in the post-shift pass, while
+    the healthy-period pass stays quiet."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.fixtures import (
         soh_data,
+    )
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
+        timeseries_monitor_report,
     )
 
     day_noon = 1_699_963_200  # 2023-11-14 12:00 UTC — mid-day, no UTC-midnight straddle
@@ -643,35 +715,24 @@ def test_maintenance_timeseries_monitor_flags_sustained_shift(spark, tmp_path):
             )
         return rows
 
-    import os as _os
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
+    stage = str(tmp_path / "lake" / "stage")
+    (tmp_path / "landing").mkdir()
     batches = [
         envs(range(0, 10), 4.2),    # healthy
         envs(range(10, 20), 4.2),   # healthy
         envs(range(20, 25), 12.4),  # sustained shift
         envs(range(25, 30), 12.4),
     ]
-    for b, rows in enumerate(batches):
-        p = landing / f"batch-{b:04d}.json"
-        with open(p, "w") as f:
-            for row in rows:
-                f.write(json.dumps(row) + "\n")
-        _os.utime(p, (1_700_000_000 + b, 1_700_000_000 + b))
     reports = []
-    q = start_pipeline(
-        spark, str(landing), str(tmp_path / "lake"), str(tmp_path / "ckpt"),
-        available_now=True, max_files_per_trigger=1,
-        maintain_every_n_batches=2, maintenance_reports=reports,
-        maintain_monitors=True,
-    )
-    q.awaitTermination(180)
-    assert [r["batch_id"] for r in reports] == [1, 3]
-    healthy = reports[0]["timeseries"][100]
+    for first in (0, 2):
+        for b in (first, first + 1):
+            _land(tmp_path, f"batch-{b:04d}.json", batches[b])
+        _drain(spark, tmp_path)
+        reports.append(timeseries_monitor_report(spark, stage))
+    healthy = reports[0][100]
     assert healthy["n_days"] == 20
     assert healthy["cusum_alarms"] == 0 and not healthy["alarm_latest"]
-    shifted = reports[1]["timeseries"][100]
+    shifted = reports[1][100]
     assert shifted["n_days"] == 30
     assert shifted["cusum_alarms"] >= 1 and shifted["alarm_latest"]
     assert shifted["cusum_max"] > 0

@@ -10,12 +10,7 @@ sinks) with one availableNow run, and prints ONE JSON line::
     {"metric": "ingest_throughput", "records": N, "seconds": S,
      "records_per_s": R, "soh_rows_staged": K}
 
-Usage: python tools/ingest_bench.py [n_records] [n_files] [--scale] [--latency [trigger_s]]
-
-``--scale`` uses the parallel raw tees (tee_single_file=False — the
-package default since round 3); without it the bench opts into the
-Lambda-parity single-file tees so throughput numbers stay comparable
-across rounds.
+Usage: python tools/ingest_bench.py [n_records] [n_files] [--latency [trigger_s]]
 
 ``--latency`` measures the BASELINE.md end-to-end target instead of
 throughput: run the pipeline on its REAL processing-time trigger, land a
@@ -146,7 +141,6 @@ def _envelope(rid: int) -> dict:
 
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    scale_mode = "--scale" in sys.argv
     if "--latency" in sys.argv:
         return latency_mode(int(args[0]) if args else 6)
     n = int(args[0]) if len(args) > 0 else 200_000
@@ -162,14 +156,12 @@ def main() -> int:
         q = start_pipeline(
             spark, landing, os.path.join(root, "lake"),
             os.path.join(root, "ckpt"), available_now=True,
-            tee_single_file=not scale_mode,
         )
         q.awaitTermination()
         secs = time.perf_counter() - t0
         staged = spark.read.parquet(os.path.join(root, "lake", "stage")).count()
         print(json.dumps({
             "metric": "ingest_throughput",
-            "mode": "scale" if scale_mode else "reference-compat",
             "records": n,
             "seconds": round(secs, 2),
             "records_per_s": round(n / secs),
