@@ -19,23 +19,30 @@ from . import tierm  # noqa: F401,E402
 
 # The driver adjudicates queries() in dict-insertion order and caps at 50
 # keys per round.  This window front-loads, in this order:
-#   1. the keys whose executed join strategy changed when the forced join
+#   1. the keys whose statistic moved into a shared core in
+#      operators/stats.py (one implementation with the maintenance
+#      monitors);
+#   2. the keys whose executed join strategy changed when the forced join
 #      hints went (event-log comparison of every SQL execution per key,
 #      sf0.01 and sf0.1);
-#   2. x_curate_corpus (lost two options) and x_kcore (its broadcast
+#   3. x_curate_corpus (lost two options) and x_kcore (its broadcast
 #      gate was removed, measured and restored);
-#   3. the keys where only a join's build side flipped;
-#   4. the previous window, in its order, up to the 50-key cut.
+#   4. the keys where only a join's build side flipped;
+#   5. the previous window, in its order, up to the 50-key cut.
 _NEEDS_VERDICT = [
-    # executed join strategy changed without its forced hint (slot 1)
+    # statistic now computed by an operators/stats.py core (slots 1-12)
+    "x_drift_psi", "x_cusum_changepoint", "x_forecast_mase", "x_sprt",
+    "x_mann_whitney", "x_auc", "x_ks_test", "x_diff_in_diff", "x_survival",
+    "x_benford", "x_gini_concentration", "x_source_kl",
+    # executed join strategy changed without its forced hint (slot 13)
     "x_sim_ivf_2level",
     # their own code lost an option / was measured for the hint rule
-    # (slots 2-3)
+    # (slots 14-15)
     "x_curate_corpus", "x_kcore",
-    # only a join build side flipped (slots 4-7)
+    # only a join build side flipped (slots 16-19)
     "x_bm25", "x_rank_fusion", "x_sim_ivf_2level_exact",
     "x_split_cluster_safe",
-    # carried from the previous window, in its order (slots 8-50)
+    # carried from the previous window, in its order (slots 20-50)
     "q_triangle_count_guarded", "x_pagerank_guarded", "x_lpa_guarded",
     "x_dedup_cluster", "x_dedup_cluster_guarded", "x_dedup_cluster_star",
     "x_dedup_census", "x_split_leakage", "x_dedup_best",
@@ -45,13 +52,15 @@ _NEEDS_VERDICT = [
     "x_dedup_semantic_guarded", "x_bpe_tokenize", "x_vocab_bpe",
     "x_hll_intersect", "x_theta_intersect", "x_active_users_hll",
     "x_mmr_diversify", "q_retention", "q_gapfill", "x_scd2", "x_surprisal",
-    "x_zorder", "q_merge", "q_pattern_match", "q_agg_approx_quantile",
+    "x_zorder",
+    # --- cut line (50) --- the carried names below open the next
+    # window, then q_subquery, the rest of the r12 block and the
+    # r10/r11 names displaced earlier (x_text_repetition,
+    # x_embed_quantize, x_lm_bigram, ...).
+    "q_merge", "q_pattern_match", "q_agg_approx_quantile",
     "x_ann_recall", "q_fn_variant", "x_data_checks", "x_dedup_url",
     "q_histogram", "q_join_asof_near", "q_fn_haversine", "q_fn_array",
     "q_fn_json",
-    # --- cut line (50) --- next: q_subquery,
-    # then the rest of the r12 block and the r10/r11 names displaced
-    # earlier (x_text_repetition, x_embed_quantize, x_lm_bigram, ...).
 ]
 
 

@@ -28,6 +28,7 @@ from ..operators.dedup import (
     minhash_signatures,
     shingle_set,
 )
+from ..operators.stats import smoothed_psi
 from ..storage import stored
 from .registry import register, table
 from .tierc import _CORPUS_SQL, _doc_corpus, _emb_corpus
@@ -973,17 +974,10 @@ def x_drift_psi(spark: SparkSession, sf: str) -> DataFrame:
     tot = cnt.groupBy("event_type").agg(
         F.sum("n_ref").alias("t_ref"), F.sum("n_cur").alias("t_cur")
     )
-    p = (F.col("n_ref") + 0.5) / (F.col("t_ref") + 5.0)
-    q = (F.col("n_cur") + 0.5) / (F.col("t_cur") + 5.0)
-    psi = (
+    # smoothing over the fixed 10 buckets: t + 0.5·10, the oracle's + 5.0
+    psi = smoothed_psi(
         # one row per event type; estimated from events
-        cnt.join(F.broadcast(tot), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.sum((p - q) * F.log(p / q)).alias("psi_raw"),
-            F.max("t_ref").alias("t_ref"),
-            F.max("t_cur").alias("t_cur"),
-        )
+        cnt.join(F.broadcast(tot), "event_type"), "event_type", F.lit(10)
     )
     scored = psi.select(
         "event_type",

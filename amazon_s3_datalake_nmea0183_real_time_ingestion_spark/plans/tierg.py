@@ -40,6 +40,7 @@ from ..operators.similarity import (
     pair_cosine,
     prep_vectors,
 )
+from ..operators.stats import smoothed_kl
 from ..storage import stored
 from .registry import register, table
 from .tierc import _CORPUS_SQL, _TOKS_SQL, _SHINGLES_SQL, _doc_corpus
@@ -1200,17 +1201,11 @@ def x_source_kl(spark: SparkSession, sf: str) -> DataFrame:
                 (F.coalesce(F.col("c"), F.lit(0)) + 0.5).alias("cs"))
     )
     cb = f.groupBy("bucket").agg(F.sum("cs").alias("cc"))
-    tot = f.groupBy("source").agg(F.sum("cs").alias("ts"))
-    ct = cb.agg(F.sum("cc").alias("tc"))
-    term = (F.col("cs") / F.col("ts")) * F.log(
-        (F.col("cs") / F.col("ts")) / (F.col("cc") / F.col("tc"))
+    # every count is a half-integer, so the per-source normaliser
+    # Σ cc is the exact corpus total on every engine
+    kl = smoothed_kl(
+        # cb: 256 buckets, estimated from the exploded token stream
+        # (15 MB at sf0.01)
+        f.join(F.broadcast(cb), "bucket"), ["source"], "cs", "cc"
     )
-    return (
-        # tot: one row per source, cb: 256 buckets; both are estimated
-        # from the exploded token stream (22 MB / 15 MB at sf0.01)
-        f.join(F.broadcast(tot), "source")
-        .join(F.broadcast(cb), "bucket")
-        .crossJoin(ct)
-        .groupBy("source")
-        .agg(F.round(F.sum(term), 6).alias("kl_nats"))
-    )
+    return kl.select("source", F.round("kl", 6).alias("kl_nats"))

@@ -44,6 +44,7 @@ from pyspark.sql.window import Window
 from ..operators.dedup import shingle_set
 from ..operators.graph import adamic_adar, copurchase_affinity
 from ..operators.skew import salted_exact_distinct_count
+from ..operators.stats import cusum, gini, mase
 from ..storage import stored
 from .registry import register, table
 
@@ -1802,65 +1803,20 @@ def x_cusum_changepoint(spark: SparkSession, sf: str) -> DataFrame:
     is the daily rollup, which is map-side combinable.
     """
     ev = table(spark, sf, "events").filter(F.col("value").isNotNull())
-    # x, mu0 and sd are engine-summed (order-dependent final ULPs); round
-    # each to 6 BEFORE they enter the prefix sum, so S' accumulates the
-    # IDENTICAL doubles in the identical (day) order on both engines and
-    # the cumsum is bit-exact — without this, a 1e-13 drift in mu0 flipped
-    # a round(·, 4) half-way case at sf0.001 (caught by the oracle gate).
     d = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(F.round(F.avg("value"), 6).alias("x"))
-    wt = Window.partitionBy("event_type")
-    # The drift term k must ALSO live on the 1e-6 grid: 0.25 × a
-    # 6-decimal sd has 8-decimal granularity, which put cusum values
-    # exactly halfway on the 1e-6 grid (3.3664615 → engines split on a
-    # segment-tree-vs-sequential window-sum ULP).  With every summand on
-    # the grid, cusum lands on grid points only — never halfway.
-    m = d.select(
-        "event_type", "day", "x",
-        F.round(F.avg("x").over(wt), 6).alias("mu0"),
-        F.round(F.stddev_samp("x").over(wt), 6).alias("sd"),
-        F.round(
-            F.lit(0.25) * F.round(F.stddev_samp("x").over(wt), 6), 6
-        ).alias("k"),
-    )
-    wo = (
-        Window.partitionBy("event_type")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    s = m.select(
-        "event_type", "day", "x", "sd",
-        F.sum(F.col("x") - F.col("mu0") - F.col("k"))
-        .over(wo)
-        .alias("sp"),
-    )
-    # Page's recursion starts from C_0 = 0, i.e. S'_0 = 0 participates in
-    # the running min: C_t = S'_t − min(0, S'_1..S'_t).  Without the
-    # least(0, ·) floor the first scored day is forced to 0 and a series
-    # whose prefix sums stay positive (immediate upward shift above
-    # μ₀ + k) understates C_t — the r7 ADVICE finding; the floor is
-    # applied identically in the oracle so the fix is adjudicated.
-    c = s.select(
-        "event_type", "day", "x", "sd",
-        (F.col("sp") - F.least(F.lit(0.0), F.min("sp").over(wo))).alias(
-            "cusum"
-        ),
-    )
+    ).agg(F.avg("value").alias("x"))
     # x is already the 6-decimal value; re-rounding it to 4 CREATED a
     # decimal halfway tie (38.37875 -> Spark HALF_UP 38.3788, DuckDB
-    # binary 38.3787 — the registry's documented round() boundary, and
-    # the same re-rounding trap x_linreg_gd hit).  Output the 6-decimal
-    # doubles directly; cusum's round(·, 6) lands on grid points, never
-    # halfway (it sums 6-decimal-rounded doubles bit-exactly).
-    return c.select(
+    # binary 38.3787 — the registry's documented round() boundary), so
+    # the 6-decimal doubles go out directly.  cusum's round(·, 6) lands
+    # on grid points, never halfway.
+    return cusum(d, "event_type").select(
         "event_type",
         "day",
         F.col("x").alias("x_r"),
         F.round("cusum", 6).alias("cusum_r"),
-        (F.round("cusum", 6) > F.round(F.lit(3.0) * F.col("sd"), 6))
-        .cast("int")
-        .alias("alarm"),
+        "alarm",
     )
 
 
@@ -1909,30 +1865,11 @@ def x_forecast_mase(spark: SparkSession, sf: str) -> DataFrame:
     d = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(F.sum("value").alias("x"))
-    w = Window.partitionBy("event_type").orderBy("day")
-    l = d.select(
-        "event_type", "x",
-        F.lag("x", 7).over(w).alias("f_seasonal"),
-        F.lag("x", 1).over(w).alias("f_naive"),
-    )
-    return l.groupBy("event_type").agg(
-        F.count("f_seasonal").cast("bigint").alias("n_scored"),
-        F.round(F.avg(F.abs(F.col("x") - F.col("f_seasonal"))), 4).alias("mae_r"),
-        F.round(
-            F.avg(
-                F.when(
-                    F.col("f_seasonal").isNotNull(),
-                    F.abs(F.col("x") - F.col("f_seasonal")),
-                )
-            )
-            / F.avg(
-                F.when(
-                    F.col("f_naive").isNotNull(),
-                    F.abs(F.col("x") - F.col("f_naive")),
-                )
-            ),
-            4,
-        ).alias("mase_r"),
+    return mase(d, "event_type").select(
+        "event_type",
+        F.col("n_scored").cast("bigint").alias("n_scored"),
+        F.round("mae", 4).alias("mae_r"),
+        F.round("mase", 4).alias("mase_r"),
     )
 
 
@@ -1982,9 +1919,10 @@ def x_gini_concentration(spark: SparkSession, sf: str) -> DataFrame:
     dedup census.
 
     Cross-engine: ranks are deterministic (freq, token) row_numbers;
-    Σ(i·xᵢ) and Σx are EXACT BIGINT sums (worst case here ~2e11, no
-    overflow), so the Gini is one fixed-order double expression over
-    exact integers — identical across engines before the final round.
+    Σ(i·xᵢ) and Σx are EXACT integer sums, so the Gini is one
+    fixed-order double expression over exact integers — identical
+    across engines before the final round (core:
+    ``operators/stats.py::gini``, shared with ``gini_monitor_report``).
 
     Scale: one map-side-combinable (source, token) count, one rank
     window riding a source-keyed sort of the VOCABULARY-sized table
@@ -1999,20 +1937,9 @@ def x_gini_concentration(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("source", "tok")
         .agg(F.count("*").alias("c"))
     )
-    w = Window.partitionBy("source").orderBy(F.col("c").asc(), F.col("tok").asc())
-    r = f.select("source", "c", F.row_number().over(w).alias("i"))
-    g = r.groupBy("source").agg(
-        F.count("*").alias("n"),
-        F.sum("c").alias("tot"),
-        F.sum(F.col("i") * F.col("c")).alias("wsum"),
-    )
-    return g.select(
+    return gini(f, "source", "tok", "c").select(
         "source",
         F.col("n").cast("bigint").alias("n_distinct_tokens"),
         F.col("tot").cast("bigint").alias("n_tokens"),
-        F.round(
-            F.lit(2.0) * F.col("wsum") / (F.col("n") * F.col("tot").cast("double"))
-            - (F.col("n") + F.lit(1.0)) / F.col("n"),
-            6,
-        ).alias("gini_r"),
+        F.round("gini", 6).alias("gini_r"),
     )

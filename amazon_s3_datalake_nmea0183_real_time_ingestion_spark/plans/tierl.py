@@ -24,9 +24,8 @@ the round-9 sketch-store twin `x_active_users_hll` (fourteen total):
 - engagement / sequential monitoring: rolling DAU/WAU/MAU distinct
   rollups (`x_active_users`), their mergeable per-day HLL sketch-store
   twin (`x_active_users_hll`, the adjudicated 100 TB path), and the
-  Wald SPRT peeking-safe conversion monitor (`x_sprt`, whose
-  maintenance-cadence twin lives in sources/maintenance.py),
-  completing the experiment family;
+  Wald SPRT peeking-safe conversion monitor (`x_sprt`), completing the
+  experiment family;
 - spatial: 10° grid-cell hotspot table over the fleet's positions
   (`x_geo_grid`) — stage one of the documented points-to-points
   geo-join screen;
@@ -54,28 +53,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.stats import BENFORD_P, benford, ks_test, sprt
 from ..storage import stored
 from .registry import register, table
 
 # ---------------------------------------------------------------------------
 # Benford first-digit audit — shared expected-probability fragment
 # ---------------------------------------------------------------------------
-
-# log10(1 + 1/d) for d = 1..9, repr()'d so both engines parse the exact
-# same float64 (tierk.py module-docstring contract).  The explicit DOUBLE
-# cast matters: both parsers type a bare 17-digit literal as DECIMAL, and
-# DuckDB then keeps the whole chi-square chain in DECIMAL(38) arithmetic
-# (which overflows); 17 significant digits round-trip float64 exactly, so
-# the cast restores the identical double on both engines.
-_BENFORD_CASE = (
-    "CASE digit "
-    + " ".join(
-        f"WHEN {d} THEN CAST({math.log10(1.0 + 1.0 / d)!r} AS DOUBLE)"
-        for d in range(1, 10)
-    )
-    + " END"
-)
-
 
 @register(
     "x_benford",
@@ -89,7 +73,7 @@ _BENFORD_CASE = (
     f AS (
       SELECT spine.digit, coalesce(g.n, 0) AS n
       FROM spine LEFT JOIN g ON g.digit = spine.digit),
-    t AS (SELECT f.*, sum(n) OVER () AS big_n, {_BENFORD_CASE} AS p FROM f),
+    t AS (SELECT f.*, sum(n) OVER () AS big_n, {BENFORD_P} AS p FROM f),
     c AS (
       SELECT digit, n, big_n,
              round(big_n * p, 6) AS expected_r,
@@ -115,61 +99,23 @@ def x_benford(spark: SparkSession, sf: str) -> DataFrame:
     x_drift_psi's two-sample comparison — this one needs NO reference
     sample, the law IS the reference.
 
-    Cross-engine: digit extraction goes floor → BIGINT → string → first
-    char (exact in both engines; float-to-string formatting is never
-    touched); expected probabilities are repr()'d shared literals;
-    counts are integers; the per-digit arithmetic is single-expression
-    IEEE-deterministic, and the 9-term total is ORDER-PINNED (r8
-    ADVICE): each already-rounded chi_r converts to exact BIGINT
-    micro-units, the sum is associative integer addition, and one IEEE
-    division + round(4) finishes — no order-unspecified double sum
-    anywhere in the key.
+    Cross-engine: ``operators/stats.py::benford`` extracts digits via
+    floor → BIGINT → string (never float formatting) against the
+    repr()'d ``BENFORD_P`` literals, one IEEE expression per digit; the
+    9-term total is ORDER-PINNED (r8 ADVICE): each rounded chi_r becomes
+    exact BIGINT micro-units, summed associatively, then one IEEE
+    division + round(4).
 
     Scale: one map-side-combinable 9-group count; everything after the
     groupBy is constant-size (≤ 9 rows).  The window-sum total is a
     1-partition exchange over 9 rows — control-plane.
     """
-    o = table(spark, sf, "orders")
-    g = (
-        o.filter(F.col("o_totalprice") >= 1.0)
-        .select(
-            F.substring(
-                F.floor("o_totalprice").cast("bigint").cast("string"), 1, 1
-            )
-            .cast("int")
-            .alias("digit")
-        )
-        .groupBy("digit")
-        .agg(F.count("*").alias("n"))
-    )
-    # Digits that never occur still contribute (0 − N·p)²/(N·p) = N·p to
-    # the statistic — often the DOMINANT term exactly when the data
-    # deviates most from the law — so the 9-digit spine is joined in,
-    # not inferred from the observed group keys (round-8 review finding).
-    spine = (
-        g.sparkSession.range(1, 10)
-        .select(F.col("id").cast("int").alias("digit"))
-    )
-    g = spine.join(g, "digit", "left").select(
-        "digit", F.coalesce(F.col("n"), F.lit(0)).alias("n")
-    )
-    w_all = Window.partitionBy()
-    t = g.select(
-        "digit",
-        "n",
-        F.sum("n").over(w_all).alias("big_n"),
-        F.expr(_BENFORD_CASE).alias("p"),
-    )
-    c = t.select(
+    o = table(spark, sf, "orders").filter(F.col("o_totalprice") >= 1.0)
+    c = benford(o, "o_totalprice").select(
         "digit",
         F.col("n").cast("bigint").alias("n"),
-        F.round(F.col("big_n") * F.col("p"), 6).alias("expected_r"),
-        F.round(
-            (F.col("n") - F.col("big_n") * F.col("p"))
-            * (F.col("n") - F.col("big_n") * F.col("p"))
-            / (F.col("big_n") * F.col("p")),
-            6,
-        ).alias("chi_r"),
+        F.round("expected", 6).alias("expected_r"),
+        F.round("chi", 6).alias("chi_r"),
     )
     # Order-pinned total (r8 ADVICE): the 9 chi_r terms are already exact
     # 6-dp doubles, so chi_r·10⁶ is within 1 ulp of an integer — round to
@@ -183,7 +129,7 @@ def x_benford(spark: SparkSession, sf: str) -> DataFrame:
         "chi_r",
         F.round(
             F.sum(F.round(F.col("chi_r") * 1000000.0).cast("bigint"))
-            .over(w_all)
+            .over(Window.partitionBy())
             .cast("double")
             / 1000000.0,
             4,
@@ -1166,66 +1112,15 @@ def x_sprt(spark: SparkSession, sf: str) -> DataFrame:
     boundaries.
 
     Scale: one map-side-combinable daily rollup; the running sums and
-    the decision ride the calendar-sized day series.  The maintenance-
-    cadence twin is ``sources/maintenance.py::sprt_monitor_report``
-    (same LLR, same sticky first-crossing precedence, replayed over the
-    append-only stage zone each pass) — a sequential test that only
-    runs in batch mode misses its whole point.
+    the decision ride the calendar-sized day series.
     """
     e = table(spark, sf, "events")
     d = e.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count("*").alias("n"),
         F.sum((F.col("event_type") == "purchase").cast("int")).alias("k"),
     )
-    w = (
-        Window.orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    c = d.select(
-        "day",
-        F.sum("n").over(w).cast("bigint").alias("cum_n"),
-        F.sum("k").over(w).cast("bigint").alias("cum_k"),
-    )
-    llr = F.col("cum_k") * F.expr(f"CAST({_SPRT_C1} AS DOUBLE)") + (
-        F.col("cum_n") - F.col("cum_k")
-    ) * F.expr(f"CAST({_SPRT_C2} AS DOUBLE)")
-    wrun = (
-        Window.orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    x = c.select(
-        "day",
-        "cum_n",
-        "cum_k",
-        llr.alias("llr"),
-        F.min(
-            F.when(
-                llr >= F.expr(f"CAST({_SPRT_UP} AS DOUBLE)"), F.col("day")
-            )
-        )
-        .over(wrun)
-        .alias("day_up"),
-        F.min(
-            F.when(
-                llr <= F.expr(f"CAST({_SPRT_LO} AS DOUBLE)"), F.col("day")
-            )
-        )
-        .over(wrun)
-        .alias("day_lo"),
-    )
-    return x.select(
-        "day",
-        "cum_n",
-        "cum_k",
-        F.round("llr", 6).alias("llr_r"),
-        F.when(
-            F.col("day_up").isNotNull()
-            & (F.col("day_lo").isNull() | (F.col("day_up") <= F.col("day_lo"))),
-            "reject_h0",
-        )
-        .when(F.col("day_lo").isNotNull(), "accept_h0")
-        .otherwise("continue")
-        .alias("decision"),
+    return sprt(d, _SPRT_P0, _SPRT_P1, _SPRT_ALPHA, _SPRT_BETA).select(
+        "day", "cum_n", "cum_k", F.round("llr", 6).alias("llr_r"), "decision"
     )
 
 
@@ -1348,7 +1243,7 @@ def x_geo_grid(spark: SparkSession, sf: str) -> DataFrame:
 
 _KS_TYPE_A = "click"
 _KS_TYPE_B = "view"
-_KS_CALPHA = repr(1.3581015157406195)  # c(0.05) = sqrt(-ln(0.025)/2)
+_KS_C_ALPHA = 1.3581015157406195  # c(0.05) = sqrt(-ln(0.025)/2)
 
 
 @register(
@@ -1384,13 +1279,13 @@ _KS_CALPHA = repr(1.3581015157406195)  # c(0.05) = sqrt(-ln(0.025)/2)
            round(CAST(any_value(d_max) AS DOUBLE)
                  / (any_value(n1) * CAST(any_value(n2) AS DOUBLE)), 6)
              AS ks_d_r,
-           round(CAST({_KS_CALPHA} AS DOUBLE)
+           round(CAST({_KS_C_ALPHA!r} AS DOUBLE)
                  * sqrt((any_value(n1) + CAST(any_value(n2) AS DOUBLE))
                         / (any_value(n1) * CAST(any_value(n2) AS DOUBLE))), 6)
              AS crit_r,
            CAST(CAST(any_value(d_max) AS DOUBLE)
                   / (any_value(n1) * CAST(any_value(n2) AS DOUBLE))
-                > CAST({_KS_CALPHA} AS DOUBLE)
+                > CAST({_KS_C_ALPHA!r} AS DOUBLE)
                   * sqrt((any_value(n1) + CAST(any_value(n2) AS DOUBLE))
                          / (any_value(n1) * CAST(any_value(n2) AS DOUBLE)))
                 AS INT) AS reject,
@@ -1408,19 +1303,11 @@ def x_ks_test(spark: SparkSession, sf: str) -> DataFrame:
     10-bucket PSI — KS sees a shape difference PSI's coarse bins can
     wash out, and its statistic is distribution-free.
 
-    Cross-engine: the supremum is found in EXACT INTEGER arithmetic —
-    at each pooled value, |cum₁·n₂ − cum₂·n₁| is a BIGINT, so the argmax
-    and the tie-break are integer comparisons with zero float exposure;
-    only the final normalization D = d_max/(n₁n₂) and the critical
-    value (repr-exact c(α), IEEE-correctly-rounded sqrt) are doubles,
-    and the reject flag compares those two bit-identical doubles.
-
-    Scale: one conditional-count rollup keyed by metric value (map-side
-    combinable), one running sum over the sorted DISTINCT-value table
-    (support-sized, not corpus-sized), one integer max.  The BIGINT
-    cross-product bound: d_num ≤ n₁·n₂ overflows past n ≈ 3e9 per
-    side — at that scale normalize per-row in DECIMAL(38,0) or subsample
-    (the KS statistic stabilizes long before 10⁹ points).
+    Cross-engine and scale: ``operators/stats.py::ks_test`` finds the
+    supremum in EXACT INTEGER arithmetic over the distinct-value
+    support table; only D = d_max/(n₁n₂) and the critical value
+    (repr-exact c(α), IEEE-correctly-rounded sqrt) are doubles, and the
+    reject flag compares those two bit-identical doubles.
     """
     e = (
         table(spark, sf, "events")
@@ -1430,58 +1317,17 @@ def x_ks_test(spark: SparkSession, sf: str) -> DataFrame:
         )
         .select(
             "value",
-            (F.col("event_type") == _KS_TYPE_A).cast("int").alias("i1"),
-            (F.col("event_type") == _KS_TYPE_B).cast("int").alias("i2"),
+            (F.col("event_type") == _KS_TYPE_A).cast("int").alias("c1"),
+            (F.col("event_type") == _KS_TYPE_B).cast("int").alias("c2"),
         )
     )
-    g = e.groupBy("value").agg(
-        F.sum("i1").cast("bigint").alias("c1"),
-        F.sum("i2").cast("bigint").alias("c2"),
-    )
-    wcum = (
-        Window.orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy()
-    c = g.select(
-        "value",
-        F.sum("c1").over(wcum).cast("bigint").alias("cum1"),
-        F.sum("c2").over(wcum).cast("bigint").alias("cum2"),
-        F.sum("c1").over(w_all).cast("bigint").alias("n1"),
-        F.sum("c2").over(w_all).cast("bigint").alias("n2"),
-    )
-    d = c.select(
-        "value",
+    return ks_test(e, "value", _KS_C_ALPHA).select(
         "n1",
         "n2",
-        F.abs(F.col("cum1") * F.col("n2") - F.col("cum2") * F.col("n1")).alias(
-            "d_num"
-        ),
-    ).withColumn("d_max", F.max("d_num").over(w_all))
-    ks = F.col("d_max").cast("double") / (
-        F.col("n1") * F.col("n2").cast("double")
-    )
-    crit = F.expr(f"CAST({_KS_CALPHA} AS DOUBLE)") * F.sqrt(
-        (F.col("n1") + F.col("n2").cast("double"))
-        / (F.col("n1") * F.col("n2").cast("double"))
-    )
-    return (
-        d.filter(F.col("d_num") == F.col("d_max"))
-        .groupBy()
-        .agg(
-            F.any_value("n1").alias("n1"),
-            F.any_value("n2").alias("n2"),
-            F.any_value("d_max").alias("d_max"),
-            F.min("value").alias("at_value"),
-        )
-        .select(
-            "n1",
-            "n2",
-            F.round(ks, 6).alias("ks_d_r"),
-            F.round(crit, 6).alias("crit_r"),
-            (ks > crit).cast("int").alias("reject"),
-            "at_value",
-        )
+        F.round("ks_d", 6).alias("ks_d_r"),
+        F.round("crit", 6).alias("crit_r"),
+        F.col("reject").cast("int").alias("reject"),
+        "at_value",
     )
 
 

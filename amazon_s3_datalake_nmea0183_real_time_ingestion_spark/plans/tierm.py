@@ -47,6 +47,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.stats import (
+    AUC,
+    DID,
+    DID_SE,
+    DID_Z,
+    KM_FACTOR,
+    MW_Z,
+    NA_HAZARD_U,
+    diff_in_diff,
+    kaplan_meier,
+    rank_sum,
+)
 from .registry import register, table
 
 # two-sided normal critical value at alpha = 0.05, shared literal
@@ -55,22 +67,6 @@ _Z_CRIT = 1.959964
 # ---------------------------------------------------------------------------
 # Mann–Whitney U (Wilcoxon rank-sum) with exact half-unit integer ranks
 # ---------------------------------------------------------------------------
-
-# z statistic as ONE shared-shape expression over exact BIGINT inputs:
-# u2a = 2·U_a, tsum = Σ(t³−t) over tie groups, nn = n_a + n_b.  Every
-# operand is CAST to DOUBLE explicitly so both engines run the identical
-# IEEE sequence (sqrt is correctly rounded per IEEE 754 — no libm drift).
-_MW_Z = (
-    "(CAST(u2a AS DOUBLE) / 2.0 - CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)"
-    " / 2.0) / nullif(sqrt(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / 12.0 *"
-    " ((CAST(nn AS DOUBLE) + 1.0) - CAST(tsum AS DOUBLE) /"
-    " (CAST(nn AS DOUBLE) * (CAST(nn AS DOUBLE) - 1.0)))), 0.0)"
-)
-# nullif keeps the degenerate every-value-tied sample (variance 0) a NULL
-# z / NULL verdict on BOTH engines — Spark ANSI otherwise THROWS
-# DIVIDE_BY_ZERO where DuckDB would emit NaN (found by the pair-counting
-# property test at va = vb = [0, 0]).
-
 
 @register(
     "x_mann_whitney",
@@ -106,8 +102,8 @@ _MW_Z = (
     SELECT type_a, type_b,
            CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
            CAST(u2a AS DOUBLE) / 2.0 AS u_a,
-           round({_MW_Z}, 4) AS z_r,
-           CAST(abs(round({_MW_Z}, 4)) > {_Z_CRIT!r} AS INT) AS significant
+           round({MW_Z}, 4) AS z_r,
+           CAST(abs(round({MW_Z}, 4)) > {_Z_CRIT!r} AS INT) AS significant
     FROM x
     """,
 )
@@ -121,21 +117,12 @@ def x_mann_whitney(spark: SparkSession, sf: str) -> DataFrame:
     distribution-free row of the experiment family: x_ttest_welch's t
     collapses under heavy tails/outliers where rank dominance doesn't.
 
-    Cross-engine: ranks never materialize as floats — tie-averaged
-    ranks are half-integers, so everything rides 2×-SCALED exact
-    integer "half-unit" ranks (rank2 of a tie group at cumulative
-    offset c with t members = 2c + t + 1; R_a2 = Σ a_v·rank2_v; U_a =
-    (R_a2 − n_a(n_a+1))/2), accumulated in DECIMAL(38,0) on the Spark
-    side / HUGEINT on DuckDB's (both exact; BIGINT would ANSI-overflow
-    at ~2e12 pooled rows — the same magnitude argument as the tie
-    cube), tie correction Σ(t³−t)
-    accumulates in DOUBLE with the identical CAST-first shape on both
-    engines (exact while every partial sum ≤ 2^53 — a BIGINT cube would
-    instead ANSI-throw at a 2^21-row tie group), and z is ONE
-    shared-shape expression over those values ending in an IEEE-exact
-    sqrt — both engines produce the bit-identical double, rounded at
-    4 dp, and the significance verdict reads the rounded value
-    (registry.py float rules).
+    Cross-engine: the ranks are ``operators/stats.py::rank_sum``'s
+    exact 2×-scaled "half-unit" integers (DECIMAL(38,0) on Spark,
+    HUGEINT on DuckDB), and z is the shared ``MW_Z`` fragment ending in
+    an IEEE-exact sqrt, so both engines produce the bit-identical
+    double; the verdict reads the 4-dp-rounded z (registry.py float
+    rules).
 
     Scale: the corpus work is one map-side-combinable (pair, value)
     count — each event row fans out to the |types|−1 pairs its type
@@ -169,52 +156,16 @@ def x_mann_whitney(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("event_type") == F.col("type_a"))
         | (F.col("event_type") == F.col("type_b")),
     )
-    g = tagged.groupBy("type_a", "type_b", "value").agg(
-        F.count("*").alias("t"),
-        F.sum((F.col("event_type") == F.col("type_a")).cast("int")).alias("a"),
-    )
-    w = (
-        Window.partitionBy("type_a", "type_b")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    r = g.withColumn("c", F.coalesce(F.sum("t").over(w), F.lit(0)))
-    # rank-sum accumulators ride DECIMAL(38,0) on the Spark side: one
-    # product a·(2c+t+1) ≈ 2·t·N already nears 2^63 at N ~ 2e12 pooled
-    # rows (the same 100 TB magnitudes the tsum DOUBLE fix was justified
-    # with), and BIGINT would ANSI-throw mid-aggregate.  DuckDB needs no
-    # change — its BIGINT sum() is already HUGEINT (128-bit exact) — so
-    # both engines still produce the identical exact integer, cast to
-    # DOUBLE only inside the final shared-shape expressions.
-    s = r.groupBy("type_a", "type_b").agg(
-        F.sum(
-            F.col("a").cast("decimal(18,0)")
-            * (2 * F.col("c") + F.col("t") + 1).cast("decimal(19,0)")
-        ).alias("r_a2"),
-        F.sum("a").alias("n_a"),
-        F.sum(F.col("t") - F.col("a")).alias("n_b"),
-        # tie correction accumulates in DOUBLE (shared shape with the
-        # oracle): a BIGINT t³ overflows ANSI-fatally at t ≥ 2^21 rows in
-        # ONE tie group, a plausible width at 100 TB (r9 ADVICE).  tsum
-        # only feeds the float variance term, each t³−t ≤ 2^53 is an
-        # exact double up to t ≈ 2.1e5, and partial-sum order can drift
-        # the total only past 2^53 — inside a 4-dp-rounded z statistic.
-        F.sum(
-            F.col("t").cast("double") * F.col("t") * F.col("t") - F.col("t")
-        ).alias("tsum"),
-    )
-    x = s.select(
-        "type_a",
-        "type_b",
-        "n_a",
-        "n_b",
-        (F.col("n_a") + F.col("n_b")).alias("nn"),
-        (
-            F.col("r_a2")
-            - F.col("n_a").cast("decimal(19,0)")
-            * (F.col("n_a") + 1).cast("decimal(19,0)")
-        ).alias("u2a"),
-        "tsum",
+    x = rank_sum(
+        tagged.select(
+            "type_a",
+            "type_b",
+            "value",
+            (F.col("event_type") == F.col("type_a")).cast("int").alias("is_a"),
+        ),
+        ["type_a", "type_b"],
+        "value",
+        "is_a",
     )
     return x.select(
         "type_a",
@@ -222,8 +173,8 @@ def x_mann_whitney(spark: SparkSession, sf: str) -> DataFrame:
         F.col("n_a").cast("bigint").alias("n_a"),
         F.col("n_b").cast("bigint").alias("n_b"),
         F.expr("CAST(u2a AS DOUBLE) / 2.0").alias("u_a"),
-        F.round(F.expr(_MW_Z), 4).alias("z_r"),
-        (F.abs(F.round(F.expr(_MW_Z), 4)) > F.lit(_Z_CRIT))
+        F.round(F.expr(MW_Z), 4).alias("z_r"),
+        (F.abs(F.round(F.expr(MW_Z), 4)) > F.lit(_Z_CRIT))
         .cast("int")
         .alias("significant"),
     )
@@ -232,18 +183,6 @@ def x_mann_whitney(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # 2×2 difference-in-differences
 # ---------------------------------------------------------------------------
-
-# DiD point estimate, pooled SE and z over the four cell moments —
-# shared-shape expressions over the engine-aggregated (n, mean, var)
-# columns (the x_ttest_welch convention: moments are the only
-# engine-computed aggregates; everything derived is rounded before
-# output and the verdict reads the rounded z).
-_DID = "((m11 - m10) - (m01 - m00))"
-_DID_SE = "sqrt(v11 / n11 + v10 / n10 + v01 / n01 + v00 / n00)"
-# zero-variance cells (se = 0) stay NULL-z on both engines instead of a
-# Spark-ANSI DIVIDE_BY_ZERO (the x_mann_whitney property-test lesson)
-_DID_Z = f"{_DID} / nullif({_DID_SE}, 0.0)"
-
 
 @register(
     "x_diff_in_diff",
@@ -283,10 +222,10 @@ _DID_Z = f"{_DID} / nullif({_DID_SE}, 0.0)"
            round(m10, 4) AS mean_treat_pre_r,
            round(m01, 4) AS mean_ctrl_post_r,
            round(m00, 4) AS mean_ctrl_pre_r,
-           round({_DID}, 4) AS did_r,
-           round({_DID_SE}, 4) AS se_r,
-           round({_DID_Z}, 4) AS z_r,
-           CAST(abs(round({_DID_Z}, 4)) > {_Z_CRIT!r} AS INT)
+           round({DID}, 4) AS did_r,
+           round({DID_SE}, 4) AS se_r,
+           round({DID_Z}, 4) AS z_r,
+           CAST(abs(round({DID_Z}, 4)) > {_Z_CRIT!r} AS INT)
              AS significant
     FROM wdf
     """,
@@ -311,11 +250,9 @@ def x_diff_in_diff(spark: SparkSession, sf: str) -> DataFrame:
     rounded at 4 dp before output, and the significance verdict reads
     the rounded z, so a ULP cannot flip it.
 
-    Scale: ONE map-side-combinable moments pass over the corpus
-    grouped by (treat, post) — four partial-merging cells, exactly the
-    x_ttest_welch economics — plus a 1-row min/max broadcast for the
-    split date.  The 100 TB DiD readout is this shape regardless of
-    corpus size; no per-cell rescans.
+    Scale: ONE map-side-combinable moments pass grouped by (treat,
+    post) — ``operators/stats.py::diff_in_diff``, four partial-merging
+    cells — plus a 1-row min/max broadcast for the split date.
     """
     e = (
         table(spark, sf, "events")
@@ -330,31 +267,12 @@ def x_diff_in_diff(spark: SparkSession, sf: str) -> DataFrame:
             ).cast("int"),
         ).alias("split_d")
     )
-    cell = (
-        e.crossJoin(sp)
-        .groupBy(
+    wdf = diff_in_diff(
+        e.crossJoin(sp).select(
             (F.col("user_id") % 2 == 1).cast("int").alias("treat"),
             (F.col("d") >= F.col("split_d")).cast("int").alias("post"),
+            F.col("value").alias("val"),
         )
-        .agg(
-            F.count("*").alias("n"),
-            F.avg("value").alias("m"),
-            F.var_samp("value").alias("v"),
-        )
-    )
-
-    def _cell(col: str, tr: int, po: int, out: str):
-        return F.max(
-            F.when((F.col("treat") == tr) & (F.col("post") == po), F.col(col))
-        ).alias(out)
-
-    wdf = cell.agg(
-        _cell("n", 1, 1, "n11"), _cell("n", 1, 0, "n10"),
-        _cell("n", 0, 1, "n01"), _cell("n", 0, 0, "n00"),
-        _cell("m", 1, 1, "m11"), _cell("m", 1, 0, "m10"),
-        _cell("m", 0, 1, "m01"), _cell("m", 0, 0, "m00"),
-        _cell("v", 1, 1, "v11"), _cell("v", 1, 0, "v10"),
-        _cell("v", 0, 1, "v01"), _cell("v", 0, 0, "v00"),
     )
     return wdf.select(
         F.col("n11").cast("bigint").alias("n_treat_post"),
@@ -365,10 +283,10 @@ def x_diff_in_diff(spark: SparkSession, sf: str) -> DataFrame:
         F.round("m10", 4).alias("mean_treat_pre_r"),
         F.round("m01", 4).alias("mean_ctrl_post_r"),
         F.round("m00", 4).alias("mean_ctrl_pre_r"),
-        F.round(F.expr(_DID), 4).alias("did_r"),
-        F.round(F.expr(_DID_SE), 4).alias("se_r"),
-        F.round(F.expr(_DID_Z), 4).alias("z_r"),
-        (F.abs(F.round(F.expr(_DID_Z), 4)) > F.lit(_Z_CRIT))
+        F.round("did", 4).alias("did_r"),
+        F.round("se", 4).alias("se_r"),
+        F.round("z", 4).alias("z_r"),
+        (F.abs(F.round("z", 4)) > F.lit(_Z_CRIT))
         .cast("int")
         .alias("significant"),
     )
@@ -380,17 +298,6 @@ def x_diff_in_diff(spark: SparkSession, sf: str) -> DataFrame:
 
 _SURV_CHURN_DAYS = 365  # no order for a year after the last = churned
 _SURV_BUCKET_DAYS = 30  # lifetime bucketed to 30-day "months"
-
-# per-bucket survival factor and hazard term, shared-shape over the
-# exact BIGINT (n_risk, d) columns
-_SURV_FACTOR = (
-    "round(CAST(n_risk - d AS DOUBLE) / CAST(n_risk AS DOUBLE), 6)"
-)
-_SURV_HAZ_U = (
-    "CAST(round(round(CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE), 6)"
-    " * 1000000.0) AS BIGINT)"
-)
-
 
 @register(
     "x_survival",
@@ -417,7 +324,7 @@ _SURV_HAZ_U = (
       FROM bucket),
     f AS (
       SELECT t, d, c, n_risk,
-             {_SURV_FACTOR} AS factor_r, {_SURV_HAZ_U} AS hz_u
+             {KM_FACTOR} AS factor_r, {NA_HAZARD_U} AS hz_u
       FROM r),
     k AS (
       SELECT t, d, c, n_risk,
@@ -453,16 +360,10 @@ def x_survival(spark: SparkSession, sf: str) -> DataFrame:
     now, LTV prices the cohort, retention grids count returns — THIS
     says how long customers LIVE, with censoring handled correctly.
 
-    Cross-engine: all counts are exact BIGINT (the at-risk series is a
-    suffix sum of integer bucket sizes); each survival factor is ONE
-    shared-shape division rounded at 6 dp; the KM product is an
-    ORDER-PINNED SEQUENTIAL FOLD — both engines sort the (t, factor)
-    structs, then run the identical round(acc·x, 6) recurrence
-    (Spark ``aggregate`` HOF / DuckDB ``list_reduce``), so no
-    association-order exposure exists anywhere (the x_benford / tierk
-    module contract, applied to a product instead of a sum); the
-    hazard accumulates in exact BIGINT MICRO-UNITS (the x_cohort_ltv
-    cents pattern) with one final division.
+    Cross-engine: ``operators/stats.py::kaplan_meier`` — exact BIGINT
+    counts, 6-dp factors from the shared ``KM_FACTOR`` fragment, the KM
+    product as an ORDER-PINNED sequential fold (Spark ``aggregate`` /
+    DuckDB ``list_reduce``), the hazard in exact BIGINT micro-units.
 
     Scale: the corpus-sized work is one map-side-combinable
     per-customer min/max rollup; the bucket table is CALENDAR-bounded
@@ -489,47 +390,13 @@ def x_survival(spark: SparkSession, sf: str) -> DataFrame:
         .cast("int")
         .alias("churned"),
     )
-    bucket = life.groupBy("t").agg(
-        F.sum("churned").alias("d"),
-        F.sum(F.lit(1) - F.col("churned")).alias("c"),
-        F.count("*").alias("m"),
-    )
-    wdesc = Window.orderBy(F.col("t").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    r = bucket.withColumn("n_risk", F.sum("m").over(wdesc))
-    f = r.select(
-        "t", "d", "c", "n_risk",
-        F.expr(_SURV_FACTOR).alias("factor_r"),
-        F.expr(_SURV_HAZ_U).alias("hz_u"),
-    )
-    wasc = Window.orderBy("t").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    k = f.select(
-        "t", "d", "c", "n_risk",
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("t").alias("t"), F.col("factor_r").alias("f"))
-                ).over(wasc)
-            ),
-            lambda s: s["f"],
-        ).alias("fl"),
-        F.sum("hz_u").over(wasc).alias("cum_u"),
-    )
-    return k.select(
+    return kaplan_meier(life.withColumnRenamed("churned", "event")).select(
         F.col("t").cast("int").alias("t_month"),
         F.col("n_risk").cast("bigint").alias("n_risk"),
         F.col("d").cast("bigint").alias("d_churn"),
         F.col("c").cast("bigint").alias("c_censored"),
-        F.round(
-            F.aggregate(
-                "fl", F.lit(1.0), lambda acc, x: F.round(acc * x, 6)
-            ),
-            6,
-        ).alias("km_r"),
-        F.round(F.col("cum_u").cast("double") / 1000000.0, 6).alias(
+        F.round("km", 6).alias("km_r"),
+        F.round(F.col("na_u").cast("double") / 1000000.0, 6).alias(
             "na_cumhaz_r"
         ),
     )
@@ -732,10 +599,9 @@ def x_auc(spark: SparkSession, sf: str) -> DataFrame:
     Cross-engine: the score is the stopword RATIO (the x_calibration
     scorer without its sigmoid — AUC is invariant under the monotone
     transform, and dropping exp() removes the only libm call), rounded
-    at 6 dp so both engines group identical doubles; ranks ride
-    x_mann_whitney's 2×-scaled exact BIGINT half-unit ranks; AUC is
-    ONE division of exact integers.  No float comparison anywhere
-    before the final rounding.
+    at 6 dp so both engines group identical doubles; ranks are
+    ``operators/stats.py::rank_sum``'s exact half-unit integers (shared
+    with x_mann_whitney) and AUC is ONE division of exact integers.
 
     Scale: one map-side score projection, one (score, label) count —
     the rank window runs over the DISTINCT-SCORE support table
@@ -758,30 +624,15 @@ def x_auc(spark: SparkSession, sf: str) -> DataFrame:
             6,
         ).alias("score_r"),
     )
-    g = sc.groupBy("score_r").agg(
-        F.count("*").alias("t"), F.sum("label").alias("pos")
-    )
-    w = Window.orderBy("score_r").rowsBetween(Window.unboundedPreceding, -1)
-    r = g.withColumn("c", F.coalesce(F.sum("t").over(w), F.lit(0)))
-    s = r.agg(
-        F.sum(F.col("pos") * (2 * F.col("c") + F.col("t") + 1)).alias("r_pos2"),
-        F.sum("pos").alias("n_pos"),
-        F.sum(F.col("t") - F.col("pos")).alias("n_neg"),
-    )
+    s = rank_sum(sc, [], "score_r", "label")
     return s.select(
-        F.col("n_pos").cast("bigint").alias("n_pos"),
-        F.col("n_neg").cast("bigint").alias("n_neg"),
+        F.col("n_a").cast("bigint").alias("n_pos"),
+        F.col("n_b").cast("bigint").alias("n_neg"),
+        F.round(F.expr(AUC), 6).alias("auc_r"),
         F.round(
             F.expr(
-                "CAST(r_pos2 - n_pos * (n_pos + 1) AS DOUBLE)"
-                " / nullif(2.0 * CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE), 0.0)"
-            ),
-            6,
-        ).alias("auc_r"),
-        F.round(
-            F.expr(
-                "CAST(r_pos2 - n_pos * (n_pos + 1) AS DOUBLE)"
-                " / nullif(CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE), 0.0) - 1.0"
+                "CAST(u2a AS DOUBLE)"
+                " / nullif(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE), 0.0) - 1.0"
             ),
             6,
         ).alias("gini_r"),

@@ -7,6 +7,13 @@ stays authoritative (SURVEY.md §1.3). ``schema_drift_report`` reproduces
 exactly that contract. ``compact_partition`` is the at-rest analog of the
 Firehose 64 MB buffer intent: rewrite a partition's many small files into
 few large ones (BASELINE.md "output file sizing").
+
+The ``*_monitor_report`` functions run on the crawler's schedule over
+the stage zone.  Each statistic they report has one implementation, in
+``operators/stats.py``, shared with the registered key it mirrors: a
+monitor builds its recent-vs-history split (``_epoch_day`` days,
+``_recent_window_flag``), calls the core and collects its row(s) into
+a plain dict.
 """
 
 from __future__ import annotations
@@ -15,6 +22,21 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..operators.stats import (
+    AUC,
+    MW_Z,
+    benford,
+    cusum,
+    diff_in_diff,
+    gini,
+    kaplan_meier,
+    ks_test,
+    mase,
+    rank_sum,
+    smoothed_kl,
+    smoothed_psi,
+    sprt,
+)
 from ..storage import stored
 
 
@@ -183,29 +205,19 @@ def drift_psi_report(
     columns: dict[str, str] | None = None,
     threshold: float = 0.2,
 ) -> dict:
-    """Population-stability-index drift monitor over the stage zone — the
-    maintenance-cadence counterpart of the batch ``x_drift_psi`` key
-    (plans/tiere.py), with a PERSISTED reference-period profile instead of
-    a same-table midpoint split.
+    """Population-stability-index drift of the stage zone against a
+    PERSISTED reference profile, per monitored column (bucket
+    expressions in ``columns``, default ``DRIFT_DEFAULT_COLUMNS``).
 
     First call (no profile at ``profile_path``): the current bucket
-    profile is WRITTEN as the reference period and the report says
-    ``bootstrapped``.  Every later call compares the current stage
-    distribution against that frozen profile per monitored column, with
-    the same smoothed PSI the batch key uses (Siddiqi '06; +0.5/bucket
-    Laplace smoothing so empty buckets don't produce ±inf) and the same
-    0.2 industry drift threshold.  Re-bootstrap by deleting the profile
-    (e.g. after an intentional fleet change).
+    profile is written as the reference and the report says
+    ``bootstrapped``; delete the profile to re-bootstrap.  Every later
+    call scores the current profile against it, smoothing over the
+    observed bucket count; ``drifted`` reads psi > ``threshold``.
 
-    Scale: the profile is bucket-count sized (columns × buckets rows —
-    KBs at any corpus size), so both the persisted artifact and the
-    full-outer bucket join are driver-trivial; the only data-sized work
-    is the one profile scan, which at 100 TB should read only the recent
-    event-date partitions (partition-pruned by the caller's cadence).
-
-    Returns ``{"bootstrapped": bool, "columns": {col: {"psi": float|None,
-    "drifted": bool, "n_ref": int, "n_cur": int}}}`` (plain dict,
-    foreachBatch-safe).
+    Returns ``{"bootstrapped": bool, "columns": {col: {"psi": float,
+    "drifted": bool, "n_ref": int, "n_cur": int}}}``.
+    Core: ``operators/stats.py::smoothed_psi`` (also ``x_drift_psi``).
     """
     import os as _os
 
@@ -230,19 +242,10 @@ def drift_psi_report(
         F.sum("n_cur").alias("t_cur"),
         F.count("*").alias("k"),
     )
-    p = (F.col("n_ref") + 0.5) / (F.col("t_ref") + 0.5 * F.col("k"))
-    q = (F.col("n_cur") + 0.5) / (F.col("t_cur") + 0.5 * F.col("k"))
-    scored = (
+    scored = smoothed_psi(
         # one row per monitored column; estimated from the stage scan
-        joined.join(F.broadcast(tot), "column")
-        .groupBy("column")
-        .agg(
-            F.sum((p - q) * F.log(p / q)).alias("psi_raw"),
-            F.max("t_ref").alias("t_ref"),
-            F.max("t_cur").alias("t_cur"),
-        )
-        .collect()  # control-plane: one row per monitored column
-    )
+        joined.join(F.broadcast(tot), "column"), "column", F.col("k")
+    ).collect()  # control-plane: one row per monitored column
     return {
         "bootstrapped": False,
         "columns": {
@@ -266,6 +269,24 @@ def _epoch_day(ts_col: str) -> Column:
     return F.floor(F.col(ts_col).cast("bigint") / F.lit(86400)).cast("bigint")
 
 
+def _recent_window_flag(v: DataFrame, flag: str, recent_days: int) -> DataFrame:
+    """Tag each row of ``v`` (which carries a ``day`` epoch-day column)
+    with 1 = in the last ``recent_days`` days of the observed range,
+    0 = baseline: one 1-row max-day aggregate broadcast-crossJoined in.
+    ONE definition so every recent-vs-history monitor shares identical
+    window boundaries — the ``_epoch_day`` precedent: a future
+    cutoff-semantics fix must have exactly one place to land."""
+    mx = v.agg(F.max("day").alias("max_day"))
+    return (
+        v.crossJoin(mx)
+        .withColumn(
+            flag,
+            (F.col("day") > F.col("max_day") - F.lit(recent_days)).cast("int"),
+        )
+        .drop("max_day")
+    )
+
+
 def timeseries_monitor_report(
     spark: SparkSession,
     stage_path: str,
@@ -276,108 +297,45 @@ def timeseries_monitor_report(
     cusum_alarm_sigma: float = 3.0,
     season: int = 7,
 ) -> dict:
-    """Per-device time-series health monitors at the maintenance cadence —
-    the streaming-maintenance twins of the batch ``x_cusum_changepoint``
-    and ``x_forecast_mase`` keys (plans/tierk.py), the way
-    ``drift_psi_report`` twins ``x_drift_psi``: a monitor that only runs
-    in batch mode isn't a monitor.
-
-    ONE stage scan feeds ONE daily rollup per device (map-side
-    combinable: avg for the CUSUM level series, sum for the MASE totals
-    series), then both statistics ride the tiny per-device day series.
-    Days are UTC epoch-day integers (floor(epoch/86400)) so boundaries —
-    and therefore alarms — are identical under every deployment session
-    timezone (r8 ADVICE):
-
-    - **CUSUM** (Page '54, identical formula to the batch key including
-      the S'_0 = 0 floor): C_t = S'_t − min(0, S'_1..S'_t) with drift
-      allowance k = ``cusum_k_sigma``·σ, alarm at C_t >
-      ``cusum_alarm_sigma``·σ — sustained upward mean shift per device.
-    - **MASE** (Hyndman–Koehler IJF'06): seasonal-naive (lag-``season``)
-      forecast of daily totals scored by MAE and scaled by the one-step
-      naive MAE — "is this device's daily volume still forecastable".
+    """Per-device CUSUM (a sustained upward shift of the daily mean of
+    ``value_col``) and seasonal-naive MASE (is the daily total still
+    forecastable) over UTC epoch-day series.
 
     Returns ``{key: {"n_days": int, "cusum_alarms": int,
-    "alarm_latest": bool, "cusum_max": float, "mase": float|None,
-    "mase_n_scored": int}}`` (plain dict, foreachBatch-safe; one row per
-    device is control-plane at any corpus size).  ``mase`` is None until
-    a device has > ``season`` days of history or when both MAEs are 0.
-
-    Scale: the corpus-sized work is the single daily rollup; every
-    window after it runs over (devices × days) rows.  At 100 TB the
-    caller's cadence should partition-prune the stage scan to the
-    monitoring lookback window.
+    "alarm_latest": bool, "cusum_max": float | None, "mase": float |
+    None, "mase_n_scored": int}}``.  ``mase`` is None until a device
+    has more than ``season`` days, or when the naive MAE is 0.  A
+    NULL-key row belongs to no device.
+    Cores: ``operators/stats.py::cusum`` and ``::mase`` (also
+    ``x_cusum_changepoint`` and ``x_forecast_mase``).
     """
-    from pyspark.sql.window import Window as W
-
-    df = spark.read.parquet(stage_path).filter(F.col(value_col).isNotNull())
-    # Day buckets via the shared _epoch_day (session-TZ independent)
+    df = spark.read.parquet(stage_path).filter(
+        F.col(value_col).isNotNull() & F.col(key_col).isNotNull()
+    )
     d = df.groupBy(
-        F.col(key_col).alias("k"),
-        _epoch_day(ts_col).alias("day"),
-    ).agg(
-        F.avg(value_col).alias("x"),
-        F.sum(value_col).alias("tot"),
+        F.col(key_col).alias("k"), _epoch_day(ts_col).alias("day")
+    ).agg(F.avg(value_col).alias("x"), F.sum(value_col).alias("tot"))
+    c = cusum(d, "k", cusum_k_sigma, cusum_alarm_sigma).groupBy("k").agg(
+        F.count("*").alias("n_days"),
+        F.sum(F.coalesce(F.col("alarm"), F.lit(0))).alias("cusum_alarms"),
+        F.max_by("alarm", "day").alias("alarm_latest"),
+        F.max("cusum").alias("cusum_max"),
     )
-    wk = W.partitionBy("k")
-    wo = W.partitionBy("k").orderBy("day")
-    wrun = wo.rowsBetween(W.unboundedPreceding, W.currentRow)
-    m = d.select(
-        "k", "day", "x", "tot",
-        F.avg("x").over(wk).alias("mu0"),
-        F.stddev_samp("x").over(wk).alias("sd"),
-        F.lag("tot", season).over(wo).alias("f_seasonal"),
-        F.lag("tot", 1).over(wo).alias("f_naive"),
-    ).withColumn(
-        "sp",
-        F.sum(
-            F.col("x") - F.col("mu0") - F.lit(cusum_k_sigma) * F.col("sd")
-        ).over(wrun),
-    ).withColumn(
-        "cusum", F.col("sp") - F.least(F.lit(0.0), F.min("sp").over(wrun))
-    ).withColumn(
-        "alarm",
-        (
-            F.col("cusum") > F.lit(cusum_alarm_sigma) * F.col("sd")
-        ).cast("int"),
-    )
-    last = W.partitionBy("k").orderBy(F.col("day").desc())
-    rows = (
-        m.withColumn("rn", F.row_number().over(last))
-        .groupBy("k")
-        .agg(
-            F.count("*").alias("n_days"),
-            F.sum(F.coalesce(F.col("alarm"), F.lit(0))).alias("cusum_alarms"),
-            F.max(F.when(F.col("rn") == 1, F.col("alarm"))).alias("alarm_latest"),
-            F.max("cusum").alias("cusum_max"),
-            F.avg(F.abs(F.col("tot") - F.col("f_seasonal"))).alias("mae"),
-            F.avg(F.abs(F.col("tot") - F.col("f_naive"))).alias("naive_mae"),
-            F.count(F.col("f_seasonal")).alias("mase_n_scored"),
-        )
-        .collect()  # control-plane: one row per monitored device
-    )
-    out: dict = {}
-    for r in rows:
-        mase = None
-        if (
-            r["mase_n_scored"] > 0
-            and r["naive_mae"] is not None
-            and r["naive_mae"] > 0.0
-        ):
-            mase = round(float(r["mae"]) / float(r["naive_mae"]), 6)
-        out[r["k"]] = {
+    rows = c.join(mase(d, "k", "tot", season), "k").collect()  # one per device
+    return {
+        r["k"]: {
             "n_days": int(r["n_days"]),
             "cusum_alarms": int(r["cusum_alarms"]),
             "alarm_latest": bool(r["alarm_latest"]),
             "cusum_max": (
-                round(float(r["cusum_max"]), 6)
-                if r["cusum_max"] is not None
-                else None
+                None if r["cusum_max"] is None
+                else round(float(r["cusum_max"]), 6)
             ),
-            "mase": mase,
-            "mase_n_scored": int(r["mase_n_scored"]),
+            "mase": None if r["mase"] is None else round(float(r["mase"]), 6),
+            "mase_n_scored": int(r["n_scored"]),
         }
-    return out
+        for r in rows
+    }
 
 
 def sprt_monitor_report(
@@ -390,113 +348,47 @@ def sprt_monitor_report(
     alpha: float = 0.05,
     beta: float = 0.05,
 ) -> dict:
-    """Wald SPRT sequential rate monitor at the maintenance cadence — the
-    streaming-maintenance twin of the batch ``x_sprt`` key
-    (plans/tierl.py), the way ``timeseries_monitor_report`` twins
-    x_cusum_changepoint/x_forecast_mase: the sequential test's native
-    habitat IS the stream, where someone peeks at every batch.
-
-    Tests H1: P(``success_expr``) = ``p1`` against H0: = ``p0`` on the
-    daily fleet rollup (default: the low-battery-reading rate), with the
-    Wald boundaries log((1−β)/α) / log(β/(1−α)).  The decision is STICKY
-    exactly as in the batch key: the test STOPS at its first boundary
-    crossing — recomputing over the append-only stage zone replays the
-    full daily sequence, so the first-crossing day (and therefore the
-    verdict) can never un-happen even if later data drags the LLR back
-    across the boundary (precedence on the running min of each
-    boundary's first crossing day; reject wins a same-day tie, matching
-    x_sprt).
-
-    Days are UTC epoch-days (floor(epoch/86400)) like the CUSUM/MASE
-    monitor — no session-timezone dependence.
+    """Wald SPRT of H1: P(``success_expr``) = ``p1`` against H0: = ``p0``
+    over the daily fleet rollup, replayed over the append-only stage
+    zone each pass, so the sticky first-crossing verdict can never
+    un-happen.  A row whose predicate is NULL is a trial, not a success.
 
     Returns ``{"n_days": int, "cum_n": int, "cum_k": int, "llr": float,
     "decision": "continue"|"reject_h0"|"accept_h0",
-    "decided_day": int | None}`` (plain dict, foreachBatch-safe).
-
-    Scale: the corpus-sized work is ONE map-side-combinable daily count;
-    the cumulative LLR and crossing scan ride the calendar-sized day
-    series, and only the final row is collected.  At 100 TB the caller's
-    cadence should partition-prune the scan to the monitoring window —
-    or fold the daily (n, k) pairs into a persisted rollup and replay
-    the LLR from that, since the statistic depends on the data only
-    through the per-day counts.
+    "decided_day": int | None}``.
+    Core: ``operators/stats.py::sprt`` (also ``x_sprt``).
     """
-    import math as _math
-
-    from pyspark.sql.window import Window as W
-
-    c1 = _math.log(p1 / p0)
-    c2 = _math.log((1.0 - p1) / (1.0 - p0))
-    up = _math.log((1.0 - beta) / alpha)
-    lo = _math.log(beta / (1.0 - alpha))
     df = spark.read.parquet(stage_path)
     d = df.groupBy(_epoch_day(ts_col).alias("day")).agg(
         F.count("*").alias("n"),
-        # a row whose predicate is NULL (e.g. NULL voltage) is a trial
-        # that was NOT a success — coalesce per row so an all-NULL day
-        # yields k = 0, not a NULL that poisons the cumulative LLR
+        # coalesce per row so an all-NULL day yields k = 0, not a NULL
+        # that poisons the cumulative LLR
         F.sum(
             F.coalesce(F.expr(success_expr).cast("int"), F.lit(0))
         ).alias("k"),
     )
-    w = W.orderBy("day").rowsBetween(W.unboundedPreceding, W.currentRow)
-    c = d.select(
-        "day",
-        F.sum("n").over(w).cast("bigint").alias("cum_n"),
-        F.sum("k").over(w).cast("bigint").alias("cum_k"),
+    rows = (
+        sprt(d, p0, p1, alpha, beta)
+        .orderBy(F.col("day").desc())
+        .limit(1)
+        .collect()
     )
-    llr = F.col("cum_k") * F.lit(c1) + (F.col("cum_n") - F.col("cum_k")) * F.lit(c2)
-    x = c.select(
-        "day",
-        "cum_n",
-        "cum_k",
-        llr.alias("llr"),
-        F.min(F.when(llr >= F.lit(up), F.col("day"))).over(w).alias("day_up"),
-        F.min(F.when(llr <= F.lit(lo), F.col("day"))).over(w).alias("day_lo"),
-        F.count("*").over(w).alias("n_days"),
-    )
-    rows = x.orderBy(F.col("day").desc()).limit(1).collect()
     if not rows:
         return {
             "n_days": 0, "cum_n": 0, "cum_k": 0, "llr": 0.0,
             "decision": "continue", "decided_day": None,
         }
     r = rows[0]
-    day_up, day_lo = r["day_up"], r["day_lo"]
-    if day_up is not None and (day_lo is None or day_up <= day_lo):
-        decision, decided = "reject_h0", int(day_up)
-    elif day_lo is not None:
-        decision, decided = "accept_h0", int(day_lo)
-    else:
-        decision, decided = "continue", None
     return {
         "n_days": int(r["n_days"]),
         "cum_n": int(r["cum_n"]),
         "cum_k": int(r["cum_k"]),
         "llr": round(float(r["llr"]), 6),
-        "decision": decision,
-        "decided_day": decided,
+        "decision": r["decision"],
+        "decided_day": (
+            None if r["decided_day"] is None else int(r["decided_day"])
+        ),
     }
-
-
-def _recent_window_flag(v: DataFrame, flag: str, recent_days: int) -> DataFrame:
-    """Tag each row of ``v`` (which carries a ``day`` epoch-day column)
-    with 1 = in the last ``recent_days`` days of the observed range,
-    0 = baseline: one 1-row max-day aggregate broadcast-crossJoined in.
-    ONE definition so every recent-vs-history monitor (Mann–Whitney,
-    AUC) shares identical window boundaries — the ``_epoch_day``
-    precedent: a future cutoff-semantics fix must have exactly one
-    place to land."""
-    mx = v.agg(F.max("day").alias("max_day"))
-    return (
-        v.crossJoin(mx)
-        .withColumn(
-            flag,
-            (F.col("day") > F.col("max_day") - F.lit(recent_days)).cast("int"),
-        )
-        .drop("max_day")
-    )
 
 
 def mann_whitney_monitor_report(
@@ -507,80 +399,32 @@ def mann_whitney_monitor_report(
     recent_days: int = 7,
     z_crit: float = 1.959964,
 ) -> dict:
-    """Mann–Whitney rank-sum distribution-shift monitor at the
-    maintenance cadence — the streaming-maintenance twin of the batch
-    ``x_mann_whitney`` key (plans/tierm.py), the way
-    ``sprt_monitor_report`` twins x_sprt: the last ``recent_days``
-    UTC epoch-days of ``value_col`` readings against all prior history,
-    answering "did the metric's DISTRIBUTION shift this week" without
-    the mean/variance assumptions that break CUSUM under heavy tails
-    (CUSUM watches the mean; THIS watches stochastic dominance).
-
-    Same exact machinery as the batch key: pooled tie-averaged ranks on
-    2×-scaled BIGINT half-unit ranks over the distinct-value support
-    table, tie correction Σ(t³−t) accumulated in DOUBLE (CAST-first, the
-    r9 ADVICE overflow fix), z = (U − n_r·n_b/2)/sqrt(·) with a nullif
-    guard so a zero-variance pool reads NULL, not ANSI DIVIDE_BY_ZERO.
+    """Mann–Whitney rank-sum shift of ``value_col``: the last
+    ``recent_days`` UTC epoch-days against all prior history ("did the
+    distribution shift this week", with no mean/variance assumption).
 
     Returns ``{"n_recent": int, "n_baseline": int, "u_recent": float,
-    "z": float | None, "shifted": bool, "direction":
-    "up" | "down" | None}`` (plain dict, foreachBatch-safe).  ``shifted``
-    reads the 4-dp-rounded z against ``z_crit``; ``direction`` is the
-    sign of the shift ("up" = recent values stochastically larger).
-    Empty windows (no history yet, or no recent rows) report z = None.
-
-    Scale: ONE map-side-combinable (value, window) count over the
-    corpus plus a 1-row max-day broadcast; rank arithmetic rides the
-    distinct-value support table (x_ks_test economics).  No corpus sort.
+    "z": float | None, "shifted": bool, "direction": "up" | "down" |
+    None}``.  ``shifted`` reads the 4-dp z against ``z_crit``; "up" =
+    recent values stochastically larger.  An empty window or a
+    zero-variance pool reads z None.
+    Core: ``operators/stats.py::rank_sum`` + ``MW_Z`` (also
+    ``x_mann_whitney``).
     """
-    from pyspark.sql.window import Window as W
-
-    # NULL-timestamp rows can't be assigned to either window: without the
-    # ts screen they'd silently land in the BASELINE (is_recent evaluates
-    # NULL -> counted in t but not a), biasing every later value's
-    # cumulative rank c and the tie correction while joining neither
-    # sample.  Screen both columns up front.
+    # a NULL-timestamp row belongs to neither window: unscreened it would
+    # land in the baseline and shift every later cumulative rank
     df = spark.read.parquet(stage_path).filter(
         F.col(value_col).isNotNull() & F.col(ts_col).isNotNull()
     )
-    day = _epoch_day(ts_col)
-    v = df.select(F.col(value_col).alias("val"), day.alias("day"))
-    g = (
-        _recent_window_flag(v, "is_recent", recent_days)
-        .groupBy("val")
-        .agg(F.count("*").alias("t"), F.sum("is_recent").alias("a"))
-    )
-    w = W.orderBy("val").rowsBetween(W.unboundedPreceding, -1)
-    r = g.withColumn("c", F.coalesce(F.sum("t").over(w), F.lit(0)))
-    s = r.agg(
-        # DECIMAL(38,0) rank-sum accumulator, same reason as the batch
-        # key: one a·(2c+t+1) product nears 2^63 at ~2e12 pooled rows
-        F.sum(
-            F.col("a").cast("decimal(18,0)")
-            * (2 * F.col("c") + F.col("t") + 1).cast("decimal(19,0)")
-        ).alias("r_a2"),
-        F.sum("a").alias("n_a"),
-        F.sum(F.col("t") - F.col("a")).alias("n_b"),
-        F.sum(
-            F.col("t").cast("double") * F.col("t") * F.col("t") - F.col("t")
-        ).alias("tsum"),
-    )
-    rows = s.selectExpr(
-        "n_a", "n_b",
-        "CAST(r_a2 - CAST(n_a AS DECIMAL(19,0)) * (n_a + 1) AS DOUBLE)"
-        " / 2.0 AS u_a",
-        "round((CAST(r_a2 - CAST(n_a AS DECIMAL(19,0)) * (n_a + 1)"
-        " AS DOUBLE) / 2.0"
-        " - CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / 2.0)"
-        " / nullif(sqrt(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / 12.0 *"
-        " ((CAST(n_a + n_b AS DOUBLE) + 1.0) - CAST(tsum AS DOUBLE) /"
-        " nullif(CAST(n_a + n_b AS DOUBLE)"
-        " * (CAST(n_a + n_b AS DOUBLE) - 1.0), 0.0))), 0.0), 4) AS z",
-    ).collect()  # control-plane: one row
-    if not rows or rows[0]["n_a"] is None:
+    v = df.select(F.col(value_col).alias("val"), _epoch_day(ts_col).alias("day"))
+    row = rank_sum(
+        _recent_window_flag(v, "is_recent", recent_days), [], "val", "is_recent"
+    ).selectExpr(
+        "n_a", "n_b", "CAST(u2a AS DOUBLE) / 2.0 AS u_a", f"round({MW_Z}, 4) AS z"
+    ).first()  # control-plane: one row
+    if row["n_a"] is None:
         return {"n_recent": 0, "n_baseline": 0, "u_recent": 0.0,
                 "z": None, "shifted": False, "direction": None}
-    row = rows[0]
     n_a, n_b = int(row["n_a"]), int(row["n_b"])
     z = None if row["z"] is None else float(row["z"])
     if n_a == 0 or n_b == 0:
@@ -607,103 +451,42 @@ def ks_monitor_report(
     recent_days: int = 7,
     c_alpha: float = 1.3581015157406195,  # c(0.05) = sqrt(-ln(0.025)/2)
 ) -> dict:
-    """Exact two-sample Kolmogorov–Smirnov drift monitor at the
-    maintenance cadence — the streaming-maintenance twin of the batch
-    ``x_ks_test`` key (plans/tierl.py), the VERDICT r13 #6 echo: the
-    last ``recent_days`` UTC epoch-days of ``value_col`` readings
-    against all prior history, D = sup|F_recent − F_baseline| over the
-    pooled support with the α = 0.05 distribution-free critical value
-    c(α)·√((n₁+n₂)/(n₁n₂)).  The BINLESS gate in the drift row: PSI
-    (``drift_psi_report``) compares 10 coarse bins against a stored
-    profile, Mann–Whitney reads stochastic dominance (a DIRECTIONAL
-    shift), KS sees any SHAPE difference — a variance blow-up or a new
-    mode that leaves the median, the mean, and every PSI bin mass
-    untouched.
-
-    Same exact machinery as the batch key: the supremum is found in
-    EXACT INTEGER arithmetic — at each pooled value |cum₁·n₂ − cum₂·n₁|
-    is a BIGINT, so the argmax and the smallest-value tie-break are
-    integer comparisons; only the final normalization and the critical
-    value are doubles, and ``reject`` compares those two UNROUNDED
-    doubles (the reported ``ks_d``/``crit`` are 6-dp displays).  The
-    BIGINT cross-product bound d_num ≤ n₁·n₂ overflows past ~3e9 rows
-    per side — at that scale normalize per-row in DECIMAL(38,0) or
-    subsample, exactly as the batch key documents.
+    """Exact two-sample Kolmogorov–Smirnov drift of ``value_col``: the
+    last ``recent_days`` UTC epoch-days against all prior history.  The
+    binless gate: it sees any shape change (a variance blow-up, a new
+    mode) that leaves the median, the mean and every PSI bin untouched.
+    ``reject`` compares the unrounded D and critical value.
 
     Returns ``{"n_recent": int, "n_baseline": int, "ks_d": float | None,
-    "crit": float | None, "reject": bool, "at_value": float | None}``
-    (plain dict, foreachBatch-safe).  An empty stage, or a store younger
-    than the window (no baseline yet), reads ks_d/crit/at_value None and
-    never fires.
-
-    Scale: ONE map-side-combinable (value, window) conditional count
-    over the corpus plus the 1-row max-day broadcast; the cumulative
-    sums and the integer max ride the distinct-value SUPPORT table, not
-    the corpus (x_ks_test economics).  No corpus sort.
+    "crit": float | None, "reject": bool, "at_value": float | None}``.
+    An empty stage, or a store younger than the window (no baseline),
+    reads ks_d/crit/at_value None and never fires.
+    Core: ``operators/stats.py::ks_test`` (also ``x_ks_test``).
     """
-    from pyspark.sql.window import Window as W
-
-    # NULL ts rows belong to neither window; NULL values to neither
-    # sample — screen both up front (the mann_whitney precedent)
     df = spark.read.parquet(stage_path).filter(
         F.col(value_col).isNotNull() & F.col(ts_col).isNotNull()
     )
-    v = df.select(
-        F.col(value_col).alias("val"), _epoch_day(ts_col).alias("day")
-    )
-    g = (
-        _recent_window_flag(v, "is_recent", recent_days)
-        .groupBy("val")
-        .agg(
-            F.sum("is_recent").cast("bigint").alias("c1"),
-            F.sum(1 - F.col("is_recent")).cast("bigint").alias("c2"),
-        )
-    )
-    wcum = W.orderBy("val").rowsBetween(W.unboundedPreceding, W.currentRow)
-    w_all = W.partitionBy()
-    c = g.select(
+    v = df.select(F.col(value_col).alias("val"), _epoch_day(ts_col).alias("day"))
+    samples = _recent_window_flag(v, "is_recent", recent_days).select(
         "val",
-        F.sum("c1").over(wcum).cast("bigint").alias("cum1"),
-        F.sum("c2").over(wcum).cast("bigint").alias("cum2"),
-        F.sum("c1").over(w_all).cast("bigint").alias("n1"),
-        F.sum("c2").over(w_all).cast("bigint").alias("n2"),
+        F.col("is_recent").alias("c1"),
+        (1 - F.col("is_recent")).alias("c2"),
     )
-    d = c.select(
-        "val",
-        "n1",
-        "n2",
-        F.abs(
-            F.col("cum1") * F.col("n2") - F.col("cum2") * F.col("n1")
-        ).alias("d_num"),
-    ).withColumn("d_max", F.max("d_num").over(w_all))
-    rows = (
-        d.filter(F.col("d_num") == F.col("d_max"))
-        .groupBy()
-        .agg(
-            F.any_value("n1").alias("n1"),
-            F.any_value("n2").alias("n2"),
-            F.any_value("d_max").alias("d_max"),
-            F.min("val").alias("at_value"),
-        )
-        .collect()
-    )  # control-plane: one row
+    r = ks_test(samples, "val", c_alpha).first()  # control-plane: one row
     silent = {"n_recent": 0, "n_baseline": 0, "ks_d": None, "crit": None,
               "reject": False, "at_value": None}
-    if not rows or rows[0]["n1"] is None:
+    if r["n1"] is None:
         return silent
-    r = rows[0]
     n1, n2 = int(r["n1"]), int(r["n2"])
     if n1 == 0 or n2 == 0:  # no baseline yet (store younger than window)
         silent["n_recent"], silent["n_baseline"] = n1, n2
         return silent
-    ks_raw = int(r["d_max"]) / (n1 * float(n2))
-    crit_raw = c_alpha * ((n1 + float(n2)) / (n1 * float(n2))) ** 0.5
     return {
         "n_recent": n1,
         "n_baseline": n2,
-        "ks_d": round(ks_raw, 6),
-        "crit": round(crit_raw, 6),
-        "reject": ks_raw > crit_raw,
+        "ks_d": round(float(r["ks_d"]), 6),
+        "crit": round(float(r["crit"]), 6),
+        "reject": bool(r["reject"]),
         "at_value": float(r["at_value"]),
     }
 
@@ -717,44 +500,26 @@ def did_monitor_report(
     split_day: int | None = None,
     z_crit: float = 1.959964,
 ) -> dict:
-    """2×2 difference-in-differences monitor at the maintenance cadence —
-    the streaming-maintenance twin of the batch ``x_diff_in_diff`` key
-    (plans/tierm.py): when a rollout hits PART of the fleet (a firmware
-    cohort, a hardware batch — ``treat_expr``) at a known UTC epoch-day
-    boundary (``split_day``; derived midpoint of the observed range when
-    None), DiD = (treated post−pre) − (control post−pre) isolates the
-    rollout's effect on ``value_col`` from whatever moved the WHOLE
-    fleet at the same time — the readout the randomized-split monitors
-    (SPRT/Welch) cannot give, because a rollout is not a coin flip.
-
-    Same estimator as the batch key: four (n, mean, var_samp) cells in
-    one map-side-combinable pass, large-sample SE = sqrt(Σ v_c/n_c),
-    z = DiD/SE with the shared nullif guard (zero-variance cells read
-    NULL z on every engine, never ANSI DIVIDE_BY_ZERO), significance on
-    the 4-dp-rounded z.  Days are UTC epoch-days like every monitor here.
+    """2×2 difference-in-differences of ``value_col`` for a rollout that
+    hit part of the fleet (``treat_expr``) at UTC epoch-day
+    ``split_day`` (None: the midpoint of the observed range): the
+    rollout's effect net of whatever moved the whole fleet.
 
     Returns ``{"cells": {"treat_post"|"treat_pre"|"ctrl_post"|
     "ctrl_pre": {"n": int, "mean": float | None}}, "split_day": int,
     "did": float | None, "se": float | None, "z": float | None,
-    "significant": bool}`` (plain dict, foreachBatch-safe); ``did``/
-    ``z`` are None until all four cells have data.
-
-    Scale: ONE moments pass grouped by (treat, post) — four
-    partial-merging cells — plus a 1-row min/max broadcast when the
-    split is derived.  The 100 TB rollout readout is this shape.
+    "significant": bool}``; did/se/z stay None until every cell holds
+    at least two rows, and ``significant`` reads the 4-dp z.
+    Core: ``operators/stats.py::diff_in_diff`` (also ``x_diff_in_diff``).
     """
-    # Rows whose timestamp or treat predicate evaluates NULL belong to no
-    # 2x2 cell — unscreened they'd create phantom (treat, NULL)/(NULL, post)
-    # cells that both distort the derived split midpoint and break the
-    # four-cell accounting below.
+    # a row whose timestamp or treat predicate is NULL belongs to no cell
     df = spark.read.parquet(stage_path).filter(
         F.col(value_col).isNotNull() & F.col(ts_col).isNotNull()
     )
-    day = _epoch_day(ts_col)
     e = df.select(
         F.expr(treat_expr).cast("int").alias("treat"),
         F.col(value_col).alias("val"),
-        day.alias("day"),
+        _epoch_day(ts_col).alias("day"),
     ).filter(F.col("treat").isNotNull())
     if split_day is None:
         sp = e.agg(
@@ -765,63 +530,33 @@ def did_monitor_report(
                 )
             ).alias("split_d")
         )
-        e = e.crossJoin(sp)
     else:
-        e = e.withColumn("split_d", F.lit(int(split_day)).cast("bigint"))
-    cell = e.groupBy(
-        "treat", (F.col("day") >= F.col("split_d")).cast("int").alias("post")
-    ).agg(
-        F.count("*").alias("n"),
-        F.avg("val").alias("m"),
-        F.var_samp("val").alias("v"),
-        F.max("split_d").alias("split_d"),
+        sp = spark.range(1).select(
+            F.lit(int(split_day)).cast("bigint").alias("split_d")
+        )
+    cells = e.crossJoin(sp).select(
+        "treat", (F.col("day") >= F.col("split_d")).cast("int").alias("post"), "val"
     )
-    rows = cell.collect()  # control-plane: <= 4 rows
-    cells = {(r["treat"], r["post"]): r for r in rows}
-    names = {
-        (1, 1): "treat_post", (1, 0): "treat_pre",
-        (0, 1): "ctrl_post", (0, 0): "ctrl_pre",
-    }
-    out_cells = {}
-    for key, name in names.items():
-        r = cells.get(key)
-        out_cells[name] = {
-            "n": int(r["n"]) if r is not None else 0,
-            "mean": round(float(r["m"]), 4) if r is not None else None,
-        }
-    split_out = (
-        int(rows[0]["split_d"]) if rows else
-        (int(split_day) if split_day is not None else 0)
-    )
+    r = diff_in_diff(cells).crossJoin(sp).first()  # control-plane: one row
+    names = {"treat_post": "11", "treat_pre": "10",
+             "ctrl_post": "01", "ctrl_pre": "00"}
     result = {
-        "cells": out_cells, "split_day": split_out,
+        "cells": {
+            name: {
+                "n": int(r[f"n{s}"] or 0),
+                "mean": None if r[f"m{s}"] is None else round(float(r[f"m{s}"]), 4),
+            }
+            for name, s in names.items()
+        },
+        "split_day": 0 if r["split_d"] is None else int(r["split_d"]),
         "did": None, "se": None, "z": None, "significant": False,
     }
-    # membership check first: len(cells) >= 4 does NOT imply the four
-    # CANONICAL cells are present (a degenerate corpus can populate other
-    # (treat, post) combinations), and indexing a missing one would raise
-    if any(
-        k not in cells or cells[k]["v"] is None or cells[k]["n"] < 2
-        for k in names
-    ):
-        return result
-    m11, m10 = float(cells[(1, 1)]["m"]), float(cells[(1, 0)]["m"])
-    m01, m00 = float(cells[(0, 1)]["m"]), float(cells[(0, 0)]["m"])
-    import math as _math
-
-    did = (m11 - m10) - (m01 - m00)
-    se = _math.sqrt(
-        sum(
-            float(cells[k]["v"]) / float(cells[k]["n"])
-            for k in names
-        )
-    )
-    result["did"] = round(did, 4)
-    result["se"] = round(se, 4)
-    if se > 0.0:
-        z = round(did / se, 4)
-        result["z"] = z
-        result["significant"] = abs(z) > z_crit
+    if r["se"] is not None:
+        result["did"] = round(float(r["did"]), 4)
+        result["se"] = round(float(r["se"]), 4)
+        if r["z"] is not None:
+            result["z"] = round(float(r["z"]), 4)
+            result["significant"] = abs(result["z"]) > z_crit
     return result
 
 
@@ -833,38 +568,18 @@ def survival_monitor_report(
     ts_col: str = "date_time",
     bucket_days: int = 7,
 ) -> dict:
-    """Kaplan–Meier device-survival monitor at the maintenance cadence —
-    the streaming-maintenance twin of the batch ``x_survival`` key
-    (plans/tierm.py), completing the fleet-health trio with the
-    Mann–Whitney shift and DiD rollout monitors: per device, TIME TO
-    FIRST ``event_expr`` reading (default: the first low-battery
-    reading, the SPRT monitor's predicate) measured from the device's
-    first appearance, RIGHT-CENSORED at its last reading when the event
-    never fired.  A naive "fraction of devices gone low" rate counts
-    the still-healthy fleet as if observation had finished — exactly
-    the bias the product-limit estimator removes, and the readout that
-    tells a hardware-batch story ("how long do these devices LIVE?")
-    none of the trend monitors can.
-
-    Same estimator as the batch key: lifetimes bucket into
-    ``bucket_days``-day buckets, n_risk is the suffix sum of bucket
-    sizes, each factor (n−d)/n rounds at 6 dp, and Ŝ(t) is the
-    order-pinned sequential fold round(acc·f, 6).  The corpus-sized
-    work is ONE map-side-combinable per-device (min day, min event
-    day, max day) rollup; the bucket table is CALENDAR-bounded
-    (observation span / bucket_days rows), so the suffix sum and the
-    KM fold run driver-side over a control-plane-sized collect —
-    unlike the oracle-paired batch key there is no cross-engine hash
-    to pin, so the fold needn't ride a HOF.
+    """Kaplan–Meier device survival: per device, time from its first
+    reading to its first ``event_expr`` reading (default: the first
+    low-battery reading) in ``bucket_days``-day buckets, RIGHT-CENSORED
+    at its last reading when the event never fired.
 
     Returns ``{"n_devices": int, "n_events": int, "n_censored": int,
     "median_survival_days": int | None, "km_curve": [{"t": int,
-    "n_risk": int, "d": int, "c": int, "km": float}, ...]}`` (plain
-    dict, foreachBatch-safe).  ``median_survival_days`` is the start
-    day (t·bucket_days) of the first bucket where Ŝ(t) ≤ 0.5, None
-    while the fleet's survival stays above half.  NULL-timestamp /
-    NULL-device rows belong to no lifetime and are screened; rows
-    where ``event_expr`` evaluates NULL simply aren't events.
+    "n_risk": int, "d": int, "c": int, "km": float}, ...]}``.
+    ``median_survival_days`` is the start day (t·bucket_days) of the
+    first bucket where Ŝ(t) ≤ 0.5.  NULL-timestamp / NULL-device rows
+    belong to no lifetime; a NULL ``event_expr`` is not an event.
+    Core: ``operators/stats.py::kaplan_meier`` (also ``x_survival``).
     """
     df = spark.read.parquet(stage_path).filter(
         F.col(ts_col).isNotNull() & F.col(device_col).isNotNull()
@@ -885,58 +600,26 @@ def survival_monitor_report(
     )
     life = per_dev.select(
         F.floor(
-            (
-                F.coalesce(F.col("event_day"), F.col("last_day"))
-                - F.col("first_day")
-            )
+            (F.coalesce(F.col("event_day"), F.col("last_day")) - F.col("first_day"))
             / F.lit(float(bucket_days))
         )
         .cast("int")
         .alias("t"),
         F.col("event_day").isNotNull().cast("int").alias("event"),
     )
-    bucket = (
-        life.groupBy("t")
-        .agg(
-            F.sum("event").alias("d"),
-            F.sum(F.lit(1) - F.col("event")).alias("c"),
-            F.count("*").alias("m"),
-        )
-        .orderBy("t")
-        .collect()  # control-plane: calendar-bounded bucket table
-    )
-    if not bucket:
-        return {"n_devices": 0, "n_events": 0, "n_censored": 0,
-                "median_survival_days": None, "km_curve": []}
-
-    def _r6(x: float) -> float:
-        # HALF_UP at 6 dp on the shortest decimal repr — Spark/DuckDB
-        # round() semantics, NOT Python's builtin banker's rounding, so
-        # the fold stays value-identical to the batch twin's
-        # round(acc*f, 6) recurrence on exact half-ties
-        from decimal import ROUND_HALF_UP, Decimal
-
-        return float(
-            Decimal(repr(x)).quantize(
-                Decimal("0.000001"), rounding=ROUND_HALF_UP
-            )
-        )
-
-    total = sum(int(r["m"]) for r in bucket)
-    at_risk, curve, km, median = total, [], 1.0, None
-    for r in bucket:
-        t, d, c = int(r["t"]), int(r["d"]), int(r["c"])
-        factor = _r6((at_risk - d) / at_risk)
-        km = _r6(km * factor)
-        curve.append({"t": t, "n_risk": at_risk, "d": d, "c": c, "km": km})
-        if median is None and km <= 0.5:
-            median = t * bucket_days
-        at_risk -= d + c
+    curve = [
+        {"t": int(r["t"]), "n_risk": int(r["n_risk"]), "d": int(r["d"]),
+         "c": int(r["c"]), "km": float(r["km"])}
+        # control-plane: calendar-bounded bucket table
+        for r in kaplan_meier(life).orderBy("t").collect()
+    ]
     return {
-        "n_devices": total,
+        "n_devices": sum(p["d"] + p["c"] for p in curve),
         "n_events": sum(p["d"] for p in curve),
         "n_censored": sum(p["c"] for p in curve),
-        "median_survival_days": median,
+        "median_survival_days": next(
+            (p["t"] * bucket_days for p in curve if p["km"] <= 0.5), None
+        ),
         "km_curve": curve,
     }
 
@@ -950,54 +633,24 @@ def auc_monitor_report(
     recent_days: int = 7,
     drop_threshold: float = 0.1,
 ) -> dict:
-    """Scorer-discrimination drift monitor at the maintenance cadence —
-    the streaming-maintenance twin of the batch ``x_auc`` key
-    (plans/tierm.py), the way ``mann_whitney_monitor_report`` twins
-    x_mann_whitney (VERDICT r10 #4's scorer-eval cadence): exact ROC
-    AUC of a fixed scorer (``score_expr``) against a binary outcome
-    (``label_expr``) computed SEPARATELY for the last ``recent_days``
-    UTC epoch-days and for all prior history, answering "does the
-    scorer still rank-discriminate the outcome this week".  The default
-    pair audits whether solar-panel voltage still rank-predicts the
-    low-battery alert condition — a sensor fault or firmware change
-    that decouples them shows up here before any mean/trend monitor
-    moves.
-
-    Same rank-identity machinery as the batch key (Hanley & McNeil:
-    AUC is the normalized Mann–Whitney U): tie-averaged ranks over the
-    per-window DISTINCT-SCORE support table (scores pinned at 6 dp),
-    rank sums accumulated in DECIMAL(38,0) for the same ~2e12-row
-    overflow headroom as the MW monitor, AUC = (R₊ − n₊(n₊+1)/2)/
-    (n₊·n₋) with a nullif guard so a single-class window reads None,
-    not ANSI DIVIDE_BY_ZERO.
-
-    Because AUC is invariant under monotone transforms but DIRECTION
-    depends on the scorer's sign convention (low solar → low battery
-    gives AUC < 0.5), drift is judged on DISCRIMINATION |2·AUC − 1|
-    (the Gini magnitude): ``degraded`` fires when the recent window's
-    discrimination fell more than ``drop_threshold`` below baseline.
+    """Does a fixed scorer (``score_expr``, pinned at 6 dp) still
+    rank-discriminate a binary outcome (``label_expr``)?  Exact ROC AUC
+    for the last ``recent_days`` UTC epoch-days and for all prior
+    history.  Drift is judged on discrimination |2·AUC − 1|, which does
+    not depend on the scorer's sign convention: ``degraded`` fires when
+    the recent discrimination fell more than ``drop_threshold`` below
+    baseline.
 
     Returns ``{"n_recent": int, "n_baseline": int, "auc_recent":
     float | None, "auc_baseline": float | None,
-    "delta_discrimination": float | None, "degraded": bool}`` (plain
-    dict, foreachBatch-safe).  Windows with no rows or only one label
-    class report auc = None and never fire the flag.
-
-    Scale: one map-side-combinable (window, score, label) count over
-    the corpus plus a 1-row max-day broadcast; the rank window rides
-    the per-window distinct-score support (≤ 10⁶ + 1 distinct 6-dp
-    scores regardless of corpus size); the final collect is ≤ 2 rows.
-    No corpus sort.
+    "delta_discrimination": float | None, "degraded": bool}``.  A window
+    with no rows or one label class reads auc None and never fires.
+    Core: ``operators/stats.py::rank_sum`` + ``AUC`` (also ``x_auc``).
     """
-    from pyspark.sql.window import Window as W
-
     df = spark.read.parquet(stage_path)
     score = F.expr(score_expr)
     label = F.expr(label_expr)
-    # NULL score/label/ts rows belong to no window and no rank — the
-    # same screen-first hygiene as the MW/DiD/KM monitors (a NULL label
-    # would count in t but join neither class, biasing every later
-    # score's cumulative rank c).
+    # NULL score/label/ts rows belong to no window and no rank
     v = df.filter(
         score.isNotNull() & label.isNotNull() & F.col(ts_col).isNotNull()
     ).select(
@@ -1005,36 +658,11 @@ def auc_monitor_report(
         label.cast("int").alias("label"),
         _epoch_day(ts_col).alias("day"),
     )
-    g = (
-        _recent_window_flag(v, "win", recent_days)
-        .groupBy("win", "score_r")
-        .agg(F.count("*").alias("t"), F.sum("label").alias("pos"))
-    )
-    w = (
-        W.partitionBy("win")
-        .orderBy("score_r")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    r = g.withColumn("c", F.coalesce(F.sum("t").over(w), F.lit(0)))
-    cells = (
-        r.groupBy("win")
-        .agg(
-            F.sum(
-                F.col("pos").cast("decimal(18,0)")
-                * (2 * F.col("c") + F.col("t") + 1).cast("decimal(19,0)")
-            ).alias("r_pos2"),
-            F.sum("pos").alias("n_pos"),
-            F.sum(F.col("t") - F.col("pos")).alias("n_neg"),
-        )
-        .selectExpr(
-            "win", "CAST(n_pos + n_neg AS BIGINT) AS n",
-            "round(CAST(r_pos2 - CAST(n_pos AS DECIMAL(19,0)) * (n_pos + 1)"
-            " AS DOUBLE)"
-            " / nullif(2.0 * CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE),"
-            " 0.0), 6) AS auc",
-        )
-        .collect()  # control-plane: <= 2 rows (recent / baseline)
-    )
+    cells = rank_sum(
+        _recent_window_flag(v, "win", recent_days), ["win"], "score_r", "label"
+    ).selectExpr(
+        "win", "CAST(nn AS BIGINT) AS n", f"round({AUC}, 6) AS auc"
+    ).collect()  # control-plane: <= 2 rows (recent / baseline)
     by_win = {int(row["win"]): row for row in cells}
     rec, base = by_win.get(1), by_win.get(0)
     n_recent = int(rec["n"]) if rec else 0
@@ -1064,83 +692,42 @@ def benford_monitor_report(
     value_col: str = "no_messages_sent_since_last_power_cycle",
     min_n: int = 100,
 ) -> dict:
-    """Benford first-significant-digit forensic gate at the maintenance
-    cadence — the streaming-maintenance twin of the batch ``x_benford``
-    key (plans/tierl.py), the maintenance "Benford gate" of
-    VERDICT r10 #4: the digit-1–9 distribution of ``value_col``
-    (a naturally multiplicative counter — the default is the messages-
-    since-power-cycle counter) against N·log10(1+1/d).  A firmware bug
-    that clamps, fabricates, or truncates the counter drifts from the
-    log-law; no reference sample is needed — the law IS the reference.
-
-    The headline verdict is Nigrini's MAD (mean absolute deviation of
-    the nine digit PROPORTIONS from Benford), because chi-square power
-    grows with N — at fleet scale chi² flags immaterial deviations, so
-    it is REPORTED (with the digit table) but the ``conforming`` flag
-    reads the scale-free MAD against Nigrini's 0.015 nonconformity
-    bound.  ``mad_verdict`` grades close ≤ 0.006 < acceptable ≤ 0.012
-    < marginal ≤ 0.015 < nonconforming.  Fewer than ``min_n`` usable
-    rows → conforming None (small-sample digit tests are noise).
+    """Benford first-digit gate on a naturally multiplicative counter
+    (``value_col``): a firmware bug that clamps, fabricates or truncates
+    it drifts from the log-law.  The verdict is Nigrini's MAD of the
+    nine digit proportions (scale-free; chi-square, reported, grows with
+    N): close ≤ 0.006 < acceptable ≤ 0.012 < marginal ≤ 0.015 <
+    nonconforming, and ``conforming`` = MAD ≤ 0.015.  Fewer than
+    ``min_n`` usable rows → MAD and verdict None.
 
     Returns ``{"n_total": int, "digits": {d: {"n", "expected_r",
     "chi_r"}}, "chi_total": float, "mad": float | None,
-    "mad_verdict": str | None, "conforming": bool | None}`` (plain
-    dict, foreachBatch-safe).
-
-    Scale: digit extraction is floor → BIGINT → string prefix (never
-    float formatting), then ONE map-side-combinable ≤ 9-group count;
-    the spine/chi²/MAD fold runs driver-side on those ≤ 9 cells —
-    control-plane, same economics as the batch key's 9-row tail.
+    "mad_verdict": str | None, "conforming": bool | None}``.
+    Core: ``operators/stats.py::benford`` (also ``x_benford``).
     """
-    import math
-
-    # Screen to the digit-extractable domain BEFORE the ANSI casts: the
-    # family convention (x_benford screens o_totalprice >= 1.0 — values
-    # in (0,1) have no first digit under the integer-prefix extraction),
-    # plus NaN (which compares GREATER than any numeric in Spark, so it
-    # passes >= 1 and then throws in floor→BIGINT under ANSI) and the
-    # 2^63 cast-overflow bound for double-typed columns (review r11).
-    # The 9.0e18 bound is DELIBERATELY conservative (ADVICE r11): it
-    # also drops legitimate BIGINTs in [9.0e18, 2^63) — all first-digit
-    # 9, ~2.4% of the signed-64 range — because a double that close to
-    # 2^63 can round UP across the cast boundary and overflow under
-    # ANSI.  Counters that genuinely reach that magnitude will slightly
-    # undercount the digit-9 cell; acceptable for a drift gate.
+    # Screen to the digit-extractable domain before the ANSI casts:
+    # values in (0, 1) have no first digit under the integer-prefix
+    # extraction; NaN compares GREATER than any number in Spark and would
+    # throw in floor→BIGINT; 9.0e18 stays clear of the 2^63 cast overflow
+    # (it also drops genuine BIGINTs in [9.0e18, 2^63), all digit 9 — a
+    # slight digit-9 undercount, acceptable for a drift gate).
     vd = F.col(value_col).cast("double")
-    counts = (
-        spark.read.parquet(stage_path)
-        .filter(
-            F.col(value_col).isNotNull()
-            & ~F.isnan(vd)
-            & (vd >= 1.0)
-            & (vd < 9.0e18)
-        )
-        .select(
-            F.substring(
-                F.floor(F.col(value_col)).cast("bigint").cast("string"), 1, 1
-            )
-            .cast("int")
-            .alias("digit")
-        )
-        .groupBy("digit")
-        .agg(F.count("*").alias("n"))
-        .collect()  # control-plane: <= 9 cells
+    df = spark.read.parquet(stage_path).filter(
+        F.col(value_col).isNotNull() & ~F.isnan(vd) & (vd >= 1.0) & (vd < 9.0e18)
     )
-    obs = {int(r["digit"]): int(r["n"]) for r in counts}
-    n_total = sum(obs.values())
+    rows = benford(df, value_col).orderBy("digit").collect()  # control-plane: 9 rows
+    n_total = int(rows[0]["big_n"])
     digits: dict[int, dict] = {}
     chi_total, mad_sum = 0.0, 0.0
-    for d in range(1, 10):
-        p = math.log10(1.0 + 1.0 / d)
-        n = obs.get(d, 0)
-        if n_total:
-            expected = n_total * p
-            chi = round((n - expected) ** 2 / expected, 6)
-            mad_sum += abs(n / n_total - p)
-        else:
-            expected, chi = 0.0, 0.0
-        digits[d] = {"n": n, "expected_r": round(expected, 6), "chi_r": chi}
+    for r in rows:
+        chi = 0.0 if r["chi"] is None else round(float(r["chi"]), 6)
+        digits[int(r["digit"])] = {
+            "n": int(r["n"]),
+            "expected_r": round(float(r["expected"]), 6),
+            "chi_r": chi,
+        }
         chi_total += chi
+        mad_sum += 0.0 if r["dev"] is None else float(r["dev"])
     if n_total < min_n:
         mad = mad_verdict = conforming = None
     else:
@@ -1170,43 +757,20 @@ def gini_monitor_report(
     recent_days: int = 7,
     jump_threshold: float = 0.05,
 ) -> dict:
-    """Ingest-concentration drift monitor at the maintenance cadence —
-    the streaming-maintenance twin of the batch ``x_gini_concentration``
-    key (plans/tierk.py), the way ``benford_monitor_report`` twins
-    x_benford (VERDICT r11 #5's cadence-echo ask): the Gini coefficient
-    of the per-``key_col`` row-count distribution computed SEPARATELY
-    for the last ``recent_days`` UTC epoch-days and for all prior
-    history, answering "is ingest volume concentrating on few devices
-    this week".  A stuck retry loop, a chatty firmware rollout, or a
-    fleet-wide outage that silences all but a few gateways shows up as
-    a Gini jump before any per-device trend monitor accumulates enough
-    history to alarm.
-
-    Same sorted-rank identity as the batch key (G = 2·Σ(i·xᵢ)/(n·Σx)
-    − (n+1)/n, ranks = deterministic (count, key) row_numbers): Σ(i·xᵢ)
-    and Σx are EXACT sums over the per-window device-count table, so
-    each window's Gini is one fixed-order double expression over exact
-    integers, rounded at 6 dp like the batch key.  Rank-sum headroom:
-    i·c ≤ (#devices)·(rows/device); accumulated in DECIMAL(38,0) for
-    the same ~2e12-row magnitudes the MW/AUC monitors argue.
+    """Is ingest volume concentrating on few ``key_col`` values this
+    week?  Gini of the per-key row counts for the last ``recent_days``
+    UTC epoch-days and for all prior history; ``concentrating`` fires
+    when the recent Gini rose more than ``jump_threshold`` above
+    baseline.
 
     Returns ``{"n_recent": int, "n_baseline": int, "k_recent": int,
     "k_baseline": int, "gini_recent": float | None, "gini_baseline":
-    float | None, "delta": float | None, "concentrating": bool}``
-    (plain dict, foreachBatch-safe).  An empty window reads None and
-    never fires; ``concentrating`` fires when the recent Gini rose more
-    than ``jump_threshold`` above baseline.
-
-    Scale: one map-side-combinable (window, key) count over the corpus
-    plus a 1-row max-day broadcast; the rank window rides the
-    per-window DEVICE-cardinality table (fleet-sized, not corpus-
-    sized); the final collect is ≤ 2 rows.  No corpus sort.
+    float | None, "delta": float | None, "concentrating": bool}``.  An
+    empty window reads None and never fires.
+    Core: ``operators/stats.py::gini`` (also ``x_gini_concentration``).
     """
-    from pyspark.sql.window import Window as W
-
     df = spark.read.parquet(stage_path)
-    # NULL key/ts rows belong to no device and no window — the same
-    # screen-first hygiene as the MW/AUC monitors.
+    # NULL key/ts rows belong to no device and no window
     v = df.filter(
         F.col(key_col).isNotNull() & F.col(ts_col).isNotNull()
     ).select(F.col(key_col).alias("k"), _epoch_day(ts_col).alias("day"))
@@ -1215,26 +779,10 @@ def gini_monitor_report(
         .groupBy("win", "k")
         .agg(F.count("*").alias("c"))
     )
-    w = W.partitionBy("win").orderBy(F.col("c").asc(), F.col("k").asc())
-    r = g.select("win", "c", F.row_number().over(w).alias("i"))
-    cells = (
-        r.groupBy("win")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("c").alias("tot"),
-            F.sum(
-                F.col("i").cast("decimal(19,0)")
-                * F.col("c").cast("decimal(19,0)")
-            ).alias("wsum"),
-        )
-        .selectExpr(
-            "win", "n", "CAST(tot AS BIGINT) AS tot",
-            "round(2.0 * CAST(wsum AS DOUBLE)"
-            " / (CAST(n AS DOUBLE) * CAST(tot AS DOUBLE))"
-            " - (CAST(n AS DOUBLE) + 1.0) / CAST(n AS DOUBLE), 6) AS gini",
-        )
-        .collect()  # control-plane: <= 2 rows (recent / baseline)
-    )
+    cells = gini(g, "win", "k", "c").select(
+        "win", "n", F.col("tot").cast("bigint").alias("tot"),
+        F.round("gini", 6).alias("gini"),
+    ).collect()  # control-plane: <= 2 rows (recent / baseline)
     by_win = {int(row["win"]): row for row in cells}
     rec, base = by_win.get(1), by_win.get(0)
     gini_recent = float(rec["gini"]) if rec else None
@@ -1262,46 +810,28 @@ def source_kl_monitor_report(
     recent_days: int = 7,
     kl_threshold: float = 0.1,
 ) -> dict:
-    """Categorical-mix drift monitor at the maintenance cadence — the
-    streaming-maintenance twin of the batch ``x_source_kl`` key
-    (plans/tierg.py), completing the two-sample family: PSI
-    (drift_psi_report) bins a NUMERIC column against a persisted
-    profile, Mann–Whitney tests a numeric distribution recent-vs-
-    history, THIS reads KL(p_recent ‖ p_baseline) in nats over a
-    CATEGORICAL column's mix — "did traffic composition shift this
-    week", e.g. one device class going silent or a new talker ID
-    flooding in.
-
-    Same smoothing convention as the batch key: +0.5 Laplace counts on
-    the UNION category scaffold (both windows densified over all
-    categories seen in either), so the KL is finite by construction —
-    a category present recently but absent from baseline contributes a
-    large-but-finite term instead of ∞.  Same 6-dp round.
+    """Did the traffic mix over a categorical ``cat_col`` shift this
+    week?  KL(p_recent ‖ p_baseline) in nats with +0.5 Laplace counts
+    on the union category scaffold, so a category seen in only one
+    window adds a large but finite term; ``shifted`` = kl >
+    ``kl_threshold``.
 
     Returns ``{"n_recent": int, "n_baseline": int, "k_categories": int,
-    "kl_nats": float | None, "shifted": bool}`` (plain dict,
-    foreachBatch-safe).  Either window empty → kl None, no verdict
-    (smoothing alone would otherwise fabricate a uniform recent mix
-    and "compare" it).
-
-    Scale: one map-side-combinable (category, window) count over the
-    corpus plus a 1-row max-day broadcast; smoothing/normalizing rides
-    the category-cardinality table with two 1-row broadcast totals;
-    the final collect is 1 row.  No corpus sort.
+    "kl_nats": float | None, "shifted": bool}``.  Either window empty →
+    kl None (smoothing alone would fabricate a uniform mix to compare).
+    Core: ``operators/stats.py::smoothed_kl`` (also ``x_source_kl``).
     """
     df = spark.read.parquet(stage_path)
     v = df.filter(
         F.col(cat_col).isNotNull() & F.col(ts_col).isNotNull()
     ).select(F.col(cat_col).alias("cat"), _epoch_day(ts_col).alias("day"))
-    # one (category) row holding both windows' counts: a = recent,
-    # t - a = baseline — the union scaffold falls out for free (any
-    # category seen in either window has a row; absent sides smooth)
+    # one row per category holding both windows' counts (a = recent,
+    # t - a = baseline): every category seen in either window has a row
     g = (
         _recent_window_flag(v, "win", recent_days)
         .groupBy("cat")
         .agg(F.count("*").alias("t"), F.sum("win").alias("a"))
         .select(
-            "cat",
             "t",
             "a",
             (F.col("a").cast("double") + 0.5).alias("cs_r"),
@@ -1309,29 +839,19 @@ def source_kl_monitor_report(
         )
     )
     tot = g.agg(
-        F.sum("cs_r").alias("ts_r"),
-        F.sum("cs_b").alias("ts_b"),
         F.sum("a").alias("n_r"),
         F.sum(F.col("t") - F.col("a")).alias("n_b"),
         F.count("*").alias("k"),
     )
-    term = (F.col("cs_r") / F.col("ts_r")) * F.log(
-        (F.col("cs_r") / F.col("ts_r")) / (F.col("cs_b") / F.col("ts_b"))
-    )
-    rows = (
-        g.crossJoin(tot)
-        .agg(
-            F.round(F.sum(term), 6).alias("kl"),
-            F.first("n_r").alias("n_r"),
-            F.first("n_b").alias("n_b"),
-            F.first("k").alias("k"),
-        )
-        .collect()  # control-plane: 1 row
-    )
-    if not rows or rows[0]["k"] is None or int(rows[0]["k"]) == 0:
+    row = (
+        smoothed_kl(g, [], "cs_r", "cs_b")
+        .crossJoin(tot)
+        .select(F.round("kl", 6).alias("kl"), "n_r", "n_b", "k")
+        .first()
+    )  # control-plane: 1 row
+    if row["k"] == 0:
         return {"n_recent": 0, "n_baseline": 0, "k_categories": 0,
                 "kl_nats": None, "shifted": False}
-    row = rows[0]
     n_recent, n_baseline = int(row["n_r"]), int(row["n_b"])
     kl = float(row["kl"]) if row["kl"] is not None else None
     if n_recent == 0 or n_baseline == 0:
@@ -1356,40 +876,21 @@ def heavy_hitters_monitor_report(
     depth: int = 4,
     width: int = 1024,
 ) -> dict:
-    """Token-flood monitor at the maintenance cadence — the streaming-
-    maintenance twin of the batch ``x_heavy_hitters`` key
-    (plans/tieri.py), the way gini/source-KL twin their batch keys
-    (VERDICT r12 #7's suggested echo): the count-min sketch (Cormode &
-    Muthukrishnan '05, operators/sketches.py) built over the last
-    ``recent_days`` UTC epoch-days of ``key_col`` traffic, its top-``k``
-    heavy hitters adjudicated against the exact recount, and a flood
-    verdict — "is one key swamping recent ingest, and WHICH".  Gini
-    says concentration rose; THIS names the keys doing it and prices
-    the sketch you'd deploy to watch for them between census runs.
-
-    Same grid, hashes, and never-underestimates invariant as the batch
-    key: cells come from ``cms_from_counts`` over the exact per-key
-    recount (cell-identical to the production ``cms_from_stream`` by
-    associativity — the equivalence is pytest-pinned on corpus data),
-    estimates from ``cms_estimate``'s broadcast-probe min.  A broken
-    sketch build/probe flips ``cms_sound``.
+    """Is one ``key_col`` value swamping recent ingest, and which?  A
+    count-min sketch (Cormode & Muthukrishnan '05) over the last
+    ``recent_days`` UTC epoch-days; its top-``k`` heavy hitters are
+    adjudicated against the exact recount, and ``flooding`` fires when
+    the top key's share exceeds ``share_threshold``.  A sketch estimate
+    below the exact count (a broken build or probe) flips ``cms_sound``.
 
     Returns ``{"n_recent": int, "k_distinct_recent": int, "top":
     [{"key": str, "exact_n": int, "est": int, "overcount": int,
     "share": float}, ...], "top_share": float | None, "flooding": bool,
-    "cms_sound": bool | None, "max_overcount": int | None}`` (plain
-    dict, foreachBatch-safe).  An empty window reads empty/None and
-    never fires.
-
-    Scale: the corpus-sized work is ONE map-side-combinable (key)
-    count over the recent window; the sketch is ≤ depth·width rows and
-    broadcasts into the k-row estimate probe; top-k rides a fleet-sized
-    count table; the final collect is ≤ k + 1 rows.  With an UNBOUNDED
-    key universe (raw tokens, not device ids), drop the exact side for
-    ``cms_from_stream`` + an external candidate list — the report shape
-    and the sketch economics (partial state capped at depth·width
-    counters per partition) are unchanged; the exact recount here is
-    the adjudication side, exactly as in the batch key.
+    "cms_sound": bool | None, "max_overcount": int | None}``.  An empty
+    window reads empty/None and never fires.
+    Operators: ``operators/sketches.py`` (also ``x_heavy_hitters``).
+    With an unbounded key universe, build with ``cms_from_stream`` and
+    an external candidate list instead of the exact recount.
     """
     from ..operators.sketches import cms_estimate, cms_from_counts
 
@@ -1454,42 +955,23 @@ def dedup_census_monitor_report(
     max_df: int = 10,
     dup_mass_threshold: float = 0.2,
 ) -> dict:
-    """Near-dup census monitor at the maintenance cadence — the
-    streaming-maintenance twin of the batch ``x_dedup_census`` key
-    (plans/tierg.py), the VERDICT r13 #6 echo: run the GUARDED near-dup
-    pipeline (rare-shingle inverted index, ``max_df`` boilerplate
-    screen, exact Jaccard scores, connected components — the
-    x_dedup_census configuration exactly) over the document batch at
-    ``corpus_path`` and publish the cluster-size census plus a
-    template-flood verdict.  The Gini/heavy-hitter monitors say ingest
-    CONCENTRATION rose; THIS localizes it in document space — how much
-    of the arriving batch is near-duplicate mass (``dup_mass``), and
-    WHICH template family is the largest (``top_template`` = the
-    biggest cluster's min-id representative), the alarm the guarded
-    dedup knobs (max_df/max_bucket) exist to absorb.
-
-    Unlike the stage-zone monitors this one is BATCH-anchored, not
-    recent-window-anchored: a census is published per ingest batch
-    (``corpus_path`` IS the batch in a foreachBatch deployment), and
+    """Near-duplicate census of one document batch (``corpus_path``):
+    the guarded near-dup path (rare-shingle index with the ``max_df``
+    boilerplate screen, exact Jaccard ≥ ``threshold``, connected
+    components — the ``x_dedup_census`` configuration), then how much
+    of the batch is near-duplicate mass and which template family is
+    largest.  ``flooding`` fires when the share of docs in clusters of
+    size ≥ 2 exceeds ``dup_mass_threshold``.  It is batch-anchored:
     cross-batch near-dup state is the dedup ledger's job
-    (``x_dedup_ledger_near``, plans/tierc.py) — re-censusing all
-    history every cadence would redo the ledger's work quadratically.
+    (``x_dedup_ledger_near``).
 
     Returns ``{"n_docs": int, "n_clusters": int, "census":
     [{"cluster_size": int, "n_clusters": int, "n_docs": int}, ...],
     "dup_mass": float | None, "max_cluster": int | None,
     "top_template": {"cluster_id": ..., "size": int} | None,
-    "flooding": bool}`` (plain dict, foreachBatch-safe); ``census`` is
-    ascending by cluster_size.  An empty batch reads empty/None and
-    never fires; ``flooding`` fires when the share of docs sitting in
-    size ≥ 2 clusters exceeds ``dup_mass_threshold``.
-
-    Scale: the corpus-sized work is the guarded dedup path itself
-    (worst bucket bounded at max_df² pairs; CC rides pair-sized edges)
-    — the census on top is two keyed counts over the label table, and
-    the collects are control-plane-sized: the size histogram
-    (≤ distinct-sizes rows) and the 1-row top cluster.  The
-    cluster-size table feeds both, so it is stored once.
+    "flooding": bool}``, ``census`` ascending by cluster_size.  An
+    empty batch reads empty/None and never fires.
+    Operators: ``operators/dedup.py``.
     """
     from ..operators.dedup import connected_components, ngram_jaccard_pairs
 
@@ -1545,55 +1027,29 @@ def sketch_store_monitor_report(
     tol: float = 0.05,
     as_of_day: int | None = None,
 ) -> dict:
-    """Per-day HLL sketch-store health monitor at the maintenance
-    cadence — the streaming-maintenance twin of the batch
-    ``x_active_users_hll`` key (plans/tierl.py), the other VERDICT r12
-    #7 echo: for each of the last ``recent_days`` UTC epoch-days, build
-    the day's HyperLogLog distinct-``key_col`` sketch
-    (``hll_sketch_agg``, same lgConfigK as the batch key) and adjudicate
-    its estimate against the exact per-day distinct; then UNION the
-    daily sketches across the window (``hll_union_agg``) and adjudicate
-    the union against the exact window distinct — the mergeability
-    invariant the whole persisted-sketch-store dashboard economics
-    rests on, checked at cadence.  A day with rows missing from the
-    window also surfaces (``missing_days``): an ingestion gap reads as
-    absent state, not a silently-shorter average.
+    """Per-day HyperLogLog sketch-store health: for each of the last
+    ``recent_days`` UTC epoch-days, the day's distinct-``key_col``
+    sketch (``hll_sketch_agg``, lgConfigK ``lg_k``) against the exact
+    per-day distinct, and the union of the daily sketches
+    (``hll_union_agg``) against the exact window distinct — the
+    mergeability a persisted sketch store rests on.  A day without rows
+    counts into ``missing_days``.
 
-    Window anchoring and the trailing-gap blind spot (ADVICE r13): the
-    default window is DATA-anchored at the observed max day
-    (``_recent_window_flag``, shared with every recent-vs-history
-    monitor), which catches leading and interior gaps but is inherently
-    blind to a TRAILING gap — a complete ingest stall re-anchors the
-    window at the last day that did arrive and reads as a full window.
-    Pass ``as_of_day`` (the caller's wall-clock UTC epoch-day, e.g.
-    ``int(time.time()) // 86400``) to anchor the window at now instead:
-    the window becomes (as_of_day - recent_days, as_of_day], stall days
-    count into ``missing_days``, and a fully stalled store reads
-    n_days 0 with missing_days = the expected span (healthy stays the
-    estimate-quality verdict — None with nothing to adjudicate — while
-    missing_days carries the gap signal, same as the default mode).  A
-    store with no rows at all still reads empty/None and never fires:
-    with no observed state the monitor cannot distinguish "stalled"
-    from "never deployed".
+    The default window is anchored at the observed max day, which sees
+    leading and interior gaps but not a trailing one (a stalled ingest
+    re-anchors the window at the last day that arrived).  Pass
+    ``as_of_day`` (the caller's UTC epoch-day, e.g. ``int(time.time())
+    // 86400``) to anchor at now: stall days then count as missing, and
+    a fully stalled store reads n_days 0 with missing_days = the
+    expected span.  A store with no rows at all reads empty/None.
 
     Returns ``{"days": [{"day": int, "exact": int, "est": int,
     "rel_err": float, "ok": bool}, ...], "n_days": int, "missing_days":
     int, "union_exact": int, "union_est": int, "union_ok": bool | None,
-    "healthy": bool | None}`` (plain dict, foreachBatch-safe).  An
-    empty window reads empty/None and never fires; ``healthy`` is True
-    iff every per-day estimate AND the union estimate sit within
-    ``tol`` relative error (lgK 12 ⇒ ~1.6 % stderr, so 5 % is a 3σ
-    gate; fleet-sized daily cardinalities sit in the sketch's sparse
-    regime where the estimate is exact).
-
-    Scale: the corpus-sized work is ONE map-side-combinable per-day
-    aggregate (partial state = one 4 KB sketch per day per partition,
-    plus the exact-distinct adjudication side — drop the exact columns
-    in production and the pass is pure sketch); the union rides the
-    ≤ ``recent_days``-row daily table; the final collect is
-    ≤ recent_days + 1 rows.  Persist the daily sketches next to the
-    stage zone and this health row needs no corpus rescan at all —
-    the x_active_users_hll store economics, monitored.
+    "healthy": bool | None}``; ``healthy`` iff every per-day estimate
+    and the union estimate sit within ``tol`` relative error (lgK 12 ⇒
+    ~1.6 % stderr, so 5 % is a 3σ gate).  Built-in ``hll_*`` functions
+    (also ``x_active_users_hll``).
     """
     df = spark.read.parquet(stage_path)
     v = df.filter(

@@ -185,82 +185,6 @@ def battery_transitions(stream: DataFrame, threshold: float = 4.0,
     )
 
 
-def battery_transitions_tws(stream: DataFrame, threshold: float = 4.0,
-                            ts_col: str = "event_ts",
-                            delay: str = "1 hour") -> DataFrame:
-    """``battery_transitions`` on the Spark 4 ``transformWithStateInPandas``
-    API (SPARK-49564) — same edge-triggered semantics, state held in a
-    named ``ValueState`` instead of the single opaque ``GroupState`` tuple.
-
-    Why both exist: ``applyInPandasWithState`` is the stable escape hatch;
-    transformWithState is where streaming state is headed (multiple named
-    state variables, timers, TTL, RocksDB-backed) — at 100 TB the RocksDB
-    provider it requires is also what bounds executor memory for large
-    device populations.  Requires
-    ``spark.sql.streaming.stateStore.providerClass=RocksDBStateStoreProvider``
-    and the ``protobuf`` package (the TWS streaming Python runner's
-    state-server wire protocol imports ``google.protobuf`` at startup —
-    the equivalence test skips itself where protobuf is absent).
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    thr = float(threshold)
-
-    class _Detector(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("battery", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001
-            if self._state.exists():
-                was_low, last_seen = self._state.get()
-            else:
-                was_low, last_seen = None, 0
-            out_rows = []
-            # concat-then-sort across Arrow chunks (same late-row rationale
-            # as battery_transitions: per-chunk sorting would drop earlier
-            # timestamps arriving in a later chunk)
-            pdf = pd.concat(list(rows), ignore_index=True).sort_values("date_time")
-            for row in pdf.itertuples(index=False):
-                if int(row.date_time) < int(last_seen):
-                    continue
-                is_low = bool(row.battery_voltage < thr)
-                if was_low is None:
-                    if is_low:
-                        out_rows.append(
-                            (key[0], int(row.date_time),
-                             float(row.battery_voltage), "enter_low")
-                        )
-                elif is_low != was_low:
-                    out_rows.append(
-                        (key[0], int(row.date_time), float(row.battery_voltage),
-                         "enter_low" if is_low else "exit_low")
-                    )
-                was_low = is_low
-                last_seen = int(row.date_time)
-            self._state.update(
-                (bool(was_low) if was_low is not None else False, last_seen)
-            )
-            if out_rows:
-                yield pd.DataFrame(
-                    out_rows,
-                    columns=["deviceid", "date_time", "battery_voltage", "transition"],
-                )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.withWatermark(ts_col, delay)
-        .groupBy("deviceid")
-        .transformWithStateInPandas(
-            statefulProcessor=_Detector(),
-            outputStructType=TRANSITION_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # streaming funnel — cross-batch incremental counterpart of plans/tierd.py
 # q_funnel (same strict min-timestamp chain, state = 3 timestamps/user)

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import json
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -242,60 +241,6 @@ def test_stream_stream_interval_join(spark, tmp_path):
         for r in spark.sql("SELECT * FROM ssj_out").collect()
     )
     assert rows == [(1, 3.9, 60), (1, 4.2, 360)]
-
-
-def test_battery_transitions_tws_matches_legacy(spark, tmp_path):
-    """transformWithStateInPandas variant (Spark 4 StatefulProcessor +
-    RocksDB provider) produces the same edge-triggered output as the
-    applyInPandasWithState implementation on the same two-batch stream.
-
-    Skipped where protobuf is absent: the TWS streaming Python runner
-    imports google.protobuf at startup (state-server wire protocol) and
-    crashes without it — an environment requirement, not a code path we
-    can gate inside the operator.  Re-checked each round through r9:
-    the build container ships no protobuf and forbids installs, so this
-    skip is PERMANENT for this environment (VERDICT r8 #7); the
-    applyInPandasWithState twin above runs identical edge-trigger
-    semantics un-skipped, so the operator behavior itself is covered."""
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithState runner requires protobuf"
-    )
-    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.streaming.stateful import (
-        battery_transitions_tws,
-    )
-
-    landing = tmp_path / "landing_tws"
-    landing.mkdir()
-    _write(landing / "b1.json", [
-        _row(1, 1, T0, bv=5.0),
-        _row(1, 2, T0 + 60, bv=3.5),   # enter_low
-        _row(1, 3, T0 + 120, bv=3.6),  # still low → no output
-    ])
-    _write(landing / "b2.json", [
-        _row(1, 4, T0 + 180, bv=3.9),  # still low (state carried) → no output
-        _row(1, 5, T0 + 240, bv=4.5),  # exit_low
-        _row(2, 6, T0 + 300, bv=3.0),  # first observation already low
-    ])
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = _run(spark, landing, battery_transitions_tws, "transitions_tws_out")
-        rows = sorted(
-            [(r["deviceid"], r["date_time"], r["transition"]) for r in out.collect()]
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    assert rows == [
-        (1, T0 + 60, "enter_low"),
-        (1, T0 + 240, "exit_low"),
-        (2, T0 + 300, "enter_low"),
-    ]
 
 
 def test_streaming_funnel_matches_batch_chain(spark, tmp_path):

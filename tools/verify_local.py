@@ -66,6 +66,9 @@ def _hash_rows(cols: list[str], rows: list[tuple]) -> str:
 def main() -> int:
     import duckdb
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.session import get_spark
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.storage import (
+        release_scope,
+    )
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
@@ -92,9 +95,10 @@ def main() -> int:
     for key in keys:
         t0 = time.time()
         try:
-            sdf = qs[key](spark, SF_DIR)
-            spark_rows = [tuple(r) for r in sdf.collect()]
-            spark_cols = list(sdf.columns)
+            with release_scope():  # free the key's stored blocks after it
+                sdf = qs[key](spark, SF_DIR)
+                spark_rows = [tuple(r) for r in sdf.collect()]
+                spark_cols = list(sdf.columns)
         except Exception as e:  # noqa: BLE001
             failures.append((key, f"SPARK ERROR: {type(e).__name__}: {str(e)[:300]}"))
             print(f"[FAIL] {key}: spark error")
