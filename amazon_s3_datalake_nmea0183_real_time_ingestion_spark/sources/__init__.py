@@ -1,4 +1,4 @@
 """Batch/stream sources and catalog registration."""
 
 from .nmea_source import NmeaDataSource, register_nmea_source  # noqa: F401
-from .tables import TABLE_NAMES, load_table, load_tables, register_temp_views  # noqa: F401
+from .tables import load_table  # noqa: F401

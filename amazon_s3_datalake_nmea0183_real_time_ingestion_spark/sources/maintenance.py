@@ -358,7 +358,9 @@ def sprt_monitor_report(
     "decided_day": int | None}``.
     Core: ``operators/stats.py::sprt`` (also ``x_sprt``).
     """
-    df = spark.read.parquet(stage_path)
+    # a NULL-timestamp row has no day: unscreened it would form a NULL day
+    # that the running sum orders first, adding a day and its trials
+    df = spark.read.parquet(stage_path).filter(F.col(ts_col).isNotNull())
     d = df.groupBy(_epoch_day(ts_col).alias("day")).agg(
         F.count("*").alias("n"),
         # coalesce per row so an all-NULL day yields k = 0, not a NULL

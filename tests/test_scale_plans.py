@@ -635,6 +635,26 @@ def test_sprt_monitor_sticky_across_batches(spark, tmp_path):
     assert r3["decided_day"] == first_crossing
 
 
+def test_sprt_monitor_skips_null_timestamps(spark, tmp_path):
+    """A NULL-timestamp stage row has no day: it must add neither a day
+    nor a trial to the SPRT replay, as every other stage monitor screens
+    it out."""
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
+        sprt_monitor_report,
+    )
+
+    day0 = 1_700_000_000 - (1_700_000_000 % 86400)  # midnight-aligned
+    rows = [(1, day0 + d * 86400 + i * 60, 10.5 if i < 2 else 12.5)
+            for d in range(3) for i in range(10)]
+    rows += [(1, None, 10.5)] * 5
+    path = str(tmp_path / "stage")
+    spark.createDataFrame(
+        rows, "deviceid int, date_time int, battery_voltage double"
+    ).write.parquet(path)
+    r = sprt_monitor_report(spark, path)
+    assert r["n_days"] == 3 and r["cum_n"] == 30 and r["cum_k"] == 6
+
+
 def test_mann_whitney_monitor_detects_recent_shift(spark, tmp_path):
     """The maintenance-cadence Mann–Whitney monitor (streaming twin of
     x_mann_whitney, r10): values jump from ~10 V to ~14 V in the last
