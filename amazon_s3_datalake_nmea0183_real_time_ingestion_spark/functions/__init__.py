@@ -10,20 +10,17 @@ from .nmea import (  # noqa: F401
     nmea_tokens,
     signed_latitude,
     signed_longitude,
-    signed_latitude_reference_compat,
     signed_longitude_reference_compat,
 )
 from .datetime_fns import event_partition_cols  # noqa: F401
 from .hashing import md5_i64, md5_u32, minhash_permuted  # noqa: F401
 from .text import (  # noqa: F401
-    char_ngrams,
     char_ngrams_from_lower,
     doc_fingerprint,
     quality_score,
     shingles_from_tokens,
     token_count,
     tokens,
-    word_shingles,
 )
 from .sql_udfs import register_sql_functions  # noqa: F401
 from .vectors import cosine_similarity, dot, l2_norm  # noqa: F401

@@ -82,12 +82,6 @@ def signed_longitude(tokens: Column) -> Column:
     return _signed(F.try_element_at(tokens, F.lit(8)), F.try_element_at(tokens, F.lit(9)), "W")
 
 
-def signed_latitude_reference_compat(tokens: Column) -> Column:
-    """Bit-for-bit reference behavior — identical to :func:`signed_latitude`
-    (latitude is the first branch of the reference's if/elif)."""
-    return signed_latitude(tokens)
-
-
 def signed_longitude_reference_compat(tokens: Column) -> Column:
     """Bit-for-bit reference behavior including the ``elif`` bug
     (hello.py:85-89): W-longitude is negated ONLY when latitude was not S."""

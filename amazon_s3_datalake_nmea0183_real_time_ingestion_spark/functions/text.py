@@ -43,27 +43,11 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     return F.transform(idx, lambda i: F.array_join(F.slice(toks, i, k), " "))
 
 
-def word_shingles(text: Column | str, k: int = 3) -> Column:
-    """Array of k-word shingles straight from raw text.
-
-    Convenience for small inputs/tests; hot paths should ``select`` the
-    token array first and call :func:`shingles_from_tokens` (see its
-    docstring for the per-element re-evaluation trap)."""
-    return shingles_from_tokens(tokens(text), k)
-
-
 def char_ngrams_from_lower(low: Column, n: int = 5) -> Column:
     """Array of character n-grams from an already-lower-cased attribute
     column (same per-element re-evaluation trap as shingles)."""
     idx = F.sequence(F.lit(1), F.greatest(F.length(low) - (n - 1), F.lit(1)))
     return F.transform(idx, lambda i: F.substring(low, i, n))
-
-
-def char_ngrams(text: Column | str, n: int = 5) -> Column:
-    """Array of character n-grams of the lower-cased text (convenience;
-    hot paths pre-materialize the lower-cased column)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return char_ngrams_from_lower(F.lower(c), n)
 
 
 def stopword_ratio(text: Column | str) -> Column:

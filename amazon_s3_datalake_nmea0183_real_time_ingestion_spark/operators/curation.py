@@ -198,35 +198,6 @@ def global_shuffle(df: DataFrame, id_col: str = "doc_id", n_shards: int = 8,
     )
 
 
-def token_budget_select(df: DataFrame, score_col: str, token_col: str = "n_tokens",
-                        domain_col: str = "source", id_col: str = "doc_id",
-                        budget: int = 1500) -> DataFrame:
-    """Greedy per-domain token-budget selection: take documents in
-    descending ``score_col`` order (id as tiebreak) until the domain's
-    token budget is exhausted — the "best documents first, stop at N
-    billion tokens" step that sizes each mixture component of a training
-    set.  A document is kept iff it STARTS under budget (the standard
-    greedy-prefix rule, so the last document may straddle the line).
-
-    Adds ``cum_before`` (tokens already taken when this doc was
-    considered) and keeps only selected rows.
-
-    Scale: one shuffle on ``domain_col`` + per-domain sort for the
-    running-sum window — identical shape to :func:`pack_sequences`; rank
-    ordering by score requires score to be engine-deterministic (integer
-    ratios or raw doubles, never rounded floats).
-    """
-    w = (
-        Window.partitionBy(domain_col)
-        .orderBy(F.col(score_col).desc(), F.col(id_col).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum_before = (F.sum(token_col).over(w) - F.col(token_col)).cast("bigint")
-    return df.withColumn("cum_before", cum_before).filter(
-        F.col("cum_before") < budget
-    )
-
-
 def curriculum_order(df: DataFrame, score_col: str, id_col: str = "doc_id",
                      n_shards: int = 8, salt: str = "curr") -> DataFrame:
     """Curriculum data ordering, the distributed way: shard assignment is

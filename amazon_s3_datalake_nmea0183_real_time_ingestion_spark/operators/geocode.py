@@ -9,7 +9,8 @@ is a hash-probe inside whole-stage codegen with zero shuffle.
 
 The dimension is *deterministic* — every attribute is a pure arithmetic
 function of the cell id — so any SQL oracle can regenerate it exactly
-(see plans/oracle_fragments.geo_dim_sql).
+(the ``op_geocode_join`` oracle in plans/tiera.py does, from the
+grid-cell formula).
 """
 
 from __future__ import annotations
@@ -41,22 +42,24 @@ def build_geo_dim(spark: SparkSession) -> DataFrame:
     """The deterministic geo dimension: cell -> 9 enrichment attributes
     (the exact attribute set the reference pulls from Amazon Location,
     hello.py:148-156).  timezone_offset is seconds east of UTC derived from
-    the cell's longitude band (15° per hour)."""
-    cell = F.col("id")
-    lon_west = (cell % 360) - 180  # western edge of the cell, degrees
-    return spark.range(GRID_CELLS).select(
-        cell.alias("geo_cell"),
-        (cell % 9999 + 1).cast("string").alias("addressnumber"),
-        F.concat(F.lit("Street "), (cell % 1000).cast("string")).alias("street"),
-        F.concat(F.lit("City-"), (cell % 500).cast("string")).alias("municipality"),
-        F.concat(F.lit("Region-"), (cell % 100).cast("string")).alias("region"),
-        F.concat(F.lit("Sub-"), (cell % 200).cast("string")).alias("subregion"),
-        F.lpad((cell % 100000).cast("string"), 5, "0").alias("postalcode"),
-        F.concat(F.lit("Country-"), (cell % 240).cast("string")).alias("country"),
-        F.concat(F.lit("Zone/"), (cell % 24).cast("string")).alias("timezone_name"),
-        (F.floor((lon_west + 180) / 15) * 3600 - 12 * 3600)
-        .cast("int")
-        .alias("timezone_offset"),
+    the cell's longitude band (15° per hour): ``(id % 360) - 180`` is the
+    cell's western edge in degrees.
+
+    Written as one ``selectExpr`` of SQL strings, so the plan is built
+    with one py4j call instead of ~40 Column calls; every pipeline start
+    and every ``op_geocode_join`` build calls this."""
+    return spark.range(GRID_CELLS).selectExpr(
+        "id AS geo_cell",
+        "CAST(id % 9999 + 1 AS STRING) AS addressnumber",
+        "concat('Street ', CAST(id % 1000 AS STRING)) AS street",
+        "concat('City-', CAST(id % 500 AS STRING)) AS municipality",
+        "concat('Region-', CAST(id % 100 AS STRING)) AS region",
+        "concat('Sub-', CAST(id % 200 AS STRING)) AS subregion",
+        "lpad(CAST(id % 100000 AS STRING), 5, '0') AS postalcode",
+        "concat('Country-', CAST(id % 240 AS STRING)) AS country",
+        "concat('Zone/', CAST(id % 24 AS STRING)) AS timezone_name",
+        "CAST(floor(((id % 360) - 180 + 180) / 15) * 3600 - 12 * 3600 AS INT)"
+        " AS timezone_offset",
     )
 
 

@@ -20,13 +20,14 @@ would have to match.
 Scale shape: codebook training is ONE corpus shuffle per Lloyd round
 (the per-(subspace, code, position) mean aggregation — map-side
 combinable, output m × ksub × dim/m rows); seed assignment and final
-encoding are map-side.  Two interchangeable encode kernels: the
-declarative HOF form against the 1-row broadcast codebook nest (the
-engine-independent semantic contract the oracle replays) and
-``pq_encode_blas`` — the production kernel (Spark HOFs are
-CodegenFallback/interpreted; the BLAS twin does the same arithmetic in
+encoding are map-side.  Training, reporting and every registered key
+encode through ``pq_encode_blas`` — the production kernel (Spark HOFs
+are CodegenFallback/interpreted; the BLAS kernel does the arithmetic in
 m matmul/argmin passes per Arrow batch, the sanctioned python-eval
-contract shared with the IVF BLAS argmax).  The codebook is
+contract shared with the IVF BLAS argmax).  ``pq_encode`` is the
+declarative HOF form against the 1-row broadcast codebook nest: the
+engine-independent semantic contract the oracle replays, kept as the
+reference the BLAS kernel is pinned rowwise-equal to.  The codebook is
 m·ksub·(dim/m) doubles — CONSTANT in corpus size, so collecting or
 broadcasting it is control-plane at any scale.
 
@@ -220,25 +221,23 @@ def pq_encode_blas(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8,
 
 def pq_train(df: DataFrame, dim: int, m: int = 8, ksub: int = 16,
              id_col: str = "vec_id", vec_col: str = "embedding",
-             iters: int = 1, use_blas: bool = False) -> DataFrame:
+             iters: int = 1) -> DataFrame:
     """Learn per-subspace codebooks: deterministic seeding (the ``ksub``
     lowest-id vectors' sub-vectors, code_id = their id — the
     seed_centroids convention) + ``iters`` Lloyd rounds of squared-L2
     assignment and per-position means (round 6).  Returns (subspace,
     code_id, codeword) rows — m × ksub × (dim/m) doubles, KBs.
 
-    Each round costs one corpus shuffle (the mean agg; assignment rides
-    map-side on the broadcast nest).  Codes that lose every member drop
-    out, standard Lloyd — code_ids are identities, not positions, so a
-    sparse codebook encodes/decodes unambiguously.
+    Each round costs one corpus shuffle (the mean agg; assignment runs
+    map-side through :func:`pq_encode_blas`).  Codes that lose every
+    member drop out, standard Lloyd — code_ids are identities, not
+    positions, so a sparse codebook encodes/decodes unambiguously.
     """
     assert dim % m == 0, "dim must split evenly into m subspaces"
     dsub = dim // m
     subspaces = list(range(m))
-    # materialize the double cast ONCE: an inline as_double expression
-    # referenced inside the encode lambdas is re-evaluated per codeword
-    # (the HOF re-evaluation trap) — m·ksub casts of a 64-wide array per
-    # row instead of one
+    # materialize the double cast ONCE: the seed slices and the
+    # per-subspace means below all read it
     base = df.select(F.col(id_col), as_double(F.col(vec_col)).alias("__dv"))
     cb = base.filter(F.col(id_col) < ksub).select(
         *[
@@ -253,19 +252,11 @@ def pq_train(df: DataFrame, dim: int, m: int = 8, ksub: int = 16,
         "e.subspace", "e.code_id", "e.codeword"
     )
     for _ in range(iters):
-        if use_blas:
-            coded = pq_encode_blas(
-                base, cb, dim, m, "__dv", with_recon=False
-            ).select(
-                F.col(id_col), F.col("pq_codes").alias("__codes"), F.col("__dv")
-            )
-        else:
-            nest = _nest_codebooks(cb)
-            coded = base.crossJoin(nest).select(
-                F.col(id_col),
-                _encode_col(F.col("__dv"), F.col("cbs"), m, dsub).alias("__codes"),
-                F.col("__dv"),
-            )
+        coded = pq_encode_blas(
+            base, cb, dim, m, "__dv", with_recon=False
+        ).select(
+            F.col(id_col), F.col("pq_codes").alias("__codes"), F.col("__dv")
+        )
         # one shuffle: (subspace, code, position-within-subspace) means
         sub_rows = coded.select(
             F.col(id_col),
@@ -298,10 +289,12 @@ def pq_train(df: DataFrame, dim: int, m: int = 8, ksub: int = 16,
 
 
 def pq_encode(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8,
-              vec_col: str = "embedding", use_blas: bool = False) -> DataFrame:
+              vec_col: str = "embedding") -> DataFrame:
     """Attach ``pq_codes`` (array<int>, the m-byte stored form) and
     ``pq_recon`` (array<double>, the decoded view ADC search scores
-    against) — map-side only, 1-row codebook nest broadcast.
+    against) — map-side only, 1-row codebook nest broadcast.  The
+    declarative reference that :func:`pq_encode_blas` is pinned
+    rowwise-equal to; no key runs it.
 
     Three separate projections on purpose: the double cast, the code
     array, and the reconstruction are each referenced multiple times by
@@ -310,8 +303,6 @@ def pq_encode(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8,
     referencing an inline encode expression re-ran the full m·ksub
     scoring m times per row (measured: the 168 s sf0.1 wall dropped to
     seconds when materialized)."""
-    if use_blas:
-        return pq_encode_blas(df, codebooks, dim, m, vec_col)
     dsub = dim // m
     nest = _nest_codebooks(codebooks)
     prep = df.select(
@@ -330,8 +321,7 @@ def pq_encode(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8,
 
 
 def pq_report(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8,
-              id_col: str = "vec_id", vec_col: str = "embedding",
-              use_blas: bool = False) -> DataFrame:
+              id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Per-vector PQ audit: the code string (``c0-c1-…``, the stored
     bytes made hash-comparable), reconstruction MSE, worst absolute
     component error, and cosine fidelity — the commit gate before
@@ -347,7 +337,7 @@ def pq_report(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8,
     dfd = df.select(
         F.col(id_col), as_double(F.col(vec_col)).alias("__dv")
     )
-    q = pq_encode(dfd, codebooks, dim, m, "__dv", use_blas=use_blas).select(
+    q = pq_encode_blas(dfd, codebooks, dim, m, "__dv").select(
         F.col(id_col),
         F.col("__dv"),
         F.col("pq_codes"),

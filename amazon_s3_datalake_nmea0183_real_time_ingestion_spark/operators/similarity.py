@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import as_double, dot_double
-from ..storage import stored
 
 
 def prep_vectors(df: DataFrame, id_col: str, vec_col: str, out_id: str,
@@ -95,33 +94,6 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     return _ranked_topk(scored, k)
 
 
-def cosine_topk_blocked(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                        id_col: str = "vec_id", vec_col: str = "embedding",
-                        n_blocks: int = 4) -> DataFrame:
-    """Brute-force top-k for query sets TOO BIG to broadcast at once
-    (SCALE.md §5): split queries into ``n_blocks`` hash blocks, broadcast
-    one block at a time, union the per-block results.  Result is
-    identical to :func:`cosine_topk`; peak broadcast memory drops
-    ``n_blocks×``.  Each block's scan of the corpus is an independent
-    job, so at 100 TB this trades one giant broadcast for ``n_blocks``
-    sequential (or concurrently-submitted) corpus passes — the right
-    trade when queries ≫ broadcast threshold but ≪ corpus.
-    """
-    from functools import reduce as _reduce
-
-    blocks = [
-        cosine_topk(
-            corpus,
-            # hash-based blocking: works for any id type (a numeric pmod
-            # would ANSI-fail or NULL out on string ids)
-            queries.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)) == b),
-            k, id_col, vec_col,
-        )
-        for b in range(n_blocks)
-    ]
-    return _reduce(lambda a, b: a.unionByName(b), blocks)
-
-
 def label_centroids(corpus: DataFrame, label_col: str = "label",
                     vec_col: str = "embedding", round_to: int = 6) -> DataFrame:
     """Elementwise mean vector per label group, components rounded so the
@@ -183,89 +155,6 @@ def assign_to_centroids(corpus: DataFrame, centroids: DataFrame,
         .filter(F.col("rn") <= n_probe)
         .select(id_col, "vd", "vn", F.col("centroid_id").alias("cluster"))
     )
-
-
-def assign_to_centroids_blas(corpus: DataFrame, centroids: DataFrame,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding") -> DataFrame:
-    """Exact nearest-centroid assignment with the argmax computed as an
-    Arrow-batched BLAS matmul — same contract as
-    :func:`assign_to_centroids` (n_probe=1): round-6 cosine, ties →
-    lowest centroid_id, zero-norm sims sort last; output columns
-    (id, vd, vn, cluster) with ``cluster`` as long.
-
-    Why it exists: the declarative argmax is a broadcast nested-loop
-    join whose per-pair kernel is an aggregate-lambda fold — fine for
-    fixed small k, but the production SemDeDup configuration scales the
-    centroid count WITH the corpus (k ∝ n, constant target cell size),
-    which makes assignment the dominant stage (n·k·d multiply-adds) and
-    the per-pair fold the wrong kernel for it.  The same FLOPs as one
-    (batch × d) @ (d × k) matmul run ~20× faster through BLAS — this is
-    the sanctioned vectorized-Pandas-UDF exception (Arrow batches, no
-    per-row Python), the CPU analog of the GPU matmul the SemDeDup paper
-    assigns with.
-
-    Centroids are collected and closure-broadcast: k×d doubles (400 KB
-    at k=800, d=64) — fine up to ~1M centroids; beyond that a
-    hierarchical coarse quantizer owns the probe (documented in
-    SCALE.md §7g).
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, LongType, StructField, StructType,
-    )
-
-    rows = sorted(
-        centroids.select("centroid_id", "centroid").collect(),
-        key=lambda r: int(r["centroid_id"]),
-    )
-    cid = np.array([int(r["centroid_id"]) for r in rows], dtype=np.int64)
-    C = np.array([list(r["centroid"]) for r in rows], dtype=np.float64)
-    cn = np.sqrt((C * C).sum(axis=1))
-    cn[cn == 0] = np.nan  # zero-norm centroid → NaN sim → sorts last below
-    Cu = C / cn[:, None]
-
-    out_schema = StructType(
-        [
-            corpus.schema[id_col],
-            StructField("vd", ArrayType(DoubleType())),
-            StructField("vn", DoubleType()),
-            StructField("cluster", LongType()),
-        ]
-    )
-
-    def _assign(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            vn = np.sqrt((V * V).sum(axis=1))
-            # zero-norm corpus rows are SCREENED, matching the declarative
-            # path's prep_vectors guard (the x_sim_* family contract,
-            # adjudicated by x_sim_zero_norm) — a degenerate vector is
-            # never assigned by any kernel
-            keep = vn > 0
-            if not keep.all():
-                pdf, V, vn = pdf[keep], V[keep], vn[keep]
-            if pdf.empty:
-                continue
-            sims = np.round((V @ Cu.T) / vn[:, None], 6)
-            # NaN here can only come from a zero-norm CENTROID; it loses
-            # to every number — identical to the window's DESC NULLS LAST
-            # + id tie-break
-            sims = np.where(np.isnan(sims), -np.inf, sims)
-            best = sims.argmax(axis=1)  # first max = lowest centroid_id
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "vd": list(V),
-                    "vn": vn,
-                    "cluster": cid[best],
-                }
-            )
-
-    return corpus.select(id_col, vec_col).mapInPandas(_assign, out_schema)
 
 
 def _two_level_probe(corpus: DataFrame, centroids: DataFrame,
@@ -397,9 +286,8 @@ def assign_to_centroids_2level(corpus: DataFrame, centroids: DataFrame,
     """Two-level IVF assignment — the distribution fix for k ∝ n centroid
     tables (VERDICT r5 "What's wrong" #3): when the centroid count grows
     with the corpus (constant target cell size, the SemDeDup production
-    posture), the flat paths (:func:`assign_to_centroids` broadcast
-    nested-loop, :func:`assign_to_centroids_blas` collected matmul) both
-    ship a corpus-proportional table to every task, which stops working
+    posture), the flat :func:`assign_to_centroids` broadcast nested loop
+    ships a corpus-proportional table to every task, which stops working
     long before 100 TB.  Here NOTHING corpus-proportional is ever
     broadcast or collected:
 
@@ -469,10 +357,8 @@ def assign_to_centroids_2level_blas(corpus: DataFrame, centroids: DataFrame,
                                     n_probe_super: int | None = None) -> DataFrame:
     """Two-level assignment with the per-cell argmax computed as an
     Arrow-batched BLAS matmul via COGROUPED ``applyInPandas`` — the fully
-    distributed exact k ∝ n kernel: unlike
-    :func:`assign_to_centroids_blas` (which collects the whole centroid
-    table driver-side), nothing corpus-proportional is broadcast OR
-    collected — vectors and centroids meet per super-cell through the
+    distributed exact k ∝ n kernel: nothing corpus-proportional is
+    broadcast OR collected — vectors and centroids meet per super-cell through the
     cogroup's keyed shuffle, and the inner loop is one
     (cell_vectors × d) @ (d × cell_centroids) dgemm per cell instead of
     the per-pair HOF fold.  This is the "route by super-cell first,
@@ -486,8 +372,7 @@ def assign_to_centroids_2level_blas(corpus: DataFrame, centroids: DataFrame,
     test_scale_probes.  Cross-cell resolution after the per-cell argmax
     is a window over ≤ n_probe candidate rows per vector — negligible.
 
-    Known boundary (shared with :func:`assign_to_centroids_blas` and
-    documented in registry.py): ``np.round`` is ties-to-even on the
+    Known boundary (documented in registry.py): ``np.round`` is ties-to-even on the
     binary value while Spark's ``round`` is HALF_UP on the shortest
     decimal repr, so a cosine landing EXACTLY on a 6th-decimal half-tie
     (a dyadic like 1/128) can round one ulp apart and, if two centroids
@@ -688,14 +573,20 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame,
     return _ranked_topk(scored, k)
 
 
-def semantic_dedup_pairs(corpus: DataFrame, centroids: DataFrame,
-                         id_col: str = "vec_id", vec_col: str = "embedding",
+def semantic_dedup_pairs(assigned: DataFrame, id_col: str = "vec_id",
                          threshold: float = 0.99,
-                         max_cell: int | None = None,
-                         use_blas: bool = False) -> DataFrame:
-    """SemDeDup candidate pairs (Abbas et al. 2023): assign every vector
-    to its nearest centroid (broadcast argmax), emit within-cell pairs
-    with cosine >= ``threshold`` (rounded to 6, id_a < id_b).
+                         max_cell: int | None = None) -> DataFrame:
+    """SemDeDup candidate pairs (Abbas et al. 2023): over an assignment
+    frame ``(id_col, vd, vn, cluster)`` — the output of any
+    ``assign_to_centroids*`` kernel — emit within-cell pairs with
+    cosine >= ``threshold`` (rounded to 6, id_a < id_b).  The caller
+    picks the kernel: the broadcast argmax (:func:`assign_to_centroids`)
+    for a fixed small k, the two-level cogrouped BLAS argmax
+    (:func:`assign_to_centroids_2level_blas`, probe-all = identical
+    assignments) when k scales with the corpus.  The assignment is read
+    three times (the cell-size window and both pair-join sides); a
+    declarative assignment shares one exchange through ReuseExchange,
+    a Pandas-stage one does not, so the BLAS caller stores it first.
 
     ``max_cell`` is the hot-cell guard, the embedding-space twin of
     ``lsh_candidate_pairs(max_bucket=...)``: a cell holding c vectors
@@ -708,24 +599,7 @@ def semantic_dedup_pairs(corpus: DataFrame, centroids: DataFrame,
     the corpus).  The cell-size window rides the same cluster shuffle
     the pair join needs.  Default None keeps generation exhaustive (the
     oracle mode).
-
-    ``use_blas=True`` swaps the assignment stage for the two-level
-    cogrouped BLAS argmax (:func:`assign_to_centroids_2level_blas`,
-    probe-all = identical assignments) — the right kernel when k scales
-    with the corpus: nothing corpus-proportional is broadcast or
-    collected (the flat :func:`assign_to_centroids_blas` collects the
-    whole k ∝ n centroid table driver-side — the exact failure VERDICT
-    r6 #1 flagged in this path).
     """
-    if use_blas:
-        # Materialize the assignment ONCE: it has three consumers below
-        # (the cell-size window and both pair-join sides), and unlike the
-        # declarative path's shared exchange, three copies of the
-        # cogrouped-applyInPandas stage do not collapse via ReuseExchange
-        # — measured 2.4× end-to-end at sf1 (SCALE.md §7g).
-        asg = assign_to_centroids_2level_blas(corpus, centroids, id_col, vec_col)
-    else:
-        asg = assign_to_centroids(corpus, centroids, id_col, vec_col)
     # Zero-norm (degenerate) vectors are dropped EXPLICITLY rather than
     # relying on try_divide->NULL failing the sim threshold: DuckDB's
     # list_cosine_similarity yields NaN for a zero vector and DuckDB
@@ -735,9 +609,7 @@ def semantic_dedup_pairs(corpus: DataFrame, centroids: DataFrame,
     # filter (mirrored in every oracle via list_dot_product(v,v) > 0)
     # pins both engines to the same row set; it also keeps degenerate
     # rows out of the max_cell cell-size counts below.
-    asg = asg.filter(F.col("vn") > 0)
-    if use_blas:
-        asg = stored(asg)
+    asg = assigned.filter(F.col("vn") > 0)
     if max_cell is not None:
         w = Window.partitionBy("cluster")
         asg = (
@@ -765,26 +637,21 @@ def semantic_dedup_pairs(corpus: DataFrame, centroids: DataFrame,
     )
 
 
-def semantic_cell_report(corpus: DataFrame, centroids: DataFrame,
-                         id_col: str = "vec_id", vec_col: str = "embedding",
-                         max_cell: int | None = None,
-                         use_blas: bool = False) -> DataFrame:
+def semantic_cell_report(assigned: DataFrame,
+                         max_cell: int | None = None) -> DataFrame:
     """Cell census for the SemDeDup guard — (cluster, cell_size, dropped)
-    per IVF cell, where ``dropped`` marks cells the ``max_cell`` cap
-    would exclude from pair generation.  A cap that binds on a handful
-    of viral cells is working; a cap that binds BROADLY is a recall bug
-    masquerading as a speedup (SCALE.md §7g's stride-50 probe: the cap
+    per IVF cell of an assignment frame ``(id, vd, vn, cluster)``, where
+    ``dropped`` marks cells the ``max_cell`` cap would exclude from pair
+    generation.  A cap that binds on a handful of viral cells is
+    working; a cap that binds BROADLY is a recall bug masquerading as a
+    speedup (SCALE.md §7g's stride-50 probe: the cap
     silently swallowed ~90% of the pair mass).  Production runs this
     census on the same cadence as the dedup itself and alerts on the
     dropped-cell fraction — it rides the identical assignment + one
     keyed count, so it costs one aggregation over work the dedup already
     does."""
-    if use_blas:
-        asg = assign_to_centroids_2level_blas(corpus, centroids, id_col, vec_col)
-    else:
-        asg = assign_to_centroids(corpus, centroids, id_col, vec_col)
     sz = (
-        asg.filter(F.col("vn") > 0)
+        assigned.filter(F.col("vn") > 0)
         .groupBy("cluster")
         .agg(F.count("*").alias("cell_size"))
     )
@@ -794,12 +661,11 @@ def semantic_cell_report(corpus: DataFrame, centroids: DataFrame,
     return sz.select("cluster", "cell_size", dropped.cast("int").alias("dropped"))
 
 
-def semantic_dedup(corpus: DataFrame, centroids: DataFrame,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
+def semantic_dedup(assigned: DataFrame, id_col: str = "vec_id",
                    threshold: float = 0.99,
-                   max_cell: int | None = None,
-                   use_blas: bool = False) -> DataFrame:
-    """Keep-lowest-id SemDeDup collapse: each duplicate reports its
+                   max_cell: int | None = None) -> DataFrame:
+    """Keep-lowest-id SemDeDup collapse over an assignment frame
+    ``(id_col, vd, vn, cluster)``: each duplicate reports its
     lowest-id SIMILAR NEIGHBOR (dropped_id, kept_by, cos_sim) — one keyed
     agg riding the pair shuffle.
 
@@ -811,9 +677,7 @@ def semantic_dedup(corpus: DataFrame, centroids: DataFrame,
     survivor — or run connected_components over the pairs (the
     x_dedup_cluster path) when a canonical representative per clique is
     required."""
-    pairs = semantic_dedup_pairs(
-        corpus, centroids, id_col, vec_col, threshold, max_cell, use_blas
-    )
+    pairs = semantic_dedup_pairs(assigned, id_col, threshold, max_cell)
     return pairs.groupBy(F.col("id_b").alias("dropped_id")).agg(
         F.min("id_a").cast("long").alias("kept_by"),
         F.expr("min_by(sim, id_a)").alias("cos_sim"),

@@ -30,33 +30,38 @@ from . import tierm  # noqa: F401,E402
 #   4. the keys where only a join's build side flipped;
 #   5. the previous window, in its order, up to the 50-key cut.
 _NEEDS_VERDICT = [
-    # statistic now computed by an operators/stats.py core (slots 1-12)
+    # own code now calls one vector kernel directly (SemDeDup takes an
+    # assignment frame, PQ always encodes through pq_encode_blas) or
+    # builds the geo dimension with one selectExpr (slots 1-6)
+    "x_dedup_semantic", "x_dedup_semantic_guarded", "x_embed_pq",
+    "x_sim_pq", "x_sim_ivfpq", "op_geocode_join",
+    # statistic now computed by an operators/stats.py core (slots 7-18)
     "x_drift_psi", "x_cusum_changepoint", "x_forecast_mase", "x_sprt",
     "x_mann_whitney", "x_auc", "x_ks_test", "x_diff_in_diff", "x_survival",
     "x_benford", "x_gini_concentration", "x_source_kl",
-    # executed join strategy changed without its forced hint (slot 13)
+    # executed join strategy changed without its forced hint (slot 19)
     "x_sim_ivf_2level",
     # their own code lost an option / was measured for the hint rule
-    # (slots 14-15)
+    # (slots 20-21)
     "x_curate_corpus", "x_kcore",
-    # only a join build side flipped (slots 16-19)
+    # only a join build side flipped (slots 22-25)
     "x_bm25", "x_rank_fusion", "x_sim_ivf_2level_exact",
     "x_split_cluster_safe",
-    # carried from the previous window, in its order (slots 20-50)
+    # carried from the previous window, in its order (slots 26-50)
     "q_triangle_count_guarded", "x_pagerank_guarded", "x_lpa_guarded",
     "x_dedup_cluster", "x_dedup_cluster_guarded", "x_dedup_cluster_star",
     "x_dedup_census", "x_split_leakage", "x_dedup_best",
     "x_dedup_best_guarded", "x_dedup_ngram", "x_dedup_containment",
     "x_dedup_containment_guarded", "x_dedup_simhash", "x_pagerank",
     "q_triangle_count", "x_dedup_ledger_near", "x_lpa", "x_link_adamic",
-    "x_dedup_semantic_guarded", "x_bpe_tokenize", "x_vocab_bpe",
+    "x_bpe_tokenize", "x_vocab_bpe",
     "x_hll_intersect", "x_theta_intersect", "x_active_users_hll",
-    "x_mmr_diversify", "q_retention", "q_gapfill", "x_scd2", "x_surprisal",
-    "x_zorder",
+    "x_mmr_diversify",
     # --- cut line (50) --- the carried names below open the next
     # window, then q_subquery, the rest of the r12 block and the
     # r10/r11 names displaced earlier (x_text_repetition,
     # x_embed_quantize, x_lm_bigram, ...).
+    "q_retention", "q_gapfill", "x_scd2", "x_surprisal", "x_zorder",
     "q_merge", "q_pattern_match", "q_agg_approx_quantile",
     "x_ann_recall", "q_fn_variant", "x_data_checks", "x_dedup_url",
     "q_histogram", "q_join_asof_near", "q_fn_haversine", "q_fn_array",

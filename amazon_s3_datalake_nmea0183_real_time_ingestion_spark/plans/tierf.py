@@ -132,9 +132,9 @@ def x_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     (queries carry their label in the same broadcast row), the label
     filter is evaluated map-side BEFORE ranking, and per-query top-5
     resolves via per-partition window heaps.  For query sets too big to
-    broadcast, cosine_topk_blocked's hash-block sweep applies unchanged;
-    for corpus-scale query sets, mine within IVF cells (ivf_topk) and
-    accept approximate negatives — the standard production trade.
+    broadcast, mine within IVF cells (ivf_topk) or sign-random-projection
+    LSH buckets (lsh_topk) — keyed joins, no broadcast query side — and
+    accept approximate negatives, the standard production trade.
     """
     e = table(spark, sf, "embeddings")
     q = prep_vectors(
@@ -516,10 +516,10 @@ def x_label_noise(spark: SparkSession, sf: str) -> DataFrame:
     screening every row every run is the corpus × corpus product, and
     the first registration did exactly that — 29 s at sf0.1 through the
     per-pair fold, quadratic beyond.  Batch-vs-corpus keeps the query
-    side broadcast-sized; a full-corpus sweep is cosine_topk_blocked's
-    hash-block loop (one slice per pass, embarrassingly parallel across
-    passes), or IVF-cell votes (ivf_topk) for approximate screening —
-    the identical trade documented on x_hard_negatives.  The vote
+    side broadcast-sized; a full-corpus sweep, too big to broadcast,
+    votes within IVF cells (ivf_topk) or LSH buckets (lsh_topk) for
+    approximate screening — the identical trade documented on
+    x_hard_negatives.  The vote
     itself is one (query, label) count plus a rank-1 window riding the
     same shuffle; the planted-label CASE is map-side.
     """

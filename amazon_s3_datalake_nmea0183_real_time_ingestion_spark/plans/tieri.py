@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
-from ..operators.pq import pq_encode, pq_report, pq_train
+from ..operators.pq import pq_encode_blas, pq_report, pq_train
 from ..operators.similarity import (
     _ranked_topk,
     cosine_topk,
@@ -111,8 +111,8 @@ def x_embed_pq(spark: SparkSession, sf: str) -> DataFrame:
     m·ksub·(dim/m) doubles — constant in corpus size, control-plane.
     """
     e = table(spark, sf, "embeddings")
-    cb = pq_train(e, dim=64, m=8, ksub=16, use_blas=True)
-    return pq_report(e, cb, dim=64, m=8, use_blas=True)
+    cb = pq_train(e, dim=64, m=8, ksub=16)
+    return pq_report(e, cb, dim=64, m=8)
 
 
 @register(
@@ -171,11 +171,11 @@ def x_sim_pq(spark: SparkSession, sf: str) -> DataFrame:
     reads 64× less; the codebook is m·ksub·8 doubles, constant-size.
     """
     e = table(spark, sf, "embeddings")
-    cb = pq_train(e, dim=64, m=8, ksub=16, use_blas=True)
+    cb = pq_train(e, dim=64, m=8, ksub=16)
     q = e.filter(F.col("vec_id") < 10)
     qs = prep_vectors(q, "vec_id", "embedding", "query_id", "qd", "qn")
     cs = prep_vectors(
-        pq_encode(e, cb, dim=64, m=8, use_blas=True).select("vec_id", "pq_recon"),
+        pq_encode_blas(e, cb, dim=64, m=8).select("vec_id", "pq_recon"),
         "vec_id", "pq_recon", "neighbor_id", "cd", "cn",
     )
     scored = (
@@ -561,8 +561,8 @@ def x_sim_ivfpq(spark: SparkSession, sf: str) -> DataFrame:
     e = table(spark, sf, "embeddings")
     cents = label_centroids(e)
     asg = assign_to_centroids(e, cents)
-    cb = pq_train(e, dim=64, m=8, ksub=16, use_blas=True)
-    recon = pq_encode(e, cb, dim=64, m=8, use_blas=True).select(
+    cb = pq_train(e, dim=64, m=8, ksub=16)
+    recon = pq_encode_blas(e, cb, dim=64, m=8).select(
         "vec_id", "pq_recon"
     )
     cs = prep_vectors(

@@ -1261,8 +1261,8 @@ def x_skyline(spark: SparkSession, sf: str) -> DataFrame:
     documents corpus on two integer quality dimensions — token count and
     distinct-token count (bigger = better): the documents NOT dominated
     on both axes, i.e. the multi-objective quality frontier no single
-    score can pick.  Curation reading: token_budget_select optimizes ONE
-    score; the skyline is what you keep when length and lexical
+    score can pick.  Curation reading: a score-ranked selection optimizes
+    ONE score; the skyline is what you keep when length and lexical
     diversity must BOTH be defensible.
 
     Engine = the O(n log n) sort-sweep (operators/curation.py::

@@ -233,22 +233,6 @@ def test_compact_partition_rewrites_to_single_file(spark, tmp_path):
     assert str(back.select("year").distinct().first()["year"]) == "2023"
 
 
-def test_blocked_topk_equals_broadcast_topk(spark):
-    """SCALE.md §5: the block-partitioned brute-force top-k returns
-    exactly the broadcast version's results (order-insensitive)."""
-    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_blocked,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 12)
-    a = cosine_topk(emb, queries, k=3)
-    b = cosine_topk_blocked(emb, queries, k=3, n_blocks=3)
-    assert sorted(map(tuple, a.collect()), key=lambda t: (t[0], t[2])) == \
-           sorted(map(tuple, b.collect()), key=lambda t: (t[0], t[2]))
-
-
 def test_salted_aggs_equal_direct(spark):
     """Skew utilities (SCALE.md): salted two-phase collect_set /
     exact-distinct-count equal the direct single-reducer forms."""

@@ -240,6 +240,7 @@ def test_viral_embedding_hot_cell_guard(spark):
     cells are untouched — the embedding-space twin of the LSH max_bucket
     guard."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.similarity import (
+        assign_to_centroids,
         semantic_dedup_pairs,
     )
 
@@ -272,8 +273,9 @@ def test_viral_embedding_hot_cell_guard(spark):
     corpus = base.unionByName(viral)
 
     # candidate volume, threshold disabled: the JOIN size is the concern
-    unguarded = semantic_dedup_pairs(corpus, cents, threshold=-1.0).count()
-    guarded = semantic_dedup_pairs(corpus, cents, threshold=-1.0, max_cell=150).count()
+    asg = assign_to_centroids(corpus, cents)
+    unguarded = semantic_dedup_pairs(asg, threshold=-1.0).count()
+    guarded = semantic_dedup_pairs(asg, threshold=-1.0, max_cell=150).count()
     # viral cell holds 100 organic + 400 copies = 500 -> 124,750 pairs;
     # the other 7 cells hold 100 each -> 4,950 pairs per cell
     assert unguarded == 500 * 499 // 2 + 7 * (100 * 99 // 2)
@@ -281,19 +283,21 @@ def test_viral_embedding_hot_cell_guard(spark):
     # and the REAL near-dups the guard mode still must catch: copies of
     # the viral vector are exact dups -> exact dedup's job (run first);
     # organic cells keep scoring exactly
-    organic_pairs = semantic_dedup_pairs(corpus, cents, threshold=0.99, max_cell=150)
+    organic_pairs = semantic_dedup_pairs(asg, threshold=0.99, max_cell=150)
     assert organic_pairs.filter(F.col("id_a") >= 1_000_000).count() == 0
 
 
 def test_blas_assignment_matches_declarative_argmax(spark):
-    """assign_to_centroids_blas (Arrow-batched matmul argmax — the kernel
-    the k ∝ n production SemDeDup path uses) must agree with the
-    declarative window argmax on every row, including the tricky edges:
-    round-6 cosine ties (→ lowest centroid_id) and zero-norm vectors
-    (NULL/-inf sims → lowest centroid_id, later filtered by vn > 0)."""
+    """assign_to_centroids_2level_blas (cogrouped per-cell matmul argmax
+    — the kernel the k ∝ n production SemDeDup key uses) must agree with
+    the declarative window argmax on every row, including the tricky
+    edges: round-6 cosine
+    ties (→ lowest centroid_id) and zero-norm vectors (screened by both
+    kernels), and the SemDeDup collapse must be identical over either
+    kernel's assignment frame."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.similarity import (
         assign_to_centroids,
-        assign_to_centroids_blas,
+        assign_to_centroids_2level_blas,
         semantic_dedup,
     )
 
@@ -319,7 +323,7 @@ def test_blas_assignment_matches_declarative_argmax(spark):
     )
     # edge rows: an exact tie between centroids 2 and 5 (must pick 2),
     # and a zero-norm vector (must be SCREENED by both kernels — the
-    # prep_vectors guard / BLAS vn>0 mask, adjudicated by x_sim_zero_norm)
+    # prep_vectors guard, adjudicated by x_sim_zero_norm)
     edge = spark.createDataFrame(
         [
             (9_000_001, [0.0, 0.0, 1.0, 0.0, 0.0, 1.0, 0.0, 0.0]),
@@ -329,21 +333,17 @@ def test_blas_assignment_matches_declarative_argmax(spark):
     )
     corpus = base.unionByName(edge)
 
-    a = {
-        r["vec_id"]: r["cluster"]
-        for r in assign_to_centroids(corpus, cents).collect()
-    }
-    b = {
-        r["vec_id"]: r["cluster"]
-        for r in assign_to_centroids_blas(corpus, cents).collect()
-    }
+    flat = assign_to_centroids(corpus, cents)
+    blas = assign_to_centroids_2level_blas(corpus, cents)
+    a = {r["vec_id"]: r["cluster"] for r in flat.collect()}
+    b = {r["vec_id"]: r["cluster"] for r in blas.collect()}
     assert a == b
     assert b[9_000_001] == 2
     assert 9_000_002 not in a and 9_000_002 not in b
 
     # end-to-end: the collapse output is identical under either kernel
-    slow = semantic_dedup(corpus, cents, threshold=0.9).collect()
-    fast = semantic_dedup(corpus, cents, threshold=0.9, use_blas=True).collect()
+    slow = semantic_dedup(flat, threshold=0.9).collect()
+    fast = semantic_dedup(blas, threshold=0.9).collect()
     assert sorted(map(tuple, slow)) == sorted(map(tuple, fast))
 
 
@@ -495,6 +495,7 @@ def test_semantic_cell_report_flags_only_overfull_cells(spark):
     cell's size and marks exactly the cells the max_cell cap excludes —
     the dropped-cell fraction is the recall-bug alarm."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.similarity import (
+        assign_to_centroids,
         semantic_cell_report,
     )
 
@@ -520,7 +521,7 @@ def test_semantic_cell_report_flags_only_overfull_cells(spark):
     rep = {
         r["cluster"]: r
         for r in semantic_cell_report(
-            base.unionByName(viral), cents, max_cell=150
+            assign_to_centroids(base.unionByName(viral), cents), max_cell=150
         ).collect()
     }
     assert len(rep) == k

@@ -129,6 +129,37 @@ def test_geocode_enrichment_deterministic(spark):
     assert stage.filter(F.col("municipality").isNull()).count() == 0
 
 
+def test_geo_dim_cells_columns_and_edge_values(spark):
+    """The geo dimension covers every 1°×1° cell once, keeps its column
+    order and types, and its first and last cells carry the values the
+    build_geo_dim formulas give."""
+    geo = build_geo_dim(spark)
+    assert [(f.name, f.dataType.simpleString()) for f in geo.schema.fields] == [
+        ("geo_cell", "bigint"),
+        ("addressnumber", "string"),
+        ("street", "string"),
+        ("municipality", "string"),
+        ("region", "string"),
+        ("subregion", "string"),
+        ("postalcode", "string"),
+        ("country", "string"),
+        ("timezone_name", "string"),
+        ("timezone_offset", "int"),
+    ]
+    agg = geo.agg(
+        F.count("*").alias("n"), F.countDistinct("geo_cell").alias("nd")
+    ).head()
+    assert agg.n == agg.nd == 64_800
+    edge = {r.geo_cell: tuple(r)[1:] for r in
+            geo.filter(F.col("geo_cell").isin(0, 64_799)).collect()}
+    assert edge[0] == ("1", "Street 0", "City-0", "Region-0", "Sub-0",
+                       "00000", "Country-0", "Zone/0", -12 * 3600)
+    # 64799 % 9999 = 4805; western edge 179°E → band 23 → +11 h
+    assert edge[64_799] == ("4806", "Street 799", "City-299", "Region-99",
+                            "Sub-199", "64799", "Country-239", "Zone/23",
+                            11 * 3600)
+
+
 def test_sensor_positions_and_pimd9_excluded(spark):
     cls = classify_records(envelope_df(spark))
     sens = sensor_branch(cls)

@@ -163,6 +163,43 @@ def test_semantic_dedup_drops_every_planted_copy(spark):
     assert all(by_id[p]["kept_by"] < p and by_id[p]["cos_sim"] >= 0.99 for p in planted)
 
 
+def test_each_semantic_dedup_key_runs_its_own_assignment_kernel(spark, monkeypatch):
+    """x_dedup_semantic assigns with the broadcast argmax and
+    x_dedup_semantic_guarded with the two-level BLAS argmax.  Both
+    kernels give the same clusters, so the oracle cannot see a swap, and
+    the guarded key's assignment sits behind stored() ("Scan
+    ExistingRDD" in a plan); record the calls instead."""
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import (
+        similarity,
+    )
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.plans.tiere import (
+        x_dedup_semantic_guarded,
+    )
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.storage import (
+        release_scope,
+    )
+
+    calls: list[str] = []
+
+    def recording(name):
+        real = getattr(similarity, name)
+
+        def wrapper(*args, **kwargs):
+            calls.append(name)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(similarity, name, wrapper)
+
+    recording("assign_to_centroids")
+    recording("assign_to_centroids_2level_blas")
+    with release_scope():
+        assert x_dedup_semantic(spark, SF_SMALL).count() > 0
+        assert calls == ["assign_to_centroids"]
+        calls.clear()
+        assert x_dedup_semantic_guarded(spark, SF_SMALL).count() > 0
+        assert calls == ["assign_to_centroids_2level_blas"]
+
+
 def test_lev_dedup_catches_planted_suffix_edits(spark):
     out = x_dedup_lev(spark, SF_SMALL).collect()
     pairs = {(r["id_a"], r["id_b"]): r["edit_distance"] for r in out}

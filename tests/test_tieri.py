@@ -189,7 +189,7 @@ def test_pq_blas_encode_matches_declarative(spark):
     )
 
     e = _embeddings(spark)
-    cb = pq_train(e, dim=64, m=8, ksub=16, use_blas=True)
+    cb = pq_train(e, dim=64, m=8, ksub=16)
     a = {
         r["vec_id"]: (list(r["pq_codes"]), list(r["pq_recon"]))
         for r in pq_encode(e, cb, dim=64, m=8).collect()

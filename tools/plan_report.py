@@ -79,25 +79,25 @@ def main() -> int:
         f"Generated by `tools/plan_report.py` at `{SF_DIR}` (plan shape; run",
         "after registry changes). Columns: shuffle Exchanges / Broadcast-",
         "Exchanges / SortMergeJoin / ShuffledHashJoin / BroadcastHashJoin / Python-eval nodes /",
-        "whole-stage-codegen spans. Python>0 is expected ONLY for the four",
+        "whole-stage-codegen spans. Python>0 is expected ONLY for the three",
         "sanctioned Arrow-batched Pandas contracts: multimodal decode",
-        "(x_multimodal*), the BLAS matmul centroid argmax",
-        "(x_dedup_semantic_guarded — assignment with k ∝ n centroids is",
-        "n·k·d multiply-adds, a matmul, and the per-pair fold kernel is",
-        "measurably ~10× slower; see assign_to_centroids_blas), and the",
-        "cogrouped per-super-cell dgemm (x_sim_ivf_2level_exact — the",
-        "fully distributed exact k ∝ n assignment,",
+        "(x_multimodal*), the cogrouped per-super-cell dgemm centroid",
+        "argmax (x_dedup_semantic_guarded / x_sim_ivf_2level_exact — exact",
+        "assignment with k ∝ n centroids is n·k·d multiply-adds, a matmul,",
+        "and the per-pair fold kernel is measurably ~10× slower; see",
         "assign_to_centroids_2level_blas), and the PQ encode kernel",
         "(x_embed_pq / x_sim_pq / x_sim_ivfpq — Spark HOFs are CodegenFallback, so the",
         "declarative m·ksub nested-HOF scoring ran ~10 ms/row; the",
         "pq_encode_blas matmul/argmin twin is pinned rowwise-equivalent",
         "by pytest and the codebook it collects is constant-size,",
-        "see operators/pq.py). NOTE: the",
-        "BLAS key COUNTS 0 here because its assignment sits behind a lazy",
-        "localCheckpoint, which static explain shows as Scan ExistingRDD",
-        "(lineage hidden, same artifact as the x_pagerank caveat below);",
-        "its mapInPandas semantics are asserted by",
-        "test_blas_assignment_matches_declarative_argmax instead.",
+        "see operators/pq.py). NOTE: both dgemm keys COUNT 0 here",
+        "because their assignment sits behind a lazy localCheckpoint,",
+        "which static explain shows as Scan ExistingRDD (lineage hidden,",
+        "same artifact as the x_pagerank caveat below); the kernel's",
+        "semantics are asserted by",
+        "test_blas_assignment_matches_declarative_argmax, and",
+        "test_each_semantic_dedup_key_runs_its_own_assignment_kernel",
+        "checks which kernel each SemDeDup key calls.",
         "",
         "| key | shuffles | bcast | SMJ | SHJ | BHJ | python | codegen |",
         "|---|---|---|---|---|---|---|---|",
