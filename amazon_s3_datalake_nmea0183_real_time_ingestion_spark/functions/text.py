@@ -43,11 +43,11 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     return F.transform(idx, lambda i: F.array_join(F.slice(toks, i, k), " "))
 
 
-def char_ngrams_from_lower(low: Column, n: int = 5) -> Column:
-    """Array of character n-grams from an already-lower-cased attribute
+def char_ngrams_from_lower(low: Column) -> Column:
+    """Array of character 5-grams from an already-lower-cased attribute
     column (same per-element re-evaluation trap as shingles)."""
-    idx = F.sequence(F.lit(1), F.greatest(F.length(low) - (n - 1), F.lit(1)))
-    return F.transform(idx, lambda i: F.substring(low, i, n))
+    idx = F.sequence(F.lit(1), F.greatest(F.length(low) - 4, F.lit(1)))
+    return F.transform(idx, lambda i: F.substring(low, i, 5))
 
 
 def stopword_ratio(text: Column | str) -> Column:

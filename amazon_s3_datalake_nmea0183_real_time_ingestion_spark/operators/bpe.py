@@ -86,9 +86,10 @@ def apply_merge(syms: Column, lhs: str, rhs: str) -> Column:
     )
 
 
-def bpe_learn(spark: SparkSession, words: DataFrame, rounds: int = 6,
-              word_col: str = "word", n_col: str = "wn") -> tuple[DataFrame, DataFrame]:
-    """Learn ``rounds`` BPE merges from a (word, frequency) table.
+def bpe_learn(
+    spark: SparkSession, words: DataFrame, rounds: int = 6
+) -> tuple[DataFrame, DataFrame]:
+    """Learn ``rounds`` BPE merges from a (word, wn) word-frequency table.
 
     Returns ``(merges, rep)``: the merge table (round, lhs, rhs, merged,
     pair_n — built from the per-round 1-row collects, control-plane data)
@@ -100,9 +101,9 @@ def bpe_learn(spark: SparkSession, words: DataFrame, rounds: int = 6,
     caller decision, not a silently shorter vocab.
     """
     rep = words.select(
-        F.col(word_col).alias("word"),
-        F.col(n_col).cast("bigint").alias("wn"),
-        chars_of(F.col(word_col)).alias("syms"),
+        F.col("word").alias("word"),
+        F.col("wn").cast("bigint").alias("wn"),
+        chars_of(F.col("word")).alias("syms"),
     )
     merges: list[tuple[int, str, str, str, int]] = []
     for r in range(1, rounds + 1):

@@ -17,10 +17,10 @@ from ..functions.nmea import classify_payload
 from ..schemas import CLASS_SENSOR, CLASS_SOH, CLASS_UNKNOWN
 
 
-def classify_records(envelopes: DataFrame, data_col: str = "data") -> DataFrame:
+def classify_records(envelopes: DataFrame) -> DataFrame:
     """Annotate an envelope DataFrame with msg_class + decoded payload_text."""
-    once = unbase64_str(F.col(data_col))
-    cls = classify_payload(F.col(data_col))
+    once = unbase64_str(F.col("data"))
+    cls = classify_payload(F.col("data"))
     payload = F.when(cls == CLASS_SOH, once).otherwise(unbase64_str(once))
     return envelopes.withColumn("msg_class", cls).withColumn("payload_text", payload)
 

@@ -21,41 +21,37 @@ from ..storage import stored
 from .similarity import assign_to_centroids, label_centroids
 
 
-def seed_centroids(vectors: DataFrame, k: int, id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
+def seed_centroids(vectors: DataFrame, k: int) -> DataFrame:
     """Deterministic seeding: the k lowest-id vectors become the initial
     centroids (engine-reproducible; swap for k-means|| sampling when ids
     carry meaning)."""
-    return vectors.filter(F.col(id_col) < k).select(
-        F.col(id_col).alias("centroid_id"), as_double(F.col(vec_col)).alias("centroid")
+    return vectors.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("centroid_id"), as_double(F.col("embedding")).alias("centroid")
     )
 
 
-def kmeans_assign(vectors: DataFrame, centroids: DataFrame,
-                  id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def kmeans_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """One assignment pass: nearest centroid by round(cosine, 6) with
     centroid-id tiebreak (broadcast centroids, map-side — the corpus never
-    shuffles).  Returns (``id_col``, ``cluster``)."""
-    return assign_to_centroids(vectors, centroids, id_col, vec_col).select(
-        id_col, "cluster"
+    shuffles).  Returns (``vec_id``, ``cluster``)."""
+    return assign_to_centroids(vectors, centroids).select(
+        "vec_id", "cluster"
     )
 
 
-def kmeans_update(vectors: DataFrame, centroids: DataFrame,
-                  id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def kmeans_update(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """One Lloyd step: assign, then recompute centroids as per-cluster
     elementwise means (rounded to engine-independent doubles).  Empty
     clusters drop out (standard Lloyd behavior)."""
-    assigned = assign_to_centroids(vectors, centroids, id_col, vec_col)
+    assigned = assign_to_centroids(vectors, centroids)
     return label_centroids(
         assigned.select(F.col("cluster").alias("label"), F.col("vd").alias("embedding"))
     )
 
 
-def kmeans(vectors: DataFrame, k: int = 8, max_iters: int = 10,
-           id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def kmeans(vectors: DataFrame, k: int = 8, max_iters: int = 10) -> DataFrame:
     """Spherical k-means to fixpoint (or ``max_iters``): returns the final
-    (``id_col``, ``cluster``) assignment.
+    (``vec_id``, ``cluster``) assignment.
 
     Convergence probe: the rounded centroid snapshot (k × dim values) is
     collected and compared across rounds — k × dim is KBs at any corpus
@@ -65,12 +61,12 @@ def kmeans(vectors: DataFrame, k: int = 8, max_iters: int = 10,
     stores them).
     """
     cents = vectors.sparkSession.createDataFrame(
-        seed_centroids(vectors, k, id_col, vec_col).collect(),
+        seed_centroids(vectors, k).collect(),
         "centroid_id bigint, centroid array<double>",
     )
     prev_snapshot = None
     for _ in range(max_iters):
-        new_cents = stored(kmeans_update(vectors, cents, id_col, vec_col))
+        new_cents = stored(kmeans_update(vectors, cents))
         snapshot = sorted(
             (r["centroid_id"], tuple(r["centroid"])) for r in new_cents.collect()
         )
@@ -78,4 +74,4 @@ def kmeans(vectors: DataFrame, k: int = 8, max_iters: int = 10,
         if snapshot == prev_snapshot:
             break
         prev_snapshot = snapshot
-    return kmeans_assign(vectors, cents, id_col, vec_col)
+    return kmeans_assign(vectors, cents)

@@ -17,12 +17,11 @@ from ..functions.hashing import md5_u32
 from ..functions.text import shingles_from_tokens, tokens
 
 
-def hash_split(df: DataFrame, id_col: str = "doc_id", salt: str = "split",
-               train_pct: int = 90, val_pct: int = 5) -> DataFrame:
+def hash_split(df: DataFrame, id_col: str = "doc_id", salt: str = "split") -> DataFrame:
     """Deterministic train/val/test assignment by hash bucket.
 
-    ``bucket = md5("{salt}:{id}") % 100``; train < ``train_pct``, val <
-    ``train_pct + val_pct``, else test.  Hash-based (not random) so the
+    ``bucket = md5("{salt}:{id}") % 100``; train < 90, val < 95, else
+    test.  Hash-based (not random) so the
     split is stable under reruns, re-partitioning, and incremental
     appends — a new document lands in the same split forever, and the
     salt gives independent re-splits without touching the data.
@@ -35,50 +34,46 @@ def hash_split(df: DataFrame, id_col: str = "doc_id", salt: str = "split",
     ).cast("int")
     return df.withColumn("bucket", bucket).withColumn(
         "split",
-        F.when(F.col("bucket") < train_pct, F.lit("train"))
-        .when(F.col("bucket") < train_pct + val_pct, F.lit("val"))
+        F.when(F.col("bucket") < 90, F.lit("train"))
+        .when(F.col("bucket") < 95, F.lit("val"))
         .otherwise(F.lit("test")),
     )
 
 
-def pack_sequences(df: DataFrame, token_col: str = "n_tokens",
-                   shard_col: str = "source", order_col: str = "doc_id",
-                   window_tokens: int = 2048) -> DataFrame:
+def pack_sequences(df: DataFrame, window_tokens: int = 2048) -> DataFrame:
     """Assign documents to fixed-size context windows (training-sequence
-    packing): within each shard, documents are laid end-to-end in
-    ``order_col`` order and the window index is the running token offset
+    packing): within each ``source`` shard, documents are laid end-to-end in
+    ``doc_id`` order and the window index is the running token offset
     divided by ``window_tokens`` (documents may straddle a boundary —
     the standard pack-then-split accounting).
 
     Adds ``pack_id`` (window index within shard) and ``pack_offset``
     (token offset within the window where the document starts).
 
-    Scale: one shuffle on ``shard_col`` + per-shard sort — the same
+    Scale: one shuffle on ``source`` + per-shard sort — the same
     distribution the packed write wants, so the sort is not wasted; no
     driver state, shards pack independently on 1000 executors.
     """
     w = (
-        Window.partitionBy(shard_col)
-        .orderBy(order_col)
+        Window.partitionBy("source")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    start = F.sum(token_col).over(w) - F.col(token_col)
+    start = F.sum("n_tokens").over(w) - F.col("n_tokens")
     return df.withColumn(
         "pack_id", F.floor(start / F.lit(window_tokens)).cast("int")
     ).withColumn("pack_offset", (start % window_tokens).cast("int"))
 
 
-def decontaminate(corpus: DataFrame, benchmark: DataFrame,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  k: int = 3) -> DataFrame:
+def decontaminate(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination: count, per corpus document, the distinct
-    word ``k``-grams it shares with an evaluation benchmark — documents
+    word 3-grams it shares with an evaluation benchmark — documents
     with any overlap are contamination candidates for removal before
     training (the n-gram-overlap test-set filter used by large-LM data
     pipelines).
 
-    Returns (``id_col``, ``n_overlap``) for documents with ≥1 shared
-    k-gram.
+    Returns (``doc_id``, ``n_overlap``) for documents with ≥1 shared
+    3-gram.
 
     Scale: the benchmark's distinct-shingle set is tiny relative to any
     training corpus (eval sets are MBs), so it BROADCASTS — the 100 TB
@@ -87,11 +82,11 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame,
     filters in place, and the only shuffle is the final per-doc count.
     """
     def _doc_shingles(df: DataFrame, with_id: bool) -> DataFrame:
-        cols = [F.col(id_col)] if with_id else []
-        toks = df.select(*cols, tokens(F.col(text_col)).alias("__t"))
+        cols = [F.col("doc_id")] if with_id else []
+        toks = df.select(*cols, tokens(F.col("text")).alias("__t"))
         return toks.select(
             *cols,
-            F.explode(F.array_distinct(shingles_from_tokens(F.col("__t"), k))).alias(
+            F.explode(F.array_distinct(shingles_from_tokens(F.col("__t")))).alias(
                 "shingle"
             ),
         )
@@ -102,17 +97,17 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame,
         # the benchmark's shingles: eval-set sized, independent of the
         # corpus, but estimated from its source
         corpus_sh.join(F.broadcast(bench_sh), "shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_overlap"))
     )
 
 
 def mix_downsample(df: DataFrame, rates: dict[str, int],
-                   domain_col: str = "source", id_col: str = "doc_id",
-                   salt: str = "mix", default_pct: int = 100) -> DataFrame:
+                   default_pct: int = 100) -> DataFrame:
     """Deterministic per-domain down-sampling (training-mixture weights
-    below 1.0): keep a row iff its salted hash bucket falls under the
-    domain's percentage.  ``rates`` maps domain → keep-percent (0..100);
+    below 1.0): keep a row iff its salted hash bucket of ``doc_id`` falls
+    under the percentage of its ``source`` domain.  ``rates`` maps
+    domain → keep-percent (0..100);
     unlisted domains keep ``default_pct``.
 
     Hash-gated, not ``sample()``: membership is reproducible across runs,
@@ -121,16 +116,15 @@ def mix_downsample(df: DataFrame, rates: dict[str, int],
     literal CASE expression, never a join.
     """
     bucket = (
-        md5_u32(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string"))) % 100
+        md5_u32(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))) % 100
     )
     pct = F.lit(default_pct)
     for dom, keep in rates.items():
-        pct = F.when(F.col(domain_col) == dom, F.lit(keep)).otherwise(pct)
+        pct = F.when(F.col("source") == dom, F.lit(keep)).otherwise(pct)
     return df.filter(bucket < pct)
 
 
-def mix_upsample(df: DataFrame, epochs: dict[str, int],
-                 domain_col: str = "source", default_epochs: int = 1) -> DataFrame:
+def mix_upsample(df: DataFrame, epochs: dict[str, int]) -> DataFrame:
     """Per-domain epoch up-sampling (mixture weights above 1.0): replicate
     each row ``epochs[domain]`` times, tagging the copy index as
     ``epoch`` (0-based) so downstream shuffles/packing can interleave
@@ -139,9 +133,9 @@ def mix_upsample(df: DataFrame, epochs: dict[str, int],
     Scale: ``explode(sequence(...))`` is a map-side row generator — no
     shuffle, no driver loop; output size is exactly Σ rows × epochs.
     """
-    n = F.lit(default_epochs)
+    n = F.lit(1)
     for dom, e in epochs.items():
-        n = F.when(F.col(domain_col) == dom, F.lit(e)).otherwise(n)
+        n = F.when(F.col("source") == dom, F.lit(e)).otherwise(n)
     return df.withColumn(
         "epoch", F.explode(F.sequence(F.lit(0), n.cast("int") - 1))
     )
@@ -168,7 +162,7 @@ def domain_quota(df: DataFrame, domain_col: str, order_cols: list,
     )
 
 
-def global_shuffle(df: DataFrame, id_col: str = "doc_id", n_shards: int = 8,
+def global_shuffle(df: DataFrame, n_shards: int = 8,
                    salt: str = "shuf") -> DataFrame:
     """Deterministic global training shuffle: every row gets a stable
     pseudo-random shard and an in-shard position, so a data loader reads
@@ -186,7 +180,7 @@ def global_shuffle(df: DataFrame, id_col: str = "doc_id", n_shards: int = 8,
     independently — set ``n_shards`` to O(cluster cores) and the sort is
     embarrassingly parallel.  Loader order is (shard, pos).
     """
-    fp = F.md5(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
+    fp = F.md5(F.concat(F.lit(f"{salt}:"), F.col("doc_id").cast("string")))
     shard = (
         F.conv(F.substring(F.col("fp"), 1, 8), 16, 10).cast("bigint") % n_shards
     ).cast("int")
@@ -198,12 +192,11 @@ def global_shuffle(df: DataFrame, id_col: str = "doc_id", n_shards: int = 8,
     )
 
 
-def curriculum_order(df: DataFrame, score_col: str, id_col: str = "doc_id",
-                     n_shards: int = 8, salt: str = "curr") -> DataFrame:
+def curriculum_order(df: DataFrame, score_col: str, n_shards: int = 8) -> DataFrame:
     """Curriculum data ordering, the distributed way: shard assignment is
     a HASH (content-agnostic, stable under appends — same md5 scheme as
     :func:`hash_split`), and the curriculum lives WITHIN each shard as a
-    rank over ``(score_col, id_col)`` — ascending score, so a training
+    rank over ``(score_col, doc_id)`` — ascending score, so a training
     loop reading each shard in ``curriculum_pos`` order sees easy/low
     items first (sequence-level curriculum / quality warmup).
 
@@ -218,28 +211,28 @@ def curriculum_order(df: DataFrame, score_col: str, id_col: str = "doc_id",
     the global one — the same argument as hash-split's.
     """
     shard = (
-        md5_u32(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
+        md5_u32(F.concat(F.lit("curr:"), F.col("doc_id").cast("string")))
         % n_shards
     ).cast("int")
     w = Window.partitionBy("shard").orderBy(
-        F.col(score_col).asc(), F.col(id_col).asc()
+        F.col(score_col).asc(), F.col("doc_id").asc()
     )
     return df.withColumn("shard", shard).withColumn(
         "curriculum_pos", F.row_number().over(w)
     )
 
 
-def write_training_shards(df: DataFrame, path: str, order_col: str = "doc_id",
+def write_training_shards(df: DataFrame, path: str,
                           n_shards: int = 8,
                           max_records_per_file: int | None = None) -> None:
     """Write the curated corpus as globally-ordered, size-balanced shards —
     the output shaping a training data-loader wants (deterministic shard
     membership, sequential reads, bounded file sizes).
 
-    ``repartitionByRange(order_col)`` samples range boundaries so shards
+    ``repartitionByRange(doc_id)`` samples range boundaries so shards
     are balanced even under skewed key distributions, and within-shard
     rows come out sorted (range exchange + local sort), so shard i holds
-    a contiguous ``order_col`` interval: a loader can map shard -> key
+    a contiguous ``doc_id`` interval: a loader can map shard -> key
     range without an index.  ``maxRecordsPerFile`` bounds individual
     parquet files below object-store/multipart sweet spots.
 
@@ -247,8 +240,8 @@ def write_training_shards(df: DataFrame, path: str, order_col: str = "doc_id",
     global order and no worse than any sorted write; at 100 TB set
     ``n_shards`` so each shard lands ~1 GB (AQE coalesces empty tails).
     """
-    out = df.repartitionByRange(n_shards, F.col(order_col)).sortWithinPartitions(
-        order_col
+    out = df.repartitionByRange(n_shards, F.col("doc_id")).sortWithinPartitions(
+        "doc_id"
     )
     writer = out.write.mode("overwrite")
     if max_records_per_file is not None:
@@ -284,9 +277,7 @@ def chunk_documents(df: DataFrame, token_col: str = "n_tokens",
     )
 
 
-def skyline_2d(
-    df: DataFrame, d1: str, d2: str, prepeel_buckets: int = 64
-) -> DataFrame:
+def skyline_2d(df: DataFrame, d1: str, d2: str) -> DataFrame:
     """2-D skyline / Pareto front (Börzsönyi, Kossmann & Stocker,
     ICDE '01): rows not DOMINATED by any other row, where p dominates q
     iff p is ≥ q on both dimensions and > on at least one (bigger =
@@ -309,7 +300,7 @@ def skyline_2d(
     unpartitioned window is SINGLE-TASK; this is the documented
     grid-cell pre-peel, now actually implemented):
 
-    1. **Parallel pre-peel**: bucket rows into ``prepeel_buckets``
+    1. **Parallel pre-peel**: bucket rows into 64
        equal-width ranges of d1 (one broadcast min/max agg) and run the
        SAME sweep per bucket, with both windows partitioned — fully
        parallel.  Dominance is transitive, so a row eliminated by a
@@ -329,38 +320,37 @@ def skyline_2d(
     sweep's correctness is checked against the definition itself, not a
     reimplementation of the same algorithm.
     """
-    if prepeel_buckets and prepeel_buckets > 1:
-        rng = df.agg(
-            F.min(d1).cast("double").alias("__lo"),
-            F.max(d1).cast("double").alias("__hi"),
+    rng = df.agg(
+        F.min(d1).cast("double").alias("__lo"),
+        F.max(d1).cast("double").alias("__hi"),
+    )
+    w_hi_loc = (
+        Window.partitionBy("__bucket")
+        .orderBy(F.col(d1).desc())
+        .rangeBetween(Window.unboundedPreceding, -1)
+    )
+    w_tie_loc = Window.partitionBy(d1)
+    df = (
+        df.crossJoin(rng)
+        .withColumn(
+            "__bucket",
+            F.when(F.col("__hi") <= F.col("__lo"), F.lit(1)).otherwise(
+                F.width_bucket(
+                    F.col(d1).cast("double"),
+                    F.col("__lo"),
+                    F.col("__hi") + F.lit(1.0),
+                    F.lit(64),
+                )
+            ),
         )
-        w_hi_loc = (
-            Window.partitionBy("__bucket")
-            .orderBy(F.col(d1).desc())
-            .rangeBetween(Window.unboundedPreceding, -1)
+        .withColumn("__max_hi", F.max(d2).over(w_hi_loc))
+        .withColumn("__max_tie", F.max(d2).over(w_tie_loc))
+        .filter(
+            (F.col("__max_hi").isNull() | (F.col(d2) > F.col("__max_hi")))
+            & (F.col(d2) == F.col("__max_tie"))
         )
-        w_tie_loc = Window.partitionBy(d1)
-        df = (
-            df.crossJoin(rng)
-            .withColumn(
-                "__bucket",
-                F.when(F.col("__hi") <= F.col("__lo"), F.lit(1)).otherwise(
-                    F.width_bucket(
-                        F.col(d1).cast("double"),
-                        F.col("__lo"),
-                        F.col("__hi") + F.lit(1.0),
-                        F.lit(prepeel_buckets),
-                    )
-                ),
-            )
-            .withColumn("__max_hi", F.max(d2).over(w_hi_loc))
-            .withColumn("__max_tie", F.max(d2).over(w_tie_loc))
-            .filter(
-                (F.col("__max_hi").isNull() | (F.col(d2) > F.col("__max_hi")))
-                & (F.col(d2) == F.col("__max_tie"))
-            )
-            .drop("__lo", "__hi", "__bucket", "__max_hi", "__max_tie")
-        )
+        .drop("__lo", "__hi", "__bucket", "__max_hi", "__max_tie")
+    )
     w_hi = (
         Window.orderBy(F.col(d1).desc())
         .rangeBetween(Window.unboundedPreceding, -1)

@@ -31,6 +31,15 @@ from ..storage import stored
 
 SIMHASH_BITS = 60  # md5_i64 yields 60-bit non-negative hashes
 
+# The MinHash-LSH shape every dedup operator here shares: word 3-gram
+# shingles, 16 permutations cut into 4 bands.
+SHINGLE_K = 3
+N_PERM = 16
+N_BANDS = 4
+# prefix filtering and its verification must use the same threshold, or
+# the prefix is no longer lossless
+PREFIX_THRESHOLD = 0.6
+
 
 def cap_group_width(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
     """Drop every row of groups wider than ``cap`` rows — the shared
@@ -58,9 +67,8 @@ def exact_dedup(df: DataFrame, keys: list[str], order_by: list[Column]) -> DataF
     )
 
 
-def shingle_set(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                k: int = 3) -> DataFrame:
-    """Distinct (id, shingle) pairs — the Jaccard/MinHash unit set.
+def shingle_set(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
+    """Distinct (doc_id, shingle) pairs of ``text`` — the Jaccard/MinHash unit set.
 
     Tokenizes in its own projection so the shingle ``transform`` lambda
     reads a materialized array attribute; an inline tokenize expression
@@ -78,7 +86,7 @@ def shingle_set(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     12-key dedup family total moved 56.7 s → 63.0 s, so the two-exchange
     shape stays.  (At 100 TB the same trade holds wherever documents
     repeat shingles internally, i.e. everywhere boilerplate exists.)"""
-    toked = docs.select(F.col(id_col), tokens(text_col).alias("__toks"))
+    toked = docs.select(F.col("doc_id"), tokens("text").alias("__toks"))
     # r14 negative result #2: replacing the .distinct() with a map-side
     # array_distinct (zero-shuffle per-doc dedup, the winning move in
     # simhash_signatures) measured a NET LOSS here (8-key family total
@@ -89,49 +97,46 @@ def shingle_set(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     # the map-side form because its token frame has exactly ONE consumer.
     return (
         toked.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(shingles_from_tokens(F.col("__toks"), k)).alias("shingle"),
         )
         .distinct()
     )
 
 
-def minhash_signatures(shingles: DataFrame, id_col: str = "doc_id",
-                       n_perm: int = 16) -> DataFrame:
+def minhash_signatures(shingles: DataFrame, n_perm: int = N_PERM) -> DataFrame:
     """Wide MinHash signature (mh0..mh{n-1}) per document: one shuffle,
     n_perm parallel min-aggregates over universal-hash permutations."""
     h = md5_u32(F.col("shingle")) % MERSENNE_P
-    hashed = shingles.select(F.col(id_col), h.alias("h"))
+    hashed = shingles.select(F.col("doc_id"), h.alias("h"))
     aggs = [
         F.min(minhash_permuted(F.col("h"), i)).alias(f"mh{i}")
         for i in range(n_perm)
     ]
-    return hashed.groupBy(id_col).agg(*aggs)
+    return hashed.groupBy("doc_id").agg(*aggs)
 
 
-def lsh_bands(sigs: DataFrame, id_col: str = "doc_id", n_perm: int = 16,
-              n_bands: int = 4) -> DataFrame:
-    """Long-format (id, band_id, band_sig): md5 over each band's
-    comma-joined permutation minima."""
-    if n_perm % n_bands != 0:
+def lsh_bands(sigs: DataFrame, n_perm: int = N_PERM) -> DataFrame:
+    """Long-format (doc_id, band_id, band_sig): md5 over each of the
+    ``N_BANDS`` bands' comma-joined permutation minima."""
+    if n_perm % N_BANDS != 0:
         raise ValueError(
-            f"n_perm={n_perm} must divide evenly into n_bands={n_bands}; "
+            f"n_perm={n_perm} must divide evenly into n_bands={N_BANDS}; "
             "leftover permutations would be computed but silently unused"
         )
-    rows_per_band = n_perm // n_bands
+    rows_per_band = n_perm // N_BANDS
     band_cols = []
-    for b in range(n_bands):
+    for b in range(N_BANDS):
         parts = [F.col(f"mh{b * rows_per_band + j}").cast("string") for j in range(rows_per_band)]
         band_cols.append(F.md5(F.concat_ws(",", *parts)).alias(f"band{b}"))
-    wide = sigs.select(F.col(id_col), *band_cols)
-    stack_expr = ", ".join(f"{b}, band{b}" for b in range(n_bands))
+    wide = sigs.select(F.col("doc_id"), *band_cols)
+    stack_expr = ", ".join(f"{b}, band{b}" for b in range(N_BANDS))
     return wide.selectExpr(
-        id_col, f"stack({n_bands}, {stack_expr}) AS (band_id, band_sig)"
+        "doc_id", f"stack({N_BANDS}, {stack_expr}) AS (band_id, band_sig)"
     )
 
 
-def lsh_candidate_pairs(bands: DataFrame, id_col: str = "doc_id",
-                        max_bucket: int | None = None) -> DataFrame:
+def lsh_candidate_pairs(bands: DataFrame, max_bucket: int | None = None) -> DataFrame:
     """Distinct (id_a < id_b) pairs sharing at least one LSH bucket.
 
     ``max_bucket`` is the 100 TB hot-bucket guard: a bucket holding b
@@ -148,8 +153,8 @@ def lsh_candidate_pairs(bands: DataFrame, id_col: str = "doc_id",
     """
     if max_bucket is not None:
         bands = cap_group_width(bands, ["band_id", "band_sig"], max_bucket)
-    a = bands.select(F.col(id_col).alias("id_a"), "band_id", "band_sig")
-    b = bands.select(F.col(id_col).alias("id_b"), "band_id", "band_sig")
+    a = bands.select(F.col("doc_id").alias("id_a"), "band_id", "band_sig")
+    b = bands.select(F.col("doc_id").alias("id_b"), "band_id", "band_sig")
     return (
         a.join(b, ["band_id", "band_sig"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -158,31 +163,30 @@ def lsh_candidate_pairs(bands: DataFrame, id_col: str = "doc_id",
     )
 
 
-def candidate_jaccard_parts(shingles: DataFrame, candidates: DataFrame,
-                            id_col: str = "doc_id") -> DataFrame:
+def candidate_jaccard_parts(shingles: DataFrame, candidates: DataFrame) -> DataFrame:
     """(id_a, id_b, n_inter, sz_a, sz_b) for every candidate pair — the
     shared exact-set-overlap scaffold under candidate VERIFICATION
     (jaccard_verify's threshold cut, the calibration audit's raw
     estimator-vs-truth comparison).  One definition so a future guard or
     formula fix can't land in one consumer and not the other."""
-    sizes = shingles.groupBy(id_col).agg(F.count("*").alias("sz"))
-    sa = shingles.select(F.col(id_col).alias("id_a"), "shingle")
-    sb = shingles.select(F.col(id_col).alias("id_b"), "shingle")
+    sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    sa = shingles.select(F.col("doc_id").alias("id_a"), "shingle")
+    sb = shingles.select(F.col("doc_id").alias("id_b"), "shingle")
     inter = (
         candidates.join(sa, "id_a")
         .join(sb, ["id_b", "shingle"])
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_inter"))
     )
-    za = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    zb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
+    za = sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"))
+    zb = sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"))
     return inter.join(za, "id_a").join(zb, "id_b")
 
 
 def jaccard_verify(shingles: DataFrame, candidates: DataFrame,
-                   id_col: str = "doc_id", threshold: float = 0.8) -> DataFrame:
+                   threshold: float = 0.8) -> DataFrame:
     """Exact Jaccard over distinct shingle sets, restricted to candidates."""
-    parts = candidate_jaccard_parts(shingles, candidates, id_col)
+    parts = candidate_jaccard_parts(shingles, candidates)
     jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
     return (
         parts.withColumn("jaccard", F.round(jac, 4))
@@ -191,9 +195,7 @@ def jaccard_verify(shingles: DataFrame, candidates: DataFrame,
     )
 
 
-def minhash_near_dup(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text", k: int = 3, n_perm: int = 16,
-                     n_bands: int = 4, threshold: float = 0.8,
+def minhash_near_dup(docs: DataFrame, threshold: float = 0.8,
                      max_bucket: int | None = None) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle → sign → band →
     candidate join → exact-Jaccard verification (C2).
@@ -204,17 +206,13 @@ def minhash_near_dup(docs: DataFrame, id_col: str = "doc_id",
     materializes it once.  (Measured: ``.persist()`` here is ~2× SLOWER —
     it breaks whole-stage codegen across the cache boundary and pays
     InMemoryTableScan overhead for data the shuffle files already hold.)"""
-    sh = shingle_set(docs, id_col, text_col, k)
-    sigs = minhash_signatures(sh, id_col, n_perm)
-    cands = lsh_candidate_pairs(
-        lsh_bands(sigs, id_col, n_perm, n_bands), id_col, max_bucket=max_bucket
-    )
-    return jaccard_verify(sh, cands, id_col, threshold)
+    sh = shingle_set(docs)
+    sigs = minhash_signatures(sh)
+    cands = lsh_candidate_pairs(lsh_bands(sigs), max_bucket=max_bucket)
+    return jaccard_verify(sh, cands, threshold)
 
 
-def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", k: int = 3,
-                        threshold: float = 0.6,
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.6,
                         max_df: int | None = None) -> DataFrame:
     """Exact all-candidate n-gram Jaccard via inverted-index self-join —
     the exact counterpart MinHash approximates.
@@ -228,8 +226,8 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     every shared shingle is boilerplate, which at ``jaccard ≥ threshold``
     means near-pure-boilerplate docs (drop-eligible anyway).  Default
     ``None`` = exact candidate generation (the oracle-matched mode)."""
-    sh = shingle_set(docs, id_col, text_col, k)
-    j = ngram_pairs_with_sizes(sh, id_col, max_df)
+    sh = shingle_set(docs)
+    j = ngram_pairs_with_sizes(sh, max_df)
     jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
     return (
         j.withColumn("jaccard", F.round(jac, 4))
@@ -238,8 +236,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def ngram_pairs_with_sizes(sh: DataFrame, id_col: str = "doc_id",
-                           max_df: int | None = None) -> DataFrame:
+def ngram_pairs_with_sizes(sh: DataFrame, max_df: int | None = None) -> DataFrame:
     """(id_a, id_b, n_inter, sz_a, sz_b): the intersection core joined
     with both sides' set sizes — the shared scaffold every set-overlap
     scorer (Jaccard, containment, overlap coefficient) derives from."""
@@ -250,32 +247,31 @@ def ngram_pairs_with_sizes(sh: DataFrame, id_col: str = "doc_id",
         # aggregation above the one reused exchange; same 1-eval rule as
         # the scale mode's tagged frame, measured −0.2-0.5 s at sf0.1)
         sh = stored(sh)
-        pairs = ngram_intersection_pairs(sh, id_col, max_df)
-        sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
+        pairs = ngram_intersection_pairs(sh, max_df)
+        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     else:
         # scale mode: sizes ride the SAME stored df-tagged frame the
         # candidate core materializes (tagged is sh plus the df column,
         # one row per (id, shingle) — counting its rows per id IS the
         # set size), so the shingle distinct is not recomputed for the
         # size branch (guide §1.2 — don't compute things twice).
-        tagged = _df_tagged_shingles(sh, id_col)
-        pairs = _guarded_intersection_pairs(tagged, id_col, max_df)
-        sizes = tagged.groupBy(id_col).agg(F.count("*").alias("sz"))
-    za = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    zb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
+        tagged = _df_tagged_shingles(sh)
+        pairs = _guarded_intersection_pairs(tagged, "doc_id", max_df)
+        sizes = tagged.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    za = sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"))
+    zb = sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"))
     return pairs.join(za, "id_a").join(zb, "id_b")
 
 
-def ngram_intersection_pairs(sh: DataFrame, id_col: str = "doc_id",
-                             max_df: int | None = None) -> DataFrame:
+def ngram_intersection_pairs(sh: DataFrame, max_df: int | None = None) -> DataFrame:
     """Exact (id_a < id_b, n_inter) shingle-intersection counts over an
     inverted-index self-join of a (id, shingle) set — the shared candidate
     + intersection core under both Jaccard (resemblance) and containment
     scoring.  ``max_df`` semantics as in :func:`ngram_jaccard_pairs`."""
     if max_df is None:
         # exact mode: one self-join pass, intersection counted in place
-        sa = sh.select(F.col(id_col).alias("id_a"), "shingle")
-        sb = sh.select(F.col(id_col).alias("id_b"), "shingle")
+        sa = sh.select(F.col("doc_id").alias("id_a"), "shingle")
+        sb = sh.select(F.col("doc_id").alias("id_b"), "shingle")
         pairs = (
             sa.join(sb, "shingle")
             .filter(F.col("id_a") < F.col("id_b"))
@@ -284,12 +280,12 @@ def ngram_intersection_pairs(sh: DataFrame, id_col: str = "doc_id",
         )
     else:
         pairs = _guarded_intersection_pairs(
-            _df_tagged_shingles(sh, id_col), id_col, max_df
+            _df_tagged_shingles(sh), "doc_id", max_df
         )
     return pairs
 
 
-def _df_tagged_shingles(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _df_tagged_shingles(sh: DataFrame) -> DataFrame:
     """(id, shingle, __df) with the shingle's document frequency tagged on
     every row — the shared frame under the guarded candidate core, stored
     ONCE.
@@ -443,7 +439,7 @@ def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     return grouped.select(F.col(id_col), simhash.alias("simhash"))
 
 
-def simhash_pairs(sigs: DataFrame, id_col: str = "doc_id", n_bands: int = 4,
+def simhash_pairs(sigs: DataFrame, n_bands: int = 4,
                   max_hamming: int = 8,
                   keep_signatures: bool = False) -> DataFrame:
     """Near-dup pairs by SimHash: band the 60-bit signature into 15-bit
@@ -470,7 +466,7 @@ def simhash_pairs(sigs: DataFrame, id_col: str = "doc_id", n_bands: int = 4,
         return F.shiftright(sig, shift).bitwiseAND(F.lit(mask))
 
     banded = sigs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("simhash"),
         F.explode(
             F.array(*[
@@ -481,9 +477,9 @@ def simhash_pairs(sigs: DataFrame, id_col: str = "doc_id", n_bands: int = 4,
                 for b in range(n_bands)
             ])
         ).alias("bb"),
-    ).select(id_col, "simhash", "bb.band_id", "bb.band_val")
-    a = banded.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"), "band_id", "band_val")
-    b = banded.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"), "band_id", "band_val")
+    ).select("doc_id", "simhash", "bb.band_id", "bb.band_val")
+    a = banded.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("sh_a"), "band_id", "band_val")
+    b = banded.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("sh_b"), "band_id", "band_val")
     ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     first_band = reduce(
         lambda x, y: x & y,
@@ -508,9 +504,7 @@ def simhash_pairs(sigs: DataFrame, id_col: str = "doc_id", n_bands: int = 4,
     )
 
 
-def simhash_pairs_collapsed(sigs: DataFrame, id_col: str = "doc_id",
-                            n_bands: int = 4,
-                            max_hamming: int = 8) -> DataFrame:
+def simhash_pairs_collapsed(sigs: DataFrame) -> DataFrame:
     """EXACTLY ``simhash_pairs``'s output with O(clique) band-join state
     — the clique-safe derivation (round-9 VERDICT finding).
 
@@ -543,21 +537,19 @@ def simhash_pairs_collapsed(sigs: DataFrame, id_col: str = "doc_id",
     # the documents source in one plan, +1.6 s at sf0.1).
     sigs = stored(sigs)
     groups = sigs.groupBy("simhash").agg(
-        F.min(id_col).alias("__rep"), F.count("*").alias("__k")
+        F.min("doc_id").alias("__rep"), F.count("*").alias("__k")
     )
-    reps = groups.select(F.col("__rep").alias(id_col), "simhash")
-    rep_pairs = simhash_pairs(
-        reps, id_col, n_bands, max_hamming, keep_signatures=True
-    )
-    members = sigs.select(F.col(id_col), "simhash")
+    reps = groups.select(F.col("__rep").alias("doc_id"), "simhash")
+    rep_pairs = simhash_pairs(reps, keep_signatures=True)
+    members = sigs.select(F.col("doc_id"), "simhash")
     # within-group implied pairs: Hamming 0 by construction; restrict to
     # k >= 2 groups so singleton signatures skip the self-join entirely
     multi = members.join(
         groups.filter(F.col("__k") >= 2).select("simhash"), "simhash"
     )
     within = (
-        multi.select("simhash", F.col(id_col).alias("__ma"))
-        .join(multi.select("simhash", F.col(id_col).alias("__mb")), "simhash")
+        multi.select("simhash", F.col("doc_id").alias("__ma"))
+        .join(multi.select("simhash", F.col("doc_id").alias("__mb")), "simhash")
         .filter(F.col("__ma") < F.col("__mb"))
         .select(
             F.col("__ma").alias("id_a"),
@@ -572,13 +564,13 @@ def simhash_pairs_collapsed(sigs: DataFrame, id_col: str = "doc_id",
     across = (
         rep_pairs.join(
             members.select(
-                F.col("simhash").alias("sh_a"), F.col(id_col).alias("__ma")
+                F.col("simhash").alias("sh_a"), F.col("doc_id").alias("__ma")
             ),
             "sh_a",
         )
         .join(
             members.select(
-                F.col("simhash").alias("sh_b"), F.col(id_col).alias("__mb")
+                F.col("simhash").alias("sh_b"), F.col("doc_id").alias("__mb")
             ),
             "sh_b",
         )
@@ -592,7 +584,6 @@ def simhash_pairs_collapsed(sigs: DataFrame, id_col: str = "doc_id",
 
 
 def connected_components(edges: DataFrame, nodes: DataFrame,
-                         id_col: str = "doc_id",
                          max_iters: int = 25,
                          stats: dict | None = None) -> DataFrame:
     """Connected components over a near-dup candidate graph → cluster ids
@@ -622,8 +613,8 @@ def connected_components(edges: DataFrame, nodes: DataFrame,
     node must not abort a 20-round job).
 
     ``edges``: (id_a, id_b) undirected candidate pairs.
-    ``nodes``: one row per ``id_col`` (must cover isolated nodes).
-    Returns (id_col, cluster_id) where cluster_id = min id in component.
+    ``nodes``: one row per ``doc_id`` (must cover isolated nodes).
+    Returns (doc_id, cluster_id) where cluster_id = min id in component.
     """
     # materialize the candidate graph ONCE (lazily — round 1 computes it,
     # later rounds read the stored blocks): each round is its own job, so
@@ -642,7 +633,7 @@ def connected_components(edges: DataFrame, nodes: DataFrame,
     sym = edges.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionByName(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    labels = nodes.select(F.col(id_col).alias("node"), F.col(id_col).alias("lbl"))
+    labels = nodes.select(F.col("doc_id").alias("node"), F.col("doc_id").alias("lbl"))
     rounds = 0
     converged = False
     for _ in range(max_iters):
@@ -685,11 +676,10 @@ def connected_components(edges: DataFrame, nodes: DataFrame,
             f"rounds — the graph's diameter exceeds the round budget; raise "
             f"max_iters or use connected_components_star (O(log n) rounds)"
         )
-    return labels.select(F.col("node").alias(id_col), F.col("lbl").alias("cluster_id"))
+    return labels.select(F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id"))
 
 
 def connected_components_star(edges: DataFrame, nodes: DataFrame,
-                              id_col: str = "doc_id",
                               max_iters: int = 30,
                               stats: dict | None = None) -> DataFrame:
     """Alternating large-star / small-star connected components (Kiveris
@@ -724,7 +714,7 @@ def connected_components_star(edges: DataFrame, nodes: DataFrame,
     default for dedup graphs — near-clique duplicate groups have tiny
     diameters, where 2 shuffles/round beats this scheme's 4):
     ``edges`` (id_a, id_b) undirected, ``nodes`` covering isolated ids;
-    returns (id_col, cluster_id = component min).  The ``_sig`` collect
+    returns (doc_id, cluster_id = component min).  The ``_sig`` collect
     right after each ``stored()`` round is the action that stores it.
     """
 
@@ -797,10 +787,10 @@ def connected_components_star(edges: DataFrame, nodes: DataFrame,
         )
     nbr_min = _sym(cur).groupBy("u").agg(F.min("v").alias("nbr"))
     return (
-        nodes.select(F.col(id_col).alias("node"))
+        nodes.select(F.col("doc_id").alias("node"))
         .join(nbr_min, F.col("node") == F.col("u"), "left")
         .select(
-            F.col("node").alias(id_col),
+            F.col("node").alias("doc_id"),
             F.least(
                 F.coalesce(F.col("nbr"), F.col("node")), F.col("node")
             ).alias("cluster_id"),
@@ -808,10 +798,7 @@ def connected_components_star(edges: DataFrame, nodes: DataFrame,
     )
 
 
-def decontaminate_near(corpus: DataFrame, benchmark: DataFrame,
-                       id_col: str = "doc_id", text_col: str = "text",
-                       k: int = 3, n_perm: int = 16, n_bands: int = 4,
-                       threshold: float = 0.5) -> DataFrame:
+def decontaminate_near(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Fuzzy benchmark decontamination: MinHash-LSH near-dup between a
     training corpus and a held-out eval set (the near-dup complement of
     ``operators.curation.decontaminate``'s exact n-gram overlap — real
@@ -822,7 +809,7 @@ def decontaminate_near(corpus: DataFrame, benchmark: DataFrame,
     and sign independently, candidates come from a banded equi-join
     ACROSS the two band tables (never corpus×corpus), and each candidate
     is verified with exact Jaccard.  Returns
-    ``(corpus_id, bench_id, jaccard)`` for pairs ≥ ``threshold``.
+    ``(corpus_id, bench_id, jaccard)`` for pairs with Jaccard ≥ 0.5.
 
     Scale: the benchmark side is eval sets — MBs against a 100 TB corpus
     — so its band table and shingle set broadcast; the corpus side's only
@@ -830,33 +817,31 @@ def decontaminate_near(corpus: DataFrame, benchmark: DataFrame,
     intersection count, both proportional to corpus size × hit rate, not
     corpus².
     """
-    sh_c = shingle_set(corpus, id_col, text_col, k)
-    sh_b = shingle_set(benchmark, id_col, text_col, k)
-    bands_c = lsh_bands(minhash_signatures(sh_c, id_col, n_perm),
-                        id_col, n_perm, n_bands)
-    bands_b = lsh_bands(minhash_signatures(sh_b, id_col, n_perm),
-                        id_col, n_perm, n_bands)
+    sh_c = shingle_set(corpus)
+    sh_b = shingle_set(benchmark)
+    bands_c = lsh_bands(minhash_signatures(sh_c))
+    bands_b = lsh_bands(minhash_signatures(sh_b))
     cands = (
-        bands_c.select(F.col(id_col).alias("corpus_id"), "band_id", "band_sig")
+        bands_c.select(F.col("doc_id").alias("corpus_id"), "band_id", "band_sig")
         .join(
             # benchmark-derived sides are eval-set sized (MBs), independent
             # of the corpus, but estimated from their source
             F.broadcast(
-                bands_b.select(F.col(id_col).alias("bench_id"), "band_id", "band_sig")
+                bands_b.select(F.col("doc_id").alias("bench_id"), "band_id", "band_sig")
             ),
             ["band_id", "band_sig"],
         )
         .select("corpus_id", "bench_id")
         .distinct()
     )
-    sz_c = sh_c.groupBy(id_col).agg(F.count("*").alias("sz_a")).select(
-        F.col(id_col).alias("corpus_id"), "sz_a"
+    sz_c = sh_c.groupBy("doc_id").agg(F.count("*").alias("sz_a")).select(
+        F.col("doc_id").alias("corpus_id"), "sz_a"
     )
-    sz_b = sh_b.groupBy(id_col).agg(F.count("*").alias("sz_b")).select(
-        F.col(id_col).alias("bench_id"), "sz_b"
+    sz_b = sh_b.groupBy("doc_id").agg(F.count("*").alias("sz_b")).select(
+        F.col("doc_id").alias("bench_id"), "sz_b"
     )
-    sa = sh_c.select(F.col(id_col).alias("corpus_id"), "shingle")
-    sb = sh_b.select(F.col(id_col).alias("bench_id"), "shingle")
+    sa = sh_c.select(F.col("doc_id").alias("corpus_id"), "shingle")
+    sb = sh_b.select(F.col("doc_id").alias("bench_id"), "shingle")
     inter = (
         cands.join(sa, "corpus_id")
         # eval-set sized benchmark shingles
@@ -870,13 +855,12 @@ def decontaminate_near(corpus: DataFrame, benchmark: DataFrame,
         # one row per benchmark document
         .join(F.broadcast(sz_b), "bench_id")
         .withColumn("jaccard", F.round(jac, 4))
-        .filter(jac >= threshold)
+        .filter(jac >= 0.5)
         .select("corpus_id", "bench_id", "jaccard")
     )
 
 
-def containment_pairs(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", k: int = 3,
+def containment_pairs(docs: DataFrame,
                       threshold: float = 0.9,
                       max_df: int | None = None,
                       min_size: int | None = None) -> DataFrame:
@@ -909,15 +893,15 @@ def containment_pairs(docs: DataFrame, id_col: str = "doc_id",
     id-keyed exchange the size join needs, and SQL-replayable
     (``HAVING count(*) >= min_size`` on the shingle sets).
     """
-    sh = shingle_set(docs, id_col, text_col, k)
+    sh = shingle_set(docs)
     if min_size is not None:
-        w_id = Window.partitionBy(id_col)
+        w_id = Window.partitionBy("doc_id")
         sh = (
             sh.withColumn("__sz", F.count("*").over(w_id))
             .filter(F.col("__sz") >= min_size)
             .drop("__sz")
         )
-    j = ngram_pairs_with_sizes(sh, id_col, max_df)
+    j = ngram_pairs_with_sizes(sh, max_df)
     cont = F.col("n_inter") / F.least(F.col("sz_a"), F.col("sz_b"))
     jac = F.round(
         F.col("n_inter")
@@ -945,12 +929,10 @@ def containment_pairs(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def jaccard_prefix_pairs(docs: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text", k: int = 3,
-                         threshold: float = 0.6) -> DataFrame:
+def jaccard_prefix_pairs(docs: DataFrame) -> DataFrame:
     """Exact set-similarity join via PREFIX FILTERING (Chaudhuri et al.
     ICDE'06 SSJoin; Bayardo et al. WWW'07 All-Pairs; Xiao et al. WWW'08
-    PPJoin): the same (id_a, id_b, jaccard ≥ threshold) result as
+    PPJoin): the same (id_a, id_b, jaccard ≥ ``PREFIX_THRESHOLD``) result as
     :func:`ngram_jaccard_pairs`, but candidates come only from each
     document's PREFIX — its ``|x| - ceil(t·|x|) + 1`` rarest shingles
     under a global (df asc, shingle asc) ordering — instead of the full
@@ -974,13 +956,12 @@ def jaccard_prefix_pairs(docs: DataFrame, id_col: str = "doc_id",
     ``1e-9`` slack keeps ``ceil`` from overshooting when ``t·|x|`` is
     integral (float product may land one ULP above the integer), which
     would shorten the prefix below the lossless minimum."""
-    sh = shingle_set(docs, id_col, text_col, k)
-    cands = prefix_candidate_pairs(sh, id_col, threshold)
-    return jaccard_verify(sh, cands, id_col, threshold)
+    sh = shingle_set(docs)
+    cands = prefix_candidate_pairs(sh)
+    return jaccard_verify(sh, cands, PREFIX_THRESHOLD)
 
 
-def prefix_candidate_pairs(sh: DataFrame, id_col: str = "doc_id",
-                           threshold: float = 0.6) -> DataFrame:
+def prefix_candidate_pairs(sh: DataFrame) -> DataFrame:
     """Distinct (id_a < id_b) candidate pairs sharing at least one PREFIX
     shingle — the lossless candidate core of :func:`jaccard_prefix_pairs`
     (prefix = each set's ``|x| - ceil(t·|x|) + 1`` rarest shingles under
@@ -1006,11 +987,11 @@ def prefix_candidate_pairs(sh: DataFrame, id_col: str = "doc_id",
     saturation-regime discussion."""
     tagged = (
         sh.withColumn("__df", F.count("*").over(Window.partitionBy("shingle")))
-        .withColumn("__sz", F.count("*").over(Window.partitionBy(id_col)))
+        .withColumn("__sz", F.count("*").over(Window.partitionBy("doc_id")))
         .withColumn(
             "__pos",
             F.row_number().over(
-                Window.partitionBy(id_col).orderBy(
+                Window.partitionBy("doc_id").orderBy(
                     F.col("__df").asc(), F.col("shingle").asc()
                 )
             ),
@@ -1018,20 +999,20 @@ def prefix_candidate_pairs(sh: DataFrame, id_col: str = "doc_id",
     )
     prefix_len = (
         F.col("__sz")
-        - F.ceil(F.lit(threshold) * F.col("__sz") - F.lit(1e-9))
+        - F.ceil(F.lit(PREFIX_THRESHOLD) * F.col("__sz") - F.lit(1e-9))
         + F.lit(1)
     )
     prefix = tagged.filter(F.col("__pos") <= prefix_len)
     pa = prefix.select(
-        F.col(id_col).alias("id_a"), "shingle",
+        F.col("doc_id").alias("id_a"), "shingle",
         F.col("__pos").alias("__pa"), F.col("__sz").alias("__sa"),
     )
     pb = prefix.select(
-        F.col(id_col).alias("id_b"), "shingle",
+        F.col("doc_id").alias("id_b"), "shingle",
         F.col("__pos").alias("__pb"), F.col("__sz").alias("__sb"),
     )
     alpha = F.ceil(
-        F.lit(threshold / (1.0 + threshold))
+        F.lit(PREFIX_THRESHOLD / (1.0 + PREFIX_THRESHOLD))
         * (F.col("__sa") + F.col("__sb"))
         - F.lit(1e-9)
     )
@@ -1040,7 +1021,7 @@ def prefix_candidate_pairs(sh: DataFrame, id_col: str = "doc_id",
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(
             F.least("__sa", "__sb")
-            >= F.lit(threshold) * F.greatest("__sa", "__sb")
+            >= F.lit(PREFIX_THRESHOLD) * F.greatest("__sa", "__sb")
         )
         .filter(
             F.least(

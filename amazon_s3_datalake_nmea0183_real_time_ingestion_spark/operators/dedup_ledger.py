@@ -54,12 +54,10 @@ def admit_new_documents(
     batch: DataFrame,
     ledger_path: str,
     batch_id: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Return the subset of ``batch`` never seen before; record it.
 
-    Within-batch ties keep the lowest ``id_col`` (deterministic).  Rows
+    Within-batch ties keep the lowest ``doc_id`` (deterministic).  Rows
     whose fingerprint is already in the ledger are dropped.  Admitted
     ``(fp, doc_id, batch_id)`` rows are written to
     ``ledger_path/batch_id=N/`` with dynamic partition overwrite, so
@@ -70,18 +68,18 @@ def admit_new_documents(
     prior partial write (otherwise a replay would reject every row it
     admitted before the crash and emit an empty batch downstream).
     """
-    fp = doc_fingerprint(text_col)
+    fp = doc_fingerprint("text")
     in_batch = (
         batch.withColumn("fp", fp)
         .groupBy("fp")
-        .agg(F.min(id_col).alias(id_col))
+        .agg(F.min("doc_id").alias("doc_id"))
     )
     ledger = _read_ledger(spark, ledger_path).filter(
         F.col("batch_id") != F.lit(batch_id)
     )
     fresh = in_batch.join(ledger.select("fp"), "fp", "left_anti")
     entries = fresh.select(
-        "fp", F.col(id_col).cast("long").alias("doc_id"),
+        "fp", F.col("doc_id").cast("long").alias("doc_id"),
         F.lit(batch_id).cast("long").alias("batch_id"),
     )
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -93,10 +91,10 @@ def admit_new_documents(
     # admitted full rows: semi-join original batch on the surviving ids
     # (dropDuplicates guards against literal row replays inside one batch)
     return batch.join(
-        fresh.select(F.col(id_col).alias("__keep_id")),
-        F.col(id_col) == F.col("__keep_id"),
+        fresh.select(F.col("doc_id").alias("__keep_id")),
+        F.col("doc_id") == F.col("__keep_id"),
         "left_semi",
-    ).dropDuplicates([id_col])
+    ).dropDuplicates(["doc_id"])
 
 
 NEAR_LEDGER_SCHEMA = "doc_id bigint, simhash bigint, batch_id bigint"
@@ -257,9 +255,6 @@ def start_dedup_stream(
     ledger_path: str,
     out_path: str,
     checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    available_now: bool = True,
 ):
     """Streaming admission control: foreachBatch wrapper around
     :func:`admit_new_documents` that appends admitted documents to
@@ -268,14 +263,12 @@ def start_dedup_stream(
 
     def _admit(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        admitted = admit_new_documents(
-            spark, batch, ledger_path, batch_id, id_col=id_col, text_col=text_col
-        )
+        admitted = admit_new_documents(spark, batch, ledger_path, batch_id)
         admitted.write.mode("append").parquet(out_path)
 
-    writer = stream.writeStream.foreachBatch(_admit).option(
-        "checkpointLocation", checkpoint
+    return (
+        stream.writeStream.foreachBatch(_admit)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -22,16 +22,10 @@ from pyspark.sql import functions as F
 from ..functions.vectors import as_double
 
 
-def project_embeddings(
-    df: DataFrame,
-    planes: list[list[int]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    prefix: str = "r",
-) -> DataFrame:
-    """Reduce ``vec_col`` (dim d) to ``len(planes)`` integer components.
+def project_embeddings(df: DataFrame, planes: list[list[int]]) -> DataFrame:
+    """Reduce ``embedding`` (dim d) to ``len(planes)`` integer components.
 
-    Output: ``(id_col, {prefix}0 .. {prefix}{k-1})`` with each component
+    Output: ``(vec_id, r0 .. r{k-1})`` with each component
     ``sum_d floor(v[d]*1000) * planes[j][d]`` as BIGINT.
 
     Scale shape: narrow map-side projection (WholeStageCodegen, no
@@ -42,9 +36,9 @@ def project_embeddings(
     is to write the reduced table back partitioned by downstream join
     key so the expensive full-width column is never re-read.
     """
-    vq = F.transform(as_double(F.col(vec_col)),
+    vq = F.transform(as_double(F.col("embedding")),
                      lambda x: F.floor(x * 1000).cast("bigint"))
-    quant = df.select(F.col(id_col), vq.alias("vq"))  # materialize: HOF lambdas must read an attribute
+    quant = df.select(F.col("vec_id"), vq.alias("vq"))  # materialize: HOF lambdas must read an attribute
     planes_lit = F.array(*[F.array(*[F.lit(s) for s in row]) for row in planes])
     dots = F.transform(
         planes_lit,
@@ -54,9 +48,9 @@ def project_embeddings(
             lambda acc, x: acc + x,
         ),
     )
-    proj = quant.select(F.col(id_col), dots.alias("dots"))
+    proj = quant.select(F.col("vec_id"), dots.alias("dots"))
     out_cols = [
-        F.element_at("dots", j + 1).alias(f"{prefix}{j}")
+        F.element_at("dots", j + 1).alias(f"r{j}")
         for j in range(len(planes))
     ]
-    return proj.select(F.col(id_col), *out_cols)
+    return proj.select(F.col("vec_id"), *out_cols)

@@ -15,10 +15,10 @@ from pyspark.sql import functions as F
 from ..schemas import SOH_SCHEMA, SOH_TO_STAGE, STAGE_COLUMNS
 
 
-def parse_soh_payload(soh: DataFrame, payload_col: str = "payload_text") -> DataFrame:
+def parse_soh_payload(soh: DataFrame) -> DataFrame:
     """Parse the decoded SOH JSON payload into a ``soh`` struct column
     (reference: hello.py:133 json.loads)."""
-    return soh.withColumn("soh", F.from_json(F.col(payload_col), SOH_SCHEMA))
+    return soh.withColumn("soh", F.from_json(F.col("payload_text"), SOH_SCHEMA))
 
 
 def flatten_soh(parsed: DataFrame, geo_enriched: bool = True) -> DataFrame:

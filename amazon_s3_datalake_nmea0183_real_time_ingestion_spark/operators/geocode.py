@@ -117,14 +117,7 @@ def table_bucket_count(spark: SparkSession, table_name: str) -> int:
     raise ValueError(f"table {table_name!r} is not bucketed")
 
 
-def enrich_geocode_bucketed(
-    df: DataFrame,
-    spark: SparkSession,
-    table_name: str,
-    lon_col: str = "longitude",
-    lat_col: str = "latitude",
-    n_buckets: int | None = None,
-) -> DataFrame:
+def enrich_geocode_bucketed(df: DataFrame, spark: SparkSession, table_name: str) -> DataFrame:
     """Enrich against a dimension too big to broadcast: sort-merge join
     against the bucketed dim table written by
     :func:`write_bucketed_geo_dim`.
@@ -135,16 +128,15 @@ def enrich_geocode_bucketed(
     scan's bucketing satisfies the join requirement directly (zero
     dim-side shuffle — the payoff: the big dim never moves after its
     one-time bucket write) and the fact's repartition IS the join
-    distribution.  The bucket count is read from the CATALOG by default —
-    a caller-supplied count that disagreed with the written layout would
-    silently reintroduce the reconciling exchange this function exists to
-    avoid.  ``merge`` hint pins sort-merge so a small test dim doesn't
-    silently take the broadcast path.  Plan-asserted in
+    distribution.  The bucket count is read from the CATALOG: a count
+    that disagreed with the written layout would silently reintroduce the
+    reconciling exchange this function exists to avoid.  ``merge`` hint
+    pins sort-merge so a small test dim doesn't silently take the
+    broadcast path.  Plan-asserted in
     tests/test_scale_plans.py."""
-    if n_buckets is None:
-        n_buckets = table_bucket_count(spark, table_name)
+    n_buckets = table_bucket_count(spark, table_name)
     dim = spark.table(table_name)
-    keyed = df.withColumn("geo_cell", grid_cell(F.col(lon_col), F.col(lat_col)))
+    keyed = df.withColumn("geo_cell", grid_cell(F.col("longitude"), F.col("latitude")))
     keyed = keyed.repartition(n_buckets, "geo_cell")
     # layout pin, not a size call: keep the bucketed sort-merge path even
     # for a dim small enough to broadcast

@@ -25,9 +25,7 @@ from pyspark.sql import functions as F
 from ..storage import stored
 
 
-def copurchase_pairs(li: DataFrame, key_col: str = "l_orderkey",
-                     item_col: str = "l_partkey",
-                     max_basket: int | None = None,
+def copurchase_pairs(li: DataFrame, max_basket: int | None = None,
                      directed: bool = False) -> DataFrame:
     """Distinct item co-occurrence pairs from a (basket, item) relation —
     the edge derivation shared by the co-purchase graph keys
@@ -69,17 +67,17 @@ def copurchase_pairs(li: DataFrame, key_col: str = "l_orderkey",
     grouping, as the old self-join (NULL never equals NULL) never paired
     them.
     """
-    li = li.filter(F.col(key_col).isNotNull())
+    li = li.filter(F.col("l_orderkey").isNotNull())
     if max_basket is not None:
         wide = (
-            li.groupBy(key_col)
-            .agg(F.count_distinct(item_col).alias("__w"))
+            li.groupBy("l_orderkey")
+            .agg(F.count_distinct("l_partkey").alias("__w"))
             .filter(F.col("__w") > max_basket)
-            .select(key_col)
+            .select("l_orderkey")
         )
-        li = li.join(wide, key_col, "left_anti")
-    baskets = li.groupBy(key_col).agg(
-        F.sort_array(F.collect_set(item_col)).alias("__items")
+        li = li.join(wide, "l_orderkey", "left_anti")
+    baskets = li.groupBy("l_orderkey").agg(
+        F.sort_array(F.collect_set("l_partkey")).alias("__items")
     )
     items = F.col("__items")
     pair_structs = F.flatten(
@@ -145,7 +143,6 @@ def pagerank(
     edges: DataFrame | None,
     nodes: DataFrame,
     n_iter: int = 3,
-    damping: float = 0.85,
     materialize: bool = True,
     weighted: DataFrame | None = None,
 ) -> DataFrame:
@@ -193,8 +190,8 @@ def pagerank(
             .select(
                 "node",
                 (
-                    F.lit(1.0 - damping) / F.col("__n")
-                    + F.lit(damping) * F.coalesce(F.col("__m"), F.lit(0.0))
+                    F.lit(1.0 - 0.85) / F.col("__n")
+                    + F.lit(0.85) * F.coalesce(F.col("__m"), F.lit(0.0))
                 ).alias("r"),
             )
         )
@@ -312,9 +309,7 @@ def kcore(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     )
 
 
-def copurchase_affinity(li: DataFrame, key_col: str = "l_orderkey",
-                        item_col: str = "l_partkey",
-                        min_support: int = 2) -> DataFrame:
+def copurchase_affinity(li: DataFrame, min_support: int = 2) -> DataFrame:
     """Weighted co-occurrence AFFINITY graph: undirected item pairs
     (u < v, w) where ``w`` counts the distinct baskets the pair shares,
     kept only at ``w >= min_support`` (the association-rule support
@@ -333,17 +328,17 @@ def copurchase_affinity(li: DataFrame, key_col: str = "l_orderkey",
     (copurchase_pairs' max_basket pattern) when basket width itself is
     unbounded.
     """
-    li = li.select(key_col, item_col).distinct()
+    li = li.select("l_orderkey", "l_partkey").distinct()
     a, b = li.alias("a"), li.alias("b")
     return (
         a.join(
             b,
-            (F.col(f"a.{key_col}") == F.col(f"b.{key_col}"))
-            & (F.col(f"a.{item_col}") < F.col(f"b.{item_col}")),
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
         )
         .groupBy(
-            F.col(f"a.{item_col}").alias("u"),
-            F.col(f"b.{item_col}").alias("v"),
+            F.col("a.l_partkey").alias("u"),
+            F.col("b.l_partkey").alias("v"),
         )
         .agg(F.count("*").alias("w"))
         .filter(F.col("w") >= min_support)

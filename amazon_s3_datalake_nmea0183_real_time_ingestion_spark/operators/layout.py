@@ -20,7 +20,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def morton_sql(cols: list[str], bits: int = 16) -> str:
+# bits per dimension of the z-order key: the normalization range of
+# zorder_write and the interleave width of morton_sql
+ZORDER_BITS = 16
+
+
+def morton_sql(cols: list[str], bits: int = ZORDER_BITS) -> str:
     """n-dimensional bit-interleave as engine-portable SQL text: bit ``j``
     of dimension ``d`` lands at position ``j * n + d``.  Only ``>>``,
     ``&`` and multiplication by power-of-two literals (shift-left without
@@ -37,8 +42,8 @@ def morton_sql(cols: list[str], bits: int = 16) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def zorder_key(cols: list[str], bits: int = 16) -> Column:
-    return F.expr(morton_sql(cols, bits))
+def zorder_key(cols: list[str]) -> Column:
+    return F.expr(morton_sql(cols))
 
 
 def zorder_write(
@@ -46,11 +51,10 @@ def zorder_write(
     cols: list[str],
     path: str,
     n_files: int = 8,
-    bits: int = 16,
 ) -> None:
     """Rewrite ``df`` into ``n_files`` z-ordered parquet files.
 
-    Dimensions are first min-max normalized to the full ``bits`` width —
+    Dimensions are first min-max normalized to the full ``ZORDER_BITS`` width —
     without this, a dimension with a smaller value range only occupies low
     interleave positions and the top Morton bits degenerate to the widest
     column (single-column sort in disguise).  The bounds aggregate is one
@@ -62,7 +66,7 @@ def zorder_write(
     column is dropped before the write (a projection preserves row order),
     so the layout is invisible to readers except through file statistics.
     """
-    top = (1 << bits) - 1
+    top = (1 << ZORDER_BITS) - 1
     bounds = df.agg(
         *[F.min(c).alias(f"__lo_{c}") for c in cols],
         *[F.max(c).alias(f"__hi_{c}") for c in cols],
@@ -90,7 +94,7 @@ def zorder_write(
             ).cast("long"),
         )
         norm_names.append(f"__n{i}")
-    keyed = keyed.withColumn("__zval", zorder_key(norm_names, bits)).drop(
+    keyed = keyed.withColumn("__zval", zorder_key(norm_names)).drop(
         *norm_names, *[f"__lo_{c}" for c in cols], *[f"__hi_{c}" for c in cols]
     )
     (

@@ -107,10 +107,9 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def sample_frames(assets: DataFrame, frame_size: int = 64,
-                  every_n: int = 4) -> DataFrame:
+def sample_frames(assets: DataFrame) -> DataFrame:
     """Frame sampling (video-style one-to-many): slice each payload into
-    fixed-size frames and keep every ``every_n``-th.
+    64-byte frames and keep every 4th.
 
     A real video pipeline swaps the byte-slicing for a container demuxer;
     the Spark shape is identical: ``mapInPandas`` where one input row
@@ -122,12 +121,12 @@ def sample_frames(assets: DataFrame, frame_size: int = 64,
         for pdf in it:
             ids, idxs, totals, frames = [], [], [], []
             for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                n_frames = max((len(payload) + frame_size - 1) // frame_size, 1)
-                for i in range(0, n_frames, every_n):
+                n_frames = max((len(payload) + 63) // 64, 1)
+                for i in range(0, n_frames, 4):
                     ids.append(aid)
                     idxs.append(i)
                     totals.append(n_frames)
-                    frames.append(bytes(payload[i * frame_size:(i + 1) * frame_size]))
+                    frames.append(bytes(payload[i * 64:(i + 1) * 64]))
             yield pd.DataFrame(
                 {"asset_id": ids, "frame_idx": pd.array(idxs, dtype="int32"),
                  "n_frames": pd.array(totals, dtype="int32"), "frame": frames}
@@ -370,8 +369,7 @@ ENCODED_ASSET_SCHEMA = StructType(
 )
 
 
-def build_codec_assets(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def build_codec_assets(docs: DataFrame) -> DataFrame:
     """Deterministic asset synthesis: each document becomes ONE real
     container file (wav/bmp/ppm by ``id % 3``) whose sample/pixel values
     are the text's code points mod 256 — so an engine-independent oracle
@@ -385,7 +383,7 @@ def build_codec_assets(docs: DataFrame, id_col: str = "doc_id",
         names = {0: "wav", 1: "bmp", 2: "ppm"}
         for pdf in it:
             ids, containers, payloads = [], [], []
-            for aid, text in zip(pdf[id_col], pdf[text_col]):
+            for aid, text in zip(pdf["doc_id"], pdf["text"]):
                 kind = int(aid) % 3
                 values = [ord(c) % 256 for c in text]
                 ids.append(aid)
@@ -396,7 +394,7 @@ def build_codec_assets(docs: DataFrame, id_col: str = "doc_id",
             )
 
     return docs.select(
-        F.col(id_col).cast("long").alias(id_col), text_col
+        F.col("doc_id").cast("long").alias("doc_id"), "text"
     ).mapInPandas(_batches, ENCODED_ASSET_SCHEMA)
 
 

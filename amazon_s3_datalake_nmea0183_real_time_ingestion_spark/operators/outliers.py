@@ -28,45 +28,39 @@ from pyspark.sql import functions as F
 MAD_CONSISTENCY = 1.4826  # normal-distribution consistency constant
 
 
-def mad_stats(df: DataFrame, group_col: str = "event_type",
-              value_col: str = "value") -> DataFrame:
+def mad_stats(df: DataFrame) -> DataFrame:
     """Per-group (median, MAD): the robust location/scale fit step."""
-    med = df.groupBy(group_col).agg(F.median(value_col).alias("med"))
+    med = df.groupBy("event_type").agg(F.median("value").alias("med"))
     return (
         # one row per group (a low-cardinality key); estimated from df
-        df.join(F.broadcast(med), group_col)
-        .withColumn("__adev", F.abs(F.col(value_col) - F.col("med")))
-        .groupBy(group_col)
+        df.join(F.broadcast(med), "event_type")
+        .withColumn("__adev", F.abs(F.col("value") - F.col("med")))
+        .groupBy("event_type")
         .agg(F.max("med").alias("med"), F.median("__adev").alias("mad"))
     )
 
 
-def flag_outliers(df: DataFrame, stats: DataFrame,
-                  group_col: str = "event_type", value_col: str = "value",
-                  k: float = 3.0, keep_stats: bool = False) -> DataFrame:
-    """Map-side scoring: adds ``is_outlier`` (|v − med| > k·1.4826·MAD)
+def flag_outliers(df: DataFrame, stats: DataFrame, keep_stats: bool = False) -> DataFrame:
+    """Map-side scoring: adds ``is_outlier`` (|v − med| > 3·1.4826·MAD)
     and ``robust_z`` ((v − med) / (1.4826·MAD), NULL when MAD = 0).
     ``stats`` is broadcast — the scored side never shuffles.
     ``keep_stats=True`` keeps the joined med/mad columns so downstream
     reporting doesn't have to re-join (and re-evaluate) the stats plan."""
-    dev = F.col(value_col) - F.col("med")
+    dev = F.col("value") - F.col("med")
     scale = F.lit(MAD_CONSISTENCY) * F.col("mad")
     out = (
         # one row per group (a low-cardinality key); estimated from df
-        df.join(F.broadcast(stats), group_col)
+        df.join(F.broadcast(stats), "event_type")
         .withColumn("robust_z", F.try_divide(dev, scale))
-        .withColumn("is_outlier", F.abs(dev) > F.lit(k) * scale)
+        .withColumn("is_outlier", F.abs(dev) > F.lit(3.0) * scale)
     )
     return out if keep_stats else out.drop("med", "mad")
 
 
-def streaming_mad_scores(stream: DataFrame, stats: DataFrame,
-                         group_col: str = "event_type",
-                         value_col: str = "value",
-                         k: float = 3.0) -> DataFrame:
+def streaming_mad_scores(stream: DataFrame, stats: DataFrame) -> DataFrame:
     """Score an unbounded stream against batch-fitted stats (stream-static
     broadcast join — stateless, append-mode safe).  Re-fit ``stats`` on
     whatever cadence the reference window demands; Spark re-resolves the
     static side per micro-batch, so swapping the stats table between
     triggers takes effect without restarting the query."""
-    return flag_outliers(stream, stats, group_col, value_col, k)
+    return flag_outliers(stream, stats)

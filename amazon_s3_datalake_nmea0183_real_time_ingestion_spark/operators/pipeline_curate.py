@@ -53,32 +53,26 @@ def curate_corpus(
     docs: DataFrame,
     benchmark: DataFrame | None = None,
     quality_threshold: float = 0.0,
-    near_threshold: float = 0.8,
-    max_bucket: int | None = 100,
-    temperature: float = 0.7,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
 ) -> dict[str, DataFrame]:
     """Run the full curation chain; returns lazy DataFrames:
 
     - ``curated``: surviving documents + ``quality`` + ``cluster_id`` +
       ``split`` columns (input columns preserved);
     - ``mixture``: per-source temperature-mixture weights over the
-      CURATED corpus (n^α / Σ n^α — compute rates AFTER dropping, or
+      CURATED corpus (n^α / Σ n^α with α = 0.7 — compute rates AFTER dropping, or
       the weights re-inflate exactly the boilerplate you removed);
     - ``funnel``: (stage, n_docs) report, one row per stage in order.
 
-    ``benchmark`` (optional): a frame with ``text_col`` whose 3-gram
+    ``benchmark`` (optional): a frame with ``text`` whose 3-gram
     shingles must not appear in training data — dropped via the exact
     n-gram screen (decontaminate); pass None to skip.
 
     Component labeling fails LOUD on non-convergence (RuntimeError at
     the round budget).
     """
-    toked = docs.withColumn("__t", tokens(text_col))
+    toked = docs.withColumn("__t", tokens("text"))
     gated = (
-        toked.withColumn("quality", quality_logit(F.col("__t"), F.col(text_col)))
+        toked.withColumn("quality", quality_logit(F.col("__t"), F.col("text")))
         .filter(F.col("quality") > quality_threshold)
         .drop("__t")
     )
@@ -94,21 +88,19 @@ def curate_corpus(
     # (gated-sized: survivors + the duplicate rows the filter drops)
     # serves both counts from the same blocks; the dedup filter is a
     # narrow projection over them.
-    w_fp = Window.partitionBy("__fp").orderBy(F.col(id_col).asc())
+    w_fp = Window.partitionBy("__fp").orderBy(F.col("doc_id").asc())
     tagged = stored(
-        gated.withColumn("__fp", doc_fingerprint(text_col))
+        gated.withColumn("__fp", doc_fingerprint("text"))
         .withColumn("__rn", F.row_number().over(w_fp))
     )
     exact = tagged.filter(F.col("__rn") == 1).drop("__fp", "__rn")
 
     # near-dup: guarded MinHash-LSH pairs -> components -> keep canonical
-    pairs = minhash_near_dup(
-        exact, id_col, text_col, threshold=near_threshold, max_bucket=max_bucket
-    ).select("id_a", "id_b")
+    pairs = minhash_near_dup(exact, max_bucket=100).select("id_a", "id_b")
     # consumed by the collapse AND the split
-    labels = stored(connected_components(pairs, exact.select(id_col), id_col=id_col))
-    collapsed = exact.join(labels, id_col).filter(
-        F.col(id_col) == F.col("cluster_id")
+    labels = stored(connected_components(pairs, exact.select("doc_id")))
+    collapsed = exact.join(labels, "doc_id").filter(
+        F.col("doc_id") == F.col("cluster_id")
     )
 
     if benchmark is not None:
@@ -121,10 +113,8 @@ def curate_corpus(
         # the contaminated text by construction.  The benchmark side
         # broadcasts (eval sets are MBs), so widening the corpus side from
         # canonicals to all exact survivors adds no shuffle.
-        contaminated = decontaminate(
-            exact, benchmark, id_col=id_col, text_col=text_col
-        ).select(id_col)
-        bad_clusters = labels.join(contaminated, id_col).select("cluster_id").distinct()
+        contaminated = decontaminate(exact, benchmark).select("doc_id")
+        bad_clusters = labels.join(contaminated, "doc_id").select("cluster_id").distinct()
         clean = collapsed.join(bad_clusters, "cluster_id", "left_anti")
     else:
         clean = collapsed
@@ -144,11 +134,11 @@ def curate_corpus(
         .unionByName(clean.agg(cnt).select(F.lit("decontaminated").alias("stage"), "n_docs"))
     )
 
-    ncnt = curated.groupBy(source_col).agg(F.count("*").alias("n_docs"))
-    z = ncnt.agg(F.sum(F.pow(F.col("n_docs"), F.lit(temperature))).alias("z"))
-    w = F.pow(F.col("n_docs"), F.lit(temperature)) / F.col("z")
+    ncnt = curated.groupBy("source").agg(F.count("*").alias("n_docs"))
+    z = ncnt.agg(F.sum(F.pow(F.col("n_docs"), F.lit(0.7))).alias("z"))
+    w = F.pow(F.col("n_docs"), F.lit(0.7)) / F.col("z")
     mixture = ncnt.crossJoin(z).select(
-        source_col, "n_docs", F.round(w, 6).alias("weight")
+        "source", "n_docs", F.round(w, 6).alias("weight")
     )
 
     return {"curated": curated, "mixture": mixture, "funnel": funnel}

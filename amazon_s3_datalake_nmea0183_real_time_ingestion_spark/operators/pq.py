@@ -219,16 +219,14 @@ def pq_encode_blas(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8,
     return df.mapInPandas(_enc, out_schema)
 
 
-def pq_train(df: DataFrame, dim: int, m: int = 8, ksub: int = 16,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             iters: int = 1) -> DataFrame:
+def pq_train(df: DataFrame, dim: int, m: int = 8, ksub: int = 16) -> DataFrame:
     """Learn per-subspace codebooks: deterministic seeding (the ``ksub``
     lowest-id vectors' sub-vectors, code_id = their id — the
-    seed_centroids convention) + ``iters`` Lloyd rounds of squared-L2
+    seed_centroids convention) + one Lloyd round of squared-L2
     assignment and per-position means (round 6).  Returns (subspace,
     code_id, codeword) rows — m × ksub × (dim/m) doubles, KBs.
 
-    Each round costs one corpus shuffle (the mean agg; assignment runs
+    The round costs one corpus shuffle (the mean agg; assignment runs
     map-side through :func:`pq_encode_blas`).  Codes that lose every
     member drop out, standard Lloyd — code_ids are identities, not
     positions, so a sparse codebook encodes/decodes unambiguously.
@@ -238,12 +236,12 @@ def pq_train(df: DataFrame, dim: int, m: int = 8, ksub: int = 16,
     subspaces = list(range(m))
     # materialize the double cast ONCE: the seed slices and the
     # per-subspace means below all read it
-    base = df.select(F.col(id_col), as_double(F.col(vec_col)).alias("__dv"))
-    cb = base.filter(F.col(id_col) < ksub).select(
+    base = df.select(F.col("vec_id"), as_double(F.col("embedding")).alias("__dv"))
+    cb = base.filter(F.col("vec_id") < ksub).select(
         *[
             F.struct(
                 F.lit(s).alias("subspace"),
-                F.col(id_col).cast("int").alias("code_id"),
+                F.col("vec_id").cast("int").alias("code_id"),
                 F.slice("__dv", s * dsub + 1, dsub).alias("codeword"),
             ).alias(f"__s{s}")
             for s in subspaces
@@ -251,45 +249,43 @@ def pq_train(df: DataFrame, dim: int, m: int = 8, ksub: int = 16,
     ).select(F.explode(F.array(*[f"__s{s}" for s in subspaces])).alias("e")).select(
         "e.subspace", "e.code_id", "e.codeword"
     )
-    for _ in range(iters):
-        coded = pq_encode_blas(
-            base, cb, dim, m, "__dv", with_recon=False
-        ).select(
-            F.col(id_col), F.col("pq_codes").alias("__codes"), F.col("__dv")
-        )
-        # one shuffle: (subspace, code, position-within-subspace) means
-        sub_rows = coded.select(
-            F.col(id_col),
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    lambda s: F.struct(
-                        F.element_at(F.col("__codes"), s + 1).alias("code"),
-                        F.slice(F.col("__dv"), s * dsub + 1, dsub).alias("sv"),
-                    ),
-                )
-            ).alias("subspace", "e"),
-        )
-        el = sub_rows.select(
-            "subspace", F.col("e.code").alias("code_id"),
-            F.posexplode("e.sv").alias("pos", "x"),
-        )
-        cb = (
-            el.groupBy("subspace", "code_id", "pos")
-            .agg(F.round(F.avg("x"), 6).alias("mval"))
-            .groupBy("subspace", "code_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "mval"))),
-                    lambda s: s["mval"],
-                ).alias("codeword")
+    coded = pq_encode_blas(
+        base, cb, dim, m, "__dv", with_recon=False
+    ).select(
+        F.col("vec_id"), F.col("pq_codes").alias("__codes"), F.col("__dv")
+    )
+    # one shuffle: (subspace, code, position-within-subspace) means
+    sub_rows = coded.select(
+        F.col("vec_id"),
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(m - 1)),
+                lambda s: F.struct(
+                    F.element_at(F.col("__codes"), s + 1).alias("code"),
+                    F.slice(F.col("__dv"), s * dsub + 1, dsub).alias("sv"),
+                ),
             )
+        ).alias("subspace", "e"),
+    )
+    el = sub_rows.select(
+        "subspace", F.col("e.code").alias("code_id"),
+        F.posexplode("e.sv").alias("pos", "x"),
+    )
+    cb = (
+        el.groupBy("subspace", "code_id", "pos")
+        .agg(F.round(F.avg("x"), 6).alias("mval"))
+        .groupBy("subspace", "code_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "mval"))),
+                lambda s: s["mval"],
+            ).alias("codeword")
         )
+    )
     return cb
 
 
-def pq_encode(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8,
-              vec_col: str = "embedding") -> DataFrame:
+def pq_encode(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8) -> DataFrame:
     """Attach ``pq_codes`` (array<int>, the m-byte stored form) and
     ``pq_recon`` (array<double>, the decoded view ADC search scores
     against) — map-side only, 1-row codebook nest broadcast.  The
@@ -306,7 +302,7 @@ def pq_encode(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8,
     dsub = dim // m
     nest = _nest_codebooks(codebooks)
     prep = df.select(
-        *df.columns, as_double(F.col(vec_col)).alias("__pqdv")
+        *df.columns, as_double(F.col("embedding")).alias("__pqdv")
     ).crossJoin(nest)
     coded = prep.select(
         *df.columns,
@@ -320,8 +316,7 @@ def pq_encode(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8,
     )
 
 
-def pq_report(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8,
-              id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def pq_report(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8) -> DataFrame:
     """Per-vector PQ audit: the code string (``c0-c1-…``, the stored
     bytes made hash-comparable), reconstruction MSE, worst absolute
     component error, and cosine fidelity — the commit gate before
@@ -335,10 +330,10 @@ def pq_report(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8,
     their own projections before the aggregates that reference them
     repeatedly (same HOF re-evaluation rationale as pq_encode)."""
     dfd = df.select(
-        F.col(id_col), as_double(F.col(vec_col)).alias("__dv")
+        F.col("vec_id"), as_double(F.col("embedding")).alias("__dv")
     )
     q = pq_encode_blas(dfd, codebooks, dim, m, "__dv").select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.col("__dv"),
         F.col("pq_codes"),
         F.col("pq_recon"),
@@ -357,7 +352,7 @@ def pq_report(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8,
         F.transform(v, lambda e: e * e), F.lit(0.0), lambda acc, e: acc + e
     ))
     return q.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.array_join(F.col("pq_codes"), "-").alias("codes"),
         F.round(sse / F.size("__dv"), 9).alias("mse"),
         F.round(F.array_max(F.transform("__err", lambda e: F.abs(e))), 6).alias(

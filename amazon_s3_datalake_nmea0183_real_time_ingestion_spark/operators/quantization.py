@@ -7,7 +7,7 @@ one of ``levels + 1`` evenly spaced values
     code  = floor((x - lo) * levels / (hi - lo) + 0.5)        in [0, levels]
     x'    = lo + code * (hi - lo) / levels
 
-With ``levels = 255`` a float32 corpus compresses 4x (one byte per
+With ``levels = LEVELS = 255`` a float32 corpus compresses 4x (one byte per
 component + a 2-float-per-dimension codebook), which at the 100 TB design
 point is the difference between an embedding store that fits executor
 memory and one that doesn't.  Search over quantized vectors uses
@@ -38,8 +38,10 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double
 
+LEVELS = 255  # one byte per component
 
-def dim_codebook(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+
+def dim_codebook(df: DataFrame) -> DataFrame:
     """One-row codebook frame ``(lo: array<double>, hi: array<double>)``
     holding per-dimension min/max over the corpus.
 
@@ -49,7 +51,7 @@ def dim_codebook(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     64-row result into position-ordered arrays driver-free via
     ``array_sort(collect_list(struct(dim, v)))``.
     """
-    el = df.select(F.posexplode(as_double(F.col(vec_col))).alias("dim", "x"))
+    el = df.select(F.posexplode(as_double(F.col("embedding"))).alias("dim", "x"))
     cb = el.groupBy("dim").agg(F.min("x").alias("lo"), F.max("x").alias("hi"))
     return cb.agg(
         F.array_sort(F.collect_list(F.struct("dim", "lo"))).alias("ls"),
@@ -86,12 +88,11 @@ def _code(x: Column, lo: Column, hi: Column, levels: int) -> Column:
     )
 
 
-def quantize(df: DataFrame, codebook: DataFrame, vec_col: str = "embedding",
-             levels: int = 255) -> DataFrame:
+def quantize(df: DataFrame, codebook: DataFrame) -> DataFrame:
     """Attach ``qcode`` (array<int> codes, the stored representation) and
     ``xq`` (array<double>, the dequantized view searches use) — map-side
     only once the 1-row codebook is broadcast."""
-    dv = as_double(F.col(vec_col))
+    dv = as_double(F.col("embedding"))
     # reserved aliases: an input frame that itself carries a 'lo' or 'hi'
     # column would otherwise make the zip_with references ambiguous and
     # fail analysis (same __-prefix convention as the pipeline scratch
@@ -100,9 +101,9 @@ def quantize(df: DataFrame, codebook: DataFrame, vec_col: str = "embedding",
         F.col("lo").alias("__cb_lo"), F.col("hi").alias("__cb_hi")
     )
     out = df.crossJoin(cb)
-    code = lambda x, lo, hi: _code(x, lo, hi, levels)  # noqa: E731
+    code = lambda x, lo, hi: _code(x, lo, hi, LEVELS)  # noqa: E731
     deq = lambda x, lo, hi: F.when(hi == lo, lo).otherwise(  # noqa: E731
-        lo + _code(x, lo, hi, levels) * (hi - lo) / float(levels)
+        lo + _code(x, lo, hi, LEVELS) * (hi - lo) / float(LEVELS)
     )
     return out.select(
         *df.columns,
@@ -129,9 +130,7 @@ def read_codebook(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def quantization_error(df: DataFrame, codebook: DataFrame,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       levels: int = 255) -> DataFrame:
+def quantization_error(df: DataFrame, codebook: DataFrame) -> DataFrame:
     """Per-vector reconstruction report: mean squared error, worst
     absolute component error, and cosine fidelity between the original
     and its dequantized self — the gate to run before committing a corpus
@@ -140,8 +139,8 @@ def quantization_error(df: DataFrame, codebook: DataFrame,
     All three stats are fixed-order list folds (left-to-right float64),
     so both engines materialize identical doubles before rounding.
     """
-    q = quantize(df, codebook, vec_col, levels)
-    dv = as_double(F.col(vec_col))
+    q = quantize(df, codebook)
+    dv = as_double(F.col("embedding"))
     err = F.zip_with(dv, F.col("xq"), lambda a, b: a - b)
     sse = F.aggregate(
         F.transform(err, lambda e: e * e), F.lit(0.0), lambda acc, e: acc + e
@@ -154,7 +153,7 @@ def quantization_error(df: DataFrame, codebook: DataFrame,
         F.transform(v, lambda e: e * e), F.lit(0.0), lambda acc, e: acc + e
     ))
     return q.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.round(sse / F.size(dv), 9).alias("mse"),
         F.round(
             F.array_max(F.transform(err, lambda e: F.abs(e))), 6

@@ -14,14 +14,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def gap_sessions(events: DataFrame, user_col: str = "user_id",
-                 ts_col: str = "ts", gap_seconds: int = 1800) -> DataFrame:
+def gap_sessions(events: DataFrame) -> DataFrame:
     """Per-session rollup: (user, session_id, n_events, duration_s)."""
-    us = F.unix_micros(F.col(ts_col))
+    us = F.unix_micros(F.col("ts"))
     # nulls last on the epoch ordering: matches DuckDB's ASC default so a
     # NULL-ts event can't shift every session id for the user
-    w = Window.partitionBy(user_col).orderBy(us.asc_nulls_last())
-    gap_us = gap_seconds * 1_000_000
+    w = Window.partitionBy("user_id").orderBy(us.asc_nulls_last())
+    gap_us = 1800 * 1_000_000
     flagged = events.withColumn(
         "__new_session",
         F.when(
@@ -32,11 +31,11 @@ def gap_sessions(events: DataFrame, user_col: str = "user_id",
     with_ids = flagged.withColumn(
         "session_id",
         F.sum("__new_session").over(
-            Window.partitionBy(user_col).orderBy(us.asc_nulls_last())
+            Window.partitionBy("user_id").orderBy(us.asc_nulls_last())
             .rowsBetween(Window.unboundedPreceding, 0)
         ),
     )
-    return with_ids.groupBy(user_col, "session_id").agg(
+    return with_ids.groupBy("user_id", "session_id").agg(
         F.count("*").alias("n_events"),
         ((F.max(us) - F.min(us)) / F.lit(1_000_000)).cast("bigint").alias("duration_s"),
     )

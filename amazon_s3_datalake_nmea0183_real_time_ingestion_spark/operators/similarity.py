@@ -57,13 +57,12 @@ def prep_vectors(df: DataFrame, id_col: str, vec_col: str, out_id: str,
     return out.filter(F.col(out_nrm) > 0) if screen else out
 
 
-def pair_cosine(qvec: str = "qd", cvec: str = "cd", qn: str = "qn",
-              cn: str = "cn"):
+def pair_cosine():
     # try_divide: a zero-norm (degenerate) vector yields NULL similarity
     # instead of an ANSI DIVIDE_BY_ZERO crash; NULLs sort last in the
     # descending rank, so degenerate vectors never pollute top-k.
     return F.round(
-        F.try_divide(dot_double(F.col(qvec), F.col(cvec)), F.col(qn) * F.col(cn)), 6
+        F.try_divide(dot_double(F.col("qd"), F.col("cd")), F.col("qn") * F.col("cn")), 6
     )
 
 
@@ -78,12 +77,11 @@ def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Brute-force cosine top-k: per query, the k most similar corpus
     vectors (self excluded), ranked on round(sim, 6) with id tie-break."""
-    q = prep_vectors(queries, id_col, vec_col, "query_id", "qd", "qn")
-    c = prep_vectors(corpus, id_col, vec_col, "neighbor_id", "cd", "cn")
+    q = prep_vectors(queries, "vec_id", "embedding", "query_id", "qd", "qn")
+    c = prep_vectors(corpus, "vec_id", "embedding", "neighbor_id", "cd", "cn")
     scored = (
         # the caller's query batch: independent of the corpus size, but
         # estimated from its source (unknown for an RDD-backed frame)
@@ -94,16 +92,15 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     return _ranked_topk(scored, k)
 
 
-def label_centroids(corpus: DataFrame, label_col: str = "label",
-                    vec_col: str = "embedding", round_to: int = 6) -> DataFrame:
+def label_centroids(corpus: DataFrame) -> DataFrame:
     """Elementwise mean vector per label group, components rounded so the
     centroid doubles are identical in any engine that averages the same
     values (cross-engine float-sum order differences vanish at round 6)."""
     pos = (
-        corpus.select(F.col(label_col).alias("centroid_id"),
-                      F.posexplode(F.col(vec_col)).alias("pos", "x"))
+        corpus.select(F.col("label").alias("centroid_id"),
+                      F.posexplode(F.col("embedding")).alias("pos", "x"))
         .groupBy("centroid_id", "pos")
-        .agg(F.round(F.avg("x"), round_to).alias("m"))
+        .agg(F.round(F.avg("x"), 6).alias("m"))
     )
     return pos.groupBy("centroid_id").agg(
         F.transform(
@@ -112,25 +109,22 @@ def label_centroids(corpus: DataFrame, label_col: str = "label",
     )
 
 
-def strided_centroids(corpus: DataFrame, stride: int = 25,
-                      id_col: str = "vec_id",
-                      vec_col: str = "embedding") -> DataFrame:
-    """Deterministic k ∝ n centroid seeding: every ``stride``-th vector
+def strided_centroids(corpus: DataFrame) -> DataFrame:
+    """Deterministic k ∝ n centroid seeding: every 25th vector
     (by id) becomes a centroid, so the centroid count GROWS with the
-    corpus and the expected cell size stays ~``stride`` at any scale —
+    corpus and the expected cell size stays ~25 at any scale —
     the SemDeDup production fix for fixed-k's quadratic cells (cell size
     n/k explodes when k is constant; constant TARGET cell size keeps
     within-cell pair work linear in n).  A map-side filter, no shuffle,
-    trivially SQL-replayable (``WHERE id % stride = 0``) — the
+    trivially SQL-replayable (``WHERE id % 25 = 0``) — the
     deterministic stand-in for k-means|| seeding, which would pick
     better-spread centers but not reproducibly across engines."""
-    return corpus.filter(F.pmod(F.col(id_col), F.lit(stride)) == 0).select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("centroid")
+    return corpus.filter(F.pmod(F.col("vec_id"), F.lit(25)) == 0).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
     )
 
 
 def assign_to_centroids(corpus: DataFrame, centroids: DataFrame,
-                        id_col: str = "vec_id", vec_col: str = "embedding",
                         n_probe: int = 1) -> DataFrame:
     """Map-side nearest-centroid assignment (broadcast centroids); output
     keeps the precomputed double vector + norm for downstream scoring.
@@ -138,7 +132,7 @@ def assign_to_centroids(corpus: DataFrame, centroids: DataFrame,
     ``n_probe > 1`` emits one row per (vector, nearby centroid) — the IVF
     recall knob for the QUERY side (corpus vectors always live in exactly
     one cluster, ``n_probe=1``)."""
-    c = prep_vectors(corpus, id_col, vec_col, id_col, "vd", "vn")
+    c = prep_vectors(corpus, "vec_id", "embedding", "vec_id", "vd", "vn")
     cents = prep_vectors(centroids, "centroid_id", "centroid", "centroid_id", "ctd", "ctn")
     csim = F.round(
         F.try_divide(dot_double(F.col("vd"), F.col("ctd")),
@@ -147,13 +141,13 @@ def assign_to_centroids(corpus: DataFrame, centroids: DataFrame,
     # k centroids, the flat path's codebook (k ∝ n takes the 2-level
     # path); estimated from its source (unknown for an RDD-backed frame)
     scored = c.crossJoin(F.broadcast(cents)).select(
-        id_col, "vd", "vn", "centroid_id", csim.alias("csim")
+        "vec_id", "vd", "vn", "centroid_id", csim.alias("csim")
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("csim").desc(), F.col("centroid_id").asc())
+    w = Window.partitionBy("vec_id").orderBy(F.col("csim").desc(), F.col("centroid_id").asc())
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= n_probe)
-        .select(id_col, "vd", "vn", F.col("centroid_id").alias("cluster"))
+        .select("vec_id", "vd", "vn", F.col("centroid_id").alias("cluster"))
     )
 
 
@@ -279,8 +273,6 @@ def _two_level_probe(corpus: DataFrame, centroids: DataFrame,
 
 
 def assign_to_centroids_2level(corpus: DataFrame, centroids: DataFrame,
-                               id_col: str = "vec_id",
-                               vec_col: str = "embedding",
                                n_super: int | None = None,
                                n_probe_super: int | None = None) -> DataFrame:
     """Two-level IVF assignment — the distribution fix for k ∝ n centroid
@@ -327,10 +319,10 @@ def assign_to_centroids_2level(corpus: DataFrame, centroids: DataFrame,
     handles it the same way it handles hot LSH buckets.
 
     Output contract matches :func:`assign_to_centroids`:
-    (id_col, vd, vn, cluster).
+    (vec_id, vd, vn, cluster).
     """
     probed, tagged = _two_level_probe(
-        corpus, centroids, id_col, vec_col, n_super, n_probe_super
+        corpus, centroids, "vec_id", "embedding", n_super, n_probe_super
     )
     # 4. keyed join on super_id + exact argmax
     csim = F.round(
@@ -338,21 +330,19 @@ def assign_to_centroids_2level(corpus: DataFrame, centroids: DataFrame,
                      F.col("vn") * F.col("ctn")), 6
     )
     scored = probed.join(tagged, "super_id").select(
-        id_col, "vd", "vn", "centroid_id", csim.alias("csim")
+        "vec_id", "vd", "vn", "centroid_id", csim.alias("csim")
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("vec_id").orderBy(
         F.col("csim").desc(), F.col("centroid_id").asc()
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select(id_col, "vd", "vn", F.col("centroid_id").alias("cluster"))
+        .select("vec_id", "vd", "vn", F.col("centroid_id").alias("cluster"))
     )
 
 
 def assign_to_centroids_2level_blas(corpus: DataFrame, centroids: DataFrame,
-                                    id_col: str = "vec_id",
-                                    vec_col: str = "embedding",
                                     n_super: int | None = None,
                                     n_probe_super: int | None = None) -> DataFrame:
     """Two-level assignment with the per-cell argmax computed as an
@@ -387,11 +377,11 @@ def assign_to_centroids_2level_blas(corpus: DataFrame, centroids: DataFrame,
     )
 
     probed, tagged = _two_level_probe(
-        corpus, centroids, id_col, vec_col, n_super, n_probe_super
+        corpus, centroids, "vec_id", "embedding", n_super, n_probe_super
     )
     out_schema = StructType(
         [
-            StructField(id_col, probed.schema[id_col].dataType),
+            StructField("vec_id", probed.schema["vec_id"].dataType),
             StructField("vd", ArrayType(DoubleType())),
             StructField("vn", DoubleType()),
             StructField("cluster", LongType()),
@@ -419,7 +409,7 @@ def assign_to_centroids_2level_blas(corpus: DataFrame, centroids: DataFrame,
         best = sims.argmax(axis=1)
         return pd.DataFrame(
             {
-                id_col: vdf[id_col].values,
+                "vec_id": vdf["vec_id"].values,
                 "vd": list(V),
                 "vn": vn,
                 "cluster": cid[best],
@@ -441,31 +431,28 @@ def assign_to_centroids_2level_blas(corpus: DataFrame, centroids: DataFrame,
     # candidates sort LAST under desc in both engines' float order — the
     # only NaN source was mapped to -inf above, so Spark's NaN-greatest
     # ordering quirk never applies.
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("vec_id").orderBy(
         F.col("csim").desc(), F.col("cluster").asc()
     )
     return (
         per_cell.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select(id_col, "vd", "vn", "cluster")
+        .select("vec_id", "vd", "vn", "cluster")
     )
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
-             k: int = 3, id_col: str = "vec_id", vec_col: str = "embedding",
              n_probe: int = 1) -> DataFrame:
-    """IVF search: score only the clusters the query's ``n_probe`` nearest
+    """IVF top-3 search: score only the clusters the query's ``n_probe`` nearest
     centroids own (probe-1 = fastest, higher probes trade compute for
     recall).  Vectors are cast/normed once during assignment; the
     cluster join's per-pair kernel is a bare dot product."""
-    assigned = assign_to_centroids(corpus, centroids, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("vd").alias("cd"),
+    assigned = assign_to_centroids(corpus, centroids).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("vd").alias("cd"),
         F.col("vn").alias("cn"), "cluster",
     )
-    q_assigned = assign_to_centroids(
-        queries, centroids, id_col, vec_col, n_probe=n_probe
-    ).select(
-        F.col(id_col).alias("query_id"), F.col("vd").alias("qd"),
+    q_assigned = assign_to_centroids(queries, centroids, n_probe=n_probe).select(
+        F.col("vec_id").alias("query_id"), F.col("vd").alias("qd"),
         F.col("vn").alias("qn"), "cluster",
     )
     scored = (
@@ -473,7 +460,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", pair_cosine().alias("sim"))
     )
-    return _ranked_topk(scored, k)
+    return _ranked_topk(scored, 3)
 
 
 def rademacher_planes(n_planes: int = 16, dim: int = 64) -> list[list[int]]:
@@ -492,9 +479,11 @@ def rademacher_planes(n_planes: int = 16, dim: int = 64) -> list[list[int]]:
     ]
 
 
-def hyperplane_bands(df: DataFrame, planes: list[list[int]],
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     bits_per_band: int = 8) -> DataFrame:
+# sign bits packed into one hyperplane-LSH band value
+BITS_PER_BAND = 8
+
+
+def hyperplane_bands(df: DataFrame, planes: list[list[int]]) -> DataFrame:
     """Long-format (id, band_pos, band_val) LSH buckets from sign random
     projections.  Engine-portability trick: vectors are quantized to
     integers (``floor(x·1000)``) BEFORE the dot product, so the sign test
@@ -502,14 +491,14 @@ def hyperplane_bands(df: DataFrame, planes: list[list[int]],
     ``> 0`` boundary between engines.  All map-side: one projection per
     row, no shuffle until the bucket join."""
     n_planes = len(planes)
-    if n_planes % bits_per_band != 0:
+    if n_planes % BITS_PER_BAND != 0:
         raise ValueError(
             f"n_planes={n_planes} must divide into bits_per_band="
-            f"{bits_per_band} bands; a remainder would drop sign bits"
+            f"{BITS_PER_BAND} bands; a remainder would drop sign bits"
         )
-    vq = F.transform(as_double(F.col(vec_col)),
+    vq = F.transform(as_double(F.col("embedding")),
                      lambda x: F.floor(x * 1000).cast("bigint"))
-    quant = df.select(F.col(id_col), vq.alias("vq"))  # materialized: HOF lambdas below read an attribute, not an expr
+    quant = df.select(F.col("vec_id"), vq.alias("vq"))  # materialized: HOF lambdas below read an attribute, not an expr
     # ALL plane dots in one nested-HOF pass over a literal plane matrix —
     # one dots array per row instead of n_planes independent aggregate
     # expressions re-walking vq (measured 1.79s → 1.31s on sf0.1 bands)
@@ -522,62 +511,59 @@ def hyperplane_bands(df: DataFrame, planes: list[list[int]],
             lambda acc, x: acc + x,
         ),
     )
-    d = quant.select(F.col(id_col), dots.alias("dots"))
+    d = quant.select(F.col("vec_id"), dots.alias("dots"))
     band_cols = []
-    for p in range(n_planes // bits_per_band):
+    for p in range(n_planes // BITS_PER_BAND):
         val = None
-        for j in range(bits_per_band):
+        for j in range(BITS_PER_BAND):
             term = F.shiftleft(
-                (F.element_at("dots", p * bits_per_band + j + 1) > 0).cast("bigint"), j
+                (F.element_at("dots", p * BITS_PER_BAND + j + 1) > 0).cast("bigint"), j
             )
             val = term if val is None else val + term
         band_cols.append(val.alias(f"band{p}"))
-    wide = d.select(F.col(id_col), *band_cols)
-    n_bands = n_planes // bits_per_band
+    wide = d.select(F.col("vec_id"), *band_cols)
+    n_bands = n_planes // BITS_PER_BAND
     stack_expr = ", ".join(f"{p}, band{p}" for p in range(n_bands))
     return wide.selectExpr(
-        id_col, f"stack({n_bands}, {stack_expr}) AS (band_pos, band_val)"
+        "vec_id", f"stack({n_bands}, {stack_expr}) AS (band_pos, band_val)"
     )
 
 
-def lsh_topk(corpus: DataFrame, queries: DataFrame,
-             planes: list[list[int]], k: int = 3, id_col: str = "vec_id",
-             vec_col: str = "embedding", bits_per_band: int = 8) -> DataFrame:
+def lsh_topk(corpus: DataFrame, queries: DataFrame, planes: list[list[int]]) -> DataFrame:
     """LSH-bucketed ANN: candidates = corpus vectors sharing ≥1 sign-bit
-    band with the query, exact-cosine reranked to top-k.  The all-pairs
+    band with the query, exact-cosine reranked to top-3.  The all-pairs
     scan becomes an equi-join on (band_pos, band_val) — the same
     bucket-join shape as MinHash-LSH, so the 100 TB story is identical
     (shuffle by bucket, AQE splits skewed buckets).  Queries must be a
     subset of ``corpus`` (bands are computed once, corpus-wide)."""
-    bands = hyperplane_bands(corpus, planes, id_col, vec_col, bits_per_band)
-    qids = queries.select(F.col(id_col).alias("query_id"))
-    qb = bands.select(F.col(id_col).alias("query_id"), "band_pos", "band_val").join(
+    bands = hyperplane_bands(corpus, planes)
+    qids = queries.select(F.col("vec_id").alias("query_id"))
+    qb = bands.select(F.col("vec_id").alias("query_id"), "band_pos", "band_val").join(
         # the caller's query batch, estimated from its source
         F.broadcast(qids), "query_id"
     )
-    cb = bands.select(F.col(id_col).alias("neighbor_id"), "band_pos", "band_val")
+    cb = bands.select(F.col("vec_id").alias("neighbor_id"), "band_pos", "band_val")
     cand = (
         cb.join(qb, ["band_pos", "band_val"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    q = prep_vectors(queries, id_col, vec_col, "query_id", "qd", "qn")
-    c = prep_vectors(corpus, id_col, vec_col, "neighbor_id", "cd", "cn")
+    q = prep_vectors(queries, "vec_id", "embedding", "query_id", "qd", "qn")
+    c = prep_vectors(corpus, "vec_id", "embedding", "neighbor_id", "cd", "cn")
     scored = (
         cand.join(c, "neighbor_id")
         # the caller's query batch, estimated from its source
         .join(F.broadcast(q), "query_id")
         .select("query_id", "neighbor_id", pair_cosine().alias("sim"))
     )
-    return _ranked_topk(scored, k)
+    return _ranked_topk(scored, 3)
 
 
-def semantic_dedup_pairs(assigned: DataFrame, id_col: str = "vec_id",
-                         threshold: float = 0.99,
+def semantic_dedup_pairs(assigned: DataFrame, threshold: float = 0.99,
                          max_cell: int | None = None) -> DataFrame:
     """SemDeDup candidate pairs (Abbas et al. 2023): over an assignment
-    frame ``(id_col, vd, vn, cluster)`` — the output of any
+    frame ``(vec_id, vd, vn, cluster)`` — the output of any
     ``assign_to_centroids*`` kernel — emit within-cell pairs with
     cosine >= ``threshold`` (rounded to 6, id_a < id_b).  The caller
     picks the kernel: the broadcast argmax (:func:`assign_to_centroids`)
@@ -618,11 +604,11 @@ def semantic_dedup_pairs(assigned: DataFrame, id_col: str = "vec_id",
             .drop("__csz")
         )
     a = asg.select(
-        F.col(id_col).alias("id_a"), F.col("vd").alias("va"),
+        F.col("vec_id").alias("id_a"), F.col("vd").alias("va"),
         F.col("vn").alias("na"), "cluster",
     )
     b = asg.select(
-        F.col(id_col).alias("id_b"), F.col("vd").alias("vb"),
+        F.col("vec_id").alias("id_b"), F.col("vd").alias("vb"),
         F.col("vn").alias("nb"), "cluster",
     )
     sim = F.round(
@@ -661,11 +647,10 @@ def semantic_cell_report(assigned: DataFrame,
     return sz.select("cluster", "cell_size", dropped.cast("int").alias("dropped"))
 
 
-def semantic_dedup(assigned: DataFrame, id_col: str = "vec_id",
-                   threshold: float = 0.99,
+def semantic_dedup(assigned: DataFrame, threshold: float = 0.99,
                    max_cell: int | None = None) -> DataFrame:
     """Keep-lowest-id SemDeDup collapse over an assignment frame
-    ``(id_col, vd, vn, cluster)``: each duplicate reports its
+    ``(vec_id, vd, vn, cluster)``: each duplicate reports its
     lowest-id SIMILAR NEIGHBOR (dropped_id, kept_by, cos_sim) — one keyed
     agg riding the pair shuffle.
 
@@ -677,7 +662,7 @@ def semantic_dedup(assigned: DataFrame, id_col: str = "vec_id",
     survivor — or run connected_components over the pairs (the
     x_dedup_cluster path) when a canonical representative per clique is
     required."""
-    pairs = semantic_dedup_pairs(assigned, id_col, threshold, max_cell)
+    pairs = semantic_dedup_pairs(assigned, threshold, max_cell)
     return pairs.groupBy(F.col("id_b").alias("dropped_id")).agg(
         F.min("id_a").cast("long").alias("kept_by"),
         F.expr("min_by(sim, id_a)").alias("cos_sim"),

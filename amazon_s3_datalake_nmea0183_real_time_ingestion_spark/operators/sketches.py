@@ -2,9 +2,9 @@
 "An improved data stream summary: the count-min sketch and its
 applications", J. Algorithms 2005).
 
-The sketch is a ``depth × width`` grid of counters; key ``x`` maps to one
+The sketch is a ``CMS_DEPTH × width`` grid of counters; key ``x`` maps to one
 bucket per row via independent hashes, and its frequency estimate is the
-MIN of its ``depth`` cells.  Two properties make it the right monitor for
+MIN of its ``CMS_DEPTH`` cells.  Two properties make it the right monitor for
 viral boilerplate arriving between exact census runs (the streaming-
 friendly complement of x_vocab_topk's exact wordcount):
 
@@ -13,7 +13,7 @@ friendly complement of x_vocab_topk's exact wordcount):
   ADD); the adjudicated key asserts this invariant per heavy hitter;
 - **mergeable** — the grid is a sum of per-partition / per-microbatch
   grids, so it aggregates with one map-side-combinable shuffle bounded by
-  ``depth·width`` rows per partition, regardless of corpus size or key
+  ``CMS_DEPTH·width`` rows per partition, regardless of corpus size or key
   cardinality.
 
 Hashes are the repo's cross-engine md5 scheme (functions/hashing.py):
@@ -23,8 +23,8 @@ not a loose tolerance band.
 
 Scale shape: building from raw occurrences is
 ``explode → (j, bucket) → count`` — one shuffle whose map-side combine
-caps partial state at ``depth·width`` counters; the finished sketch is
-``depth·width`` rows (KBs) and BROADCASTS into the estimate join.  Nothing
+caps partial state at ``CMS_DEPTH·width`` counters; the finished sketch is
+``CMS_DEPTH·width`` rows (KBs) and BROADCASTS into the estimate join.  Nothing
 corpus-proportional is ever collected or broadcast.  When an exact
 per-key count table already exists (the adjudication path below), the
 identical grid is derived from it with one tiny shuffle over distinct keys
@@ -38,6 +38,9 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_u32
 
+# rows of every sketch grid; a grid and its estimate must agree on it
+CMS_DEPTH = 4
+
 
 def _bucket(key: F.Column, j: F.Column, width: int) -> F.Column:
     """Row-``j`` bucket of ``key``: md5_u32('cms<j>:<key>') % width —
@@ -45,17 +48,16 @@ def _bucket(key: F.Column, j: F.Column, width: int) -> F.Column:
     return md5_u32(F.concat(F.lit("cms"), j.cast("string"), F.lit(":"), key)) % width
 
 
-def cms_from_counts(counts: DataFrame, key_col: str, n_col: str,
-                    depth: int = 4, width: int = 1024) -> DataFrame:
+def cms_from_counts(counts: DataFrame, key_col: str, n_col: str, width: int = 1024) -> DataFrame:
     """Build the sketch grid from an exact (key, count) table: each key
     adds its count to one cell per row.  Returns (j, bucket, cell) —
-    at most ``depth·width`` rows.  Cell values are identical to the
+    at most ``CMS_DEPTH·width`` rows.  Cell values are identical to the
     occurrence-stream construction (addition is associative); this form
     just hashes each DISTINCT key once per row instead of once per
     occurrence."""
     probes = counts.select(
         F.col(n_col).alias("__n"),
-        F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("j"),
+        F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("j"),
         F.col(key_col).alias("__k"),
     )
     return (
@@ -66,15 +68,14 @@ def cms_from_counts(counts: DataFrame, key_col: str, n_col: str,
     )
 
 
-def cms_from_stream(items: DataFrame, key_col: str,
-                    depth: int = 4, width: int = 1024) -> DataFrame:
+def cms_from_stream(items: DataFrame, key_col: str, width: int = 1024) -> DataFrame:
     """Build the same grid straight from an occurrence stream (one row per
     occurrence, no exact counts anywhere) — the production/streaming
-    path: map each occurrence to ``depth`` (j, bucket) cells and count.
-    Map-side combine bounds per-partition partial state at depth·width
+    path: map each occurrence to ``CMS_DEPTH`` (j, bucket) cells and count.
+    Map-side combine bounds per-partition partial state at CMS_DEPTH·width
     counters, so the shuffle is sketch-sized, not corpus-sized."""
     probes = items.select(
-        F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("j"),
+        F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("j"),
         F.col(key_col).alias("__k"),
     )
     return (
@@ -84,10 +85,9 @@ def cms_from_stream(items: DataFrame, key_col: str,
     )
 
 
-def cms_estimate(keys: DataFrame, sketch: DataFrame, key_col: str,
-                 depth: int = 4, width: int = 1024) -> DataFrame:
-    """Point-query the sketch: per input row, min over the ``depth`` cells
-    its key maps to.  The sketch (≤ depth·width rows) broadcasts; the
+def cms_estimate(keys: DataFrame, sketch: DataFrame, key_col: str, width: int = 1024) -> DataFrame:
+    """Point-query the sketch: per input row, min over the ``CMS_DEPTH`` cells
+    its key maps to.  The sketch (≤ CMS_DEPTH·width rows) broadcasts; the
     keys side keeps all its columns.
 
     The grid is stored SPARSE (only touched cells have rows), so the
@@ -97,18 +97,17 @@ def cms_estimate(keys: DataFrame, sketch: DataFrame, key_col: str,
     or a min over only its populated cells (code-review r7 finding)."""
     cols = keys.columns
     probes = keys.select(
-        *cols, F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("j")
+        *cols, F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("j")
     ).withColumn("bucket", _bucket(F.col(key_col), F.col("j"), width))
     return (
-        # <= depth * width cells; the estimate grows with the counted stream
+        # <= CMS_DEPTH * width cells; the estimate grows with the counted stream
         probes.join(F.broadcast(sketch), ["j", "bucket"], "left")
         .groupBy(*cols)
         .agg(F.min(F.coalesce(F.col("cell"), F.lit(0))).alias("est"))
     )
 
 
-def cms_inner_product(sketch_a: DataFrame, sketch_b: DataFrame,
-                      depth: int = 4) -> DataFrame:
+def cms_inner_product(sketch_a: DataFrame, sketch_b: DataFrame) -> DataFrame:
     """Join-cardinality estimate from two CMS grids (Cormode &
     Muthukrishnan '05 §4.2, the sketch form of the AMS F2/inner-product
     estimator): |A ⋈ B on k| = Σ_k fA(k)·fB(k) is estimated by
@@ -123,7 +122,7 @@ def cms_inner_product(sketch_a: DataFrame, sketch_b: DataFrame,
     partitions — no scan, no join, to get the estimate.
 
     Absent cells are zero on either side, so the inner join over
-    (j, bucket) loses nothing (0·x = 0); the grids are ≤ depth·width
+    (j, bucket) loses nothing (0·x = 0); the grids are ≤ CMS_DEPTH·width
     rows each, so everything here is control-plane-sized.
 
     Arithmetic bound: the int64 dot product is EXACT (the adjudicated
@@ -142,12 +141,12 @@ def cms_inner_product(sketch_a: DataFrame, sketch_b: DataFrame,
     return per_row.agg(F.min("__dot").alias("est"))
 
 
-def countsketch_from_counts(counts: DataFrame, key_col: str, n_col: str,
-                            depth: int = 4, width: int = 1024) -> DataFrame:
+def countsketch_from_counts(counts: DataFrame, key_col: str, n_col: str) -> DataFrame:
     """Count-Sketch grid (Charikar, Chen & Farach-Colton ICALP'02; the
     AMS sign trick bucketized): each key adds ``sign_j(k) · count`` to
     its row-j bucket, where sign and bucket come from INDEPENDENT md5
-    hashes ('cs'/'csb' salts).  Returns (j, bucket, cell) with cells in
+    hashes ('cs'/'csb' salts) over a ``CMS_DEPTH × 1024`` grid.  Returns
+    (j, bucket, cell) with cells in
     [-Σn, +Σn] — signs make collision noise cancel in expectation, which
     is what buys the unbiased F2 estimator (:func:`countsketch_f2`) its
     RELATIVE error guarantee where the all-positive CMS only gets an
@@ -155,7 +154,7 @@ def countsketch_from_counts(counts: DataFrame, key_col: str, n_col: str,
     cms_from_counts."""
     probes = counts.select(
         F.col(n_col).alias("__n"),
-        F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("j"),
+        F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("j"),
         F.col(key_col).alias("__k"),
     )
     sign = (
@@ -168,7 +167,7 @@ def countsketch_from_counts(counts: DataFrame, key_col: str, n_col: str,
     bucket = md5_u32(
         F.concat(F.lit("csb"), F.col("j").cast("string"), F.lit(":"),
                  F.col("__k"))
-    ) % width
+    ) % 1024
     return (
         probes.select(
             "j", bucket.alias("bucket"), (sign * F.col("__n")).alias("__s")

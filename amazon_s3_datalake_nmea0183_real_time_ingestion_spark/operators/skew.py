@@ -9,8 +9,8 @@ phases through a salt key:
 
     groupBy(key, salt) partial-collect  →  groupBy(key) merge
 
-so a hot key's rows spread over ``n_salt`` reducers first, and the final
-merge combines ``n_salt`` pre-built lists instead of millions of rows.
+so a hot key's rows spread over ``N_SALT`` reducers first, and the final
+merge combines ``N_SALT`` pre-built lists instead of millions of rows.
 """
 
 from __future__ import annotations
@@ -18,34 +18,37 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+N_SALT = 16
+
 
 def _salt(df: DataFrame, salt_on: Column, n_salt: int) -> Column:
     return F.pmod(F.xxhash64(salt_on), F.lit(n_salt))
 
 
-def salted_collect_set(df: DataFrame, keys: list[str], value_col: str,
-                       n_salt: int = 16, out_col: str | None = None) -> DataFrame:
-    """Two-phase ``collect_set(value_col)`` per key group, skew-safe.
+def salted_collect_set(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
+    """Two-phase ``collect_set(value_col)`` per key group, skew-safe, as
+    ``{value_col}_set``.
 
     Result equals the direct ``groupBy(keys).agg(collect_set(...))`` as a
     SET (array order is unspecified in both, as with Spark's own)."""
-    out_col = out_col or f"{value_col}_set"
-    salted = df.withColumn("__salt", _salt(df, F.col(value_col), n_salt))
+    salted = df.withColumn("__salt", _salt(df, F.col(value_col), N_SALT))
     partial = salted.groupBy(*keys, "__salt").agg(
         F.collect_set(value_col).alias("__part")
     )
     return (
         partial.groupBy(*keys)
-        .agg(F.array_distinct(F.flatten(F.collect_list("__part"))).alias(out_col))
+        .agg(
+            F.array_distinct(F.flatten(F.collect_list("__part")))
+            .alias(f"{value_col}_set")
+        )
     )
 
 
 def salted_exact_distinct_count(df: DataFrame, keys: list[str], value_col: str,
-                                n_salt: int = 16,
                                 out_col: str = "n_distinct") -> DataFrame:
     """Exact COUNT(DISTINCT value) per key group via two-phase dedup —
     the explicit form of the expand rewrite, with a salt so one hot key's
-    distinct set is deduped across ``n_salt`` reducers first.
+    distinct set is deduped across ``N_SALT`` reducers first.
 
     NULL values are excluded, matching SQL ``count(DISTINCT v)`` — the
     unfiltered two-phase count would tally NULL as one extra "value"
@@ -54,7 +57,7 @@ def salted_exact_distinct_count(df: DataFrame, keys: list[str], value_col: str,
     values are ALL NULL still appear, with 0 — GROUP BY keeps the key
     even when the aggregate has nothing to count."""
     salted = df.filter(F.col(value_col).isNotNull()).withColumn(
-        "__salt", _salt(df, F.col(value_col), n_salt)
+        "__salt", _salt(df, F.col(value_col), N_SALT)
     )
     partial = (
         salted.select(*keys, "__salt", value_col)

@@ -32,6 +32,10 @@ from pyspark.sql.window import Window
 
 _RUNNING = (Window.unboundedPreceding, Window.currentRow)
 
+# CUSUM drift allowance and alarm level, in units of the series' sigma
+CUSUM_K_SIGMA = 0.25
+CUSUM_ALARM_SIGMA = 3.0
+
 
 def smoothed_psi(cnt: DataFrame, group: str, k: Column) -> DataFrame:
     """Population stability index per ``group`` (Siddiqi '06):
@@ -54,18 +58,16 @@ def smoothed_psi(cnt: DataFrame, group: str, k: Column) -> DataFrame:
     )
 
 
-def cusum(
-    d: DataFrame, key: str, k_sigma: float = 0.25, alarm_sigma: float = 3.0
-) -> DataFrame:
+def cusum(d: DataFrame, key: str) -> DataFrame:
     """One-sided CUSUM (Page, Biometrika '54) per ``key`` over a daily
     level series ``d`` (one row per (key, day), level column ``x``).
 
     C_t = S'_t − min(0, S'_1..S'_t) with S'_t = Σ(x_i − μ₀ − k), k =
-    ``k_sigma``·σ: the recursion as a prefix sum and a floored running
+    ``CUSUM_K_SIGMA``·σ: the recursion as a prefix sum and a floored running
     min.  x, μ₀, σ and k are rounded to the 1e-6 grid before the prefix
     sum, so every C_t lands on the grid (window sums are not otherwise
     bit-identical across engines).  Alarm: round(C_t) >
-    round(``alarm_sigma``·σ).
+    round(``CUSUM_ALARM_SIGMA``·σ).
 
     Returns (key, day, x, sd, cusum, alarm); alarm is NULL where σ is.
     """
@@ -76,31 +78,31 @@ def cusum(
         F.round(F.stddev_samp("x").over(wk), 6).alias("sd"),
     )
     wo = Window.partitionBy(key).orderBy("day").rowsBetween(*_RUNNING)
-    drift = F.round(F.lit(k_sigma) * F.col("sd"), 6)
+    drift = F.round(F.lit(CUSUM_K_SIGMA) * F.col("sd"), 6)
     s = m.select(
         key, "day", "x", "sd",
         F.sum(F.col("x") - F.col("mu0") - drift).over(wo).alias("sp"),
     )
     floor = F.least(F.lit(0.0), F.min("sp").over(wo))
     c = s.select(key, "day", "x", "sd", (F.col("sp") - floor).alias("cusum"))
-    alarm = F.round("cusum", 6) > F.round(F.lit(alarm_sigma) * F.col("sd"), 6)
+    alarm = F.round("cusum", 6) > F.round(F.lit(CUSUM_ALARM_SIGMA) * F.col("sd"), 6)
     return c.withColumn("alarm", alarm.cast("int"))
 
 
-def mase(d: DataFrame, key: str, x: str = "x", season: int = 7) -> DataFrame:
+def mase(d: DataFrame, key: str, x: str = "x") -> DataFrame:
     """Seasonal-naive forecast accuracy (Hyndman & Koehler, IJF '06) per
     ``key`` over a daily series ``d`` (one row per (key, day), value
-    column ``x``): each day is forecast by the value ``season`` days
+    column ``x``): each day is forecast by the value 7 days
     earlier, scored by MAE and scaled by the one-step naive MAE.
 
     Returns (key, n_scored, mae, naive_mae, mase); ``mase`` is NULL
-    until a key has more than ``season`` days or when the naive MAE is 0.
+    until a key has more than 7 days or when the naive MAE is 0.
     """
     w = Window.partitionBy(key).orderBy("day")
     lagged = d.select(
         key,
         F.col(x).alias("x"),
-        F.lag(x, season).over(w).alias("f_seasonal"),
+        F.lag(x, 7).over(w).alias("f_seasonal"),
         F.lag(x, 1).over(w).alias("f_naive"),
     )
     return lagged.groupBy(key).agg(

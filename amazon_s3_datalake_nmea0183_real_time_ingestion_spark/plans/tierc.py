@@ -223,7 +223,7 @@ def x_dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     OUTPUT (the production readout at scale) see x_dedup_simhash_rep.
     """
     sigs = simhash_signatures(_doc_corpus(spark, sf))
-    return simhash_pairs_collapsed(sigs, n_bands=4, max_hamming=8)
+    return simhash_pairs_collapsed(sigs)
 
 
 @register(
@@ -417,7 +417,7 @@ def x_dedup_ledger_near(spark: SparkSession, sf: str) -> DataFrame:
 def x_dedup_ngram(spark: SparkSession, sf: str) -> DataFrame:
     """Exact n-gram (3-word shingle) Jaccard dedup via inverted-index join —
     the exact method MinHash approximates."""
-    return ngram_jaccard_pairs(_doc_corpus(spark, sf), k=3, threshold=0.6)
+    return ngram_jaccard_pairs(_doc_corpus(spark, sf), threshold=0.6)
 
 
 @register(
@@ -516,7 +516,7 @@ def x_sim_ivf(spark: SparkSession, sf: str) -> DataFrame:
     query's cluster."""
     e = table(spark, sf, "embeddings")
     cents = label_centroids(e)
-    out = ivf_topk(e, e.filter(F.col("vec_id") < 10), cents, k=3)
+    out = ivf_topk(e, e.filter(F.col("vec_id") < 10), cents)
     return out.withColumn("rank", F.col("rank").cast("int"))
 
 
@@ -561,12 +561,12 @@ _LANG_SETS = {
 }
 
 
-def lang_pred(text_col: str = "text"):
+def lang_pred():
     """The detector expression behind x_text_langid AND the
     x_lang_mismatch audit (tierg) — ONE definition so tuning the
     priority order or the stopword sets can never make the langid key
     and the mismatch census silently disagree."""
-    t = tokens(text_col)
+    t = tokens("text")
 
     def _hits(words: list[str]):
         return F.size(F.filter(t, lambda x: x.isin(*words)))
@@ -613,7 +613,7 @@ def x_text_langid(spark: SparkSession, sf: str) -> DataFrame:
     """Heuristic language ID: stopword-set hit counts, fixed-priority
     argmax (en>de>fr>es), 'und' when no evidence."""
     d = table(spark, sf, "documents")
-    return d.select("doc_id", lang_pred("text").alias("pred_lang"))
+    return d.select("doc_id", lang_pred().alias("pred_lang"))
 
 
 @register(
@@ -698,7 +698,7 @@ def x_text_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
     return low.select(
         "doc_id",
         doc_fingerprint("text").alias("fingerprint"),
-        F.array_min(F.transform(char_ngrams_from_lower(F.col("__low"), 5), md5_u32))
+        F.array_min(F.transform(char_ngrams_from_lower(F.col("__low")), md5_u32))
         .alias("min_gram_hash"),
     )
 
@@ -845,7 +845,7 @@ def x_session(spark: SparkSession, sf: str) -> DataFrame:
     """C6: 30-minute-gap sessionization per user (batch analog of
     session_window; streaming variant lives in streaming/)."""
     ev = table(spark, sf, "events")
-    return gap_sessions(ev, gap_seconds=1800)
+    return gap_sessions(ev)
 
 
 # ---------------------------------------------------------------------------
@@ -1040,7 +1040,7 @@ def x_sim_ivf2(spark: SparkSession, sf: str) -> DataFrame:
     without touching the index layout)."""
     e = table(spark, sf, "embeddings")
     cents = label_centroids(e)
-    out = ivf_topk(e, e.filter(F.col("vec_id") < 10), cents, k=3, n_probe=2)
+    out = ivf_topk(e, e.filter(F.col("vec_id") < 10), cents, n_probe=2)
     return out.withColumn("rank", F.col("rank").cast("int"))
 
 
@@ -1233,7 +1233,7 @@ def x_sim_lsh(spark: SparkSession, sf: str) -> DataFrame:
     engine-exact; the DuckDB oracle replays the identical planes from
     inlined literals."""
     e = table(spark, sf, "embeddings")
-    out = lsh_topk(e, e.filter(F.col("vec_id") < 10), _LSH_PLANES, k=3)
+    out = lsh_topk(e, e.filter(F.col("vec_id") < 10), _LSH_PLANES)
     return out.withColumn("rank", F.col("rank").cast("int"))
 
 
@@ -1380,7 +1380,7 @@ def x_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
     with_tok = d.select(
         "doc_id", "source", token_count("text").cast("int").alias("n_tokens")
     )
-    packed = pack_sequences(with_tok, "n_tokens", "source", "doc_id", 512)
+    packed = pack_sequences(with_tok, 512)
     return packed.select("doc_id", "source", "n_tokens", "pack_id", "pack_offset")
 
 
@@ -1413,7 +1413,7 @@ def x_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     d = table(spark, sf, "documents")
     bench = d.filter(F.col("doc_id") % 97 == 0)
     corpus = d.filter(F.col("doc_id") % 97 != 0)
-    return decontaminate(corpus, bench, "doc_id", "text", k=3)
+    return decontaminate(corpus, bench)
 
 
 @register(
@@ -1921,7 +1921,7 @@ def x_decontaminate_near(spark: SparkSession, sf: str) -> DataFrame:
     bench = d.filter(F.col("doc_id") % 53 == 0).select(
         (F.col("doc_id") + 5000000).alias("doc_id"), "text"
     )
-    return decontaminate_near(d, bench, threshold=0.5)
+    return decontaminate_near(d, bench)
 
 
 @register(

@@ -527,13 +527,13 @@ def _collapse_best(corpus: DataFrame, edges: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _morton_sql(x: str, y: str, bits: int = 16) -> str:
+def _morton_sql(x: str, y: str) -> str:
     """Bit-interleave SQL text valid in BOTH Spark SQL and DuckDB: only
     `>>`, `&` and `*` (shift-left as multiplication by a power of two, so
     no engine-specific shiftleft() function is needed).  Disjoint bit
     positions make `+` carry-free, i.e. identical to `|`."""
     terms = []
-    for i in range(bits):
+    for i in range(16):
         terms.append(f"((({x} >> {i}) & 1) * {1 << (2 * i)})")
         terms.append(f"((({y} >> {i}) & 1) * {1 << (2 * i + 1)})")
     return "(" + " + ".join(terms) + ")"
@@ -604,7 +604,11 @@ def _basket_screen_sql(max_basket: int | None) -> str:
     li AS (SELECT li0.l_orderkey, li0.l_partkey FROM li0 JOIN keep USING (l_orderkey))"""
 
 
-def _pagerank_oracle(n_iter: int = 3, max_basket: int | None = None) -> str:
+# damped rounds of both the PageRank keys and their unrolled oracle
+_PAGERANK_ROUNDS = 3
+
+
+def _pagerank_oracle(max_basket: int | None = None) -> str:
     """Unrolled-CTE replica of operators.graph.pagerank — generated from
     the same iteration count (and optional basket screen) so engine and
     oracle cannot drift.  ``max_basket`` guards PAIR GENERATION only;
@@ -620,7 +624,7 @@ def _pagerank_oracle(n_iter: int = 3, max_basket: int | None = None) -> str:
     deg AS (SELECT s, count(*) AS deg FROM pairs GROUP BY s),
     r0 AS (SELECT node, 1.0 / (SELECT n FROM nn) AS r FROM nodes)"""
     ]
-    for i in range(n_iter):
+    for i in range(_PAGERANK_ROUNDS):
         parts.append(
             f""",
     c{i + 1} AS (SELECT p.d AS node, sum(r{i}.r / deg.deg) AS m
@@ -633,10 +637,10 @@ def _pagerank_oracle(n_iter: int = 3, max_basket: int | None = None) -> str:
         )
     parts.append(
         f"""
-    SELECT r{n_iter}.node AS part_id,
+    SELECT r{_PAGERANK_ROUNDS}.node AS part_id,
            CAST(coalesce(deg.deg, 0) AS BIGINT) AS degree,
-           round(r{n_iter}.r * (SELECT n FROM nn), 6) AS rank_norm
-    FROM r{n_iter} LEFT JOIN deg ON deg.s = r{n_iter}.node"""
+           round(r{_PAGERANK_ROUNDS}.r * (SELECT n FROM nn), 6) AS rank_norm
+    FROM r{_PAGERANK_ROUNDS} LEFT JOIN deg ON deg.s = r{_PAGERANK_ROUNDS}.node"""
     )
     return "".join(parts)
 
@@ -686,8 +690,9 @@ def pagerank_report(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
     # once, iterations and the degree branch below read the stored blocks
     weighted = weighted_edges(pairs)
     nodes = stored(nodes)
-    ranks = pagerank(None, nodes, n_iter=3, damping=0.85,
-                     materialize=False, weighted=weighted)
+    ranks = pagerank(
+        None, nodes, n_iter=_PAGERANK_ROUNDS, materialize=False, weighted=weighted
+    )
     nn = nodes.agg(F.count("*").cast("double").alias("__n"))
     deg = weighted.groupBy("src").agg(F.count("*").alias("deg"))
     return (
@@ -971,7 +976,7 @@ def x_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
     e = table(spark, sf, "embeddings")
     q = e.filter(F.col("vec_id") < 10)
     exact = cosine_topk(e, q, k=3).select("query_id", "neighbor_id")
-    approx = ivf_topk(e, q, label_centroids(e), k=3).select(
+    approx = ivf_topk(e, q, label_centroids(e)).select(
         "query_id", "neighbor_id", F.lit(1).alias("hit")
     )
     return (

@@ -403,11 +403,11 @@ def x_decontaminate_bloom(spark: SparkSession, sf: str) -> DataFrame:
         return sh.select(*cols, h.alias("h")).select(*cols, pos)
 
     bloom = (
-        positions(shingle_set(bench, "doc_id", "text", k=3), keep_id=False)
+        positions(shingle_set(bench, k=3), keep_id=False)
         .select("pos")
         .distinct()
     )
-    csh = shingle_set(corpus, "doc_id", "text", k=3)
+    csh = shingle_set(corpus, k=3)
     probe = positions(csh, keep_id=True)
     hits = (
         # <= m_slots distinct positions; estimated from the benchmark shingles
@@ -542,7 +542,7 @@ def x_dedup_semantic_guarded(spark: SparkSession, sf: str) -> DataFrame:
     x_dedup_semantic key, both from the SemDeDup scaling prescription
     (Abbas et al. 2023; SCALE.md §7e):
 
-    - **k ∝ n centroids** (``strided_centroids(stride=25)``): the
+    - **k ∝ n centroids** (``strided_centroids``, every 25th vector): the
       exhaustive key's fixed k=10 label centroids make cell size n/10 —
       within-cell pair work grows QUADRATICALLY with the corpus (measured
       8.9× on 10× data).  Sampling every 25th vector as a centroid keeps
@@ -581,7 +581,7 @@ def x_dedup_semantic_guarded(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     e = _emb_corpus(spark, sf).select("vec_id", "embedding")
-    cents = strided_centroids(table(spark, sf, "embeddings"), stride=25)
+    cents = strided_centroids(table(spark, sf, "embeddings"))
     # Materialize the assignment ONCE: semantic_dedup reads it three
     # times (the cell-size window and both pair-join sides), and unlike
     # the declarative argmax's shared exchange, three copies of the
@@ -647,7 +647,7 @@ def x_dedup_lev(spark: SparkSession, sf: str) -> DataFrame:
     fetch heads; no new shuffle shape beyond x_dedup_near.
     """
     corpus = _doc_corpus(spark, sf)
-    sh = shingle_set(corpus, "doc_id", "text", k=3)
+    sh = shingle_set(corpus, k=3)
     cand = lsh_candidate_pairs(lsh_bands(minhash_signatures(sh)))
     tx = corpus.select("doc_id", F.substring("text", 1, 160).alias("head"))
     ta = tx.select(F.col("doc_id").alias("id_a"), F.col("head").alias("head_a"))

@@ -77,7 +77,7 @@ def x_novelty(spark: SparkSession, sf: str) -> DataFrame:
     by LOWER ids, which don't arrive later).
     """
     corpus = _doc_corpus(spark, sf)
-    sh = shingle_set(corpus, "doc_id", "text", k=3)
+    sh = shingle_set(corpus, k=3)
     first = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     novel = (F.col("doc_id") == F.col("first_doc")).cast("long")
     return (
@@ -306,7 +306,7 @@ def x_dedup_substring(spark: SparkSession, sf: str) -> DataFrame:
     shuffle; md5 portability note in SCALE.md §8.
     """
     corpus = _doc_corpus(spark, sf)
-    win = shingle_set(corpus, "doc_id", "text", k=20)
+    win = shingle_set(corpus, k=20)
     wa = win.select(F.col("doc_id").alias("id_a"), "shingle")
     wb = win.select(F.col("doc_id").alias("id_b"), "shingle")
     return (
@@ -362,7 +362,7 @@ def x_dedup_substring_guarded(spark: SparkSession, sf: str) -> DataFrame:
     worst bucket is bounded at max_df² pairs.
     """
     corpus = _doc_corpus(spark, sf)
-    win = shingle_set(corpus, "doc_id", "text", k=20)
+    win = shingle_set(corpus, k=20)
     w_sh = Window.partitionBy("shingle")
     rare = (
         win.withColumn("__df", F.count("*").over(w_sh))

@@ -187,13 +187,7 @@ def x_curate_corpus(spark: SparkSession, sf: str) -> DataFrame:
     )
     corpus = d.unionByName(dups)
     bench = d.filter(F.col("doc_id") % 97 == 0).select("text")
-    out = curate_corpus(
-        corpus,
-        benchmark=bench,
-        quality_threshold=0.0,
-        near_threshold=0.8,
-        max_bucket=100,
-    )
+    out = curate_corpus(corpus, benchmark=bench, quality_threshold=0.0)
     splits = (
         out["curated"]
         .groupBy("split")
@@ -347,11 +341,11 @@ def x_sim_ivf_2level(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     e = table(spark, sf, "embeddings")
-    cents = strided_centroids(e, stride=25)
+    cents = strided_centroids(e)
     return _ivf_probe1_report(assign_to_centroids_2level(e, cents, n_probe_super=2))
 
 
-def _ivf_probe1_report(asg: DataFrame, k: int = 3) -> DataFrame:
+def _ivf_probe1_report(asg: DataFrame) -> DataFrame:
     """Probe-1 IVF top-k report body over an assignment frame
     (vec_id, vd, vn, cluster) — shared by the two-level keys so the
     query filter / self-pair exclusion / rank cast live once.
@@ -381,7 +375,7 @@ def _ivf_probe1_report(asg: DataFrame, k: int = 3) -> DataFrame:
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", pair_cosine().alias("sim"))
     )
-    out = _ranked_topk(scored, k)
+    out = _ranked_topk(scored, 3)
     return out.withColumn("rank", F.col("rank").cast("int"))
 
 
@@ -437,7 +431,7 @@ def x_sim_ivf_2level_exact(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     e = table(spark, sf, "embeddings")
-    cents = strided_centroids(e, stride=25)
+    cents = strided_centroids(e)
     # probe-all = exact; _ivf_probe1_report stores the
     # assignment so the per-cell dgemm runs once, not per join side
     return _ivf_probe1_report(assign_to_centroids_2level_blas(e, cents))

@@ -259,9 +259,9 @@ def x_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     d = table(spark, sf, "documents")
     tok = d.select(F.explode(tokens("text")).alias("token"))
     cnt = tok.groupBy("token").agg(F.count("*").alias("exact_n"))
-    sketch = cms_from_counts(cnt, "token", "exact_n", depth=4, width=1024)
+    sketch = cms_from_counts(cnt, "token", "exact_n", width=1024)
     topk = cnt.orderBy(F.col("exact_n").desc(), F.col("token").asc()).limit(20)
-    return cms_estimate(topk, sketch, "token", depth=4, width=1024).select(
+    return cms_estimate(topk, sketch, "token", width=1024).select(
         "token",
         "exact_n",
         "est",

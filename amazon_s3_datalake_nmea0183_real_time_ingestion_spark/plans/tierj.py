@@ -144,7 +144,7 @@ def x_jaccard_prefix(spark: SparkSession, sf: str) -> DataFrame:
     territory (x_dedup_near / x_dedup_ngram(max_df)); exact prefix joins
     are for the heavy-tailed-df regime the oracle corpora exhibit.
     """
-    return jaccard_prefix_pairs(_doc_corpus(spark, sf), k=3, threshold=0.6)
+    return jaccard_prefix_pairs(_doc_corpus(spark, sf))
 
 
 # ---------------------------------------------------------------------------
@@ -203,7 +203,7 @@ def x_hll_union(spark: SparkSession, sf: str) -> DataFrame:
     adjudication side of this key — production reads the estimate.
     """
     d = table(spark, sf, "documents")
-    sh = shingle_set(d, "doc_id", "text", 3).join(
+    sh = shingle_set(d, 3).join(
         d.select("doc_id", "source"), "doc_id"
     )
     halves = sh.withColumn("h", (F.col("doc_id") % 2).cast("int"))
@@ -298,7 +298,7 @@ def x_shuffle_epoch(spark: SparkSession, sf: str) -> DataFrame:
     d = table(spark, sf, "documents").select("doc_id")
     parts = []
     for ep in range(_EPOCHS):
-        s = global_shuffle(d, "doc_id", n_shards=_SHARDS, salt=f"ep{ep}")
+        s = global_shuffle(d, n_shards=_SHARDS, salt=f"ep{ep}")
         parts.append(s.withColumn("epoch", F.lit(ep).cast("int")))
     u = parts[0]
     for p in parts[1:]:
@@ -412,7 +412,7 @@ def x_block_sorted(spark: SparkSession, sf: str) -> DataFrame:
         )
         .distinct()
     )
-    return jaccard_verify(shingle_set(d), cand, "doc_id", 0.6)
+    return jaccard_verify(shingle_set(d), cand, 0.6)
 
 
 # ---------------------------------------------------------------------------

@@ -201,7 +201,7 @@ def x_agg_salted(spark: SparkSession, sf: str) -> DataFrame:
     """
     ev = table(spark, sf, "events")
     n_users = salted_exact_distinct_count(
-        ev, ["event_type"], "user_id", n_salt=16, out_col="n_users"
+        ev, ["event_type"], "user_id", out_col="n_users"
     )
     n_events = ev.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n_events")
@@ -282,7 +282,7 @@ def x_hll_intersect(spark: SparkSession, sf: str) -> DataFrame:
     """
     d = table(spark, sf, "documents").filter(F.col("source").isin(*_HLL_SOURCES))
     sh = stored(
-        shingle_set(d, "doc_id", "text", 3)
+        shingle_set(d, 3)
         .join(d.select("doc_id", "source"), "doc_id")
         .select("source", "shingle")
         .distinct()
@@ -458,7 +458,7 @@ def x_theta_intersect(spark: SparkSession, sf: str) -> DataFrame:
     """
     d = table(spark, sf, "documents").filter(F.col("source").isin(*_HLL_SOURCES))
     sh = stored(
-        shingle_set(d, "doc_id", "text", 3)
+        shingle_set(d, 3)
         .join(d.select("doc_id", "source"), "doc_id")
         .select("source", "shingle")
         .distinct()

@@ -35,9 +35,9 @@ def soh_data(i: int, *, lt: float = 47.6, ln: float = -122.3, sv: float = 18.0,
     return _b64(json.dumps(payload))
 
 
-def pimd8_sentence(lat: str = "47.60", ns: str = "N", lon: str = "122.33", ew: str = "W") -> str:
+def pimd8_sentence(ns: str = "N", ew: str = "W") -> str:
     # index:  0      1  2  3    4    5      6     7      8    ...
-    return f"$PIMD8,01,02,ab,cd,{lat},{ns},{lon},{ew},5.5,end"
+    return f"$PIMD8,01,02,ab,cd,47.60,{ns},122.33,{ew},5.5,end"
 
 
 def envelope_rows(n_soh: int = 6, n_sensor: int = 5, n_unknown: int = 2) -> list[dict]:
@@ -70,7 +70,7 @@ def envelope_rows(n_soh: int = 6, n_sensor: int = 5, n_unknown: int = 2) -> list
             sent = "$PIMD9,status,ok"          # sensor class, no position
         else:
             ns, ew = hemis[i % 4]
-            sent = pimd8_sentence("47.60", ns, "122.33", ew)
+            sent = pimd8_sentence(ns, ew)
         rows.append(env(_b64(_b64(sent)), i % 3))
     for i in range(n_unknown):
         rows.append(env(_b64(_b64("$GPGGA,123519,4807.038,N")), i % 3))

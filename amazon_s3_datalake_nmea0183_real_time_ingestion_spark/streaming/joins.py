@@ -8,7 +8,8 @@ reading picks up the heartbeats the same device sent in the preceding
 window.
 
 Scale notes: both sides shuffle once on the join key; watermarks bound
-the join state to (rows within ``delay`` + ``interval``) per side — an
+the join state to (rows within the 10-minute watermark delay + the
+600-second interval) per side — an
 unbounded stream-stream join without both time bounds and watermarks
 would grow state forever, so this module hard-requires them.
 """
@@ -19,35 +20,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def sensor_with_recent_soh(
-    sensor: DataFrame,
-    soh: DataFrame,
-    key: str = "deviceid",
-    sensor_ts: str = "event_ts",
-    soh_ts: str = "event_ts",
-    interval_seconds: int = 600,
-    delay: str = "10 minutes",
-) -> DataFrame:
+def sensor_with_recent_soh(sensor: DataFrame, soh: DataFrame) -> DataFrame:
     """Event-time interval join: each sensor row pairs with every SOH row
-    of the SAME device whose timestamp lies in
-    ``[sensor_ts - interval, sensor_ts]``.
+    of the SAME ``deviceid`` whose ``event_ts`` lies in
+    ``[sensor event_ts - 600 s, sensor event_ts]``.
 
     Returns sensor columns (prefixed ``s_``) + heartbeat battery/time
     columns (prefixed ``h_``) + the age of the heartbeat in seconds.
     """
-    s = sensor.withWatermark(sensor_ts, delay).select(
-        F.col(key).alias("s_device"),
-        F.col(sensor_ts).alias("s_ts"),
-        *[F.col(c).alias(f"s_{c}") for c in sensor.columns if c not in (key, sensor_ts)],
+    s = sensor.withWatermark("event_ts", "10 minutes").select(
+        F.col("deviceid").alias("s_device"),
+        F.col("event_ts").alias("s_ts"),
+        *[F.col(c).alias(f"s_{c}") for c in sensor.columns if c not in ("deviceid", "event_ts")],
     )
-    h = soh.withWatermark(soh_ts, delay).select(
-        F.col(key).alias("h_device"),
-        F.col(soh_ts).alias("h_ts"),
-        *[F.col(c).alias(f"h_{c}") for c in soh.columns if c not in (key, soh_ts)],
+    h = soh.withWatermark("event_ts", "10 minutes").select(
+        F.col("deviceid").alias("h_device"),
+        F.col("event_ts").alias("h_ts"),
+        *[F.col(c).alias(f"h_{c}") for c in soh.columns if c not in ("deviceid", "event_ts")],
     )
     cond = (
         (F.col("s_device") == F.col("h_device"))
-        & (F.col("h_ts") >= F.col("s_ts") - F.expr(f"INTERVAL {interval_seconds} SECONDS"))
+        & (F.col("h_ts") >= F.col("s_ts") - F.expr("INTERVAL 600 SECONDS"))
         & (F.col("h_ts") <= F.col("s_ts"))
     )
     joined = s.join(h, cond, "inner")

@@ -35,43 +35,39 @@ from pyspark.sql.types import (
 )
 
 
-def with_event_ts(df: DataFrame, epoch_col: str = "date_time",
-                  ts_col: str = "event_ts") -> DataFrame:
+def with_event_ts(df: DataFrame) -> DataFrame:
     """Derive the TimestampType event-time column from the reference's
     int epoch-seconds ``date_time`` (kept int at rest for fidelity)."""
-    return df.withColumn(ts_col, F.to_timestamp(F.from_unixtime(F.col(epoch_col))))
+    return df.withColumn("event_ts", F.to_timestamp(F.from_unixtime(F.col("date_time"))))
 
 
-def streaming_dedup(stream: DataFrame, keys: list[str], ts_col: str = "event_ts",
-                    delay: str = "10 minutes") -> DataFrame:
+def streaming_dedup(stream: DataFrame, keys: list[str]) -> DataFrame:
     """C1 streaming: drop duplicate heartbeats (retried satellite
     downlinks) within a watermark.
 
-    ``dropDuplicatesWithinWatermark`` keeps state only ``delay`` past the
-    watermark, so state is bounded by (keys seen in the last ``delay``) —
+    ``dropDuplicatesWithinWatermark`` keeps state only 10 minutes past the
+    watermark, so state is bounded by (keys seen in the last 10 minutes) —
     the batch analog is ``exact_dedup`` (operators/dedup.py).
     """
-    return stream.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(keys)
+    return stream.withWatermark("event_ts", "10 minutes").dropDuplicatesWithinWatermark(keys)
 
 
-def streaming_sessions(stream: DataFrame, user_col: str = "deviceid",
-                       ts_col: str = "event_ts", gap: str = "30 minutes",
-                       delay: str = "10 minutes") -> DataFrame:
+def streaming_sessions(stream: DataFrame) -> DataFrame:
     """C6 streaming: gap-based sessions via ``session_window`` — the
     streaming analog of ``operators.sessionize.gap_sessions`` (same
-    30-minute default gap). Emits one row per closed session once the
+    30-minute gap). Emits one row per closed session once the
     watermark passes the session end."""
     return (
-        stream.withWatermark(ts_col, delay)
-        .groupBy(F.col(user_col), F.session_window(F.col(ts_col), gap))
+        stream.withWatermark("event_ts", "10 minutes")
+        .groupBy(F.col("deviceid"), F.session_window(F.col("event_ts"), "30 minutes"))
         .agg(
             F.count("*").alias("n_events"),
             (
-                F.unix_micros(F.max(ts_col)) - F.unix_micros(F.min(ts_col))
+                F.unix_micros(F.max("event_ts")) - F.unix_micros(F.min("event_ts"))
             ).cast("bigint").alias("active_s"),
         )
         .select(
-            F.col(user_col),
+            F.col("deviceid"),
             F.col("session_window.start").alias("session_start"),
             F.col("session_window.end").alias("session_end"),
             "n_events",
@@ -80,21 +76,18 @@ def streaming_sessions(stream: DataFrame, user_col: str = "deviceid",
     )
 
 
-def streaming_windowed_counts(stream: DataFrame, ts_col: str = "event_ts",
-                              key_col: str = "msg_class",
-                              window: str = "1 day",
-                              delay: str = "1 hour") -> DataFrame:
+def streaming_windowed_counts(stream: DataFrame) -> DataFrame:
     """Tumbling-window per-key counts with late-data handling — the
     watermarked analog of the stage table's daily event-time partitions
     (cdk_datalake_mvp_stack.py:214: y/m/d ≈ 1-day tumbling buckets) and
     the per-batch class counters (A22, hello.py:56-58)."""
     return (
-        stream.withWatermark(ts_col, delay)
-        .groupBy(F.window(F.col(ts_col), window), F.col(key_col))
+        stream.withWatermark("event_ts", "1 hour")
+        .groupBy(F.window(F.col("event_ts"), "1 day"), F.col("msg_class"))
         .agg(F.count("*").alias("n"))
         .select(
             F.col("window.start").alias("window_start"),
-            key_col,
+            "msg_class",
             "n",
         )
     )
@@ -125,17 +118,15 @@ _STATE_SCHEMA = StructType(
 )
 
 
-def battery_transitions(stream: DataFrame, threshold: float = 4.0,
-                        ts_col: str = "event_ts",
-                        delay: str = "1 hour") -> DataFrame:
+def battery_transitions(stream: DataFrame) -> DataFrame:
     """Edge-triggered low-battery detector: one output row per device per
-    threshold CROSSING (enter_low / exit_low), with the low/high flag
+    4.0 V threshold CROSSING (enter_low / exit_low), with the low/high flag
     carried across micro-batches in the state store.
 
     Rows inside one batch are processed in event order per device; the
     carried state is just (was_low, last_seen) — O(1) per device.
     """
-    thr = float(threshold)
+    thr = 4.0
 
     def _detect(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -173,7 +164,7 @@ def battery_transitions(stream: DataFrame, threshold: float = 4.0,
             )
 
     return (
-        stream.withWatermark(ts_col, delay)
+        stream.withWatermark("event_ts", "1 hour")
         .groupBy("deviceid")
         .applyInPandasWithState(
             _detect,
@@ -214,13 +205,7 @@ _FUNNEL_STATE = StructType(
 )
 
 
-def streaming_funnel(stream: DataFrame,
-                     user_col: str = "user_id",
-                     ts_col: str = "event_ts",
-                     type_col: str = "event_type",
-                     stages: tuple = ("view", "click", "purchase"),
-                     delay: str = "1 hour",
-                     id_col: str = "event_id") -> DataFrame:
+def streaming_funnel(stream: DataFrame) -> DataFrame:
     """Incremental ordered funnel: the exact fold q_funnel's chained
     conditional-min windows compute over a static table, carried across
     micro-batches — per-user state is THREE timestamps (O(1), whale-user
@@ -250,7 +235,7 @@ def streaming_funnel(stream: DataFrame,
     ``ver == 2`` on every read and raises on anything else.  The same
     assert is the branch point a future v3 migration would hook.
     """
-    s1, s2, s3 = stages
+    s1, s2, s3 = "view", "click", "purchase"
 
     def _fold(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -273,12 +258,12 @@ def streaming_funnel(stream: DataFrame,
         pdf = pd.concat(list(pdfs), ignore_index=True)
         # Total fold order: event-time, then event id when present — without
         # the tie-break, same-timestamp rows fold in arrival order.
-        order = [ts_col] + ([id_col] if id_col in pdf.columns else [])
+        order = ["event_ts"] + (["event_id"] if "event_id" in pdf.columns else [])
         pdf = pdf.sort_values(order, kind="mergesort")
         before = (t1, t2, t3)
         for row in pdf.itertuples(index=False):
-            ts_us = int(getattr(row, ts_col).value // 1000)  # ns -> us
-            et = getattr(row, type_col)
+            ts_us = int(row.event_ts.value // 1000)  # ns -> us
+            et = row.event_type
             if et == s1 and t1 is None:
                 t1 = ts_us
             elif et == s2 and t1 is not None and t2 is None and ts_us > t1:
@@ -294,8 +279,8 @@ def streaming_funnel(stream: DataFrame,
             )
 
     return (
-        stream.withWatermark(ts_col, delay)
-        .groupBy(user_col)
+        stream.withWatermark("event_ts", "1 hour")
+        .groupBy("user_id")
         .applyInPandasWithState(
             _fold,
             outputStructType=FUNNEL_SCHEMA,
@@ -330,15 +315,11 @@ _EWMA_STATE_SCHEMA = StructType(
 )
 
 
-def ewma_anomaly_stream(stream: DataFrame, value_col: str = "battery_voltage",
-                        threshold: float = 1.0, beta: float = 0.7,
-                        k: int = 8, ts_col: str = "event_ts",
-                        delay: str = "1 hour",
-                        state_ttl_ms: int = 30 * 24 * 3600 * 1000) -> DataFrame:
+def ewma_anomaly_stream(stream: DataFrame) -> DataFrame:
     """Per-device EWMA control chart over the stream (Roberts '59) — the
     streaming twin of the batch `x_ewma_anomaly` key: residual of each
-    reading against the renormalized EWMA of the device's previous
-    ``k`` values, emitting rows whose |residual| ≥ ``threshold``.  The
+    ``battery_voltage`` against the renormalized EWMA (beta 0.7) of the
+    device's previous 8 values, emitting rows whose |residual| ≥ 1.0.  The
     batch key ranks a global top-50; a stream has no global rank, so the
     streaming contract is threshold-triggered alerts (the alert-sink
     shape of battery_transitions).
@@ -355,15 +336,15 @@ def ewma_anomaly_stream(stream: DataFrame, value_col: str = "battery_voltage",
     move only new rows.  Late rows behind the fence are skipped (the
     battery_transitions convention).  The watermark only drops late
     INPUT — it does not evict state — so retention is bounded by an
-    EventTimeTimeout: a device silent for ``state_ttl_ms`` past the
+    EventTimeTimeout: a device silent for 30 days past the
     watermark has its ring+fence removed (the r7 ADVICE finding; without
     it state grew with the all-time device count).  A re-appearing
     device simply reseeds — the fence resets with the ring, so no stale
     fence can drop its first new reading.
     """
-    kk = int(k)
-    b = float(beta)
-    ttl = int(state_ttl_ms)
+    kk = 8
+    b = 0.7
+    ttl = 30 * 24 * 3600 * 1000
 
     def _score(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -380,7 +361,7 @@ def ewma_anomaly_stream(stream: DataFrame, value_col: str = "battery_voltage",
             dt = int(row.date_time)
             if dt < int(last_seen):
                 continue
-            v = float(getattr(row, value_col))
+            v = float(row.battery_voltage)
             if hist:
                 num = 0.0
                 den = 0.0
@@ -390,7 +371,7 @@ def ewma_anomaly_stream(stream: DataFrame, value_col: str = "battery_voltage",
                     den = den + w
                 ewma = num / den
                 resid = v - ewma
-                if abs(resid) >= threshold:
+                if abs(resid) >= 1.0:
                     out_rows.append((key[0], dt, v, ewma, resid))
             hist = [v] + hist[: kk - 1]
             last_seen = dt
@@ -413,7 +394,7 @@ def ewma_anomaly_stream(stream: DataFrame, value_col: str = "battery_voltage",
             )
 
     return (
-        stream.withWatermark(ts_col, delay)
+        stream.withWatermark("event_ts", "1 hour")
         .groupBy("deviceid")
         .applyInPandasWithState(
             _score,

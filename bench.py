@@ -293,15 +293,15 @@ def _provenance(sf_dir: str, spark) -> dict:
         if not os.path.exists(path):
             continue
         tables[name] = table_meta(path)
-    # Host job-dispatch latency (tools/latency_probe.py one_task, 30-rep
-    # quick form), measured AFTER the timing loops: the round-10/11 bench
-    # investigation showed job-count-heavy iterative keys amplify host
-    # dispatch-latency shifts 1.5-2.5x while scan-bound keys don't move,
-    # so a cross-round total diff is uninterpretable without this number
-    # in the SAME record (SCALE.md 7q).  numPartitions=1 EXPLICIT so this
-    # matches the probe's corrected one_task baseline — bare range(1) is
-    # a 32-task job at local[32] (ADVICE r11; BENCH_r11's 93.2 ms was the
-    # uncorrected 32-task form, comparable to fan_out_32, not one_task).
+    # Host job-dispatch latency (the mean of 30 one-task
+    # range(0, 1, 1, 1).count() round trips, the same loop as perfbench's
+    # host.dispatch_ms_pre/post), measured AFTER the timing loops: the
+    # round-10/11 bench investigation showed job-count-heavy iterative
+    # keys amplify host dispatch-latency shifts 1.5-2.5x while scan-bound
+    # keys don't move, so a cross-round total diff is uninterpretable
+    # without this number in the SAME record (SCALE.md 7q).  numPartitions=1 EXPLICIT: bare
+    # range(1) is a 32-task job at local[32] (ADVICE r11; BENCH_r11's
+    # 93.2 ms was that 32-task form, not a one-task round trip).
     return {
         "tables": tables,
         "default_parallelism": spark.sparkContext.defaultParallelism,

@@ -43,7 +43,7 @@ def test_pack_sequences_layout(spark):
     d = spark.createDataFrame(rows, "doc_id bigint, source string, n_tokens int")
     got = {
         r["doc_id"]: (r["pack_id"], r["pack_offset"])
-        for r in pack_sequences(d, "n_tokens", "source", "doc_id", 512).collect()
+        for r in pack_sequences(d, 512).collect()
     }
     # shard s: starts 0, 300, 600 → windows 0,0,1; offsets 0,300,88
     # shard t packs independently from offset 0
@@ -260,7 +260,7 @@ def test_decontaminate_near_finds_edited_leak(spark):
         "doc_id long, text string",
     )
     bench = spark.createDataFrame([(100, base)], "doc_id long, text string")
-    hits = decontaminate_near(corpus, bench, threshold=0.5).collect()
+    hits = decontaminate_near(corpus, bench).collect()
     assert [(r["corpus_id"], r["bench_id"]) for r in hits] == [(1, 100)]
     assert hits[0]["jaccard"] >= 0.8
 

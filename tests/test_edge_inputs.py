@@ -160,7 +160,7 @@ def test_band_parameter_guards(spark):
     with pytest.raises(ValueError, match="divide SIMHASH_BITS"):
         D.simhash_pairs(sigs, n_bands=7)
     with pytest.raises(ValueError, match="divide evenly"):
-        D.lsh_bands(D.minhash_signatures(D.shingle_set(docs), n_perm=10), n_perm=10, n_bands=4)
+        D.lsh_bands(D.minhash_signatures(D.shingle_set(docs), n_perm=10), n_perm=10)
     # n_bands=1 must not crash (empty earlier-band predicate)
     assert D.simhash_pairs(sigs, n_bands=1).count() == 0
 
@@ -246,7 +246,7 @@ def test_tierf_operators_survive_weird_docs(weird_docs, spark):
 
     # novelty core over weird docs: every doc gets a row unless it has no
     # shingles (null text tokenizes to null -> no exploded rows)
-    sh = shingle_set(weird_docs, "doc_id", "text", k=3)
+    sh = shingle_set(weird_docs, k=3)
     first = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     per_doc = (
         sh.join(first, "shingle")
@@ -263,7 +263,7 @@ def test_tierf_operators_survive_weird_docs(weird_docs, spark):
 
     # substring windows (k=20): the huge repetitive doc collapses to its
     # few distinct windows; single-token and empty docs yield one window
-    win = shingle_set(weird_docs, "doc_id", "text", k=20)
+    win = shingle_set(weird_docs, k=20)
     cnt = {r["doc_id"]: r["c"] for r in
            win.groupBy("doc_id").agg(F.count("*").alias("c")).collect()}
     assert cnt[5] == 1 and cnt[2] == 1

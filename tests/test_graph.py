@@ -14,7 +14,7 @@ from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.graph impor
 def _ranks(spark, edges, nodes, n_iter):
     e = spark.createDataFrame(edges, "src long, dst long")
     n = spark.createDataFrame([(x,) for x in nodes], "node long")
-    out = pagerank(e, n, n_iter=n_iter, damping=0.85)
+    out = pagerank(e, n, n_iter=n_iter)
     return {r["node"]: r["r"] for r in out.collect()}
 
 

@@ -37,7 +37,7 @@ def assets(spark):
 
 
 def test_sample_frames_one_to_many(assets):
-    out = sample_frames(assets, frame_size=64, every_n=4).collect()
+    out = sample_frames(assets).collect()
     by_asset = {}
     for r in out:
         by_asset.setdefault(r["asset_id"], []).append(r)

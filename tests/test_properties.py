@@ -207,7 +207,7 @@ def test_containment_doc_floor_equals_pair_floor(spark, token_lists, floor):
     )
     sz = {
         r["doc_id"]: r["n"]
-        for r in shingle_set(docs, "doc_id", "text", k=3)
+        for r in shingle_set(docs, k=3)
         .groupBy("doc_id").agg(F.count("*").alias("n")).collect()
     }
     exhaustive = containment_pairs(docs, threshold=0.5).collect()
@@ -356,7 +356,7 @@ def test_prefix_join_lossless_on_generated_corpora(spark, texts):
     rows = [(i, t) for i, t in enumerate(texts)]
     docs = spark.createDataFrame(rows, ["doc_id", "text"]).localCheckpoint()
     via_prefix = sorted(
-        map(tuple, jaccard_prefix_pairs(docs, threshold=0.6).collect())
+        map(tuple, jaccard_prefix_pairs(docs).collect())
     )
     via_index = sorted(
         map(tuple, ngram_jaccard_pairs(docs, threshold=0.6).collect())
@@ -384,8 +384,8 @@ def test_cms_never_underestimates_under_forced_collisions(spark, counts):
     )
 
     cnt = spark.createDataFrame(list(counts.items()), ["k", "n"])
-    grid = cms_from_counts(cnt, "k", "n", depth=4, width=8)
-    est = cms_estimate(cnt, grid, "k", depth=4, width=8).collect()
+    grid = cms_from_counts(cnt, "k", "n", width=8)
+    est = cms_estimate(cnt, grid, "k", width=8).collect()
     assert all(r.est >= r.n for r in est)
     dot = cms_inner_product(grid, grid).collect()[0].est
     assert dot >= sum(n * n for n in counts.values())
@@ -435,7 +435,7 @@ def test_snm_blocking_output_is_subset_of_exhaustive_join(spark, texts):
         )
         .distinct()
     )
-    got = set(map(tuple, jaccard_verify(shingle_set(docs), cand, "doc_id", 0.6)
+    got = set(map(tuple, jaccard_verify(shingle_set(docs), cand, 0.6)
                   .select("id_a", "id_b").collect()))
     truth = set(map(tuple, ngram_jaccard_pairs(docs, threshold=0.6)
                     .select("id_a", "id_b").collect()))

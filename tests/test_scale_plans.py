@@ -224,13 +224,42 @@ def test_compact_partition_rewrites_to_single_file(spark, tmp_path):
     import glob
 
     assert len(glob.glob(f"{base}/{part}/*.parquet")) == 8
-    n = compact_partition(spark, base, part, target_files=1)
+    n = compact_partition(spark, base, part)
     assert n == 1000
     assert len(glob.glob(f"{base}/{part}/*.parquet")) == 1
     # data intact and partition column still derivable from the path
     back = spark.read.parquet(base)
     assert back.count() == 1000
     assert str(back.select("year").distinct().first()["year"]) == "2023"
+
+
+def test_interrupted_compaction_leaves_table_readable(spark, tmp_path, monkeypatch):
+    """A crash after the staged rewrite, before the swap: the table root
+    still reads each row once, under the real partition value only (the
+    staged copy must not surface as a partition of its own)."""
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
+        compact_partition,
+    )
+
+    base = str(tmp_path / "stage")
+    df = spark.range(0, 1000).withColumn("year", F.lit("2023"))
+    df.repartition(8).write.partitionBy("year").parquet(base)
+
+    writer_cls = type(df.write)
+    real_parquet = writer_cls.parquet
+
+    def crash_after_write(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        raise RuntimeError("crash after the staged rewrite")
+
+    monkeypatch.setattr(writer_cls, "parquet", crash_after_write)
+    with pytest.raises(RuntimeError, match="crash after the staged rewrite"):
+        compact_partition(spark, base, "year=2023")
+    monkeypatch.undo()
+
+    back = spark.read.parquet(base)
+    assert back.count() == 1000
+    assert sorted(str(r["year"]) for r in back.select("year").distinct().collect()) == ["2023"]
 
 
 def test_salted_aggs_equal_direct(spark):

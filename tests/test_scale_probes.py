@@ -63,11 +63,11 @@ def test_viral_duplicate_hot_bucket_guard(spark):
     )
     corpus = base.unionByName(viral).unionByName(planted)
 
-    sh = shingle_set(corpus, "doc_id", "text", 3)
-    bands = lsh_bands(minhash_signatures(sh, "doc_id", 16), "doc_id", 16, 4)
+    sh = shingle_set(corpus, 3)
+    bands = lsh_bands(minhash_signatures(sh, 16), 16)
 
-    unguarded = lsh_candidate_pairs(bands, "doc_id").count()
-    guarded = lsh_candidate_pairs(bands, "doc_id", max_bucket=100).count()
+    unguarded = lsh_candidate_pairs(bands).count()
+    guarded = lsh_candidate_pairs(bands, max_bucket=100).count()
     # the viral bucket alone contributes ≥ C(3000,2) pairs ≈ 4.5M
     assert unguarded >= n_viral * (n_viral - 1) // 2
     assert guarded < 10_000  # quadratic blowup gone
@@ -97,12 +97,12 @@ def test_boilerplate_max_df_guard(spark):
     )
     corpus = base.unionByName(planted)
 
-    sh = shingle_set(corpus, "doc_id", "text", 3)
+    sh = shingle_set(corpus, 3)
     df_hist = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     # the adversarial shape is real: header shingles sit in EVERY doc
     assert df_hist.agg(F.max("df")).first()[0] >= n_docs
 
-    hits = ngram_jaccard_pairs(corpus, k=3, threshold=0.5, max_df=50)
+    hits = ngram_jaccard_pairs(corpus, threshold=0.5, max_df=50)
     rows = {(r["id_a"], r["id_b"]): r["jaccard"] for r in hits.collect()}
     assert (3, 500_003) in rows
     # exact score despite the prefilter: the pair shares header AND core

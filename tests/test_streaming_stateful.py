@@ -113,7 +113,7 @@ def test_streaming_sessions_close_on_watermark(spark, tmp_path):
     ])
     out = _run(
         spark, landing,
-        lambda s: streaming_sessions(s, user_col="deviceid", gap="30 minutes"),
+        lambda s: streaming_sessions(s),
         "sessions_out",
     )
     rows = out.collect()
@@ -140,7 +140,7 @@ def test_streaming_windowed_counts(spark, tmp_path):
     ])
     out = _run(
         spark, landing,
-        lambda s: streaming_windowed_counts(s, window="1 day", delay="1 hour"),
+        lambda s: streaming_windowed_counts(s),
         "windows_out",
     )
     got = {(r["msg_class"]): r["n"] for r in out.collect()}
@@ -333,7 +333,7 @@ def test_ewma_anomaly_stream_matches_batch_fragment(spark, tmp_path):
 
     out = _run(
         spark, landing,
-        lambda s: ewma_anomaly_stream(s, threshold=1.0),
+        lambda s: ewma_anomaly_stream(s),
         "ewma_out",
     ).collect()
 
@@ -403,7 +403,7 @@ def test_ewma_ttl_anchored_to_event_time_survives_watermark_jump(
 
     out = _run(
         spark, landing,
-        lambda s: ewma_anomaly_stream(s, threshold=1.0),
+        lambda s: ewma_anomaly_stream(s),
         "ewma_ttl_out",
     ).collect()
 

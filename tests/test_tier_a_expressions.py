@@ -88,7 +88,7 @@ def test_hemisphere_sign_fix_all_quadrants(spark):
         ("S", "E", -47.6, 122.33, 122.33),
         ("S", "W", -47.6, -122.33, 122.33),  # compat: W NOT negated when S
     ]
-    rows = [(pimd8_sentence("47.60", ns, "122.33", ew), lat, lon, lon_compat)
+    rows = [(pimd8_sentence(ns, ew), lat, lon, lon_compat)
             for ns, ew, lat, lon, lon_compat in cases]
     df = spark.createDataFrame(rows, ["s", "exp_lat", "exp_lon", "exp_lon_compat"])
     toks = nmea_tokens(F.col("s"))

@@ -127,10 +127,10 @@ def test_cms_stream_and_counts_builds_agree_and_never_underestimate(spark):
     d = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     tok = d.select(F.explode(tokens("text")).alias("token"))
     cnt = tok.groupBy("token").agg(F.count("*").alias("n"))
-    g1 = cms_from_stream(tok, "token", depth=4, width=64)
-    g2 = cms_from_counts(cnt, "token", "n", depth=4, width=64)
+    g1 = cms_from_stream(tok, "token", width=64)
+    g2 = cms_from_counts(cnt, "token", "n", width=64)
     assert g1.exceptAll(g2).count() == 0 and g2.exceptAll(g1).count() == 0
-    est = cms_estimate(cnt, g2, "token", depth=4, width=64)
+    est = cms_estimate(cnt, g2, "token", width=64)
     assert est.filter(F.col("est") < F.col("n")).count() == 0
     # width 64 << distinct tokens forces real collisions: some overcount>0
     assert est.filter(F.col("est") > F.col("n")).count() > 0
@@ -214,12 +214,12 @@ def test_cms_estimate_never_seen_key_is_zero(spark):
     items = spark.createDataFrame([("a",), ("a",), ("b",)], "token string")
     # width 4096 >> 2 distinct keys: some probe cells of an unseen key
     # are guaranteed empty
-    g = cms_from_stream(items, "token", depth=4, width=4096)
+    g = cms_from_stream(items, "token", width=4096)
     probe = spark.createDataFrame(
         [("a",), ("never-seen-key",)], "token string"
     )
     est = {r["token"]: r["est"] for r in
-           cms_estimate(probe, g, "token", depth=4, width=4096).collect()}
+           cms_estimate(probe, g, "token", width=4096).collect()}
     assert est["a"] >= 2
     assert est["never-seen-key"] == 0
 
@@ -277,11 +277,11 @@ def test_cms_grids_merge_across_batches(spark):
     )
 
     tok = d.select("doc_id", F.explode(tokens("text")).alias("token"))
-    whole = cms_from_stream(tok, "token", depth=4, width=64)
+    whole = cms_from_stream(tok, "token", width=64)
     b1 = cms_from_stream(tok.filter(F.col("doc_id") % 2 == 0), "token",
-                         depth=4, width=64)
+                         width=64)
     b2 = cms_from_stream(tok.filter(F.col("doc_id") % 2 == 1), "token",
-                         depth=4, width=64)
+                         width=64)
     merged = (
         b1.unionByName(b2).groupBy("j", "bucket").agg(F.sum("cell").alias("cell"))
     )

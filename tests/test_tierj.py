@@ -90,7 +90,7 @@ def test_prefix_join_equals_inverted_index_join(spark):
     pair set as the exhaustive inverted-index join, jaccard included."""
     corpus = _doc_corpus_small(spark).localCheckpoint()
     via_prefix = _rows(
-        jaccard_prefix_pairs(corpus, threshold=0.6), "id_a", "id_b", "jaccard"
+        jaccard_prefix_pairs(corpus), "id_a", "id_b", "jaccard"
     )
     via_index = _rows(
         ngram_jaccard_pairs(corpus, threshold=0.6), "id_a", "id_b", "jaccard"
@@ -104,7 +104,7 @@ def test_prefix_candidates_strictly_fewer_than_inverted_index(spark):
     any-shared-shingle join while the verified output stays identical."""
     corpus = _doc_corpus_small(spark).localCheckpoint()
     sh = shingle_set(corpus).localCheckpoint()
-    n_prefix = prefix_candidate_pairs(sh, threshold=0.6).count()
+    n_prefix = prefix_candidate_pairs(sh).count()
     n_brute = ngram_intersection_pairs(sh).count()
     assert 0 < n_prefix < n_brute
 
@@ -114,7 +114,7 @@ def test_prefix_candidates_cover_all_qualifying_pairs(spark):
     prefix candidates — the lossless containment, checked directly."""
     corpus = _doc_corpus_small(spark).localCheckpoint()
     sh = shingle_set(corpus).localCheckpoint()
-    cands = set(_rows(prefix_candidate_pairs(sh, threshold=0.6), "id_a", "id_b"))
+    cands = set(_rows(prefix_candidate_pairs(sh), "id_a", "id_b"))
     truth = set(
         _rows(ngram_jaccard_pairs(corpus, threshold=0.6), "id_a", "id_b")
     )
@@ -298,7 +298,7 @@ def test_cms_inner_product_exact_when_no_collisions(spark):
     cnt = spark.createDataFrame(
         [(f"k{i}", i + 1) for i in range(10)], ["k", "n"]
     )
-    grid = cms_from_counts(cnt, "k", "n", depth=4, width=65536)
+    grid = cms_from_counts(cnt, "k", "n", width=65536)
     est = cms_inner_product(grid, grid).collect()[0].est
     truth = sum((i + 1) ** 2 for i in range(10))
     assert est == truth

@@ -243,9 +243,9 @@ def test_agg_hash_double_encoding_matches_cross_engine(spark):
 def test_front_load_rotation_guards_fire_before_mutation():
     """ADVICE r11: a typo'd rotation must fail at import time, not
     silently shrink the 50-key adjudication window.  Both raise paths
-    (unknown name, duplicate — including a priority/back overlap) must
-    fire, and they must fire BEFORE any REGISTRY mutation so a failed
-    rotation can't leave a half-reordered registry behind."""
+    (unknown name, duplicate) must fire, and they must fire BEFORE any
+    REGISTRY mutation so a failed rotation can't leave a half-reordered
+    registry behind."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.plans import (
         REGISTRY,
         _front_load,
@@ -254,23 +254,19 @@ def test_front_load_rotation_guards_fire_before_mutation():
     before = list(REGISTRY)
     k0, k1 = before[0], before[1]
     with pytest.raises(KeyError, match="not in REGISTRY"):
-        _front_load(["no_such_key_xyz"], [])
-    with pytest.raises(KeyError, match="not in REGISTRY"):
-        _front_load([k0], ["also_not_a_key"])
+        _front_load(["no_such_key_xyz"])
     with pytest.raises(ValueError, match="duplicate"):
-        _front_load([k0, k1, k0], [])
-    with pytest.raises(ValueError, match="duplicate"):
-        _front_load([k0], [k0])  # front- AND back-loaded
+        _front_load([k0, k1, k0])
     assert list(REGISTRY) == before  # guards fired before any mutation
 
     # a valid rotation still reorders (and is restored for the suite)
     try:
-        _front_load([k1], [k0])
+        _front_load([k1])
         after = list(REGISTRY)
-        assert after[0] == k1 and after[-1] == k0
+        assert after[0] == k1
         assert set(after) == set(before)
     finally:
-        _front_load(before, [])
+        _front_load(before)
         assert list(REGISTRY) == before
 
 

@@ -61,7 +61,7 @@ def generate(landing: str, n: int, n_files: int) -> None:
                         bv=3.5 if rid % 17 == 0 else 4.2,
                     )
                 elif r < 98:
-                    data = _b64(_b64(pimd8_sentence("47.60", "NS"[rid % 2], "122.33", "EW"[rid % 2])))
+                    data = _b64(_b64(pimd8_sentence("NS"[rid % 2], "EW"[rid % 2])))
                 else:
                     data = _b64(_b64("$GPGGA,123519,4807.038,N"))
                 f.write(json.dumps({
