@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.base64_fns import unbase64_str
 from ..functions.nmea import classify_payload
-from ..schemas import CLASS_SENSOR, CLASS_SOH, CLASS_UNKNOWN
+from ..schemas import CLASS_SENSOR, CLASS_SOH
 
 
 def classify_records(envelopes: DataFrame) -> DataFrame:
@@ -32,6 +32,3 @@ def soh_branch(classified: DataFrame) -> DataFrame:
 def sensor_branch(classified: DataFrame) -> DataFrame:
     return classified.filter(F.col("msg_class") == CLASS_SENSOR)
 
-
-def unknown_branch(classified: DataFrame) -> DataFrame:
-    return classified.filter(F.col("msg_class") == CLASS_UNKNOWN)

@@ -3,12 +3,11 @@ embedding columns (Tier C3/C7 bridge: cluster-based curation à la SemDeDup —
 cluster the corpus, then dedup/prune WITHIN clusters — and the training
 step that produces IVF centroids, operators/similarity.py).
 
-Every iteration is the scale-safe IVF shape: centroids (k × dim, KBs)
+Each step is the scale-safe IVF shape: centroids (k × dim, KBs)
 broadcast; assignment is map-side (no corpus shuffle); the centroid update
 is one posexplode + groupBy(cluster, pos) partial-agg shuffle whose output
-is k × dim rows.  Convergence is judged on the ROUNDED centroid snapshot
-(k × dim doubles, collected — control-plane size), so the loop stops on a
-fixpoint identically in any engine.
+is k × dim rows.  The ``x_kmeans_assign`` / ``x_kmeans_iter`` keys run
+these steps.
 """
 
 from __future__ import annotations
@@ -17,7 +16,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double
-from ..storage import stored
 from .similarity import assign_to_centroids, label_centroids
 
 
@@ -48,30 +46,3 @@ def kmeans_update(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
         assigned.select(F.col("cluster").alias("label"), F.col("vd").alias("embedding"))
     )
 
-
-def kmeans(vectors: DataFrame, k: int = 8, max_iters: int = 10) -> DataFrame:
-    """Spherical k-means to fixpoint (or ``max_iters``): returns the final
-    (``vec_id``, ``cluster``) assignment.
-
-    Convergence probe: the rounded centroid snapshot (k × dim values) is
-    collected and compared across rounds — k × dim is KBs at any corpus
-    size, so the probe is control-plane, not a data-plane join.
-    Each round's centroids are ``stored()`` to cut lineage (same pattern
-    as connected_components: the snapshot collect is the action that
-    stores them).
-    """
-    cents = vectors.sparkSession.createDataFrame(
-        seed_centroids(vectors, k).collect(),
-        "centroid_id bigint, centroid array<double>",
-    )
-    prev_snapshot = None
-    for _ in range(max_iters):
-        new_cents = stored(kmeans_update(vectors, cents))
-        snapshot = sorted(
-            (r["centroid_id"], tuple(r["centroid"])) for r in new_cents.collect()
-        )
-        cents = new_cents
-        if snapshot == prev_snapshot:
-            break
-        prev_snapshot = snapshot
-    return kmeans_assign(vectors, cents)

@@ -16,6 +16,10 @@ from pyspark.sql.window import Window
 from ..functions.hashing import md5_u32
 from ..functions.text import shingles_from_tokens, tokens
 
+# shard count of global_shuffle: the operator and the x_shuffle_epoch
+# oracle agree on it
+SHUFFLE_SHARDS = 8
+
 
 def hash_split(df: DataFrame, id_col: str = "doc_id", salt: str = "split") -> DataFrame:
     """Deterministic train/val/test assignment by hash bucket.
@@ -162,27 +166,27 @@ def domain_quota(df: DataFrame, domain_col: str, order_cols: list,
     )
 
 
-def global_shuffle(df: DataFrame, n_shards: int = 8,
-                   salt: str = "shuf") -> DataFrame:
+def global_shuffle(df: DataFrame, salt: str = "shuf") -> DataFrame:
     """Deterministic global training shuffle: every row gets a stable
     pseudo-random shard and an in-shard position, so a data loader reads
     the corpus in a reproducible shuffled order (same salt → same order
     on every run, any partitioning, any engine).
 
     Adds ``fp`` (salted md5 of the id — the shuffle key), ``shard``
-    (``md5 % n_shards``) and ``pos`` (1-based rank of ``fp`` within the
+    (``md5 % SHUFFLE_SHARDS``) and ``pos`` (1-based rank of ``fp`` within the
     shard).  Ids are unique ⇒ fingerprints are unique ⇒ the order is
     total and deterministic.
 
     Scale: deliberately NOT a global ``row_number`` (an unpartitioned
     window funnels 100 TB through one task); the rank window is
-    partitioned by ``shard``, so each of ``n_shards`` sorts runs
-    independently — set ``n_shards`` to O(cluster cores) and the sort is
-    embarrassingly parallel.  Loader order is (shard, pos).
+    partitioned by ``shard``, so each of ``SHUFFLE_SHARDS`` sorts runs
+    independently — at scale, size the shard count to O(cluster cores)
+    and the sort is embarrassingly parallel.  Loader order is (shard, pos).
     """
     fp = F.md5(F.concat(F.lit(f"{salt}:"), F.col("doc_id").cast("string")))
     shard = (
-        F.conv(F.substring(F.col("fp"), 1, 8), 16, 10).cast("bigint") % n_shards
+        F.conv(F.substring(F.col("fp"), 1, 8), 16, 10).cast("bigint")
+        % SHUFFLE_SHARDS
     ).cast("int")
     w = Window.partitionBy("shard").orderBy("fp")
     return (

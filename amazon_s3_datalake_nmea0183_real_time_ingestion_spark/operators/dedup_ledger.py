@@ -249,26 +249,3 @@ def start_near_dedup_stream(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def start_dedup_stream(
-    stream: DataFrame,
-    ledger_path: str,
-    out_path: str,
-    checkpoint: str,
-):
-    """Streaming admission control: foreachBatch wrapper around
-    :func:`admit_new_documents` that appends admitted documents to
-    ``out_path``.  Checkpointed source offsets + per-batch-id ledger
-    partitions give end-to-end exactly-once admission."""
-
-    def _admit(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        admitted = admit_new_documents(spark, batch, ledger_path, batch_id)
-        admitted.write.mode("append").parquet(out_path)
-
-    return (
-        stream.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )

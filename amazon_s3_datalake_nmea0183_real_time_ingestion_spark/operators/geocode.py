@@ -77,67 +77,3 @@ def enrich_geocode(
     keyed = df.withColumn("geo_cell", grid_cell(F.col(lon_col), F.col(lat_col)))
     return keyed.join(geo_dim, "geo_cell", "left").drop("geo_cell")
 
-
-# ---------------------------------------------------------------------------
-# too-big-to-broadcast fallback: bucketed dimension, co-partitioned join.
-# The 1°×1° grid dim broadcasts (64,800 rows ≈ MBs), but a richer dimension
-# — parcel-level reverse geocoding, 100m cells, per-address records — can
-# reach 100s of GB, past any broadcast threshold.  The scale path writes
-# the dim ONCE as a bucketed table on the join key; every subsequent
-# enrichment joins against it with NO dim-side exchange and NO fact-side
-# shuffle beyond the one explicit co-partitioning exchange (which replaces
-# the shuffle a plain sort-merge join would have needed anyway).
-# ---------------------------------------------------------------------------
-
-
-def write_bucketed_geo_dim(
-    geo_dim: DataFrame, table_name: str, n_buckets: int = 32
-) -> None:
-    """Persist the geo dimension bucketed + sorted by ``geo_cell``.
-
-    One-time (or per-dim-refresh) cost: a shuffle into ``n_buckets``
-    files whose layout the catalog records as
-    ``HashPartitioning(geo_cell, n_buckets)``.  At 100 TB the bucket
-    count should be sized so each bucket file is ~128-512 MB."""
-    (
-        geo_dim.write.mode("overwrite")
-        .bucketBy(n_buckets, "geo_cell")
-        .sortBy("geo_cell")
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
-def table_bucket_count(spark: SparkSession, table_name: str) -> int:
-    """Read a table's bucket count from the catalog (DESCRIBE FORMATTED),
-    so callers can't drift from the layout the writer recorded."""
-    for row in spark.sql(f"DESCRIBE FORMATTED {table_name}").collect():
-        if row["col_name"].strip() == "Num Buckets":
-            return int(row["data_type"].strip())
-    raise ValueError(f"table {table_name!r} is not bucketed")
-
-
-def enrich_geocode_bucketed(df: DataFrame, spark: SparkSession, table_name: str) -> DataFrame:
-    """Enrich against a dimension too big to broadcast: sort-merge join
-    against the bucketed dim table written by
-    :func:`write_bucketed_geo_dim`.
-
-    The fact side is explicitly repartitioned to the dim's exact bucket
-    layout (``HashPartitioning(geo_cell, n_buckets)``), so
-    EnsureRequirements adds NO further exchange on either side: the dim
-    scan's bucketing satisfies the join requirement directly (zero
-    dim-side shuffle — the payoff: the big dim never moves after its
-    one-time bucket write) and the fact's repartition IS the join
-    distribution.  The bucket count is read from the CATALOG: a count
-    that disagreed with the written layout would silently reintroduce the
-    reconciling exchange this function exists to avoid.  ``merge`` hint
-    pins sort-merge so a small test dim doesn't silently take the
-    broadcast path.  Plan-asserted in
-    tests/test_scale_plans.py."""
-    n_buckets = table_bucket_count(spark, table_name)
-    dim = spark.table(table_name)
-    keyed = df.withColumn("geo_cell", grid_cell(F.col("longitude"), F.col("latitude")))
-    keyed = keyed.repartition(n_buckets, "geo_cell")
-    # layout pin, not a size call: keep the bucketed sort-merge path even
-    # for a dim small enough to broadcast
-    return keyed.join(dim.hint("merge"), "geo_cell", "left").drop("geo_cell")

@@ -24,6 +24,10 @@ from pyspark.sql import functions as F
 
 from ..storage import stored
 
+# co-purchase affinity support threshold: copurchase_affinity and the
+# x_link_adamic oracle agree on it
+AFFINITY_MIN_SUPPORT = 2
+
 
 def copurchase_pairs(li: DataFrame, max_basket: int | None = None,
                      directed: bool = False) -> DataFrame:
@@ -309,15 +313,15 @@ def kcore(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     )
 
 
-def copurchase_affinity(li: DataFrame, min_support: int = 2) -> DataFrame:
+def copurchase_affinity(li: DataFrame) -> DataFrame:
     """Weighted co-occurrence AFFINITY graph: undirected item pairs
     (u < v, w) where ``w`` counts the distinct baskets the pair shares,
-    kept only at ``w >= min_support`` (the association-rule support
+    kept only at ``w >= AFFINITY_MIN_SUPPORT`` (the association-rule support
     threshold of Agrawal & Srikant, VLDB '94).
 
     The support threshold is itself the 100 TB guard for everything
     built downstream of this graph: one-off co-occurrences are exactly
-    the pairs a power-law hub key mass-produces, so ``min_support >= 2``
+    the pairs a power-law hub key mass-produces, so a support of 2
     prunes the graph from O(sum basket²) incidental pairs down to the
     statistically repeated ones — measured 115,729 → 3,445 edges at
     sf0.01 and 1,196,000 → 3,573 at sf0.1, i.e. the affinity graph stays
@@ -341,7 +345,7 @@ def copurchase_affinity(li: DataFrame, min_support: int = 2) -> DataFrame:
             F.col("b.l_partkey").alias("v"),
         )
         .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= min_support)
+        .filter(F.col("w") >= AFFINITY_MIN_SUPPORT)
     )
 
 

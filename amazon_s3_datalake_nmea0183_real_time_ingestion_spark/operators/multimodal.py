@@ -97,83 +97,6 @@ def extract_features(assets: DataFrame) -> DataFrame:
     )
 
 
-FRAME_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("n_frames", IntegerType()),
-        StructField("frame", BinaryType()),
-    ]
-)
-
-
-def sample_frames(assets: DataFrame) -> DataFrame:
-    """Frame sampling (video-style one-to-many): slice each payload into
-    64-byte frames and keep every 4th.
-
-    A real video pipeline swaps the byte-slicing for a container demuxer;
-    the Spark shape is identical: ``mapInPandas`` where one input row
-    yields MANY output rows (Arrow batches both ways), payload column
-    pruned everywhere the frames aren't needed.
-    """
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, totals, frames = [], [], [], []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                n_frames = max((len(payload) + 63) // 64, 1)
-                for i in range(0, n_frames, 4):
-                    ids.append(aid)
-                    idxs.append(i)
-                    totals.append(n_frames)
-                    frames.append(bytes(payload[i * 64:(i + 1) * 64]))
-            yield pd.DataFrame(
-                {"asset_id": ids, "frame_idx": pd.array(idxs, dtype="int32"),
-                 "n_frames": pd.array(totals, dtype="int32"), "frame": frames}
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(_batches, FRAME_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("modality", StringType()),
-        StructField("payload", BinaryType()),
-        StructField("n_bytes", IntegerType()),
-    ]
-)
-
-
-def resize_assets(assets: DataFrame, target_bytes: int = 256) -> DataFrame:
-    """Resize stage: deterministic byte-stride downsample to exactly
-    ``target_bytes`` (payloads shorter than the target pass through).
-    A real image pipeline swaps the stride for PIL/libvips resize inside
-    the same batch loop — schema and batching stay as-is."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            def _shrink(b: bytes) -> bytes:
-                if len(b) <= target_bytes:
-                    return bytes(b)
-                idx = [int(i * len(b) / target_bytes) for i in range(target_bytes)]
-                return bytes(bytearray(b[i] for i in idx))
-
-            resized = pdf["payload"].map(_shrink)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "modality": pdf["modality"],
-                    "payload": resized,
-                    "n_bytes": resized.map(len).astype("int32"),
-                }
-            )
-
-    return assets.select("asset_id", "modality", "payload").mapInPandas(
-        _batches, RESIZED_SCHEMA
-    )
-
-
 # ---------------------------------------------------------------------------
 # Real container codecs — dependency-free WAV / BMP / PPM
 # ---------------------------------------------------------------------------
@@ -332,16 +255,6 @@ def decode_asset(payload: bytes) -> dict:
     if payload[:2] == b"P6":
         return decode_ppm(payload)
     raise ValueError(f"unsupported container (magic={payload[:4]!r})")
-
-
-def decode_image(payload: bytes) -> dict:
-    """Image decode over the dependency-free containers (BMP/PPM).
-    Compressed formats (PNG/JPEG) still need a codec library — they raise
-    ``ValueError`` from :func:`decode_asset`'s magic dispatch."""
-    out = decode_asset(payload)
-    if out["container"] not in ("bmp", "ppm"):
-        raise ValueError(f"payload is {out['container']}, not an image")
-    return out
 
 
 DECODED_SCHEMA = StructType(

@@ -112,24 +112,6 @@ def quantize(df: DataFrame, codebook: DataFrame) -> DataFrame:
     )
 
 
-def write_codebook(codebook: DataFrame, path: str) -> None:
-    """Persist the 1-row codebook (train once, apply per ingest batch —
-    the production cadence; re-deriving min/max per batch would DRIFT
-    the code space and silently break code comparability across files).
-    Overwrite is safe: the frame is 1 row, and a re-train is an explicit
-    re-versioning of the store."""
-    codebook.write.mode("overwrite").parquet(path)
-
-
-def read_codebook(spark, path: str) -> DataFrame:
-    """Load a persisted codebook for map-side application.  Works in
-    batch and inside streaming foreachBatch / stream transformations
-    alike: ``quantize`` is a pure projection, so applying it to a
-    readStream frame adds no state, no watermark, no extra trigger work
-    — the codebook broadcast is the only non-row cost."""
-    return spark.read.parquet(path)
-
-
 def quantization_error(df: DataFrame, codebook: DataFrame) -> DataFrame:
     """Per-vector reconstruction report: mean squared error, worst
     absolute component error, and cosine fidelity between the original

@@ -623,30 +623,6 @@ def semantic_dedup_pairs(assigned: DataFrame, threshold: float = 0.99,
     )
 
 
-def semantic_cell_report(assigned: DataFrame,
-                         max_cell: int | None = None) -> DataFrame:
-    """Cell census for the SemDeDup guard — (cluster, cell_size, dropped)
-    per IVF cell of an assignment frame ``(id, vd, vn, cluster)``, where
-    ``dropped`` marks cells the ``max_cell`` cap would exclude from pair
-    generation.  A cap that binds on a handful of viral cells is
-    working; a cap that binds BROADLY is a recall bug masquerading as a
-    speedup (SCALE.md §7g's stride-50 probe: the cap
-    silently swallowed ~90% of the pair mass).  Production runs this
-    census on the same cadence as the dedup itself and alerts on the
-    dropped-cell fraction — it rides the identical assignment + one
-    keyed count, so it costs one aggregation over work the dedup already
-    does."""
-    sz = (
-        assigned.filter(F.col("vn") > 0)
-        .groupBy("cluster")
-        .agg(F.count("*").alias("cell_size"))
-    )
-    dropped = (
-        (F.col("cell_size") > max_cell) if max_cell is not None else F.lit(False)
-    )
-    return sz.select("cluster", "cell_size", dropped.cast("int").alias("dropped"))
-
-
 def semantic_dedup(assigned: DataFrame, threshold: float = 0.99,
                    max_cell: int | None = None) -> DataFrame:
     """Keep-lowest-id SemDeDup collapse over an assignment frame

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.dedup import jaccard_prefix_pairs, jaccard_verify, shingle_set
+from ..operators.curation import SHUFFLE_SHARDS
 from ..operators.graph import copurchase_pairs, kcore
 from .registry import register, table
 from .tierc import _CORPUS_SQL, _SHINGLES_SQL, _TOKS_SQL, _doc_corpus
@@ -247,7 +248,6 @@ def x_hll_union(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _EPOCHS = 2
-_SHARDS = 8
 
 
 @register(
@@ -261,7 +261,7 @@ _SHARDS = 8
       FROM documents CROSS JOIN eps),
     shq AS (
       SELECT epoch, doc_id, fp,
-             CAST(('0x' || substr(fp, 1, 8))::BIGINT % {_SHARDS} AS INT) AS shard
+             CAST(('0x' || substr(fp, 1, 8))::BIGINT % {SHUFFLE_SHARDS} AS INT) AS shard
       FROM fp),
     posn AS (
       SELECT epoch, shard, doc_id,
@@ -287,9 +287,10 @@ def x_shuffle_epoch(spark: SparkSession, sf: str) -> DataFrame:
     permutation, not just membership.
 
     Scale (global_shuffle): deliberately NOT a global row_number — the
-    rank window partitions by shard, so each of n_shards sorts runs
-    independently (set n_shards to O(cluster cores)); the md5 shuffle
-    key is computed map-side; one shard-keyed exchange per epoch total.
+    rank window partitions by shard, so each of SHUFFLE_SHARDS sorts
+    runs independently (size it to O(cluster cores) at scale); the md5
+    shuffle key is computed map-side; one shard-keyed exchange per epoch
+    total.
     Epochs are independent plans — at 100 TB you materialize each
     epoch's manifest separately, exactly as done here.
     """
@@ -298,7 +299,7 @@ def x_shuffle_epoch(spark: SparkSession, sf: str) -> DataFrame:
     d = table(spark, sf, "documents").select("doc_id")
     parts = []
     for ep in range(_EPOCHS):
-        s = global_shuffle(d, n_shards=_SHARDS, salt=f"ep{ep}")
+        s = global_shuffle(d, salt=f"ep{ep}")
         parts.append(s.withColumn("epoch", F.lit(ep).cast("int")))
     u = parts[0]
     for p in parts[1:]:

@@ -2,7 +2,7 @@
 
 - monitoring: EWMA anomaly detection (`x_ewma_anomaly`, the
   partition-local streaming-shaped monitor next to x_outlier_mad's
-  global robust screen; streaming twin in streaming/stateful.py),
+  global robust screen),
   bounded-radius nearest-station geo join (`x_geo_nearest`);
 - skew / sketch infrastructure: salted exact distinct count
   (`x_agg_salted`, adjudicating operators/skew.py), HLL
@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.dedup import shingle_set
-from ..operators.graph import adamic_adar, copurchase_affinity
+from ..operators.graph import AFFINITY_MIN_SUPPORT, adamic_adar, copurchase_affinity
 from ..operators.skew import salted_exact_distinct_count
 from ..operators.stats import cusum, gini, mase
 from ..storage import stored
@@ -558,8 +558,6 @@ def x_theta_intersect(spark: SparkSession, sf: str) -> DataFrame:
 # Adamic–Adar link prediction on the affinity graph
 # ---------------------------------------------------------------------------
 
-_AA_MIN_SUPPORT = 2
-
 
 @register(
     "x_link_adamic",
@@ -569,7 +567,7 @@ _AA_MIN_SUPPORT = 2
     e AS MATERIALIZED (
       SELECT a.pk AS u, b.pk AS v
       FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-      GROUP BY 1, 2 HAVING count(*) >= {_AA_MIN_SUPPORT}),
+      GROUP BY 1, 2 HAVING count(*) >= {AFFINITY_MIN_SUPPORT}),
     sym AS (SELECT u AS node, v AS nbr FROM e
             UNION ALL SELECT v AS node, u AS nbr FROM e),
     deg AS (SELECT node, count(*) AS d FROM sym GROUP BY node),
@@ -598,8 +596,8 @@ def x_link_adamic(spark: SparkSession, sf: str) -> DataFrame:
     triangles/k-core = "locally dense", AA = "what's missing".
 
     Two stacked hub guards make this 100 TB-shaped (docstrings on the
-    operators): the support threshold (copurchase_affinity, min_support
-    = {_AA_MIN_SUPPORT}) prunes incidental co-occurrence so the graph
+    operators): the support threshold (copurchase_affinity,
+    AFFINITY_MIN_SUPPORT = 2) prunes incidental co-occurrence so the graph
     stays assortment-sized (~3.5k edges at BOTH tested SFs), and AA's
     own 1/ln(deg) weighting is the statistical reason hub-heavy wedges
     were never worth enumerating.  Wedge total on the affinity graph:
@@ -610,7 +608,7 @@ def x_link_adamic(spark: SparkSession, sf: str) -> DataFrame:
     ln/sum order cannot flip the cut (registry.py float rules).
     """
     li = table(spark, sf, "lineitem")
-    edges = stored(copurchase_affinity(li, min_support=_AA_MIN_SUPPORT))
+    edges = stored(copurchase_affinity(li))
     scored = adamic_adar(edges.select("u", "v"))
     return (
         scored.select(

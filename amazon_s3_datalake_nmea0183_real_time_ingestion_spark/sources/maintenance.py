@@ -1046,7 +1046,7 @@ def pipeline_maintenance(spark: SparkSession, stage_path: str, declared: StructT
     Glue crawler (``cron(0 4 * * ? *)``, cdk_datalake_mvp_stack.py:320-335):
     LOG (never apply) schema drift on the stage zone.  Readers scan the
     stage zone by path, so there is no catalog table whose partitions
-    need recovering: ``recovered_tables`` stays empty.
+    need recovering.
 
     Like the crawler, it runs beside the stream on its own schedule, never
     inside a micro-batch.  The data monitors (``stage_quality_report``,
@@ -1055,12 +1055,11 @@ def pipeline_maintenance(spark: SparkSession, stage_path: str, declared: StructT
     schedule.
 
     Returns ``{"drift": [(column, declared, observed, status), ...],
-    "drift_status_counts": {...}, "recovered_tables": [...]}`` — a plain
-    dict, no Spark objects.
+    "drift_status_counts": {...}}`` — a plain dict, no Spark objects.
     """
     import os as _os
 
-    report: dict = {"drift": [], "drift_status_counts": {}, "recovered_tables": []}
+    report: dict = {"drift": [], "drift_status_counts": {}}
     if _os.path.isdir(stage_path):
         drift = schema_drift_report(spark, stage_path, declared)
         rows = [
@@ -1073,33 +1072,6 @@ def pipeline_maintenance(spark: SparkSession, stage_path: str, declared: StructT
             counts[status] = counts.get(status, 0) + 1
         report["drift_status_counts"] = counts
     return report
-
-
-def analyze_tables(spark: SparkSession, tables: list[str],
-                   columns: dict[str, list[str]] | None = None) -> dict[str, str]:
-    """A20+ maintenance: compute catalog statistics so the cost-based
-    optimizer has real cardinalities — table-level row/size stats plus
-    optional per-column min/max/NDV histograms (``columns[table]``).
-
-    At 100 TB this is what makes Catalyst's CBO join reordering and
-    broadcast decisions correct: without ANALYZE, Spark falls back to
-    file-size estimates that ignore selectivity.  Run it after large
-    loads/compactions, like the reference's nightly crawler cadence
-    (cdk_datalake_mvp_stack.py:325).
-
-    Returns {table: catalog statistics string} for report/assertion.
-    """
-    out: dict[str, str] = {}
-    for t in tables:
-        spark.sql(f"ANALYZE TABLE {t} COMPUTE STATISTICS")
-        cols = (columns or {}).get(t)
-        if cols:
-            col_list = ", ".join(cols)
-            spark.sql(f"ANALYZE TABLE {t} COMPUTE STATISTICS FOR COLUMNS {col_list}")
-        desc = spark.sql(f"DESCRIBE TABLE EXTENDED {t}").collect()
-        stats = [r["data_type"] for r in desc if r["col_name"] == "Statistics"]
-        out[t] = stats[0] if stats else ""
-    return out
 
 
 def stage_quality_report(spark: SparkSession, stage_path: str) -> dict[str, int]:

@@ -10,11 +10,9 @@ from .pipeline import (  # noqa: F401
     start_streams,
     stream_route,
 )
-from .joins import sensor_with_recent_soh  # noqa: F401
 from .stateful import (  # noqa: F401
     battery_transitions,
     streaming_dedup,
     streaming_sessions,
-    streaming_windowed_counts,
     with_event_ts,
 )

@@ -34,10 +34,12 @@ so each micro-batch emits one file per event-day instead of
 files × tasks), rolling a day over to a new file only when that day's
 rows would overflow one ~64 MB file (``STAGE_ROWS_PER_FILE``).
 
-Catalog maintenance (the reference's nightly Glue crawler,
+The crawler pass (the reference's nightly Glue crawler,
 cdk_datalake_mvp_stack.py:320-335) is NOT part of the batch: callers run
-``sources.maintenance.pipeline_maintenance`` and the ``*_monitor_report``
-functions on their own schedule, next to the running stream.
+``sources.maintenance.pipeline_maintenance`` (schema-drift log only;
+readers scan the stage zone by path, so no catalog partitions need
+recovering) and the ``*_monitor_report`` functions on their own
+schedule, next to the running stream.
 
 Delivery semantics: the checkpoint guarantees each batch is processed
 once under normal operation (no reprocessing across restarts, see
@@ -248,8 +250,8 @@ def start_pipeline(
 
     Each batch runs :func:`process_batch` and nothing else.  The
     reference's nightly crawler (cdk_datalake_mvp_stack.py:320-335) is a
-    separate job here too: call ``pipeline_maintenance`` (schema-drift LOG
-    report + partition recovery) and any ``*_monitor_report`` from
+    separate job here too: call ``pipeline_maintenance`` (the schema-drift
+    LOG report) and any ``*_monitor_report`` from
     ``sources.maintenance`` on the caller's own schedule.
 
     ``geo_dim`` lets callers running SEVERAL pipeline instances (see

@@ -1,60 +1,13 @@
-"""Spherical k-means (operators/clustering.py): full Lloyd loop on
-synthetic directional blobs + the broadcast plan shape each iteration
-relies on."""
+"""Spherical k-means (operators/clustering.py): the broadcast plan shape
+each assignment step relies on."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.clustering import (
-    kmeans,
     kmeans_assign,
     seed_centroids,
 )
 from conftest import plan_of
-
-
-def _blob_rows():
-    # three well-separated directions in R^4; ids 0,1,2 are one member of
-    # each blob so seed_centroids(k=3) starts with one seed per blob.
-    dirs = {0: [1.0, 0.0, 0.0, 0.0], 1: [0.0, 1.0, 0.0, 0.0], 2: [0.0, 0.0, 1.0, 0.0]}
-    rows = []
-    vid = 0
-    for blob in range(3):
-        for j in range(8):
-            eps = 0.01 * (j + 1)
-            vec = [x + eps * ((i + blob) % 3 == 0) for i, x in enumerate(dirs[blob])]
-            rows.append((vid if j == 0 else 3 + blob * 8 + j, blob, vec))
-            vid += 1
-    # re-id: first member of blob b gets id b, the rest get unique ids >= 3
-    fixed = []
-    seen_first = set()
-    next_id = 3
-    for _, blob, vec in rows:
-        if blob not in seen_first:
-            fixed.append((blob, blob, vec))
-            seen_first.add(blob)
-        else:
-            fixed.append((next_id, blob, vec))
-            next_id += 1
-    return fixed
-
-
-def test_kmeans_recovers_blobs(spark):
-    rows = _blob_rows()
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, _, v in rows],
-        "vec_id bigint, embedding array<float>",
-    )
-    got = {r["vec_id"]: r["cluster"] for r in kmeans(df, k=3, max_iters=5).collect()}
-    truth = {i: blob for i, blob, _ in rows}
-    # cluster labels are centroid ids — map each cluster to its majority blob
-    by_cluster: dict[int, set[int]] = {}
-    for vid, cl in got.items():
-        by_cluster.setdefault(cl, set()).add(truth[vid])
-    assert len(by_cluster) == 3
-    for blobs in by_cluster.values():
-        assert len(blobs) == 1  # no cluster mixes blobs
 
 
 def test_kmeans_assign_broadcasts_centroids(spark):

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.dedup_ledger import (
     admit_near_new_documents,
     admit_new_documents,
-    start_dedup_stream,
     start_near_dedup_stream,
 )
 
@@ -48,42 +47,6 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     entries = spark.read.parquet(ledger)
     assert entries.count() == 2
     assert entries.groupBy("fp").count().filter(F.col("count") > 1).count() == 0
-
-
-def test_streaming_admission(spark, tmp_path):
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    with open(landing / "b0.json", "w") as f:
-        for i, t in [(1, "doc one"), (2, "doc two"), (3, "doc one")]:
-            f.write(json.dumps({"doc_id": i, "text": t}) + "\n")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(landing))
-    )
-    q = start_dedup_stream(
-        stream,
-        str(tmp_path / "ledger"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(180)
-    out = spark.read.parquet(str(tmp_path / "out"))
-    assert sorted(r["doc_id"] for r in out.collect()) == [1, 2]
-
-    # second file arrives: one repeat of an old doc + one genuinely new
-    with open(landing / "b1.json", "w") as f:
-        for i, t in [(4, "doc two"), (5, "doc three")]:
-            f.write(json.dumps({"doc_id": i, "text": t}) + "\n")
-    q2 = start_dedup_stream(
-        stream,
-        str(tmp_path / "ledger"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-    )
-    q2.awaitTermination(180)
-    out2 = spark.read.parquet(str(tmp_path / "out"))
-    assert sorted(r["doc_id"] for r in out2.collect()) == [1, 2, 5]
 
 
 LONG = ("the quick brown fox jumps over the lazy dog while seven wizards "

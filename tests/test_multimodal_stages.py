@@ -1,74 +1,22 @@
-"""Multimodal pipeline stages (SURVEY.md §2 C5): frame sampling and
-resize over opaque binary payloads — the Spark-side plumbing (schemas,
-Arrow batching, one-to-many fan-out) with deterministic byte-level fakes
-standing in for codec work."""
+"""Multimodal pipeline stages (SURVEY.md §2 C5): the dependency-free
+WAV / BMP / PPM codecs round-trip byte-exactly, and the Arrow-batched
+decode stage reads them back in Spark."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.multimodal import (
     build_codec_assets,
     decode_asset,
     decode_bmp,
     decode_codec_features,
-    decode_image,
     decode_ppm,
     decode_wav,
     encode_bmp_gray,
     encode_ppm_gray,
     encode_wav_pcm16,
-    resize_assets,
-    sample_frames,
 )
-
-
-@pytest.fixture(scope="module")
-def assets(spark):
-    rows = [
-        (1, "video", bytes(range(256)) * 2),   # 512 B → 8 frames of 64
-        (2, "video", b"tiny"),                 # < one frame
-        (3, "image", bytes(range(100, 200))),  # 100 B → 2 frames
-    ]
-    return spark.createDataFrame(
-        rows, "asset_id long, modality string, payload binary"
-    )
-
-
-def test_sample_frames_one_to_many(assets):
-    out = sample_frames(assets).collect()
-    by_asset = {}
-    for r in out:
-        by_asset.setdefault(r["asset_id"], []).append(r)
-    # 512 B → 8 frames, sampled at 0,4
-    a1 = sorted(by_asset[1], key=lambda r: r["frame_idx"])
-    assert [r["frame_idx"] for r in a1] == [0, 4]
-    assert all(r["n_frames"] == 8 for r in a1)
-    assert a1[0]["frame"] == bytes(range(64))
-    # tiny payload → exactly one frame containing everything
-    (a2,) = by_asset[2]
-    assert (a2["frame_idx"], a2["n_frames"], bytes(a2["frame"])) == (0, 1, b"tiny")
-    # 100 B → 2 frames, every 4th → only frame 0
-    (a3,) = by_asset[3]
-    assert a3["n_frames"] == 2 and a3["frame_idx"] == 0
-
-
-def test_resize_assets_exact_target(assets):
-    out = {r["asset_id"]: r for r in resize_assets(assets, target_bytes=32).collect()}
-    assert out[1]["n_bytes"] == 32 and len(out[1]["payload"]) == 32
-    # stride sampling keeps first byte
-    assert out[1]["payload"][0] == 0
-    # short payloads pass through untouched
-    assert bytes(out[2]["payload"]) == b"tiny" and out[2]["n_bytes"] == 4
-    assert out[1]["modality"] == "video"
-
-
-def test_resize_is_deterministic(assets):
-    a = resize_assets(assets, target_bytes=32).orderBy("asset_id").collect()
-    b = resize_assets(assets, target_bytes=32).orderBy("asset_id").collect()
-    assert [bytes(r["payload"]) for r in a] == [bytes(r["payload"]) for r in b]
-
 
 VALUES = [0, 1, 17, 128, 200, 255, 3]  # odd length exercises RIFF padding
 
@@ -109,12 +57,6 @@ def test_decode_asset_dispatch_and_errors():
         decode_asset(encode_bmp_gray(VALUES)[:-3])
     with pytest.raises(ValueError):       # truncated data chunk
         decode_asset(encode_wav_pcm16(VALUES)[:-1])
-
-
-def test_decode_image_rejects_audio():
-    assert decode_image(encode_ppm_gray([7]))["container"] == "ppm"
-    with pytest.raises(ValueError):
-        decode_image(encode_wav_pcm16([7]))
 
 
 def test_codec_assets_spark_roundtrip(spark):

@@ -5,8 +5,10 @@ A parameter nobody sets is a second home for a value that already lives
 in the function body (or in one module constant).  The scan reads every
 call site in the repository and flags a defaulted parameter of a
 module-level or nested package function (methods and dunders are out of
-scope) when each call site either omits it, passes its default literal,
-or forwards a same-default parameter of a caller that is flagged too."""
+scope) when each call site either omits it, passes its default value,
+or forwards a same-default parameter of a caller that is flagged too.
+Values are compared, not spellings: a default or an argument written as
+an UPPER_CASE module constant counts as the constant's literal value."""
 
 from __future__ import annotations
 
@@ -23,6 +25,47 @@ def _sources():
         yield from sorted((ROOT / extra).glob("*.py"))
     yield ROOT / "bench.py"
     yield ROOT / "__spark_entry__.py"
+
+
+_UNRESOLVED = object()
+
+
+def _same(a, b):
+    return type(a) is type(b) and a == b
+
+
+def _constants(trees):
+    """{name: literal value} of the UPPER_CASE module-level constants of
+    the scanned files whose every definition assigns the same literal."""
+    seen = {}
+    for tree in trees:
+        for stmt in tree.body:
+            if not (isinstance(stmt, ast.Assign) and len(stmt.targets) == 1):
+                continue
+            name = getattr(stmt.targets[0], "id", "")
+            if not name.lstrip("_").isupper():
+                continue
+            try:
+                value = ast.literal_eval(stmt.value)
+            except ValueError:
+                value = _UNRESOLVED
+            seen.setdefault(name, []).append(value)
+    return {
+        name: first
+        for name, (first, *rest) in seen.items()
+        if first is not _UNRESOLVED and all(_same(v, first) for v in rest)
+    }
+
+
+def _value(node, constants):
+    """The literal value of an argument or default (a module constant
+    resolves to its value), or its AST shape when it has none."""
+    if isinstance(node, ast.Name) and node.id in constants:
+        return constants[node.id]
+    try:
+        return ast.literal_eval(node)
+    except ValueError:
+        return ast.dump(node)
 
 
 def _parents(tree):
@@ -85,12 +128,13 @@ def unset_options():
     """Sorted ``module:function.parameter`` names of package parameters
     that every call site leaves at their default."""
     parsed = {path: ast.parse(path.read_text(), str(path)) for path in _sources()}
+    constants = _constants(parsed.values())
 
     # A call resolves by bare name only, so two package functions that
     # share a name share their call sites (conservative).
     functions = {}  # name -> [(key prefix, positional, defaults)]
     prefix_of = {}  # def node -> key prefix
-    candidates = {}  # parameter key -> ast.dump(default)
+    candidates = {}  # parameter key -> default value
     for path, tree in parsed.items():
         if PACKAGE not in path.parents:
             continue
@@ -105,7 +149,7 @@ def unset_options():
             prefix = prefix_of[fn] = f"{module}:{fn.name}"
             functions.setdefault(fn.name, []).append((prefix, positional, defaults))
             for name, default in defaults.items():
-                candidates[f"{prefix}.{name}"] = ast.dump(default)
+                candidates[f"{prefix}.{name}"] = _value(default, constants)
 
     blocked, forwards = set(), []  # forwards: (callee key, caller key)
     for tree in parsed.values():
@@ -123,15 +167,15 @@ def unset_options():
                 bound, unknown = _bind(call, positional, defaults)
                 for pname in defaults:
                     key = f"{prefix}.{pname}"
-                    value = bound.get(pname)
+                    value, default = bound.get(pname), candidates[key]
                     if pname in unknown:
                         blocked.add(key)
-                    elif value is None or ast.dump(value) == candidates[key]:
+                    elif value is None or _same(_value(value, constants), default):
                         continue
                     elif (
                         isinstance(value, ast.Name)
                         and value.id in caller_defaults
-                        and ast.dump(caller_defaults[value.id]) == candidates[key]
+                        and _same(_value(caller_defaults[value.id], constants), default)
                         and caller in prefix_of
                         and not _rebinds(caller, value.id)
                     ):

@@ -131,50 +131,6 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_bucketed_geocode_fallback_no_broadcast_one_fact_exchange(spark):
-    """Too-big-to-broadcast geo dimension (VERDICT r3 'Next round' #7):
-    the bucketed dim joins with NO BroadcastExchange and NO dim-side
-    shuffle; the only Exchange in the plan is the fact side's explicit
-    co-partitioning repartition.  Results must equal the broadcast path."""
-    import shutil
-
-    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.geocode import (
-        build_geo_dim,
-        enrich_geocode,
-        enrich_geocode_bucketed,
-        write_bucketed_geo_dim,
-    )
-
-    spark.sql("DROP TABLE IF EXISTS t_geo_dim_bucketed")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(f"{warehouse}/t_geo_dim_bucketed", ignore_errors=True)
-
-    dim = build_geo_dim(spark)
-    write_bucketed_geo_dim(dim, "t_geo_dim_bucketed", n_buckets=8)
-
-    fact = spark.range(500).select(
-        F.col("id").alias("rid"),
-        ((F.col("id") % 360) - 180 + 0.5).cast("double").alias("longitude"),
-        ((F.col("id") % 180) - 90 + 0.5).cast("double").alias("latitude"),
-    )
-    # no explicit n_buckets: the count must come from the catalog
-    enriched = enrich_geocode_bucketed(fact, spark, "t_geo_dim_bucketed")
-    plan = plan_of(enriched)
-    assert "BroadcastExchange" not in plan
-    assert "SortMergeJoin" in plan
-    # exactly ONE shuffle: the fact-side co-partitioning; the dim side's
-    # bucketing satisfies the join distribution with zero movement
-    import re
-
-    exchanges = re.findall(r"\(\d+\) Exchange", plan)
-    assert len(exchanges) == 1, plan
-
-    # semantics identical to the broadcast path
-    expected = enrich_geocode(fact, dim).orderBy("rid").collect()
-    got = enriched.orderBy("rid").collect()
-    assert [r.asDict() for r in got] == [r.asDict() for r in expected]
-
-
 def test_schema_drift_report_logs_not_applies(spark, tmp_path):
     """A20 crawler parity: drift is reported (added/missing/type_changed)
     while the declared schema stays authoritative."""
@@ -320,35 +276,6 @@ def test_sim_lsh_stays_jvm_side(spark, queries):
     plan = plan_of(queries["x_sim_lsh"](spark, SF))
     assert "BatchEvalPython" not in plan   # whole pipeline in expressions
     assert "SortMergeJoin" not in plan     # query side broadcast
-
-
-def test_analyze_tables_feeds_cbo(spark, tmp_path):
-    """ANALYZE TABLE populates catalog stats (rows + bytes), the input the
-    cost-based optimizer needs for join reordering at scale."""
-    import shutil
-
-    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
-        analyze_tables,
-    )
-
-    spark.sql("DROP TABLE IF EXISTS t_stats_demo")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(f"{warehouse}/t_stats_demo", ignore_errors=True)
-    spark.read.parquet(f"{SF}/nation.parquet").write.saveAsTable("t_stats_demo")
-    try:
-        stats = analyze_tables(
-            spark, ["t_stats_demo"], {"t_stats_demo": ["n_nationkey", "n_name"]}
-        )
-        assert "25 rows" in stats["t_stats_demo"]
-        # column-level stats landed too (NDV for the key column)
-        desc = spark.sql(
-            "DESCRIBE EXTENDED t_stats_demo n_nationkey"
-        ).collect()
-        kv = {r["info_name"]: r["info_value"] for r in desc}
-        assert kv.get("distinct_count") == "25"
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_stats_demo")
-        shutil.rmtree(f"{warehouse}/t_stats_demo", ignore_errors=True)
 
 
 def test_round2_map_side_ops_shuffle_free(spark, queries):
@@ -1599,7 +1526,6 @@ def test_broadcast_threshold_is_honoured(spark, queries):
 # a measured A/B, or a layout pin; the comment at each site names the
 # bound or the measurement.
 _HINT_ALLOWLIST = {
-    ("operators/geocode.py", "enrich_geocode_bucketed"),  # bucketed-layout merge pin
     ("operators/curation.py", "decontaminate"),  # eval-set shingles
     ("operators/dedup.py", "decontaminate_near"),  # eval-set bands and shingles
     ("operators/graph.py", "weighted_edges"),  # shuffle_hash, measured

@@ -490,46 +490,6 @@ def test_2level_no_vector_dropped_with_duplicate_centroids(spark):
         assert out.count() == 200, fn.__name__
 
 
-def test_semantic_cell_report_flags_only_overfull_cells(spark):
-    """The cell census (the guard's production monitor) reports every
-    cell's size and marks exactly the cells the max_cell cap excludes —
-    the dropped-cell fraction is the recall-bug alarm."""
-    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.similarity import (
-        assign_to_centroids,
-        semantic_cell_report,
-    )
-
-    dim, k = 8, 8
-    cents = spark.createDataFrame(
-        [(c, [1.0 if i == c else 0.0 for i in range(dim)]) for c in range(k)],
-        "centroid_id int, centroid array<double>",
-    )
-    # 40 vectors per cell organically, plus 200 copies landing in cell 0
-    base = spark.range(320).select(
-        F.col("id").alias("vec_id"),
-        F.array(
-            *[
-                F.when(F.lit(i) == F.col("id") % k, F.lit(10.0)).otherwise(F.lit(0.0))
-                for i in range(dim)
-            ]
-        ).alias("embedding"),
-    )
-    viral = spark.range(200).select(
-        (F.col("id") + 1_000_000).alias("vec_id"),
-        F.array(*[F.lit(10.0 if i == 0 else 0.0) for i in range(dim)]).alias("embedding"),
-    )
-    rep = {
-        r["cluster"]: r
-        for r in semantic_cell_report(
-            assign_to_centroids(base.unionByName(viral), cents), max_cell=150
-        ).collect()
-    }
-    assert len(rep) == k
-    assert rep[0]["cell_size"] == 240 and rep[0]["dropped"] == 1
-    assert all(rep[c]["cell_size"] == 40 and rep[c]["dropped"] == 0
-               for c in range(1, k))
-
-
 def test_2level_empty_centroid_table_matches_flat_empty(spark):
     """ADVICE r6: k=0 made _two_level_probe's seed stride divide by zero
     while the flat path returns an empty frame for the same input — both

@@ -409,18 +409,14 @@ def test_codebook_roundtrip_and_streaming_quantize(spark, tmp_path):
     # streamed codes must equal the batch path bit for bit (re-deriving
     # min/max per batch would drift the code space; the persisted book
     # is the contract).
-    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.quantization import (
-        read_codebook,
-        write_codebook,
-    )
     e = _emb(spark, [(i, [i / 9.0, 1.0 - i / 9.0, 0.25], 0) for i in range(10)])
     src = os.path.join(str(tmp_path), "vecs")
     cb_path = os.path.join(str(tmp_path), "codebook")
     out = os.path.join(str(tmp_path), "out")
     ckpt = os.path.join(str(tmp_path), "ckpt")
     e.write.parquet(src)
-    write_codebook(dim_codebook(e), cb_path)
-    cb = read_codebook(spark, cb_path)
+    dim_codebook(e).write.parquet(cb_path)
+    cb = spark.read.parquet(cb_path)
     stream = spark.readStream.schema(e.schema).parquet(src)
     q = (
         quantize(stream, cb)

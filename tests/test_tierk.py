@@ -121,7 +121,7 @@ def test_affinity_support_threshold(spark):
     )
     got = {
         (r.u, r.v): r.w
-        for r in copurchase_affinity(li, min_support=2).collect()
+        for r in copurchase_affinity(li).collect()
     }
     assert got == {(10, 20): 2}
 
