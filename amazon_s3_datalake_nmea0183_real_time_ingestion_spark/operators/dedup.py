@@ -30,6 +30,10 @@ from ..functions.text import shingles_from_tokens, tokens
 from ..storage import stored
 
 SIMHASH_BITS = 60  # md5_i64 yields 60-bit non-negative hashes
+# SimHash near-dup shape shared by pair-finding and ledger admission: 4
+# bands of 15 bits, and a pair is near-dup at Hamming distance <= 8
+SIMHASH_BANDS = 4
+SIMHASH_MAX_HAMMING = 8
 
 # The MinHash-LSH shape every dedup operator here shares: word 3-gram
 # shingles, 16 permutations cut into 4 bands.
@@ -358,18 +362,17 @@ _SIMHASH_LANES_PER_SUM = 3
 _SIMHASH_LANE_BITS = 21  # per-lane counter width -> ≤2^21 distinct tokens/doc
 
 
-def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """60-bit SimHash per document over its distinct token set — one
-    groupBy with PACKED bit-count aggregates.
+def simhash_signatures(docs: DataFrame) -> DataFrame:
+    """60-bit SimHash per ``doc_id`` over the distinct token set of its
+    ``text`` — one groupBy with PACKED bit-count aggregates.
 
-    Contract (ADVICE r14): ``docs`` must hold ONE row per ``id_col``.
+    Contract (ADVICE r14): ``docs`` must hold ONE row per ``doc_id``.
     The per-row ``array_distinct`` dedups tokens within a row only; a
     duplicated id would have its token multiset summed across rows
     (exact duplicate rows still yield identical signatures, but partial
     duplicates diverge from the old global (id, token) distinct).
     Every in-repo caller passes a one-row-per-doc corpus;
-    ``dropDuplicates([id_col])`` upstream restores the old semantics if
+    ``dropDuplicates(["doc_id"])`` upstream restores the old semantics if
     a future caller cannot guarantee it.
 
     The naive form is 60 parallel sign-sums (±1 per token per bit).  The
@@ -392,9 +395,9 @@ def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     # signature groupBy below is the operator's ONLY exchange (2 → 1;
     # measured −25% on the simhash family at sf0.1, identical bits).
     toks = (
-        docs.select(F.col(id_col), tokens(text_col).alias("__toks"))
-        .select(F.col(id_col), F.explode(F.array_distinct("__toks")).alias("tok"))
-        .select(F.col(id_col), md5_i64(F.col("tok")).alias("h"))
+        docs.select(F.col("doc_id"), tokens("text").alias("__toks"))
+        .select(F.col("doc_id"), F.explode(F.array_distinct("__toks")).alias("tok"))
+        .select(F.col("doc_id"), md5_i64(F.col("tok")).alias("h"))
     )
     lanes, width = _SIMHASH_LANES_PER_SUM, _SIMHASH_LANE_BITS
     n_sums = (SIMHASH_BITS + lanes - 1) // lanes
@@ -410,7 +413,7 @@ def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
             ],
         )
         aggs.append(F.sum(packed).alias(f"__p{s}"))
-    grouped = toks.groupBy(id_col).agg(*aggs)
+    grouped = toks.groupBy("doc_id").agg(*aggs)
     # fail fast at the documented bound — a wrapped lane would silently
     # flip many signature bits; the count is already aggregated, so the
     # assert costs one comparison per document
@@ -419,7 +422,7 @@ def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
             F.col("__n") < F.lit(1 << width),
             F.concat(
                 F.lit("simhash lane overflow: document "),
-                F.col(id_col).cast("string"),
+                F.col("doc_id").cast("string"),
                 F.lit(f" has >= 2^{width} distinct tokens; widen "
                       "_SIMHASH_LANE_BITS"),
             ),
@@ -436,11 +439,10 @@ def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
             .otherwise(F.lit(0).cast("bigint"))
         )
     simhash = reduce(lambda x, y: x + y, bits)
-    return grouped.select(F.col(id_col), simhash.alias("simhash"))
+    return grouped.select(F.col("doc_id"), simhash.alias("simhash"))
 
 
-def simhash_pairs(sigs: DataFrame, n_bands: int = 4,
-                  max_hamming: int = 8,
+def simhash_pairs(sigs: DataFrame, n_bands: int = SIMHASH_BANDS,
                   keep_signatures: bool = False) -> DataFrame:
     """Near-dup pairs by SimHash: band the 60-bit signature into 15-bit
     chunks (exact-match candidate join), verify Hamming distance.
@@ -499,7 +501,7 @@ def simhash_pairs(sigs: DataFrame, n_bands: int = 4,
         a.join(b, ["band_id", "band_val"])
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(first_band)
-        .filter(ham <= max_hamming)
+        .filter(ham <= SIMHASH_MAX_HAMMING)
         .select(*out_cols)
     )
 

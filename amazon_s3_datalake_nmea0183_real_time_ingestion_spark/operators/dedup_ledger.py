@@ -35,8 +35,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import doc_fingerprint
-from ..storage import release_scope, stored
-from .dedup import SIMHASH_BITS, simhash_pairs, simhash_signatures
+from ..storage import stored
+from .dedup import (
+    SIMHASH_BANDS,
+    SIMHASH_BITS,
+    SIMHASH_MAX_HAMMING,
+    simhash_pairs,
+    simhash_signatures,
+)
 
 LEDGER_SCHEMA = "fp string, doc_id bigint, batch_id bigint"
 
@@ -108,11 +114,11 @@ def _read_near_ledger(spark: SparkSession, ledger_path: str) -> DataFrame:
     return spark.createDataFrame([], NEAR_LEDGER_SCHEMA)
 
 
-def _banded(sigs: DataFrame, n_bands: int) -> DataFrame:
+def _banded(sigs: DataFrame) -> DataFrame:
     """Explode a (doc_id, simhash) frame into its LSH band slices — the
     same bit-slice banding as :func:`operators.dedup.simhash_pairs`, so
     ledger admission and within-corpus pair-finding agree on candidates."""
-    chunk = SIMHASH_BITS // n_bands
+    chunk = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << chunk) - 1
     return sigs.select(
         "doc_id",
@@ -123,7 +129,7 @@ def _banded(sigs: DataFrame, n_bands: int) -> DataFrame:
                     F.lit(b).alias("band_id"),
                     F.shiftright("simhash", b * chunk).bitwiseAND(F.lit(mask)).alias("band_val"),
                 )
-                for b in range(n_bands)
+                for b in range(SIMHASH_BANDS)
             ])
         ).alias("bb"),
     ).select("doc_id", "simhash", "bb.band_id", "bb.band_val")
@@ -134,38 +140,31 @@ def admit_near_new_documents(
     batch: DataFrame,
     ledger_path: str,
     batch_id: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_bands: int = 4,
-    max_hamming: int = 8,
 ) -> DataFrame:
-    """Cross-batch NEAR-dup admission: the SimHash-band complement of
-    :func:`admit_new_documents` (which only catches byte-identical text).
+    """Cross-batch NEAR-dup admission of a ``(doc_id, text)`` batch: the
+    SimHash-band complement of :func:`admit_new_documents` (which only
+    catches byte-identical text).
 
     The returned frame reads two ``stored()`` intermediates; a long-lived
-    caller consumes it inside ``storage.release_scope()`` so each batch's
-    blocks are freed (as :func:`start_near_dedup_stream` does).
+    caller (e.g. a ``foreachBatch`` micro-batch) consumes it inside
+    ``storage.release_scope()`` so each batch's blocks are freed.
 
     A batch document is admitted iff
     1. no in-batch document with a SMALLER id is a near-dup of it
-       (band collision + Hamming ≤ ``max_hamming`` — the deterministic
-       one-pass "keep-min" rule; survivors of rule 1 are checked against
-       the ledger regardless of whether their smaller partner survived), and
+       (band collision + Hamming ≤ ``SIMHASH_MAX_HAMMING`` — the
+       deterministic one-pass "keep-min" rule; survivors of rule 1 are
+       checked against the ledger regardless of whether their smaller
+       partner survived), and
     2. no document admitted by ANY prior batch collides in a band within
-       ``max_hamming`` (the ledger stores one (doc_id, simhash, batch_id)
-       row per admitted doc).
+       ``SIMHASH_MAX_HAMMING`` (the ledger stores one (doc_id, simhash,
+       batch_id) row per admitted doc).
 
     Scale design: the ledger row is 24 bytes/doc; admission shuffles
-    signatures (|batch| × n_bands band rows joined against |ledger| ×
-    n_bands), never text.  Replay-safety matches the exact ledger: the
-    check EXCLUDES the replaying batch id's own partition and the write
-    dynamic-overwrites it."""
-    if SIMHASH_BITS % n_bands != 0:
-        raise ValueError(f"n_bands={n_bands} must divide SIMHASH_BITS={SIMHASH_BITS}")
-
-    sigs = simhash_signatures(batch, id_col=id_col, text_col=text_col)
-    if id_col != "doc_id":
-        sigs = sigs.withColumnRenamed(id_col, "doc_id")
+    signatures (|batch| × SIMHASH_BANDS band rows joined against
+    |ledger| × SIMHASH_BANDS), never text.  Replay-safety matches the
+    exact ledger: the check EXCLUDES the replaying batch id's own
+    partition and the write dynamic-overwrites it."""
+    sigs = simhash_signatures(batch)
     # signature computation (tokenize + distinct + 20 packed bit-sums) is
     # the expensive stage and feeds THREE consumers below (the in-batch
     # pair join's two sides via simhash_pairs, and the survivors
@@ -173,7 +172,7 @@ def admit_near_new_documents(
     # expensive to recompute).
     sigs = stored(sigs)
     # rule 1 — drop any doc with a smaller in-batch near-dup partner
-    pairs = simhash_pairs(sigs, n_bands=n_bands, max_hamming=max_hamming)
+    pairs = simhash_pairs(sigs)
     survivors = sigs.join(
         pairs.select(F.col("id_b").alias("doc_id")).distinct(), "doc_id", "left_anti"
     )
@@ -182,13 +181,15 @@ def admit_near_new_documents(
         F.col("batch_id") != F.lit(batch_id)
     )
     hits = (
-        _banded(survivors, n_bands)
+        _banded(survivors)
         .join(
-            _banded(ledger.select("doc_id", "simhash"), n_bands)
+            _banded(ledger.select("doc_id", "simhash"))
             .select("band_id", "band_val", F.col("simhash").alias("led_sh")),
             ["band_id", "band_val"],
         )
-        .filter(F.bit_count(F.col("simhash").bitwiseXOR(F.col("led_sh"))) <= max_hamming)
+        .filter(
+            F.bit_count(F.col("simhash").bitwiseXOR(F.col("led_sh"))) <= SIMHASH_MAX_HAMMING
+        )
         .select("doc_id")
         .distinct()
     )
@@ -212,40 +213,6 @@ def admit_near_new_documents(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return batch.join(
         admitted.select(F.col("doc_id").alias("__keep_id")),
-        F.col(id_col) == F.col("__keep_id"),
+        F.col("doc_id") == F.col("__keep_id"),
         "left_semi",
-    ).dropDuplicates([id_col])
-
-
-def start_near_dedup_stream(
-    stream: DataFrame,
-    ledger_path: str,
-    out_path: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_bands: int = 4,
-    max_hamming: int = 8,
-    available_now: bool = True,
-):
-    """Streaming near-dup admission control (foreachBatch around
-    :func:`admit_near_new_documents`); appends admitted docs to
-    ``out_path``."""
-
-    def _admit(batch: DataFrame, batch_id: int) -> None:
-        # a long stream must not accumulate stored blocks across
-        # micro-batches: the scope frees this batch's on exit
-        with release_scope():
-            admit_near_new_documents(
-                batch.sparkSession, batch, ledger_path, batch_id,
-                id_col=id_col, text_col=text_col,
-                n_bands=n_bands, max_hamming=max_hamming,
-            ).write.mode("append").parquet(out_path)
-
-    writer = stream.writeStream.foreachBatch(_admit).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
+    ).dropDuplicates(["doc_id"])

@@ -8,10 +8,9 @@ Two-phase by design so the same scorer serves batch and streaming:
 - :func:`mad_stats` FITS on a (reference) batch — two group-keyed exact
   medians; the result is one row per group.
 - :func:`flag_outliers` SCORES any frame map-side against those stats
-  (broadcast join) — no shuffle of the scored side.
-- :func:`streaming_mad_scores` applies the same scorer to an unbounded
-  stream (stream-static broadcast join), the fit-offline/score-online
-  split every production anomaly pipeline uses: stats refresh on a batch
+  (broadcast join) — no shuffle of the scored side.  On an unbounded
+  stream that is a stream-static join, the fit-offline/score-online split
+  every production anomaly pipeline uses: stats refresh on a batch
   cadence (e.g. the maintenance cycle), scoring stays per-record cheap.
 
 Scale: exact ``median`` holds one group's values in executor memory —
@@ -55,12 +54,3 @@ def flag_outliers(df: DataFrame, stats: DataFrame, keep_stats: bool = False) -> 
         .withColumn("is_outlier", F.abs(dev) > F.lit(3.0) * scale)
     )
     return out if keep_stats else out.drop("med", "mad")
-
-
-def streaming_mad_scores(stream: DataFrame, stats: DataFrame) -> DataFrame:
-    """Score an unbounded stream against batch-fitted stats (stream-static
-    broadcast join — stateless, append-mode safe).  Re-fit ``stats`` on
-    whatever cadence the reference window demands; Spark re-resolves the
-    static side per micro-batch, so swapping the stats table between
-    triggers takes effect without restarting the query."""
-    return flag_outliers(stream, stats)

@@ -299,7 +299,7 @@ def x_dedup_simhash_rep(spark: SparkSession, sf: str) -> DataFrame:
         F.min("doc_id").alias("doc_id"), F.count("*").alias("n_members")
     )
     pairs = simhash_pairs(
-        clusters.select("doc_id", "simhash"), n_bands=4, max_hamming=8
+        clusters.select("doc_id", "simhash"), n_bands=4
     )
     nbrs = (
         pairs.select(F.col("id_a").alias("doc_id"), "hamming")

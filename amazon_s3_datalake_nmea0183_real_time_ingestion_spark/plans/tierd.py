@@ -1090,7 +1090,8 @@ def x_data_checks(spark: SparkSession, sf: str) -> DataFrame:
     the dimension fits, SMJ beyond); uniqueness is count - count
     distinct in one aggregate; range checks are map-side filters.  All
     checks share one action — a real deployment runs them per-partition
-    on the maintenance schedule, next to pipeline_maintenance.
+    on the maintenance schedule, next to pipeline_maintenance's pass
+    (which runs the stage monitors, stage_quality_report among them).
     """
     cust = table(spark, sf, "customer")
     orders = table(spark, sf, "orders")

@@ -190,8 +190,8 @@ def x_outlier_mad(spark: SparkSession, sf: str) -> DataFrame:
     the drop-in is ``approx_percentile(value, 0.5)`` — the mergeable
     KLL/GK sketch path q_agg_approx_quantile already demonstrates — the
     flag rule is unchanged.  The fit (mad_stats) / score (flag_outliers)
-    split is shared with the streaming scorer
-    (operators/outliers.py::streaming_mad_scores).
+    split also scores a stream: ``flag_outliers`` on a streaming frame
+    is a stream-static join.
     """
     from ..operators.outliers import flag_outliers, mad_stats
 

@@ -8,10 +8,14 @@ exactly that contract. ``compact_partition`` is the at-rest analog of the
 Firehose 64 MB buffer intent: rewrite a partition's many small files into
 few large ones (BASELINE.md "output file sizing").
 
-The ``*_monitor_report`` functions run on the crawler's schedule over
-the stage zone.  Each statistic they report has one implementation, in
-``operators/stats.py``, shared with the registered key it mirrors: a
-monitor builds its recent-vs-history split (``_epoch_day`` days,
+``pipeline_maintenance`` is the crawler pass: it reads the stage zone
+once, logs drift from that read's schema and hands one stored
+projection of it to every stage monitor (``stage_quality_report``,
+``drift_psi_report`` and the ``*_monitor_report`` functions), each of
+which takes the stage frame as its first argument.  Each statistic a
+monitor reports has one implementation, in ``operators/stats.py``,
+shared with the registered key it mirrors: a monitor applies its own
+NULL screen, builds its recent-vs-history split (``_epoch_day`` days,
 ``_recent_window_flag``), calls the core and collects its row(s) into
 a plain dict.
 """
@@ -37,27 +41,29 @@ from ..operators.stats import (
     smoothed_psi,
     sprt,
 )
-from ..storage import stored
+from ..storage import release_scope, stored
 
 # the recent-vs-history monitors compare the last RECENT_DAYS epoch-days
 # with everything before them
 RECENT_DAYS = 7
 Z_CRIT = 1.959964  # two-sided 5 %
+# the stage columns the monitors read: pipeline_maintenance stores this
+# projection of its one stage read and hands it to every monitor
+MONITOR_COLUMNS = (
+    "deviceid", "packetid", "date_time", "battery_voltage",
+    "solar_panel_voltage", "no_messages_sent_since_last_power_cycle",
+)
 
 
-def schema_drift_report(spark: SparkSession, path: str, declared: StructType) -> DataFrame:
-    """Diff the OBSERVED schema of the parquet files at ``path`` against the
+def schema_drift_report(observed: StructType, declared: StructType) -> list[tuple]:
+    """Diff the OBSERVED schema (what the files hold) against the
     DECLARED schema — report, don't apply (crawler LOG behavior).
 
-    Returns one row per column union: ``column, declared_type,
-    observed_type, status`` with status in ``ok | type_changed | added |
-    missing`` (added = in files only; missing = declared only).
-
-    Inference cost note: parquet footer-based inference reads metadata,
-    not data — safe to run as a scheduled job at any scale.
+    Returns one ``(column, declared_type, observed_type, status)`` tuple
+    per column of the union, sorted by column, with status in ``ok |
+    type_changed | added | missing`` (added = in files only; missing =
+    declared only).
     """
-    observed = spark.read.parquet(path).schema
-
     dec = {f.name.lower(): f.dataType.simpleString() for f in declared.fields}
     obs = {f.name.lower(): f.dataType.simpleString() for f in observed.fields}
     rows = []
@@ -72,9 +78,7 @@ def schema_drift_report(spark: SparkSession, path: str, declared: StructType) ->
         else:
             status = "ok"
         rows.append((name, d, o, status))
-    return spark.createDataFrame(
-        rows, "column string, declared_type string, observed_type string, status string"
-    )
+    return rows
 
 
 def compact_partition(spark: SparkSession, table_path: str, partition_expr: str) -> int:
@@ -204,7 +208,7 @@ def _drift_counts(df: DataFrame, columns: dict[str, str]) -> DataFrame:
     return u.groupBy("column", "bucket").agg(F.count("*").alias("n"))
 
 
-def drift_psi_report(spark: SparkSession, stage_path: str, profile_path: str) -> dict:
+def drift_psi_report(stage: DataFrame, profile_path: str) -> dict:
     """Population-stability-index drift of the stage zone against a
     PERSISTED reference profile, per monitored column (bucket
     expressions in ``DRIFT_DEFAULT_COLUMNS``).
@@ -221,11 +225,11 @@ def drift_psi_report(spark: SparkSession, stage_path: str, profile_path: str) ->
     """
     import os as _os
 
-    cur = _drift_counts(spark.read.parquet(stage_path), DRIFT_DEFAULT_COLUMNS)
+    cur = _drift_counts(stage, DRIFT_DEFAULT_COLUMNS)
     if not _os.path.isdir(profile_path):
         cur.write.mode("overwrite").parquet(profile_path)
         return {"bootstrapped": True, "columns": {}}
-    ref = spark.read.parquet(profile_path).select(
+    ref = stage.sparkSession.read.parquet(profile_path).select(
         "column", "bucket", F.col("n").alias("n_ref")
     )
     joined = (
@@ -259,18 +263,19 @@ def drift_psi_report(spark: SparkSession, stage_path: str, profile_path: str) ->
     }
 
 
-def _epoch_day(ts_col: str) -> Column:
-    """UTC epoch-day bucket (floor(epoch/86400)) — a pure integer with NO
-    session-timezone dependency (to_date/from_unixtime renders in the
-    session TZ, so the same stage data produced different day boundaries
-    per deployment TZ — the r8 ADVICE lesson).  ONE definition so every
+def _epoch_day() -> Column:
+    """UTC epoch-day bucket of ``date_time`` (floor(epoch/86400)) — a
+    pure integer with NO session-timezone dependency (to_date/
+    from_unixtime renders in the session TZ, so the same stage data
+    produced different day boundaries per deployment TZ — the r8 ADVICE
+    lesson).  ONE definition so every
     monitor in this module shares identical day boundaries."""
-    return F.floor(F.col(ts_col).cast("bigint") / F.lit(86400)).cast("bigint")
+    return F.floor(F.col("date_time").cast("bigint") / F.lit(86400)).cast("bigint")
 
 
-def _recent_window_flag(v: DataFrame, flag: str, recent_days: int) -> DataFrame:
+def _recent_window_flag(v: DataFrame, flag: str) -> DataFrame:
     """Tag each row of ``v`` (which carries a ``day`` epoch-day column)
-    with 1 = in the last ``recent_days`` days of the observed range,
+    with 1 = in the last ``RECENT_DAYS`` days of the observed range,
     0 = baseline: one 1-row max-day aggregate broadcast-crossJoined in.
     ONE definition so every recent-vs-history monitor shares identical
     window boundaries — the ``_epoch_day`` precedent: a future
@@ -280,13 +285,13 @@ def _recent_window_flag(v: DataFrame, flag: str, recent_days: int) -> DataFrame:
         v.crossJoin(mx)
         .withColumn(
             flag,
-            (F.col("day") > F.col("max_day") - F.lit(recent_days)).cast("int"),
+            (F.col("day") > F.col("max_day") - F.lit(RECENT_DAYS)).cast("int"),
         )
         .drop("max_day")
     )
 
 
-def timeseries_monitor_report(spark: SparkSession, stage_path: str) -> dict:
+def timeseries_monitor_report(stage: DataFrame) -> dict:
     """Per-device CUSUM (a sustained upward shift of the daily mean of
     ``battery_voltage``) and seasonal-naive MASE (is the daily total still
     forecastable) over UTC epoch-day series.
@@ -299,11 +304,11 @@ def timeseries_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     Cores: ``operators/stats.py::cusum`` and ``::mase`` (also
     ``x_cusum_changepoint`` and ``x_forecast_mase``).
     """
-    df = spark.read.parquet(stage_path).filter(
+    df = stage.filter(
         F.col("battery_voltage").isNotNull() & F.col("deviceid").isNotNull()
     )
     d = df.groupBy(
-        F.col("deviceid").alias("k"), _epoch_day("date_time").alias("day")
+        F.col("deviceid").alias("k"), _epoch_day().alias("day")
     ).agg(F.avg("battery_voltage").alias("x"), F.sum("battery_voltage").alias("tot"))
     c = cusum(d, "k").groupBy("k").agg(
         F.count("*").alias("n_days"),
@@ -328,7 +333,7 @@ def timeseries_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     }
 
 
-def sprt_monitor_report(spark: SparkSession, stage_path: str) -> dict:
+def sprt_monitor_report(stage: DataFrame) -> dict:
     """Wald SPRT of H1: P(``battery_voltage < 11.0``) = 0.22 against H0: = 0.18
     (α = β = 0.05)
     over the daily fleet rollup, replayed over the append-only stage
@@ -342,8 +347,8 @@ def sprt_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     """
     # a NULL-timestamp row has no day: unscreened it would form a NULL day
     # that the running sum orders first, adding a day and its trials
-    df = spark.read.parquet(stage_path).filter(F.col("date_time").isNotNull())
-    d = df.groupBy(_epoch_day("date_time").alias("day")).agg(
+    df = stage.filter(F.col("date_time").isNotNull())
+    d = df.groupBy(_epoch_day().alias("day")).agg(
         F.count("*").alias("n"),
         # coalesce per row so an all-NULL day yields k = 0, not a NULL
         # that poisons the cumulative LLR
@@ -375,7 +380,7 @@ def sprt_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     }
 
 
-def mann_whitney_monitor_report(spark: SparkSession, stage_path: str) -> dict:
+def mann_whitney_monitor_report(stage: DataFrame) -> dict:
     """Mann–Whitney rank-sum shift of ``battery_voltage``: the last
     ``RECENT_DAYS`` UTC epoch-days against all prior history ("did the
     distribution shift this week", with no mean/variance assumption).
@@ -390,12 +395,12 @@ def mann_whitney_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     """
     # a NULL-timestamp row belongs to neither window: unscreened it would
     # land in the baseline and shift every later cumulative rank
-    df = spark.read.parquet(stage_path).filter(
+    df = stage.filter(
         F.col("battery_voltage").isNotNull() & F.col("date_time").isNotNull()
     )
-    v = df.select(F.col("battery_voltage").alias("val"), _epoch_day("date_time").alias("day"))
+    v = df.select(F.col("battery_voltage").alias("val"), _epoch_day().alias("day"))
     row = rank_sum(
-        _recent_window_flag(v, "is_recent", RECENT_DAYS), [], "val", "is_recent"
+        _recent_window_flag(v, "is_recent"), [], "val", "is_recent"
     ).selectExpr(
         "n_a", "n_b", "CAST(u2a AS DOUBLE) / 2.0 AS u_a", f"round({MW_Z}, 4) AS z"
     ).first()  # control-plane: one row
@@ -420,7 +425,7 @@ def mann_whitney_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     }
 
 
-def ks_monitor_report(spark: SparkSession, stage_path: str) -> dict:
+def ks_monitor_report(stage: DataFrame) -> dict:
     """Exact two-sample Kolmogorov–Smirnov drift of ``battery_voltage``:
     the last ``RECENT_DAYS`` UTC epoch-days against all prior history at
     α = 0.05.  The
@@ -434,11 +439,11 @@ def ks_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     reads ks_d/crit/at_value None and never fires.
     Core: ``operators/stats.py::ks_test`` (also ``x_ks_test``).
     """
-    df = spark.read.parquet(stage_path).filter(
+    df = stage.filter(
         F.col("battery_voltage").isNotNull() & F.col("date_time").isNotNull()
     )
-    v = df.select(F.col("battery_voltage").alias("val"), _epoch_day("date_time").alias("day"))
-    samples = _recent_window_flag(v, "is_recent", RECENT_DAYS).select(
+    v = df.select(F.col("battery_voltage").alias("val"), _epoch_day().alias("day"))
+    samples = _recent_window_flag(v, "is_recent").select(
         "val",
         F.col("is_recent").alias("c1"),
         (1 - F.col("is_recent")).alias("c2"),
@@ -462,11 +467,7 @@ def ks_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     }
 
 
-def did_monitor_report(
-    spark: SparkSession,
-    stage_path: str,
-    split_day: int | None = None,
-) -> dict:
+def did_monitor_report(stage: DataFrame, split_day: int | None = None) -> dict:
     """2×2 difference-in-differences of ``battery_voltage`` for a rollout
     that hit part of the fleet (``deviceid % 2 = 1``) at UTC epoch-day
     ``split_day`` (None: the midpoint of the observed range): the
@@ -480,13 +481,13 @@ def did_monitor_report(
     Core: ``operators/stats.py::diff_in_diff`` (also ``x_diff_in_diff``).
     """
     # a row whose timestamp or treat predicate is NULL belongs to no cell
-    df = spark.read.parquet(stage_path).filter(
+    df = stage.filter(
         F.col("battery_voltage").isNotNull() & F.col("date_time").isNotNull()
     )
     e = df.select(
         F.expr("deviceid % 2 = 1").cast("int").alias("treat"),
         F.col("battery_voltage").alias("val"),
-        _epoch_day("date_time").alias("day"),
+        _epoch_day().alias("day"),
     ).filter(F.col("treat").isNotNull())
     if split_day is None:
         sp = e.agg(
@@ -498,7 +499,7 @@ def did_monitor_report(
             ).alias("split_d")
         )
     else:
-        sp = spark.range(1).select(
+        sp = stage.sparkSession.range(1).select(
             F.lit(int(split_day)).cast("bigint").alias("split_d")
         )
     cells = e.crossJoin(sp).select(
@@ -527,7 +528,7 @@ def did_monitor_report(
     return result
 
 
-def survival_monitor_report(spark: SparkSession, stage_path: str) -> dict:
+def survival_monitor_report(stage: DataFrame) -> dict:
     """Kaplan–Meier device survival: per device, time from its first
     reading to its first low-battery (``battery_voltage < 11.0``) reading
     in 7-day buckets, RIGHT-CENSORED
@@ -541,10 +542,10 @@ def survival_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     belong to no lifetime; a NULL voltage is not an event.
     Core: ``operators/stats.py::kaplan_meier`` (also ``x_survival``).
     """
-    df = spark.read.parquet(stage_path).filter(
+    df = stage.filter(
         F.col("date_time").isNotNull() & F.col("deviceid").isNotNull()
     )
-    day = _epoch_day("date_time")
+    day = _epoch_day()
     per_dev = (
         df.select(
             F.col("deviceid").alias("dev"),
@@ -584,7 +585,7 @@ def survival_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     }
 
 
-def auc_monitor_report(spark: SparkSession, stage_path: str) -> dict:
+def auc_monitor_report(stage: DataFrame) -> dict:
     """Does a fixed scorer (``solar_panel_voltage``, pinned at 6 dp) still
     rank-discriminate a binary outcome (``battery_voltage < 10.0``)?
     Exact ROC AUC for the last ``RECENT_DAYS`` UTC epoch-days and for all prior
@@ -599,19 +600,18 @@ def auc_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     with no rows or one label class reads auc None and never fires.
     Core: ``operators/stats.py::rank_sum`` + ``AUC`` (also ``x_auc``).
     """
-    df = spark.read.parquet(stage_path)
     score = F.expr("solar_panel_voltage")
     label = F.expr("battery_voltage < 10.0")
     # NULL score/label/ts rows belong to no window and no rank
-    v = df.filter(
+    v = stage.filter(
         score.isNotNull() & label.isNotNull() & F.col("date_time").isNotNull()
     ).select(
         F.round(score, 6).alias("score_r"),
         label.cast("int").alias("label"),
-        _epoch_day("date_time").alias("day"),
+        _epoch_day().alias("day"),
     )
     cells = rank_sum(
-        _recent_window_flag(v, "win", RECENT_DAYS), ["win"], "score_r", "label"
+        _recent_window_flag(v, "win"), ["win"], "score_r", "label"
     ).selectExpr(
         "win", "CAST(nn AS BIGINT) AS n", f"round({AUC}, 6) AS auc"
     ).collect()  # control-plane: <= 2 rows (recent / baseline)
@@ -638,7 +638,7 @@ def auc_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     }
 
 
-def benford_monitor_report(spark: SparkSession, stage_path: str) -> dict:
+def benford_monitor_report(stage: DataFrame) -> dict:
     """Benford first-digit gate on a naturally multiplicative counter
     (``no_messages_sent_since_last_power_cycle``): a firmware bug that
     clamps, fabricates or truncates it drifts from the log-law.  The verdict is Nigrini's MAD of the
@@ -660,7 +660,7 @@ def benford_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     # slight digit-9 undercount, acceptable for a drift gate).
     value = "no_messages_sent_since_last_power_cycle"
     vd = F.col(value).cast("double")
-    df = spark.read.parquet(stage_path).filter(
+    df = stage.filter(
         F.col(value).isNotNull() & ~F.isnan(vd) & (vd >= 1.0) & (vd < 9.0e18)
     )
     rows = benford(df, value).orderBy("digit").collect()  # control-plane: 9 rows
@@ -697,7 +697,7 @@ def benford_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     }
 
 
-def gini_monitor_report(spark: SparkSession, stage_path: str) -> dict:
+def gini_monitor_report(stage: DataFrame) -> dict:
     """Is ingest volume concentrating on few ``deviceid`` values this
     week?  Gini of the per-key row counts for the last ``RECENT_DAYS``
     UTC epoch-days and for all prior history; ``concentrating`` fires
@@ -710,13 +710,12 @@ def gini_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     empty window reads None and never fires.
     Core: ``operators/stats.py::gini`` (also ``x_gini_concentration``).
     """
-    df = spark.read.parquet(stage_path)
     # NULL key/ts rows belong to no device and no window
-    v = df.filter(
+    v = stage.filter(
         F.col("deviceid").isNotNull() & F.col("date_time").isNotNull()
-    ).select(F.col("deviceid").alias("k"), _epoch_day("date_time").alias("day"))
+    ).select(F.col("deviceid").alias("k"), _epoch_day().alias("day"))
     g = (
-        _recent_window_flag(v, "win", RECENT_DAYS)
+        _recent_window_flag(v, "win")
         .groupBy("win", "k")
         .agg(F.count("*").alias("c"))
     )
@@ -743,7 +742,7 @@ def gini_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     }
 
 
-def source_kl_monitor_report(spark: SparkSession, stage_path: str) -> dict:
+def source_kl_monitor_report(stage: DataFrame) -> dict:
     """Did the traffic mix over ``deviceid`` shift this
     week?  KL(p_recent ‖ p_baseline) in nats with +0.5 Laplace counts
     on the union category scaffold, so a category seen in only one
@@ -754,14 +753,13 @@ def source_kl_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     kl None (smoothing alone would fabricate a uniform mix to compare).
     Core: ``operators/stats.py::smoothed_kl`` (also ``x_source_kl``).
     """
-    df = spark.read.parquet(stage_path)
-    v = df.filter(
+    v = stage.filter(
         F.col("deviceid").isNotNull() & F.col("date_time").isNotNull()
-    ).select(F.col("deviceid").alias("cat"), _epoch_day("date_time").alias("day"))
+    ).select(F.col("deviceid").alias("cat"), _epoch_day().alias("day"))
     # one row per category holding both windows' counts (a = recent,
     # t - a = baseline): every category seen in either window has a row
     g = (
-        _recent_window_flag(v, "win", RECENT_DAYS)
+        _recent_window_flag(v, "win")
         .groupBy("cat")
         .agg(F.count("*").alias("t"), F.sum("win").alias("a"))
         .select(
@@ -798,7 +796,7 @@ def source_kl_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     }
 
 
-def heavy_hitters_monitor_report(spark: SparkSession, stage_path: str) -> dict:
+def heavy_hitters_monitor_report(stage: DataFrame) -> dict:
     """Is one ``deviceid`` value swamping recent ingest, and which?  A
     count-min sketch (Cormode & Muthukrishnan '05) over the last
     ``RECENT_DAYS`` UTC epoch-days; its top-10 heavy hitters are
@@ -817,14 +815,13 @@ def heavy_hitters_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     """
     from ..operators.sketches import cms_estimate, cms_from_counts
 
-    df = spark.read.parquet(stage_path)
-    v = df.filter(
+    v = stage.filter(
         F.col("deviceid").isNotNull() & F.col("date_time").isNotNull()
     ).select(
         F.col("deviceid").cast("string").alias("k"),
-        _epoch_day("date_time").alias("day"),
+        _epoch_day().alias("day"),
     )
-    recent = _recent_window_flag(v, "win", RECENT_DAYS).filter(F.col("win") == 1)
+    recent = _recent_window_flag(v, "win").filter(F.col("win") == 1)
     # the fleet-sized count table feeds THREE consumers (sketch build,
     # top-k, totals) across two actions — stored so the corpus
     # scan+count runs once
@@ -867,72 +864,7 @@ def heavy_hitters_monitor_report(spark: SparkSession, stage_path: str) -> dict:
     }
 
 
-def dedup_census_monitor_report(spark: SparkSession, corpus_path: str) -> dict:
-    """Near-duplicate census of one document batch (``corpus_path``):
-    the guarded near-dup path (rare-shingle index with the ``max_df=10``
-    boilerplate screen, exact Jaccard ≥ 0.6, connected
-    components — the ``x_dedup_census`` configuration), then how much
-    of the batch is near-duplicate mass and which template family is
-    largest.  ``flooding`` fires when the share of docs in clusters of
-    size ≥ 2 exceeds 0.2.  It is batch-anchored:
-    cross-batch near-dup state is the dedup ledger's job
-    (``x_dedup_ledger_near``).
-
-    Returns ``{"n_docs": int, "n_clusters": int, "census":
-    [{"cluster_size": int, "n_clusters": int, "n_docs": int}, ...],
-    "dup_mass": float | None, "max_cluster": int | None,
-    "top_template": {"cluster_id": ..., "size": int} | None,
-    "flooding": bool}``, ``census`` ascending by cluster_size.  An
-    empty batch reads empty/None and never fires.
-    Operators: ``operators/dedup.py``.
-    """
-    from ..operators.dedup import connected_components, ngram_jaccard_pairs
-
-    df = spark.read.parquet(corpus_path)
-    corpus = df.filter(
-        F.col("doc_id").isNotNull() & F.col("text").isNotNull()
-    ).select("doc_id", "text")
-    edges = ngram_jaccard_pairs(corpus, max_df=10).select("id_a", "id_b")
-    labels = connected_components(edges, corpus.select("doc_id"))
-    cs = stored(labels.groupBy("cluster_id").agg(F.count("*").alias("sz")))
-    census_rows = (
-        cs.groupBy("sz")
-        .agg(F.count("*").alias("n_clusters"))
-        .orderBy("sz")
-        .collect()
-    )  # control-plane: <= distinct-cluster-sizes rows
-    if not census_rows:
-        return {"n_docs": 0, "n_clusters": 0, "census": [],
-                "dup_mass": None, "max_cluster": None,
-                "top_template": None, "flooding": False}
-    top = cs.orderBy(
-        F.col("sz").desc(), F.col("cluster_id").asc()
-    ).limit(1).collect()[0]  # control-plane: 1 row
-    census = [
-        {"cluster_size": int(r["sz"]), "n_clusters": int(r["n_clusters"]),
-         "n_docs": int(r["sz"]) * int(r["n_clusters"])}
-        for r in census_rows
-    ]
-    n_docs = sum(c["n_docs"] for c in census)
-    dup_docs = sum(c["n_docs"] for c in census if c["cluster_size"] >= 2)
-    dup_mass = round(dup_docs / n_docs, 6)  # census non-empty ⇒ n_docs ≥ 1
-    return {
-        "n_docs": n_docs,
-        "n_clusters": sum(c["n_clusters"] for c in census),
-        "census": census,
-        "dup_mass": dup_mass,
-        "max_cluster": census[-1]["cluster_size"],
-        "top_template": {"cluster_id": top["cluster_id"],
-                         "size": int(top["sz"])},
-        "flooding": dup_mass > 0.2,
-    }
-
-
-def sketch_store_monitor_report(
-    spark: SparkSession,
-    stage_path: str,
-    as_of_day: int | None = None,
-) -> dict:
+def sketch_store_monitor_report(stage: DataFrame, as_of_day: int | None = None) -> dict:
     """Per-day HyperLogLog sketch-store health: for each of the last
     ``RECENT_DAYS`` UTC epoch-days, the day's distinct-``deviceid``
     sketch (``hll_sketch_agg``, lgConfigK 12) against the exact
@@ -957,10 +889,9 @@ def sketch_store_monitor_report(
     ~1.6 % stderr, so 5 % is a 3σ gate).  Built-in ``hll_*`` functions
     (also ``x_active_users_hll``).
     """
-    df = spark.read.parquet(stage_path)
-    v = df.filter(
+    v = stage.filter(
         F.col("deviceid").isNotNull() & F.col("date_time").isNotNull()
-    ).select(F.col("deviceid").alias("k"), _epoch_day("date_time").alias("day"))
+    ).select(F.col("deviceid").alias("k"), _epoch_day().alias("day"))
     if as_of_day is not None:
         # wall-clock anchoring: the window is fixed at the caller's
         # "now", so a trailing ingest gap cannot re-anchor it (docstring)
@@ -969,7 +900,7 @@ def sketch_store_monitor_report(
             & (F.col("day") <= F.lit(as_of_day))
         )
     else:
-        recent = _recent_window_flag(v, "win", RECENT_DAYS).filter(F.col("win") == 1)
+        recent = _recent_window_flag(v, "win").filter(F.col("win") == 1)
     # the calendar-sized daily sketch table feeds two actions (per-day
     # readout, union readout) — stored so the corpus-sized sketch build
     # runs once (the union-exact and age-bounds aggregates below are
@@ -981,7 +912,7 @@ def sketch_store_monitor_report(
     ))
     per_day = daily.select(
         "day", "exact", F.hll_sketch_estimate("sk").alias("est")
-    ).orderBy("day").collect()  # control-plane: <= recent_days rows
+    ).orderBy("day").collect()  # control-plane: <= RECENT_DAYS rows
     if not per_day:
         empty = {"days": [], "n_days": 0, "missing_days": 0,
                  "union_exact": 0, "union_est": 0, "union_ok": None,
@@ -1041,40 +972,7 @@ def sketch_store_monitor_report(
     }
 
 
-def pipeline_maintenance(spark: SparkSession, stage_path: str, declared: StructType) -> dict:
-    """One crawler pass — the in-engine analog of the reference's nightly
-    Glue crawler (``cron(0 4 * * ? *)``, cdk_datalake_mvp_stack.py:320-335):
-    LOG (never apply) schema drift on the stage zone.  Readers scan the
-    stage zone by path, so there is no catalog table whose partitions
-    need recovering.
-
-    Like the crawler, it runs beside the stream on its own schedule, never
-    inside a micro-batch.  The data monitors (``stage_quality_report``,
-    ``drift_psi_report``, ``timeseries_monitor_report`` and the other
-    ``*_monitor_report`` functions) are separate calls on the same
-    schedule.
-
-    Returns ``{"drift": [(column, declared, observed, status), ...],
-    "drift_status_counts": {...}}`` — a plain dict, no Spark objects.
-    """
-    import os as _os
-
-    report: dict = {"drift": [], "drift_status_counts": {}}
-    if _os.path.isdir(stage_path):
-        drift = schema_drift_report(spark, stage_path, declared)
-        rows = [
-            (r["column"], r["declared_type"], r["observed_type"], r["status"])
-            for r in drift.collect()
-        ]
-        report["drift"] = rows
-        counts: dict[str, int] = {}
-        for _, _, _, status in rows:
-            counts[status] = counts.get(status, 0) + 1
-        report["drift_status_counts"] = counts
-    return report
-
-
-def stage_quality_report(spark: SparkSession, stage_path: str) -> dict[str, int]:
+def stage_quality_report(stage: DataFrame) -> dict[str, int]:
     """Data-quality gate over the stage zone (the per-partition analog of
     the x_data_checks lake gate): key-field null counts, battery-voltage
     domain range, and duplicate delivery detection — ALL computed in one
@@ -1084,8 +982,7 @@ def stage_quality_report(spark: SparkSession, stage_path: str) -> dict[str, int]
     Returns ``{check_name: violation_count}`` (plain dict, like
     pipeline_maintenance's report).
     """
-    df = spark.read.parquet(stage_path)
-    row = df.agg(
+    row = stage.agg(
         F.count(F.when(F.col("deviceid").isNull(), 1)).alias("null_deviceid"),
         F.count(F.when(F.col("date_time").isNull(), 1)).alias("null_date_time"),
         F.count(
@@ -1104,3 +1001,56 @@ def stage_quality_report(spark: SparkSession, stage_path: str) -> dict[str, int]
         ).alias("duplicate_deliveries"),
     ).first()
     return {k: int(row[k]) for k in row.asDict()}
+
+
+def pipeline_maintenance(spark: SparkSession, stage_path: str, declared: StructType) -> dict:
+    """One crawler pass — the in-engine analog of the reference's nightly
+    Glue crawler (``cron(0 4 * * ? *)``, cdk_datalake_mvp_stack.py:320-335).
+    Like the crawler, it runs beside the stream on its own schedule, never
+    inside a micro-batch.  Readers scan the stage zone by path, so there
+    is no catalog table whose partitions need recovering.
+
+    The pass reads the stage zone once.  That read's schema is the
+    observed side of the LOG-only (never applied) drift report, so the
+    pass sees what the files hold now.  A ``MONITOR_COLUMNS`` projection
+    of it is stored once and handed to every stage monitor; its blocks
+    are freed before the pass returns.  The PSI reference profile lives
+    at ``<lake>/maintenance/drift_profile``, beside ``stage/``.
+
+    Returns ``{"drift": [(column, declared, observed, status), ...],
+    "drift_status_counts": {...}, "monitors": {name: report}}``, where
+    ``name`` is the monitor's function name without its
+    ``_monitor_report`` / ``_report`` suffix — a plain dict, no Spark
+    objects.  A stage zone that does not exist yet reports nothing.
+    """
+    import os as _os
+    from collections import Counter
+
+    report: dict = {"drift": [], "drift_status_counts": {}, "monitors": {}}
+    if not _os.path.isdir(stage_path):
+        return report
+    df = spark.read.parquet(stage_path)
+    report["drift"] = schema_drift_report(df.schema, declared)
+    report["drift_status_counts"] = dict(Counter(r[3] for r in report["drift"]))
+    lake = _os.path.dirname(stage_path.rstrip("/"))
+    with release_scope():
+        stage = stored(df.select(*MONITOR_COLUMNS))
+        report["monitors"] = {
+            "stage_quality": stage_quality_report(stage),
+            "drift_psi": drift_psi_report(
+                stage, _os.path.join(lake, "maintenance", "drift_profile")
+            ),
+            "timeseries": timeseries_monitor_report(stage),
+            "sprt": sprt_monitor_report(stage),
+            "mann_whitney": mann_whitney_monitor_report(stage),
+            "ks": ks_monitor_report(stage),
+            "did": did_monitor_report(stage),
+            "survival": survival_monitor_report(stage),
+            "auc": auc_monitor_report(stage),
+            "benford": benford_monitor_report(stage),
+            "gini": gini_monitor_report(stage),
+            "source_kl": source_kl_monitor_report(stage),
+            "heavy_hitters": heavy_hitters_monitor_report(stage),
+            "sketch_store": sketch_store_monitor_report(stage),
+        }
+    return report

@@ -8,7 +8,7 @@ later read of the same file in that session passes that schema to the
 reader and runs no job.  The memo is keyed by the file's identity (real
 path, size, mtime), so a file rewritten in place is inferred again.  It
 holds the raw file schema; the ``events`` timestamp normalisation runs
-after every read.  The crawler (``maintenance.schema_drift_report``) does
+after every read.  The crawler (``maintenance.pipeline_maintenance``) does
 not read through here: its job is to re-read file schemas.
 """
 

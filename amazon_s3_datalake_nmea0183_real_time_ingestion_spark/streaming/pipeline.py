@@ -36,10 +36,10 @@ rows would overflow one ~64 MB file (``STAGE_ROWS_PER_FILE``).
 
 The crawler pass (the reference's nightly Glue crawler,
 cdk_datalake_mvp_stack.py:320-335) is NOT part of the batch: callers run
-``sources.maintenance.pipeline_maintenance`` (schema-drift log only;
-readers scan the stage zone by path, so no catalog partitions need
-recovering) and the ``*_monitor_report`` functions on their own
-schedule, next to the running stream.
+``sources.maintenance.pipeline_maintenance`` on their own schedule, next
+to the running stream.  One pass reads the stage zone once, logs schema
+drift and runs every stage monitor (readers scan the stage zone by
+path, so no catalog partitions need recovering).
 
 Delivery semantics: the checkpoint guarantees each batch is processed
 once under normal operation (no reprocessing across restarts, see
@@ -250,9 +250,9 @@ def start_pipeline(
 
     Each batch runs :func:`process_batch` and nothing else.  The
     reference's nightly crawler (cdk_datalake_mvp_stack.py:320-335) is a
-    separate job here too: call ``pipeline_maintenance`` (the schema-drift
-    LOG report) and any ``*_monitor_report`` from
-    ``sources.maintenance`` on the caller's own schedule.
+    separate job here too: call ``sources.maintenance.pipeline_maintenance``
+    on the caller's own schedule; one pass logs schema drift and runs
+    every stage monitor.
 
     ``geo_dim`` lets callers running SEVERAL pipeline instances (see
     ``start_streams``) share one geocode dimension instead of rebuilding

@@ -1,17 +1,14 @@
 """Incremental corpus-admission dedup against the persistent fingerprint
-ledger: cross-batch rejection, within-batch canonical pick, replay
-idempotency, and the streaming foreachBatch wrapper."""
+ledger: cross-batch rejection, within-batch canonical pick and replay
+idempotency."""
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import functions as F
 
 from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.dedup_ledger import (
     admit_near_new_documents,
     admit_new_documents,
-    start_near_dedup_stream,
 )
 
 
@@ -82,42 +79,6 @@ def test_near_admission_within_batch_keep_min_and_replay(spark, tmp_path):
     assert sorted(r["doc_id"] for r in out_replay.collect()) == [7]
     entries = spark.read.parquet(ledger)
     assert entries.count() == 1
-
-
-def test_streaming_near_admission(spark, tmp_path):
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    with open(landing / "b0.json", "w") as f:
-        f.write(json.dumps({"doc_id": 1, "text": LONG}) + "\n")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(landing))
-    )
-    q = start_near_dedup_stream(
-        stream,
-        str(tmp_path / "ledger"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(180)
-    out = spark.read.parquet(str(tmp_path / "out"))
-    assert sorted(r["doc_id"] for r in out.collect()) == [1]
-
-    # near-dup of doc 1 arrives in a LATER micro-batch + a novel doc
-    with open(landing / "b1.json", "w") as f:
-        f.write(json.dumps({"doc_id": 2, "text": LONG + " zz9 qq8"}) + "\n")
-        f.write(json.dumps({"doc_id": 3, "text": "totally new content about "
-                            "broadcast joins and adaptive query execution"}) + "\n")
-    q2 = start_near_dedup_stream(
-        stream,
-        str(tmp_path / "ledger"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-    )
-    q2.awaitTermination(180)
-    out2 = spark.read.parquet(str(tmp_path / "out"))
-    assert sorted(r["doc_id"] for r in out2.collect()) == [1, 3]
 
 
 def test_write_training_shards_ordered_and_bounded(spark, tmp_path):

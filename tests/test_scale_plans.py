@@ -157,8 +157,10 @@ def test_schema_drift_report_logs_not_applies(spark, tmp_path):
         ]
     )
     report = {
-        r["column"]: r["status"]
-        for r in schema_drift_report(spark, path, declared).collect()
+        column: status
+        for column, _, _, status in schema_drift_report(
+            spark.read.parquet(path).schema, declared
+        )
     }
     assert report == {
         "id": "ok",
@@ -462,7 +464,7 @@ def test_stage_quality_report_single_scan(spark, tmp_path):
     spark.createDataFrame(
         rows, "deviceid int, packetid int, date_time int, battery_voltage double"
     ).write.parquet(path)
-    got = stage_quality_report(spark, path)
+    got = stage_quality_report(spark.read.parquet(path))
     assert got == {
         "null_deviceid": 1,
         "null_date_time": 1,
@@ -501,7 +503,7 @@ def test_timeseries_monitor_cusum_and_mase(spark, tmp_path):
     spark.createDataFrame(
         rows, "deviceid int, date_time int, battery_voltage double"
     ).write.parquet(path)
-    got = timeseries_monitor_report(spark, path)
+    got = timeseries_monitor_report(spark.read.parquet(path))
     assert set(got) == {1, 2, 3}
     d1, d2, d3 = got[1], got[2], got[3]
     assert d1["n_days"] == 30
@@ -522,7 +524,7 @@ def test_timeseries_monitor_cusum_and_mase(spark, tmp_path):
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-        assert timeseries_monitor_report(spark, path) == got
+        assert timeseries_monitor_report(spark.read.parquet(path)) == got
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
@@ -554,14 +556,14 @@ def test_sprt_monitor_sticky_across_batches(spark, tmp_path):
 
     # batch 1: 5 days at the null rate 4/20 = 0.20 — no verdict yet
     write_days(0, 5, 20, 4)
-    r1 = sprt_monitor_report(spark, path)
+    r1 = sprt_monitor_report(spark.read.parquet(path))
     assert r1["decision"] == "continue" and r1["decided_day"] is None
     assert r1["n_days"] == 5 and r1["cum_n"] == 100 and r1["cum_k"] == 20
 
     # batch 2: 10 days at 30/100 = 0.30 — LLR climbs ~2.5/day and crosses
     # the upper boundary log(0.95/0.05) ≈ 2.94 within two days
     write_days(5, 10, 100, 30)
-    r2 = sprt_monitor_report(spark, path)
+    r2 = sprt_monitor_report(spark.read.parquet(path))
     assert r2["decision"] == "reject_h0"
     assert r2["decided_day"] is not None
     first_crossing = r2["decided_day"]
@@ -569,7 +571,7 @@ def test_sprt_monitor_sticky_across_batches(spark, tmp_path):
     # batch 3: 26 days at 5/100 = 0.05 — the raw LLR plunges ~3.75/day and
     # ends far BELOW the lower boundary, but the verdict already happened
     write_days(15, 26, 100, 5)
-    r3 = sprt_monitor_report(spark, path)
+    r3 = sprt_monitor_report(spark.read.parquet(path))
     assert r3["llr"] < -2.944  # the un-stopped statistic did cross down …
     assert r3["decision"] == "reject_h0"  # … and the decision is sticky
     assert r3["decided_day"] == first_crossing
@@ -591,7 +593,7 @@ def test_sprt_monitor_skips_null_timestamps(spark, tmp_path):
     spark.createDataFrame(
         rows, "deviceid int, date_time int, battery_voltage double"
     ).write.parquet(path)
-    r = sprt_monitor_report(spark, path)
+    r = sprt_monitor_report(spark.read.parquet(path))
     assert r["n_days"] == 3 and r["cum_n"] == 30 and r["cum_k"] == 6
 
 
@@ -616,7 +618,7 @@ def test_mann_whitney_monitor_detects_recent_shift(spark, tmp_path):
     spark.createDataFrame(
         rows, "deviceid int, date_time int, battery_voltage double"
     ).write.parquet(path)
-    got = mann_whitney_monitor_report(spark, path)
+    got = mann_whitney_monitor_report(spark.read.parquet(path))
     assert got["n_recent"] == 7 * 3 and got["n_baseline"] == 23 * 3
     assert got["shifted"] and got["direction"] == "up" and got["z"] > 0
     # recent values beat every baseline value: U = n_r * n_b exactly
@@ -625,7 +627,7 @@ def test_mann_whitney_monitor_detects_recent_shift(spark, tmp_path):
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-        assert mann_whitney_monitor_report(spark, path) == got
+        assert mann_whitney_monitor_report(spark.read.parquet(path)) == got
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
@@ -635,7 +637,7 @@ def test_mann_whitney_monitor_detects_recent_shift(spark, tmp_path):
         [(1, day0 + d * 86400, 4.2) for d in range(10)],
         "deviceid int, date_time int, battery_voltage double",
     ).write.parquet(flat)
-    fz = mann_whitney_monitor_report(spark, flat)
+    fz = mann_whitney_monitor_report(spark.read.parquet(flat))
     assert fz["z"] is None and not fz["shifted"] and fz["direction"] is None
 
 
@@ -664,7 +666,7 @@ def test_ks_monitor_detects_shape_drift(spark, tmp_path):
     spark.createDataFrame(
         rows, "deviceid int, date_time int, battery_voltage double"
     ).write.parquet(path)
-    got = ks_monitor_report(spark, path)
+    got = ks_monitor_report(spark.read.parquet(path))
     # plain-Python replication of the exact integer supremum
     n1, n2 = len(rec_vals), len(base_vals)
     support = sorted(set(rec_vals) | set(base_vals))
@@ -686,7 +688,7 @@ def test_ks_monitor_detects_shape_drift(spark, tmp_path):
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-        assert ks_monitor_report(spark, path) == got
+        assert ks_monitor_report(spark.read.parquet(path)) == got
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
@@ -696,14 +698,14 @@ def test_ks_monitor_detects_shape_drift(spark, tmp_path):
     spark.createDataFrame(
         dirty, "deviceid int, date_time int, battery_voltage double"
     ).write.parquet(dp)
-    assert ks_monitor_report(spark, dp) == got
+    assert ks_monitor_report(spark.read.parquet(dp)) == got
 
     # partitioning-equivalence: pure function of the rows, not layout
     pp = str(tmp_path / "parts7")
     spark.createDataFrame(
         rows, "deviceid int, date_time int, battery_voltage double"
     ).repartition(7).write.parquet(pp)
-    assert ks_monitor_report(spark, pp) == got
+    assert ks_monitor_report(spark.read.parquet(pp)) == got
 
     # identical distributions on both sides: D = 0, never fires
     same = [(1, day0 + d * 86400 + k * 60, [10.0, 10.1, 10.2][k])
@@ -712,7 +714,7 @@ def test_ks_monitor_detects_shape_drift(spark, tmp_path):
     spark.createDataFrame(
         same, "deviceid int, date_time int, battery_voltage double"
     ).write.parquet(sp)
-    sz = ks_monitor_report(spark, sp)
+    sz = ks_monitor_report(spark.read.parquet(sp))
     assert sz["ks_d"] == 0.0 and not sz["reject"]
 
     # store younger than the window: every row is recent, no baseline
@@ -721,7 +723,7 @@ def test_ks_monitor_detects_shape_drift(spark, tmp_path):
     spark.createDataFrame(
         young, "deviceid int, date_time int, battery_voltage double"
     ).write.parquet(yp)
-    yz = ks_monitor_report(spark, yp)
+    yz = ks_monitor_report(spark.read.parquet(yp))
     assert yz["n_baseline"] == 0 and yz["ks_d"] is None and not yz["reject"]
 
     # empty stage: silent, never fires
@@ -729,7 +731,7 @@ def test_ks_monitor_detects_shape_drift(spark, tmp_path):
     spark.createDataFrame(
         [], "deviceid int, date_time int, battery_voltage double"
     ).write.parquet(ep)
-    ez = ks_monitor_report(spark, ep)
+    ez = ks_monitor_report(spark.read.parquet(ep))
     assert ez == {"n_recent": 0, "n_baseline": 0, "ks_d": None,
                   "crit": None, "reject": False, "at_value": None}
 
@@ -760,7 +762,7 @@ def test_did_monitor_isolates_rollout_effect(spark, tmp_path):
     spark.createDataFrame(
         rows, "deviceid int, date_time int, battery_voltage double"
     ).write.parquet(path)
-    got = did_monitor_report(spark, path, split_day=split)
+    got = did_monitor_report(spark.read.parquet(path), split_day=split)
     assert got["split_day"] == split
     assert got["cells"]["treat_post"]["n"] == 2 * 10 * 3
     assert abs(got["did"] - 5.0) < 0.01 and got["significant"]
@@ -777,7 +779,7 @@ def test_did_monitor_isolates_rollout_effect(spark, tmp_path):
          for d in (1, 2) for i in range(5)],
         "deviceid int, date_time int, battery_voltage double",
     ).write.parquet(late)
-    miss = did_monitor_report(spark, late, split_day=split)
+    miss = did_monitor_report(spark.read.parquet(late), split_day=split)
     assert miss["did"] is None and not miss["significant"]
     assert miss["cells"]["treat_pre"]["n"] == 0
 
@@ -814,7 +816,7 @@ def test_survival_monitor_censors_correctly(spark, tmp_path):
     spark.createDataFrame(
         rows, "deviceid int, date_time int, battery_voltage double"
     ).write.parquet(path)
-    got = survival_monitor_report(spark, path)
+    got = survival_monitor_report(spark.read.parquet(path))
     assert got["n_devices"] == 6
     assert got["n_events"] == 4 and got["n_censored"] == 2
     assert [p["n_risk"] for p in got["km_curve"]] == [6, 5, 4, 2]
@@ -829,7 +831,7 @@ def test_survival_monitor_censors_correctly(spark, tmp_path):
         [(d, day0 + i * 86400, 12.6) for d in (1, 2) for i in range(9)],
         "deviceid int, date_time int, battery_voltage double",
     ).write.parquet(healthy)
-    h = survival_monitor_report(spark, healthy)
+    h = survival_monitor_report(spark.read.parquet(healthy))
     assert h["n_events"] == 0 and h["median_survival_days"] is None
     assert all(p["km"] == 1.0 for p in h["km_curve"])
 
@@ -866,10 +868,10 @@ def test_monitors_screen_null_timestamps_and_null_treat(spark, tmp_path):
     spark.createDataFrame(clean, schema).write.parquet(cp)
     spark.createDataFrame(dirty_mw, schema).write.parquet(mp)
     spark.createDataFrame(dirty_did, schema).write.parquet(dp)
-    assert mann_whitney_monitor_report(spark, mp) == \
-        mann_whitney_monitor_report(spark, cp)
-    assert did_monitor_report(spark, dp, split_day=split) == \
-        did_monitor_report(spark, cp, split_day=split)
+    assert mann_whitney_monitor_report(spark.read.parquet(mp)) == \
+        mann_whitney_monitor_report(spark.read.parquet(cp))
+    assert did_monitor_report(spark.read.parquet(dp), split_day=split) == \
+        did_monitor_report(spark.read.parquet(cp), split_day=split)
 
     # all-post + NULL-day rows: the shape that used to KeyError (phantom
     # cells pushing len(cells) past the guard) — must return did=None
@@ -878,7 +880,7 @@ def test_monitors_screen_null_timestamps_and_null_treat(spark, tmp_path):
     crashy += [(1, None, 5.0), (2, None, 6.0)]
     kp = str(tmp_path / "crashy")
     spark.createDataFrame(crashy, schema).write.parquet(kp)
-    kc = did_monitor_report(spark, kp, split_day=split)
+    kc = did_monitor_report(spark.read.parquet(kp), split_day=split)
     assert kc["did"] is None and not kc["significant"]
 
 
@@ -910,7 +912,7 @@ def test_auc_monitor_detects_discrimination_loss(spark, tmp_path):
               "battery_voltage double")
     path = str(tmp_path / "stage")
     spark.createDataFrame(rows, schema).write.parquet(path)
-    got = auc_monitor_report(spark, path)
+    got = auc_monitor_report(spark.read.parquet(path))
     assert got["n_recent"] == 7 * 4 and got["n_baseline"] == 23 * 4
     assert got["auc_baseline"] == 0.0 and got["auc_recent"] == 0.5
     assert got["delta_discrimination"] == -1.0 and got["degraded"]
@@ -918,7 +920,7 @@ def test_auc_monitor_detects_discrimination_loss(spark, tmp_path):
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-        assert auc_monitor_report(spark, path) == got
+        assert auc_monitor_report(spark.read.parquet(path)) == got
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
@@ -927,14 +929,14 @@ def test_auc_monitor_detects_discrimination_loss(spark, tmp_path):
                     (1, day0, 3.0, None)]
     dp = str(tmp_path / "dirty")
     spark.createDataFrame(dirty, schema).write.parquet(dp)
-    assert auc_monitor_report(spark, dp) == got
+    assert auc_monitor_report(spark.read.parquet(dp)) == got
 
     # single-class window: every reading healthy → both windows lack a
     # positive, auc None on both sides, no verdict
     flat = [(1, day0 + d * 86400, 5.0, 12.6) for d in range(10)]
     fp = str(tmp_path / "flat")
     spark.createDataFrame(flat, schema).write.parquet(fp)
-    fz = auc_monitor_report(spark, fp)
+    fz = auc_monitor_report(spark.read.parquet(fp))
     assert fz["auc_recent"] is None and fz["auc_baseline"] is None
     assert fz["delta_discrimination"] is None and not fz["degraded"]
 
@@ -962,7 +964,7 @@ def test_benford_monitor_flags_fabricated_counter(spark, tmp_path):
               "no_messages_sent_since_last_power_cycle int")
     path = str(tmp_path / "stage")
     spark.createDataFrame(rows, schema).write.parquet(path)
-    got = benford_monitor_report(spark, path)
+    got = benford_monitor_report(spark.read.parquet(path))
     assert got["n_total"] == 1000
     assert got["digits"][1]["n"] == per_digit[1]
     assert got["mad"] is not None and got["mad"] <= 0.006
@@ -971,7 +973,7 @@ def test_benford_monitor_flags_fabricated_counter(spark, tmp_path):
     fab = [(1, d * 100 + 7) for d in range(1, 10) for _ in range(100)]
     fp = str(tmp_path / "fab")
     spark.createDataFrame(fab, schema).write.parquet(fp)
-    bad = benford_monitor_report(spark, fp)
+    bad = benford_monitor_report(spark.read.parquet(fp))
     assert bad["n_total"] == 900
     assert abs(bad["mad"] - 0.059716) < 1e-4
     assert bad["mad_verdict"] == "nonconforming"
@@ -981,7 +983,7 @@ def test_benford_monitor_flags_fabricated_counter(spark, tmp_path):
     tiny = [(1, 123)] * 50
     tp = str(tmp_path / "tiny")
     spark.createDataFrame(tiny, schema).write.parquet(tp)
-    tz = benford_monitor_report(spark, tp)
+    tz = benford_monitor_report(spark.read.parquet(tp))
     assert tz["n_total"] == 50
     assert tz["mad"] is None and tz["conforming"] is None
 
@@ -996,7 +998,7 @@ def test_benford_monitor_flags_fabricated_counter(spark, tmp_path):
     spark.createDataFrame(
         dbl, "deviceid int, no_messages_sent_since_last_power_cycle double"
     ).write.parquet(dp2)
-    dz = benford_monitor_report(spark, dp2)
+    dz = benford_monitor_report(spark.read.parquet(dp2))
     assert dz["n_total"] == 9 * 112 and dz["mad_verdict"] == "nonconforming"
 
 
@@ -1028,7 +1030,7 @@ def test_gini_monitor_detects_ingest_concentration(spark, tmp_path):
     schema = "deviceid int, date_time int"
     path = str(tmp_path / "stage")
     spark.createDataFrame(rows, schema).write.parquet(path)
-    got = gini_monitor_report(spark, path)
+    got = gini_monitor_report(spark.read.parquet(path))
     assert got["n_recent"] == 700 and got["n_baseline"] == 23 * 20
     assert got["k_recent"] == 4 and got["k_baseline"] == 4
     assert got["gini_baseline"] == 0.0 and got["gini_recent"] == 0.72
@@ -1037,7 +1039,7 @@ def test_gini_monitor_detects_ingest_concentration(spark, tmp_path):
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-        assert gini_monitor_report(spark, path) == got
+        assert gini_monitor_report(spark.read.parquet(path)) == got
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
@@ -1045,19 +1047,19 @@ def test_gini_monitor_detects_ingest_concentration(spark, tmp_path):
     dirty = rows + [(None, day0), (1, None)]
     dp = str(tmp_path / "dirty")
     spark.createDataFrame(dirty, schema).write.parquet(dp)
-    assert gini_monitor_report(spark, dp) == got
+    assert gini_monitor_report(spark.read.parquet(dp)) == got
 
     # partitioning-equivalence: the report is a pure function of the
     # rows, not of the stage zone's file layout
     pp = str(tmp_path / "parts7")
     spark.createDataFrame(rows, schema).repartition(7).write.parquet(pp)
-    assert gini_monitor_report(spark, pp) == got
+    assert gini_monitor_report(spark.read.parquet(pp)) == got
 
     # all rows inside the recent window: baseline side None, no verdict
     recent_only = [(d, day0 + k) for d in (1, 2) for k in range(3)]
     rp = str(tmp_path / "recent_only")
     spark.createDataFrame(recent_only, schema).write.parquet(rp)
-    rz = gini_monitor_report(spark, rp)
+    rz = gini_monitor_report(spark.read.parquet(rp))
     assert rz["n_baseline"] == 0 and rz["gini_baseline"] is None
     assert rz["delta"] is None and not rz["concentrating"]
 
@@ -1089,7 +1091,7 @@ def test_source_kl_monitor_flags_category_mix_shift(spark, tmp_path):
     schema = "deviceid int, date_time int"
     path = str(tmp_path / "stage")
     spark.createDataFrame(rows, schema).write.parquet(path)
-    got = source_kl_monitor_report(spark, path)
+    got = source_kl_monitor_report(spark.read.parquet(path))
     assert got["n_recent"] == 700 and got["n_baseline"] == 2300
     assert got["k_categories"] == 4
     assert got["kl_nats"] is not None and got["kl_nats"] > 1.0
@@ -1098,7 +1100,7 @@ def test_source_kl_monitor_flags_category_mix_shift(spark, tmp_path):
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-        assert source_kl_monitor_report(spark, path) == got
+        assert source_kl_monitor_report(spark.read.parquet(path)) == got
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
@@ -1106,13 +1108,13 @@ def test_source_kl_monitor_flags_category_mix_shift(spark, tmp_path):
     dirty = rows + [(None, day0), (1, None)]
     dp = str(tmp_path / "dirty")
     spark.createDataFrame(dirty, schema).write.parquet(dp)
-    assert source_kl_monitor_report(spark, dp) == got
+    assert source_kl_monitor_report(spark.read.parquet(dp)) == got
 
     # partitioning-equivalence: the report is a pure function of the
     # rows, not of the stage zone's file layout
     pp = str(tmp_path / "parts7")
     spark.createDataFrame(rows, schema).repartition(7).write.parquet(pp)
-    assert source_kl_monitor_report(spark, pp) == got
+    assert source_kl_monitor_report(spark.read.parquet(pp)) == got
 
     # no-shift control: identical mix both windows → near-zero KL
     flat = []
@@ -1121,7 +1123,7 @@ def test_source_kl_monitor_flags_category_mix_shift(spark, tmp_path):
         flat += [(dev, ts + k) for dev in (1, 2, 3, 4) for k in range(25)]
     fp = str(tmp_path / "flat")
     spark.createDataFrame(flat, schema).write.parquet(fp)
-    fz = source_kl_monitor_report(spark, fp)
+    fz = source_kl_monitor_report(spark.read.parquet(fp))
     assert fz["kl_nats"] is not None and abs(fz["kl_nats"]) < 0.01
     assert not fz["shifted"]
 
@@ -1129,7 +1131,7 @@ def test_source_kl_monitor_flags_category_mix_shift(spark, tmp_path):
     recent_only = [(d, day0 + k) for d in (1, 2) for k in range(3)]
     rp = str(tmp_path / "recent_only")
     spark.createDataFrame(recent_only, schema).write.parquet(rp)
-    rz = source_kl_monitor_report(spark, rp)
+    rz = source_kl_monitor_report(spark.read.parquet(rp))
     assert rz["n_baseline"] == 0 and rz["kl_nats"] is None
     assert not rz["shifted"]
 
@@ -1162,7 +1164,7 @@ def test_heavy_hitters_monitor_names_flooding_key(spark, tmp_path):
     schema = "deviceid int, date_time int"
     path = str(tmp_path / "stage")
     spark.createDataFrame(rows, schema).write.parquet(path)
-    got = heavy_hitters_monitor_report(spark, path)
+    got = heavy_hitters_monitor_report(spark.read.parquet(path))
     assert got["n_recent"] == 700 and got["k_distinct_recent"] == 4
     assert got["top"][0]["key"] == "1"
     assert got["top"][0]["exact_n"] == 679
@@ -1175,7 +1177,7 @@ def test_heavy_hitters_monitor_names_flooding_key(spark, tmp_path):
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-        assert heavy_hitters_monitor_report(spark, path) == got
+        assert heavy_hitters_monitor_report(spark.read.parquet(path)) == got
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
@@ -1183,12 +1185,12 @@ def test_heavy_hitters_monitor_names_flooding_key(spark, tmp_path):
     dirty = rows + [(None, day0 + 29 * 86400), (1, None)]
     dp = str(tmp_path / "dirty")
     spark.createDataFrame(dirty, schema).write.parquet(dp)
-    assert heavy_hitters_monitor_report(spark, dp) == got
+    assert heavy_hitters_monitor_report(spark.read.parquet(dp)) == got
 
     # partitioning-equivalence: pure function of the rows, not layout
     pp = str(tmp_path / "parts7")
     spark.createDataFrame(rows, schema).repartition(7).write.parquet(pp)
-    assert heavy_hitters_monitor_report(spark, pp) == got
+    assert heavy_hitters_monitor_report(spark.read.parquet(pp)) == got
 
     # uniform control: top share 1/4 — no flood
     flat = []
@@ -1197,83 +1199,17 @@ def test_heavy_hitters_monitor_names_flooding_key(spark, tmp_path):
         flat += [(dev, ts + k) for dev in (1, 2, 3, 4) for k in range(25)]
     fp = str(tmp_path / "flat")
     spark.createDataFrame(flat, schema).write.parquet(fp)
-    fz = heavy_hitters_monitor_report(spark, fp)
+    fz = heavy_hitters_monitor_report(spark.read.parquet(fp))
     assert fz["top_share"] == 0.25 and not fz["flooding"]
     assert fz["cms_sound"]
 
     # empty stage: empty/None, never fires
     ep = str(tmp_path / "empty")
     spark.createDataFrame([], schema).write.parquet(ep)
-    ez = heavy_hitters_monitor_report(spark, ep)
+    ez = heavy_hitters_monitor_report(spark.read.parquet(ep))
     assert ez == {"n_recent": 0, "k_distinct_recent": 0, "top": [],
                   "top_share": None, "flooding": False, "cms_sound": None,
                   "max_overcount": None}
-
-
-def test_dedup_census_monitor_localizes_template_flood(spark, tmp_path):
-    """The maintenance-cadence near-dup census monitor (streaming twin
-    of x_dedup_census, r14 — the VERDICT r13 #6 echo): a batch with a
-    6-copy template family, one organic 0.6-Jaccard near-pair, and 12
-    distinct singletons must census as {1:12, 2:1, 6:1}, read
-    dup_mass = 8/20, name the template cluster's min-id representative,
-    and fire the flood verdict; an all-distinct batch reads dup_mass 0
-    and stays quiet; NULL id/text rows are screened; the report is
-    partitioning-invariant; an empty batch reads empty/None."""
-    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
-        dedup_census_monitor_report,
-    )
-
-    template = "free prize click here now winner claim today"
-    rows = [(100 + i, template) for i in range(6)]
-    rows += [(200, "alpha beta gamma delta epsilon zeta"),
-             (201, "alpha beta gamma delta epsilon eta")]  # J = 3/5 = 0.6
-    rows += [(300 + i, f"organic{i} document{i} body{i} text{i} unique{i}")
-             for i in range(12)]
-    path = str(tmp_path / "batch")
-    spark.createDataFrame(rows, "doc_id int, text string").write.parquet(path)
-    got = dedup_census_monitor_report(spark, path)
-    assert got["census"] == [
-        {"cluster_size": 1, "n_clusters": 12, "n_docs": 12},
-        {"cluster_size": 2, "n_clusters": 1, "n_docs": 2},
-        {"cluster_size": 6, "n_clusters": 1, "n_docs": 6},
-    ]
-    assert got["n_docs"] == 20 and got["n_clusters"] == 14
-    assert got["dup_mass"] == 0.4 and got["max_cluster"] == 6
-    assert got["top_template"] == {"cluster_id": 100, "size": 6}
-    assert got["flooding"]
-
-    # NULL id/text rows belong to no census — report unchanged
-    dirty = rows + [(None, template), (999, None)]
-    dp = str(tmp_path / "dirty")
-    spark.createDataFrame(dirty, "doc_id int, text string").write.parquet(dp)
-    assert dedup_census_monitor_report(spark, dp) == got
-
-    # partitioning-equivalence: pure function of the rows, not layout
-    pp = str(tmp_path / "parts7")
-    spark.createDataFrame(rows, "doc_id int, text string").repartition(
-        7
-    ).write.parquet(pp)
-    assert dedup_census_monitor_report(spark, pp) == got
-
-    # an all-distinct batch: every doc a singleton, no flood
-    solo = [(i, f"alone{i} words{i} here{i} only{i} once{i}")
-            for i in range(5)]
-    sp = str(tmp_path / "solo")
-    spark.createDataFrame(solo, "doc_id int, text string").write.parquet(sp)
-    sz = dedup_census_monitor_report(spark, sp)
-    assert sz["census"] == [
-        {"cluster_size": 1, "n_clusters": 5, "n_docs": 5}
-    ]
-    assert sz["dup_mass"] == 0.0 and not sz["flooding"]
-    assert sz["top_template"]["size"] == 1
-
-    # empty batch: silent, never fires
-    ep = str(tmp_path / "empty")
-    spark.createDataFrame([], "doc_id int, text string").write.parquet(ep)
-    assert dedup_census_monitor_report(spark, ep) == {
-        "n_docs": 0, "n_clusters": 0, "census": [], "dup_mass": None,
-        "max_cluster": None, "top_template": None, "flooding": False,
-    }
 
 
 def test_sketch_store_monitor_adjudicates_daily_and_union_hll(spark, tmp_path):
@@ -1307,7 +1243,7 @@ def test_sketch_store_monitor_adjudicates_daily_and_union_hll(spark, tmp_path):
     schema = "deviceid int, date_time int"
     path = str(tmp_path / "stage")
     spark.createDataFrame(rows, schema).write.parquet(path)
-    got = sketch_store_monitor_report(spark, path)
+    got = sketch_store_monitor_report(spark.read.parquet(path))
     assert got["n_days"] == 7 and got["missing_days"] == 0
     assert [d["exact"] for d in got["days"]] == [
         2 + (23 + i) % 4 + 1 for i in range(7)
@@ -1319,7 +1255,7 @@ def test_sketch_store_monitor_adjudicates_daily_and_union_hll(spark, tmp_path):
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-        assert sketch_store_monitor_report(spark, path) == got
+        assert sketch_store_monitor_report(spark.read.parquet(path)) == got
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
@@ -1327,12 +1263,12 @@ def test_sketch_store_monitor_adjudicates_daily_and_union_hll(spark, tmp_path):
     dirty = rows + [(None, day0 + 29 * 86400), (1, None)]
     dp = str(tmp_path / "dirty")
     spark.createDataFrame(dirty, schema).write.parquet(dp)
-    assert sketch_store_monitor_report(spark, dp) == got
+    assert sketch_store_monitor_report(spark.read.parquet(dp)) == got
 
     # partitioning-equivalence: pure function of the rows, not layout
     pp = str(tmp_path / "parts7")
     spark.createDataFrame(rows, schema).repartition(7).write.parquet(pp)
-    assert sketch_store_monitor_report(spark, pp) == got
+    assert sketch_store_monitor_report(spark.read.parquet(pp)) == got
 
     # a silent day INSIDE the window is an ingestion gap, and a LEADING
     # gap counts too (the store is older than the window, so the empty
@@ -1341,21 +1277,21 @@ def test_sketch_store_monitor_adjudicates_daily_and_union_hll(spark, tmp_path):
            if not (day0 + 26 * 86400 <= t < day0 + 27 * 86400)]
     gp = str(tmp_path / "gap")
     spark.createDataFrame(gap, schema).write.parquet(gp)
-    gz = sketch_store_monitor_report(spark, gp)
+    gz = sketch_store_monitor_report(spark.read.parquet(gp))
     assert gz["n_days"] == 6 and gz["missing_days"] == 1
 
     # store younger than the window: 3 days of data, expected clips to 3
     young = [(d, t) for (d, t) in rows if t >= day0 + 27 * 86400]
     yp = str(tmp_path / "young")
     spark.createDataFrame(young, schema).write.parquet(yp)
-    yz = sketch_store_monitor_report(spark, yp)
+    yz = sketch_store_monitor_report(spark.read.parquet(yp))
     assert yz["n_days"] == 3 and yz["missing_days"] == 0
     assert yz["healthy"]
 
     # empty stage: empty/None, never fires
     ep = str(tmp_path / "empty")
     spark.createDataFrame([], schema).write.parquet(ep)
-    ez = sketch_store_monitor_report(spark, ep)
+    ez = sketch_store_monitor_report(spark.read.parquet(ep))
     assert ez == {"days": [], "n_days": 0, "missing_days": 0,
                   "union_exact": 0, "union_est": 0, "union_ok": None,
                   "healthy": None}
@@ -1364,22 +1300,22 @@ def test_sketch_store_monitor_adjudicates_daily_and_union_hll(spark, tmp_path):
     # base+29; "now" two days later = a 2-day trailing stall the
     # data-anchored mode cannot see: 5 present days, 2 missing.
     last_day = day0 // 86400 + 29
-    az = sketch_store_monitor_report(spark, path, as_of_day=last_day + 2)
+    az = sketch_store_monitor_report(spark.read.parquet(path), as_of_day=last_day + 2)
     assert az["n_days"] == 5 and az["missing_days"] == 2
     # anchored exactly at the last observed day == the default window
     assert sketch_store_monitor_report(
-        spark, path, as_of_day=last_day
+        spark.read.parquet(path), as_of_day=last_day
     ) == got
     # complete stall: empty window over a non-empty store surfaces the
     # whole expected span; healthy stays None (nothing to adjudicate),
     # missing_days carries the alarm
-    sz = sketch_store_monitor_report(spark, path, as_of_day=last_day + 30)
+    sz = sketch_store_monitor_report(spark.read.parquet(path), as_of_day=last_day + 30)
     assert sz["n_days"] == 0 and sz["missing_days"] == 7
     assert sz["healthy"] is None
     # an empty STORE stays silent even in wall-clock mode (cannot
     # distinguish "stalled" from "never deployed")
     assert sketch_store_monitor_report(
-        spark, ep, as_of_day=last_day
+        spark.read.parquet(ep), as_of_day=last_day
     ) == ez
 
 

@@ -1,5 +1,5 @@
-"""storage.py: the release scope frees what ``stored()`` kept (iterative
-key and streaming near-dup admission), durable mode through
+"""storage.py: the release scope frees what ``stored()`` kept (an iterative
+key), durable mode through
 ``spark.checkpoint.dir`` gives the same answers, and no other module
 stores frames on its own."""
 
@@ -15,9 +15,6 @@ from pathlib import Path
 from amazon_s3_datalake_nmea0183_real_time_ingestion_spark import storage
 from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.dedup import (
     connected_components,
-)
-from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.dedup_ledger import (
-    start_near_dedup_stream,
 )
 from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.plans import REGISTRY
 from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.storage import release_scope
@@ -41,32 +38,6 @@ def test_release_scope_frees_kcore_blocks_every_build(spark):
         assert _cached_rdds(spark) <= before
         first = rows if first is None else first
         assert rows == first
-
-
-def test_near_dedup_stream_keeps_no_blocks_between_batches(spark, tmp_path):
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    paths = [str(tmp_path / d) for d in ("ledger", "out", "ckpt")]
-    texts = [
-        "the quick brown fox jumps over the lazy dog near the river bank",
-        "a completely different sentence about sketches and streaming joins",
-        "the quick brown fox jumps over the lazy dog near the river bank again",
-    ]
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(landing))
-    )
-    before = _cached_rdds(spark)
-    for i, text in enumerate(texts):
-        with open(landing / f"b{i}.json", "w") as f:
-            f.write(json.dumps({"doc_id": i + 1, "text": text}) + "\n")
-        q = start_near_dedup_stream(stream, *paths)
-        q.awaitTermination(180)
-        assert q.exception() is None
-        assert _cached_rdds(spark) <= before, f"blocks left after batch {i}"
-    admitted = sorted(r.doc_id for r in spark.read.parquet(paths[1]).collect())
-    assert admitted[:2] == [1, 2]
 
 
 _DURABLE_CC = """

@@ -575,17 +575,20 @@ def _land(tmp_path, name: str, rows: list[dict]) -> None:
 
 def test_maintenance_cadence_emits_drift_report(spark, tmp_path):
     """The crawler-cron analog runs beside the stream: after each drain of
-    two landed files, ``pipeline_maintenance`` reports LOG-only schema
-    drift over stage with every column status ok, and the one-scan
-    quality gate counts the duplicate deliveries so far."""
+    two landed files, one ``pipeline_maintenance`` pass reports LOG-only
+    schema drift over stage with every column status ok, and runs all 14
+    stage monitors off its one read.  Each monitor's report equals the
+    monitor called directly on the stage zone (PSI bootstraps its profile
+    on the first pass and scores on the second), the one-scan quality
+    gate counts the duplicate deliveries so far, and the pass leaves no
+    stored blocks behind."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.schemas import (
         STAGE_SCHEMA,
     )
-    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
-        pipeline_maintenance,
-        stage_quality_report,
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources import (
+        maintenance,
     )
 
     declared = StructType(
@@ -593,20 +596,47 @@ def test_maintenance_cadence_emits_drift_report(spark, tmp_path):
         + [StructField(c, IntegerType()) for c in ("year", "month", "day")]
     )
     stage = str(tmp_path / "lake" / "stage")
+    profile = str(tmp_path / "lake" / "maintenance" / "drift_profile")
+    sc = spark.sparkContext
     (tmp_path / "landing").mkdir()
     for n_files in (2, 4):
         for b in range(n_files - 2, n_files):
             _land(tmp_path, f"batch-{b:04d}.json",
                   envelope_rows(n_soh=2, n_sensor=0, n_unknown=0))
         _drain(spark, tmp_path)
-        rep = pipeline_maintenance(spark, stage, declared)
+        cached = set(dict(sc._jsc.getPersistentRDDs()).keys())
+        rep = maintenance.pipeline_maintenance(spark, stage, declared)
+        # the pass frees every block it stored (a subset, not equality:
+        # the drain's own asynchronous unpersist may land during the pass)
+        assert set(dict(sc._jsc.getPersistentRDDs()).keys()) <= cached
         # declared stage schema + y/m/d partition ints — no drift
         assert set(rep["drift_status_counts"]) == {"ok"}
         assert rep["drift_status_counts"]["ok"] == len(rep["drift"])
+        monitors = rep["monitors"]
+        assert set(monitors) == {
+            "stage_quality", "drift_psi", "timeseries", "sprt", "mann_whitney",
+            "ks", "did", "survival", "auc", "benford", "gini", "source_kl",
+            "heavy_hitters", "sketch_store",
+        }
+        df = spark.read.parquet(stage)
+        for name, got in monitors.items():
+            if name == "drift_psi":
+                continue
+            fn = getattr(maintenance, f"{name}_monitor_report", None) or getattr(
+                maintenance, f"{name}_report"
+            )
+            assert got == fn(df), name
+        # PSI: the first pass writes the reference profile, the second
+        # scores the stage zone against it
+        if n_files == 2:
+            assert monitors["drift_psi"] == {"bootstrapped": True, "columns": {}}
+        else:
+            assert monitors["drift_psi"]["bootstrapped"] is False
+            assert monitors["drift_psi"] == maintenance.drift_psi_report(df, profile)
         # the quality gate catches the synthetic files REPLAYING
         # identical envelopes: k files of the same 2 rows leave
         # 2*(k-1) duplicate deliveries in stage
-        assert stage_quality_report(spark, stage) == {
+        assert rep["monitors"]["stage_quality"] == {
             "null_deviceid": 0,
             "null_date_time": 0,
             "battery_out_of_range": 0,
@@ -656,7 +686,7 @@ def test_maintenance_drift_monitor_flags_planted_voltage_shift(spark, tmp_path):
         for b in batches:
             _land(tmp_path, f"batch-{b:04d}.json", envs(b, bv=bv))
         _drain(spark, tmp_path)
-        return drift_psi_report(spark, stage, profile)
+        return drift_psi_report(spark.read.parquet(stage), profile)
 
     # pass 1 froze the healthy-period profile
     assert land_and_report(range(0, 2), 4.2) == {"bootstrapped": True, "columns": {}}
@@ -727,7 +757,7 @@ def test_maintenance_timeseries_monitor_flags_sustained_shift(spark, tmp_path):
         for b in (first, first + 1):
             _land(tmp_path, f"batch-{b:04d}.json", batches[b])
         _drain(spark, tmp_path)
-        reports.append(timeseries_monitor_report(spark, stage))
+        reports.append(timeseries_monitor_report(spark.read.parquet(stage)))
     healthy = reports[0][100]
     assert healthy["n_days"] == 20
     assert healthy["cusum_alarms"] == 0 and not healthy["alarm_latest"]

@@ -23,9 +23,6 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "amazon_s3_datalake_nmea0183_real_time_ingestion_spark"
 
-# The stage monitors run on the crawler's schedule, which no root runs yet.
-_MONITOR = "stage monitor run on the crawler's schedule"
-
 _KEPT_WITHOUT_CALLER = {
     ("functions/vectors.py", "cosine_similarity"):
         "the library form the cosine_sim SQL function is checked against",
@@ -36,18 +33,8 @@ _KEPT_WITHOUT_CALLER = {
     ("operators/dedup_ledger.py", "_read_ledger"): "reads admit_new_documents' ledger",
     ("operators/dedup_ledger.py", "admit_new_documents"):
         "exact-fingerprint admission ledger; its tests pin replay idempotency",
-    ("operators/dedup_ledger.py", "start_near_dedup_stream"):
-        "foreachBatch wrapper of x_dedup_ledger_near's operator; not yet decided",
-    ("operators/layout.py", "file_envelopes"):
-        "per-file layout envelopes the z-order tests measure",
-    ("operators/layout.py", "morton_sql"): "n-dimensional interleave behind zorder_write",
-    ("operators/layout.py", "zorder_key"): "zorder_write's sort key",
-    ("operators/layout.py", "zorder_write"):
-        "the z-order file writer; x_zorder adjudicates only the key",
     ("operators/nmea_position.py", "sensor_positions"):
         "the reference's sensor-branch position parse (hello.py:79-96)",
-    ("operators/outliers.py", "streaming_mad_scores"):
-        "x_outlier_mad's stats applied to a stream; not yet decided",
     ("operators/pq.py", "_decode_col"): "pq_encode's helper",
     ("operators/pq.py", "_encode_col"): "pq_encode's helper",
     ("operators/pq.py", "_nest_codebooks"): "pq_encode's helper",
@@ -62,29 +49,8 @@ _KEPT_WITHOUT_CALLER = {
         "synthetic envelopes (FIXTURES.md) the ingest tests build",
     ("sources/fixtures.py", "envelope_rows"):
         "synthetic envelopes (FIXTURES.md) the ingest tests build",
-    ("sources/maintenance.py", "_drift_counts"): "a stage monitor's helper",
-    ("sources/maintenance.py", "_epoch_day"): "a stage monitor's helper",
-    ("sources/maintenance.py", "_recent_window_flag"): "a stage monitor's helper",
-    ("sources/maintenance.py", "auc_monitor_report"): _MONITOR,
-    ("sources/maintenance.py", "benford_monitor_report"): _MONITOR,
     ("sources/maintenance.py", "compact_partition"):
         "at-rest compaction on the crawler's schedule",
-    ("sources/maintenance.py", "dedup_census_monitor_report"): _MONITOR,
-    ("sources/maintenance.py", "did_monitor_report"): _MONITOR,
-    ("sources/maintenance.py", "drift_psi_report"): _MONITOR,
-    ("sources/maintenance.py", "gini_monitor_report"): _MONITOR,
-    ("sources/maintenance.py", "heavy_hitters_monitor_report"): _MONITOR,
-    ("sources/maintenance.py", "ks_monitor_report"): _MONITOR,
-    ("sources/maintenance.py", "mann_whitney_monitor_report"): _MONITOR,
-    ("sources/maintenance.py", "pipeline_maintenance"):
-        "the crawler pass (the reference's nightly Glue crawler)",
-    ("sources/maintenance.py", "schema_drift_report"): "pipeline_maintenance's drift log",
-    ("sources/maintenance.py", "sketch_store_monitor_report"): _MONITOR,
-    ("sources/maintenance.py", "source_kl_monitor_report"): _MONITOR,
-    ("sources/maintenance.py", "sprt_monitor_report"): _MONITOR,
-    ("sources/maintenance.py", "stage_quality_report"): _MONITOR,
-    ("sources/maintenance.py", "survival_monitor_report"): _MONITOR,
-    ("sources/maintenance.py", "timeseries_monitor_report"): _MONITOR,
     ("streaming/listener.py", "ProgressLogger"):
         "SURVEY's ops-logging row (StreamingQueryListener)",
     ("streaming/pipeline.py", "StreamRoute"): "the reference's POST /{stream-name} route",

@@ -214,7 +214,7 @@ def test_lev_dedup_catches_planted_suffix_edits(spark):
 # -- streaming MAD scoring (fit on batch, score the stream) -----------------
 
 
-def test_streaming_mad_scores_against_batch_stats(spark, tmp_path):
+def test_flag_outliers_scores_stream_against_batch_stats(spark, tmp_path):
     import json as _json
 
     from pyspark.sql.types import (
@@ -226,8 +226,8 @@ def test_streaming_mad_scores_against_batch_stats(spark, tmp_path):
     )
 
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.outliers import (
+        flag_outliers,
         mad_stats,
-        streaming_mad_scores,
     )
 
     # reference batch: med=3, MAD=1 -> outlier cut at |v-3| > 4.4478
@@ -253,7 +253,7 @@ def test_streaming_mad_scores_against_batch_stats(spark, tmp_path):
     ])
     stream = spark.readStream.schema(schema).json(str(landing))
     q = (
-        streaming_mad_scores(stream, stats)
+        flag_outliers(stream, stats)
         .writeStream.format("memory")
         .queryName("mad_out")
         .outputMode("append")

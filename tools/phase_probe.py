@@ -35,7 +35,6 @@ def main() -> int:
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import dedup as D
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.plans import tierc, tiere
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.plans.registry import table
-    from pyspark.sql import functions as F
 
     spark = get_spark("phase-probe")
     spark.sparkContext.setLogLevel("ERROR")
