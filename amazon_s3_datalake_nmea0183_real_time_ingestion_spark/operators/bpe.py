@@ -33,6 +33,9 @@ from pyspark.sql import functions as F
 
 from ..storage import stored
 
+# Merge rounds learned per vocabulary; the x_vocab_bpe oracle replays as many.
+BPE_ROUNDS = 6
+
 
 def chars_of(word: Column) -> Column:
     """Character array of a string attribute column — explicit
@@ -86,10 +89,8 @@ def apply_merge(syms: Column, lhs: str, rhs: str) -> Column:
     )
 
 
-def bpe_learn(
-    spark: SparkSession, words: DataFrame, rounds: int = 6
-) -> tuple[DataFrame, DataFrame]:
-    """Learn ``rounds`` BPE merges from a (word, wn) word-frequency table.
+def bpe_learn(spark: SparkSession, words: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Learn ``BPE_ROUNDS`` BPE merges from a (word, wn) word-frequency table.
 
     Returns ``(merges, rep)``: the merge table (round, lhs, rhs, merged,
     pair_n — built from the per-round 1-row collects, control-plane data)
@@ -106,7 +107,7 @@ def bpe_learn(
         chars_of(F.col("word")).alias("syms"),
     )
     merges: list[tuple[int, str, str, str, int]] = []
-    for r in range(1, rounds + 1):
+    for r in range(1, BPE_ROUNDS + 1):
         top = (
             pair_counts(rep)
             .orderBy(F.col("pair_n").desc(), F.col("lhs").asc(), F.col("rhs").asc())
@@ -115,8 +116,8 @@ def bpe_learn(
         )
         if not top:
             raise RuntimeError(
-                f"BPE pair statistics exhausted at round {r}/{rounds}: "
-                "every word is a single symbol; lower `rounds`."
+                f"BPE pair statistics exhausted at round {r}/{BPE_ROUNDS}: "
+                "every word is a single symbol; lower BPE_ROUNDS."
             )
         b = top[0]
         merges.append((r, b["lhs"], b["rhs"], b["lhs"] + b["rhs"], b["pair_n"]))

@@ -20,21 +20,24 @@ from ..functions.text import shingles_from_tokens, tokens
 # oracle agree on it
 SHUFFLE_SHARDS = 8
 
+# shard count of curriculum_order: the operator and the
+# x_curriculum_shards oracle agree on it
+CURRICULUM_SHARDS = 8
 
-def hash_split(df: DataFrame, id_col: str = "doc_id", salt: str = "split") -> DataFrame:
+
+def hash_split(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministic train/val/test assignment by hash bucket.
 
-    ``bucket = md5("{salt}:{id}") % 100``; train < 90, val < 95, else
+    ``bucket = md5("split:{id}") % 100``; train < 90, val < 95, else
     test.  Hash-based (not random) so the
     split is stable under reruns, re-partitioning, and incremental
-    appends — a new document lands in the same split forever, and the
-    salt gives independent re-splits without touching the data.
+    appends — a new document lands in the same split forever.
 
     Scale: a pure per-row projection — no shuffle, no state, safe at any
     corpus size; whole-stage codegen end to end.
     """
     bucket = (
-        md5_u32(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string"))) % 100
+        md5_u32(F.concat(F.lit("split:"), F.col(id_col).cast("string"))) % 100
     ).cast("int")
     return df.withColumn("bucket", bucket).withColumn(
         "split",
@@ -196,7 +199,7 @@ def global_shuffle(df: DataFrame, salt: str = "shuf") -> DataFrame:
     )
 
 
-def curriculum_order(df: DataFrame, score_col: str, n_shards: int = 8) -> DataFrame:
+def curriculum_order(df: DataFrame, score_col: str) -> DataFrame:
     """Curriculum data ordering, the distributed way: shard assignment is
     a HASH (content-agnostic, stable under appends — same md5 scheme as
     :func:`hash_split`), and the curriculum lives WITHIN each shard as a
@@ -209,14 +212,14 @@ def curriculum_order(df: DataFrame, score_col: str, n_shards: int = 8) -> DataFr
     Scale: the naive formulation — a GLOBAL ntile over score — needs a
     corpus-wide total order (one-task sort in any engine).  Hashed
     shards + per-shard windows keep every step at shard granularity: one
-    keyed shuffle, n_shards-way parallel sorts, no global ordering
+    keyed shuffle, CURRICULUM_SHARDS-way parallel sorts, no global ordering
     anywhere.  Each shard is an unbiased corpus sample (hash
     assignment), so per-shard curricula are statistically equivalent to
     the global one — the same argument as hash-split's.
     """
     shard = (
         md5_u32(F.concat(F.lit("curr:"), F.col("doc_id").cast("string")))
-        % n_shards
+        % CURRICULUM_SHARDS
     ).cast("int")
     w = Window.partitionBy("shard").orderBy(
         F.col(score_col).asc(), F.col("doc_id").asc()
@@ -224,33 +227,6 @@ def curriculum_order(df: DataFrame, score_col: str, n_shards: int = 8) -> DataFr
     return df.withColumn("shard", shard).withColumn(
         "curriculum_pos", F.row_number().over(w)
     )
-
-
-def write_training_shards(df: DataFrame, path: str,
-                          n_shards: int = 8,
-                          max_records_per_file: int | None = None) -> None:
-    """Write the curated corpus as globally-ordered, size-balanced shards —
-    the output shaping a training data-loader wants (deterministic shard
-    membership, sequential reads, bounded file sizes).
-
-    ``repartitionByRange(doc_id)`` samples range boundaries so shards
-    are balanced even under skewed key distributions, and within-shard
-    rows come out sorted (range exchange + local sort), so shard i holds
-    a contiguous ``doc_id`` interval: a loader can map shard -> key
-    range without an index.  ``maxRecordsPerFile`` bounds individual
-    parquet files below object-store/multipart sweet spots.
-
-    Scale: one range exchange over the final corpus — unavoidable for a
-    global order and no worse than any sorted write; at 100 TB set
-    ``n_shards`` so each shard lands ~1 GB (AQE coalesces empty tails).
-    """
-    out = df.repartitionByRange(n_shards, F.col("doc_id")).sortWithinPartitions(
-        "doc_id"
-    )
-    writer = out.write.mode("overwrite")
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(path)
 
 
 def chunk_documents(df: DataFrame, token_col: str = "n_tokens",

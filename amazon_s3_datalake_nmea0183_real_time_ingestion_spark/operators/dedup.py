@@ -40,9 +40,13 @@ SIMHASH_MAX_HAMMING = 8
 SHINGLE_K = 3
 N_PERM = 16
 N_BANDS = 4
-# prefix filtering and its verification must use the same threshold, or
-# the prefix is no longer lossless
-PREFIX_THRESHOLD = 0.6
+# exact n-gram Jaccard near-dup threshold: ngram_jaccard_pairs and the
+# prefix-filter join report the same pairs, and prefix filtering and its
+# verification must use the same threshold, or the prefix is no longer
+# lossless
+JACCARD_THRESHOLD = 0.6
+# containment_pairs keeps pairs with |A∩B| / min(|A|,|B|) at or above this
+CONTAINMENT_THRESHOLD = 0.9
 
 
 def cap_group_width(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
@@ -108,27 +112,28 @@ def shingle_set(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     )
 
 
-def minhash_signatures(shingles: DataFrame, n_perm: int = N_PERM) -> DataFrame:
-    """Wide MinHash signature (mh0..mh{n-1}) per document: one shuffle,
-    n_perm parallel min-aggregates over universal-hash permutations."""
+def minhash_signatures(shingles: DataFrame) -> DataFrame:
+    """Wide MinHash signature (mh0..mh{N_PERM-1}) per document: one
+    shuffle, N_PERM parallel min-aggregates over universal-hash
+    permutations."""
     h = md5_u32(F.col("shingle")) % MERSENNE_P
     hashed = shingles.select(F.col("doc_id"), h.alias("h"))
     aggs = [
         F.min(minhash_permuted(F.col("h"), i)).alias(f"mh{i}")
-        for i in range(n_perm)
+        for i in range(N_PERM)
     ]
     return hashed.groupBy("doc_id").agg(*aggs)
 
 
-def lsh_bands(sigs: DataFrame, n_perm: int = N_PERM) -> DataFrame:
+def lsh_bands(sigs: DataFrame) -> DataFrame:
     """Long-format (doc_id, band_id, band_sig): md5 over each of the
     ``N_BANDS`` bands' comma-joined permutation minima."""
-    if n_perm % N_BANDS != 0:
+    if N_PERM % N_BANDS != 0:
         raise ValueError(
-            f"n_perm={n_perm} must divide evenly into n_bands={N_BANDS}; "
+            f"N_PERM={N_PERM} must divide evenly into N_BANDS={N_BANDS}; "
             "leftover permutations would be computed but silently unused"
         )
-    rows_per_band = n_perm // N_BANDS
+    rows_per_band = N_PERM // N_BANDS
     band_cols = []
     for b in range(N_BANDS):
         parts = [F.col(f"mh{b * rows_per_band + j}").cast("string") for j in range(rows_per_band)]
@@ -216,8 +221,7 @@ def minhash_near_dup(docs: DataFrame, threshold: float = 0.8,
     return jaccard_verify(sh, cands, threshold)
 
 
-def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.6,
-                        max_df: int | None = None) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, max_df: int | None = None) -> DataFrame:
     """Exact all-candidate n-gram Jaccard via inverted-index self-join —
     the exact counterpart MinHash approximates.
 
@@ -227,15 +231,15 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.6,
     self-join's worst bucket at max_df² pairs instead of corpus².
     Scores stay EXACT: intersection counts and set sizes are computed on
     the full shingle sets — the prefilter can only lose pairs whose
-    every shared shingle is boilerplate, which at ``jaccard ≥ threshold``
-    means near-pure-boilerplate docs (drop-eligible anyway).  Default
+    every shared shingle is boilerplate, which at ``jaccard ≥
+    JACCARD_THRESHOLD`` means near-pure-boilerplate docs (drop-eligible anyway).  Default
     ``None`` = exact candidate generation (the oracle-matched mode)."""
     sh = shingle_set(docs)
     j = ngram_pairs_with_sizes(sh, max_df)
     jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
     return (
         j.withColumn("jaccard", F.round(jac, 4))
-        .filter(jac >= threshold)
+        .filter(jac >= JACCARD_THRESHOLD)
         .select("id_a", "id_b", "jaccard")
     )
 
@@ -442,8 +446,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     return grouped.select(F.col("doc_id"), simhash.alias("simhash"))
 
 
-def simhash_pairs(sigs: DataFrame, n_bands: int = SIMHASH_BANDS,
-                  keep_signatures: bool = False) -> DataFrame:
+def simhash_pairs(sigs: DataFrame, keep_signatures: bool = False) -> DataFrame:
     """Near-dup pairs by SimHash: band the 60-bit signature into 15-bit
     chunks (exact-match candidate join), verify Hamming distance.
 
@@ -453,14 +456,14 @@ def simhash_pairs(sigs: DataFrame, n_bands: int = SIMHASH_BANDS,
     bit-slices of the simhash both sides already carry, so the rule is a
     pure map-side expression — every pair survives exactly once and the
     |candidate-pairs|-sized distinct exchange disappears.  The only
-    shuffle left is the (tiny, |docs|×n_bands-row) band join."""
-    if SIMHASH_BITS % n_bands != 0:
+    shuffle left is the (tiny, |docs|×SIMHASH_BANDS-row) band join."""
+    if SIMHASH_BITS % SIMHASH_BANDS != 0:
         raise ValueError(
-            f"n_bands={n_bands} must divide SIMHASH_BITS={SIMHASH_BITS}; "
+            f"SIMHASH_BANDS={SIMHASH_BANDS} must divide SIMHASH_BITS={SIMHASH_BITS}; "
             "a remainder leaves high bits out of every band, silently "
             "missing near-dup pairs that differ only there"
         )
-    chunk = SIMHASH_BITS // n_bands
+    chunk = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << chunk) - 1
 
     def band_slice(sig: Column, b: Column | int) -> Column:
@@ -476,7 +479,7 @@ def simhash_pairs(sigs: DataFrame, n_bands: int = SIMHASH_BANDS,
                     F.lit(b).alias("band_id"),
                     band_slice(F.col("simhash"), b).alias("band_val"),
                 )
-                for b in range(n_bands)
+                for b in range(SIMHASH_BANDS)
             ])
         ).alias("bb"),
     ).select("doc_id", "simhash", "bb.band_id", "bb.band_val")
@@ -488,9 +491,9 @@ def simhash_pairs(sigs: DataFrame, n_bands: int = SIMHASH_BANDS,
         [
             (F.col("band_id") <= earlier)
             | (band_slice(F.col("sh_a"), earlier) != band_slice(F.col("sh_b"), earlier))
-            for earlier in range(n_bands - 1)
+            for earlier in range(SIMHASH_BANDS - 1)
         ],
-        F.lit(True),  # n_bands=1: no earlier bands, every pair unique already
+        F.lit(True),  # one band: no earlier bands, every pair unique already
     )
     out_cols = ["id_a", "id_b", ham.alias("hamming")]
     if keep_signatures:
@@ -863,7 +866,6 @@ def decontaminate_near(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
 
 
 def containment_pairs(docs: DataFrame,
-                      threshold: float = 0.9,
                       max_df: int | None = None,
                       min_size: int | None = None) -> DataFrame:
     """Asymmetric containment dedup: C = |A∩B| / min(|A|,|B|) — the
@@ -874,7 +876,7 @@ def containment_pairs(docs: DataFrame,
     near-dup threshold — so resemblance-based dedup keeps BOTH copies.
 
     Output: (contained_id, container_id, containment, jaccard) for pairs
-    with containment >= threshold; the smaller set is the contained side
+    with containment >= CONTAINMENT_THRESHOLD; the smaller set is the contained side
     (ties: higher id).  Jaccard is reported alongside to make the
     asymmetric catch auditable.
 
@@ -921,7 +923,7 @@ def containment_pairs(docs: DataFrame,
         .otherwise(F.least(F.col("id_a"), F.col("id_b")))
     )
     return (
-        j.filter(cont >= threshold)
+        j.filter(cont >= CONTAINMENT_THRESHOLD)
         .select(
             contained.alias("contained_id"),
             container.alias("container_id"),
@@ -934,7 +936,7 @@ def containment_pairs(docs: DataFrame,
 def jaccard_prefix_pairs(docs: DataFrame) -> DataFrame:
     """Exact set-similarity join via PREFIX FILTERING (Chaudhuri et al.
     ICDE'06 SSJoin; Bayardo et al. WWW'07 All-Pairs; Xiao et al. WWW'08
-    PPJoin): the same (id_a, id_b, jaccard ≥ ``PREFIX_THRESHOLD``) result as
+    PPJoin): the same (id_a, id_b, jaccard ≥ ``JACCARD_THRESHOLD``) result as
     :func:`ngram_jaccard_pairs`, but candidates come only from each
     document's PREFIX — its ``|x| - ceil(t·|x|) + 1`` rarest shingles
     under a global (df asc, shingle asc) ordering — instead of the full
@@ -960,7 +962,7 @@ def jaccard_prefix_pairs(docs: DataFrame) -> DataFrame:
     would shorten the prefix below the lossless minimum."""
     sh = shingle_set(docs)
     cands = prefix_candidate_pairs(sh)
-    return jaccard_verify(sh, cands, PREFIX_THRESHOLD)
+    return jaccard_verify(sh, cands, JACCARD_THRESHOLD)
 
 
 def prefix_candidate_pairs(sh: DataFrame) -> DataFrame:
@@ -1001,7 +1003,7 @@ def prefix_candidate_pairs(sh: DataFrame) -> DataFrame:
     )
     prefix_len = (
         F.col("__sz")
-        - F.ceil(F.lit(PREFIX_THRESHOLD) * F.col("__sz") - F.lit(1e-9))
+        - F.ceil(F.lit(JACCARD_THRESHOLD) * F.col("__sz") - F.lit(1e-9))
         + F.lit(1)
     )
     prefix = tagged.filter(F.col("__pos") <= prefix_len)
@@ -1014,7 +1016,7 @@ def prefix_candidate_pairs(sh: DataFrame) -> DataFrame:
         F.col("__pos").alias("__pb"), F.col("__sz").alias("__sb"),
     )
     alpha = F.ceil(
-        F.lit(PREFIX_THRESHOLD / (1.0 + PREFIX_THRESHOLD))
+        F.lit(JACCARD_THRESHOLD / (1.0 + JACCARD_THRESHOLD))
         * (F.col("__sa") + F.col("__sb"))
         - F.lit(1e-9)
     )
@@ -1023,7 +1025,7 @@ def prefix_candidate_pairs(sh: DataFrame) -> DataFrame:
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(
             F.least("__sa", "__sb")
-            >= F.lit(PREFIX_THRESHOLD) * F.greatest("__sa", "__sb")
+            >= F.lit(JACCARD_THRESHOLD) * F.greatest("__sa", "__sb")
         )
         .filter(
             F.least(

@@ -20,8 +20,7 @@ first deduped in-batch (map-side combine), then LEFT ANTI joined against
 the ledger scan; Spark's runtime bloom-filter join pushes a membership
 filter below the ledger scan when sizes warrant.  The per-batch-id
 partition layout makes replays overwrite themselves (exactly-once per
-batch id, the same dynamic-partition-overwrite idempotency contract as
-sources.maintenance.refresh_rollup), and gives partition pruning on
+batch id, by dynamic partition overwrite), and gives partition pruning on
 re-crawl audits.  On a real lakehouse the ledger would be an
 Iceberg/Delta table MERGEd by fp; plain parquet keeps the container
 dependency-free while the join/overwrite shape is identical.

@@ -28,6 +28,10 @@ from ..storage import stored
 # x_link_adamic oracle agree on it
 AFFINITY_MIN_SUPPORT = 2
 
+# damped rounds of pagerank: the PageRank keys and their unrolled oracle
+# agree on it
+PAGERANK_ROUNDS = 3
+
 
 def copurchase_pairs(li: DataFrame, max_basket: int | None = None,
                      directed: bool = False) -> DataFrame:
@@ -146,13 +150,12 @@ def weighted_edges(edges: DataFrame) -> DataFrame:
 def pagerank(
     edges: DataFrame | None,
     nodes: DataFrame,
-    n_iter: int = 3,
     materialize: bool = True,
     weighted: DataFrame | None = None,
 ) -> DataFrame:
     """``edges`` (src, dst) directed — pass both directions for an
     undirected graph; ``nodes`` (node).  Returns (node, r) after
-    ``n_iter`` rounds of  r(v) = (1-d)/N + d * sum_{u->v} r(u)/deg(u),
+    ``PAGERANK_ROUNDS`` rounds of  r(v) = (1-d)/N + d * sum_{u->v} r(u)/deg(u),
     with r0 = 1/N.
 
     The derived weighted edge list is always stored (first use runs the
@@ -181,7 +184,7 @@ def pagerank(
     nn = nodes.agg(F.count("*").cast("double").alias("__n"))
     base = nodes.crossJoin(nn)
     ranks = base.select("node", (F.lit(1.0) / F.col("__n")).alias("r"))
-    for _ in range(n_iter):
+    for _ in range(PAGERANK_ROUNDS):
         contrib = (
             # node-sized ranks, grown with the graph; hint kept on the
             # x_pagerank A/B at weighted_edges

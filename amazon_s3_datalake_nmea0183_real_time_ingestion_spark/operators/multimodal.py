@@ -111,7 +111,7 @@ def extract_features(assets: DataFrame) -> DataFrame:
 WAV_SAMPLE_RATE = 16000
 
 
-def encode_wav_pcm16(values: Sequence[int], sample_rate: int = WAV_SAMPLE_RATE) -> bytes:
+def encode_wav_pcm16(values: Sequence[int]) -> bytes:
     """Canonical 44-byte RIFF/WAVE header + mono PCM16 data chunk."""
     data = np.asarray(values, dtype="<i2").tobytes()
     return (
@@ -119,7 +119,7 @@ def encode_wav_pcm16(values: Sequence[int], sample_rate: int = WAV_SAMPLE_RATE) 
         + struct.pack("<I", 36 + len(data))
         + b"WAVE"
         + b"fmt "
-        + struct.pack("<IHHIIHH", 16, 1, 1, sample_rate, sample_rate * 2, 2, 16)
+        + struct.pack("<IHHIIHH", 16, 1, 1, WAV_SAMPLE_RATE, WAV_SAMPLE_RATE * 2, 2, 16)
         + b"data"
         + struct.pack("<I", len(data))
         + data

@@ -12,7 +12,7 @@ call time — ``connected_components`` iterates to convergence with a
 driver-side probe per round (the same control-plane collect its own
 docstring documents), so calling ``curate_corpus`` executes the chain
 up through the near-dup pair join.  Callers then trigger the remaining
-(cheap) work with their own actions (write_training_shards, counts).
+(cheap) work with their own actions (writes, counts).
 
 Stage order matters and is deliberate:
 
@@ -48,11 +48,13 @@ from ..storage import stored
 from .curation import hash_split
 from .dedup import connected_components, minhash_near_dup
 
+# the quality gate keeps documents whose quality logit exceeds this
+QUALITY_THRESHOLD = 0.0
+
 
 def curate_corpus(
     docs: DataFrame,
     benchmark: DataFrame | None = None,
-    quality_threshold: float = 0.0,
 ) -> dict[str, DataFrame]:
     """Run the full curation chain; returns lazy DataFrames:
 
@@ -73,7 +75,7 @@ def curate_corpus(
     toked = docs.withColumn("__t", tokens("text"))
     gated = (
         toked.withColumn("quality", quality_logit(F.col("__t"), F.col("text")))
-        .filter(F.col("quality") > quality_threshold)
+        .filter(F.col("quality") > QUALITY_THRESHOLD)
         .drop("__t")
     )
 

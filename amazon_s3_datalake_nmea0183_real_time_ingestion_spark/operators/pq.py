@@ -45,6 +45,11 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double
 
+# subspaces per vector and codewords per subspace (64-dim at 8 × 16: 8
+# four-bit codes); every PQ key and its oracle use this shape
+PQ_M = 8
+PQ_KSUB = 16
+
 
 def _sqdist(sub: Column, cw: Column) -> Column:
     """round(squared L2, 6) between two equal-length double arrays —
@@ -115,7 +120,7 @@ def _decode_col(codes: Column, cbs: Column, m: int) -> Column:
     )
 
 
-def pq_encode_blas(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8,
+def pq_encode_blas(df: DataFrame, codebooks: DataFrame, dim: int,
                    vec_col: str = "embedding",
                    with_recon: bool = True) -> DataFrame:
     """Vectorized twin of :func:`pq_encode` — identical output, computed
@@ -156,6 +161,7 @@ def pq_encode_blas(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8,
         ArrayType, DoubleType, IntegerType, StructField, StructType,
     )
 
+    m = PQ_M
     dsub = dim // m
     per_sub: dict[int, list] = {}
     for r in codebooks.collect():  # m*ksub rows — control-plane size
@@ -219,25 +225,26 @@ def pq_encode_blas(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8,
     return df.mapInPandas(_enc, out_schema)
 
 
-def pq_train(df: DataFrame, dim: int, m: int = 8, ksub: int = 16) -> DataFrame:
-    """Learn per-subspace codebooks: deterministic seeding (the ``ksub``
+def pq_train(df: DataFrame, dim: int) -> DataFrame:
+    """Learn per-subspace codebooks: deterministic seeding (the ``PQ_KSUB``
     lowest-id vectors' sub-vectors, code_id = their id — the
     seed_centroids convention) + one Lloyd round of squared-L2
     assignment and per-position means (round 6).  Returns (subspace,
-    code_id, codeword) rows — m × ksub × (dim/m) doubles, KBs.
+    code_id, codeword) rows — PQ_M × PQ_KSUB × (dim/PQ_M) doubles, KBs.
 
     The round costs one corpus shuffle (the mean agg; assignment runs
     map-side through :func:`pq_encode_blas`).  Codes that lose every
     member drop out, standard Lloyd — code_ids are identities, not
     positions, so a sparse codebook encodes/decodes unambiguously.
     """
-    assert dim % m == 0, "dim must split evenly into m subspaces"
+    m = PQ_M
+    assert dim % m == 0, "dim must split evenly into PQ_M subspaces"
     dsub = dim // m
     subspaces = list(range(m))
     # materialize the double cast ONCE: the seed slices and the
     # per-subspace means below all read it
     base = df.select(F.col("vec_id"), as_double(F.col("embedding")).alias("__dv"))
-    cb = base.filter(F.col("vec_id") < ksub).select(
+    cb = base.filter(F.col("vec_id") < PQ_KSUB).select(
         *[
             F.struct(
                 F.lit(s).alias("subspace"),
@@ -250,7 +257,7 @@ def pq_train(df: DataFrame, dim: int, m: int = 8, ksub: int = 16) -> DataFrame:
         "e.subspace", "e.code_id", "e.codeword"
     )
     coded = pq_encode_blas(
-        base, cb, dim, m, "__dv", with_recon=False
+        base, cb, dim, "__dv", with_recon=False
     ).select(
         F.col("vec_id"), F.col("pq_codes").alias("__codes"), F.col("__dv")
     )
@@ -285,7 +292,7 @@ def pq_train(df: DataFrame, dim: int, m: int = 8, ksub: int = 16) -> DataFrame:
     return cb
 
 
-def pq_encode(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8) -> DataFrame:
+def pq_encode(df: DataFrame, codebooks: DataFrame, dim: int) -> DataFrame:
     """Attach ``pq_codes`` (array<int>, the m-byte stored form) and
     ``pq_recon`` (array<double>, the decoded view ADC search scores
     against) — map-side only, 1-row codebook nest broadcast.  The
@@ -299,6 +306,7 @@ def pq_encode(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8) -> Data
     referencing an inline encode expression re-ran the full m·ksub
     scoring m times per row (measured: the 168 s sf0.1 wall dropped to
     seconds when materialized)."""
+    m = PQ_M
     dsub = dim // m
     nest = _nest_codebooks(codebooks)
     prep = df.select(
@@ -316,7 +324,7 @@ def pq_encode(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8) -> Data
     )
 
 
-def pq_report(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8) -> DataFrame:
+def pq_report(df: DataFrame, codebooks: DataFrame, dim: int) -> DataFrame:
     """Per-vector PQ audit: the code string (``c0-c1-…``, the stored
     bytes made hash-comparable), reconstruction MSE, worst absolute
     component error, and cosine fidelity — the commit gate before
@@ -332,7 +340,7 @@ def pq_report(df: DataFrame, codebooks: DataFrame, dim: int, m: int = 8) -> Data
     dfd = df.select(
         F.col("vec_id"), as_double(F.col("embedding")).alias("__dv")
     )
-    q = pq_encode_blas(dfd, codebooks, dim, m, "__dv").select(
+    q = pq_encode_blas(dfd, codebooks, dim, "__dv").select(
         F.col("vec_id"),
         F.col("__dv"),
         F.col("pq_codes"),

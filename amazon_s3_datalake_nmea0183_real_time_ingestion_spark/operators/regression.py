@@ -32,16 +32,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# GD steps and learning rate: the x_linreg_gd key and its unrolled oracle
+# agree on both
+GD_ROUNDS = 3
+GD_LR = 0.1
 
-def linreg_gd(spark: SparkSession, df: DataFrame, x_col: str, y_col: str,
-              rounds: int = 3, lr: float = 0.1) -> DataFrame:
-    """Fit ``y ≈ w0 + w1·x`` by ``rounds`` full-batch GD steps from
+
+def linreg_gd(spark: SparkSession, df: DataFrame, x_col: str, y_col: str) -> DataFrame:
+    """Fit ``y ≈ w0 + w1·x`` by ``GD_ROUNDS`` full-batch GD steps from
     w = (0, 0).  Returns one row per round: (round, w0, w1, mse) — the
     convergence trajectory (weights raw float64, mse round-4), which
     any engine replays exactly.
 
     Gradient of mean squared error: g0 = avg(2·(ŷ−y)),
-    g1 = avg(2·(ŷ−y)·x); update w ← w − lr·g (unrounded — see module
+    g1 = avg(2·(ŷ−y)·x); update w ← w − GD_LR·g (unrounded — see module
     docstring); mse reported AFTER the update (the quantity the next
     round would reduce).
     """
@@ -51,14 +55,14 @@ def linreg_gd(spark: SparkSession, df: DataFrame, x_col: str, y_col: str,
     )
     w0, w1 = 0.0, 0.0
     out: list[tuple[int, float, float, float]] = []
-    for r in range(1, rounds + 1):
+    for r in range(1, GD_ROUNDS + 1):
         resid = F.lit(w0) + F.lit(w1) * F.col("__x") - F.col("__y")
         g = feats.agg(
             F.round(F.avg(2.0 * resid), 6).alias("g0"),
             F.round(F.avg(2.0 * resid * F.col("__x")), 6).alias("g1"),
         ).collect()[0]
-        w0 = w0 - lr * g["g0"]
-        w1 = w1 - lr * g["g1"]
+        w0 = w0 - GD_LR * g["g0"]
+        w1 = w1 - GD_LR * g["g1"]
         resid2 = F.lit(w0) + F.lit(w1) * F.col("__x") - F.col("__y")
         mse = feats.agg(
             F.round(F.avg(resid2 * resid2), 4).alias("mse")

@@ -6,12 +6,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+# MMR relevance weight: x_mmr_diversify and its greedy oracle agree on it
+MMR_LAMBDA = 0.7
 
-def mmr_rerank(cand: DataFrame, sim_cc: DataFrame, k: int,
-               lam: float = 0.7) -> DataFrame:
+
+def mmr_rerank(cand: DataFrame, sim_cc: DataFrame, k: int) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein,
     SIGIR '98): greedily select ``k`` items from a candidate pool,
-    each round picking argmax  lam·sim(q, d) − (1−lam)·max_{s∈S} sim(d, s)
+    each round picking argmax  λ·sim(q, d) − (1−λ)·max_{s∈S} sim(d, s)
+    (λ = ``MMR_LAMBDA``)
     — relevance traded against redundancy with what's already selected.
     The curation twin of retrieval diversity: the same greedy screen
     picks REPRESENTATIVE exemplars out of a near-dup-heavy candidate
@@ -38,7 +41,7 @@ def mmr_rerank(cand: DataFrame, sim_cc: DataFrame, k: int,
     pool itself.
 
     The selection trajectory is oracle-replayable: scores are
-    round6(lam·simq − (1−lam)·max_redundancy)  with the SAME IEEE
+    round6(λ·simq − (1−λ)·max_redundancy)  with the SAME IEEE
     754 operation order as the previous Spark expression, round6 is
     BigDecimal-style HALF_UP on the shortest decimal repr (exactly
     Spark's ``F.round``), missing pairwise rows mean zero redundancy
@@ -52,6 +55,7 @@ def mmr_rerank(cand: DataFrame, sim_cc: DataFrame, k: int,
     """
     from decimal import ROUND_HALF_UP, Decimal
 
+    lam = MMR_LAMBDA
     mu = 1.0 - lam  # same float64 literal the Spark expression used
 
     def _round6(x: float) -> float:

@@ -24,26 +24,33 @@ from pyspark.sql.window import Window
 
 from ..functions.vectors import as_double, dot_double
 
+# Two-level IVF shape: the super-cell count (None derives ⌈√k⌉ from the
+# centroid count) and the super-cells each vector probes in the BLAS
+# kernel (None probes all: the exact assignment)
+IVF_N_SUPER = None
+IVF_BLAS_PROBE_SUPER = None
+# Embedding dimension the Rademacher hyperplanes span
+PLANE_DIM = 64
+# SemDeDup pairs: within-cell cosine at or above this is a duplicate
+SEMDEDUP_THRESHOLD = 0.99
+
 
 def prep_vectors(df: DataFrame, id_col: str, vec_col: str, out_id: str,
-          out_vec: str, out_nrm: str, extra: list[str] | None = None,
-          screen: bool = True) -> DataFrame:
+          out_vec: str, out_nrm: str, extra: list[str] | None = None) -> DataFrame:
     """Per-side projection computed BELOW the join: double-cast vector +
     L2 norm once per row, so the per-pair kernel is just a dot product.
     (Inline cosine_similarity above a join re-casts both arrays and
     re-derives both norms per PAIR — ~3× the array work.)
 
-    ``screen=True`` (default) drops degenerate rows — zero-norm, NULL, or
-    empty vectors (all have ``norm > 0`` false/NULL) — BEFORE any scoring.
+    Degenerate rows — zero-norm, NULL, or empty vectors (all have
+    ``norm > 0`` false/NULL) — are dropped BEFORE any scoring.
     This is the shared zero-norm guard for the whole x_sim_* family:
     Spark's try_divide yields NULL cosine for a zero vector while DuckDB's
     list_cosine_similarity yields -1.0/NaN (and DuckDB orders NaN above
     every number), so an unscreened degenerate row diverges cross-engine
     the moment one enters the corpus (registry.py boundary, closed by
     x_sim_zero_norm).  Every family oracle mirrors the screen with
-    ``list_dot_product(v, v) > 0`` — the semantic_dedup convention.
-    ``screen=False`` keeps the legacy NULL-sim flow for callers that want
-    degenerate rows visible (tests, diagnostics)."""
+    ``list_dot_product(v, v) > 0`` — the semantic_dedup convention."""
     dv = as_double(F.col(vec_col))
     sq = F.aggregate(
         F.transform(dv, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
@@ -54,7 +61,7 @@ def prep_vectors(df: DataFrame, id_col: str, vec_col: str, out_id: str,
         F.sqrt(sq).alias(out_nrm),
         *(extra or []),
     )
-    return out.filter(F.col(out_nrm) > 0) if screen else out
+    return out.filter(F.col(out_nrm) > 0)
 
 
 def pair_cosine():
@@ -153,7 +160,6 @@ def assign_to_centroids(corpus: DataFrame, centroids: DataFrame,
 
 def _two_level_probe(corpus: DataFrame, centroids: DataFrame,
                      id_col: str, vec_col: str,
-                     n_super: int | None,
                      n_probe_super: int | None) -> tuple[DataFrame, DataFrame]:
     """Stages 1-3 of the two-level assignment, shared by the declarative
     and BLAS final-argmax variants: seed selection, centroid→super-cell
@@ -177,6 +183,7 @@ def _two_level_probe(corpus: DataFrame, centroids: DataFrame,
         ) > 0
     )
     k = centroids.count()  # ONE k-row action; k folds into the plan as literals
+    n_super = IVF_N_SUPER
     if n_super is None:
         n_super = math.ceil(math.sqrt(k))
     # floor at 1: k=0 would make step's divisor zero, where the flat
@@ -273,7 +280,6 @@ def _two_level_probe(corpus: DataFrame, centroids: DataFrame,
 
 
 def assign_to_centroids_2level(corpus: DataFrame, centroids: DataFrame,
-                               n_super: int | None = None,
                                n_probe_super: int | None = None) -> DataFrame:
     """Two-level IVF assignment — the distribution fix for k ∝ n centroid
     tables (VERDICT r5 "What's wrong" #3): when the centroid count grows
@@ -283,7 +289,7 @@ def assign_to_centroids_2level(corpus: DataFrame, centroids: DataFrame,
     long before 100 TB.  Here NOTHING corpus-proportional is ever
     broadcast or collected:
 
-    1. ~``n_super`` SEED centroids — hash-sampled at rate ⌈k/n_super⌉⁻¹
+    1. ~n_super SEED centroids — hash-sampled at rate ⌈k/n_super⌉⁻¹
        by a map-side md5 filter (plus the min-id centroid so the set is
        never empty; NO global-sort window) — are the only broadcast;
     2. each centroid is tagged with its nearest seed's super-cell
@@ -297,7 +303,7 @@ def assign_to_centroids_2level(corpus: DataFrame, centroids: DataFrame,
        argmax picks the cluster with the flat tie-break (sim DESC,
        centroid_id ASC, NULLs last).
 
-    ``n_super=None`` (default) derives ⌈√k⌉ from one count of the
+    ``IVF_N_SUPER = None`` derives n_super = ⌈√k⌉ from one count of the
     centroid table (a k-row action, nothing corpus-sized) — the balance
     point where per-vector work is O(√k + probe·√k) instead of O(k).
     ``n_probe_super=None`` probes ALL super-cells: every (vector,
@@ -322,7 +328,7 @@ def assign_to_centroids_2level(corpus: DataFrame, centroids: DataFrame,
     (vec_id, vd, vn, cluster).
     """
     probed, tagged = _two_level_probe(
-        corpus, centroids, "vec_id", "embedding", n_super, n_probe_super
+        corpus, centroids, "vec_id", "embedding", n_probe_super
     )
     # 4. keyed join on super_id + exact argmax
     csim = F.round(
@@ -342,9 +348,7 @@ def assign_to_centroids_2level(corpus: DataFrame, centroids: DataFrame,
     )
 
 
-def assign_to_centroids_2level_blas(corpus: DataFrame, centroids: DataFrame,
-                                    n_super: int | None = None,
-                                    n_probe_super: int | None = None) -> DataFrame:
+def assign_to_centroids_2level_blas(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     """Two-level assignment with the per-cell argmax computed as an
     Arrow-batched BLAS matmul via COGROUPED ``applyInPandas`` — the fully
     distributed exact k ∝ n kernel: nothing corpus-proportional is
@@ -377,7 +381,7 @@ def assign_to_centroids_2level_blas(corpus: DataFrame, centroids: DataFrame,
     )
 
     probed, tagged = _two_level_probe(
-        corpus, centroids, "vec_id", "embedding", n_super, n_probe_super
+        corpus, centroids, "vec_id", "embedding", IVF_BLAS_PROBE_SUPER
     )
     out_schema = StructType(
         [
@@ -463,7 +467,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
     return _ranked_topk(scored, 3)
 
 
-def rademacher_planes(n_planes: int = 16, dim: int = 64) -> list[list[int]]:
+def rademacher_planes(n_planes: int = 16) -> list[list[int]]:
     """Deterministic ±1 (Rademacher) hyperplanes from md5 parity of
     ``"j,d"`` — sign-random-projection LSH (Charikar, STOC'02).  Computed
     driver-side once and inlined as literals, so any ANSI engine can replay
@@ -473,7 +477,7 @@ def rademacher_planes(n_planes: int = 16, dim: int = 64) -> list[list[int]]:
     return [
         [
             1 if int(hashlib.md5(f"{j},{d}".encode()).hexdigest()[:8], 16) % 2 else -1
-            for d in range(dim)
+            for d in range(PLANE_DIM)
         ]
         for j in range(n_planes)
     ]
@@ -560,12 +564,11 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, planes: list[list[int]]) -> 
     return _ranked_topk(scored, 3)
 
 
-def semantic_dedup_pairs(assigned: DataFrame, threshold: float = 0.99,
-                         max_cell: int | None = None) -> DataFrame:
+def semantic_dedup_pairs(assigned: DataFrame, max_cell: int | None = None) -> DataFrame:
     """SemDeDup candidate pairs (Abbas et al. 2023): over an assignment
     frame ``(vec_id, vd, vn, cluster)`` — the output of any
     ``assign_to_centroids*`` kernel — emit within-cell pairs with
-    cosine >= ``threshold`` (rounded to 6, id_a < id_b).  The caller
+    cosine >= ``SEMDEDUP_THRESHOLD`` (rounded to 6, id_a < id_b).  The caller
     picks the kernel: the broadcast argmax (:func:`assign_to_centroids`)
     for a fixed small k, the two-level cogrouped BLAS argmax
     (:func:`assign_to_centroids_2level_blas`, probe-all = identical
@@ -619,12 +622,11 @@ def semantic_dedup_pairs(assigned: DataFrame, threshold: float = 0.99,
         a.join(b, "cluster")
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", sim.alias("sim"))
-        .filter(F.col("sim") >= threshold)
+        .filter(F.col("sim") >= SEMDEDUP_THRESHOLD)
     )
 
 
-def semantic_dedup(assigned: DataFrame, threshold: float = 0.99,
-                   max_cell: int | None = None) -> DataFrame:
+def semantic_dedup(assigned: DataFrame, max_cell: int | None = None) -> DataFrame:
     """Keep-lowest-id SemDeDup collapse over an assignment frame
     ``(vec_id, vd, vn, cluster)``: each duplicate reports its
     lowest-id SIMILAR NEIGHBOR (dropped_id, kept_by, cos_sim) — one keyed
@@ -638,7 +640,7 @@ def semantic_dedup(assigned: DataFrame, threshold: float = 0.99,
     survivor — or run connected_components over the pairs (the
     x_dedup_cluster path) when a canonical representative per clique is
     required."""
-    pairs = semantic_dedup_pairs(assigned, threshold, max_cell)
+    pairs = semantic_dedup_pairs(assigned, max_cell)
     return pairs.groupBy(F.col("id_b").alias("dropped_id")).agg(
         F.min("id_a").cast("long").alias("kept_by"),
         F.expr("min_by(sim, id_a)").alias("cos_sim"),

@@ -2,7 +2,7 @@
 "An improved data stream summary: the count-min sketch and its
 applications", J. Algorithms 2005).
 
-The sketch is a ``CMS_DEPTH × width`` grid of counters; key ``x`` maps to one
+The sketch is a ``CMS_DEPTH × CMS_WIDTH`` grid of counters; key ``x`` maps to one
 bucket per row via independent hashes, and its frequency estimate is the
 MIN of its ``CMS_DEPTH`` cells.  Two properties make it the right monitor for
 viral boilerplate arriving between exact census runs (the streaming-
@@ -13,18 +13,18 @@ friendly complement of x_vocab_topk's exact wordcount):
   ADD); the adjudicated key asserts this invariant per heavy hitter;
 - **mergeable** — the grid is a sum of per-partition / per-microbatch
   grids, so it aggregates with one map-side-combinable shuffle bounded by
-  ``CMS_DEPTH·width`` rows per partition, regardless of corpus size or key
+  ``CMS_DEPTH·CMS_WIDTH`` rows per partition, regardless of corpus size or key
   cardinality.
 
 Hashes are the repo's cross-engine md5 scheme (functions/hashing.py):
-``bucket_j(x) = md5_u32('cms' || j || ':' || x) % width`` — DuckDB replays
+``bucket_j(x) = md5_u32('cms' || j || ':' || x) % CMS_WIDTH`` — DuckDB replays
 the ENTIRE sketch bit-identically, so the oracle checks the real estimates,
 not a loose tolerance band.
 
 Scale shape: building from raw occurrences is
 ``explode → (j, bucket) → count`` — one shuffle whose map-side combine
-caps partial state at ``CMS_DEPTH·width`` counters; the finished sketch is
-``CMS_DEPTH·width`` rows (KBs) and BROADCASTS into the estimate join.  Nothing
+caps partial state at ``CMS_DEPTH·CMS_WIDTH`` counters; the finished sketch is
+``CMS_DEPTH·CMS_WIDTH`` rows (KBs) and BROADCASTS into the estimate join.  Nothing
 corpus-proportional is ever collected or broadcast.  When an exact
 per-key count table already exists (the adjudication path below), the
 identical grid is derived from it with one tiny shuffle over distinct keys
@@ -38,20 +38,22 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_u32
 
-# rows of every sketch grid; a grid and its estimate must agree on it
+# rows and columns of every sketch grid; a grid and its estimate must
+# agree on both
 CMS_DEPTH = 4
+CMS_WIDTH = 1024
 
 
-def _bucket(key: F.Column, j: F.Column, width: int) -> F.Column:
-    """Row-``j`` bucket of ``key``: md5_u32('cms<j>:<key>') % width —
+def _bucket(key: F.Column, j: F.Column) -> F.Column:
+    """Row-``j`` bucket of ``key``: md5_u32('cms<j>:<key>') % CMS_WIDTH —
     non-negative on both engines (md5_u32 is in [0, 2^32))."""
-    return md5_u32(F.concat(F.lit("cms"), j.cast("string"), F.lit(":"), key)) % width
+    return md5_u32(F.concat(F.lit("cms"), j.cast("string"), F.lit(":"), key)) % CMS_WIDTH
 
 
-def cms_from_counts(counts: DataFrame, key_col: str, n_col: str, width: int = 1024) -> DataFrame:
+def cms_from_counts(counts: DataFrame, key_col: str, n_col: str) -> DataFrame:
     """Build the sketch grid from an exact (key, count) table: each key
     adds its count to one cell per row.  Returns (j, bucket, cell) —
-    at most ``CMS_DEPTH·width`` rows.  Cell values are identical to the
+    at most ``CMS_DEPTH·CMS_WIDTH`` rows.  Cell values are identical to the
     occurrence-stream construction (addition is associative); this form
     just hashes each DISTINCT key once per row instead of once per
     occurrence."""
@@ -61,33 +63,33 @@ def cms_from_counts(counts: DataFrame, key_col: str, n_col: str, width: int = 10
         F.col(key_col).alias("__k"),
     )
     return (
-        probes.select("j", _bucket(F.col("__k"), F.col("j"), width).alias("bucket"),
+        probes.select("j", _bucket(F.col("__k"), F.col("j")).alias("bucket"),
                       F.col("__n"))
         .groupBy("j", "bucket")
         .agg(F.sum("__n").alias("cell"))
     )
 
 
-def cms_from_stream(items: DataFrame, key_col: str, width: int = 1024) -> DataFrame:
+def cms_from_stream(items: DataFrame, key_col: str) -> DataFrame:
     """Build the same grid straight from an occurrence stream (one row per
     occurrence, no exact counts anywhere) — the production/streaming
     path: map each occurrence to ``CMS_DEPTH`` (j, bucket) cells and count.
-    Map-side combine bounds per-partition partial state at CMS_DEPTH·width
+    Map-side combine bounds per-partition partial state at CMS_DEPTH·CMS_WIDTH
     counters, so the shuffle is sketch-sized, not corpus-sized."""
     probes = items.select(
         F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("j"),
         F.col(key_col).alias("__k"),
     )
     return (
-        probes.select("j", _bucket(F.col("__k"), F.col("j"), width).alias("bucket"))
+        probes.select("j", _bucket(F.col("__k"), F.col("j")).alias("bucket"))
         .groupBy("j", "bucket")
         .agg(F.count("*").alias("cell"))
     )
 
 
-def cms_estimate(keys: DataFrame, sketch: DataFrame, key_col: str, width: int = 1024) -> DataFrame:
+def cms_estimate(keys: DataFrame, sketch: DataFrame, key_col: str) -> DataFrame:
     """Point-query the sketch: per input row, min over the ``CMS_DEPTH`` cells
-    its key maps to.  The sketch (≤ CMS_DEPTH·width rows) broadcasts; the
+    its key maps to.  The sketch (≤ CMS_DEPTH·CMS_WIDTH rows) broadcasts; the
     keys side keeps all its columns.
 
     The grid is stored SPARSE (only touched cells have rows), so the
@@ -98,9 +100,9 @@ def cms_estimate(keys: DataFrame, sketch: DataFrame, key_col: str, width: int = 
     cols = keys.columns
     probes = keys.select(
         *cols, F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("j")
-    ).withColumn("bucket", _bucket(F.col(key_col), F.col("j"), width))
+    ).withColumn("bucket", _bucket(F.col(key_col), F.col("j")))
     return (
-        # <= CMS_DEPTH * width cells; the estimate grows with the counted stream
+        # <= CMS_DEPTH * CMS_WIDTH cells; the estimate grows with the counted stream
         probes.join(F.broadcast(sketch), ["j", "bucket"], "left")
         .groupBy(*cols)
         .agg(F.min(F.coalesce(F.col("cell"), F.lit(0))).alias("est"))
@@ -122,7 +124,7 @@ def cms_inner_product(sketch_a: DataFrame, sketch_b: DataFrame) -> DataFrame:
     partitions — no scan, no join, to get the estimate.
 
     Absent cells are zero on either side, so the inner join over
-    (j, bucket) loses nothing (0·x = 0); the grids are ≤ CMS_DEPTH·width
+    (j, bucket) loses nothing (0·x = 0); the grids are ≤ CMS_DEPTH·CMS_WIDTH
     rows each, so everything here is control-plane-sized.
 
     Arithmetic bound: the int64 dot product is EXACT (the adjudicated

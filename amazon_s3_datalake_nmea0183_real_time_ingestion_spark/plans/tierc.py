@@ -298,9 +298,7 @@ def x_dedup_simhash_rep(spark: SparkSession, sf: str) -> DataFrame:
     clusters = sigs.groupBy("simhash").agg(
         F.min("doc_id").alias("doc_id"), F.count("*").alias("n_members")
     )
-    pairs = simhash_pairs(
-        clusters.select("doc_id", "simhash"), n_bands=4
-    )
+    pairs = simhash_pairs(clusters.select("doc_id", "simhash"))
     nbrs = (
         pairs.select(F.col("id_a").alias("doc_id"), "hamming")
         .unionByName(pairs.select(F.col("id_b").alias("doc_id"), "hamming"))
@@ -417,7 +415,7 @@ def x_dedup_ledger_near(spark: SparkSession, sf: str) -> DataFrame:
 def x_dedup_ngram(spark: SparkSession, sf: str) -> DataFrame:
     """Exact n-gram (3-word shingle) Jaccard dedup via inverted-index join —
     the exact method MinHash approximates."""
-    return ngram_jaccard_pairs(_doc_corpus(spark, sf), threshold=0.6)
+    return ngram_jaccard_pairs(_doc_corpus(spark, sf))
 
 
 @register(
@@ -1174,7 +1172,7 @@ def x_dedup_cluster(spark: SparkSession, sf: str) -> DataFrame:
     0.6 over the chain-planted corpus; the DuckDB oracle replays the label
     propagation as a recursive CTE reachability closure."""
     corpus = _doc_corpus3(spark, sf)
-    edges = ngram_jaccard_pairs(corpus, threshold=0.6).select("id_a", "id_b")
+    edges = ngram_jaccard_pairs(corpus).select("id_a", "id_b")
     labels = connected_components(edges, corpus.select("doc_id"))
     w = Window.partitionBy("cluster_id")
     return labels.select(
@@ -1189,7 +1187,7 @@ def x_dedup_cluster(spark: SparkSession, sf: str) -> DataFrame:
 # C3+ — sign-random-projection LSH ANN (bucketed scale path, vs IVF)
 # ---------------------------------------------------------------------------
 
-_LSH_PLANES = rademacher_planes(n_planes=16, dim=64)
+_LSH_PLANES = rademacher_planes(n_planes=16)
 _LSH_PLANES_VALUES = ", ".join(f"({j}, {p})" for j, p in enumerate(_LSH_PLANES))
 
 
@@ -1719,7 +1717,7 @@ def x_quality_model(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_REDUCE_PLANES = rademacher_planes(n_planes=8, dim=64)
+_REDUCE_PLANES = rademacher_planes(n_planes=8)
 _REDUCE_PLANES_VALUES = ", ".join(f"({j}, {p})" for j, p in enumerate(_REDUCE_PLANES))
 _REDUCE_PIVOT = ",\n           ".join(
     f"CAST(max(CASE WHEN j = {j} THEN dt END) AS BIGINT) AS r{j}" for j in range(8)

@@ -28,6 +28,7 @@ from ..operators.dedup import (
     minhash_near_dup,
     ngram_jaccard_pairs,
 )
+from ..operators.graph import PAGERANK_ROUNDS
 from ..storage import stored
 from .registry import register, table
 from .tierc import _CORPUS3_SQL, _SHINGLES_SQL, _TOKS_SQL, _doc_corpus3
@@ -499,7 +500,7 @@ def x_dedup_best(spark: SparkSession, sf: str) -> DataFrame:
     rides the same window partitioning.
     """
     corpus = _doc_corpus3(spark, sf)
-    edges = ngram_jaccard_pairs(corpus, threshold=0.6).select("id_a", "id_b")
+    edges = ngram_jaccard_pairs(corpus).select("id_a", "id_b")
     return _collapse_best(corpus, edges)
 
 
@@ -604,10 +605,6 @@ def _basket_screen_sql(max_basket: int | None) -> str:
     li AS (SELECT li0.l_orderkey, li0.l_partkey FROM li0 JOIN keep USING (l_orderkey))"""
 
 
-# damped rounds of both the PageRank keys and their unrolled oracle
-_PAGERANK_ROUNDS = 3
-
-
 def _pagerank_oracle(max_basket: int | None = None) -> str:
     """Unrolled-CTE replica of operators.graph.pagerank — generated from
     the same iteration count (and optional basket screen) so engine and
@@ -624,7 +621,7 @@ def _pagerank_oracle(max_basket: int | None = None) -> str:
     deg AS (SELECT s, count(*) AS deg FROM pairs GROUP BY s),
     r0 AS (SELECT node, 1.0 / (SELECT n FROM nn) AS r FROM nodes)"""
     ]
-    for i in range(_PAGERANK_ROUNDS):
+    for i in range(PAGERANK_ROUNDS):
         parts.append(
             f""",
     c{i + 1} AS (SELECT p.d AS node, sum(r{i}.r / deg.deg) AS m
@@ -637,10 +634,10 @@ def _pagerank_oracle(max_basket: int | None = None) -> str:
         )
     parts.append(
         f"""
-    SELECT r{_PAGERANK_ROUNDS}.node AS part_id,
+    SELECT r{PAGERANK_ROUNDS}.node AS part_id,
            CAST(coalesce(deg.deg, 0) AS BIGINT) AS degree,
-           round(r{_PAGERANK_ROUNDS}.r * (SELECT n FROM nn), 6) AS rank_norm
-    FROM r{_PAGERANK_ROUNDS} LEFT JOIN deg ON deg.s = r{_PAGERANK_ROUNDS}.node"""
+           round(r{PAGERANK_ROUNDS}.r * (SELECT n FROM nn), 6) AS rank_norm
+    FROM r{PAGERANK_ROUNDS} LEFT JOIN deg ON deg.s = r{PAGERANK_ROUNDS}.node"""
     )
     return "".join(parts)
 
@@ -690,9 +687,7 @@ def pagerank_report(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
     # once, iterations and the degree branch below read the stored blocks
     weighted = weighted_edges(pairs)
     nodes = stored(nodes)
-    ranks = pagerank(
-        None, nodes, n_iter=_PAGERANK_ROUNDS, materialize=False, weighted=weighted
-    )
+    ranks = pagerank(None, nodes, materialize=False, weighted=weighted)
     nn = nodes.agg(F.count("*").cast("double").alias("__n"))
     deg = weighted.groupBy("src").agg(F.count("*").alias("deg"))
     return (
@@ -1448,7 +1443,7 @@ def x_dedup_best_guarded(spark: SparkSession, sf: str) -> DataFrame:
     watch item 2).
     """
     corpus = _doc_corpus3(spark, sf)
-    edges = ngram_jaccard_pairs(corpus, threshold=0.6, max_df=10).select(
+    edges = ngram_jaccard_pairs(corpus, max_df=10).select(
         "id_a", "id_b"
     )
     return _collapse_best(corpus, edges)

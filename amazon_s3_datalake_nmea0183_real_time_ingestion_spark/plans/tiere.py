@@ -498,9 +498,7 @@ def x_dedup_semantic(spark: SparkSession, sf: str) -> DataFrame:
 
     e = _emb_corpus(spark, sf).select("vec_id", "embedding")
     cents = label_centroids(table(spark, sf, "embeddings"))
-    return semantic_dedup(
-        assign_to_centroids(e, cents), threshold=0.99, max_cell=None
-    )
+    return semantic_dedup(assign_to_centroids(e, cents), max_cell=None)
 
 
 @register(
@@ -588,7 +586,7 @@ def x_dedup_semantic_guarded(spark: SparkSession, sf: str) -> DataFrame:
     # cogrouped-applyInPandas stage do not collapse via ReuseExchange —
     # measured 2.4× end-to-end at sf1 (SCALE.md §7g).
     asg = stored(assign_to_centroids_2level_blas(e, cents))
-    return semantic_dedup(asg, threshold=0.99, max_cell=150)
+    return semantic_dedup(asg, max_cell=150)
 
 
 # ---------------------------------------------------------------------------
@@ -856,7 +854,7 @@ def x_dedup_containment(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.dedup import containment_pairs
 
     corpus = _containment_corpus(table(spark, sf, "documents"))
-    return containment_pairs(corpus, threshold=0.9)
+    return containment_pairs(corpus)
 
 
 # ---------------------------------------------------------------------------
@@ -1077,4 +1075,4 @@ def x_dedup_containment_guarded(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.dedup import containment_pairs
 
     corpus = _containment_corpus(table(spark, sf, "documents"))
-    return containment_pairs(corpus, threshold=0.9, max_df=10, min_size=10)
+    return containment_pairs(corpus, max_df=10, min_size=10)

@@ -446,8 +446,8 @@ def x_minhash_calibration(spark: SparkSession, sf: str) -> DataFrame:
     """
     corpus = _doc_corpus(spark, sf)
     sh = shingle_set(corpus, k=3)
-    sigs = minhash_signatures(sh, n_perm=16)
-    cand = lsh_candidate_pairs(lsh_bands(sigs, 16))
+    sigs = minhash_signatures(sh)
+    cand = lsh_candidate_pairs(lsh_bands(sigs))
     n_eq = sum(
         (F.col(f"a.mh{i}") == F.col(f"b.mh{i}")).cast("int") for i in range(16)
     )
@@ -699,7 +699,7 @@ def x_dedup_census(spark: SparkSession, sf: str) -> DataFrame:
     is effectively free.
     """
     corpus = _doc_corpus(spark, sf)
-    edges = ngram_jaccard_pairs(corpus, threshold=0.6, max_df=10).select(
+    edges = ngram_jaccard_pairs(corpus, max_df=10).select(
         "id_a", "id_b"
     )
     labels = connected_components(edges, corpus.select("doc_id"))
@@ -773,7 +773,7 @@ def x_split_leakage(spark: SparkSession, sf: str) -> DataFrame:
     two id-keyed lookups on top of dedup the pipeline already runs.
     """
     corpus = _doc_corpus(spark, sf)
-    pairs = ngram_jaccard_pairs(corpus, threshold=0.6, max_df=10)
+    pairs = ngram_jaccard_pairs(corpus, max_df=10)
     sp = hash_split(corpus, "doc_id").select("doc_id", "split")
     return (
         pairs.join(sp.select(F.col("doc_id").alias("id_a"),
@@ -858,7 +858,7 @@ def x_split_cluster_safe(spark: SparkSession, sf: str) -> DataFrame:
     # and the leak-count verification — store it once.  Measured
     # 13.2 s → 9.3 s at sf0.1 when the pair subtree stopped recomputing.
     pairs = stored(
-        ngram_jaccard_pairs(corpus, threshold=0.6, max_df=10)
+        ngram_jaccard_pairs(corpus, max_df=10)
         .select("id_a", "id_b")
     )
     labels = connected_components(pairs, corpus.select("doc_id"))

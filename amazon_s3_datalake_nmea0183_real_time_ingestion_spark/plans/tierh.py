@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.window import Window
 
+from ..operators.curation import CURRICULUM_SHARDS
 from ..operators.dedup import connected_components_star, ngram_jaccard_pairs
 from ..operators.graph import copurchase_pairs
 from ..operators.pipeline_curate import curate_corpus
@@ -187,7 +188,7 @@ def x_curate_corpus(spark: SparkSession, sf: str) -> DataFrame:
     )
     corpus = d.unionByName(dups)
     bench = d.filter(F.col("doc_id") % 97 == 0).select("text")
-    out = curate_corpus(corpus, benchmark=bench, quality_threshold=0.0)
+    out = curate_corpus(corpus, benchmark=bench)
     splits = (
         out["curated"]
         .groupBy("split")
@@ -447,7 +448,7 @@ def x_sim_ivf_2level_exact(spark: SparkSession, sf: str) -> DataFrame:
     q AS (
       SELECT doc_id, len(t) AS n_tok,
              {_QUALITY_LOGIT_SQL} AS quality,
-             ('0x' || substr(md5('curr:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 8 AS shard
+             ('0x' || substr(md5('curr:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % {CURRICULUM_SHARDS} AS shard
       FROM toks),
     agg AS (
       SELECT shard, count(*) AS n_docs, sum(n_tok) AS n_tokens,
@@ -499,7 +500,7 @@ def x_curriculum_shards(spark: SparkSession, sf: str) -> DataFrame:
         F.size("__t").alias("n_tok"),
         quality_logit(F.col("__t"), F.col("text")).alias("quality"),
     )
-    ordered = curriculum_order(scored, "quality", n_shards=8)
+    ordered = curriculum_order(scored, "quality")
     return (
         ordered.groupBy("shard")
         .agg(
@@ -573,7 +574,7 @@ def x_dedup_cluster_star(spark: SparkSession, sf: str) -> DataFrame:
     2-hop groups converge in ≤ 3 rounds, the 64-chain probe in ~6.
     """
     corpus = _doc_corpus3(spark, sf)
-    edges = ngram_jaccard_pairs(corpus, threshold=0.6, max_df=10).select(
+    edges = ngram_jaccard_pairs(corpus, max_df=10).select(
         "id_a", "id_b"
     )
     labels = connected_components_star(edges, corpus.select("doc_id"))

@@ -15,7 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ..operators.bpe import BPE_ROUNDS
 from ..operators.pq import pq_encode_blas, pq_report, pq_train
+from ..operators.regression import GD_LR, GD_ROUNDS
 from ..operators.similarity import (
     _ranked_topk,
     cosine_topk,
@@ -111,8 +113,8 @@ def x_embed_pq(spark: SparkSession, sf: str) -> DataFrame:
     m·ksub·(dim/m) doubles — constant in corpus size, control-plane.
     """
     e = table(spark, sf, "embeddings")
-    cb = pq_train(e, dim=64, m=8, ksub=16)
-    return pq_report(e, cb, dim=64, m=8)
+    cb = pq_train(e, dim=64)
+    return pq_report(e, cb, dim=64)
 
 
 @register(
@@ -171,11 +173,11 @@ def x_sim_pq(spark: SparkSession, sf: str) -> DataFrame:
     reads 64× less; the codebook is m·ksub·8 doubles, constant-size.
     """
     e = table(spark, sf, "embeddings")
-    cb = pq_train(e, dim=64, m=8, ksub=16)
+    cb = pq_train(e, dim=64)
     q = e.filter(F.col("vec_id") < 10)
     qs = prep_vectors(q, "vec_id", "embedding", "query_id", "qd", "qn")
     cs = prep_vectors(
-        pq_encode_blas(e, cb, dim=64, m=8).select("vec_id", "pq_recon"),
+        pq_encode_blas(e, cb, dim=64).select("vec_id", "pq_recon"),
         "vec_id", "pq_recon", "neighbor_id", "cd", "cn",
     )
     scored = (
@@ -259,9 +261,9 @@ def x_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     d = table(spark, sf, "documents")
     tok = d.select(F.explode(tokens("text")).alias("token"))
     cnt = tok.groupBy("token").agg(F.count("*").alias("exact_n"))
-    sketch = cms_from_counts(cnt, "token", "exact_n", width=1024)
+    sketch = cms_from_counts(cnt, "token", "exact_n")
     topk = cnt.orderBy(F.col("exact_n").desc(), F.col("token").asc()).limit(20)
-    return cms_estimate(topk, sketch, "token", width=1024).select(
+    return cms_estimate(topk, sketch, "token").select(
         "token",
         "exact_n",
         "est",
@@ -273,9 +275,6 @@ def x_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # BPE vocabulary learning — N unrolled merge rounds, oracle-replayed
 # ---------------------------------------------------------------------------
-
-_BPE_ROUNDS = 6
-
 
 def _bpe_oracle(rounds: int, final: str | None = None) -> str:
     """Unrolled DuckDB replay of ``rounds`` BPE merge rounds.  Per round:
@@ -348,7 +347,7 @@ def _bpe_oracle(rounds: int, final: str | None = None) -> str:
     return ",".join(parts) + "\n    " + final
 
 
-@register("x_vocab_bpe", oracle=_bpe_oracle(_BPE_ROUNDS))
+@register("x_vocab_bpe", oracle=_bpe_oracle(BPE_ROUNDS))
 def x_vocab_bpe(spark: SparkSession, sf: str) -> DataFrame:
     """BPE vocabulary learning (Sennrich et al. ACL'16): 6 merge rounds
     of byte-pair statistics over the corpus wordcount — per round the
@@ -368,7 +367,7 @@ def x_vocab_bpe(spark: SparkSession, sf: str) -> DataFrame:
     d = table(spark, sf, "documents")
     tok = d.select(F.explode(tokens("text")).alias("tok"))
     words = tok.groupBy(F.col("tok").alias("word")).agg(F.count("*").alias("wn"))
-    merges, _rep = bpe_learn(spark, words, rounds=_BPE_ROUNDS)
+    merges, _rep = bpe_learn(spark, words)
     return merges
 
 
@@ -437,12 +436,12 @@ _BPE_TOKENIZE_FINAL = f"""
              AS avg_word_tokens
     FROM dtoks d
     JOIN word_map wm ON wm.word = d.tok
-    JOIN rep{_BPE_ROUNDS} r ON r.word_id = wm.word_id
+    JOIN rep{BPE_ROUNDS} r ON r.word_id = wm.word_id
     GROUP BY d.doc_id
 """
 
 
-@register("x_bpe_tokenize", oracle=_bpe_oracle(_BPE_ROUNDS, _BPE_TOKENIZE_FINAL))
+@register("x_bpe_tokenize", oracle=_bpe_oracle(BPE_ROUNDS, _BPE_TOKENIZE_FINAL))
 def x_bpe_tokenize(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus tokenization under the learned BPE vocab: per document, the
     whitespace word count and the subword token count after all 6 merge
@@ -465,7 +464,7 @@ def x_bpe_tokenize(spark: SparkSession, sf: str) -> DataFrame:
     words = (
         tok.groupBy(F.col("tok").alias("word")).agg(F.count("*").alias("wn"))
     )
-    _merges, rep = bpe_learn(spark, words, rounds=_BPE_ROUNDS)
+    _merges, rep = bpe_learn(spark, words)
     wl = rep.select("word", F.size("syms").alias("__wl"))
     return (
         tok.join(wl, tok["tok"] == wl["word"])
@@ -561,8 +560,8 @@ def x_sim_ivfpq(spark: SparkSession, sf: str) -> DataFrame:
     e = table(spark, sf, "embeddings")
     cents = label_centroids(e)
     asg = assign_to_centroids(e, cents)
-    cb = pq_train(e, dim=64, m=8, ksub=16)
-    recon = pq_encode_blas(e, cb, dim=64, m=8).select(
+    cb = pq_train(e, dim=64)
+    recon = pq_encode_blas(e, cb, dim=64).select(
         "vec_id", "pq_recon"
     )
     cs = prep_vectors(
@@ -601,10 +600,6 @@ def x_sim_ivfpq(spark: SparkSession, sf: str) -> DataFrame:
 # distributed GD model fit — tokens-per-byte cost model, trajectory oracle
 # ---------------------------------------------------------------------------
 
-_GD_ROUNDS = 3
-_GD_LR = "0.1"
-
-
 def _linreg_oracle(rounds: int) -> str:
     """Unrolled DuckDB replay of the GD trajectory: per round, the same
     round-6 gradient averages, weight updates, and round-4 post-update
@@ -622,8 +617,8 @@ def _linreg_oracle(rounds: int) -> str:
                     round(avg(2 * ({w0_expr} + {w1_expr} * x - y) * x), 6) AS g1
              FROM feat),
     w{r} AS MATERIALIZED (
-      SELECT {w0_expr} - {_GD_LR} * g0 AS w0,
-             {w1_expr} - {_GD_LR} * g1 AS w1
+      SELECT {w0_expr} - {GD_LR} * g0 AS w0,
+             {w1_expr} - {GD_LR} * g1 AS w1
       FROM g{r}),
     m{r} AS (SELECT round(avg((w.w0 + w.w1 * x - y) * (w.w0 + w.w1 * x - y)), 4)
                       AS mse
@@ -638,7 +633,7 @@ def _linreg_oracle(rounds: int) -> str:
     return ",".join(parts) + "\n    " + "\n    UNION ALL ".join(selects)
 
 
-@register("x_linreg_gd", oracle=_linreg_oracle(_GD_ROUNDS))
+@register("x_linreg_gd", oracle=_linreg_oracle(GD_ROUNDS))
 def x_linreg_gd(spark: SparkSession, sf: str) -> DataFrame:
     """Distributed gradient-descent model fit: 3 full-batch GD rounds of
     ``token_count ≈ w0 + w1 · (chars/1000)`` — the tokens-per-byte cost
@@ -662,4 +657,4 @@ def x_linreg_gd(spark: SparkSession, sf: str) -> DataFrame:
         (F.length("text") / 1000.0).alias("x"),
         token_count("text").cast("double").alias("y"),
     )
-    return linreg_gd(spark, feats, "x", "y", rounds=_GD_ROUNDS, lr=0.1)
+    return linreg_gd(spark, feats, "x", "y")

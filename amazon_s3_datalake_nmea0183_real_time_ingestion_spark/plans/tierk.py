@@ -43,6 +43,7 @@ from pyspark.sql.window import Window
 
 from ..operators.dedup import shingle_set
 from ..operators.graph import AFFINITY_MIN_SUPPORT, adamic_adar, copurchase_affinity
+from ..operators.retrieval import MMR_LAMBDA
 from ..operators.skew import salted_exact_distinct_count
 from ..operators.stats import cusum, gini, mase
 from ..storage import stored
@@ -1099,10 +1100,9 @@ def x_cuped(spark: SparkSession, sf: str) -> DataFrame:
 # MMR diversity re-ranking
 # ---------------------------------------------------------------------------
 
-_MMR_LAM = 0.7
 # 1.0 - 0.7 is NOT 0.3 in float64 (0.30000000000000004); both engines must
 # use the same literal, so the oracle embeds the repr of the computed value.
-_MMR_MU = repr(1.0 - _MMR_LAM)
+_MMR_MU = repr(1.0 - MMR_LAMBDA)
 _MMR_POOL = 20
 _MMR_K = 10
 
@@ -1134,7 +1134,7 @@ def _mmr_oracle(k: int, pool: int) -> str:
     pick{r} AS MATERIALIZED (
       SELECT c.vec_id, {r} AS pos FROM cand c
       WHERE c.vec_id NOT IN (SELECT vec_id FROM sel{r - 1})
-      ORDER BY round({_MMR_LAM!r} * c.simq - {_MMR_MU} *
+      ORDER BY round({MMR_LAMBDA!r} * c.simq - {_MMR_MU} *
                      (SELECT max(s.s) FROM scc s
                       JOIN sel{r - 1} t ON s.ib = t.vec_id
                       WHERE s.ia = c.vec_id), 6) DESC,
@@ -1218,7 +1218,7 @@ def x_mmr_diversify(spark: SparkSession, sf: str) -> DataFrame:
             6,
         ).alias("s"),
     )
-    sel = mmr_rerank(cand.select("vec_id", "simq"), sim_cc, k=_MMR_K, lam=_MMR_LAM)
+    sel = mmr_rerank(cand.select("vec_id", "simq"), sim_cc, k=_MMR_K)
     return (
         sel.join(cand.select("vec_id", "simq"), "vec_id")
         .select(

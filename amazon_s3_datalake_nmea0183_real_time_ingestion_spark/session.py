@@ -23,10 +23,9 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "nmea-datalake-spark", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "nmea-datalake-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+    shuffle_partitions = int(cpus) if cpus.isdigit() else 32
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

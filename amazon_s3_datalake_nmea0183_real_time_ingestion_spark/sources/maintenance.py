@@ -117,69 +117,6 @@ def compact_partition(spark: SparkSession, table_path: str, partition_expr: str)
     return n
 
 
-def refresh_rollup(spark: SparkSession, stage_path: str, rollup_path: str,
-                   touched_keys: list[tuple]) -> int:
-    """Continuous-aggregate maintenance (the hypertable-rollup analog):
-    keep a materialized daily-per-device rollup of ``stage`` fresh by
-    recomputing ONLY the event-day partitions a micro-batch touched.
-
-    Partition-level incremental view maintenance: the rollup is a pure
-    function of stage, so recomputing touched (year, month, day)
-    partitions from the source of truth is idempotent under batch replay
-    — no partial-aggregate merge state to corrupt (replaying a batch
-    recomputes the same partitions to the same values; contrast a
-    delta-merge scheme, where replay double-counts unless gated).
-    Dynamic partition overwrite rewrites exactly the touched directories
-    and leaves every other partition's files untouched.
-
-    At 100 TB: a micro-batch touches a handful of event days (late data
-    included — SURVEY.md §7.4.5), so each refresh scans only those
-    partitions of stage (partition pruning on the y/m/d filter), not the
-    table; the rollup write shuffles once on its group keys.
-
-    ``touched_keys``: [(year, month, day), ...] — int partition values.
-    Returns the number of rollup rows (re)written.
-    """
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    if not touched_keys:
-        return 0
-    pred = reduce(
-        lambda a, b: a | b,
-        [
-            (F.col("year") == y) & (F.col("month") == m) & (F.col("day") == d)
-            for (y, m, d) in touched_keys
-        ],
-    )
-    agg = (
-        spark.read.parquet(stage_path)
-        .filter(pred)
-        .groupBy("deviceid", "year", "month", "day")
-        .agg(
-            F.count("*").alias("n_heartbeats"),
-            F.round(F.avg("battery_voltage"), 4).alias("avg_battery_voltage"),
-            F.round(F.avg("solar_panel_voltage"), 4).alias("avg_solar_voltage"),
-            F.min("date_time").alias("first_seen"),
-            F.max("date_time").alias("last_seen"),
-        )
-    )
-    n = agg.count()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            agg.repartition("year", "month", "day")
-            .write.mode("overwrite")
-            .partitionBy("year", "month", "day")
-            .parquet(rollup_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return n
-
-
 DRIFT_DEFAULT_COLUMNS: dict[str, str] = {
     # 1-volt bins: wide enough to be stable per-batch, narrow enough that a
     # fleet-wide voltage regression moves mass across bins
@@ -467,10 +404,10 @@ def ks_monitor_report(stage: DataFrame) -> dict:
     }
 
 
-def did_monitor_report(stage: DataFrame, split_day: int | None = None) -> dict:
+def did_monitor_report(stage: DataFrame) -> dict:
     """2×2 difference-in-differences of ``battery_voltage`` for a rollout
-    that hit part of the fleet (``deviceid % 2 = 1``) at UTC epoch-day
-    ``split_day`` (None: the midpoint of the observed range): the
+    that hit part of the fleet (``deviceid % 2 = 1``) at the UTC
+    epoch-day midway through the observed range (``split_day``): the
     rollout's effect net of whatever moved the whole fleet.
 
     Returns ``{"cells": {"treat_post"|"treat_pre"|"ctrl_post"|
@@ -489,19 +426,12 @@ def did_monitor_report(stage: DataFrame, split_day: int | None = None) -> dict:
         F.col("battery_voltage").alias("val"),
         _epoch_day().alias("day"),
     ).filter(F.col("treat").isNotNull())
-    if split_day is None:
-        sp = e.agg(
-            (
-                F.min("day")
-                + F.floor((F.max("day") - F.min("day")) / F.lit(2.0)).cast(
-                    "bigint"
-                )
-            ).alias("split_d")
-        )
-    else:
-        sp = stage.sparkSession.range(1).select(
-            F.lit(int(split_day)).cast("bigint").alias("split_d")
-        )
+    sp = e.agg(
+        (
+            F.min("day")
+            + F.floor((F.max("day") - F.min("day")) / F.lit(2.0)).cast("bigint")
+        ).alias("split_d")
+    )
     cells = e.crossJoin(sp).select(
         "treat", (F.col("day") >= F.col("split_d")).cast("int").alias("post"), "val"
     )
@@ -864,7 +794,7 @@ def heavy_hitters_monitor_report(stage: DataFrame) -> dict:
     }
 
 
-def sketch_store_monitor_report(stage: DataFrame, as_of_day: int | None = None) -> dict:
+def sketch_store_monitor_report(stage: DataFrame) -> dict:
     """Per-day HyperLogLog sketch-store health: for each of the last
     ``RECENT_DAYS`` UTC epoch-days, the day's distinct-``deviceid``
     sketch (``hll_sketch_agg``, lgConfigK 12) against the exact
@@ -873,13 +803,10 @@ def sketch_store_monitor_report(stage: DataFrame, as_of_day: int | None = None) 
     mergeability a persisted sketch store rests on.  A day without rows
     counts into ``missing_days``.
 
-    The default window is anchored at the observed max day, which sees
-    leading and interior gaps but not a trailing one (a stalled ingest
-    re-anchors the window at the last day that arrived).  Pass
-    ``as_of_day`` (the caller's UTC epoch-day, e.g. ``int(time.time())
-    // 86400``) to anchor at now: stall days then count as missing, and
-    a fully stalled store reads n_days 0 with missing_days = the
-    expected span.  A store with no rows at all reads empty/None.
+    The window is anchored at the observed max day, which sees leading
+    and interior gaps but not a trailing one (a stalled ingest
+    re-anchors the window at the last day that arrived).  A store with
+    no rows at all reads empty/None.
 
     Returns ``{"days": [{"day": int, "exact": int, "est": int,
     "rel_err": float, "ok": bool}, ...], "n_days": int, "missing_days":
@@ -892,15 +819,7 @@ def sketch_store_monitor_report(stage: DataFrame, as_of_day: int | None = None) 
     v = stage.filter(
         F.col("deviceid").isNotNull() & F.col("date_time").isNotNull()
     ).select(F.col("deviceid").alias("k"), _epoch_day().alias("day"))
-    if as_of_day is not None:
-        # wall-clock anchoring: the window is fixed at the caller's
-        # "now", so a trailing ingest gap cannot re-anchor it (docstring)
-        recent = v.filter(
-            (F.col("day") > F.lit(as_of_day - RECENT_DAYS))
-            & (F.col("day") <= F.lit(as_of_day))
-        )
-    else:
-        recent = _recent_window_flag(v, "win").filter(F.col("win") == 1)
+    recent = _recent_window_flag(v, "win").filter(F.col("win") == 1)
     # the calendar-sized daily sketch table feeds two actions (per-day
     # readout, union readout) — stored so the corpus-sized sketch build
     # runs once (the union-exact and age-bounds aggregates below are
@@ -914,21 +833,9 @@ def sketch_store_monitor_report(stage: DataFrame, as_of_day: int | None = None) 
         "day", "exact", F.hll_sketch_estimate("sk").alias("est")
     ).orderBy("day").collect()  # control-plane: <= RECENT_DAYS rows
     if not per_day:
-        empty = {"days": [], "n_days": 0, "missing_days": 0,
-                 "union_exact": 0, "union_est": 0, "union_ok": None,
-                 "healthy": None}
-        if as_of_day is not None:
-            # wall-clock mode: an empty window over a NON-empty store is
-            # a complete ingest stall — surface the whole expected span
-            # as missing (an empty store stays empty/None: docstring)
-            b = v.agg(
-                F.min("day").alias("lo"), F.max("day").alias("hi")
-            ).collect()[0]  # control-plane: 1 row
-            if b["lo"] is not None:
-                empty["missing_days"] = max(
-                    0, min(RECENT_DAYS, as_of_day - int(b["lo"]) + 1)
-                )
-        return empty
+        return {"days": [], "n_days": 0, "missing_days": 0,
+                "union_exact": 0, "union_est": 0, "union_ok": None,
+                "healthy": None}
     union_row = daily.agg(
         # all daily sketches share lg_k, so the union needs no
         # allowDifferentLgConfigK (the optional second arg is that
@@ -955,10 +862,8 @@ def sketch_store_monitor_report(stage: DataFrame, as_of_day: int | None = None) 
                      "est": int(r["est"]), "rel_err": rel, "ok": ok})
     # expected day count: the recent window span, clipped to the STORE's
     # observed age (global min day) so a younger-than-window stage zone
-    # isn't flagged as gapped on day one; in wall-clock mode the span
-    # anchors at as_of_day, so trailing stall days count as missing
-    anchor = int(bounds["hi"]) if as_of_day is None else as_of_day
-    expected = min(RECENT_DAYS, anchor - int(bounds["lo"]) + 1)
+    # isn't flagged as gapped on day one
+    expected = min(RECENT_DAYS, int(bounds["hi"]) - int(bounds["lo"]) + 1)
     union_est = int(union_row["est"])
     _, union_ok = _ok(union_exact, union_est)
     return {

@@ -87,19 +87,16 @@ def read_landing_stream(
     spark: SparkSession,
     landing_dir: str,
     max_files_per_trigger: int | None = None,
-    max_bytes_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-stream source over JSON-line envelopes (A1 ``src_ingest``).
 
-    ``maxBytesPerTrigger`` is the direct analog of Firehose's 64 MB size
-    buffer (cdk_datalake_mvp_stack.py:167) — caps per-batch input VOLUME;
-    ``maxFilesPerTrigger`` caps file COUNT (useful when landing files are
-    uniform).  Both may be set; Spark applies whichever limit hits first."""
+    ``maxFilesPerTrigger`` caps the file COUNT of a micro-batch (landing
+    files are uniform).  The Firehose 64 MB size buffer
+    (cdk_datalake_mvp_stack.py:167) lives on the output side, as
+    ``STAGE_ROWS_PER_FILE``."""
     reader = spark.readStream.schema(ENVELOPE_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if max_bytes_per_trigger is not None:
-        reader = reader.option("maxBytesPerTrigger", max_bytes_per_trigger)
     return reader.json(landing_dir)
 
 
@@ -150,7 +147,6 @@ def process_batch(
     batch_id: int,
     lake_dir: str,
     geo_dim: DataFrame,
-    maintain_rollup: bool = False,
 ) -> PipelineBatchResult:
     """The foreachBatch body — the Lambda's records-in/records-out contract
     re-expressed as declarative multi-sink writes: error, stage, alerts,
@@ -160,11 +156,7 @@ def process_batch(
     Firehose one-object-per-flush shape).  A day with more than
     ``STAGE_ROWS_PER_FILE`` rows rolls over to further files of that size
     (``maxRecordsPerFile``), so the cap is per day: a many-day backfill
-    still writes one file for each day below it.
-
-    ``maintain_rollup=True`` refreshes the daily device rollup for the
-    event-day partitions this batch touched (the one hook that needs the
-    batch's own partitions)."""
+    still writes one file for each day below it."""
     # Per-class counters are an Observation on the stored frame, filled
     # by the first write.  That is the error write: its plan has no
     # exchange, so it builds the store inside its own job and AQE (which
@@ -195,24 +187,8 @@ def process_batch(
             )
             alerts = alert_rows(stage.drop("year", "month", "day"))
             alerts.write.mode("append").parquet(os.path.join(lake_dir, "alerts"))
-            if maintain_rollup:
-                # continuous aggregate: refresh only the event-day
-                # partitions this batch touched (idempotent under replay —
-                # the rollup is recomputed from stage, not delta-merged)
-                from ..sources.maintenance import refresh_rollup
-
-                touched = [
-                    (r["year"], r["month"], r["day"])
-                    for r in stage.select("year", "month", "day").distinct().collect()
-                ]
-                refresh_rollup(
-                    batch.sparkSession,
-                    os.path.join(lake_dir, "stage"),
-                    os.path.join(lake_dir, "rollup_daily_device"),
-                    touched,
-                )
         finally:
-            stage.unpersist()
+            stage.unpersist(blocking=True)
 
         counts = {cls: n for cls, n in observed.get.items() if n}
         for cls in MSG_CLASSES:
@@ -224,7 +200,7 @@ def process_batch(
                 )
         return PipelineBatchResult(batch_id=batch_id, counts=counts)
     finally:
-        classified.unpersist()
+        classified.unpersist(blocking=True)
 
 
 def start_pipeline(
@@ -235,9 +211,7 @@ def start_pipeline(
     trigger_seconds: int = 60,
     available_now: bool = False,
     max_files_per_trigger: int | None = None,
-    max_bytes_per_trigger: int | None = None,
     results: list[PipelineBatchResult] | None = None,
-    maintain_rollup: bool = False,
     geo_dim: DataFrame | None = None,
 ) -> StreamingQuery:
     """Wire source → foreachBatch → trigger → checkpoint and start.
@@ -259,13 +233,10 @@ def start_pipeline(
     it per stream."""
     if geo_dim is None:
         geo_dim = build_geo_dim(spark)
-    stream = read_landing_stream(
-        spark, landing_dir, max_files_per_trigger, max_bytes_per_trigger
-    )
+    stream = read_landing_stream(spark, landing_dir, max_files_per_trigger)
 
     def _on_batch(batch: DataFrame, batch_id: int) -> None:
-        res = process_batch(batch, batch_id, lake_dir, geo_dim,
-                            maintain_rollup=maintain_rollup)
+        res = process_batch(batch, batch_id, lake_dir, geo_dim)
         if results is not None:
             results.append(res)
 
@@ -331,15 +302,14 @@ def start_streams(
     base_dir: str,
     stream_names: list[str],
     results: dict[str, list[PipelineBatchResult]] | None = None,
-    **pipeline_kwargs,
 ) -> dict[str, StreamingQuery]:
     """Start one independent pipeline per stream name (multi-fleet
     ingest).  Every stream gets its own landing/checkpoint/lake prefixes
     from :func:`stream_route`; the geocode dimension is built ONCE and
     shared (broadcast per batch regardless, so sharing costs nothing and
     saves N-1 dim builds).  ``results[name]`` collects per-batch counters
-    when a dict is passed.  Remaining kwargs flow to
-    :func:`start_pipeline` for every stream.
+    when a dict is passed.  Every stream runs :func:`start_pipeline`'s
+    defaults (the 60 s trigger).
 
     Scale: streams are separate StreamingQuery instances scheduled
     concurrently by Spark; at cluster scale each stream's micro-batch
@@ -362,6 +332,5 @@ def start_streams(
             route.checkpoint_dir,
             results=stream_results,
             geo_dim=geo_dim,
-            **pipeline_kwargs,
         )
     return queries

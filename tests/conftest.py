@@ -13,7 +13,8 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", shuffle_partitions=4)
+    s = get_spark("tests")
+    s.conf.set("spark.sql.shuffle.partitions", "4")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -46,14 +46,16 @@ def test_string_ids_multi_hop(spark):
     got = {r["doc_id"]: r["cluster_id"] for r in connected_components(e, n).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "z": "z"}
 
-def test_ngram_max_df_prefilter_exact_scores(spark):
+def test_ngram_max_df_prefilter_exact_scores(spark, monkeypatch):
     """The max_df candidate prefilter bounds join fanout but keeps scores
     exact: surviving pairs carry identical jaccard to the exact mode, and
     only pairs whose every shared shingle is boilerplate can disappear."""
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import dedup
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.dedup import (
         ngram_jaccard_pairs,
     )
 
+    monkeypatch.setattr(dedup, "JACCARD_THRESHOLD", 0.5)
     boiler = "all rights reserved by the example corp legal dept"
     docs = spark.createDataFrame(
         [
@@ -68,11 +70,11 @@ def test_ngram_max_df_prefilter_exact_scores(spark):
     )
     exact = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(docs, threshold=0.5).collect()
+        for r in ngram_jaccard_pairs(docs).collect()
     }
     filtered = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(docs, threshold=0.5, max_df=4).collect()
+        for r in ngram_jaccard_pairs(docs, max_df=4).collect()
     }
     # subset with identical exact scores
     assert set(filtered) <= set(exact)

@@ -79,34 +79,3 @@ def test_near_admission_within_batch_keep_min_and_replay(spark, tmp_path):
     assert sorted(r["doc_id"] for r in out_replay.collect()) == [7]
     entries = spark.read.parquet(ledger)
     assert entries.count() == 1
-
-
-def test_write_training_shards_ordered_and_bounded(spark, tmp_path):
-    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.curation import (
-        write_training_shards,
-    )
-
-    df = spark.range(0, 1000).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("text "), F.col("id")).alias("text"),
-    )
-    path = str(tmp_path / "shards")
-    write_training_shards(df, path, n_shards=4, max_records_per_file=100)
-    back = spark.read.parquet(path)
-    assert back.count() == 1000
-    # every parquet file holds a contiguous, sorted doc_id interval and
-    # respects the per-file record cap
-    meta = (
-        back.select("doc_id", F.input_file_name().alias("f"))
-        .groupBy("f")
-        .agg(
-            F.min("doc_id").alias("lo"),
-            F.max("doc_id").alias("hi"),
-            F.count("*").alias("n"),
-        )
-        .collect()
-    )
-    assert all(r["n"] <= 100 for r in meta)
-    spans = sorted((r["lo"], r["hi"]) for r in meta)
-    for (lo, hi), (lo2, _) in zip(spans, spans[1:]):
-        assert hi < lo2  # non-overlapping global order across files

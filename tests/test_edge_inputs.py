@@ -87,35 +87,13 @@ def test_cosine_topk_degenerate_vectors_screened_by_default(spark):
     """Zero-norm / null / empty embeddings are SCREENED by prep_vectors'
     default guard (the x_sim_* zero-norm contract, adjudicated by
     x_sim_zero_norm): they never appear as queries or neighbors, and
-    nothing crashes with ANSI DIVIDE_BY_ZERO.  With screen=False the
-    legacy NULL-sim flow is preserved for diagnostics."""
-    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.similarity import (
-        _ranked_topk,
-        pair_cosine,
-        prep_vectors,
-    )
-
+    nothing crashes with ANSI DIVIDE_BY_ZERO."""
     rows = [(1, [1.0, 0.0]), (2, None), (3, []), (4, [0.0, 0.0]), (5, [0.0, 2.0])]
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     out = cosine_topk(vecs, vecs, k=3).collect()
     # only the two well-formed vectors survive either side: 1<->5 pairs
     assert sorted((r["query_id"], r["neighbor_id"]) for r in out) == [(1, 5), (5, 1)]
     assert all(r["sim"] is not None for r in out)
-    # screen=False: degenerate corpus rows flow through with NULL sim
-    q = prep_vectors(
-        vecs.filter(F.col("vec_id") == 1), "vec_id", "embedding",
-        "query_id", "qd", "qn", screen=False,
-    )
-    c = prep_vectors(vecs, "vec_id", "embedding", "neighbor_id", "cd", "cn",
-                     screen=False)
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", pair_cosine().alias("sim"))
-    )
-    legacy = _ranked_topk(scored, k=4).collect()
-    assert len(legacy) == 4
-    assert sum(r["sim"] is None for r in legacy) == 3  # rows 2, 3, 4
 
 
 def test_null_coordinates_keep_null_enrichment(spark):
@@ -150,19 +128,22 @@ def test_blocked_topk_works_with_string_ids(spark):
     assert len(a) == 60
 
 
-def test_band_parameter_guards(spark):
+def test_band_parameter_guards(spark, monkeypatch):
     """Invalid band configurations fail loudly instead of silently
     weakening recall."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import dedup as D
 
     docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     sigs = D.simhash_signatures(docs)
+    monkeypatch.setattr(D, "SIMHASH_BANDS", 7)
     with pytest.raises(ValueError, match="divide SIMHASH_BITS"):
-        D.simhash_pairs(sigs, n_bands=7)
+        D.simhash_pairs(sigs)
+    monkeypatch.setattr(D, "N_PERM", 10)
     with pytest.raises(ValueError, match="divide evenly"):
-        D.lsh_bands(D.minhash_signatures(D.shingle_set(docs), n_perm=10), n_perm=10)
-    # n_bands=1 must not crash (empty earlier-band predicate)
-    assert D.simhash_pairs(sigs, n_bands=1).count() == 0
+        D.lsh_bands(D.minhash_signatures(D.shingle_set(docs)))
+    # one band must not crash (empty earlier-band predicate)
+    monkeypatch.setattr(D, "SIMHASH_BANDS", 1)
+    assert D.simhash_pairs(sigs).count() == 0
 
 
 def test_event_partition_utc_in_any_session_timezone(spark):

@@ -5,16 +5,17 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import graph
 from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.graph import (
     copurchase_pairs,
     pagerank,
 )
 
 
-def _ranks(spark, edges, nodes, n_iter):
+def _ranks(spark, edges, nodes):
     e = spark.createDataFrame(edges, "src long, dst long")
     n = spark.createDataFrame([(x,) for x in nodes], "node long")
-    out = pagerank(e, n, n_iter=n_iter)
+    out = pagerank(e, n)
     return {r["node"]: r["r"] for r in out.collect()}
 
 
@@ -29,25 +30,27 @@ def test_pagerank_star_graph_exact(spark):
         new_hub = (1 - d) / n + d * 4 * r_leaf  # leaves send all rank
         new_leaf = (1 - d) / n + d * (r_hub / 4)
         r_hub, r_leaf = new_hub, new_leaf
-    got = _ranks(spark, edges, nodes, n_iter=3)
+    got = _ranks(spark, edges, nodes)
     assert got[0] == pytest.approx(r_hub, rel=1e-12)
     for leaf in (1, 2, 3, 4):
         assert got[leaf] == pytest.approx(r_leaf, rel=1e-12)
 
 
-def test_pagerank_mass_conserved_without_dangling(spark):
+def test_pagerank_mass_conserved_without_dangling(spark, monkeypatch):
     # a cycle has no dangling nodes: total rank must stay exactly 1
     edges = [(i, (i + 1) % 6) for i in range(6)]
-    got = _ranks(spark, edges, list(range(6)), n_iter=4)
+    monkeypatch.setattr(graph, "PAGERANK_ROUNDS", 4)
+    got = _ranks(spark, edges, list(range(6)))
     assert sum(got.values()) == pytest.approx(1.0, rel=1e-12)
     # symmetric structure -> uniform ranks
     for v in got.values():
         assert v == pytest.approx(1 / 6, rel=1e-12)
 
 
-def test_pagerank_isolated_node_keeps_teleport_only(spark):
+def test_pagerank_isolated_node_keeps_teleport_only(spark, monkeypatch):
     edges = [(0, 1), (1, 0)]
-    got = _ranks(spark, edges, [0, 1, 2], n_iter=2)
+    monkeypatch.setattr(graph, "PAGERANK_ROUNDS", 2)
+    got = _ranks(spark, edges, [0, 1, 2])
     assert got[2] == pytest.approx(0.15 / 3, rel=1e-12)
     assert got[0] == got[1] > got[2]
 

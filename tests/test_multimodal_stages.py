@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import multimodal
 from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.multimodal import (
     build_codec_assets,
     decode_asset,
@@ -21,8 +22,9 @@ from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.multimodal 
 VALUES = [0, 1, 17, 128, 200, 255, 3]  # odd length exercises RIFF padding
 
 
-def test_wav_roundtrip():
-    d = decode_wav(encode_wav_pcm16(VALUES, sample_rate=8000))
+def test_wav_roundtrip(monkeypatch):
+    monkeypatch.setattr(multimodal, "WAV_SAMPLE_RATE", 8000)
+    d = decode_wav(encode_wav_pcm16(VALUES))
     assert (d["sample_rate"], d["n_channels"], d["bit_depth"]) == (8000, 1, 16)
     assert list(d["values"]) == VALUES
 

@@ -1,14 +1,29 @@
 """One value, one constant: no package function keeps a defaulted
-parameter that every call site leaves at its default.
+parameter that only tests set.
 
-A parameter nobody sets is a second home for a value that already lives
-in the function body (or in one module constant).  The scan reads every
-call site in the repository and flags a defaulted parameter of a
-module-level or nested package function (methods and dunders are out of
-scope) when each call site either omits it, passes its default value,
-or forwards a same-default parameter of a caller that is flagged too.
-Values are compared, not spellings: a default or an argument written as
-an UPPER_CASE module constant counts as the constant's literal value."""
+A parameter no workload sets is a second home for a value that already
+lives in the function body (or in one module constant), or a second code
+path that nothing but a test runs.  The scan reads every call site in the
+package, ``tools/``, ``perfbench/``, ``bench.py`` and
+``__spark_entry__.py`` and flags a defaulted parameter of a module-level
+or nested package function (methods and dunders are out of scope) when
+each call site either omits it, passes its default value, or forwards a
+same-default parameter of a function that is flagged too; a forward may
+reach the parameter through a closure.  Calls in ``tests/`` (conftest
+included) are not callers: a test that needs another value sets the
+module constant with ``monkeypatch.setattr``.  Values are compared, not
+spellings: a default or an argument written as an UPPER_CASE module
+constant counts as the constant's literal value.
+
+Three exemptions:
+
+- a parameter that a ``perfbench/`` call passes by keyword is never
+  flagged, because the benchmark's call shapes are fixed;
+- ``sources/fixtures.py`` is out of scope: its generators exist for the
+  tests (FIXTURES.md);
+- ``_TEST_SEAMS`` names output channels a test reads, which change
+  nothing the function computes.  An entry that a non-test caller sets,
+  or whose parameter is gone, is stale and fails."""
 
 from __future__ import annotations
 
@@ -17,11 +32,18 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "amazon_s3_datalake_nmea0183_real_time_ingestion_spark"
+PERFBENCH = ROOT / "perfbench"
+FIXTURES = PACKAGE / "sources" / "fixtures.py"
+
+_TEST_SEAMS = {
+    "streaming.pipeline:start_streams.results":
+        "a list the caller reads each batch's PipelineBatchResult from",
+}
 
 
 def _sources():
     yield from sorted(PACKAGE.rglob("*.py"))
-    for extra in ("tools", "perfbench", "tests"):
+    for extra in ("tools", "perfbench"):
         yield from sorted((ROOT / extra).glob("*.py"))
     yield ROOT / "bench.py"
     yield ROOT / "__spark_entry__.py"
@@ -106,6 +128,20 @@ def _enclosing_def(node, parent):
     return node if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) else None
 
 
+def _owner(name, fn, parent):
+    """The def whose parameter ``name`` is, seen from inside ``fn``: ``fn``
+    itself, or an enclosing def reached through a closure.  None when a
+    def on the way binds ``name`` itself."""
+    while fn is not None:
+        a = fn.args
+        if name in {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}:
+            return fn
+        if _rebinds(fn, name):
+            return None
+        fn = _enclosing_def(fn, parent)
+    return None
+
+
 def _bind(call, positional, defaults):
     """{parameter: argument node} of one call, plus the parameters a
     ``*args`` or ``**kwargs`` argument may set."""
@@ -124,9 +160,9 @@ def _bind(call, positional, defaults):
     return bound, unknown
 
 
-def unset_options():
-    """Sorted ``module:function.parameter`` names of package parameters
-    that every call site leaves at their default."""
+def _flagged():
+    """({parameter key: default value} of every candidate, sorted keys of
+    the candidates that no caller outside ``tests/`` sets)."""
     parsed = {path: ast.parse(path.read_text(), str(path)) for path in _sources()}
     constants = _constants(parsed.values())
 
@@ -148,11 +184,13 @@ def unset_options():
             positional, defaults = _signature(fn)
             prefix = prefix_of[fn] = f"{module}:{fn.name}"
             functions.setdefault(fn.name, []).append((prefix, positional, defaults))
+            if path == FIXTURES:
+                continue
             for name, default in defaults.items():
                 candidates[f"{prefix}.{name}"] = _value(default, constants)
 
-    blocked, forwards = set(), []  # forwards: (callee key, caller key)
-    for tree in parsed.values():
+    blocked, forwards = set(), []  # forwards: (callee key, forwarding key)
+    for path, tree in parsed.items():
         parent = _parents(tree)
         for call in ast.walk(tree):
             if not isinstance(call, ast.Call):
@@ -162,24 +200,29 @@ def unset_options():
             if name not in functions:
                 continue
             caller = _enclosing_def(call, parent)
-            caller_defaults = _signature(caller)[1] if caller is not None else {}
             for prefix, positional, defaults in functions[name]:
                 bound, unknown = _bind(call, positional, defaults)
                 for pname in defaults:
                     key = f"{prefix}.{pname}"
+                    if key not in candidates:
+                        continue
                     value, default = bound.get(pname), candidates[key]
+                    owner = _owner(value.id, caller, parent) if isinstance(value, ast.Name) else None
+                    owner_defaults = _signature(owner)[1] if owner is not None else {}
                     if pname in unknown:
                         blocked.add(key)
+                    elif PERFBENCH in path.parents and any(kw.arg == pname for kw in call.keywords):
+                        blocked.add(key)  # a fixed benchmark call shape
                     elif value is None or _same(_value(value, constants), default):
                         continue
                     elif (
                         isinstance(value, ast.Name)
-                        and value.id in caller_defaults
-                        and _same(_value(caller_defaults[value.id], constants), default)
-                        and caller in prefix_of
-                        and not _rebinds(caller, value.id)
+                        and value.id in owner_defaults
+                        and _same(_value(owner_defaults[value.id], constants), default)
+                        and owner in prefix_of
+                        and not _rebinds(owner, value.id)
                     ):
-                        forwards.append((key, f"{prefix_of[caller]}.{value.id}"))
+                        forwards.append((key, f"{prefix_of[owner]}.{value.id}"))
                     else:
                         blocked.add(key)
 
@@ -192,12 +235,27 @@ def unset_options():
             if key not in blocked and owner in blocked:
                 blocked.add(key)
                 changed = True
-    return sorted(set(candidates) - blocked)
+    return candidates, sorted(set(candidates) - blocked)
+
+
+def unset_options():
+    """Sorted ``module:function.parameter`` names of package parameters
+    that no caller outside ``tests/`` sets, less the test seams."""
+    return [key for key in _flagged()[1] if key not in _TEST_SEAMS]
 
 
 def test_no_parameter_every_caller_leaves_at_its_default():
     unset = unset_options()
     assert not unset, (
-        f"{len(unset)} defaulted parameters are never set by any caller; "
-        f"make each value a literal or a module constant: {unset}"
+        f"{len(unset)} defaulted parameters are set by no caller outside "
+        f"tests/; make each value a literal or a module constant: {unset}"
     )
+
+
+def test_test_seams_has_no_stale_entry():
+    candidates, flagged = _flagged()
+    missing = sorted(key for key in _TEST_SEAMS if key not in candidates)
+    assert not missing, f"_TEST_SEAMS names parameters that no longer exist: {missing}"
+    set_elsewhere = sorted(key for key in _TEST_SEAMS if key not in flagged)
+    assert not set_elsewhere, f"_TEST_SEAMS names parameters a non-test caller sets: {set_elsewhere}"
+    assert all(reason.strip() for reason in _TEST_SEAMS.values())

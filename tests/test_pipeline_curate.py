@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.dedup import (
     minhash_near_dup,
 )
+from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import pipeline_curate
 from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.pipeline_curate import (
     curate_corpus,
 )
@@ -25,9 +26,10 @@ def _corpus(spark):
     return d.unionByName(dups)
 
 
-def test_curate_corpus_funnel_and_dedup(spark):
+def test_curate_corpus_funnel_and_dedup(spark, monkeypatch):
     corpus = _corpus(spark)
-    out = curate_corpus(corpus, quality_threshold=-1e9)  # gate off: isolate dedup
+    monkeypatch.setattr(pipeline_curate, "QUALITY_THRESHOLD", -1e9)  # gate off: isolate dedup
+    out = curate_corpus(corpus)
     funnel = {r["stage"]: r["n_docs"] for r in out["funnel"].collect()}
     assert funnel["input"] == corpus.count()
     assert funnel["quality_gate"] == funnel["input"]  # gate disabled
@@ -54,9 +56,10 @@ def test_curate_corpus_funnel_and_dedup(spark):
     assert sum(1 for i in ids if i >= 1000000) < 50
 
 
-def test_curate_corpus_split_is_cluster_safe(spark):
+def test_curate_corpus_split_is_cluster_safe(spark, monkeypatch):
     corpus = _corpus(spark)
-    out = curate_corpus(corpus, quality_threshold=-1e9)
+    monkeypatch.setattr(pipeline_curate, "QUALITY_THRESHOLD", -1e9)
+    out = curate_corpus(corpus)
     sp = out["curated"].select("doc_id", "split")
     pairs = minhash_near_dup(
         out["curated"].select("doc_id", "text"), threshold=0.8, max_bucket=100
@@ -70,35 +73,39 @@ def test_curate_corpus_split_is_cluster_safe(spark):
     assert leaks == 0
 
 
-def test_curate_corpus_quality_gate_and_mixture(spark):
+def test_curate_corpus_quality_gate_and_mixture(spark, monkeypatch):
     corpus = _corpus(spark)
-    strict = curate_corpus(corpus, quality_threshold=1e9)
+    monkeypatch.setattr(pipeline_curate, "QUALITY_THRESHOLD", 1e9)
+    strict = curate_corpus(corpus)
     assert strict["curated"].count() == 0  # everything gated
-    out = curate_corpus(corpus, quality_threshold=-1e9)
+    monkeypatch.setattr(pipeline_curate, "QUALITY_THRESHOLD", -1e9)
+    out = curate_corpus(corpus)
     mix = out["mixture"].collect()
     assert abs(sum(r["weight"] for r in mix) - 1.0) < 1e-3
     assert all(r["n_docs"] > 0 for r in mix)
 
 
-def test_curate_corpus_decontaminates_kept_canonicals(spark):
+def test_curate_corpus_decontaminates_kept_canonicals(spark, monkeypatch):
     corpus = _corpus(spark)
     # benchmark = the exact text of doc 60 (not a planted dup) -> doc 60 dropped
     bench = corpus.filter(F.col("doc_id") == 60).select("text")
-    out = curate_corpus(corpus, benchmark=bench, quality_threshold=-1e9)
+    monkeypatch.setattr(pipeline_curate, "QUALITY_THRESHOLD", -1e9)
+    out = curate_corpus(corpus, benchmark=bench)
     ids = {r["doc_id"] for r in out["curated"].select("doc_id").collect()}
     assert 60 not in ids
     funnel = {r["stage"]: r["n_docs"] for r in out["funnel"].collect()}
     assert funnel["decontaminated"] < funnel["near_dedup"]
 
 
-def test_curate_corpus_drops_cluster_of_contaminated_variant(spark):
+def test_curate_corpus_drops_cluster_of_contaminated_variant(spark, monkeypatch):
     """A benchmark 3-gram overlapping ONLY a discarded near-dup variant's
     edited text must still remove the surviving canonical (the canonical
     is a near-copy of the contaminated text by construction)."""
     corpus = _corpus(spark)
     # find a planted pair that actually collapses (>= 0.8 jaccard) so the
     # canonical survives while its +1000000 variant is dropped
-    out_plain = curate_corpus(corpus, quality_threshold=-1e9)
+    monkeypatch.setattr(pipeline_curate, "QUALITY_THRESHOLD", -1e9)
+    out_plain = curate_corpus(corpus)
     kept = {r["doc_id"] for r in out_plain["curated"].select("doc_id").collect()}
     canon = next(i for i in range(50) if i in kept and (i + 1000000) not in kept)
     # benchmark shares a shingle only with the VARIANT's appended suffix:
@@ -108,7 +115,7 @@ def test_curate_corpus_drops_cluster_of_contaminated_variant(spark):
     bench = spark.createDataFrame([(f"{last_tok} zz9 qq8",)], ["text"])
     # sanity: the canonical's own text has no overlap with the benchmark
     assert "zz9" not in text
-    out = curate_corpus(corpus, benchmark=bench, quality_threshold=-1e9)
+    out = curate_corpus(corpus, benchmark=bench)
     ids = {r["doc_id"] for r in out["curated"].select("doc_id").collect()}
     assert canon not in ids
 

@@ -194,6 +194,9 @@ def test_containment_doc_floor_equals_pair_floor(spark, token_lists, floor):
     generation) must equal filtering the exhaustive output to pairs whose
     smaller shingle set is >= m — the doc-floor == pair-floor equivalence
     the operator docstring claims, on arbitrary random corpora."""
+    import pytest
+
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import dedup
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.dedup import (
         containment_pairs,
         shingle_set,
@@ -202,15 +205,17 @@ def test_containment_doc_floor_equals_pair_floor(spark, token_lists, floor):
     rows = [(i, " ".join(ts)) for i, ts in enumerate(token_lists)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    floored = sorted(
-        map(tuple, containment_pairs(docs, threshold=0.5, min_size=floor).collect())
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "CONTAINMENT_THRESHOLD", 0.5)
+        floored = sorted(
+            map(tuple, containment_pairs(docs, min_size=floor).collect())
+        )
+        exhaustive = containment_pairs(docs).collect()
     sz = {
         r["doc_id"]: r["n"]
         for r in shingle_set(docs, k=3)
         .groupBy("doc_id").agg(F.count("*").alias("n")).collect()
     }
-    exhaustive = containment_pairs(docs, threshold=0.5).collect()
     expected = sorted(
         tuple(r) for r in exhaustive
         if min(sz[r["contained_id"]], sz[r["container_id"]]) >= floor
@@ -359,7 +364,7 @@ def test_prefix_join_lossless_on_generated_corpora(spark, texts):
         map(tuple, jaccard_prefix_pairs(docs).collect())
     )
     via_index = sorted(
-        map(tuple, ngram_jaccard_pairs(docs, threshold=0.6).collect())
+        map(tuple, ngram_jaccard_pairs(docs).collect())
     )
     assert via_prefix == via_index
 
@@ -377,6 +382,9 @@ def test_cms_never_underestimates_under_forced_collisions(spark, counts):
     """The defining CMS invariants at width=8 (heavy collisions by
     construction): every point estimate >= its true count, and the
     self-inner-product estimate >= the true Sigma c^2."""
+    import pytest
+
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import sketches
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.sketches import (
         cms_estimate,
         cms_from_counts,
@@ -384,8 +392,10 @@ def test_cms_never_underestimates_under_forced_collisions(spark, counts):
     )
 
     cnt = spark.createDataFrame(list(counts.items()), ["k", "n"])
-    grid = cms_from_counts(cnt, "k", "n", width=8)
-    est = cms_estimate(cnt, grid, "k", width=8).collect()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(sketches, "CMS_WIDTH", 8)
+        grid = cms_from_counts(cnt, "k", "n")
+        est = cms_estimate(cnt, grid, "k").collect()
     assert all(r.est >= r.n for r in est)
     dot = cms_inner_product(grid, grid).collect()[0].est
     assert dot >= sum(n * n for n in counts.values())
@@ -437,7 +447,7 @@ def test_snm_blocking_output_is_subset_of_exhaustive_join(spark, texts):
     )
     got = set(map(tuple, jaccard_verify(shingle_set(docs), cand, 0.6)
                   .select("id_a", "id_b").collect()))
-    truth = set(map(tuple, ngram_jaccard_pairs(docs, threshold=0.6)
+    truth = set(map(tuple, ngram_jaccard_pairs(docs)
                     .select("id_a", "id_b").collect()))
     assert got <= truth
 

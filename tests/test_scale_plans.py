@@ -335,7 +335,7 @@ def test_guarded_ngram_pairs_window_tagged_df(spark):
     )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    plan = plan_of(ngram_jaccard_pairs(docs, threshold=0.6, max_df=10))
+    plan = plan_of(ngram_jaccard_pairs(docs, max_df=10))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -751,7 +751,7 @@ def test_did_monitor_isolates_rollout_effect(spark, tmp_path):
     split = day0 // 86400 + 10
     rows = []
     for dev in (1, 2, 3, 4):  # 1, 3 treated (odd); 2, 4 control
-        for day in range(20):
+        for day in range(1, 20):
             post = day >= 10
             v = 10.0 + (2.0 if post else 0.0)        # fleet-wide shock
             if dev % 2 == 1 and post:
@@ -762,7 +762,7 @@ def test_did_monitor_isolates_rollout_effect(spark, tmp_path):
     spark.createDataFrame(
         rows, "deviceid int, date_time int, battery_voltage double"
     ).write.parquet(path)
-    got = did_monitor_report(spark.read.parquet(path), split_day=split)
+    got = did_monitor_report(spark.read.parquet(path))
     assert got["split_day"] == split
     assert got["cells"]["treat_post"]["n"] == 2 * 10 * 3
     assert abs(got["did"] - 5.0) < 0.01 and got["significant"]
@@ -775,11 +775,11 @@ def test_did_monitor_isolates_rollout_effect(spark, tmp_path):
     # missing pre-period: every row post-split → insufficient cells
     late = str(tmp_path / "late")
     spark.createDataFrame(
-        [(d, day0 + (12 + i) * 86400, 10.0 + 0.1 * i)
+        [(d, day0 + 12 * 86400, 10.0 + 0.1 * i)
          for d in (1, 2) for i in range(5)],
         "deviceid int, date_time int, battery_voltage double",
     ).write.parquet(late)
-    miss = did_monitor_report(spark.read.parquet(late), split_day=split)
+    miss = did_monitor_report(spark.read.parquet(late))
     assert miss["did"] is None and not miss["significant"]
     assert miss["cells"]["treat_pre"]["n"] == 0
 
@@ -850,7 +850,6 @@ def test_monitors_screen_null_timestamps_and_null_treat(spark, tmp_path):
     )
 
     day0 = 1_700_000_000 - (1_700_000_000 % 86400)
-    split = day0 // 86400 + 10
     schema = "deviceid int, date_time int, battery_voltage double"
     clean = []
     for dev in (1, 2):
@@ -870,8 +869,8 @@ def test_monitors_screen_null_timestamps_and_null_treat(spark, tmp_path):
     spark.createDataFrame(dirty_did, schema).write.parquet(dp)
     assert mann_whitney_monitor_report(spark.read.parquet(mp)) == \
         mann_whitney_monitor_report(spark.read.parquet(cp))
-    assert did_monitor_report(spark.read.parquet(dp), split_day=split) == \
-        did_monitor_report(spark.read.parquet(cp), split_day=split)
+    assert did_monitor_report(spark.read.parquet(dp)) == \
+        did_monitor_report(spark.read.parquet(cp))
 
     # all-post + NULL-day rows: the shape that used to KeyError (phantom
     # cells pushing len(cells) past the guard) — must return did=None
@@ -880,7 +879,7 @@ def test_monitors_screen_null_timestamps_and_null_treat(spark, tmp_path):
     crashy += [(1, None, 5.0), (2, None, 6.0)]
     kp = str(tmp_path / "crashy")
     spark.createDataFrame(crashy, schema).write.parquet(kp)
-    kc = did_monitor_report(spark.read.parquet(kp), split_day=split)
+    kc = did_monitor_report(spark.read.parquet(kp))
     assert kc["did"] is None and not kc["significant"]
 
 
@@ -1222,12 +1221,7 @@ def test_sketch_store_monitor_adjudicates_daily_and_union_hll(spark, tmp_path):
     A skipped day inside the window reads missing_days 1 (ingestion
     gap); a store younger than the window is NOT flagged.
     Session-timezone invariant; NULL screens; partitioning-equivalent;
-    an empty stage reads empty/None and never fires.  ADVICE r13: the
-    data-anchored default is blind to a TRAILING gap (a stall re-anchors
-    the window), so ``as_of_day`` wall-clock anchoring must surface
-    stall days as missing — including a complete stall (empty window,
-    non-empty store) — while an as_of at the last observed day
-    reproduces the default exactly and an empty store stays silent."""
+    an empty stage reads empty/None and never fires."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
         sketch_store_monitor_report,
     )
@@ -1295,28 +1289,6 @@ def test_sketch_store_monitor_adjudicates_daily_and_union_hll(spark, tmp_path):
     assert ez == {"days": [], "n_days": 0, "missing_days": 0,
                   "union_exact": 0, "union_est": 0, "union_ok": None,
                   "healthy": None}
-
-    # wall-clock anchoring (ADVICE r13).  The store's last day is
-    # base+29; "now" two days later = a 2-day trailing stall the
-    # data-anchored mode cannot see: 5 present days, 2 missing.
-    last_day = day0 // 86400 + 29
-    az = sketch_store_monitor_report(spark.read.parquet(path), as_of_day=last_day + 2)
-    assert az["n_days"] == 5 and az["missing_days"] == 2
-    # anchored exactly at the last observed day == the default window
-    assert sketch_store_monitor_report(
-        spark.read.parquet(path), as_of_day=last_day
-    ) == got
-    # complete stall: empty window over a non-empty store surfaces the
-    # whole expected span; healthy stays None (nothing to adjudicate),
-    # missing_days carries the alarm
-    sz = sketch_store_monitor_report(spark.read.parquet(path), as_of_day=last_day + 30)
-    assert sz["n_days"] == 0 and sz["missing_days"] == 7
-    assert sz["healthy"] is None
-    # an empty STORE stays silent even in wall-clock mode (cannot
-    # distinguish "stalled" from "never deployed")
-    assert sketch_store_monitor_report(
-        spark.read.parquet(ep), as_of_day=last_day
-    ) == ez
 
 
 def test_tiere_plans_have_no_cartesian_or_nested_loop(spark, queries):

@@ -17,6 +17,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import dedup, similarity
 from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.dedup import (
     connected_components,
     connected_components_star,
@@ -64,7 +65,7 @@ def test_viral_duplicate_hot_bucket_guard(spark):
     corpus = base.unionByName(viral).unionByName(planted)
 
     sh = shingle_set(corpus, 3)
-    bands = lsh_bands(minhash_signatures(sh, 16), 16)
+    bands = lsh_bands(minhash_signatures(sh))
 
     unguarded = lsh_candidate_pairs(bands).count()
     guarded = lsh_candidate_pairs(bands, max_bucket=100).count()
@@ -78,7 +79,7 @@ def test_viral_duplicate_hot_bucket_guard(spark):
     assert all(not (100_000 <= a < 103_000) for a, _ in pairs)
 
 
-def test_boilerplate_max_df_guard(spark):
+def test_boilerplate_max_df_guard(spark, monkeypatch):
     """Every document shares a 12-token license header → each header
     shingle has df = corpus size, and exact n-gram candidate generation
     degenerates to corpus² through those buckets. ``max_df`` drops
@@ -102,7 +103,8 @@ def test_boilerplate_max_df_guard(spark):
     # the adversarial shape is real: header shingles sit in EVERY doc
     assert df_hist.agg(F.max("df")).first()[0] >= n_docs
 
-    hits = ngram_jaccard_pairs(corpus, threshold=0.5, max_df=50)
+    monkeypatch.setattr(dedup, "JACCARD_THRESHOLD", 0.5)
+    hits = ngram_jaccard_pairs(corpus, max_df=50)
     rows = {(r["id_a"], r["id_b"]): r["jaccard"] for r in hits.collect()}
     assert (3, 500_003) in rows
     # exact score despite the prefilter: the pair shares header AND core
@@ -232,7 +234,7 @@ def test_funnel_viral_user_constant_state(spark):
     assert abs(out["3_purchase"]["conv_from_prev"] - 1.0) < 1e-9
 
 
-def test_viral_embedding_hot_cell_guard(spark):
+def test_viral_embedding_hot_cell_guard(spark, monkeypatch):
     """One boilerplate page's vector duplicated 400× lands every copy in
     the SAME IVF cell: the within-cell pair join goes quadratic on that
     cell (>= 400·399/2 pairs among the copies alone). semantic_dedup's
@@ -274,8 +276,9 @@ def test_viral_embedding_hot_cell_guard(spark):
 
     # candidate volume, threshold disabled: the JOIN size is the concern
     asg = assign_to_centroids(corpus, cents)
-    unguarded = semantic_dedup_pairs(asg, threshold=-1.0).count()
-    guarded = semantic_dedup_pairs(asg, threshold=-1.0, max_cell=150).count()
+    monkeypatch.setattr(similarity, "SEMDEDUP_THRESHOLD", -1.0)
+    unguarded = semantic_dedup_pairs(asg).count()
+    guarded = semantic_dedup_pairs(asg, max_cell=150).count()
     # viral cell holds 100 organic + 400 copies = 500 -> 124,750 pairs;
     # the other 7 cells hold 100 each -> 4,950 pairs per cell
     assert unguarded == 500 * 499 // 2 + 7 * (100 * 99 // 2)
@@ -283,11 +286,12 @@ def test_viral_embedding_hot_cell_guard(spark):
     # and the REAL near-dups the guard mode still must catch: copies of
     # the viral vector are exact dups -> exact dedup's job (run first);
     # organic cells keep scoring exactly
-    organic_pairs = semantic_dedup_pairs(asg, threshold=0.99, max_cell=150)
+    monkeypatch.setattr(similarity, "SEMDEDUP_THRESHOLD", 0.99)
+    organic_pairs = semantic_dedup_pairs(asg, max_cell=150)
     assert organic_pairs.filter(F.col("id_a") >= 1_000_000).count() == 0
 
 
-def test_blas_assignment_matches_declarative_argmax(spark):
+def test_blas_assignment_matches_declarative_argmax(spark, monkeypatch):
     """assign_to_centroids_2level_blas (cogrouped per-cell matmul argmax
     — the kernel the k ∝ n production SemDeDup key uses) must agree with
     the declarative window argmax on every row, including the tricky
@@ -342,8 +346,9 @@ def test_blas_assignment_matches_declarative_argmax(spark):
     assert 9_000_002 not in a and 9_000_002 not in b
 
     # end-to-end: the collapse output is identical under either kernel
-    slow = semantic_dedup(flat, threshold=0.9).collect()
-    fast = semantic_dedup(blas, threshold=0.9).collect()
+    monkeypatch.setattr(similarity, "SEMDEDUP_THRESHOLD", 0.9)
+    slow = semantic_dedup(flat).collect()
+    fast = semantic_dedup(blas).collect()
     assert sorted(map(tuple, slow)) == sorted(map(tuple, fast))
 
 
@@ -366,7 +371,7 @@ def test_cc_raises_instead_of_silent_wrong_labels_past_round_budget(spark):
     assert all(r["cluster_id"] == 0 for r in labels.collect())
 
 
-def test_2level_assignment_matches_flat_argmax(spark):
+def test_2level_assignment_matches_flat_argmax(spark, monkeypatch):
     """assign_to_centroids_2level in probe-all mode (the exact
     shuffle-join path — nothing corpus-proportional broadcast) must agree
     with the flat broadcast argmax on every row, including round-6 ties
@@ -413,7 +418,8 @@ def test_2level_assignment_matches_flat_argmax(spark):
         r["vec_id"]: r["cluster"]
         for r in assign_to_centroids(corpus, cents).collect()
     }
-    two = assign_to_centroids_2level(corpus, cents, n_super=3)
+    monkeypatch.setattr(similarity, "IVF_N_SUPER", 3)
+    two = assign_to_centroids_2level(corpus, cents)
     got = {r["vec_id"]: r["cluster"] for r in two.collect()}
     assert got == flat
     assert got[9_000_001] == 2
@@ -432,7 +438,7 @@ def test_2level_assignment_matches_flat_argmax(spark):
     p1 = {
         r["vec_id"]: r["cluster"]
         for r in assign_to_centroids_2level(
-            corpus, cents, n_super=3, n_probe_super=2
+            corpus, cents, n_probe_super=2
         ).collect()
     }
     agree = sum(1 for v, c in p1.items() if flat[v] == c)
@@ -447,19 +453,18 @@ def test_2level_assignment_matches_flat_argmax(spark):
 
     blas_all = {
         r["vec_id"]: r["cluster"]
-        for r in assign_to_centroids_2level_blas(corpus, cents, n_super=3).collect()
+        for r in assign_to_centroids_2level_blas(corpus, cents).collect()
     }
     assert blas_all == flat
+    monkeypatch.setattr(similarity, "IVF_BLAS_PROBE_SUPER", 2)
     blas_p2 = {
         r["vec_id"]: r["cluster"]
-        for r in assign_to_centroids_2level_blas(
-            corpus, cents, n_super=3, n_probe_super=2
-        ).collect()
+        for r in assign_to_centroids_2level_blas(corpus, cents).collect()
     }
     assert blas_p2 == p1
 
 
-def test_2level_no_vector_dropped_with_duplicate_centroids(spark):
+def test_2level_no_vector_dropped_with_duplicate_centroids(spark, monkeypatch):
     """Duplicate centroid vectors create exact round-6 ties in seed
     tagging; without the self-tagging rule a seed could tag to its
     lower-id twin, leaving its own cell empty — and a probe-1 vector
@@ -485,8 +490,11 @@ def test_2level_no_vector_dropped_with_duplicate_centroids(spark):
             ]
         ).alias("embedding"),
     )
-    for fn in (assign_to_centroids_2level, assign_to_centroids_2level_blas):
-        out = fn(corpus, cents, n_super=6, n_probe_super=1)
+    monkeypatch.setattr(similarity, "IVF_N_SUPER", 6)
+    monkeypatch.setattr(similarity, "IVF_BLAS_PROBE_SUPER", 1)
+    for fn, probe in ((assign_to_centroids_2level, {"n_probe_super": 1}),
+                      (assign_to_centroids_2level_blas, {})):
+        out = fn(corpus, cents, **probe)
         assert out.count() == 200, fn.__name__
 
 

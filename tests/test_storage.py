@@ -47,7 +47,8 @@ from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.dedup impor
 )
 from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.session import get_spark
 
-spark = get_spark("durable-cc", shuffle_partitions=2)
+spark = get_spark("durable-cc")
+spark.conf.set("spark.sql.shuffle.partitions", "2")
 e = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "id_a bigint, id_b bigint")
 n = spark.createDataFrame([(x,) for x in (1, 2, 3, 4, 5, 6)], "doc_id bigint")
 labels = {r.doc_id: r.cluster_id for r in connected_components(e, n).collect()}

@@ -182,95 +182,6 @@ def test_corrupt_envelope_line_routes_to_error(spark, tmp_path):
     assert errors.count() == 1         # the corrupt line, durably parked
 
 
-def test_rollup_incremental_refresh(spark, tmp_path):
-    """Continuous aggregate: the rollup equals a full re-aggregation of
-    stage after every batch, and a batch only rewrites the event-day
-    partitions it touched (dynamic partition overwrite leaves other days'
-    files untouched)."""
-    import base64
-    import glob
-    import os
-
-    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.fixtures import soh_data
-
-    def envelope(rid, dev, data):
-        return {
-            "recordId": f"rec-{rid:04d}", "packetId": 1000 + rid,
-            "deviceType": 1, "deviceId": 100 + dev, "userApplicationId": 7,
-            "organizationId": 42, "len": 64, "status": 0,
-            "hiveRxTime": "2023-11-14 22:00:00", "data": data,
-        }
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    lake = tmp_path / "lake"
-    DAY_A, DAY_B = 1_700_000_000, 1_700_000_000 + 3 * 86_400  # Nov 14 / Nov 17
-
-    def run_available_now():
-        q = start_pipeline(spark, str(landing), str(lake), str(tmp_path / "ckpt"),
-                           available_now=True, maintain_rollup=True)
-        q.awaitTermination(180)
-
-    def assert_rollup_matches_stage():
-        stage = spark.read.parquet(str(lake / "stage"))
-        expected = (
-            stage.groupBy("deviceid", "year", "month", "day")
-            .agg(
-                F.count("*").alias("n_heartbeats"),
-                F.round(F.avg("battery_voltage"), 4).alias("avg_battery_voltage"),
-                F.round(F.avg("solar_panel_voltage"), 4).alias("avg_solar_voltage"),
-                F.min("date_time").alias("first_seen"),
-                F.max("date_time").alias("last_seen"),
-            )
-        )
-        # partitioned read-back reorders partition cols to the end — compare
-        # on an explicit column order
-        cols = ["deviceid", "year", "month", "day", "n_heartbeats",
-                "avg_battery_voltage", "avg_solar_voltage", "first_seen", "last_seen"]
-        rollup = spark.read.parquet(str(lake / "rollup_daily_device")).select(*cols)
-        assert sorted(map(tuple, rollup.collect())) == sorted(
-            map(tuple, expected.select(*cols).collect())
-        )
-
-    with open(landing / "b1.json", "w") as f:
-        for i in range(4):
-            f.write(json.dumps(envelope(i, i % 2, soh_data(i, d=DAY_A))) + "\n")
-    run_available_now()
-    assert_rollup_matches_stage()
-
-    day_a_files = sorted(glob.glob(str(lake / "rollup_daily_device/year=*/month=*/day=14/*.parquet")))
-    assert day_a_files
-    mtimes_before = [os.path.getmtime(p) for p in day_a_files]
-
-    with open(landing / "b2.json", "w") as f:
-        for i in range(3):
-            f.write(json.dumps(envelope(100 + i, i % 2, soh_data(i, d=DAY_B))) + "\n")
-    run_available_now()
-    assert_rollup_matches_stage()
-    # day-A partition untouched by day-B batch
-    assert [os.path.getmtime(p) for p in day_a_files] == mtimes_before
-
-    # replaying a batch's refresh is idempotent (recompute, not delta-merge)
-    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources.maintenance import (
-        refresh_rollup,
-    )
-
-    touched = [
-        (r["year"], r["month"], r["day"])
-        for r in spark.read.parquet(str(lake / "stage"))
-        .select("year", "month", "day").distinct().collect()
-    ]
-    refresh_rollup(spark, str(lake / "stage"), str(lake / "rollup_daily_device"), touched)
-    assert_rollup_matches_stage()
-    # and the replay leaves exactly one row per (device, day) group — a
-    # delta-merge scheme would have doubled them
-    rollup = spark.read.parquet(str(lake / "rollup_daily_device"))
-    assert (
-        rollup.groupBy("deviceid", "year", "month", "day").count()
-        .filter(F.col("count") > 1).count() == 0
-    )
-
-
 def test_ingest_to_queryable_within_two_triggers(spark, tmp_path):
     """End-to-end latency gate (BASELINE.md: ingest → queryable ≤ 2
     trigger intervals, from the reference's 60 s Firehose buffer,
@@ -536,27 +447,6 @@ def test_process_batch_job_budget(spark, tmp_path):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 9
 
 
-def test_max_bytes_per_trigger_splits_batches(spark, tmp_path):
-    """maxBytesPerTrigger (Firehose's 64 MB size buffer,
-    cdk_datalake_mvp_stack.py:167) must reach the file source: a byte cap
-    smaller than any single file forces one-file micro-batches, so four
-    landing files drain as four batches under availableNow."""
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    for b in range(4):
-        with open(landing / f"batch-{b:04d}.json", "w") as f:
-            for row in envelope_rows(n_soh=2, n_sensor=1, n_unknown=0):
-                f.write(json.dumps(row) + "\n")
-    results = []
-    q = start_pipeline(
-        spark, str(landing), str(tmp_path / "lake"), str(tmp_path / "ckpt"),
-        available_now=True, max_bytes_per_trigger=1, results=results,
-    )
-    q.awaitTermination(180)
-    assert len(results) == 4
-    assert all(r.counts == {"soh": 2, "sensor": 1} for r in results)
-
-
 def _drain(spark, tmp_path) -> None:
     """Drain the landing dir into the lake (one available-now run over the
     test's checkpoint)."""
@@ -590,6 +480,7 @@ def test_maintenance_cadence_emits_drift_report(spark, tmp_path):
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.sources import (
         maintenance,
     )
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.storage import release_scope
 
     declared = StructType(
         STAGE_SCHEMA.fields
@@ -606,9 +497,8 @@ def test_maintenance_cadence_emits_drift_report(spark, tmp_path):
         _drain(spark, tmp_path)
         cached = set(dict(sc._jsc.getPersistentRDDs()).keys())
         rep = maintenance.pipeline_maintenance(spark, stage, declared)
-        # the pass frees every block it stored (a subset, not equality:
-        # the drain's own asynchronous unpersist may land during the pass)
-        assert set(dict(sc._jsc.getPersistentRDDs()).keys()) <= cached
+        # the pass frees every block it stored
+        assert set(dict(sc._jsc.getPersistentRDDs()).keys()) == cached
         # declared stage schema + y/m/d partition ints — no drift
         assert set(rep["drift_status_counts"]) == {"ok"}
         assert rep["drift_status_counts"]["ok"] == len(rep["drift"])
@@ -619,20 +509,23 @@ def test_maintenance_cadence_emits_drift_report(spark, tmp_path):
             "heavy_hitters", "sketch_store",
         }
         df = spark.read.parquet(stage)
-        for name, got in monitors.items():
-            if name == "drift_psi":
-                continue
-            fn = getattr(maintenance, f"{name}_monitor_report", None) or getattr(
-                maintenance, f"{name}_report"
-            )
-            assert got == fn(df), name
-        # PSI: the first pass writes the reference profile, the second
-        # scores the stage zone against it
-        if n_files == 2:
-            assert monitors["drift_psi"] == {"bootstrapped": True, "columns": {}}
-        else:
-            assert monitors["drift_psi"]["bootstrapped"] is False
-            assert monitors["drift_psi"] == maintenance.drift_psi_report(df, profile)
+        # the direct calls free what they store too, so no block they
+        # leave is reclaimed during the next pass
+        with release_scope():
+            for name, got in monitors.items():
+                if name == "drift_psi":
+                    continue
+                fn = getattr(maintenance, f"{name}_monitor_report", None) or getattr(
+                    maintenance, f"{name}_report"
+                )
+                assert got == fn(df), name
+            # PSI: the first pass writes the reference profile, the second
+            # scores the stage zone against it
+            if n_files == 2:
+                assert monitors["drift_psi"] == {"bootstrapped": True, "columns": {}}
+            else:
+                assert monitors["drift_psi"]["bootstrapped"] is False
+                assert monitors["drift_psi"] == maintenance.drift_psi_report(df, profile)
         # the quality gate catches the synthetic files REPLAYING
         # identical envelopes: k files of the same 2 rows leave
         # 2*(k-1) duplicate deliveries in stage
@@ -796,11 +689,11 @@ def test_multi_stream_routing_isolated(spark, tmp_path):
             f.write(json.dumps(row) + "\n")
 
     results: dict = {}
-    qs = start_streams(spark, base, ["fleet-a", "fleet-b"],
-                       results=results, available_now=True)
+    qs = start_streams(spark, base, ["fleet-a", "fleet-b"], results=results)
     assert set(qs) == {"fleet-a", "fleet-b"}
     for q in qs.values():
-        q.awaitTermination(180)
+        q.processAllAvailable()
+        q.stop()
 
     # independent per-stream counters and stage rows
     assert results["fleet-a"][0].counts == {"soh": 4, "sensor": 1}
@@ -813,10 +706,10 @@ def test_multi_stream_routing_isolated(spark, tmp_path):
     with open(os.path.join(ra.landing_dir, "b1.json"), "w") as f:
         for row in envelope_rows(n_soh=3, n_sensor=0, n_unknown=0):
             f.write(json.dumps(row) + "\n")
-    qs2 = start_streams(spark, base, ["fleet-a", "fleet-b"],
-                        results=results, available_now=True)
+    qs2 = start_streams(spark, base, ["fleet-a", "fleet-b"], results=results)
     for q in qs2.values():
-        q.awaitTermination(180)
+        q.processAllAvailable()
+        q.stop()
     assert spark.read.parquet(os.path.join(ra.lake_dir, "stage")).count() == 7
     assert spark.read.parquet(os.path.join(rb.lake_dir, "stage")).count() == 2
     assert len(results["fleet-a"]) == 2

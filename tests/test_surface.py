@@ -28,8 +28,6 @@ _KEPT_WITHOUT_CALLER = {
         "the library form the cosine_sim SQL function is checked against",
     ("operators/classify.py", "soh_branch"): "the reference's SOH branch (hello.py:79-96)",
     ("operators/classify.py", "sensor_branch"): "the reference's sensor branch (hello.py:79-96)",
-    ("operators/curation.py", "write_training_shards"):
-        "the curated corpus's shard writer; no key writes files",
     ("operators/dedup_ledger.py", "_read_ledger"): "reads admit_new_documents' ledger",
     ("operators/dedup_ledger.py", "admit_new_documents"):
         "exact-fingerprint admission ledger; its tests pin replay idempotency",

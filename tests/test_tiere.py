@@ -413,7 +413,7 @@ def test_containment_catches_wrapped_doc_jaccard_misses(spark, tmp_path):
     rows = [(1, body), (2, f"{header} {body} {footer}")]
     corpus = spark.createDataFrame(rows, "doc_id long, text string")
 
-    got = containment_pairs(corpus, threshold=0.9).collect()
+    got = containment_pairs(corpus).collect()
     assert len(got) == 1
     r = got[0]
     # every 3-gram of the body is a contiguous 3-gram of the wrapper
@@ -421,10 +421,10 @@ def test_containment_catches_wrapped_doc_jaccard_misses(spark, tmp_path):
     assert r["containment"] == 1.0
     # ...but resemblance is far below any near-dup threshold
     assert r["jaccard"] < 0.2
-    assert ngram_jaccard_pairs(corpus, threshold=0.6).count() == 0
+    assert ngram_jaccard_pairs(corpus).count() == 0
 
     # the max_df guard path scores surviving pairs identically
-    guarded = containment_pairs(corpus, threshold=0.9, max_df=10).collect()
+    guarded = containment_pairs(corpus, max_df=10).collect()
     assert [tuple(x) for x in guarded] == [tuple(x) for x in got]
 
 
@@ -447,11 +447,11 @@ def test_containment_min_size_floor_stops_tiny_boilerplate(spark, tmp_path):
     ]
     corpus = spark.createDataFrame(rows, "doc_id long, text string")
 
-    unfloored = containment_pairs(corpus, threshold=0.9)
+    unfloored = containment_pairs(corpus)
     # tiny doc 1 pairs with EVERY chrome carrier (containment 1.0 each)
     assert unfloored.filter("contained_id = 1").count() == 2
 
-    floored = containment_pairs(corpus, threshold=0.9, min_size=10)
+    floored = containment_pairs(corpus, min_size=10)
     rowsf = floored.collect()
     # the tiny doc is gone from candidates entirely...
     assert all(r["contained_id"] != 1 and r["container_id"] != 1 for r in rowsf)

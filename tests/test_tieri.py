@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import pq
 from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.pq import (
     pq_encode,
     pq_report,
@@ -24,8 +25,8 @@ def _embeddings(spark):
 
 def test_pq_codes_in_range_and_every_vector_coded(spark):
     e = _embeddings(spark)
-    cb = pq_train(e, dim=64, m=8, ksub=16)
-    enc = pq_encode(e, cb, dim=64, m=8)
+    cb = pq_train(e, dim=64)
+    enc = pq_encode(e, cb, dim=64)
     assert enc.count() == e.count()
     bad = enc.filter(
         (F.size("pq_codes") != 8)
@@ -35,17 +36,19 @@ def test_pq_codes_in_range_and_every_vector_coded(spark):
     assert bad == 0
 
 
-def test_pq_codeword_vectors_reconstruct_to_their_codeword(spark):
+def test_pq_codeword_vectors_reconstruct_to_their_codeword(spark, monkeypatch):
     """A vector that IS a codeword must code to itself with zero error in
     every subspace — the PQ fixed point (the scalar-quantization
     lattice-point invariant's product analog)."""
     dim, m, ksub = 8, 4, 2
+    monkeypatch.setattr(pq, "PQ_M", m)
+    monkeypatch.setattr(pq, "PQ_KSUB", ksub)
     # 2 seed vectors -> after one Lloyd round each seed's cell mean is a
     # codeword; make each seed its own cell by separating them
     rows = [(0, [0.0] * dim), (1, [10.0] * dim), (2, [0.1] * dim), (3, [9.9] * dim)]
     e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cb = pq_train(e, dim=dim, m=m, ksub=ksub)
-    rep = {r["vec_id"]: r for r in pq_report(e, cb, dim=dim, m=m).collect()}
+    cb = pq_train(e, dim=dim)
+    rep = {r["vec_id"]: r for r in pq_report(e, cb, dim=dim).collect()}
     # codewords are cell means: vec 0+2 -> mean(0.0, 0.1)=0.05 etc.; all
     # four vectors sit 0.05 from their codeword in every component
     for vid in (0, 1, 2, 3):
@@ -54,21 +57,23 @@ def test_pq_codeword_vectors_reconstruct_to_their_codeword(spark):
     e2 = spark.createDataFrame(
         [(0, [0.05] * dim), (1, [9.95] * dim)], "vec_id long, embedding array<float>"
     )
-    rep2 = pq_report(e2, cb, dim=dim, m=m).collect()
+    rep2 = pq_report(e2, cb, dim=dim).collect()
     assert all(r["mse"] == 0.0 and r["cos_fidelity"] == 1.0 for r in rep2)
 
 
-def test_pq_tie_breaks_to_lowest_code_id(spark):
+def test_pq_tie_breaks_to_lowest_code_id(spark, monkeypatch):
     """Two identical codewords (duplicate seed vectors) are a permanent
     round-6 tie — every assignment must pick the LOWER code_id, matching
     the oracle's ORDER BY dist ASC, code_id ASC."""
     dim, m = 4, 2
+    monkeypatch.setattr(pq, "PQ_M", m)
+    monkeypatch.setattr(pq, "PQ_KSUB", 2)
     e = spark.createDataFrame(
         [(0, [1.0] * dim), (1, [1.0] * dim), (2, [1.2] * dim)],
         "vec_id long, embedding array<float>",
     )
-    cb = pq_train(e, dim=dim, m=m, ksub=2)
-    enc = pq_encode(e, cb, dim=dim, m=m).collect()
+    cb = pq_train(e, dim=dim)
+    enc = pq_encode(e, cb, dim=dim).collect()
     for r in enc:
         assert list(r["pq_codes"]) == [0, 0], r
 
@@ -97,13 +102,13 @@ def test_pq_encode_plan_is_mapside_broadcast(spark):
     hash exchanges in the plan belong to the k-row codebook lineage
     feeding the broadcast), and no Python eval nodes anywhere."""
     e = _embeddings(spark)
-    cb = pq_train(e, dim=64, m=8, ksub=16)
+    cb = pq_train(e, dim=64)
     # materialize the trained codebook so the encode plan is ONLY encode
     cb_rows = cb.collect()  # m*ksub rows — control-plane size
     cb2 = spark.createDataFrame(
         cb_rows, "subspace int, code_id int, codeword array<double>"
     )
-    plan = plan_of(pq_encode(e, cb2, dim=64, m=8))
+    plan = plan_of(pq_encode(e, cb2, dim=64))
     assert "BroadcastNestedLoopJoin" in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     # corpus side: scan feeds the join directly; the lone hash exchange
@@ -111,13 +116,14 @@ def test_pq_encode_plan_is_mapside_broadcast(spark):
     assert plan.count("Exchange hashpartitioning") <= 1
 
 
-def test_cms_stream_and_counts_builds_agree_and_never_underestimate(spark):
+def test_cms_stream_and_counts_builds_agree_and_never_underestimate(spark, monkeypatch):
     """The occurrence-stream grid (production path) and the derived-from-
     exact-counts grid (adjudication path) must be cell-identical, and
     every key's estimate must be >= its exact count — the CMS invariant."""
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.functions.text import (
         tokens,
     )
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import sketches
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.sketches import (
         cms_estimate,
         cms_from_counts,
@@ -127,10 +133,11 @@ def test_cms_stream_and_counts_builds_agree_and_never_underestimate(spark):
     d = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     tok = d.select(F.explode(tokens("text")).alias("token"))
     cnt = tok.groupBy("token").agg(F.count("*").alias("n"))
-    g1 = cms_from_stream(tok, "token", width=64)
-    g2 = cms_from_counts(cnt, "token", "n", width=64)
+    monkeypatch.setattr(sketches, "CMS_WIDTH", 64)
+    g1 = cms_from_stream(tok, "token")
+    g2 = cms_from_counts(cnt, "token", "n")
     assert g1.exceptAll(g2).count() == 0 and g2.exceptAll(g1).count() == 0
-    est = cms_estimate(cnt, g2, "token", width=64)
+    est = cms_estimate(cnt, g2, "token")
     assert est.filter(F.col("est") < F.col("n")).count() == 0
     # width 64 << distinct tokens forces real collisions: some overcount>0
     assert est.filter(F.col("est") > F.col("n")).count() > 0
@@ -159,23 +166,26 @@ def test_bpe_greedy_single_pass_on_identical_run(spark):
     }
 
 
-def test_bpe_learns_deterministic_merges_and_raises_when_exhausted(spark):
+def test_bpe_learns_deterministic_merges_and_raises_when_exhausted(spark, monkeypatch):
     """Tie-break (count desc, lhs asc, rhs asc) and later rounds seeing
     merged symbols; single-symbol-only vocab raises loudly."""
     import pytest
 
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import bpe
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.bpe import (
         bpe_learn,
     )
 
     words = spark.createDataFrame([("abab", 3), ("ab", 2)], "word string, wn long")
-    merges, rep = bpe_learn(spark, words, rounds=2)
+    monkeypatch.setattr(bpe, "BPE_ROUNDS", 2)
+    merges, rep = bpe_learn(spark, words)
     got = [(r["round"], r["lhs"], r["rhs"], r["pair_n"]) for r in merges.collect()]
     # r1: pairs ab=8 (3+3+2), ba=3 -> merge (a,b); r2: (ab,ab)=3 -> 'abab'
     assert got == [(1, "a", "b", 8), (2, "ab", "ab", 3)]
     # after r2 every word is one symbol -> round 3 must raise loudly
+    monkeypatch.setattr(bpe, "BPE_ROUNDS", 3)
     with pytest.raises(RuntimeError):
-        bpe_learn(spark, words, rounds=3)
+        bpe_learn(spark, words)
 
 
 def test_pq_blas_encode_matches_declarative(spark):
@@ -189,23 +199,24 @@ def test_pq_blas_encode_matches_declarative(spark):
     )
 
     e = _embeddings(spark)
-    cb = pq_train(e, dim=64, m=8, ksub=16)
+    cb = pq_train(e, dim=64)
     a = {
         r["vec_id"]: (list(r["pq_codes"]), list(r["pq_recon"]))
-        for r in pq_encode(e, cb, dim=64, m=8).collect()
+        for r in pq_encode(e, cb, dim=64).collect()
     }
     b = {
         r["vec_id"]: (list(r["pq_codes"]), list(r["pq_recon"]))
-        for r in pq_encode_blas(e, cb, dim=64, m=8).collect()
+        for r in pq_encode_blas(e, cb, dim=64).collect()
     }
     assert a == b
 
 
-def test_cms_estimate_never_seen_key_is_zero(spark):
+def test_cms_estimate_never_seen_key_is_zero(spark, monkeypatch):
     """A key absent from the stream must get est=0 (canonical CMS answer
     for empty cells) and must NOT vanish from the output — the sparse
     grid probe is a left join with absent cells counting 0 (code-review
     r7 finding)."""
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import sketches
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.sketches import (
         cms_estimate,
         cms_from_stream,
@@ -214,12 +225,13 @@ def test_cms_estimate_never_seen_key_is_zero(spark):
     items = spark.createDataFrame([("a",), ("a",), ("b",)], "token string")
     # width 4096 >> 2 distinct keys: some probe cells of an unseen key
     # are guaranteed empty
-    g = cms_from_stream(items, "token", width=4096)
+    monkeypatch.setattr(sketches, "CMS_WIDTH", 4096)
+    g = cms_from_stream(items, "token")
     probe = spark.createDataFrame(
         [("a",), ("never-seen-key",)], "token string"
     )
     est = {r["token"]: r["est"] for r in
-           cms_estimate(probe, g, "token", width=4096).collect()}
+           cms_estimate(probe, g, "token").collect()}
     assert est["a"] >= 2
     assert est["never-seen-key"] == 0
 
@@ -238,7 +250,7 @@ def test_bpe_chars_of_empty_word_is_empty_array(spark):
     assert out == {"": [], "ab": ["a", "b"]}
 
 
-def test_pq_blas_degenerate_rows_yield_null_not_crash(spark):
+def test_pq_blas_degenerate_rows_yield_null_not_crash(spark, monkeypatch):
     """NULL / wrong-length embeddings must produce NULL codes+recon from
     the BLAS kernel (matching declarative NULL propagation), not an
     np.array crash of the whole batch (code-review r7 finding)."""
@@ -247,14 +259,16 @@ def test_pq_blas_degenerate_rows_yield_null_not_crash(spark):
     )
 
     dim, m = 8, 4
+    monkeypatch.setattr(pq, "PQ_M", m)
+    monkeypatch.setattr(pq, "PQ_KSUB", 2)
     e = spark.createDataFrame(
         [(0, [1.0] * dim), (1, None), (2, [1.0] * 3), (3, [2.0] * dim)],
         "vec_id long, embedding array<float>",
     )
     cb = pq_train(
-        e.filter(F.col("vec_id").isin(0, 3)), dim=dim, m=m, ksub=2
+        e.filter(F.col("vec_id").isin(0, 3)), dim=dim
     )
-    out = {r["vec_id"]: r for r in pq_encode_blas(e, cb, dim=dim, m=m).collect()}
+    out = {r["vec_id"]: r for r in pq_encode_blas(e, cb, dim=dim).collect()}
     assert out[1]["pq_codes"] is None and out[1]["pq_recon"] is None
     assert out[2]["pq_codes"] is None and out[2]["pq_recon"] is None
     # only vec 0 seeds (ids < ksub=2); both valid rows land in its cell
@@ -263,10 +277,11 @@ def test_pq_blas_degenerate_rows_yield_null_not_crash(spark):
     assert list(out[3]["pq_recon"]) == [1.5] * dim  # cell mean of 1.0, 2.0
 
 
-def test_cms_grids_merge_across_batches(spark):
+def test_cms_grids_merge_across_batches(spark, monkeypatch):
     """CMS mergeability (the streaming contract): grids built per batch
     and summed cell-wise equal the grid built over the whole stream —
     so per-microbatch sketches aggregate with one sketch-sized shuffle."""
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import sketches
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.sketches import (
         cms_from_stream,
     )
@@ -277,11 +292,10 @@ def test_cms_grids_merge_across_batches(spark):
     )
 
     tok = d.select("doc_id", F.explode(tokens("text")).alias("token"))
-    whole = cms_from_stream(tok, "token", width=64)
-    b1 = cms_from_stream(tok.filter(F.col("doc_id") % 2 == 0), "token",
-                         width=64)
-    b2 = cms_from_stream(tok.filter(F.col("doc_id") % 2 == 1), "token",
-                         width=64)
+    monkeypatch.setattr(sketches, "CMS_WIDTH", 64)
+    whole = cms_from_stream(tok, "token")
+    b1 = cms_from_stream(tok.filter(F.col("doc_id") % 2 == 0), "token")
+    b2 = cms_from_stream(tok.filter(F.col("doc_id") % 2 == 1), "token")
     merged = (
         b1.unionByName(b2).groupBy("j", "bucket").agg(F.sum("cell").alias("cell"))
     )
@@ -289,9 +303,10 @@ def test_cms_grids_merge_across_batches(spark):
     assert whole.exceptAll(merged).count() == 0
 
 
-def test_linreg_gd_converges_and_is_deterministic(spark):
+def test_linreg_gd_converges_and_is_deterministic(spark, monkeypatch):
     """GD on a noiseless y = 3 + 2x relation must drive mse monotonically
     toward 0 and reproduce the identical trajectory on a second run."""
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import regression
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.regression import (
         linreg_gd,
     )
@@ -300,9 +315,11 @@ def test_linreg_gd_converges_and_is_deterministic(spark):
         (F.col("id") / 100.0).alias("x"),
         (3.0 + 2.0 * (F.col("id") / 100.0)).alias("y"),
     )
-    t1 = linreg_gd(spark, df, "x", "y", rounds=5, lr=0.3).collect()
+    monkeypatch.setattr(regression, "GD_ROUNDS", 5)
+    monkeypatch.setattr(regression, "GD_LR", 0.3)
+    t1 = linreg_gd(spark, df, "x", "y").collect()
     mses = [r["mse"] for r in t1]
     assert all(a > b for a, b in zip(mses, mses[1:]))  # strictly improving
     assert mses[-1] < mses[0] / 2
-    t2 = linreg_gd(spark, df, "x", "y", rounds=5, lr=0.3).collect()
+    t2 = linreg_gd(spark, df, "x", "y").collect()
     assert [tuple(r) for r in t1] == [tuple(r) for r in t2]

@@ -93,7 +93,7 @@ def test_prefix_join_equals_inverted_index_join(spark):
         jaccard_prefix_pairs(corpus), "id_a", "id_b", "jaccard"
     )
     via_index = _rows(
-        ngram_jaccard_pairs(corpus, threshold=0.6), "id_a", "id_b", "jaccard"
+        ngram_jaccard_pairs(corpus), "id_a", "id_b", "jaccard"
     )
     assert via_prefix == via_index
     assert len(via_prefix) > 0
@@ -116,7 +116,7 @@ def test_prefix_candidates_cover_all_qualifying_pairs(spark):
     sh = shingle_set(corpus).localCheckpoint()
     cands = set(_rows(prefix_candidate_pairs(sh), "id_a", "id_b"))
     truth = set(
-        _rows(ngram_jaccard_pairs(corpus, threshold=0.6), "id_a", "id_b")
+        _rows(ngram_jaccard_pairs(corpus), "id_a", "id_b")
     )
     assert truth <= cands
 
@@ -201,7 +201,7 @@ def test_snm_output_is_subset_of_exact_join_and_catches_planted(spark):
     their full prefix, SNM's design case — are all caught."""
     out = set(_rows(REGISTRY["x_block_sorted"].fn(spark, SF_SMALL), "id_a", "id_b"))
     corpus = _doc_corpus_small(spark).localCheckpoint()
-    truth = set(_rows(ngram_jaccard_pairs(corpus, threshold=0.6), "id_a", "id_b"))
+    truth = set(_rows(ngram_jaccard_pairs(corpus), "id_a", "id_b"))
     assert out <= truth
     planted = {p for p in truth if p[1] == p[0] + 1000000}
     assert len(planted) > 0
@@ -285,11 +285,12 @@ def test_join_card_never_underestimates_and_self_dominates(spark):
     assert out["returned_join_partkey"].exact_rows <= out["self_join_partkey"].exact_rows
 
 
-def test_cms_inner_product_exact_when_no_collisions(spark):
+def test_cms_inner_product_exact_when_no_collisions(spark, monkeypatch):
     """With fewer keys than buckets and distinct cells, a wide sketch has
     no collisions and the inner-product estimate is EXACT."""
     from pyspark.sql import functions as FF
 
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import sketches
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.sketches import (
         cms_from_counts,
         cms_inner_product,
@@ -298,7 +299,8 @@ def test_cms_inner_product_exact_when_no_collisions(spark):
     cnt = spark.createDataFrame(
         [(f"k{i}", i + 1) for i in range(10)], ["k", "n"]
     )
-    grid = cms_from_counts(cnt, "k", "n", width=65536)
+    monkeypatch.setattr(sketches, "CMS_WIDTH", 65536)
+    grid = cms_from_counts(cnt, "k", "n")
     est = cms_inner_product(grid, grid).collect()[0].est
     truth = sum((i + 1) ** 2 for i in range(10))
     assert est == truth

@@ -399,11 +399,12 @@ def test_cuped_planted_user_effect(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_mmr_skips_redundant_candidate(spark):
+def test_mmr_skips_redundant_candidate(spark, monkeypatch):
     """Three candidates: A (most relevant), A' (near-dup of A, second most
     relevant), B (less relevant, orthogonal).  Pure relevance ranks
     A, A', B; MMR must pick A then B — the near-dup's redundancy penalty
     pushes it behind the diverse item."""
+    from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators import retrieval
     from amazon_s3_datalake_nmea0183_real_time_ingestion_spark.operators.retrieval import (
         mmr_rerank,
     )
@@ -416,10 +417,11 @@ def test_mmr_skips_redundant_candidate(spark):
          (2, 3, 0.0), (3, 2, 0.0)],
         ["ia", "ib", "s"],
     )
-    out = {r.pos: r.vec_id for r in mmr_rerank(cand, sim_cc, k=3, lam=0.7).collect()}
+    out = {r.pos: r.vec_id for r in mmr_rerank(cand, sim_cc, k=3).collect()}
     assert out == {1: 1, 2: 3, 3: 2}
     # lam = 1.0 degenerates to pure relevance order
-    pure = {r.pos: r.vec_id for r in mmr_rerank(cand, sim_cc, k=3, lam=1.0).collect()}
+    monkeypatch.setattr(retrieval, "MMR_LAMBDA", 1.0)
+    pure = {r.pos: r.vec_id for r in mmr_rerank(cand, sim_cc, k=3).collect()}
     assert pure == {1: 1, 2: 2, 3: 3}
 
 
@@ -433,7 +435,7 @@ def test_mmr_pool_exhaustion_stops(spark):
     sim_cc = spark.createDataFrame(
         [(1, 2, 0.1), (2, 1, 0.1)], ["ia", "ib", "s"]
     )
-    out = mmr_rerank(cand, sim_cc, k=5, lam=0.7).collect()
+    out = mmr_rerank(cand, sim_cc, k=5).collect()
     assert sorted((r.pos, r.vec_id) for r in out) == [(1, 1), (2, 2)]
 
 
@@ -452,7 +454,7 @@ def test_mmr_sparse_pairwise_table_zero_redundancy(spark):
     sim_cc = spark.createDataFrame(
         [(1, 2, 0.99), (2, 1, 0.99)], ["ia", "ib", "s"]
     )
-    out = {r.pos: r.vec_id for r in mmr_rerank(cand, sim_cc, k=3, lam=0.7).collect()}
+    out = {r.pos: r.vec_id for r in mmr_rerank(cand, sim_cc, k=3).collect()}
     assert out == {1: 1, 2: 3, 3: 2}
 
 

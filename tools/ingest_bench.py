@@ -15,13 +15,11 @@ the drained lake, timed apart from the drain, and prints ONE JSON line::
 The default 200k-envelope run stages 180k SOH rows over 43 event days ×
 450 devices.
 
-Usage: python tools/ingest_bench.py [n_records] [n_files] [--latency [trigger_s]]
+Usage: python tools/ingest_bench.py [n_records] [n_files]
 
-``--latency`` measures the BASELINE.md end-to-end target instead of
-throughput: run the pipeline on its REAL processing-time trigger, land a
-record while it runs, and report arrival → stage-queryable seconds
-against the ≤ 2-trigger bound (the reference's Firehose 60 s buffer →
-"queryable within two buffer flushes"). Exit code 1 if the bound fails.
+Arrival-to-queryable latency is not measured here: the ≤ 2-trigger bound
+is ``tests/test_streaming_pipeline.py::test_ingest_to_queryable_within_two_triggers``,
+and perfbench's ``ingest`` run reports ``latency_p50_s`` / ``latency_p75_s``.
 """
 
 from __future__ import annotations
@@ -95,71 +93,8 @@ def generate(landing: str, n: int, n_files: int) -> None:
                 }) + "\n")
 
 
-def latency_mode(trigger_seconds: int) -> int:
-    """Arrival→stage-visible latency on a live trigger; asserts ≤ 2 triggers."""
-    root = tempfile.mkdtemp(prefix="ingest_latency_")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing)
-    try:
-        spark = get_spark("ingest-latency")
-        spark.sparkContext.setLogLevel("ERROR")
-        stage = os.path.join(root, "lake", "stage")
-
-        def stage_count() -> int:
-            try:
-                return spark.read.parquet(stage).count()
-            except Exception:
-                return 0
-
-        q = start_pipeline(
-            spark, landing, os.path.join(root, "lake"),
-            os.path.join(root, "ckpt"), trigger_seconds=trigger_seconds,
-        )
-        try:
-            with open(os.path.join(landing, "warm.json"), "w") as f:
-                f.write(json.dumps(_envelope(1)) + "\n")
-            deadline = time.monotonic() + 120
-            while stage_count() < 1 and time.monotonic() < deadline:
-                time.sleep(0.5)
-            if stage_count() < 1:
-                print(json.dumps({"metric": "ingest_latency_s", "error": "warm-up never staged"}))
-                return 1
-            warm = stage_count()
-            with open(os.path.join(landing, "probe.json"), "w") as f:
-                f.write(json.dumps(_envelope(2)) + "\n")
-            t0 = time.monotonic()
-            bound = 2 * trigger_seconds
-            while stage_count() < warm + 1 and time.monotonic() - t0 < bound + 30:
-                time.sleep(0.25)
-            latency = time.monotonic() - t0
-            ok = stage_count() >= warm + 1 and latency <= bound
-            print(json.dumps({
-                "metric": "ingest_latency_s",
-                "value": round(latency, 2),
-                "trigger_seconds": trigger_seconds,
-                "bound_s": bound,
-                "within_two_triggers": ok,
-            }))
-            return 0 if ok else 1
-        finally:
-            q.stop()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _envelope(rid: int) -> dict:
-    return {
-        "recordId": f"lat-{rid:08d}", "packetId": 1000 + rid, "deviceType": 1,
-        "deviceId": 100 + rid, "userApplicationId": 7, "organizationId": 42,
-        "len": 64, "status": 0, "hiveRxTime": "2023-11-14 22:00:00",
-        "data": soh_data(rid),
-    }
-
-
 def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    if "--latency" in sys.argv:
-        return latency_mode(int(args[0]) if args else 6)
+    args = sys.argv[1:]
     n = int(args[0]) if len(args) > 0 else 200_000
     n_files = int(args[1]) if len(args) > 1 else 8
     root = tempfile.mkdtemp(prefix="ingest_bench_")

@@ -48,7 +48,7 @@ def main() -> int:
         _t(spark, "shingle_set", sh)
         pairs_core = D.ngram_intersection_pairs(sh, max_df=10)
         _t(spark, "ngram_intersection_pairs", pairs_core)
-        edges = D.ngram_jaccard_pairs(corpus, threshold=0.6, max_df=10).select(
+        edges = D.ngram_jaccard_pairs(corpus, max_df=10).select(
             "id_a", "id_b"
         )
         _t(spark, "ngram_jaccard_pairs", edges)

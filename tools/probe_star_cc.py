@@ -75,14 +75,7 @@ def main() -> None:
         f"{n_nodes} nodes, derived+checkpointed in {t_pairs:.1f}s"
     )
 
-    results = {}
-    for name, fn, iters in (
-        ("star", connected_components_star, 60),
-        ("plain", connected_components, CHAIN_LEN + 50),
-    ):
-        stats: dict = {}
-        t0 = time.time()
-        labels = fn(pairs, nodes, max_iters=iters, stats=stats).localCheckpoint()
+    def report(name: str, labels, stats: dict, t0: float):
         n = labels.count()
         wall = time.time() - t0
         chain_census = (
@@ -90,18 +83,27 @@ def main() -> None:
             .groupBy("cluster_id")
             .count()
         ).collect()
-        results[name] = labels
         print(
             f"{name}: rounds={stats['rounds']} converged={stats['converged']} "
             f"wall={wall:.1f}s labels={n} "
             f"chain components={len(chain_census)} "
             f"largest={max(r['count'] for r in chain_census)}"
         )
+        return labels
+
+    stats: dict = {}
+    t0 = time.time()
+    star = connected_components_star(pairs, nodes, max_iters=60, stats=stats)
+    star = report("star", star.localCheckpoint(), stats, t0)
+    stats = {}
+    t0 = time.time()
+    plain = connected_components(pairs, nodes, max_iters=CHAIN_LEN + 50, stats=stats)
+    plain = report("plain", plain.localCheckpoint(), stats, t0)
 
     diff = (
-        results["star"]
+        star
         .withColumnRenamed("cluster_id", "a")
-        .join(results["plain"].withColumnRenamed("cluster_id", "b"), "doc_id")
+        .join(plain.withColumnRenamed("cluster_id", "b"), "doc_id")
         .filter(F.col("a") != F.col("b"))
         .count()
     )
